@@ -107,11 +107,20 @@ final class AvroBinaryWriter(initialCapacity: Int = 64) {
   /** Copy the contents to `os` without materializing an intermediate array. */
   def writeTo(os: java.io.OutputStream): Unit = os.write(buf, 0, count)
 
+  // `n > buf.length - count` cannot overflow (both sides are non-negative
+  // Ints), unlike `count + n > buf.length` for a large `n`
   @inline private def ensure(n: Int): Unit =
-    if (count + n > buf.length) grow(n)
-  private def grow(n: Int): Unit =
+    if (n > buf.length - count) grow(n)
+  private def grow(n: Int): Unit = {
+    val need = count.toLong + n
+    if (need > AvroBinaryWriter.MaxCapacity)
+      throw new IllegalStateException(s"AvroBinaryWriter: $need bytes " +
+        s"($count written + $n requested) exceed the maximum buffer size " +
+        s"of ${AvroBinaryWriter.MaxCapacity} bytes")
     buf = java.util.Arrays.copyOf(buf,
-      math.max(buf.length << 1, count + n))
+      math.min(math.max(buf.length.toLong << 1, need),
+        AvroBinaryWriter.MaxCapacity.toLong).toInt)
+  }
 
   /** Ensure `n` writable bytes and return the backing array; the caller
     * fills `[position, position + n)` and then [[advance]]s. */
@@ -178,4 +187,10 @@ final class AvroBinaryWriter(initialCapacity: Int = 64) {
   }
 
   def writeString(s: String): Unit = writeBytes(s.getBytes(StandardCharsets.UTF_8))
+}
+
+object AvroBinaryWriter {
+  /** The largest byte array the JVM reliably allocates (a few header words
+    * below `Int.MaxValue`, as in `java.util.ArrayList`). */
+  val MaxCapacity: Int = Int.MaxValue - 8
 }

@@ -79,9 +79,51 @@ object AvroJson {
     case other => writeString(other.toString, sb)
   }
 
+  /** Python `repr(float)`: the shortest round-tripping digits, fixed
+    * notation for 1e-4 <= |d| < 1e16, else `d[.ddd]e±XX`. Java's
+    * `Double.toString` agrees for 1e-3 <= |d| < 1e7 (and for 0, NaN and
+    * Infinity); integral values below 1e16 print their exact digits. */
   private def writeDouble(d: Double, sb: StringBuilder): Unit = {
-    if (d == d.toLong.toDouble && math.abs(d) < 1e15) { sb.append(d.toLong); sb.append(".0") }
-    else sb.append(d)
+    val a = math.abs(d)
+    if (d == d.toLong.toDouble && a < 1e16 && (d != 0.0 || 1.0 / d > 0)) {
+      sb.append(d.toLong); sb.append(".0")
+    } else if ((a >= 1e-3 && a < 1e7) || a == 0.0 || a.isNaN || a.isInfinite) sb.append(d)
+    else writePythonRepr(d, sb)
+  }
+
+  private def writePythonRepr(d: Double, sb: StringBuilder): Unit = {
+    val exact = new java.math.BigDecimal(d)
+    // Java's Double.toString is not always the shortest form (1e23 ->
+    // 9.999999999999999E22 before JDK 19): search the closest n-digit
+    // decimals instead
+    var best: java.math.BigDecimal = null
+    var n = 1
+    while (best == null) {
+      val r = exact.round(new java.math.MathContext(n, java.math.RoundingMode.HALF_EVEN))
+      def dist(c: java.math.BigDecimal) = c.subtract(exact).abs
+      best = Seq(r, r.add(r.ulp), r.subtract(r.ulp))
+        .filter(_.doubleValue == d)
+        .reduceOption((x, y) => if (dist(x).compareTo(dist(y)) <= 0) x else y)
+        .orNull
+      n += 1
+    }
+    val stripped = best.stripTrailingZeros
+    val digits = stripped.unscaledValue.abs.toString
+    val decpt = digits.length - stripped.scale // value = 0.digits * 10^decpt
+    if (d < 0) sb.append('-')
+    if (decpt > -4 && decpt <= 16) {
+      if (decpt <= 0) sb.append("0.").append("0" * -decpt).append(digits)
+      else if (decpt >= digits.length)
+        sb.append(digits).append("0" * (decpt - digits.length)).append(".0")
+      else sb.append(digits.substring(0, decpt)).append('.').append(digits.substring(decpt))
+    } else {
+      sb.append(digits.charAt(0))
+      if (digits.length > 1) sb.append('.').append(digits.substring(1))
+      val e = decpt - 1
+      sb.append(if (e < 0) "e-" else "e+")
+      if (math.abs(e) < 10) sb.append('0')
+      sb.append(math.abs(e))
+    }
   }
 
   private def writeString(s: String, sb: StringBuilder): Unit = {

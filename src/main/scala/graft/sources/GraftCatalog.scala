@@ -2039,8 +2039,9 @@ private[sources] final class OcfRowLevelOperation(
   *    (`representUpdateAsDeleteAndInsert`): old positions into delete
   *    files, replacement/new rows into FRESH data files through the
   *    normal validated write config (stats/bloom/partition/bucket/
-  *    transform routing all apply; unsorted partition revisits roll
-  *    chunks — sparse updates write few small files, compact folds them).
+  *    transform routing all apply). The delta stream is sorted by the
+  *    insert side's layout, so each write task adds one data file per
+  *    partition it touches.
   *
   * One snapshot commit lands both sides; `rewrite_position_deletes` folds
   * the delete files back. At 100 TB: a GDPR point-delete or a
@@ -2095,19 +2096,16 @@ private[sources] final class OcfPositionDeleteWrite(
   private val fileOrd = rowIdSchema.fieldIndex(OcfDataSource.FileColName)
   private val posOrd = rowIdSchema.fieldIndex(OcfDataSource.PosColName)
 
-  /** Insert-side write config (UPDATE/MERGE): built through the NORMAL
-    * validated builder — stats/bloom/partition/bucket/transform routing,
-    * codec, compat gate — so delta-inserted files are indistinguishable
-    * from appended ones; revisit tolerance covers the missing delta-write
-    * ordering. DELETE never inserts and builds none. */
-  private val insertCfg: Option[OcfWriteConfig] =
+  /** Insert-side write (UPDATE/MERGE): built through the NORMAL validated
+    * builder — stats/bloom/partition/bucket/transform routing, codec,
+    * compat gate — so delta-inserted files are indistinguishable from
+    * appended ones, and the delta stream is sorted exactly as an append
+    * would be. DELETE never inserts and builds none. */
+  private val insertWrite: Option[OcfWrite] =
     if (cmd == Command.DELETE) None
-    else {
-      val builder = new OcfWriteBuilder(info, table.catalogMeta.partCols.toArray,
-        table.catalogWriteOptions)
-      Some(builder.build().asInstanceOf[OcfWrite].config
-        .copy(tolerateUnsortedPartitions = true))
-    }
+    else Some(new OcfWriteBuilder(info, table.catalogMeta.partCols.toArray,
+      table.catalogWriteOptions).build().asInstanceOf[OcfWrite])
+  private val insertCfg: Option[OcfWriteConfig] = insertWrite.map(_.config)
 
   override def toBatch: org.apache.spark.sql.connector.write.DeltaBatchWrite = this
 
@@ -2115,16 +2113,23 @@ private[sources] final class OcfPositionDeleteWrite(
     * partitions / transforms / buckets) so replacement rows land one task
     * per directory instead of a sliver per task. Best-effort, not
     * strictly required: delete-only streams and tiny updates should not
-    * pay a mandatory exchange, and the writer's revisit tolerance keeps
-    * any ordering correct. DELETE commands require nothing. */
+    * pay a mandatory exchange. DELETE commands require nothing. */
   override def requiredDistribution(): org.apache.spark.sql.connector.distributions.Distribution =
     insertCfg.map(OcfWrite.clusteredDistributionFor).getOrElse(
       org.apache.spark.sql.connector.distributions.Distributions.unspecified())
 
   override def distributionStrictlyRequired(): Boolean = false
 
+  /** The insert side's task-local sort (partitions, transforms, bucket,
+    * in-file sort): each task's replacement rows arrive directory-
+    * contiguous, so the writer seals ONE data file per directory per task
+    * — an unsorted delta stream would roll a fresh file at every partition
+    * change and leave a scan split per file. */
   override def requiredOrdering(): Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-    Array.empty
+    insertWrite.map(_.requiredOrdering()).getOrElse(Array.empty)
+
+  override def supportedCustomMetrics(): Array[org.apache.spark.sql.connector.metric.CustomMetric] =
+    OcfWriteMetrics.all
 
   override def createBatchWriterFactory(
       pinfo: org.apache.spark.sql.connector.write.PhysicalWriteInfo)
@@ -2243,6 +2248,8 @@ private[sources] final class OcfPositionDeleteWriter(
   private val byTarget =
     new java.util.HashMap[String, scala.collection.mutable.ArrayBuilder.ofLong]()
   private var dataWriter: OcfDataWriter = null
+  private var deleteFiles = 0L
+  private var deleteBytes = 0L
 
   override def delete(metadata: org.apache.spark.sql.catalyst.InternalRow,
                       id: org.apache.spark.sql.catalyst.InternalRow): Unit = {
@@ -2290,13 +2297,27 @@ private[sources] final class OcfPositionDeleteWriter(
       val name = f"_delete-p$partitionId%05d-$taskId-" +
         s"${java.util.UUID.randomUUID()}.avro"
       val tmp = new Path(root, s".$name.tmp")
+      val bytes = OcfPositionDeleteWriter.render(positions, targetRel)
       val out = GraftIO.create(fs, tmp, false)
-      try out.write(OcfPositionDeleteWriter.render(positions, targetRel))
+      try out.write(bytes)
       finally out.close()
+      deleteFiles += 1
+      deleteBytes += bytes.length
       OcfPositionDeleteEntry(tmp.toString, new Path(root, name).toString, targetRel)
     }
     OcfMorDeltaMessage(entries,
       if (dataWriter == null) None else Some(dataWriter.commit()))
+  }
+
+  /** The insert side's files, rows and bytes plus the delete files written
+    * at commit (their ordinals are not counted as rows). */
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] = {
+    val data = if (dataWriter == null) Map.empty[String, Long]
+      else dataWriter.currentMetricsValues().map(m => m.name -> m.value).toMap
+    Array(
+      OcfTaskMetric("ocfFilesWritten", data.getOrElse("ocfFilesWritten", 0L) + deleteFiles),
+      OcfTaskMetric("ocfRowsWritten", data.getOrElse("ocfRowsWritten", 0L)),
+      OcfTaskMetric("ocfBytesWritten", data.getOrElse("ocfBytesWritten", 0L) + deleteBytes))
   }
 
   override def abort(): Unit = {

@@ -239,7 +239,7 @@ private[sources] final class GraftChangesTable(
         @transient private lazy val lane: Option[Array[OcfColumnar.Field]] =
           if (!Option(options.get("columnar")).forall(_.toBoolean)) None
           else GraftChangesReaderFactory.columnarFieldsFor(
-            planned.parts, readerJson, partSchema, pairUpdates)
+            planned.parts, readerJson, partSchema)
         override def planInputPartitions(): Array[InputPartition] =
           GraftChangesReaderFactory.stamp(planned.parts, lane)
         override def createReaderFactory(): PartitionReaderFactory =
@@ -314,8 +314,7 @@ private[sources] object GraftChangesReaderFactory {
     * across a scan's partitions) — one ineligible part keeps the whole
     * feed on the row lane, exactly like the batch table scan. */
   def columnarFieldsFor(parts: Array[InputPartition], readerJson: String,
-      partSchema: StructType, pairUpdates: Boolean)
-      : Option[Array[OcfColumnar.Field]] = {
+      partSchema: StructType): Option[Array[OcfColumnar.Field]] = {
     if (parts.isEmpty) return None
     if (!partSchema.fields.forall(f => OcfColumnar.constSupported(f.dataType)))
       return None
@@ -592,7 +591,7 @@ private[graft] final class GraftChangesMicroBatchStream(
     val lane =
       if (!columnarEnabled) None
       else GraftChangesReaderFactory.columnarFieldsFor(
-        planned.parts, readerJson, partSchema, pairUpdates)
+        planned.parts, readerJson, partSchema)
     lastPlanned = (planned, lane)
     GraftChangesReaderFactory.stamp(planned.parts, lane)
   }

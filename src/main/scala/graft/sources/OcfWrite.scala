@@ -549,11 +549,6 @@ private[sources] final case class OcfWriteConfig(
     // its source column, so sorting by the SOURCE keeps directories
     // task-contiguous — and the coalesced input needs no clustering shuffle
     transformsBySource: Boolean = false,
-    // merge-on-read UPDATE/MERGE inserts (X87) arrive UNSORTED by
-    // partition (no required ordering on delta writes): tolerate directory
-    // revisits by rolling chunks — sparse updates write few small files,
-    // and compact folds them
-    tolerateUnsortedPartitions: Boolean = false,
     snapshots: Boolean = false,
     // write-audit-publish (X83): commit manifests into this branch's
     // sequence instead of main — data files land normally (manifests gate
@@ -1057,8 +1052,9 @@ private[sources] final class OcfDataWriter(
   private var bytesSealed = 0L
   private val sealedFiles = Seq.newBuilder[OcfWrittenFile]
   // relative `col=value/...` directory of the OPEN file ("" = unpartitioned
-  // root). Input arrives sorted on the partition columns (requiredOrdering),
-  // so each value change seals the current file — one open file per task.
+  // root). Input arrives sorted on the partition columns (the requiredOrdering
+  // of batch writes AND of merge-on-read delta writes), so each value change
+  // seals the current file — one open file per task.
   private var currentPartDir: String = ""
   private val seenPartDirs = scala.collection.mutable.Set.empty[String]
 
@@ -1118,11 +1114,13 @@ private[sources] final class OcfDataWriter(
     }
   }
 
-  // bucketed writes tolerate directory revisits (Spark plans that omit the
-  // sink's required ordering — e.g. a CTAS shape — may interleave buckets):
-  // a revisit continues at the directory's next free chunk index instead of
-  // clobbering the sealed file. Unbucketed revisits stay a loud failure —
-  // there the required ordering IS applied, so a revisit means broken input.
+  // bucketed and hidden-transform writes tolerate directory revisits (Spark
+  // plans that omit the sink's required ordering — e.g. a CTAS shape — may
+  // interleave their directories): a revisit continues at the directory's
+  // next free chunk index instead of clobbering the sealed file. Identity-
+  // partition revisits stay a loud failure — every such write, merge-on-read
+  // deltas included, applies the required ordering, so a revisit means
+  // broken input.
   private val dirNextChunk = scala.collection.mutable.Map.empty[String, Int]
 
   override def write(row: InternalRow): Unit = {
@@ -1152,7 +1150,7 @@ private[sources] final class OcfDataWriter(
         // value pair) and silently reusing the tmp path would clobber the
         // sealed file — fail the task loudly instead
         require(cfg.numBuckets > 0 || cfg.transformSpecs.nonEmpty ||
-            cfg.tolerateUnsortedPartitions || seenPartDirs.add(pd),
+            seenPartDirs.add(pd),
           s"graft-ocf write: partition directory '$pd' revisited out of " +
             "order — input rows are not sorted by the partition columns")
         currentPartDir = pd

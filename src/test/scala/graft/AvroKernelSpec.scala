@@ -27,6 +27,20 @@ class AvroKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("writer capacity overflow fails with a clear error, allocating nothing") {
+    val w = new AvroBinaryWriter()
+    w.writeLong(300L); w.writeString("abc")
+    val before = w.toByteArray
+    // count + n overflows Int here: the old check wrapped negative and the
+    // grow died in NegativeArraySizeException
+    val e = intercept[IllegalStateException](w.reserve(Int.MaxValue))
+    assert(e.getMessage.contains("maximum buffer size"), e.getMessage)
+    assert(w.toByteArray.sameElements(before), "a refused reserve must not touch the buffer")
+    // the writer stays usable
+    w.writeLong(1L)
+    assert(w.size == before.length + 1)
+  }
+
   test("schema parse + canonical form + fingerprint") {
     val s = AvroSchemaParser.parse(userSchemaJson).asInstanceOf[ARecord]
     assert(s.fullName == "example.avro.User")

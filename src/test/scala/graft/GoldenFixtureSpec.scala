@@ -52,6 +52,21 @@ class GoldenFixtureSpec extends AnyFunSuite {
     assert(AvroJson.renderAll(datums) ==
       """[{"name": "Alyssa", "favorite_number": 256, "favorite_color": null}, """ +
       """{"name": "Ben", "favorite_number": 7, "favorite_color": "red"}]""")
+    // doubles: Python's shortest-repr forms, checked against python3
+    // `json.dumps` (Java's Double.toString says 1.0E-4, 1.23456785E7, ...)
+    Seq(
+      1e-4 -> "0.0001", 2.5e-5 -> "2.5e-05", 12345678.5 -> "12345678.5",
+      123456789012.25 -> "123456789012.25", 1e15 -> "1000000000000000.0",
+      1e16 -> "1e+16", 1e22 -> "1e+22", -0.0 -> "-0.0", 0.0 -> "0.0",
+      1e23 -> "1e+23", 8.41e21 -> "8.41e+21", 5e-324 -> "5e-324",
+      1.7976931348623157e308 -> "1.7976931348623157e+308", -1e-7 -> "-1e-07",
+      1.1e-4 -> "0.00011", 1e7 -> "10000000.0", 123456789.0 -> "123456789.0",
+      0.001 -> "0.001", 9999999.999 -> "9999999.999", 4.35 -> "4.35",
+      0.1 + 0.2 -> "0.30000000000000004", -2.5 -> "-2.5",
+      Double.NaN -> "NaN", Double.PositiveInfinity -> "Infinity"
+    ).foreach { case (d, want) =>
+      assert(AvroJson.render(d) == want, s"$d")
+    }
   }
 
   test("registry bare-datum fixture: Moiraine round-trip to exact JSON (U3)") {

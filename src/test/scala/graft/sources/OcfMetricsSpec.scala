@@ -40,6 +40,45 @@ class OcfMetricsSpec extends AnyFunSuite {
       .find(_.name == "ocfFilesWritten").get.value)
   }
 
+  test("merge-on-read delta writer reports inserted files, rows, bytes plus its delete files") {
+    val dir = java.nio.file.Files.createTempDirectory("ocf-metrics-mor").toFile
+    dir.deleteOnExit()
+    val sql = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
+    val avroJson = AvroSchemaParser.toJson(SchemaConverters.toAvroType(sql))
+    val cfg = OcfWriteConfig(dir.getAbsolutePath, sql, avroJson,
+      OcfWrite.fieldOrdinals(sql, avroJson), "null", blockBytes = 1024,
+      new SerializableHadoopConf(conf), "job-mor")
+    val w = new OcfPositionDeleteWriter(conf, dir.getAbsolutePath, fileOrd = 0, posOrd = 1,
+      partitionId = 0, taskId = 7L, insertCfg = Some(cfg))
+    def metrics = w.currentMetricsValues().map(x => x.name -> x.value).toMap
+    assert(metrics == Map("ocfFilesWritten" -> 0L, "ocfRowsWritten" -> 0L,
+      "ocfBytesWritten" -> 0L))
+
+    (0 until 40).foreach { i =>
+      w.insert(new GenericInternalRow(Array[Any](i.toLong, UTF8String.fromString("v" * 20))))
+    }
+    val root = new org.apache.hadoop.fs.Path(dir.getAbsolutePath)
+    val qualRoot = root.getFileSystem(conf).makeQualified(root).toString
+    Seq("a.avro", "b.avro").foreach { f =>
+      (0L until 5L).foreach(pos => w.delete(null,
+        new GenericInternalRow(Array[Any](UTF8String.fromString(s"$qualRoot/$f"), pos))))
+    }
+    val open = metrics
+    assert(open("ocfRowsWritten") == 40L && open("ocfFilesWritten") == 1L, s"got $open")
+
+    val msg = w.commit().asInstanceOf[OcfMorDeltaMessage]
+    val m = metrics
+    def len(p: String) = new java.io.File(new org.apache.hadoop.fs.Path(p).toUri.getPath).length()
+    val deleteBytes = msg.deletes.map(e => len(e.tmp)).sum
+    // no stats/bloom stamps: the sealed temp is the file the counter measured
+    val dataBytes = msg.data.get.asInstanceOf[OcfCommitMessage].files.map(f => len(f.tmp)).sum
+    assert(msg.deletes.size == 2 && deleteBytes > 0L && dataBytes > 0L)
+    assert(m("ocfFilesWritten") == 3L, s"one data file + two delete files: $m")
+    assert(m("ocfRowsWritten") == 40L, s"inserted rows only, not delete ordinals: $m")
+    assert(m("ocfBytesWritten") == dataBytes + deleteBytes, s"got $m")
+    w.close()
+  }
+
   test("scan-side task metrics: decode reader counts bodies, count reader stays header-only") {
     // one file, several blocks of long datums
     val schemaJson = """{"type":"record","name":"K","fields":[{"name":"k","type":"long"}]}"""

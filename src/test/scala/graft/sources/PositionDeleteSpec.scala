@@ -259,6 +259,92 @@ class PositionDeleteSpec extends AnyFunSuite {
     assert(got3 == got2)
   }
 
+  test("MoR MERGE/UPDATE over interleaved partitions: one data file per " +
+      "(write task, partition), sorted delta plan, same rows as copy-on-write") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.v2.WriteDeltaExec
+    val mor = Seq("delete", "update", "merge")
+      .map(c => s"`write.$c.mode` 'merge-on-read'").mkString(", ")
+    Seq("pcow" -> "", "pmor" -> s", $mor").foreach { case (t, extra) =>
+      spark.sql(
+        s"""CREATE TABLE gm.ns.$t (k BIGINT, p INT, v BIGINT, s STRING)
+           |USING `graft-ocf` PARTITIONED BY (p)
+           |OPTIONS (statsColumns 'k', bloomColumns 'k'$extra)""".stripMargin)
+      spark.sql(s"INSERT INTO gm.ns.$t (k, p, v, s) SELECT id, CAST(id % 4 AS INT), id, " +
+        "concat('s', id) FROM range(400)")
+    }
+    // MoR MERGE/UPDATE write through WriteDeltaExec: capture its executed plan
+    @volatile var deltaPlans = List.empty[SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = qe.executedPlan.foreach {
+        case w: WriteDeltaExec => deltaPlans ::= w
+        case _ => ()
+      }
+      override def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    def dataFiles(t: String) = snapFiles(t).filter(_.deleteOf.isEmpty).map(_.path).toSet
+    def run(t: String, stmt: String): Set[String] = {
+      val before = dataFiles(t)
+      spark.sql(stmt.replace("TBL", s"gm.ns.$t"))
+      dataFiles(t) -- before
+    }
+    // 300 source rows whose partition changes on every row; keys 200..499
+    // half match existing rows, half insert
+    val merge =
+      """MERGE INTO TBL t
+        |USING (SELECT id AS k, CAST(id % 4 AS INT) AS p, id * 10 AS v,
+        |              concat('m', id) AS s FROM range(200, 500)) src
+        |ON t.k = src.k
+        |WHEN MATCHED THEN UPDATE SET v = src.v, s = src.s
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin
+    val update = "UPDATE TBL SET v = v + 1 WHERE k % 7 = 0"
+    run("pcow", merge)
+    run("pcow", update)
+    spark.listenerManager.register(listener)
+    val (mergeAdded, updateAdded) =
+      try {
+        val added = (run("pmor", merge), run("pmor", update))
+        // listener events arrive asynchronously
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        while (deltaPlans.size < 2 && System.nanoTime() < deadline) Thread.sleep(50)
+        added
+      } finally spark.listenerManager.unregister(listener)
+
+    assert(deltaPlans.size == 2, s"MERGE and UPDATE must write deltas: $deltaPlans")
+    val helper = new AdaptiveSparkPlanHelper {}
+    deltaPlans.foreach { w =>
+      val sorts = helper.collect(w) {
+        case s: org.apache.spark.sql.execution.SortExec => s
+      }
+      assert(sorts.exists(_.sortOrder.headOption.exists(_.child.references
+          .exists(_.name == "p"))),
+        s"the delta write must sort on p below it:\n$w")
+    }
+    // (MERGE, UPDATE) with their write tasks: the partitions of the input
+    Seq(mergeAdded, updateAdded).zip(deltaPlans.reverse).foreach { case (added, w) =>
+      val tasks = helper.stripAQEPlan(w.children.head).execute().getNumPartitions
+      assert(added.nonEmpty)
+      // no `-cNNN` chunk rolled: at most one file per (task, partition)
+      assert(!added.exists(_.matches(".*-c\\d{3}\\.avro")), added)
+      val perPart = added.groupBy(f => f.substring(0, f.lastIndexOf('/')))
+      assert(perPart.keySet == (0 until 4).map(i => s"p=$i").toSet, perPart.keySet)
+      perPart.values.foreach(fs => assert(fs.size <= tasks,
+        s"${fs.size} files in one partition from $tasks write tasks: $fs"))
+    }
+
+    def agg(t: String) = spark.sql(
+      s"SELECT count(*), sum(v), sum(k) FROM gm.ns.$t").head.toSeq
+    def rows(t: String) = spark.table(s"gm.ns.$t").select("k", "p", "v", "s").collect()
+      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2), r.getString(3))).sorted.toSeq
+    assert(agg("pmor") == agg("pcow"))
+    assert(agg("pmor").head == 500L)
+    assert(rows("pmor") == rows("pcow"))
+    assert(snapFiles("pmor").exists(_.deleteOf.isDefined), "MoR must land delete files")
+  }
+
   test("expire_snapshots physically reclaims folded delete files") {
     spark.sql(
       """CREATE TABLE gm.ns.morx (id BIGINT)
