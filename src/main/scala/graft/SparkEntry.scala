@@ -1872,7 +1872,6 @@ object SparkEntry {
           col("_change_type"))
         .writeStream.option("checkpointLocation", ckpt.getAbsolutePath)
         .format("graft-ocf")
-        .option("graft.snapshots", "true")
         .option("upsertKeys", "doc_id")
         .option("changeColumn", "_change_type")
         .outputMode("append")

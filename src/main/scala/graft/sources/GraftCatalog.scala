@@ -527,38 +527,21 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val transforms: Array[Transform] = GraftCatalog.transformsOf(finalMeta)
     val fullName = (catName +: (ident.namespace() :+ ident.name())).mkString(".")
     val catalogFs = fs
-    new CatalogOcfTable(fullName, stagingMeta, transforms, conf,
-        snapshotWrites = false)
+    new CatalogOcfTable(fullName, stagingMeta, transforms, conf)
         with org.apache.spark.sql.connector.catalog.StagedTable {
       override def commitStagedChanges(): Unit = {
         // 1. descriptor first: from here the table exists with the NEW
         // schema (a crash now reads zero rows of it — recoverable)
         GraftCatalog.writeMeta(catalogFs, metaPath(dir), finalMeta)
         // 2. promote staged files, preserving the partition layout
-        val stagedRoot = catalogFs.makeQualified(stagingDir).toString
-        val promoted = Seq.newBuilder[OcfSnapshots.SnapFile]
-        val it = catalogFs.listFiles(stagingDir, true)
-        while (it.hasNext) {
-          val st = it.next()
-          val n = st.getPath.getName
-          if (st.isFile && !n.startsWith(".") && !n.startsWith("_")) {
-            val rel = catalogFs.makeQualified(st.getPath).toString
-              .stripPrefix(stagedRoot).stripPrefix(Path.SEPARATOR)
-            val dest = new Path(dir, rel)
-            GraftIO.mkdirs(catalogFs, dest.getParent)
-            if (!GraftIO.rename(catalogFs, st.getPath, dest))
-              throw new java.io.IOException(
-                s"graft catalog: staged commit could not move ${st.getPath} to $dest")
-            promoted += OcfSnapshots.SnapFile(rel, st.getLen)
-          }
-        }
+        val promoted = OcfSnapshots.promote(catalogFs, stagingDir, dir)
         // 3. ONE manifest commit flips the table to exactly the promoted
         // set — the replaced generation's files stay on disk as retained
         // history (expire_snapshots reclaims them), and readers switch
         // from old-complete to new-complete atomically
         val op = if (replacing) "replace-table" else "create-table"
         OcfSnapshots.commit(catalogFs, dir, op,
-          Some(finalMeta.schema.json))(_ => promoted.result())
+          Some(finalMeta.schema.json))(_ => promoted)
         catalogFs.delete(stagingDir, true)
         ()
       }
@@ -1556,10 +1539,7 @@ private[graft] object GraftCatalog {
 private[sources] class CatalogOcfTable(
     fullName: String, meta: GraftCatalog.TableMeta,
     transforms: Array[Transform], conf: Configuration,
-    // staged (CTAS/RTAS) instances write into a staging dir that must NOT
-    // grow its own manifest — the table-level snapshot is committed at the
-    // staged swap; time-travel instances carry the pinned version
-    snapshotWrites: Boolean = true,
+    // time-travel instances carry the pinned version
     pinnedVersion: Option[Long] = None,
     // `VERSION AS OF '<branch>'` (X83): a read-only pin to the branch head
     branchPin: Option[String] = None)
@@ -1607,9 +1587,6 @@ private[sources] class CatalogOcfTable(
       // bucket-transform distribution resolves via this catalog's
       // function catalog; a bare path write has none)
       ("graft.catalogWrite" -> "true") +
-      // catalog tables are snapshot-managed ([[OcfSnapshots]]): commits
-      // publish a manifest, reads plan from it, history is time-travelable
-      ("graft.snapshots" -> snapshotWrites.toString) +
       // schema-at-commit-time for the manifest: a pinned VERSION AS OF
       // read then shows the schema the data HAD, not today's
       ("graft.tableSchemaJson" -> meta.schema.json)
@@ -1772,9 +1749,6 @@ private[sources] class CatalogOcfTable(
       s"graft-ocf: $modeKey must be 'copy-on-write' or " +
         s"'merge-on-read'; got '${mode.get}'")
     val mor = mode.contains("merge-on-read")
-    if (mor) require(snapshotWrites,
-      s"graft-ocf: merge-on-read ${info.command} needs a snapshot-managed " +
-        "table (delete files are manifest entries)")
     new org.apache.spark.sql.connector.write.RowLevelOperationBuilder {
       override def build(): org.apache.spark.sql.connector.write.RowLevelOperation =
         if (mor) new OcfPositionDeltaOperation(info.command, CatalogOcfTable.this)
@@ -1928,42 +1902,13 @@ private[sources] class CatalogOcfTable(
   override def deleteWhere(filters: Array[org.apache.spark.sql.sources.Filter]): Unit = {
     val root = new org.apache.hadoop.fs.Path(meta.location)
     val fsys = root.getFileSystem(conf)
-    // snapshot-managed: the delete is a MANIFEST commit — matching files
-    // drop from the visible set, bytes stay for time travel
-    if (OcfSnapshots.enabled(fsys, root)) {
-      OcfSnapshots.commit(fsys, root, "delete-where",
-          Some(meta.schema.json)) { prev =>
-        prev.filterNot { f =>
-          val segs = f.path.split('/').dropRight(1).takeWhile(_.contains('='))
-          val idx = segs.map(_.takeWhile(_ != '=')).zipWithIndex.toMap
-          val vals = segs.map { s =>
-            val v = s.substring(s.indexOf('=') + 1)
-            if (v == OcfPartitions.NullDir) null else OcfPartitions.unescape(v)
-          }
-          def pv(name: String): Option[OcfPartitions.PartVal] =
-            for { i <- idx.get(name); dt <- partTypeOf(name) }
-              yield OcfPartitions.PartVal(vals(i), dt)
-          OcfPartitions.matchesExactly(filters.toSeq, pv)
-        }
-      }
-      return
+    // a MANIFEST commit: matching files drop from the visible set, bytes
+    // stay for time travel (a table's first commit adopts its listing)
+    OcfSnapshots.commit(fsys, root, "delete-where", Some(meta.schema.json)) { prev =>
+      prev.filterNot(f =>
+        OcfPartitions.relPathMatchesExactly(filters.toSeq, f.path, partTypeOf))
     }
-    val files =
-      try OcfDataSource.list(conf, Seq(meta.location), None, recursive = true)
-      catch { case _: java.io.FileNotFoundException => return }
-    if (files.isEmpty) return
-    val qualified = fsys.makeQualified(root).toString
-    val (layoutCols, annotated) = OcfPartitions.infer(Seq(qualified), files)
-    val idx = layoutCols.zipWithIndex.toMap
-    def pv(vals: Array[String])(name: String): Option[OcfPartitions.PartVal] =
-      for {
-        i <- idx.get(name) if i < vals.length
-        dt <- partTypeOf(name)
-      } yield OcfPartitions.PartVal(vals(i), dt)
-    annotated.foreach { f =>
-      if (OcfPartitions.matchesExactly(filters.toSeq, pv(f.partitionValues)))
-        fsys.delete(new org.apache.hadoop.fs.Path(f.path), false)
-    }
+    ()
   }
 }
 
@@ -2168,16 +2113,9 @@ private[sources] final class OcfPositionDeleteWrite(
       OcfDataSource.FileSlice(qp, fs.getFileStatus(new Path(qp)).getLen))
     val metas = OcfDataSource.fetchMetas(table.hadoopConf, slices)
       .map(m => m.path -> m).toMap
-    def snap(qp: String, deleteOf: Option[String]): OcfSnapshots.SnapFile = {
-      val m = metas(qp)
-      OcfSnapshots.SnapFile(OcfSnapshots.relativize(qualRoot, qp), m.len,
-        meta = Some(m.copy(
-          bloomInHeader = m.bloomJson.isDefined,
-          blockIndexInHeader = m.blockIndexJson.isDefined,
-          bloomJson = None, blockIndexJson = None,
-          partitionValues = Array.empty)),
-        deleteOf = deleteOf)
-    }
+    def snap(qp: String, deleteOf: Option[String]): OcfSnapshots.SnapFile =
+      OcfSnapshots.manifestEntry(OcfSnapshots.relativize(qualRoot, qp),
+        metas(qp), deleteOf = deleteOf)
     val added =
       entries.map(e => snap(fs.makeQualified(new Path(e.dest)).toString,
         Some(e.targetRel))) ++

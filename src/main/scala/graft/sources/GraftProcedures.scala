@@ -84,28 +84,6 @@ private[sources] object GraftProcedures {
   private def str(row: InternalRow, i: Int): Option[String] =
     if (row.isNullAt(i)) None else Some(row.getUTF8String(i).toString)
 
-  /** Visible data files under `dir`, recursively. */
-  private def visibleFiles(spark: SparkSession, dir: String): Seq[(Path, Long)] = {
-    val root = new Path(dir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(root)) return Nil
-    // snapshot-managed: the manifest IS the visible set (retained
-    // time-travel files and the manifests themselves are not table data)
-    if (OcfSnapshots.enabled(fs, root)) {
-      return OcfSnapshots.latest(fs, root).toSeq.flatMap(_.files)
-        .map(f => (new Path(fs.makeQualified(root), f.path), f.len))
-    }
-    val b = Seq.newBuilder[(Path, Long)]
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val st = it.next()
-      val n = st.getPath.getName
-      if (st.isFile && !n.startsWith(".") && !n.startsWith("_"))
-        b += ((st.getPath, st.getLen))
-    }
-    b.result()
-  }
-
   /** Optimistic-concurrency conflict for fold-style rewrites: the rewritten
     * output was computed from fold inputs that moved before the commit won
     * its version. Never user-visible — the procedures catch it and re-run
@@ -141,40 +119,6 @@ private[sources] object GraftProcedures {
   }
 
   private val FoldAttempts = 5
-
-  /** Move a fold's staged output files under the table root and return
-    * their manifest entries WITH inline header metas — the same
-    * zero-pread-planning discipline as the write path's commit
-    * ([[OcfWrite]]). A fold that manifested bare (path, len) entries
-    * would silently regress every later read's planning (header preads
-    * return) and the equality-burden scoping (no inline stats = every
-    * upsert conservatively burdens the fold's output). One pooled header
-    * read per moved file at fold time buys both back. */
-  private def moveStagedWithMetas(spark: SparkSession,
-      fs: org.apache.hadoop.fs.FileSystem, root: Path, staging: String,
-      op: String): Seq[OcfSnapshots.SnapFile] = {
-    val stagingRoot = fs.makeQualified(new Path(staging))
-    val moved = visibleFiles(spark, staging)
-    val placed: Seq[(String, Path, Long)] = moved.map { case (p, len) =>
-      val rel = fs.makeQualified(p).toString.stripPrefix(stagingRoot.toString)
-        .stripPrefix(Path.SEPARATOR)
-      val dest = new Path(root, rel)
-      GraftIO.mkdirs(fs, dest.getParent)
-      if (!GraftIO.rename(fs, p, dest))
-        throw new java.io.IOException(s"graft $op: could not move $p to $dest")
-      (rel, fs.makeQualified(dest), len)
-    }
-    val metas = OcfDataSource.fetchMetas(spark.sessionState.newHadoopConf(),
-      placed.map { case (_, qp, len) => OcfDataSource.FileSlice(qp.toString, len) })
-    placed.zip(metas).map { case ((rel, _, len), m) =>
-      OcfSnapshots.SnapFile(rel, len, meta = Some(m.copy(
-        bloomInHeader = m.bloomJson.isDefined,
-        blockIndexInHeader = m.blockIndexJson.isDefined,
-        // the large stamps live in the header, not the manifest
-        bloomJson = None, blockIndexJson = None,
-        partitionValues = Array.empty)))
-    }
-  }
 
   /** File-granular evaluation of a scoped-compaction `where` predicate:
     * resolve it against the table schema, translate each conjunct to a data
@@ -297,11 +241,11 @@ private[sources] object GraftProcedures {
         "graft compact: small_file_bytes must be positive")
       val root = new Path(meta.location)
       val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      val snapshotted = OcfSnapshots.enabled(fs, root)
-      val scoped = whereStr.isDefined || smallBytes.isDefined
-      require(!scoped || snapshotted, "graft compact: where/small_file_bytes " +
-        "scoping needs a snapshot-managed table (the swap is a manifest " +
-        "commit replacing exactly the selected files)")
+      // a table no write has committed to yet (an external LOCATION over
+      // existing files) adopts its listing first: the fold reads and swaps
+      // manifest entries, and its promoted output stays invisible until
+      // the swap commits
+      OcfSnapshots.adoptListing(fs, root)
       var attempt = 0
       while (true) {
         attempt += 1
@@ -315,21 +259,14 @@ private[sources] object GraftProcedures {
         // Restricting the read to exactly targetsData makes concurrent
         // appends commute with the fold instead of corrupting it.
         val fsnap: Seq[OcfSnapshots.SnapFile] =
-          if (snapshotted) OcfSnapshots.latest(fs, root).map(_.files).getOrElse(Nil)
-          else Nil
-        val before: Seq[(Path, Long)] =
-          if (snapshotted)
-            fsnap.map(f => (new Path(fs.makeQualified(root), f.path), f.len))
-          else visibleFiles(spark, meta.location)
-        if (before.isEmpty)
-          return singleRowResult(outSchema, Array[Any](0L, 0L, 0L, 0L))
+          OcfSnapshots.latest(fs, root).map(_.files).getOrElse(Nil)
         val whereSel: Option[Set[String]] = whereStr.map(w =>
           selectFilesWhere(spark, cat, ident, meta, fs, root, w))
         val targetsData: Set[String] = fsnap.iterator.filter(_.isData)
           .filter(f => whereSel.forall(_.contains(f.path)))
           .filter(f => smallBytes.forall(f.len < _))
           .map(_.path).toSet
-        if (snapshotted && (targetsData.isEmpty || targetsData.size < minInput))
+        if (targetsData.isEmpty || targetsData.size < minInput)
           return singleRowResult(outSchema, Array[Any](0L, 0L, 0L, 0L))
         // deletes: position deletes OVER the targets fold away with them;
         // an equality-delete file retires ONLY when every data file it may
@@ -358,7 +295,7 @@ private[sources] object GraftProcedures {
           codec = codec, targetBytes = targetBytes,
           readerSchemaJson = Some(GraftCatalog.readerJsonWithDefaults(meta.dataSchema)),
           zorderColumns = zorder,
-          onlyFiles = if (snapshotted) Some(targetsData) else None,
+          onlyFiles = Some(targetsData),
           // current hidden-transform spec: output UNIFIES to it (X100) —
           // compacting after an evolution migrates the touched bytes
           transformPartitions = meta.options
@@ -367,47 +304,34 @@ private[sources] object GraftProcedures {
           bucketPartitions = bucketPartitionsOf(meta))
         // swap: move the compacted files in under fresh names (manifest
         // entries carry inline header metas, like any write commit), then
-        // drop the snapshot of old files — a crash between the two leaves
-        // duplicates (re-compactable), never data loss
-        val movedRel = moveStagedWithMetas(spark, fs, root, staging, "compact")
+        // ONE manifest commit flips visibility to the compacted set; the
+        // fragmented generation stays on disk as retained history for time
+        // travel (expire_snapshots reclaims it). The stability guard runs
+        // INSIDE the transform: a MoR DELETE or rewrite that landed after
+        // this fold read its inputs refuses the commit (and the fold
+        // re-runs) instead of losing those rows.
+        val movedRel = OcfSnapshots.promote(fs, new Path(staging), root)
         val committed =
-          if (snapshotted) {
-            // snapshot-managed: ONE manifest commit flips visibility to the
-            // compacted set; the fragmented generation stays on disk as
-            // retained history for time travel (expire_snapshots reclaims
-            // it). The stability guard runs INSIDE the transform: a MoR
-            // DELETE or rewrite that landed after this fold read its inputs
-            // refuses the commit (and the fold re-runs) instead of losing
-            // those rows.
-            try {
-              OcfSnapshots.commit(fs, root, "compact",
-                Some(meta.schema.json)) { prev =>
-                requireFoldStable(prev, targetsData, guardDeletes, "compact")
-                prev.filterNot(f => dropped.contains(f.path)) ++ movedRel
-              }
-              true
-            } catch {
-              case _: FoldConflictException if attempt < FoldAttempts =>
-                // uncommitted output (the manifest governs visibility) —
-                // discard and refold against the new head
-                movedRel.foreach(f => fs.delete(new Path(root, f.path), false))
-                false
+          try {
+            OcfSnapshots.commit(fs, root, "compact",
+              Some(meta.schema.json)) { prev =>
+              requireFoldStable(prev, targetsData, guardDeletes, "compact")
+              prev.filterNot(f => dropped.contains(f.path)) ++ movedRel
             }
-          } else {
-            before.foreach { case (p, _) => fs.delete(p, false) }
             true
+          } catch {
+            case _: FoldConflictException if attempt < FoldAttempts =>
+              // uncommitted output (the manifest governs visibility) —
+              // discard and refold against the new head
+              movedRel.foreach(f => fs.delete(new Path(root, f.path), false))
+              false
           }
         fs.delete(new Path(staging), true)
-        if (committed) {
-          val (beforeCount, beforeBytes) =
-            if (snapshotted)
-              (dropped.size.toLong,
-                fsnap.filter(f => dropped.contains(f.path)).map(_.len).sum)
-            else (before.size.toLong, before.map(_._2).sum)
+        if (committed)
           return singleRowResult(outSchema, Array[Any](
-            beforeCount, movedRel.size.toLong,
-            beforeBytes, movedRel.map(_.len).sum))
-        }
+            dropped.size.toLong, movedRel.size.toLong,
+            fsnap.filter(f => dropped.contains(f.path)).map(_.len).sum,
+            movedRel.map(_.len).sum))
       }
       throw new IllegalStateException("unreachable")
     }
@@ -544,8 +468,7 @@ private[sources] object GraftProcedures {
           transformPartitions = meta.options
             .find(_._1.equalsIgnoreCase("transformPartitions")).map(_._2),
           bucketPartitions = bucketPartitionsOf(meta))
-        val movedRel = moveStagedWithMetas(spark, fs, root, staging,
-          "rewrite_position_deletes")
+        val movedRel = OcfSnapshots.promote(fs, new Path(staging), root)
         try {
           // one commit: burdened data files and their delete files out,
           // clean rewrites in (old generation stays for time travel until
@@ -604,13 +527,7 @@ private[sources] object GraftProcedures {
   }
 
   /** `CALL g.system.expire_snapshots(table => 'ns.t', keep_last => 3)` —
-    * drops snapshot history: retains the newest `keep_last` manifests and
-    * PHYSICALLY deletes (a) every data file referenced only by expired
-    * manifests and (b) the expired manifest JSONs. The Iceberg
-    * `expire_snapshots` shape: time travel shrinks to the retained window,
-    * disk usage shrinks to the files that window still references. The
-    * latest manifest is always retained (keep_last is clamped to >= 1), so
-    * the CURRENT table contents can never be collected. */
+    * drops snapshot history through [[OcfMaintenance.expireSnapshots]]. */
   private final class ExpireSnapshotsProcedure(cat: GraftCatalog)
       extends UnboundProcedure with BoundProcedure {
     override def name(): String = "expire_snapshots"
@@ -634,66 +551,13 @@ private[sources] object GraftProcedures {
       StructField("deleted_bytes", LongType, nullable = false)))
 
     override def call(input: InternalRow): java.util.Iterator[Scan] = {
-      val spark = SparkSession.active
       val meta = cat.tableMeta(tableIdent(str(input, 0).get))
-      val keepLast = math.max(1L,
-        if (input.isNullAt(1)) 1L else input.getLong(1)).toInt
-      val root = new Path(meta.location)
-      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-      if (!OcfSnapshots.enabled(fs, root))
-        return singleRowResult(outSchema, Array[Any](0L, 0L, 0L))
-      val versions = OcfSnapshots.versions(fs, root)
-      // tagged versions are pinned, and so are branch BASES (a branch's
-      // pre-first-commit state reads through its base manifest)
-      val tagged = OcfSnapshots.readTags(fs, root).values.toSet ++
-        OcfSnapshots.branchBases(fs, root)
-      val olderThan: Option[Long] =
-        if (input.isNullAt(2)) None else Some(input.getLong(2))
-      val (expireable0, retainedTail) =
-        versions.splitAt(math.max(0, versions.length - keepLast))
-      // the Iceberg older_than bound: a snapshot younger than the cutoff is
-      // RETAINED even when keep_last would drop it — time-based retention
-      // policies ("keep a week of history") compose with count-based ones
-      val expireable = olderThan match {
-        case Some(cut) => expireable0.filter(v =>
-          OcfSnapshots.timestampOf(fs, root, v) < cut)
-        case None => expireable0
-      }
-      val expired = expireable.filterNot(tagged.contains)
-      // retained = EVERYTHING not expired (tag-pinned, keep_last tail, AND
-      // too-young-under-older_than) — keepFiles must cover all of them
-      val retained = versions.diff(expired)
-      if (expired.isEmpty)
-        return singleRowResult(outSchema, Array[Any](0L, 0L, 0L))
-      // branch manifests' files are live too: an expired MAIN version's
-      // file may still be visible on a branch lineage
-      val keepFiles: Set[String] = retained
-        .flatMap(v => OcfSnapshots.read(fs, root, v).files.map(_.path)).toSet ++
-        OcfSnapshots.branchReferencedFiles(fs, root)
-      var deleted = 0L
-      var deletedBytes = 0L
-      expired.foreach { v =>
-        OcfSnapshots.read(fs, root, v).files.foreach { f =>
-          if (!keepFiles.contains(f.path)) {
-            val p = new Path(root, f.path)
-            if (fs.exists(p) && fs.delete(p, false)) {
-              deleted += 1
-              deletedBytes += f.len
-            }
-          }
-        }
-      }
-      // a RETAINED manifest may be a delta whose chain passes through the
-      // expired range — checkpoint those (same version, full content) so
-      // deleting the expired manifests never dangles retained history.
-      // Ascending order: a lower retained version checkpointed first
-      // terminates higher retained versions' chains before the doomed range
-      val doomed = expired.toSet
-      retained.sorted.foreach(v =>
-        OcfSnapshots.checkpointIfChained(fs, root, v, doomed))
-      expired.foreach(v => OcfSnapshots.deleteManifest(fs, root, v))
-      singleRowResult(outSchema,
-        Array[Any](expired.length.toLong, deleted, deletedBytes))
+      val (expired, deleted, deletedBytes) = OcfMaintenance.expireSnapshots(
+        SparkSession.active, meta.location,
+        keepLast =
+          if (input.isNullAt(1)) 1 else math.min(input.getLong(1), Int.MaxValue).toInt,
+        olderThanMs = if (input.isNullAt(2)) None else Some(input.getLong(2)))
+      singleRowResult(outSchema, Array[Any](expired, deleted, deletedBytes))
     }
   }
 

@@ -126,7 +126,11 @@ object OcfDataSource {
                                // holds one, so the scan preads it lazily — only
                                // when a query shape can actually use it
                                bloomInHeader: Boolean = false,
-                               blockIndexInHeader: Boolean = false)
+                               blockIndexInHeader: Boolean = false,
+                               // the header bloom's column names (manifest
+                               // metas; empty when read from an older
+                               // manifest that kept only the presence flag)
+                               bloomColumns: Seq[String] = Nil)
 
   /** Driver-side view of one read: the frozen file LISTING (header
     * resolution is deferred to [[OcfScanBuilder.build]] so partition
@@ -324,20 +328,16 @@ object OcfDataSource {
     require(snapBranch.isEmpty || (snapVersion.isEmpty && snapStarting.isEmpty),
       "graft-ocf: a branch read cannot combine with VERSION AS OF or " +
         "startingVersion (branches have their own single head)")
-    val snapRoot: Option[Path] =
-      if (paths.length == 1 && glob.isEmpty) {
-        val root = new Path(paths.head)
-        val fs = root.getFileSystem(conf)
-        if (OcfSnapshots.enabled(fs, root)) Some(root) else None
-      } else None
+    val scope = managedScope(conf, paths, glob)
+    val snapRoot: Option[Path] = scope.map(_.root)
     require((snapVersion.isEmpty && snapStarting.isEmpty && snapBranch.isEmpty) ||
         snapRoot.isDefined,
       "graft-ocf: graft.snapshot.version/startingVersion/branch needs a " +
-        s"single snapshot-managed root directory; got ${paths.mkString(", ")} glob=$glob")
+        s"snapshot-managed table; got ${paths.mkString(", ")} glob=$glob")
     // a silently-ignored file restriction would read the WHOLE table where
     // the caller (rewrite_position_deletes) meant a targeted subset
     require(Option(options.get("graft.files")).isEmpty || snapRoot.isDefined,
-      "graft-ocf: graft.files needs a single snapshot-managed root directory")
+      "graft-ocf: graft.files needs a snapshot-managed table")
     // manifest-embedded header metadata, keyed by qualified path: reads of
     // a meta-carrying manifest plan with ZERO per-file header preads
     var snapMetaByPath: Map[String, OcfFileMeta] = Map.empty
@@ -376,7 +376,9 @@ object OcfDataSource {
         // path / by birth seq respectively), never read as table data
         val delFiles = snapFilesAll.filter(_.isPositionDelete)
         val eqFiles = snapFilesAll.filter(_.isEqualityDelete)
-        val snapFiles0 = snapFilesAll.filter(_.isData)
+        // a partition-subdirectory / multi-path / pathGlobFilter read
+        // selects its part of the manifest; deletes keep burdening it
+        val snapFiles0 = snapFilesAll.filter(f => f.isData && scope.get.selects(f.path))
         require((delFiles.isEmpty && eqFiles.isEmpty) || snapStarting.isEmpty,
           s"graft-ocf: incremental read after version ${snapStarting.getOrElse(-1L)} " +
             s"refused: the range committed ${delFiles.size} position-delete " +
@@ -755,17 +757,18 @@ object OcfDataSource {
     * the listing retries from scratch a few times (with a short pause, so a
     * racing rename has time to land) before giving up. A MISSING ROOT path
     * is a different thing entirely and fails fast. */
-  /** [[list]], except a single snapshot-managed root reads its latest
-    * manifest instead of walking the directory — used by every re-listing
-    * surface (streaming discovery, emptiness probes) so retained
-    * time-travel files stay invisible everywhere, not just in resolve(). */
+  /** [[list]], except a read in a snapshot-managed table ([[managedScope]])
+    * reads its latest manifest instead of walking the directory — used by
+    * every re-listing surface (streaming discovery, emptiness probes) so
+    * retained time-travel files stay invisible everywhere, not just in
+    * resolve(). */
   private[sources] def snapshotAwareList(conf: Configuration, paths: Seq[String],
                    glob: Option[String], recursive: Boolean,
-                   failOnDeletes: Boolean = false): Seq[FileSlice] = {
-    if (paths.length == 1 && glob.isEmpty) {
-      val root = new Path(paths.head)
-      val fs = root.getFileSystem(conf)
-      if (OcfSnapshots.enabled(fs, root)) {
+                   failOnDeletes: Boolean = false): Seq[FileSlice] =
+    managedScope(conf, paths, glob) match {
+      case Some(scope) =>
+        val root = scope.root
+        val fs = root.getFileSystem(conf)
         val files = OcfSnapshots.latest(fs, root).map(_.files).getOrElse(Nil)
         // streaming discovery must fail LOUDLY when a merge-on-read DELETE
         // lands mid-stream: rows already emitted cannot be retracted, and
@@ -778,11 +781,50 @@ object OcfDataSource {
             "then restart the stream.")
         // data files only: position/equality-delete files attach to reads
         // of their targets, they are never themselves listed as table data
-        return OcfSnapshots.toFileSlices(fs, root,
-          files.filter(_.isData))
-      }
+        OcfSnapshots.toFileSlices(fs, root,
+          files.filter(f => f.isData && scope.selects(f.path)))
+      case None => list(conf, paths, glob, recursive)
     }
-    list(conf, paths, glob, recursive)
+
+  /** The snapshot-managed table a read's paths lie in, and the predicate
+    * selecting the manifest paths (table-relative) the read covers. */
+  private[sources] final case class ManagedScope(root: Path, selects: String => Boolean)
+
+  /** A path lies in a snapshot-managed table when it is the table root
+    * (the directory holding the manifests) or a subdirectory reached from
+    * it through `col=value` levels — the only subdirectories a write
+    * creates. Such a read plans from the root's manifest, narrowed to the
+    * paths' subtrees and `pathGlobFilter` (file names, as on a listing):
+    * listing the directory would also return replaced files, which stay on
+    * disk until expiry. None when no path lies in a managed table; a read
+    * mixing one managed table with other paths is refused. */
+  private[sources] def managedScope(conf: Configuration, paths: Seq[String],
+                                    glob: Option[String]): Option[ManagedScope] = {
+    def rootOf(p: String): Option[(Path, String)] = {
+      val hp = new Path(p)
+      val fs = hp.getFileSystem(conf)
+      var cur = fs.makeQualified(hp)
+      var rel = ""
+      while (true) {
+        if (OcfSnapshots.enabled(fs, cur)) return Some((cur, rel))
+        if (!cur.getName.contains('=') || cur.getParent == null) return None
+        rel = if (rel.isEmpty) cur.getName else cur.getName + "/" + rel
+        cur = cur.getParent
+      }
+      None
+    }
+    val found = paths.map(rootOf)
+    if (found.forall(_.isEmpty)) return None
+    val roots = found.flatten.map(_._1).distinct
+    require(roots.length == 1 && found.forall(_.isDefined),
+      s"graft-ocf: the read of ${paths.mkString(", ")} mixes the " +
+        s"snapshot-managed table ${roots.head} with other paths; read each " +
+        "table on its own")
+    val prefixes = found.flatten.map(_._2)
+    val filter = glob.map(new GlobFilter(_))
+    Some(ManagedScope(roots.head, rel =>
+      prefixes.exists(pre => pre.isEmpty || rel.startsWith(pre + "/")) &&
+        filter.forall(_.accept(new Path(rel)))))
   }
 
   private[sources] def list(conf: Configuration, paths: Seq[String],
@@ -1723,7 +1765,7 @@ private[graft] final case class OcfScan(
       val out = readSchema().fieldNames.toSet
       val stamped = files.iterator.flatMap(m =>
         m.statsJson.iterator.flatMap(OcfPartitions.jsonFieldNames) ++
-          m.bloomJson.iterator.flatMap(OcfPartitions.jsonFieldNames))
+          m.bloomJson.map(OcfPartitions.jsonFieldNames).getOrElse(m.bloomColumns))
         .filter(c => out.contains(c) && !partCols.contains(c))
         .toSeq.distinct
       // bucket columns answer runtime equality sets by hashing the keys —

@@ -480,6 +480,21 @@ private[graft] object OcfPartitions {
   def matchesExactly(filters: Seq[Filter], partCol: String => Option[PartVal]): Boolean =
     filters.forall(f => eval(f, partCol, _ => None) == Some(true))
 
+  /** [[matchesExactly]] for a manifest entry: partition values come from
+    * the `col=value` levels of its table-relative path, typed by `typeOf`
+    * (a name it does not type is no partition column). */
+  def relPathMatchesExactly(filters: Seq[Filter], relPath: String,
+                            typeOf: String => Option[DataType]): Boolean = {
+    val segs = relPath.split('/').dropRight(1).takeWhile(_.contains('='))
+    val idx = segs.map(_.takeWhile(_ != '=')).zipWithIndex.toMap
+    def pv(name: String): Option[PartVal] =
+      for { i <- idx.get(name); dt <- typeOf(name) } yield {
+        val v = segs(i).substring(segs(i).indexOf('=') + 1)
+        PartVal(if (v == NullDir) null else unescape(v), dt)
+      }
+    matchesExactly(filters, pv)
+  }
+
   /** Kleene tri-state: Some(true/false) definite, None unknown. Partition
     * columns evaluate EXACTLY under the column's READ TYPE (via [[partCmp]]
     * — an int column decides `year > 9` numerically, so `year=10` survives;

@@ -3,9 +3,9 @@ package graft.sources
 import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.hadoop.fs.{FileSystem, Path}
 
-/** Snapshot manifests for `graft-ocf` catalog tables: every commit writes a
-  * new numbered manifest making the manifest sequence — not the directory
-  * listing — the source of truth for reads.
+/** Snapshot manifests for `graft-ocf` tables, catalog and path alike: every
+  * commit writes a new numbered manifest making the manifest sequence — not
+  * the directory listing — the source of truth for reads.
   *
   * What this buys at 100 TB:
   *  - **O(delta) commits**: a commit writes the files it ADDED and the paths
@@ -36,9 +36,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   * invisible to data-file listings). Paths inside a manifest are RELATIVE
   * to the table directory, so a table can be relocated wholesale.
   *
-  * Migration: a directory without a snapshots dir reads by listing, exactly
-  * as before; the FIRST snapshot commit folds the pre-existing listing in
-  * as its base (a full manifest), so existing tables upgrade in place.
+  * Migration: a directory without a snapshots dir (external files no
+  * graft-ocf write has committed to) reads by listing; the FIRST commit
+  * folds the pre-existing listing in as its base (a full manifest), so
+  * existing directories upgrade in place.
   * Manifests written before the delta format (always-full) read unchanged —
   * a delta is recognized by its `base` field. */
 private[graft] object OcfSnapshots {
@@ -125,8 +126,11 @@ private[graft] object OcfSnapshots {
     ()
   }
 
+  /** Whether `tableDir` is snapshot-managed: it holds a committed manifest.
+    * A snapshots directory without one (a first commit that failed before
+    * its manifest landed) leaves the directory's listing as its table. */
   def enabled(fs: FileSystem, tableDir: Path): Boolean =
-    try fs.exists(snapshotsDir(tableDir)) catch { case _: java.io.IOException => false }
+    try versions(fs, tableDir).nonEmpty catch { case _: java.io.IOException => false }
 
   private def versionsIn(fs: FileSystem, d: Path): Seq[Long] =
     if (!fs.exists(d)) Nil
@@ -145,16 +149,17 @@ private[graft] object OcfSnapshots {
     val in = fs.open(file)
     val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
     val root = mapper.readTree(bytes)
-    // writer schemas are deduplicated into one table (a 10k-file table
-    // usually has a handful of distinct schemas, not 10k copies)
-    val schemas: IndexedSeq[String] = Option(root.get("schemas")) match {
-      case Some(arr) =>
+    def strings(arr: com.fasterxml.jackson.databind.JsonNode): IndexedSeq[String] =
+      if (arr == null) IndexedSeq.empty
+      else {
         val b = IndexedSeq.newBuilder[String]
         val it = arr.elements()
         while (it.hasNext) b += it.next().asText
         b.result()
-      case None => IndexedSeq.empty
-    }
+      }
+    // writer schemas are deduplicated into one table (a 10k-file table
+    // usually has a handful of distinct schemas, not 10k copies)
+    val schemas: IndexedSeq[String] = strings(root.get("schemas"))
     def parseFiles(): Seq[SnapFile] = {
       val files = Seq.newBuilder[SnapFile]
       val it = root.get("files").elements()
@@ -176,17 +181,12 @@ private[graft] object OcfSnapshots {
             sortedByJson = strOpt("sorted"),
             rowsStamp = Option(f.get("rows")).map(_.asLong),
             bloomInHeader = Option(f.get("bloom")).exists(_.asBoolean),
-            blockIndexInHeader = Option(f.get("blockIndex")).exists(_.asBoolean))
-        }
-        val eq = Option(f.get("equalityOf")).map { arr =>
-          val cols = Seq.newBuilder[String]
-          val cit = arr.elements()
-          while (cit.hasNext) cols += cit.next().asText
-          cols.result()
+            blockIndexInHeader = Option(f.get("blockIndex")).exists(_.asBoolean),
+            bloomColumns = strings(f.get("bloomColumns")))
         }
         files += SnapFile(path, len, meta,
           deleteOf = Option(f.get("deleteOf")).map(_.asText),
-          equalityOf = eq,
+          equalityOf = Option(f.get("equalityOf")).map(strings),
           seq = Option(f.get("seq")).map(_.asLong).getOrElse(0L))
       }
       files.result()
@@ -232,8 +232,13 @@ private[graft] object OcfSnapshots {
         m.rowsStamp.foreach(o.put("rows", _))
         m.statsJson.foreach(o.put("stats", _))
         m.sortedByJson.foreach(o.put("sorted", _))
-        // presence flags only — the stamps themselves stay in the header
+        // presence flags and bloom column names only — the stamps
+        // themselves stay in the header
         if (m.bloomJson.isDefined || m.bloomInHeader) o.put("bloom", true)
+        if (m.bloomColumns.nonEmpty) {
+          val a = o.putArray("bloomColumns")
+          m.bloomColumns.foreach(a.add)
+        }
         if (m.blockIndexJson.isDefined || m.blockIndexInHeader)
           o.put("blockIndex", true)
       }
@@ -485,6 +490,7 @@ private[graft] object OcfSnapshots {
           x.rowsStamp == y.rowsStamp &&
           (x.bloomJson.isDefined || x.bloomInHeader) ==
             (y.bloomJson.isDefined || y.bloomInHeader) &&
+          x.bloomColumns == y.bloomColumns &&
           (x.blockIndexJson.isDefined || x.blockIndexInHeader) ==
             (y.blockIndexJson.isDefined || y.blockIndexInHeader)
       case _ => false
@@ -711,6 +717,12 @@ private[graft] object OcfSnapshots {
       (try fs.exists(branchBasePath(branchDir(tableDir, name)))
        catch { case _: java.io.IOException => false })
 
+  def requireBranch(fs: FileSystem, tableDir: Path, name: String): Unit =
+    require(fs.exists(branchBasePath(branchDir(tableDir, name))),
+      s"graft-ocf branches: no branch '$name' of $tableDir " +
+        s"(branches: ${listBranches(fs, tableDir).mkString(", ")}); " +
+        "CALL <cat>.system.create_branch first")
+
   def listBranches(fs: FileSystem, tableDir: Path): Seq[String] = {
     val d = snapshotsDir(tableDir)
     if (!fs.exists(d)) Nil
@@ -790,11 +802,8 @@ private[graft] object OcfSnapshots {
   def commitToBranch(fs: FileSystem, tableDir: Path, name: String,
                      operation: String, tableSchemaJson: Option[String])
                     (transform: Seq[SnapFile] => Seq[SnapFile]): Snapshot = {
+    requireBranch(fs, tableDir, name)
     val bd = branchDir(tableDir, name)
-    require(fs.exists(branchBasePath(bd)),
-      s"graft-ocf branches: no branch '$name' of $tableDir " +
-        s"(branches: ${listBranches(fs, tableDir).mkString(", ")}); " +
-        "CALL <cat>.system.create_branch first")
     var attempts = 0
     while (true) {
       attempts += 1
@@ -960,6 +969,57 @@ private[graft] object OcfSnapshots {
     if (!tags.contains(name)) false
     else { writeTags(fs, tableDir, tags - name); true }
   }
+
+  /** A committed file's manifest entry, its header `m` inlined minus the
+    * potentially-large bloom / block-index stamps (kept in the header; the
+    * entry records their presence and the bloom's column names) and the
+    * partition values (re-derived from the relative path). */
+  def manifestEntry(rel: String, m: OcfDataSource.OcfFileMeta,
+                    deleteOf: Option[String] = None,
+                    equalityOf: Option[Seq[String]] = None): SnapFile =
+    SnapFile(rel, m.len, meta = Some(m.copy(
+      bloomInHeader = m.bloomJson.isDefined,
+      blockIndexInHeader = m.blockIndexJson.isDefined,
+      bloomColumns = m.bloomJson.map(OcfPartitions.jsonFieldNames).getOrElse(Nil),
+      bloomJson = None, blockIndexJson = None,
+      partitionValues = Array.empty)),
+      deleteOf = deleteOf, equalityOf = equalityOf)
+
+  /** Move the files of `staging`'s latest manifest (a staged write's
+    * output) under `tableDir` at the same relative paths and return their
+    * entries: the inline header metas carry over, so the table's commit
+    * keeps zero-pread planning; the birth seq is cleared for that commit
+    * to stamp. Nothing is visible until the caller commits the entries. */
+  def promote(fs: FileSystem, staging: Path, tableDir: Path): Seq[SnapFile] = {
+    val files = latest(fs, staging).map(_.files.map(_.copy(seq = 0L))).getOrElse(Nil)
+    files.foreach { f =>
+      val src = new Path(staging, f.path)
+      val dest = new Path(tableDir, f.path)
+      GraftIO.mkdirs(fs, dest.getParent)
+      if (!GraftIO.rename(fs, src, dest))
+        throw new java.io.IOException(s"graft-ocf: could not move staged $src to $dest")
+    }
+    files
+  }
+
+  /** Make the manifest gate visibility BEFORE a writer lands files in
+    * `tableDir`: a directory holding visible files but no manifest yet (a
+    * bare directory, or a catalog LOCATION over existing files) commits
+    * their adoption as its first version, so files renamed in afterwards
+    * stay invisible until the writer's own commit. `check` sees the
+    * listing first and may refuse (throw) before anything is committed. An
+    * empty directory gets no adoption version (its first commit is the
+    * writer's own); until that commit, files landed in it are visible to
+    * listing reads, and an aborted write removes them. */
+  def adoptListing(fs: FileSystem, tableDir: Path,
+                   check: Seq[SnapFile] => Unit = _ => ()): Unit =
+    if (versions(fs, tableDir).isEmpty) {
+      val listed = listingAsFiles(fs, tableDir)
+      check(listed)
+      // identity over the first commit's own base, the listing again: a
+      // racing first commit is built on, never clobbered
+      if (listed.nonEmpty) commit(fs, tableDir, "adopt")(identity)
+    }
 
   /** The table directory's current visible data files as relative manifest
     * entries — the migration base for a table's first snapshot commit. */

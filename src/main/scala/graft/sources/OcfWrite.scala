@@ -361,8 +361,7 @@ private[sources] final class OcfWriteBuilder(info: LogicalWriteInfo,
     // land in equality-delete files alongside the data, deleting all OLDER
     // rows with those keys in one commit and NEVER scanning the target
     // (the CDC-ingest shape). Keys must be data columns with exact-equality
-    // semantics; the write must commit through a snapshot manifest (the
-    // delete entry has no meaning in a bare directory listing).
+    // semantics; the key files commit as equality-delete manifest entries.
     //
     // IN-BATCH DUPLICATE KEYS: the equality delete kills only rows with a
     // STRICTLY OLDER seq, so two rows with the same key inside ONE batch
@@ -419,15 +418,6 @@ private[sources] final class OcfWriteBuilder(info: LogicalWriteInfo,
               "(string/integral/boolean/date/timestamp)")
         }
       }
-      val snapshotted = Option(opts.get("graft.snapshots")).exists(_.toBoolean) ||
-        OcfSnapshots.enabled(
-          new Path(dir).getFileSystem(
-            org.apache.spark.sql.SparkSession.active.sessionState.newHadoopConf()),
-          new Path(dir))
-      require(snapshotted,
-        "graft-ocf write: upsertKeys needs a snapshot-managed table — the " +
-          "equality-delete entry lives in the manifest; a bare directory " +
-          "listing would read the key file as table data")
     }
     require(changeOrdinal < 0 || upsertKeys.nonEmpty,
       "graft-ocf write: changeColumn needs upsertKeys — delete rows carry " +
@@ -467,7 +457,6 @@ private[sources] final class OcfWriteBuilder(info: LogicalWriteInfo,
       transformOrdinals = transformOrdinals,
       transformsBySource =
         Option(opts.get("graft.transformsBySource")).exists(_.toBoolean),
-      snapshots = Option(opts.get("graft.snapshots")).exists(_.toBoolean),
       branch = Option(opts.get("branch")).map(_.trim).filter(_.nonEmpty),
       tableSchemaJson = Option(opts.get("graft.tableSchemaJson")),
       upsertKeys = upsertKeys,
@@ -549,7 +538,6 @@ private[sources] final case class OcfWriteConfig(
     // its source column, so sorting by the SOURCE keeps directories
     // task-contiguous — and the coalesced input needs no clustering shuffle
     transformsBySource: Boolean = false,
-    snapshots: Boolean = false,
     // write-audit-publish (X83): commit manifests into this branch's
     // sequence instead of main — data files land normally (manifests gate
     // visibility), main readers see nothing until fast_forward
@@ -578,7 +566,7 @@ private[sources] object OcfWrite {
     * NO legacy (pre-`e`) matching: the old epoch shape
     * `part-NNNNN-NNNNN.avro` is indistinguishable from other digit-named
     * files a directory may legitimately hold (e.g. [[graft.spark.OcfFiles]]
-    * payload names), so matching it would delete unrelated data on every
+    * payload names), so matching it would drop unrelated data on every
     * epoch commit. A stream checkpointed under the old naming must drain
     * (complete its in-flight epoch) before upgrading — the standard
     * file-naming-migration discipline. */
@@ -920,18 +908,25 @@ private[sources] final class OcfStreamingWrite(cfg: OcfWriteConfig, truncateAll:
 
   /** Epoch commit: rename this epoch's temps over their DETERMINISTIC final
     * names (replacing a failed earlier attempt of the SAME epoch, never a
-    * different epoch's output). Before renaming, every visible file carrying
-    * THIS epoch's `part-<epoch>-` prefix is deleted: a replayed epoch that
-    * produces FEWER files than a previously committed attempt (fewer
-    * non-empty partitions, or a different chunk count under
+    * different epoch's output), and let the manifest commit replace every
+    * visible file carrying THIS epoch's `part-<epoch>-` prefix: a replayed
+    * epoch that produces FEWER files than a previously committed attempt
+    * (fewer non-empty partitions, or a different chunk count under
     * `maxBytesPerFile` after a nondeterministic shuffle order) would
-    * otherwise leave the stale extras in place as duplicate rows. Delete +
-    * rename makes replay idempotent regardless of file count. Complete-output
-    * mode (`truncate`) clears ALL visible files instead, so each epoch
-    * replaces the directory's contents. */
-  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
+    * otherwise leave the stale extras visible as duplicate rows, so replay
+    * is idempotent regardless of file count. Complete-output mode
+    * (`truncate`) replaces ALL visible files instead, so each epoch
+    * replaces the table's contents; a complete-mode PATH sink then expires
+    * every older version, so its disk holds one generation, not one per
+    * epoch (a catalog table — the only writer that carries a table schema —
+    * keeps its history for time travel until `expire_snapshots`). */
+  override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit = {
     OcfCommit.publish(cfg, messages, clearVisible = truncateAll,
       clearPrefix = if (truncateAll) None else Some(f"part-e$epochId%05d-"))
+    if (truncateAll && cfg.tableSchemaJson.isEmpty)
+      OcfMaintenance.expireSnapshots(
+        org.apache.spark.sql.SparkSession.active, cfg.dir, keepLast = 1)
+  }
 
   override def abort(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
     OcfCommit.discard(cfg, messages)
@@ -1621,12 +1616,6 @@ private[sources] final case class OcfCommitMessage(
 /** Maintenance for OCF output directories. */
 object OcfMaintenance {
 
-  /** Delete ORPHANED writer temps (`.*.avro.tmp`) older than `minAgeMs` —
-    * the leftovers of a driver that died between task commit and job
-    * commit, which no future job will ever rename or clean. The age gate
-    * keeps a LIVE concurrent job's temps safe (its files are younger), the
-    * same discipline as any staged-commit janitor. Returns the number of
-    * temp files removed. */
   /** Compact a directory of (typically many small) OCF files into
     * size-bounded ones: splittable scan in, V2 sink out — decode and
     * re-encode ride the same verified paths as any query, so mixed writer
@@ -1682,9 +1671,10 @@ object OcfMaintenance {
     require(onlyFiles.isEmpty || snapManaged,
       "graft-ocf compact: onlyFiles needs a snapshot-managed input")
     val files0 =
-      if (snapManaged)
-        // snapshot-managed input: the manifest is the visible set (retained
-        // time-travel files must not fold into the compaction)
+      if (OcfDataSource.managedScope(conf, Seq(inDir), None).isDefined)
+        // in a snapshot-managed table (its root or a partition directory):
+        // the manifest is the visible set (retained time-travel files must
+        // not fold into the compaction)
         OcfDataSource.snapshotAwareList(conf, Seq(inDir), None, recursive = true)
       else {
         val direct = OcfDataSource.list(conf, Seq(inDir), None, recursive = false)
@@ -1878,6 +1868,77 @@ object OcfMaintenance {
     w.save(outDir)
   }
 
+  /** Drop snapshot history of the table at `dir`: retain the newest
+    * `keepLast` manifests (clamped to >= 1, so the CURRENT contents can
+    * never be collected; manifests younger than `olderThanMs`, tagged
+    * versions and branch bases are retained too) and PHYSICALLY delete
+    * (a) every data file referenced only by expired manifests and (b) the
+    * expired manifest JSONs. The Iceberg `expire_snapshots` shape: time
+    * travel shrinks to the retained window, disk usage shrinks to the
+    * files that window still references — the only place a replaced file
+    * leaves the disk. Returns (expired manifests, deleted files, deleted
+    * bytes). */
+  def expireSnapshots(spark: org.apache.spark.sql.SparkSession, dir: String,
+                      keepLast: Int = 1,
+                      olderThanMs: Option[Long] = None): (Long, Long, Long) = {
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!OcfSnapshots.enabled(fs, root)) return (0L, 0L, 0L)
+    val versions = OcfSnapshots.versions(fs, root)
+    // tagged versions are pinned, and so are branch BASES (a branch's
+    // pre-first-commit state reads through its base manifest)
+    val tagged = OcfSnapshots.readTags(fs, root).values.toSet ++
+      OcfSnapshots.branchBases(fs, root)
+    val expireable0 = versions.take(versions.length - math.max(1, keepLast))
+    // the Iceberg older_than bound: a snapshot younger than the cutoff is
+    // RETAINED even when keep_last would drop it — time-based retention
+    // policies ("keep a week of history") compose with count-based ones
+    val expireable = olderThanMs match {
+      case Some(cut) => expireable0.filter(v =>
+        OcfSnapshots.timestampOf(fs, root, v) < cut)
+      case None => expireable0
+    }
+    val expired = expireable.filterNot(tagged.contains)
+    // retained = EVERYTHING not expired (tag-pinned, keep_last tail, AND
+    // too-young-under-older_than) — keepFiles must cover all of them
+    val retained = versions.diff(expired)
+    if (expired.isEmpty) return (0L, 0L, 0L)
+    // branch manifests' files are live too: an expired MAIN version's
+    // file may still be visible on a branch lineage
+    val keepFiles: Set[String] = retained
+      .flatMap(v => OcfSnapshots.read(fs, root, v).files.map(_.path)).toSet ++
+      OcfSnapshots.branchReferencedFiles(fs, root)
+    var deleted = 0L
+    var deletedBytes = 0L
+    expired.foreach { v =>
+      OcfSnapshots.read(fs, root, v).files.foreach { f =>
+        if (!keepFiles.contains(f.path)) {
+          val p = new Path(root, f.path)
+          if (fs.exists(p) && fs.delete(p, false)) {
+            deleted += 1
+            deletedBytes += f.len
+          }
+        }
+      }
+    }
+    // a RETAINED manifest may be a delta whose chain passes through the
+    // expired range — checkpoint those (same version, full content) so
+    // deleting the expired manifests never dangles retained history.
+    // Ascending order: a lower retained version checkpointed first
+    // terminates higher retained versions' chains before the doomed range
+    val doomed = expired.toSet
+    retained.sorted.foreach(v =>
+      OcfSnapshots.checkpointIfChained(fs, root, v, doomed))
+    expired.foreach(v => OcfSnapshots.deleteManifest(fs, root, v))
+    (expired.length.toLong, deleted, deletedBytes)
+  }
+
+  /** Delete ORPHANED writer temps (`.*.avro.tmp`) older than `minAgeMs` —
+    * the leftovers of a driver that died between task commit and job
+    * commit, which no future job will ever rename or clean. The age gate
+    * keeps a LIVE concurrent job's temps safe (its files are younger), the
+    * same discipline as any staged-commit janitor. Returns the number of
+    * temp files removed. */
   def vacuumTemps(spark: org.apache.spark.sql.SparkSession, dir: String,
                   minAgeMs: Long = 24L * 60 * 60 * 1000): Long = {
     val dirPath = new Path(dir)
@@ -1910,20 +1971,27 @@ object OcfMaintenance {
 
 private[sources] object OcfCommit {
 
-  /** Driver-side job/epoch commit: optionally clear the directory's VISIBLE
-    * files (overwrite / complete mode), just the committing epoch's
-    * `clearPrefix`-named files (replay idempotence even when the replay
-    * writes fewer files), the files whose partition values match a
-    * partition-exact `clearWhere` predicate (static partition overwrite —
-    * `INSERT OVERWRITE … PARTITION (col=v)` replaces exactly that
-    * directory's files), or the partition directories RECEIVING new files
-    * (`clearDynamic`, Spark's dynamic partition overwrite mode — untouched
-    * partitions survive), then rename every committed temp over its final
-    * name. Replacement uses [[GraftIO.renameOverwrite]] — a SINGLE atomic
-    * operation on local (POSIX rename) and HDFS (FileContext OVERWRITE), so
-    * a driver crash mid-commit never leaves a destination deleted but not
-    * yet replaced; the exists→delete→rename fallback is only for
-    * filesystems with neither. */
+  /** Driver-side job/epoch commit through the table's snapshot manifest
+    * ([[OcfSnapshots]]): renames land the new files (still invisible — the
+    * manifest gates visibility), then ONE manifest commit makes them
+    * visible and the replaced set invisible, atomically, against the
+    * previous manifest. A bare directory's existing files are adopted into
+    * a first manifest before any rename, and a write into a missing branch
+    * refuses before any rename, so a failure anywhere before the manifest
+    * commit leaves the previous version fully readable. (An EMPTY
+    * directory's first write has no manifest to hide behind: files it
+    * landed are listing-visible until [[discard]] removes them on abort.)
+    *
+    * Replaced sets: every visible file (`clearVisible`, overwrite /
+    * complete mode); the committing epoch's `clearPrefix`-named files
+    * (replay idempotence even when the replay writes fewer files); the
+    * files whose partition values match a partition-exact `clearWhere`
+    * predicate (static partition overwrite); the partitions RECEIVING new
+    * files (`clearDynamic`, Spark's dynamic partition overwrite — untouched
+    * partitions survive); or exactly `clearPaths` (copy-on-write
+    * DELETE/UPDATE/MERGE). Nothing is physically deleted here: replaced
+    * files stay on disk until `expire_snapshots`
+    * ([[OcfMaintenance.expireSnapshots]]) drops the history naming them. */
   def publish(cfg: OcfWriteConfig, messages: Array[WriterCommitMessage],
               clearVisible: Boolean, clearPrefix: Option[String] = None,
               clearWhere: Option[Seq[org.apache.spark.sql.sources.Filter]] = None,
@@ -1932,154 +2000,51 @@ private[sources] object OcfCommit {
     val dirPath = new Path(cfg.dir)
     val fs = dirPath.getFileSystem(cfg.conf.value)
     GraftIO.mkdirs(fs, dirPath)
-    // snapshot mode when the config asks for it (catalog tables) OR the
-    // directory is already snapshot-managed — a path-API write into a
-    // snapshot table must keep the manifest consistent, else its rows
-    // would be invisible to (or double-counted by) every manifest read
-    if (cfg.snapshots || OcfSnapshots.enabled(fs, dirPath)) {
-      publishSnapshot(cfg, messages, clearVisible, clearPrefix, clearWhere,
-        clearDynamic, clearPaths)
-      return
-    }
-    require(cfg.branch.isEmpty,
-      s"graft-ocf write: option branch='${cfg.branch.get}' needs a " +
-        "snapshot-managed table (manifests gate visibility; a plain " +
-        "directory has no branch to commit to)")
-    // build() already requires snapshots for upsertKeys; backstop here so a
-    // key file can never land as plain table data in a bare directory
-    require(cfg.upsertKeys.isEmpty,
-      "graft-ocf write: upsertKeys needs a snapshot-managed table")
-    clearPaths.foreach { paths =>
-      // group-based row-level operation (copy-on-write DELETE/UPDATE/MERGE):
-      // replace exactly the files the operation's scan read — their
-      // surviving/updated rows are among this commit's new files. The new
-      // files are still dot-prefixed temps, so these deletes cannot touch
-      // them. Paths come from the scan of the SAME table; refuse anything
-      // outside the table directory rather than trust them blindly.
-      val rootPrefix = fs.makeQualified(dirPath).toString + Path.SEPARATOR
-      paths.foreach { p =>
-        val qp = fs.makeQualified(new Path(p))
-        require(qp.toString.startsWith(rootPrefix),
-          s"graft-ocf row-level commit: $qp is outside table directory ${cfg.dir}")
-        if (fs.exists(qp)) fs.delete(qp, false)
+    val epochAppend = !clearVisible && clearPrefix.isDefined
+    // refusals that depend on the visible set: an append-mode epoch commit
+    // while pre-'e'-named epoch files are visible, and a dynamic overwrite
+    // over a mixed-era layout (X100 evolution), which matches replaced
+    // partitions by the CURRENT spec's directory shape and would silently
+    // keep old-era rows of the very partitions being "replaced"
+    def refuse(visible: Seq[OcfSnapshots.SnapFile]): Unit = {
+      if (epochAppend) visible.foreach { f =>
+        val name = f.path.substring(f.path.lastIndexOf('/') + 1)
+        if (OcfWrite.isLegacyEpochName(name))
+          throw new IOException(OcfWrite.legacyEpochRefusal(cfg.dir, name))
       }
-    }
-    clearWhere.foreach { filters =>
-      // file-granular static overwrite: a file holds ONE partition tuple,
-      // and the builder admitted only partition-exact predicate shapes, so
-      // matchesExactly decides every file definitively
-      val listed = OcfDataSource.list(cfg.conf.value, Seq(cfg.dir), None, recursive = true)
-      if (listed.nonEmpty) {
-        val qualified = fs.makeQualified(dirPath).toString
-        // the matcher consults IDENTITY columns only; union-tolerate mixed
-        // synthetic eras (X100) so a static overwrite on an evolved table
-        // still lists
-        val (layoutCols, annotated) =
-          OcfPartitions.infer(Seq(qualified), listed, unionSynthetic = true)
-        val idx = layoutCols.zipWithIndex.toMap
-        val typeOf: Map[String, org.apache.spark.sql.types.DataType] =
-          cfg.partOrdinals.map(o => cfg.sql.fields(o).name -> cfg.sql.fields(o).dataType).toMap
-        def pv(vals: Array[String])(name: String): Option[OcfPartitions.PartVal] =
-          for { i <- idx.get(name) if i < vals.length; dt <- typeOf.get(name) }
-            yield OcfPartitions.PartVal(vals(i), dt)
-        annotated.foreach { f =>
-          if (OcfPartitions.matchesExactly(filters, pv(f.partitionValues)))
-            fs.delete(new Path(f.path), false)
+      if (clearDynamic) {
+        val cur = cfg.transformSpecs.map(_.dirCol).toSet
+        visible.filter(_.isData).foreach { f =>
+          val eraLevels = f.path.split('/').dropRight(1)
+            .filter(_.contains('='))
+            .map(_.takeWhile(_ != '='))
+            .filter(_.startsWith("_p_")).toSet
+          if (eraLevels != cur)
+            throw new IOException(
+              "graft-ocf write: dynamic partition overwrite over a MIXED " +
+                "partition-spec layout would silently keep old-era rows " +
+                s"of the replaced partitions (file '${f.path}' carries " +
+                s"levels ${eraLevels.mkString("[", ",", "]")}, current " +
+                s"spec ${cur.mkString("[", ",", "]")}). Compact the " +
+                "table to the current spec first (CALL <cat>.system." +
+                "compact), or use an explicit OVERWRITE")
         }
       }
     }
-    if (clearDynamic) {
-      // replace exactly the partition directories this job wrote into: the
-      // new files are still dot-prefixed temps, so clearing visible files
-      // in those directories before the renames cannot touch them
-      val targets = messages.flatMap {
-        case OcfCommitMessage(files, _) =>
-          files.map { f =>
-            val parent = fs.makeQualified(new Path(f.dest)).getParent
-            // a bucketed file's parent is its `_bucket=K` level; dynamic
-            // overwrite replaces the PARTITION, so lift to the partition
-            // dir — clearing only the touched buckets would leave stale
-            // rows in that partition's untouched buckets
-            if (cfg.numBuckets > 0 && OcfBucket.isLevelDir(parent.getName))
-              parent.getParent
-            else parent
-          }
-        case _ => Nil
-      }.toSet
-      targets.foreach { d =>
-        // recursive: a bucketed partition's visible files live one
-        // `_bucket=K` level below the partition dir being replaced
-        if (fs.exists(d)) {
-          val it = fs.listFiles(d, true)
-          while (it.hasNext) {
-            val st = it.next()
-            val n = st.getPath.getName
-            if (st.isFile && !n.startsWith(".") && !n.startsWith("_"))
-              fs.delete(st.getPath, false)
-          }
-        }
-      }
+    // land files only behind a manifest: a write into a missing branch
+    // refuses before any rename; a directory without a manifest is checked
+    // against its listing (nothing has landed yet), then its existing files
+    // are adopted. With a manifest, the check runs in the commit transform.
+    cfg.branch match {
+      case Some(b) => OcfSnapshots.requireBranch(fs, dirPath, b)
+      case None => OcfSnapshots.adoptListing(fs, dirPath, check = refuse)
     }
-    if (clearVisible || clearPrefix.isDefined) {
-      // RECURSIVE: partitioned layouts commit into col=value/ subdirectories,
-      // so overwrite-truncate and epoch-replay cleanup must reach them too.
-      // Collect-then-delete: the legacy-name guard must fire BEFORE any
-      // cleanup delete, not mid-way through one.
-      val it = fs.listFiles(dirPath, true)
-      val doomed = scala.collection.mutable.ArrayBuffer.empty[Path]
-      while (it.hasNext) {
-        val st = it.next()
-        val n = st.getPath.getName
-        if (st.isFile) {
-          // append-mode epoch commit into a dir still holding old-naming
-          // epoch files: refuse (complete mode truncates them anyway)
-          if (!clearVisible && clearPrefix.isDefined &&
-              OcfWrite.isLegacyEpochName(n))
-            throw new IOException(OcfWrite.legacyEpochRefusal(cfg.dir, n))
-          val d =
-            if (clearVisible) !n.startsWith(".") && !n.startsWith("_")
-            else clearPrefix.exists(OcfWrite.epochDoomed(n, _))
-          if (d) doomed += st.getPath
-        }
-      }
-      doomed.foreach(fs.delete(_, false))
-    }
-    renameAll(cfg, fs, messages)
-  }
-
-  /** Rename every committed temp over its final name (atomic replace via
-    * [[GraftIO.renameOverwrite]]: POSIX rename on local, FileContext
-    * OVERWRITE rename on HDFS). */
-  private[sources] def renameAll(cfg: OcfWriteConfig, fs: org.apache.hadoop.fs.FileSystem,
-                        messages: Array[WriterCommitMessage]): Unit = {
-    val madeDirs = scala.collection.mutable.Set.empty[Path]
-    messages.foreach {
-      case OcfCommitMessage(files, _) => files.foreach { f =>
-        val src = fs.makeQualified(new Path(f.tmp))
-        val dst = fs.makeQualified(new Path(f.dest))
-        if (madeDirs.add(dst.getParent)) GraftIO.mkdirs(fs, dst.getParent)
-        GraftIO.renameOverwrite(fs, cfg.conf.value, src, dst)
-      }
-      case _ => ()
-    }
-  }
-
-  /** Snapshot-mode commit ([[OcfSnapshots]]): renames land the new files,
-    * then ONE manifest commit makes them visible and the replaced set
-    * invisible — atomically, against the previous MANIFEST (never the
-    * directory listing, which still holds retained time-travel files).
-    * Nothing is physically deleted here; `expire_snapshots` reclaims
-    * unreferenced files when history is dropped. The removal selectors
-    * mirror the physical-delete modes of the listing path exactly. */
-  private def publishSnapshot(cfg: OcfWriteConfig, messages: Array[WriterCommitMessage],
-                              clearVisible: Boolean, clearPrefix: Option[String],
-                              clearWhere: Option[Seq[org.apache.spark.sql.sources.Filter]],
-                              clearDynamic: Boolean,
-                              clearPaths: Option[Seq[String]]): Unit = {
-    val dirPath = new Path(cfg.dir)
-    val fs = dirPath.getFileSystem(cfg.conf.value)
-    renameAll(cfg, fs, messages)
     val qualDir = fs.makeQualified(dirPath).toString
+    // copy-on-write paths come from the scan of the SAME table; refuse
+    // anything outside the table directory rather than trust them blindly
+    val clearRelSet: Set[String] = clearPaths.getOrElse(Nil).map(p =>
+      OcfSnapshots.relativize(qualDir, fs.makeQualified(new Path(p)).toString)).toSet
+    renameAll(cfg, fs, messages)
     val addedPathsLens: Seq[(String, Long)] = messages.toSeq.flatMap {
       case OcfCommitMessage(files, _) => files.map { f =>
         val dst = fs.makeQualified(new Path(f.dest))
@@ -2100,16 +2065,9 @@ private[sources] object OcfCommit {
         f.eqKeys.map(k => fs.makeQualified(new Path(f.dest)).toString -> k))
       case _ => Nil
     }.toMap
-    val added: Seq[OcfSnapshots.SnapFile] = addedMetas.map { m =>
-      OcfSnapshots.SnapFile(OcfSnapshots.relativize(qualDir, m.path), m.len,
-        meta = Some(m.copy(
-          bloomInHeader = m.bloomJson.isDefined,
-          blockIndexInHeader = m.blockIndexJson.isDefined,
-          // the large stamps live in the header, not the manifest
-          bloomJson = None, blockIndexJson = None,
-          partitionValues = Array.empty)),
-        equalityOf = eqKeyByDest.get(m.path))
-    }
+    val added: Seq[OcfSnapshots.SnapFile] = addedMetas.map(m =>
+      OcfSnapshots.manifestEntry(OcfSnapshots.relativize(qualDir, m.path), m,
+        equalityOf = eqKeyByDest.get(m.path)))
     // relative partition directory of a manifest path, the `_bucket=K`
     // level lifted — dynamic overwrite replaces PARTITIONS, not buckets
     def partDirOfRel(rel: String): String = {
@@ -2126,8 +2084,6 @@ private[sources] object OcfCommit {
     }
     val dynTargets: Set[String] =
       if (clearDynamic) added.map(f => partDirOfRel(f.path)).toSet else Set.empty
-    val clearPathSet: Set[String] = clearPaths.getOrElse(Nil)
-      .map(p => fs.makeQualified(new Path(p)).toString).toSet
     val typeOf: Map[String, org.apache.spark.sql.types.DataType] =
       cfg.partOrdinals.map(o => cfg.sql.fields(o).name -> cfg.sql.fields(o).dataType).toMap
     def removedBy(f: OcfSnapshots.SnapFile): Boolean = {
@@ -2135,22 +2091,13 @@ private[sources] object OcfCommit {
       else if (clearPrefix.isDefined) {
         val name = f.path.substring(f.path.lastIndexOf('/') + 1)
         clearPrefix.exists(OcfWrite.epochDoomed(name, _))
-      } else if (clearWhere.isDefined) {
-        val segs = f.path.split('/').dropRight(1).takeWhile(_.contains('='))
-        val idx = segs.map(_.takeWhile(_ != '=')).zipWithIndex.toMap
-        val vals = segs.map { s =>
-          val v = s.substring(s.indexOf('=') + 1)
-          if (v == OcfPartitions.NullDir) null else OcfPartitions.unescape(v)
-        }
-        def pv(name: String): Option[OcfPartitions.PartVal] =
-          for { i <- idx.get(name); dt <- typeOf.get(name) }
-            yield OcfPartitions.PartVal(vals(i), dt)
-        OcfPartitions.matchesExactly(clearWhere.get, pv)
-      } else if (clearDynamic) dynTargets.contains(partDirOfRel(f.path))
-      else if (clearPathSet.nonEmpty)
-        clearPathSet.contains(fs.makeQualified(
-          new Path(dirPath, f.path)).toString)
-      else false
+      } else if (clearWhere.isDefined)
+        // file-granular static overwrite: a file holds ONE partition tuple,
+        // and the builder admitted only partition-exact predicate shapes,
+        // so every file is decided definitively
+        OcfPartitions.relPathMatchesExactly(clearWhere.get, f.path, typeOf.get)
+      else if (clearDynamic) dynTargets.contains(partDirOfRel(f.path))
+      else clearRelSet.contains(f.path)
     }
     val op =
       if (clearPaths.isDefined) "replace-rows"
@@ -2163,37 +2110,11 @@ private[sources] object OcfCommit {
     // entry REPLACES any same-path survivor, never duplicates it
     val addedPaths = added.map(_.path).toSet
     val transform: Seq[OcfSnapshots.SnapFile] => Seq[OcfSnapshots.SnapFile] = { prev =>
-      // same legacy-epoch-name guard as the listing path: an append-mode
-      // epoch commit refuses while pre-'e'-named epoch files are still
-      // visible (throwing here aborts BEFORE the manifest commit; the
-      // landed temps stay invisible)
-      if (!clearVisible && clearPrefix.isDefined) prev.foreach { f =>
-        val name = f.path.substring(f.path.lastIndexOf('/') + 1)
-        if (OcfWrite.isLegacyEpochName(name))
-          throw new IOException(OcfWrite.legacyEpochRefusal(cfg.dir, name))
-      }
-      // dynamic overwrite matches replaced partitions by the CURRENT
-      // spec's directory shape — a mixed-era layout (X100 evolution)
-      // would silently keep old-era rows of the very partitions being
-      // "replaced". Refuse loudly: unify first.
-      if (clearDynamic) {
-        val cur = cfg.transformSpecs.map(_.dirCol).toSet
-        prev.filter(_.isData).foreach { f =>
-          val eraLevels = f.path.split('/').dropRight(1)
-            .filter(_.contains('='))
-            .map(_.takeWhile(_ != '='))
-            .filter(_.startsWith("_p_")).toSet
-          if (eraLevels != cur)
-            throw new IOException(
-              "graft-ocf write: dynamic partition overwrite over a MIXED " +
-                "partition-spec layout would silently keep old-era rows " +
-                s"of the replaced partitions (file '${f.path}' carries " +
-                s"levels ${eraLevels.mkString("[", ",", "]")}, current " +
-                s"spec ${cur.mkString("[", ",", "]")}). Compact the " +
-                "table to the current spec first (CALL <cat>.system." +
-                "compact), or use an explicit OVERWRITE")
-        }
-      }
+      // checked against the version actually committed against (a racing
+      // commit may have changed it); throwing aborts BEFORE the manifest
+      // commit, so the landed files stay invisible, and [[discard]]
+      // removes them
+      refuse(prev)
       prev.filterNot(f => removedBy(f) || addedPaths.contains(f.path)) ++ added
     }
     cfg.branch match {
@@ -2205,12 +2126,46 @@ private[sources] object OcfCommit {
     ()
   }
 
-  def discard(cfg: OcfWriteConfig, messages: Array[WriterCommitMessage]): Unit = {
-    val fs = new Path(cfg.dir).getFileSystem(cfg.conf.value)
+  /** Rename every committed temp over its final name (atomic replace via
+    * [[GraftIO.renameOverwrite]]: POSIX rename on local, FileContext
+    * OVERWRITE rename on HDFS). */
+  private[sources] def renameAll(cfg: OcfWriteConfig, fs: org.apache.hadoop.fs.FileSystem,
+                        messages: Array[WriterCommitMessage]): Unit = {
+    val madeDirs = scala.collection.mutable.Set.empty[Path]
     messages.foreach {
       case OcfCommitMessage(files, _) => files.foreach { f =>
-        val p = new Path(f.tmp)
-        if (fs.exists(p)) fs.delete(p, false)
+        val src = fs.makeQualified(new Path(f.tmp))
+        val dst = fs.makeQualified(new Path(f.dest))
+        if (madeDirs.add(dst.getParent)) GraftIO.mkdirs(fs, dst.getParent)
+        GraftIO.renameOverwrite(fs, cfg.conf.value, src, dst)
+      }
+      case _ => ()
+    }
+  }
+
+  /** Abort: delete the write's temps, and every file it already renamed
+    * into place that the head manifest does not name. A commit that failed
+    * after landing files leaves none behind — in an empty directory, with
+    * no manifest yet, its listing would otherwise show them. A replayed
+    * epoch's file under a name the head already commits stays. */
+  def discard(cfg: OcfWriteConfig, messages: Array[WriterCommitMessage]): Unit = {
+    val dirPath = new Path(cfg.dir)
+    val fs = dirPath.getFileSystem(cfg.conf.value)
+    lazy val committed: String => Boolean =
+      try {
+        val files = cfg.branch match {
+          case Some(b) => OcfSnapshots.branchHead(fs, dirPath, b).files
+          case None => OcfSnapshots.latest(fs, dirPath).map(_.files).getOrElse(Nil)
+        }
+        val base = fs.makeQualified(dirPath)
+        files.map(f => new Path(base, f.path).toString).toSet
+      } catch { case _: Exception => _ => true } // unknown head: keep everything
+    messages.foreach {
+      case OcfCommitMessage(files, _) => files.foreach { f =>
+        val tmp = new Path(f.tmp)
+        val dest = fs.makeQualified(new Path(f.dest))
+        if (fs.exists(tmp)) fs.delete(tmp, false)
+        else if (fs.exists(dest) && !committed(dest.toString)) fs.delete(dest, false)
       }
       case _ => ()
     }

@@ -63,6 +63,7 @@ class DriverContractSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .appName("graft-contract-spec")
       .getOrCreate()
+    val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val sortEarly = Seq("q12_avro_roundtrip", "q30_multimodal_stats",
@@ -91,6 +92,9 @@ class DriverContractSpec extends AnyFunSuite {
             s"sampling would re-execute it: ${heavyBelow.map(_.nodeName)}")
         spark.catalog.clearCache()
       }
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally prevAqe match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 }

@@ -976,6 +976,29 @@ class GraftCatalogSpec extends AnyFunSuite {
       (9999L, 1L)), touched.toString)
   }
 
+  test("a bloom-only column stays runtime-filterable on a manifest-planned scan") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS g.rtbloom")
+    spark.sql(
+      """CREATE TABLE g.rtbloom.t (doc_id BIGINT, body STRING)
+        |USING `graft-ocf` OPTIONS (bloomColumns 'doc_id')""".stripMargin)
+    // ids round-robined over 4 files: only the bloom can refute a key
+    import spark.implicits._
+    (0L until 400L).map(i => (i, s"body_$i")).toDF("doc_id", "body")
+      .repartition(4).writeTo("g.rtbloom.t").append()
+    val df = spark.table("g.rtbloom.t")
+    val scan = df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan
+    }.head.asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeFiltering]
+    // the manifest entry carries no bloom stamp, only its column names
+    assert(scan.filterAttributes().map(_.describe()).toSeq == Seq("doc_id"))
+    scan.filter(Array[org.apache.spark.sql.sources.Filter](
+      org.apache.spark.sql.sources.In("doc_id", Array[Any](5L, 17L))))
+    val kept = graft.sources.OcfDataSource.lastPlannedFiles.get()
+    assert(kept.nonEmpty && kept.size < 4,
+      s"runtime In(5,17) must bloom-skip non-containing files; kept $kept")
+  }
+
   test("X109 rule install without an active session warns once and retries at scan build") {
     spark // make sure the session exists before detaching it
     val active = SparkSession.getActiveSession

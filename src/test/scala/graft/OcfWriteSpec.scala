@@ -29,6 +29,13 @@ class OcfWriteSpec extends AnyFunSuite {
     dir.listFiles().toSeq.filter(f =>
       f.isFile && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
 
+  // partition directories, skipping `_`/`.`-prefixed names (the snapshot
+  // manifests' `_graft_snapshots`) exactly as the reader's listing does
+  private def partitionDirs(dir: java.io.File): Seq[String] =
+    dir.listFiles().toSeq.filter(f =>
+      f.isDirectory && !f.getName.startsWith(".") && !f.getName.startsWith("_"))
+      .map(_.getName).sorted
+
   // read the scan from the OPTIMIZED plan: pushdown runs there, and AQE
   // hides BatchScanExec from executedPlan.collect until execution
   private def scanOf(df: DataFrame) =
@@ -81,7 +88,67 @@ class OcfWriteSpec extends AnyFunSuite {
     Seq(9L).toDF("id").coalesce(1)
       .write.format("graft-ocf").mode(SaveMode.Overwrite).save(dir.getAbsolutePath)
     assert(readBack(dir).as[Long].collect().toSeq == Seq(9L))
+    assert(graft.sources.OcfDataSource.lastPlannedFiles.get().size == 1)
+    // the replaced files stay on disk as snapshot history until expiry
+    graft.sources.OcfMaintenance.expireSnapshots(spark, dir.getAbsolutePath, keepLast = 1)
     assert(visibleFiles(dir).size == 1)
+    assert(readBack(dir).as[Long].collect().toSeq == Seq(9L))
+  }
+
+  test("subdirectory, pathGlobFilter and multi-path reads of a path table plan from its manifest") {
+    import spark.implicits._
+    val dir = tempDir("graft-w-scope")
+    val path = dir.getAbsolutePath
+    def write(ids: Seq[Long], mode: SaveMode): Unit =
+      ids.map(i => (i, if (i % 2 == 0) "a" else "b")).toDF("id", "p")
+        .repartition(2).write.format("graft-ocf").partitionBy("p")
+        .mode(mode).save(path)
+    def ids(df: DataFrame): Seq[Long] = df.select("id").as[Long].collect().sorted.toSeq
+    write(0L until 10L, SaveMode.Append)
+    write(100L until 110L, SaveMode.Overwrite)
+    // the replaced generation is still on disk beside the current one
+    assert(new java.io.File(dir, "p=a").listFiles()
+      .count(_.getName.endsWith(".avro")) >= 2)
+    val now = 100L until 110L
+    assert(ids(spark.read.format("graft-ocf").load(s"$path/p=a")) == now.filter(_ % 2 == 0))
+    assert(ids(spark.read.format("graft-ocf").option("pathGlobFilter", "*.avro")
+      .load(path)) == now)
+    assert(ids(spark.read.format("graft-ocf").load(s"$path/p=a", s"$path/p=b")) == now)
+    // a read mixing the table with another directory is refused
+    val other = tempDir("graft-w-scope-other")
+    Seq(1L).toDF("id").write.format("graft-ocf").mode(SaveMode.Append)
+      .save(other.getAbsolutePath)
+    val e = intercept[IllegalArgumentException](
+      spark.read.format("graft-ocf").load(s"$path/p=a", other.getAbsolutePath).collect())
+    assert(e.getMessage.contains("read each table on its own"), e.getMessage)
+  }
+
+  test("a complete-mode path sink keeps one generation on disk") {
+    import spark.implicits._
+    implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val dir = tempDir("graft-w-complete")
+    val ckpt = tempDir("graft-w-complete-ckpt")
+    val stream = MemoryStream[Long]
+    val q = stream.toDF().groupBy(($"value" % 3).as("k")).count()
+      .writeStream.format("graft-ocf")
+      .option("checkpointLocation", ckpt.getAbsolutePath)
+      .outputMode("complete")
+      .start(dir.getAbsolutePath)
+    try {
+      for (batch <- 1 to 3) {
+        stream.addData((0L until 30L).map(_ + 100L * batch): _*)
+        q.processAllAvailable()
+        val got = readBack(dir).as[(Long, Long)].collect().sorted.toSeq
+        assert(got == Seq((0L, 10L * batch), (1L, 10L * batch), (2L, 10L * batch)))
+        val fs = new org.apache.hadoop.fs.Path(dir.getAbsolutePath)
+          .getFileSystem(spark.sessionState.newHadoopConf())
+        val root = new org.apache.hadoop.fs.Path(dir.getAbsolutePath)
+        val manifested = graft.sources.OcfSnapshots.latest(fs, root).get.files.size
+        assert(graft.sources.OcfSnapshots.versions(fs, root).size == 1)
+        assert(visibleFiles(dir).size == manifested,
+          s"epoch $batch: ${visibleFiles(dir).map(_.getName)}")
+      }
+    } finally q.stop()
   }
 
   test("codec option shapes the container; blocks verify on read") {
@@ -322,8 +389,8 @@ class OcfWriteSpec extends AnyFunSuite {
       .write.format("graft-ocf").partitionBy("p")
       .mode(SaveMode.Append).save(in.getAbsolutePath)
     OcfMaintenance.compact(spark, in.getAbsolutePath, outD, targetBytes = 1L << 20)
-    val outDirs = new java.io.File(outD).listFiles.filter(_.isDirectory).map(_.getName).sorted
-    assert(outDirs.toSeq == Seq("p=p0", "p=p1"),
+    val outDirs = partitionDirs(new java.io.File(outD))
+    assert(outDirs == Seq("p=p0", "p=p1"),
       s"compaction must keep the partition layout; got ${outDirs.toSeq}")
     val got = spark.read.format("graft-ocf").load(outD).select("id", "p")
       .collect().map(r => (r.getLong(0), r.getString(1))).sorted
@@ -567,9 +634,9 @@ class OcfWriteSpec extends AnyFunSuite {
     df.write.format("graft-ocf").partitionBy("lang")
       .mode(SaveMode.Append).save(dir.getAbsolutePath)
 
-    val subdirs = dir.listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(subdirs.toSeq == Seq("lang=lang0", "lang=lang1", "lang=lang2"),
-      s"hive-style partition dirs required, got ${subdirs.toSeq}")
+    val subdirs = partitionDirs(dir)
+    assert(subdirs == Seq("lang=lang0", "lang=lang1", "lang=lang2"),
+      s"hive-style partition dirs required, got $subdirs")
     assert(visibleFiles(dir).isEmpty, "no data files at the partitioned root")
     // the files store only (id, text): lang lives in the directory name
     val oneFile = new java.io.File(dir, "lang=lang1").listFiles()
@@ -637,8 +704,8 @@ class OcfWriteSpec extends AnyFunSuite {
       stream.addData((4L, "b"))
       q.processAllAvailable()
     } finally q.stop()
-    val dirs = dir.listFiles().filter(_.isDirectory).map(_.getName).sorted
-    assert(dirs.toSeq == Seq("grp=a", "grp=b"), s"epochs must land partitioned; got ${dirs.toSeq}")
+    val dirs = partitionDirs(dir)
+    assert(dirs == Seq("grp=a", "grp=b"), s"epochs must land partitioned; got $dirs")
     assert(visibleFiles(dir).isEmpty, "no files at the partitioned root")
     val back = readBack(dir).select("id", "grp")
       .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)

@@ -17,6 +17,18 @@ class OpsSpec extends AnyFunSuite {
     .appName("graft-ops-spec")
     .getOrCreate()
 
+  /** Run `body` with AQE off (it wraps plans in AdaptiveSparkPlanExec,
+    * opaque to `collect`), then restore the session's previous setting. */
+  private def withoutAqe(body: => Unit): Unit = {
+    val prev = spark.conf.getOption("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    }
+  }
+
   private val sf = "/root/testdata/sf0.001"
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
   private def embeddings = spark.read.parquet(s"$sf/embeddings.parquet")
@@ -31,10 +43,7 @@ class OpsSpec extends AnyFunSuite {
   }
 
   test("exact dedup plan never shuffles document text") {
-    // AQE wraps the plan in AdaptiveSparkPlanExec (opaque to collect);
-    // disable it for the shape assertion only
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withoutAqe {
       val plan = Dedup.exact(docs, "doc_id", "text").queryExecution.executedPlan
       val shuffles = plan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
@@ -46,7 +55,7 @@ class OpsSpec extends AnyFunSuite {
       val bhj = plan.collect {
         case b: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => b }
       assert(bhj.nonEmpty, "survivor filter must be a broadcast-hash join")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("minhash candidate pairs are symmetric-free, thresholded, and real near-dups") {
@@ -398,8 +407,7 @@ class OpsSpec extends AnyFunSuite {
     assert(ids.sorted.sameElements(plain))
     // plan shape: the (single) range exchange sits BELOW every lang_id
     // evaluation — sampling never touches the scoring
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withoutAqe {
       val plan = graft.ops.Curation.curate(docs, "doc_id", "text", sortById = true)
         .queryExecution.executedPlan
       def containsLangId(p: org.apache.spark.sql.execution.SparkPlan): Boolean =
@@ -415,7 +423,7 @@ class OpsSpec extends AnyFunSuite {
         "scoring leaked below the range exchange — its sampling pass would re-evaluate langId")
       assert(plan.collect { case p if containsLangId(p) => p }.nonEmpty,
         "scoring must still be present above the exchange")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("text features: quality in [0,1], token count zero on blank text") {
@@ -483,12 +491,12 @@ class OpsSpec extends AnyFunSuite {
     // regressions are pinned here: a second materialized Generate (the r20
     // join-back disease, measured ~2x the query) and the reuse silently
     // breaking (e.g. column pruning specializing one branch's copy of the
-    // exchange — that is why the aggregation consumes struct(id, pos)).
+    // exchange — that is why the aggregation also takes max(pos), behind
+    // an always-false `__p < 0` guard, so both branches keep `pos`).
     // AQE wraps stages opaquely; assert on the non-AQE physical plan, which
     // exercises the same ReuseExchange machinery.
     import spark.implicits._
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    withoutAqe {
       val d = Seq((1L, "a b c d"), (2L, "a b c d")).toDF("doc_id", "text")
       val plan = TextAnalysis.duplicatedSpans(d, "doc_id", "text", window = 2)
         .queryExecution.executedPlan
@@ -515,7 +523,7 @@ class OpsSpec extends AnyFunSuite {
       }
       assert(partialAggs.nonEmpty,
         "dup-hash min/max aggregation lost its partial (map-side) stage")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    }
   }
 
   test("duplicatedSpans is exact under a hot boilerplate hash (skew fixture)") {

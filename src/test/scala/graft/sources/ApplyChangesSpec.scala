@@ -69,7 +69,6 @@ class ApplyChangesSpec extends AnyFunSuite {
       feed.where(col("_commit_version") === v)
         .select(col("id"), col("v"), col("_change_type"))
         .write.format("graft-ocf").mode("append")
-        .option("graft.snapshots", "true")
         .option("upsertKeys", "id")
         .option("changeColumn", "_change_type")
         .save(mirror.getAbsolutePath)
@@ -97,7 +96,6 @@ class ApplyChangesSpec extends AnyFunSuite {
       .select(col("id"), col("v"), col("_change_type"))
       .writeStream.format("graft-ocf")
       .option("checkpointLocation", ckpt.getAbsolutePath)
-      .option("graft.snapshots", "true")
       .option("upsertKeys", "id")
       .option("changeColumn", "_change_type")
       .outputMode("append")
@@ -118,7 +116,6 @@ class ApplyChangesSpec extends AnyFunSuite {
       .select(col("id"), col("v"), col("_change_type"))
       .writeStream.format("graft-ocf")
       .option("checkpointLocation", ckpt.getAbsolutePath)
-      .option("graft.snapshots", "true")
       .option("upsertKeys", "id")
       .option("changeColumn", "_change_type")
       .outputMode("append")
@@ -135,7 +132,6 @@ class ApplyChangesSpec extends AnyFunSuite {
     def apply(rows: Seq[(Long, String, String)]): Unit =
       rows.toDF("id", "lang", "_change_type")
         .write.format("graft-ocf").mode("append")
-        .option("graft.snapshots", "true")
         .option("partitionBy", "lang")
         .option("upsertKeys", "id")
         .option("changeColumn", "_change_type")
@@ -179,7 +175,6 @@ class ApplyChangesSpec extends AnyFunSuite {
       feed.where(col("_commit_version") === v)
         .select(col("id"), col("ts"), col("v"), col("_change_type"))
         .write.format("graft-ocf").mode("append")
-        .option("graft.snapshots", "true")
         .option("upsertKeys", "id")
         .option("changeColumn", "_change_type")
         .save(mirror.getAbsolutePath)
@@ -197,7 +192,6 @@ class ApplyChangesSpec extends AnyFunSuite {
     val df = Seq((1L, "a", "insert")).toDF("id", "v", "_change_type")
     val e1 = intercept[Exception] {
       df.write.format("graft-ocf").mode("append")
-        .option("graft.snapshots", "true")
         .option("changeColumn", "_change_type")
         .save(dir.getAbsolutePath)
     }
@@ -205,7 +199,6 @@ class ApplyChangesSpec extends AnyFunSuite {
     val e2 = intercept[Exception] {
       Seq((1L, "a", "bogus")).toDF("id", "v", "_change_type")
         .write.format("graft-ocf").mode("append")
-        .option("graft.snapshots", "true")
         .option("upsertKeys", "id")
         .option("changeColumn", "_change_type")
         .save(dir.getAbsolutePath)
@@ -227,7 +220,6 @@ class ApplyChangesSpec extends AnyFunSuite {
         .select(col("id"), col("v"), col("_change_type"))
         .writeStream.format("graft-ocf")
         .option("checkpointLocation", ckpt.getAbsolutePath)
-        .option("graft.snapshots", "true")
         .option("upsertKeys", "id")
         .option("changeColumn", "_change_type")
         .outputMode("append")

@@ -232,7 +232,7 @@ class ColumnarPropertySpec extends AnyFunSuite {
           .SeqHasAsJava(data).asJava), keyed)
       val dir = tempDir(s"graft-colprop-$iter")
       df.coalesce(1).write.format("graft-ocf")
-        .option("graft.snapshots", "true").option("statsColumns", "k")
+        .option("statsColumns", "k")
         .mode("append").save(dir)
 
       def rd(columnar: Boolean) = spark.read.format("graft-ocf")
@@ -255,7 +255,7 @@ class ColumnarPropertySpec extends AnyFunSuite {
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters
           .SeqHasAsJava(upd).asJava), keyed)
         .coalesce(1).write.format("graft-ocf")
-        .option("graft.snapshots", "true").option("statsColumns", "k")
+        .option("statsColumns", "k")
         .option("upsertKeys", "k").mode("append").save(dir)
       assert(canon(rd(true)) == canon(rd(false)),
         s"iter $iter equality-burdened mismatch on ${keyed.simpleString}")

@@ -156,14 +156,20 @@ class EqualityDeleteSpec extends AnyFunSuite {
     assert(chain(e).exists(_.contains("equality-delete")), chain(e).mkString(" | "))
   }
 
-  test("upsert validation: bare paths, non-data keys, bad types refuse") {
+  test("upsert validation: non-data keys refuse, bare paths upsert") {
     import spark.implicits._
+    // every path write commits a manifest, so the key file lands as an
+    // equality-delete entry even in a directory that had none before
     val dir = java.nio.file.Files.createTempDirectory("graft-eq-bare").toString
-    val e1 = intercept[Exception] {
-      Seq((1L, "a")).toDF("id", "v").write.format("graft-ocf")
+    def put(rows: (Long, String)*): Unit =
+      rows.toDF("id", "v").coalesce(1).write.format("graft-ocf")
         .option("upsertKeys", "id").mode("append").save(dir)
-    }
-    assert(e1.getMessage.contains("snapshot-managed"), e1.getMessage)
+    put((1L, "a"))
+    put((1L, "b"), (2L, "c"))
+    assert(spark.read.format("graft-ocf").load(dir).as[(Long, String)]
+      .collect().toSet == Set((1L, "b"), (2L, "c")))
+    assert(OcfSnapshots.latest(fs, new Path(dir)).get.files
+      .exists(_.isEqualityDelete))
     val e2 = intercept[Exception] {
       Seq((1L, "a")).toDF("id", "v")
         .writeTo("ge.ns.docs").option("upsertKeys", "nope").append()
