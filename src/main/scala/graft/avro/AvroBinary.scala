@@ -62,18 +62,21 @@ final class AvroBinaryReader(val buf: Array[Byte], var pos: Int, val end: Int) {
     out
   }
 
-  def readBytes(): Array[Byte] = {
+  /** Read the length prefix of a `what` ("bytes" or "string") value and
+    * check that many bytes remain; the value starts at `pos`. */
+  def readLength(what: String): Int = {
     val n = readLong()
-    if (n < 0 || n > Int.MaxValue) throw new AvroEofException(s"bad bytes length $n")
-    readFixed(n.toInt)
+    if (n < 0 || n > Int.MaxValue) throw new AvroEofException(s"bad $what length $n")
+    need(n.toInt)
+    n.toInt
   }
 
+  def readBytes(): Array[Byte] = readFixed(readLength("bytes"))
+
   def readString(): String = {
-    val n = readLong()
-    if (n < 0 || n > Int.MaxValue) throw new AvroEofException(s"bad string length $n")
-    need(n.toInt)
-    val s = new String(buf, pos, n.toInt, StandardCharsets.UTF_8)
-    pos += n.toInt
+    val n = readLength("string")
+    val s = new String(buf, pos, n, StandardCharsets.UTF_8)
+    pos += n
     s
   }
 
@@ -101,6 +104,8 @@ final class AvroBinaryWriter(initialCapacity: Int = 64) {
 
   /** Bytes written so far. */
   def size: Int = count
+  /** Length of the backing array. */
+  def capacity: Int = buf.length
   /** Drop the contents, keeping the capacity (per-datum reuse). */
   def reset(): Unit = count = 0
   def toByteArray: Array[Byte] = java.util.Arrays.copyOf(buf, count)
@@ -127,6 +132,17 @@ final class AvroBinaryWriter(initialCapacity: Int = 64) {
   def reserve(n: Int): Array[Byte] = { ensure(n); buf }
   def position: Int = count
   def advance(n: Int): Unit = count += n
+  /** Drop everything written after the first `size` bytes. */
+  def truncate(size: Int): Unit = {
+    require(size >= 0 && size <= count, s"cannot truncate $count bytes to $size")
+    count = size
+  }
+
+  def writeByte(b: Int): Unit = {
+    ensure(1)
+    buf(count) = b.toByte
+    count += 1
+  }
 
   def writeBoolean(b: Boolean): Unit = {
     ensure(1)

@@ -51,31 +51,7 @@ final class AvroDatumReader(val writerSchema: AvroSchema, val readerSchemaOpt: O
   def read(in: AvroBinaryReader): Any = readFn(in)
   def read(bytes: Array[Byte]): Any = readFn(new AvroBinaryReader(bytes))
 
-  private def deref(s: AvroSchema): AvroSchema = s match {
-    case r: ARef => deref(r.target)
-    case other   => other
-  }
-
-  /** Can a reader of type `r` accept wire data of writer type `w`?
-    * Promotions: int→long/float/double, long→float/double, float→double,
-    * string↔bytes. (reference: schema.py:445-462, compatibility.py:237-258) */
-  private def matches(w: AvroSchema, r: AvroSchema): Boolean = (deref(w), deref(r)) match {
-    case (a, b) if a.typeName == b.typeName =>
-      (a, b) match {
-        case (x: NamedSchema, y: NamedSchema) => AvroNames.nameMatches(x, y)
-        case _ => true
-      }
-    case (AInt, ALong | AFloat | ADouble) => true
-    case (ALong, AFloat | ADouble)        => true
-    case (AFloat, ADouble)                => true
-    case (AString, ABytes)                => true
-    case (ABytes, AString)                => true
-    case (_, u: AUnion)                   => u.branches.exists(b => matches(w, b))
-    case (u: AUnion, _)                   => true // per-branch check happens at read time
-    case (lw: LogicalSchema, rr)          => matches(lw.physical, rr)
-    case (ww, lr: LogicalSchema)          => matches(ww, lr.physical)
-    case _ => false
-  }
+  import AvroResolution.{deref, matches}
 
   /** Build `reader` closure for writer w resolved against reader r. */
   private def compile(w0: AvroSchema, r0: AvroSchema): AvroBinaryReader => Any = {
@@ -272,6 +248,36 @@ final class AvroDatumReader(val writerSchema: AvroSchema, val readerSchemaOpt: O
   }
 }
 
+/** Writer→reader type matching, shared by [[AvroDatumReader]] and
+  * [[AvroJsonTranscoder]] so that both resolve a union to the same branch. */
+object AvroResolution {
+  def deref(s: AvroSchema): AvroSchema = s match {
+    case r: ARef => deref(r.target)
+    case other   => other
+  }
+
+  /** Can a reader of type `r` accept wire data of writer type `w`?
+    * Promotions: int→long/float/double, long→float/double, float→double,
+    * string↔bytes. (reference: schema.py:445-462, compatibility.py:237-258) */
+  def matches(w: AvroSchema, r: AvroSchema): Boolean = (deref(w), deref(r)) match {
+    case (a, b) if a.typeName == b.typeName =>
+      (a, b) match {
+        case (x: NamedSchema, y: NamedSchema) => AvroNames.nameMatches(x, y)
+        case _ => true
+      }
+    case (AInt, ALong | AFloat | ADouble) => true
+    case (ALong, AFloat | ADouble)        => true
+    case (AFloat, ADouble)                => true
+    case (AString, ABytes)                => true
+    case (ABytes, AString)                => true
+    case (_, u: AUnion)                   => u.branches.exists(b => matches(w, b))
+    case (u: AUnion, _)                   => true // per-branch check happens at read time
+    case (lw: LogicalSchema, rr)          => matches(lw.physical, rr)
+    case (ww, lr: LogicalSchema)          => matches(ww, lr.physical)
+    case _ => false
+  }
+}
+
 /** Type-directed skip: seek past a value without materializing it.
   * (reference: python-udf/avro/io.py:394-421,793-822 — skip_*) */
 object AvroSkipper {
@@ -280,11 +286,8 @@ object AvroSkipper {
 
   private def compileMemo(s0: AvroSchema,
       memo: mutable.HashMap[String, AvroBinaryReader => Unit]): AvroBinaryReader => Unit = {
-    def deref(s: AvroSchema): AvroSchema = s match {
-      case r: ARef => deref(r.target); case o => o
-    }
     def compile(s: AvroSchema): AvroBinaryReader => Unit = compileMemo(s, memo)
-    deref(s0) match {
+    AvroResolution.deref(s0) match {
       case ANull    => _ => ()
       case ABoolean => in => in.skip(1)
       case AInt | ALong => in => in.skipLong()
@@ -337,10 +340,7 @@ object AvroSkipper {
   * (reference: python-udf/avro/io.py:1045-1100 — _read_default_value) */
 object AvroDefaults {
   def materialize(d: JsonNode, s0: AvroSchema): Any = {
-    def deref(s: AvroSchema): AvroSchema = s match {
-      case r: ARef => deref(r.target); case o => o
-    }
-    deref(s0) match {
+    AvroResolution.deref(s0) match {
       case ANull    => null
       case ABoolean => d.asBoolean()
       case AInt     => d.asInt()
@@ -386,9 +386,7 @@ final class AvroDatumWriter(val schema: AvroSchema) {
     w.toByteArray
   }
 
-  private def deref(s: AvroSchema): AvroSchema = s match {
-    case r: ARef => deref(r.target); case o => o
-  }
+  import AvroResolution.deref
 
   /** Runtime type check used for union branch selection
     * (reference: io.py:108-198 validate). */

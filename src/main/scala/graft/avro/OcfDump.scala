@@ -18,8 +18,10 @@ object OcfDump {
         val header = Ocf.readHeader(new AvroBinaryReader(bytes))
         println(header.schemaJson)
       } else {
-        val (_, datums) = Ocf.readAll(bytes)
-        datums.foreach(d => println(AvroJson.render(d)))
+        AvroJsonTranscoder.foreachDatum(bytes) { (transcoder, in) =>
+          val json = AvroJsonTranscoder.render(transcoder.write(in, _))
+          println(new String(json, java.nio.charset.StandardCharsets.US_ASCII))
+        }
       }
     }
   }

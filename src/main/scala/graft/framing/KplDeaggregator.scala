@@ -24,16 +24,23 @@ object KplDeaggregator {
                               records: Seq[KplRecord])
 
   /** KPL magic prefix `0xF3899AC2`; when present the payload is
-    * magic + protobuf + 16-byte MD5 digest. The reference fixture omits it, so
-    * both framings are accepted. */
+    * magic + protobuf + 16-byte MD5 digest of the protobuf. The reference
+    * fixture omits it, so both framings are accepted. */
   private val Magic = Array(0xf3.toByte, 0x89.toByte, 0x9a.toByte, 0xc2.toByte)
+  private val DigestSize = 16
 
+  /** A payload with the magic prefix whose MD5 trailer does not match is not
+    * an aggregate: like the KCL and aws-kinesis-agg deaggregators, return it
+    * whole as one record. */
   def decode(payload: Array[Byte]): Aggregated = {
-    val (body, start) =
-      if (payload.length > 20 && payload.startsWith(Magic))
-        (java.util.Arrays.copyOfRange(payload, 4, payload.length - 16), 0)
-      else (payload, 0)
-    parseAggregated(body, start, body.length)
+    if (payload.length > Magic.length + DigestSize && payload.startsWith(Magic)) {
+      val end = payload.length - DigestSize
+      val md5 = java.security.MessageDigest.getInstance("MD5")
+      md5.update(payload, Magic.length, end - Magic.length)
+      if (java.util.Arrays.equals(md5.digest(), 0, DigestSize, payload, end, payload.length))
+        parseAggregated(payload, Magic.length, end)
+      else Aggregated(Nil, Nil, Seq(KplRecord(0, None, payload)))
+    } else parseAggregated(payload, 0, payload.length)
   }
 
   /** Sub-payloads, the contract of the reference's `KPLClient.decode`. */
@@ -54,18 +61,28 @@ object KplDeaggregator {
       } while ((b & 0x80) != 0)
       result
     }
-    def readLengthDelimited(): Array[Byte] = {
-      val n = readVarint().toInt
-      if (pos + n > end) throw new IllegalArgumentException("truncated protobuf bytes")
-      val out = java.util.Arrays.copyOfRange(buf, pos, pos + n)
+    /** Read a length prefix and check that many bytes remain. */
+    private def readLength(): Int = {
+      val n = readVarint()
+      if (n < 0 || n > Int.MaxValue) throw new IllegalArgumentException(s"bad protobuf length $n")
+      n.toInt
+    }
+    private def advance(n: Int): Unit = {
+      if (n > end - pos) throw new IllegalArgumentException(
+        s"truncated protobuf: $n bytes at $pos, ${end - pos} left")
       pos += n
-      out
+    }
+    def readLengthDelimited(): Array[Byte] = {
+      val n = readLength()
+      val start = pos
+      advance(n)
+      java.util.Arrays.copyOfRange(buf, start, pos)
     }
     def skip(wireType: Int): Unit = wireType match {
       case 0 => readVarint()
-      case 1 => pos += 8
-      case 2 => pos += readVarint().toInt
-      case 5 => pos += 4
+      case 1 => advance(8)
+      case 2 => advance(readLength())
+      case 5 => advance(4)
       case other => throw new IllegalArgumentException(s"unsupported protobuf wire type $other")
     }
   }

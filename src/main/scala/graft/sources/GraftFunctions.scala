@@ -7,7 +7,7 @@ import org.apache.spark.sql.connector.catalog.functions.{BoundFunction, ScalarFu
 import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.avro.{AvroJson, Ocf}
+import graft.avro.AvroJsonTranscoder
 import graft.spark.AvroRuntime
 
 /** V2 `FunctionCatalog` functions under the catalog's `system` namespace —
@@ -25,8 +25,8 @@ import graft.spark.AvroRuntime
   * signatures), so Spark plans a direct `Invoke` call inside whole-stage
   * codegen — no row boxing, same hot path as the session-registered
   * expression forms (U1–U5). Schema-taking functions resolve their compiled
-  * reader through [[AvroRuntime]]'s per-executor caches, so the per-row cost
-  * after the first call is one map lookup. */
+  * transcoder through [[AvroRuntime]]'s per-executor caches, so the per-row
+  * cost after the first call is one map lookup. */
 private[sources] object GraftFunctions {
 
   def load(ident: Identifier): UnboundFunction = {
@@ -88,8 +88,7 @@ private[sources] object GraftFunctions {
       if (hex == null) return null
       val bytes = org.apache.spark.sql.catalyst.expressions.Hex.unhex(hex.getBytes)
       require(bytes != null, "fn_decode_avro_binary: input is not valid hex")
-      val (_, datums) = Ocf.readAll(bytes)
-      UTF8String.fromString(AvroJson.renderAll(datums))
+      UTF8String.fromBytes(AvroJsonTranscoder.ocfToJson(bytes))
     }
     override def produceResult(input: InternalRow): UTF8String =
       invoke(if (input.isNullAt(0)) null else input.getUTF8String(0))
@@ -107,15 +106,14 @@ private[sources] object GraftFunctions {
     override def canonicalName(): String = "graft.system.avro_ocf_decode_json"
     def invoke(data: Array[Byte]): UTF8String = {
       if (data == null) return null
-      val (_, datums) = Ocf.readAll(data)
-      UTF8String.fromString(AvroJson.renderAll(datums))
+      UTF8String.fromBytes(AvroJsonTranscoder.ocfToJson(data))
     }
     override def produceResult(input: InternalRow): UTF8String =
       invoke(if (input.isNullAt(0)) null else input.getBinary(0))
   }
 
   /** Registry-path parity: bare datum + writer schema (a VALUE here, not a
-    * literal — the compiled reader is a per-executor cache hit per schema). */
+    * literal — the compiled transcoder is a per-executor cache hit per schema). */
   private object AvroDecodeJsonFn extends UnboundFunction
       with ScalarFunction[UTF8String] {
     override def name(): String = "avro_decode_json"
@@ -128,8 +126,7 @@ private[sources] object GraftFunctions {
     override def canonicalName(): String = "graft.system.avro_decode_json"
     def invoke(data: Array[Byte], schema: UTF8String): UTF8String = {
       if (data == null || schema == null) return null
-      val datum = AvroRuntime.genericReader(schema.toString).read(data)
-      UTF8String.fromString(AvroJson.render(datum))
+      UTF8String.fromBytes(AvroRuntime.transcoder(schema.toString).toJson(data))
     }
     override def produceResult(input: InternalRow): UTF8String =
       invoke(if (input.isNullAt(0)) null else input.getBinary(0),

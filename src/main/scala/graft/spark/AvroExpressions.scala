@@ -12,13 +12,14 @@ import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.concurrent.TrieMap
 
 /** Per-executor caches: schema JSON → parsed AST, (writer,reader) → compiled
-  * Catalyst reader. The Spark analog of the reference's registry LRU cache
+  * Catalyst reader, writer schema JSON → JSON transcoder. The Spark analog of
+  * the reference's registry LRU cache
   * (glue-schema-per-stream-udf/lambda_function.py:14) — resolved once per
   * executor, reused across rows and tasks. */
 object AvroRuntime {
   private val schemaCache = TrieMap.empty[String, AvroSchema]
   private val readerCache = TrieMap.empty[(String, String), CatalystAvroReader.Reader]
-  private val genericReaderCache = TrieMap.empty[String, AvroDatumReader]
+  private val transcoderCache = TrieMap.empty[String, AvroJsonTranscoder]
 
   def parse(json: String): AvroSchema =
     schemaCache.getOrElseUpdate(json, AvroSchemaParser.parse(json))
@@ -27,8 +28,8 @@ object AvroRuntime {
     readerCache.getOrElseUpdate((writerJson, readerJson),
       CatalystAvroReader.compile(parse(writerJson), parse(readerJson)))
 
-  def genericReader(writerJson: String): AvroDatumReader =
-    genericReaderCache.getOrElseUpdate(writerJson, new AvroDatumReader(parse(writerJson)))
+  def transcoder(writerJson: String): AvroJsonTranscoder =
+    transcoderCache.getOrElseUpdate(writerJson, new AvroJsonTranscoder(parse(writerJson)))
 }
 
 /** Mixin: codegen that calls back into the expression instance — a single
@@ -264,10 +265,8 @@ case class AvroOcfDecodeJson(child: Expression)
   override def dataType: DataType = StringType
   override def prettyName: String = "avro_ocf_decode_json"
 
-  override def nullSafeEval(input: Any): Any = {
-    val (_, datums) = Ocf.readAll(input.asInstanceOf[Array[Byte]])
-    UTF8String.fromString(AvroJson.renderAll(datums))
-  }
+  override def nullSafeEval(input: Any): Any = UTF8String.fromBytes(
+    AvroJsonTranscoder.ocfToJson(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): AvroOcfDecodeJson =
     copy(child = newChild)
 }
@@ -282,10 +281,10 @@ case class AvroDecodeJson(child: Expression, writerSchemaJson: String)
   override def dataType: DataType = StringType
   override def prettyName: String = "avro_decode_json"
 
-  override def nullSafeEval(input: Any): Any = {
-    val datum = AvroRuntime.genericReader(writerSchemaJson).read(input.asInstanceOf[Array[Byte]])
-    UTF8String.fromString(AvroJson.render(datum))
-  }
+  @transient private lazy val transcoder = AvroRuntime.transcoder(writerSchemaJson)
+
+  override def nullSafeEval(input: Any): Any =
+    UTF8String.fromBytes(transcoder.toJson(input.asInstanceOf[Array[Byte]]))
   override protected def withNewChildInternal(newChild: Expression): AvroDecodeJson =
     copy(child = newChild)
 }
@@ -322,15 +321,20 @@ case class SpringKplDecodeAll(child: Expression, schemasByContentType: Map[Strin
 
   override def nullSafeEval(input: Any): Any = {
     val subs = KplDeaggregator.subPayloads(input.asInstanceOf[Array[Byte]])
-    val datums = subs.map { sub =>
-      val ex = SpringHeaders.extract(sub)
-      val contentType = ex.headers.getOrElse("contentType",
-        throw new AvroResolutionException("Spring message missing contentType header"))
-      val schemaJson = schemasByContentType.getOrElse(contentType,
-        throw new AvroResolutionException(s"no schema registered for content type '$contentType'"))
-      AvroRuntime.genericReader(schemaJson).read(ex.body)
-    }
-    UTF8String.fromString(AvroJson.renderAll(datums))
+    UTF8String.fromBytes(AvroJsonTranscoder.render { out =>
+      out.writeByte('[')
+      var first = true
+      subs.foreach { sub =>
+        val ex = SpringHeaders.extract(sub)
+        val contentType = ex.headers.getOrElse("contentType",
+          throw new AvroResolutionException("Spring message missing contentType header"))
+        val schemaJson = schemasByContentType.getOrElse(contentType,
+          throw new AvroResolutionException(s"no schema registered for content type '$contentType'"))
+        if (first) first = false else { out.writeByte(','); out.writeByte(' ') }
+        AvroRuntime.transcoder(schemaJson).write(new AvroBinaryReader(ex.body), out)
+      }
+      out.writeByte(']')
+    })
   }
   override protected def withNewChildInternal(newChild: Expression): SpringKplDecodeAll =
     copy(child = newChild)
@@ -339,9 +343,9 @@ case class SpringKplDecodeAll(child: Expression, schemasByContentType: Map[Strin
 /** `registry_decode_json(streamName, payload)` → JSON string: resolve the
   * WRITER schema per stream-name value through a [[graft.framing.SchemaRegistry]]
   * shipped with the expression (the Glue registry-keyed-by-stream path, S9),
-  * decode the bare datum, and render the reference's exact JSON text. Datum
-  * readers are built per distinct stream key and cached per executor — the
-  * Spark analog of the reference's LRU(32) per-container cache.
+  * decode the bare datum, and render the reference's exact JSON text. JSON
+  * transcoders are built per distinct stream key and cached per executor —
+  * the Spark analog of the reference's LRU(32) per-container cache.
   * (reference: glue-schema-per-stream-udf/lambda_function.py:14-42.) */
 case class RegistryDecodeJson(left: Expression, right: Expression,
                               registry: graft.framing.SchemaRegistry)
@@ -350,12 +354,12 @@ case class RegistryDecodeJson(left: Expression, right: Expression,
   override def dataType: DataType = StringType
   override def prettyName: String = "registry_decode_json"
 
-  @transient private lazy val readers = TrieMap.empty[String, AvroDatumReader]
+  @transient private lazy val transcoders = TrieMap.empty[String, AvroJsonTranscoder]
 
   override def nullSafeEval(stream: Any, payload: Any): Any = {
     val key = stream.asInstanceOf[UTF8String].toString
-    val reader = readers.getOrElseUpdate(key, new AvroDatumReader(registry.get(key)))
-    UTF8String.fromString(AvroJson.render(reader.read(payload.asInstanceOf[Array[Byte]])))
+    val transcoder = transcoders.getOrElseUpdate(key, new AvroJsonTranscoder(registry.get(key)))
+    UTF8String.fromBytes(transcoder.toJson(payload.asInstanceOf[Array[Byte]]))
   }
 
   // one virtual call per row keeps the expression inside whole-stage codegen

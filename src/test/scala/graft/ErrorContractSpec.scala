@@ -284,4 +284,50 @@ class ErrorContractSpec extends AnyFunSuite {
     val back = new AvroDatumReader(writer, Some(reader)).read(bytes).asInstanceOf[AvroRecord]
     assert(back.get("x") == 7 && back.get("y") == 9)
   }
+
+  test("JSON surfaces raise the kernel's exception for a corrupt datum") {
+    // the valid datum {"s": "x", "e": "B", "u": 5} is 02 78 02 02 0a
+    val js =
+      """{"type":"record","name":"T","fields":[{"name":"s","type":"string"},
+        |{"name":"e","type":{"type":"enum","name":"E","symbols":["A","B"]}},
+        |{"name":"u","type":["null","long"]}]}""".stripMargin
+    val eof = classOf[AvroEofException].getName
+    val resolution = classOf[AvroResolutionException].getName
+    val corrupt = Seq(
+      ("truncated datum", Array[Byte](2, 'x', 2, 2), eof, "need 1 bytes at pos 4, have 0"),
+      ("union index", Array[Byte](2, 'x', 2, 6, 10), resolution, "union branch index 3 out of range"),
+      ("enum index", Array[Byte](2, 'x', 8, 2, 10), resolution, "enum index 4 out of range for E"),
+      ("string length", Array[Byte](3, 'x'), eof, "bad string length -2"))
+    val contentType = "application/vnd.t.v1+avro"
+    val registry = graft.framing.SchemaRegistry.inMemory("s" -> js)
+    import org.apache.spark.sql.functions.col
+    def surfaces(datum: Array[Byte]): Seq[(String, () => Unit)] = {
+      val ocf = Ocf.writePreEncoded(AvroSchemaParser.parse(js), Iterator(datum))
+      val kpl = graft.framing.KplDeaggregator.encode(graft.framing.KplDeaggregator.Aggregated(
+        Seq("pk"), Nil, Seq(graft.framing.KplDeaggregator.KplRecord(0, None,
+          graft.framing.SpringHeaders.frame(Seq("contentType" -> contentType), datum)))))
+      val streams = spark.createDataFrame(
+        java.util.Arrays.asList(Row("s", datum)),
+        StructType(Seq(
+          StructField("stream", org.apache.spark.sql.types.StringType),
+          StructField("payload", BinaryType))))
+      Seq(
+        "avro_decode_json" -> (() =>
+          payloadDf(datum).select(gfn.avro_decode_json(col("payload"), js)).collect()),
+        "avro_ocf_decode_json" -> (() =>
+          payloadDf(ocf).select(gfn.avro_ocf_decode_json(col("payload"))).collect()),
+        "spring_kpl_decode_all" -> (() =>
+          payloadDf(kpl).select(gfn.spring_kpl_decode_all(col("payload"),
+            Map(contentType -> js))).collect()),
+        "registry_decode_json" -> (() =>
+          streams.select(gfn.registry_decode_json(col("stream"), col("payload"), registry))
+            .collect()))
+    }
+    for ((what, datum, cls, msg) <- corrupt; (surface, run) <- surfaces(datum)) {
+      val e = intercept[Exception](run())
+      val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
+      assert(root.getClass.getName == cls && root.getMessage == msg,
+        s"$surface, $what: got $root")
+    }
+  }
 }

@@ -49,7 +49,7 @@ class GoldenFixtureSpec extends AnyFunSuite {
     val (_, datums) = Ocf.readAll(unhex(goldenOcfHex))
     assert(AvroJson.render(datums(0)) ==
       """{"name": "Alyssa", "favorite_number": 256, "favorite_color": null}""")
-    assert(AvroJson.renderAll(datums) ==
+    assert(datums.map(AvroJson.render).mkString("[", ", ", "]") ==
       """[{"name": "Alyssa", "favorite_number": 256, "favorite_color": null}, """ +
       """{"name": "Ben", "favorite_number": 7, "favorite_color": "red"}]""")
     // doubles: Python's shortest-repr forms, checked against python3
@@ -67,6 +67,17 @@ class GoldenFixtureSpec extends AnyFunSuite {
     ).foreach { case (d, want) =>
       assert(AvroJson.render(d) == want, s"$d")
     }
+  }
+
+  test("non-ASCII and control chars render as Python json.dumps escapes them") {
+    // python3 -c 'import json; print(json.dumps(["é","中","😀","\x7f","\u2028","\x01"]))'
+    val want = "[\"\\u00e9\", \"\\u4e2d\", \"\\ud83d\\ude00\", \"\\u007f\", " +
+      "\"\\u2028\", \"\\u0001\"]"
+    val strings = Vector("é", "中", "😀", "\u007f", "\u2028", "\u0001")
+    assert(AvroJson.render(strings) == want)
+    val schema = AvroSchemaParser.parse("""{"type":"array","items":"string"}""")
+    val bytes = new AvroDatumWriter(schema).toBytes(strings)
+    assert(new String(new AvroJsonTranscoder(schema).toJson(bytes), "US-ASCII") == want)
   }
 
   test("registry bare-datum fixture: Moiraine round-trip to exact JSON (U3)") {

@@ -66,4 +66,44 @@ class SpringKplSpec extends AnyFunSuite {
     }
     assert(e.getMessage != null)
   }
+
+  private val twoRecords = KplDeaggregator.encode(KplDeaggregator.Aggregated(
+    Seq("pk"), Nil, Seq(KplDeaggregator.KplRecord(0, None, "one".getBytes),
+      KplDeaggregator.KplRecord(0, None, "two".getBytes))))
+  private def bytes(b: Int*): Array[Byte] = b.map(_.toByte).toArray
+
+  test("a KPL payload whose MD5 trailer does not match is one non-aggregated record") {
+    val magic = bytes(0xf3, 0x89, 0x9a, 0xc2)
+    val framed = magic ++ twoRecords ++
+      java.security.MessageDigest.getInstance("MD5").digest(twoRecords)
+    assert(KplDeaggregator.subPayloads(framed).map(new String(_)) == Seq("one", "two"))
+    val flipped = framed.clone()
+    flipped(flipped.length - 3) = (flipped(flipped.length - 3) ^ 0x10).toByte
+    assert(KplDeaggregator.subPayloads(flipped).map(_.toSeq) == Seq(flipped.toSeq))
+  }
+
+  test("a KPL field that runs past the end of its message throws") {
+    // unknown fields 9 of wire types 2, 1 and 5, each cut short
+    Seq(bytes(0x4a, 100, 1, 2, 3), bytes(0x49, 1, 2, 3), bytes(0x4d, 1, 2)).foreach { tail =>
+      val e = intercept[IllegalArgumentException](KplDeaggregator.decode(twoRecords ++ tail))
+      assert(e.getMessage.startsWith("truncated protobuf"), e.getMessage)
+    }
+    // inside a record: pk index 0, data "a", then a fixed32 with one byte left
+    val record = bytes(0x08, 0x00, 0x1a, 0x01, 'a', 0x4d, 0x01)
+    val e = intercept[IllegalArgumentException](
+      KplDeaggregator.decode(bytes(0x1a, record.length) ++ record))
+    assert(e.getMessage.startsWith("truncated protobuf"), e.getMessage)
+  }
+
+  test("a negative or overflowing KPL length throws") {
+    // field 3 (records) of length -1, a ten-byte varint
+    val negative = bytes(0x1a) ++ Array.fill(9)(0xff.toByte) ++ bytes(0x01, 0x00)
+    // field 1 (partition key) of length 2^32 + 1, which truncates to 1
+    val overflowing = bytes(0x0a, 0x81, 0x80, 0x80, 0x80, 0x10, 'k')
+    Seq(negative -> "bad protobuf length -1", overflowing -> "bad protobuf length 4294967297")
+      .foreach { case (payload, msg) =>
+        val e = intercept[IllegalArgumentException](KplDeaggregator.decode(payload))
+        assert(e.getMessage == msg)
+      }
+  }
 }
