@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main: runs every SparkEntry query against SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Results are materialized through the `noop` sink so
   * Catalyst cannot prune away the work being measured (a bare count() would
@@ -12,20 +10,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events stores TIMESTAMP(NANOS) parquet; read as long, convert in-query
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local test tables are single small files; split them so scans keep
-      // the parallelism a production many-file layout would have
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.AvroDecodePruning.install(spark)
-    graft.plans.RuntimeFilterSplit.install(spark)
+    val spark = GraftSession.build(cpus)
 
     // warm up the JVM + filesystem + codegen/agg/join/window/text paths once,
     // outside any query's timing (the first query touching a path otherwise

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 /** Plan dump for the optimization-round deliverables: writes
@@ -19,17 +18,7 @@ object Explain {
       s"usage: graft.Explain <sfDir> <outDir> <suffix> <q1,q2,...> (got ${args.length} args)")
     val Array(sfDir, outDir, suffix, names) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.AvroDecodePruning.install(spark)
-    graft.plans.RuntimeFilterSplit.install(spark)
+    val spark = GraftSession.build(cpus)
     Files.createDirectories(Paths.get(outDir))
     val wanted = names.split(",").map(_.trim).filter(_.nonEmpty)
     val unknown = wanted.toSet -- SparkEntry.queries.keySet

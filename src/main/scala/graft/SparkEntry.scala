@@ -2140,8 +2140,9 @@ object SparkEntry {
     }),
 
     // Change-data-feed (X92): the per-commit inserts/deletes recovered
-    // from snapshot diffs and position-delete anti-joins — a MoR DELETE
-    // emits its lost rows, a MoR UPDATE its delete+insert pair. The oracle
+    // from snapshot diffs and the position-deleted rows of each target
+    // file — a MoR DELETE emits its lost rows, a MoR UPDATE its
+    // delete+insert pair. The oracle
     // recomputes the exact same feed from the flat corpus.
     "q107_change_feed" -> ((s, dir) => {
       s.conf.set("spark.sql.catalog.graft_q107",

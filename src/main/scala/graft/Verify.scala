@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,20 +6,7 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // events stores TIMESTAMP(NANOS) parquet; read as long, convert in-query
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // local test tables are single small files; split them so scans keep
-      // the parallelism a production many-file layout would have
-      .config("spark.sql.files.maxPartitionBytes", "1m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.AvroDecodePruning.install(spark)
-    graft.plans.RuntimeFilterSplit.install(spark)
+    val spark = GraftSession.build(cpus)
     new java.io.File(outDir).mkdirs()
     // SPARK_GRAFT_VERIFY_ONLY=q01_agg,q77_sum_pushdown — subset dump for
     // local iteration; unset (the driver's mode) dumps everything

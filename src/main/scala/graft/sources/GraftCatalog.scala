@@ -176,90 +176,30 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = tableDir(ident)
     val mp = metaPath(dir)
     if (!fs.exists(mp)) {
-      // `SELECT * FROM g.ns.t.files` — the Iceberg-style FILES metadata
-      // table: per-file size, row stamp, codec, partition values, and which
-      // header stamps are present; answered from headers only
-      if (ident.name == "files" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfFilesMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm, conf)
-        }
-      }
-      // `SELECT * FROM g.ns.t.changes` — the change-data-feed as a TABLE
-      // (X101, the Iceberg `t.changes` analog): the full exact-or-refuse
-      // change log from genesis, rows tagged _change_type/_commit_version;
+      // `SELECT * FROM g.ns.t.<kind>` — a metadata table of `g.ns.t`:
+      // `changes` is the change-data-feed as a TABLE (X101, the Iceberg
+      // `t.changes` analog): the full exact-or-refuse change log from
+      // genesis, rows tagged _change_type/_commit_version;
       // `spark.read.option("startingVersion", v).option("endingVersion",
-      // w).table(...)` ranges it. Same planner as the streaming feed.
-      if (ident.name == "changes" && ident.namespace.length >= 2) {
+      // w).table(...)` ranges it. Same planner as the streaming feed. The
+      // rest ([[OcfMetaTables]]) answer from manifests, headers or the
+      // descriptor: files, manifests, history, constraints, tags,
+      // branches, partitions.
+      if (ident.namespace.length >= 2) {
         val base = Identifier.of(ident.namespace.init, ident.namespace.last)
         if (tableExists(base)) {
           val bm = readMeta(fs, metaPath(tableDir(base)))
-          val m = new java.util.HashMap[String, String]()
-          m.put("path", bm.location)
-          val (_, out, readerJson, partSchema) = GraftChangesSource
-            .resolveSchema(new CaseInsensitiveStringMap(m))
-          return new GraftChangesTable(bm.location, out, readerJson,
-            partSchema, startingVersion = None,
-            tableName = Some(
-              (catName +: ident.namespace :+ ident.name).mkString(".")))
-        }
-      }
-      // `SELECT * FROM g.ns.t.history` — one row per snapshot commit
-      if (ident.name == "history" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfHistoryMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm, conf)
-        }
-      }
-      // `SELECT * FROM g.ns.t.constraints` — one row per CHECK constraint
-      if (ident.name == "constraints" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfConstraintsMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm)
-        }
-      }
-      // `SELECT * FROM g.ns.t.tags` — one row per named snapshot
-      if (ident.name == "tags" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfTagsMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm, conf)
-        }
-      }
-      // `SELECT * FROM g.ns.t.branches` — one row per WAP branch (X83)
-      if (ident.name == "branches" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfBranchesMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm, conf)
-        }
-      }
-      // `SELECT * FROM g.ns.t.manifests` — the manifest layer's physical
-      // shape: full-vs-delta, sizes, entry counts, checkpoint stamps
-      if (ident.name == "manifests" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfManifestsMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm, conf)
-        }
-      }
-      // `SELECT * FROM g.ns.t.partitions` — per-partition file/row/byte
-      // rollup from the same header-free meta loader as `.files`
-      if (ident.name == "partitions" && ident.namespace.length >= 2) {
-        val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
-          val bm = readMeta(fs, metaPath(tableDir(base)))
-          return new OcfPartitionsMetaTable(
-            (catName +: ident.namespace :+ ident.name).mkString("."), bm, conf)
+          val fullName = (catName +: ident.namespace :+ ident.name).mkString(".")
+          if (ident.name == "changes") {
+            val (out, readerJson, partSchema) =
+              GraftChangesSource.resolveSchema(bm.location)
+            return new GraftChangesTable(bm.location, out, readerJson,
+              partSchema, startingVersion = None, tableName = Some(fullName))
+          }
+          OcfMetaTables.forKind(ident.name, fullName, bm, conf) match {
+            case Some(t) => return t
+            case None =>
+          }
         }
       }
       throw new NoSuchTableException(ident)
@@ -2303,166 +2243,6 @@ private[sources] object OcfPositionDeleteWriter {
   }
 }
 
-/** The `<table>.files` METADATA table: one row per data file with its size,
-  * sealed-row-count stamp, codec, partition values and stamp inventory —
-  * answered entirely from file headers at PLAN time (the same one-pread-per-
-  * file resolution as query planning; no data block is ever read). The
-  * Iceberg `table.files` observability analog: `WHERE rows IS NULL` finds
-  * unstamped files, `ORDER BY size_bytes` finds compaction candidates. */
-private[sources] final class OcfFilesMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta, conf: Configuration)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
-  private val outSchema = StructType(Seq(
-    StructField("file", StringType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false),
-    StructField("rows", LongType, nullable = true),
-    StructField("codec", StringType, nullable = false),
-    StructField("partition", MapType(StringType, StringType, valueContainsNull = true),
-      nullable = false),
-    StructField("sorted_by", ArrayType(StringType, containsNull = false), nullable = true),
-    StructField("has_stats", BooleanType, nullable = false),
-    StructField("has_bloom", BooleanType, nullable = false),
-    StructField("has_block_index", BooleanType, nullable = false),
-    // 'data' | 'position-deletes' (X87); delete rows also name their target
-    StructField("content", StringType, nullable = false),
-    StructField("delete_of", StringType, nullable = true)))
-
-  override def name(): String = fullName
-  override def schema(): StructType = outSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = outSchema
-        override def description(): String = s"graft-ocf FILES metadata of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          // snapshot-aware: manifest metas answer without header preads,
-          // and retained time-travel files are not the table
-          val (layoutCols, metas) = GraftCatalog.tableFileMetas(meta, conf)
-          if (metas.isEmpty) return Array.empty
-          metas.map { m =>
-            val part = org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-              layoutCols.indices.map(i => UTF8String.fromString(layoutCols(i))).toArray[Any],
-              layoutCols.indices.map(i =>
-                if (i < m.partitionValues.length && m.partitionValues(i) != null)
-                  UTF8String.fromString(m.partitionValues(i))
-                else null).toArray[Any])
-            val sortedBy = m.sortedByJson.flatMap(OcfPartitions.parseSortedBy).map(cols =>
-              new org.apache.spark.sql.catalyst.util.GenericArrayData(
-                cols.map(UTF8String.fromString).toArray[Any])).orNull
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-              UTF8String.fromString(m.path),
-              m.len,
-              m.rowsStamp.map(java.lang.Long.valueOf).orNull,
-              UTF8String.fromString(m.codecName),
-              part,
-              sortedBy,
-              m.statsJson.isDefined,
-              m.bloomJson.isDefined || m.bloomInHeader,
-              m.blockIndexJson.isDefined || m.blockIndexInHeader,
-              UTF8String.fromString("data"),
-              null))
-          }.toArray ++ deleteRows(layoutCols)
-        }
-
-        /** Position-delete files (X87): listed alongside data files with
-          * content='position-deletes' and their target path — the
-          * observability `WHERE content != 'data'` needs to find tables
-          * due a rewrite_position_deletes. */
-        private def deleteRows(layoutCols: Seq[String])
-            : Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val root = new Path(meta.location)
-          val fsys = root.getFileSystem(conf)
-          if (!OcfSnapshots.enabled(fsys, root)) return Array.empty
-          val base = fsys.makeQualified(root)
-          val emptyPart = org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-            layoutCols.map(c => UTF8String.fromString(c): Any).toArray,
-            layoutCols.map(_ => null: Any).toArray)
-          OcfSnapshots.latest(fsys, root).map(_.files).getOrElse(Nil)
-            .filterNot(_.isData).map { sf =>
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-                UTF8String.fromString(new Path(base, sf.path).toString),
-                sf.len,
-                sf.meta.flatMap(_.rowsStamp).map(java.lang.Long.valueOf).orNull,
-                UTF8String.fromString(sf.meta.map(_.codecName).getOrElse("null")),
-                emptyPart,
-                null,
-                false,
-                false,
-                false,
-                UTF8String.fromString(
-                  if (sf.isPositionDelete) "position-deletes"
-                  else "equality-deletes"),
-                // target: the position delete's one file, or the equality
-                // delete's key columns (its burden is seq-wide)
-                UTF8String.fromString(sf.deleteOf.getOrElse(
-                  sf.equalityOf.map(_.mkString(",")).getOrElse("")))))
-            }.toArray
-        }
-      }
-    }
-}
-
-/** `SELECT * FROM <cat>.<ns>.<table>.manifests` — one row per retained
-  * manifest with its PHYSICAL shape: kind (full checkpoint vs delta),
-  * serialized size, entry/remove counts and the delta's checkpoint stamp.
-  * The observability face of the O(delta) commit layer: `WHERE kind =
-  * 'delta' AND version - checkpoint > N` finds tables due a
-  * `rewrite_manifests`, and the size column shows commit cost staying
-  * O(delta) as the table grows. Manifest JSONs only — no data touched. */
-private[sources] final class OcfManifestsMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta, conf: Configuration)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
-  private val outSchema = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = false),
-    StructField("operation", StringType, nullable = false),
-    StructField("kind", StringType, nullable = false),
-    StructField("size_bytes", LongType, nullable = false),
-    StructField("entries", LongType, nullable = false),
-    StructField("removes", LongType, nullable = false),
-    StructField("checkpoint", LongType, nullable = true)))
-
-  override def name(): String = fullName
-  override def schema(): StructType = outSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = outSchema
-        override def description(): String =
-          s"graft-ocf MANIFESTS metadata of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val root = new Path(meta.location)
-          val fsys = root.getFileSystem(conf)
-          if (!OcfSnapshots.enabled(fsys, root)) return Array.empty
-          OcfSnapshots.manifestSummaries(fsys, root).map { m =>
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-              m.version,
-              m.timestampMs * 1000L,
-              UTF8String.fromString(m.operation),
-              UTF8String.fromString(if (m.isFull) "full" else "delta"),
-              m.sizeBytes,
-              m.entries.toLong,
-              m.removes.toLong,
-              if (m.ckpt >= 0) java.lang.Long.valueOf(m.ckpt) else null))
-          }.toArray
-        }
-      }
-    }
-}
-
 /** Zero-row scan of a known schema — what an empty catalog table reads as.
   * Echoes pruned columns (including metadata columns like `_file`) so plans
   * that reference them — a MERGE's target scan, say — stay resolved. */
@@ -2484,23 +2264,13 @@ private[sources] final class EmptyOcfScanBuilder(schema: StructType)
   }
 }
 
-/** `SELECT * FROM <cat>.<ns>.<table>.history` — one row per snapshot
-  * commit ([[OcfSnapshots]]): version, commit time, operation, file count
-  * and total visible bytes. The Iceberg `table.history`/`snapshots`
-  * observability surface, answered from the manifest JSONs alone — zero
-  * data files touched at any table size. */
-private[sources] final class OcfHistoryMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta, conf: Configuration)
+/** The shell every read-only metadata table shares: a fixed schema and
+  * one [[org.apache.spark.sql.connector.read.LocalScan]] whose rows come
+  * from `rowsOf`, evaluated on the driver at plan time. */
+private[sources] final class OcfMetaTable(
+    fullName: String, outSchema: StructType, desc: String,
+    rowsOf: () => Array[org.apache.spark.sql.catalyst.InternalRow])
     extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
-  private val outSchema = StructType(Seq(
-    StructField("version", LongType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = false),
-    StructField("operation", StringType, nullable = false),
-    StructField("n_files", LongType, nullable = false),
-    StructField("total_bytes", LongType, nullable = false)))
-
   override def name(): String = fullName
   override def schema(): StructType = outSchema
   override def capabilities(): java.util.Set[TableCapability] =
@@ -2510,194 +2280,282 @@ private[sources] final class OcfHistoryMetaTable(
     new ScanBuilder {
       override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
         override def readSchema(): StructType = outSchema
-        override def description(): String = s"graft-ocf HISTORY of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val root = new Path(meta.location)
-          val fsys = root.getFileSystem(conf)
-          OcfSnapshots.versions(fsys, root).map { v =>
-            val s = OcfSnapshots.read(fsys, root, v)
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-              s.version,
-              s.timestampMs * 1000L, // internal timestamps are micros
-              UTF8String.fromString(s.operation),
-              s.files.length.toLong,
-              s.files.map(_.len).sum))
-          }.toArray
-        }
+        override def description(): String = desc
+        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = rowsOf()
       }
     }
 }
 
-/** `SELECT * FROM <cat>.<ns>.<table>.constraints` — one row per stored
-  * CHECK constraint (X82): name, predicate SQL, enforced/rely flags and
-  * validation status, straight from the descriptor. */
-private[sources] final class OcfConstraintsMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta)
-    extends Table with SupportsRead {
+/** The catalog's metadata tables (`SELECT * FROM <cat>.<ns>.<table>.<kind>`),
+  * each a schema, a description and a rows body over [[OcfMetaTable]]. */
+private[sources] object OcfMetaTables {
+  import org.apache.spark.sql.catalyst.InternalRow
+  import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
   import org.apache.spark.sql.types._
+  import org.apache.spark.unsafe.types.UTF8String
 
-  private val outSchema = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("predicate", StringType, nullable = false),
-    StructField("enforced", BooleanType, nullable = false),
-    StructField("rely", BooleanType, nullable = false),
-    StructField("status", StringType, nullable = false)))
+  /** The metadata table named `kind` over `meta`, or None for a name that
+    * is not one. */
+  def forKind(kind: String, fullName: String, meta: GraftCatalog.TableMeta,
+              conf: Configuration): Option[Table] = kind match {
+    case "files" => Some(files(fullName, meta, conf))
+    case "manifests" => Some(manifests(fullName, meta, conf))
+    case "history" => Some(history(fullName, meta, conf))
+    case "constraints" => Some(constraints(fullName, meta))
+    case "tags" => Some(tags(fullName, meta, conf))
+    case "branches" => Some(branches(fullName, meta, conf))
+    case "partitions" => Some(partitions(fullName, meta, conf))
+    case _ => None
+  }
 
-  override def name(): String = fullName
-  override def schema(): StructType = outSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
+  /** The `<table>.files` METADATA table: one row per data file with its size,
+    * sealed-row-count stamp, codec, partition values and stamp inventory —
+    * answered entirely from file headers at PLAN time (the same one-pread-per-
+    * file resolution as query planning; no data block is ever read). The
+    * Iceberg `table.files` observability analog: `WHERE rows IS NULL` finds
+    * unstamped files, `ORDER BY size_bytes` finds compaction candidates. */
+  private def files(fullName: String, meta: GraftCatalog.TableMeta,
+                    conf: Configuration): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("file", StringType, nullable = false),
+      StructField("size_bytes", LongType, nullable = false),
+      StructField("rows", LongType, nullable = true),
+      StructField("codec", StringType, nullable = false),
+      StructField("partition", MapType(StringType, StringType, valueContainsNull = true),
+        nullable = false),
+      StructField("sorted_by", ArrayType(StringType, containsNull = false), nullable = true),
+      StructField("has_stats", BooleanType, nullable = false),
+      StructField("has_bloom", BooleanType, nullable = false),
+      StructField("has_block_index", BooleanType, nullable = false),
+      // 'data' | 'position-deletes' (X87); delete rows also name their target
+      StructField("content", StringType, nullable = false),
+      StructField("delete_of", StringType, nullable = true))),
+      s"graft-ocf FILES metadata of ${meta.location}",
+      () => fileRows(meta, conf))
 
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = outSchema
-        override def description(): String = s"graft-ocf CONSTRAINTS of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          GraftCatalog.constraintsOf(meta.options).sortBy(_.name).map { c =>
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-              UTF8String.fromString(c.name), UTF8String.fromString(c.predicateSql),
-              c.enforced, c.rely, UTF8String.fromString(c.validationStatus.name)))
+  private def fileRows(meta: GraftCatalog.TableMeta,
+                       conf: Configuration): Array[InternalRow] = {
+    // snapshot-aware: manifest metas answer without header preads,
+    // and retained time-travel files are not the table
+    val (layoutCols, metas) = GraftCatalog.tableFileMetas(meta, conf)
+    if (metas.isEmpty) return Array.empty
+    metas.map { m =>
+      val part = org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+        layoutCols.indices.map(i => UTF8String.fromString(layoutCols(i))).toArray[Any],
+        layoutCols.indices.map(i =>
+          if (i < m.partitionValues.length && m.partitionValues(i) != null)
+            UTF8String.fromString(m.partitionValues(i))
+          else null).toArray[Any])
+      val sortedBy = m.sortedByJson.flatMap(OcfPartitions.parseSortedBy).map(cols =>
+        new org.apache.spark.sql.catalyst.util.GenericArrayData(
+          cols.map(UTF8String.fromString).toArray[Any])).orNull
+      new GenericInternalRow(Array[Any](
+        UTF8String.fromString(m.path),
+        m.len,
+        m.rowsStamp.map(java.lang.Long.valueOf).orNull,
+        UTF8String.fromString(m.codecName),
+        part,
+        sortedBy,
+        m.statsJson.isDefined,
+        m.bloomJson.isDefined || m.bloomInHeader,
+        m.blockIndexJson.isDefined || m.blockIndexInHeader,
+        UTF8String.fromString("data"),
+        null)): InternalRow
+    }.toArray ++ deleteRows(meta, conf, layoutCols)
+  }
+
+  /** Position-delete files (X87): listed alongside data files with
+    * content='position-deletes' and their target path — the
+    * observability `WHERE content != 'data'` needs to find tables
+    * due a rewrite_position_deletes. */
+  private def deleteRows(meta: GraftCatalog.TableMeta, conf: Configuration,
+                         layoutCols: Seq[String]): Array[InternalRow] = {
+    val root = new Path(meta.location)
+    val fsys = root.getFileSystem(conf)
+    if (!OcfSnapshots.enabled(fsys, root)) return Array.empty
+    val base = fsys.makeQualified(root)
+    val emptyPart = org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+      layoutCols.map(c => UTF8String.fromString(c): Any).toArray,
+      layoutCols.map(_ => null: Any).toArray)
+    OcfSnapshots.latest(fsys, root).map(_.files).getOrElse(Nil)
+      .filterNot(_.isData).map { sf =>
+        new GenericInternalRow(Array[Any](
+          UTF8String.fromString(new Path(base, sf.path).toString),
+          sf.len,
+          sf.meta.flatMap(_.rowsStamp).map(java.lang.Long.valueOf).orNull,
+          UTF8String.fromString(sf.meta.map(_.codecName).getOrElse("null")),
+          emptyPart,
+          null,
+          false,
+          false,
+          false,
+          UTF8String.fromString(
+            if (sf.isPositionDelete) "position-deletes"
+            else "equality-deletes"),
+          // target: the position delete's one file, or the equality
+          // delete's key columns (its burden is seq-wide)
+          UTF8String.fromString(sf.deleteOf.getOrElse(
+            sf.equalityOf.map(_.mkString(",")).getOrElse(""))))): InternalRow
+      }.toArray
+  }
+
+  /** `SELECT * FROM <cat>.<ns>.<table>.manifests` — one row per retained
+    * manifest with its PHYSICAL shape: kind (full checkpoint vs delta),
+    * serialized size, entry/remove counts and the delta's checkpoint stamp.
+    * The observability face of the O(delta) commit layer: `WHERE kind =
+    * 'delta' AND version - checkpoint > N` finds tables due a
+    * `rewrite_manifests`, and the size column shows commit cost staying
+    * O(delta) as the table grows. Manifest JSONs only — no data touched. */
+  private def manifests(fullName: String, meta: GraftCatalog.TableMeta,
+                        conf: Configuration): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("version", LongType, nullable = false),
+      StructField("committed_at", TimestampType, nullable = false),
+      StructField("operation", StringType, nullable = false),
+      StructField("kind", StringType, nullable = false),
+      StructField("size_bytes", LongType, nullable = false),
+      StructField("entries", LongType, nullable = false),
+      StructField("removes", LongType, nullable = false),
+      StructField("checkpoint", LongType, nullable = true))),
+      s"graft-ocf MANIFESTS metadata of ${meta.location}", () => {
+        val root = new Path(meta.location)
+        val fsys = root.getFileSystem(conf)
+        if (!OcfSnapshots.enabled(fsys, root)) Array.empty
+        else OcfSnapshots.manifestSummaries(fsys, root).map { m =>
+          new GenericInternalRow(Array[Any](
+            m.version,
+            m.timestampMs * 1000L,
+            UTF8String.fromString(m.operation),
+            UTF8String.fromString(if (m.isFull) "full" else "delta"),
+            m.sizeBytes,
+            m.entries.toLong,
+            m.removes.toLong,
+            if (m.ckpt >= 0) java.lang.Long.valueOf(m.ckpt) else null)): InternalRow
+        }.toArray
+      })
+
+  /** `SELECT * FROM <cat>.<ns>.<table>.history` — one row per snapshot
+    * commit ([[OcfSnapshots]]): version, commit time, operation, file count
+    * and total visible bytes. The Iceberg `table.history`/`snapshots`
+    * observability surface, answered from the manifest JSONs alone — zero
+    * data files touched at any table size. */
+  private def history(fullName: String, meta: GraftCatalog.TableMeta,
+                      conf: Configuration): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("version", LongType, nullable = false),
+      StructField("committed_at", TimestampType, nullable = false),
+      StructField("operation", StringType, nullable = false),
+      StructField("n_files", LongType, nullable = false),
+      StructField("total_bytes", LongType, nullable = false))),
+      s"graft-ocf HISTORY of ${meta.location}", () => {
+        val root = new Path(meta.location)
+        val fsys = root.getFileSystem(conf)
+        OcfSnapshots.versions(fsys, root).map { v =>
+          val s = OcfSnapshots.read(fsys, root, v)
+          new GenericInternalRow(Array[Any](
+            s.version,
+            s.timestampMs * 1000L, // internal timestamps are micros
+            UTF8String.fromString(s.operation),
+            s.files.length.toLong,
+            s.files.map(_.len).sum)): InternalRow
+        }.toArray
+      })
+
+  /** `SELECT * FROM <cat>.<ns>.<table>.constraints` — one row per stored
+    * CHECK constraint (X82): name, predicate SQL, enforced/rely flags and
+    * validation status, straight from the descriptor. */
+  private def constraints(fullName: String, meta: GraftCatalog.TableMeta): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("name", StringType, nullable = false),
+      StructField("predicate", StringType, nullable = false),
+      StructField("enforced", BooleanType, nullable = false),
+      StructField("rely", BooleanType, nullable = false),
+      StructField("status", StringType, nullable = false))),
+      s"graft-ocf CONSTRAINTS of ${meta.location}", () =>
+        GraftCatalog.constraintsOf(meta.options).sortBy(_.name).map { c =>
+          new GenericInternalRow(Array[Any](
+            UTF8String.fromString(c.name), UTF8String.fromString(c.predicateSql),
+            c.enforced, c.rely, UTF8String.fromString(c.validationStatus.name))): InternalRow
+        }.toArray)
+
+  /** `SELECT * FROM <cat>.<ns>.<table>.tags` — one row per named snapshot
+    * (tag → pinned version + that manifest's commit time), from two small
+    * JSONs. The audit surface for "what can a training run still re-read". */
+  private def tags(fullName: String, meta: GraftCatalog.TableMeta,
+                   conf: Configuration): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("name", StringType, nullable = false),
+      StructField("version", LongType, nullable = false),
+      StructField("committed_at", TimestampType, nullable = false))),
+      s"graft-ocf TAGS of ${meta.location}", () => {
+        val root = new Path(meta.location)
+        val fsys = root.getFileSystem(conf)
+        OcfSnapshots.readTags(fsys, root).toSeq.sortBy(_._1).map {
+          case (nm, v) =>
+            new GenericInternalRow(Array[Any](
+              UTF8String.fromString(nm), v,
+              OcfSnapshots.timestampOf(fsys, root, v) * 1000L)): InternalRow
+        }.toArray
+      })
+
+  /** `SELECT * FROM <cat>.<ns>.<table>.branches` — one row per WAP branch
+    * (X83): name, base version, head version (= base before any branch
+    * commit), commit count, and the branch head's file/byte totals. The
+    * "what audit sets are in flight" rollup, from manifest JSONs alone. */
+  private def branches(fullName: String, meta: GraftCatalog.TableMeta,
+                       conf: Configuration): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("name", StringType, nullable = false),
+      StructField("base_version", LongType, nullable = false),
+      StructField("head_version", LongType, nullable = false),
+      StructField("n_commits", LongType, nullable = false),
+      StructField("n_files", LongType, nullable = false),
+      StructField("total_bytes", LongType, nullable = false))),
+      s"graft-ocf BRANCHES of ${meta.location}", () => {
+        val root = new Path(meta.location)
+        val fsys = root.getFileSystem(conf)
+        OcfSnapshots.listBranches(fsys, root).map { b =>
+          val base = OcfSnapshots.branchBase(fsys, root, b)
+          val head = OcfSnapshots.branchHead(fsys, root, b)
+          val commits = OcfSnapshots.branchVersions(fsys, root, b).length.toLong
+          new GenericInternalRow(Array[Any](
+            UTF8String.fromString(b), base, head.version, commits,
+            head.files.length.toLong, head.files.map(_.len).sum)): InternalRow
+        }.toArray
+      })
+
+  /** `SELECT * FROM <cat>.<ns>.<table>.partitions` - one row per partition
+    * tuple: file count, stamped row total (null when any file lacks a row
+    * stamp - never a guess), and byte size. The operational rollup behind
+    * "which partitions are skewed / fragmented / due for compaction",
+    * answered from manifest metas (or one header pread per uncovered file),
+    * zero data blocks read. */
+  private def partitions(fullName: String, meta: GraftCatalog.TableMeta,
+                         conf: Configuration): Table =
+    new OcfMetaTable(fullName, StructType(Seq(
+      StructField("partition", MapType(StringType, StringType, valueContainsNull = true),
+        nullable = false),
+      StructField("n_files", LongType, nullable = false),
+      StructField("rows", LongType, nullable = true),
+      StructField("size_bytes", LongType, nullable = false))),
+      s"graft-ocf PARTITIONS rollup of ${meta.location}", () => {
+        val (layoutCols, metas) = GraftCatalog.tableFileMetas(meta, conf)
+        metas.groupBy(_.partitionValues.toSeq).toSeq
+          .sortBy(_._1.map(v => if (v == null) "" else v).mkString(" "))
+          .map { case (vals, fs) =>
+            val part = org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
+              layoutCols.indices.map(i =>
+                UTF8String.fromString(layoutCols(i))).toArray[Any],
+              layoutCols.indices.map(i =>
+                if (i < vals.length && vals(i) != null)
+                  UTF8String.fromString(vals(i))
+                else null).toArray[Any])
+            val rowsTotal: Any =
+              if (fs.forall(_.rowsStamp.isDefined))
+                java.lang.Long.valueOf(fs.map(_.rowsStamp.get).sum)
+              else null
+            new GenericInternalRow(Array[Any](
+              part, fs.length.toLong, rowsTotal, fs.map(_.len).sum)): InternalRow
           }.toArray
-        }
-      }
-    }
-}
-
-/** `SELECT * FROM <cat>.<ns>.<table>.tags` — one row per named snapshot
-  * (tag → pinned version + that manifest's commit time), from two small
-  * JSONs. The audit surface for "what can a training run still re-read". */
-private[sources] final class OcfTagsMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta, conf: Configuration)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
-  private val outSchema = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("version", LongType, nullable = false),
-    StructField("committed_at", TimestampType, nullable = false)))
-
-  override def name(): String = fullName
-  override def schema(): StructType = outSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = outSchema
-        override def description(): String = s"graft-ocf TAGS of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val root = new Path(meta.location)
-          val fsys = root.getFileSystem(conf)
-          OcfSnapshots.readTags(fsys, root).toSeq.sortBy(_._1).map {
-            case (nm, v) =>
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-                UTF8String.fromString(nm), v,
-                OcfSnapshots.timestampOf(fsys, root, v) * 1000L))
-          }.toArray
-        }
-      }
-    }
-}
-
-/** `SELECT * FROM <cat>.<ns>.<table>.branches` — one row per WAP branch
-  * (X83): name, base version, head version (= base before any branch
-  * commit), commit count, and the branch head's file/byte totals. The
-  * "what audit sets are in flight" rollup, from manifest JSONs alone. */
-private[sources] final class OcfBranchesMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta, conf: Configuration)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
-  private val outSchema = StructType(Seq(
-    StructField("name", StringType, nullable = false),
-    StructField("base_version", LongType, nullable = false),
-    StructField("head_version", LongType, nullable = false),
-    StructField("n_commits", LongType, nullable = false),
-    StructField("n_files", LongType, nullable = false),
-    StructField("total_bytes", LongType, nullable = false)))
-
-  override def name(): String = fullName
-  override def schema(): StructType = outSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = outSchema
-        override def description(): String = s"graft-ocf BRANCHES of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val root = new Path(meta.location)
-          val fsys = root.getFileSystem(conf)
-          OcfSnapshots.listBranches(fsys, root).map { b =>
-            val base = OcfSnapshots.branchBase(fsys, root, b)
-            val head = OcfSnapshots.branchHead(fsys, root, b)
-            val commits = OcfSnapshots.branchVersions(fsys, root, b).length.toLong
-            new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-              UTF8String.fromString(b), base, head.version, commits,
-              head.files.length.toLong, head.files.map(_.len).sum))
-          }.toArray
-        }
-      }
-    }
-}
-
-/** `SELECT * FROM <cat>.<ns>.<table>.partitions` - one row per partition
-  * tuple: file count, stamped row total (null when any file lacks a row
-  * stamp - never a guess), and byte size. The operational rollup behind
-  * "which partitions are skewed / fragmented / due for compaction",
-  * answered from manifest metas (or one header pread per uncovered file),
-  * zero data blocks read. */
-private[sources] final class OcfPartitionsMetaTable(
-    fullName: String, meta: GraftCatalog.TableMeta, conf: Configuration)
-    extends Table with SupportsRead {
-  import org.apache.spark.sql.types._
-
-  private val outSchema = StructType(Seq(
-    StructField("partition", MapType(StringType, StringType, valueContainsNull = true),
-      nullable = false),
-    StructField("n_files", LongType, nullable = false),
-    StructField("rows", LongType, nullable = true),
-    StructField("size_bytes", LongType, nullable = false)))
-
-  override def name(): String = fullName
-  override def schema(): StructType = outSchema
-  override def capabilities(): java.util.Set[TableCapability] =
-    java.util.EnumSet.of(TableCapability.BATCH_READ)
-
-  override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    new ScanBuilder {
-      override def build(): Scan = new org.apache.spark.sql.connector.read.LocalScan {
-        override def readSchema(): StructType = outSchema
-        override def description(): String = s"graft-ocf PARTITIONS rollup of ${meta.location}"
-        override def rows(): Array[org.apache.spark.sql.catalyst.InternalRow] = {
-          import org.apache.spark.unsafe.types.UTF8String
-          val (layoutCols, metas) = GraftCatalog.tableFileMetas(meta, conf)
-          if (metas.isEmpty) return Array.empty
-          metas.groupBy(_.partitionValues.toSeq).toSeq
-            .sortBy(_._1.map(v => if (v == null) "" else v).mkString(" "))
-            .map { case (vals, fs) =>
-              val part = org.apache.spark.sql.catalyst.util.ArrayBasedMapData(
-                layoutCols.indices.map(i =>
-                  UTF8String.fromString(layoutCols(i))).toArray[Any],
-                layoutCols.indices.map(i =>
-                  if (i < vals.length && vals(i) != null)
-                    UTF8String.fromString(vals(i))
-                  else null).toArray[Any])
-              val rowsTotal: Any =
-                if (fs.forall(_.rowsStamp.isDefined))
-                  java.lang.Long.valueOf(fs.map(_.rowsStamp.get).sum)
-                else null
-              new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](
-                part, fs.length.toLong, rowsTotal, fs.map(_.len).sum))
-            }.toArray
-        }
-      }
-    }
+      })
 }

@@ -3,6 +3,7 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{coalesce, col, count, explode, lit, sequence}
+import org.apache.spark.sql.types.StructType
 
 /** Change-data-feed reads over snapshot history (X92, the Delta CDF /
   * Iceberg changelog shape): every row the table GAINED or LOST in
@@ -11,40 +12,36 @@ import org.apache.spark.sql.functions.{coalesce, col, count, explode, lit, seque
   * (GDPR erasures, corrections, appends) to downstream derived datasets
   * incrementally instead of re-diffing whole snapshots.
   *
-  * How each commit's changes derive, all DISTRIBUTED (no driver row
+  * One engine derives the rows, all DISTRIBUTED (no driver row
   * materialization anywhere):
-  *  - files ADDED as table data → their rows, read AS OF that version
-  *    (later versions' deletes must not leak backward), as inserts;
-  *  - position-delete files ADDED → the lost rows, recovered exactly as
-  *    `rows(target, v-1) ANTI JOIN rows(target, v) ON (_file, _pos)` —
-  *    two targeted scans and one shuffle over only the burdened files;
-  *  - a merge-on-read UPDATE therefore emits its old rows as deletes and
-  *    its new rows as inserts in the same commit (the standard CDC pair);
-  *  - equality-delete files ADDED (X94 upserts) → the same before/after
-  *    anti-join over the burdened (older-seq) files;
+  *  - every maximal run of commits that keep their data files (appends,
+  *    merge-on-read DELETE/UPDATE/MERGE, upserts, compact,
+  *    rewrite_position_deletes) is ONE batch read of the `.changes` table's
+  *    planner and reader factory ([[GraftChangesPlanner]]): new data files
+  *    as inserts, position- and equality-deleted rows as deletes, and
+  *    row-preserving rewrites as nothing — so the programmatic feed, the
+  *    `.changes` table and the streaming source derive (and pair) a commit
+  *    identically;
   *  - a COPY-ON-WRITE row-level commit ('replace-rows': CoW DELETE/
   *    UPDATE/MERGE) → the MULTISET DIFF of the replaced files' rows
   *    (as of v-1) against the replacement files' rows (as of v): rows
   *    only in the before side are deletes, only in the after side are
   *    inserts, and surviving rows cancel — a groupBy-count full-outer
-  *    join over only the replaced/replacement files, exact by value;
-  *  - row-preserving rewrites (compact, rewrite_position_deletes) emit
-  *    nothing; any OTHER commit that removed/replaced data files
-  *    (overwrites, partition drops) REFUSES — its per-row changes are
-  *    not recoverable from the file diff, and a silent partial answer
-  *    would corrupt every downstream increment.
+  *    join over only the replaced/replacement files, exact by value. The
+  *    table and the stream refuse these commits; only this feed diffs them;
+  *  - any OTHER commit that removed/replaced data files (overwrites,
+  *    partition drops) REFUSES — its per-row changes are not recoverable
+  *    from the file diff, and a silent partial answer would corrupt every
+  *    downstream increment.
   *
   * `readerSchemaJson` (Avro, DATA columns) pins one schema across the
   * range — catalog callers pass their stored reader schema so a range
-  * spanning schema evolution still unions cleanly; None falls back to the
-  * first file's writer schema (fine without evolution). */
+  * spanning schema evolution still unions cleanly; None uses the latest
+  * commit's table schema (or its first data file's writer schema). */
 object GraftChanges {
 
   val ChangeTypeCol = "_change_type"
   val CommitVersionCol = "_commit_version"
-
-  /** Commits whose file removals are row-preserving by construction. */
-  private val RowPreservingOps = Set("compact", "rewrite-position-deletes")
 
   /** The copy-on-write row-level operation ([[OcfCommit]]'s `replace-rows`):
     * the ONLY file-replacing commit whose per-row changes are recoverable —
@@ -59,7 +56,7 @@ object GraftChanges {
     * `pairKeys` (X104, CoW commits): the changed rows re-tag as update
     * pairs by key where both sides carry the key. */
   private def multisetDiff(before: Option[DataFrame], after: Option[DataFrame],
-                           v: Long, pairKeys: Seq[String] = Nil): Seq[DataFrame] = {
+                           v: Long, pairKeys: Seq[String]): Seq[DataFrame] = {
     (before, after) match {
       case (None, None) => Nil
       case (Some(b), None) => Seq(tag(b, "delete", v))
@@ -78,50 +75,47 @@ object GraftChanges {
           merged.where(n > lit(0L))
             .withColumn("_dup", explode(sequence(lit(1L), n)))
             .select(cols.map(col): _*)
-        pairAndTag(Some(emit(col("_na") - col("_nb"))),
-          Some(emit(col("_nb") - col("_na"))), pairKeys, v)
+        pairAndTag(emit(col("_na") - col("_nb")),
+          emit(col("_nb") - col("_na")), pairKeys, v)
     }
   }
 
   private def tag(df: DataFrame, t: String, v: Long): DataFrame =
     df.withColumn(ChangeTypeCol, lit(t)).withColumn(CommitVersionCol, lit(v))
 
-  /** Tag one commit's insert/delete row sets — as update pairs by key
-    * (X104) when `pairKeys` is given and both sides exist, else plainly.
-    * Null-safe key equality (the engine's tuple match treats null == null,
-    * so must the join); the key sets are O(changed rows), broadcastable. */
-  private def pairAndTag(insertDf: Option[DataFrame], deleteDf: Option[DataFrame],
+  /** Tag one CoW commit's insert/delete row sets — as update pairs by key
+    * (X104) when `pairKeys` is given, else plainly. Null-safe key equality
+    * (the engine's tuple match treats null == null, so must the join); the
+    * key sets are O(changed rows), broadcastable. */
+  private def pairAndTag(ins: DataFrame, del: DataFrame,
                          pairKeys: Seq[String], v: Long): Seq[DataFrame] =
-    (insertDf, deleteDf) match {
-      case (Some(ins), Some(del)) if pairKeys.nonEmpty =>
-        val kc = pairKeys.map(k => ins.columns.find(_.equalsIgnoreCase(k))
-          .getOrElse(throw new IllegalArgumentException(
-            s"graft-ocf changes: pairing key column '$k' is not in the feed " +
-              s"schema (${ins.columns.mkString(", ")})")))
-        // The insert and delete sides of a CoW commit derive from the SAME
-        // file-diff plan, so a key set selected straight off one side would
-        // share expression IDs with the other — a self-join whose
-        // resolution rests on Spark's dataset-id disambiguation. Aliasing
-        // every key-set column to a fresh name mints new expression IDs at
-        // the key set's output, making each semi/anti join unambiguous by
-        // construction (the probe side's attributes can only resolve left).
-        val fresh = kc.indices.map(i => s"_graft_pk$i")
-        def keysOf(side: DataFrame) =
-          side.select(kc.zip(fresh).map { case (c, f) => side(c).as(f) }: _*)
-            .distinct()
-        val insKeys = keysOf(ins)
-        val delCond = kc.zip(fresh).map { case (c, f) => del(c) <=> insKeys(f) }
-          .reduce(_ && _)
-        val delKeys = keysOf(del)
-        val insCond = kc.zip(fresh).map { case (c, f) => ins(c) <=> delKeys(f) }
-          .reduce(_ && _)
-        Seq(tag(del.join(insKeys, delCond, "left_semi"), "update_preimage", v),
-          tag(del.join(insKeys, delCond, "left_anti"), "delete", v),
-          tag(ins.join(delKeys, insCond, "left_semi"), "update_postimage", v),
-          tag(ins.join(delKeys, insCond, "left_anti"), "insert", v))
-      case _ =>
-        insertDf.map(tag(_, "insert", v)).toSeq ++
-          deleteDf.map(tag(_, "delete", v))
+    if (pairKeys.isEmpty) Seq(tag(ins, "insert", v), tag(del, "delete", v))
+    else {
+      val kc = pairKeys.map(k => ins.columns.find(_.equalsIgnoreCase(k))
+        .getOrElse(throw new IllegalArgumentException(
+          s"graft-ocf changes: pairing key column '$k' is not in the feed " +
+            s"schema (${ins.columns.mkString(", ")})")))
+      // The insert and delete sides of a CoW commit derive from the SAME
+      // file-diff plan, so a key set selected straight off one side would
+      // share expression IDs with the other — a self-join whose
+      // resolution rests on Spark's dataset-id disambiguation. Aliasing
+      // every key-set column to a fresh name mints new expression IDs at
+      // the key set's output, making each semi/anti join unambiguous by
+      // construction (the probe side's attributes can only resolve left).
+      val fresh = kc.indices.map(i => s"_graft_pk$i")
+      def keysOf(side: DataFrame) =
+        side.select(kc.zip(fresh).map { case (c, f) => side(c).as(f) }: _*)
+          .distinct()
+      val insKeys = keysOf(ins)
+      val delCond = kc.zip(fresh).map { case (c, f) => del(c) <=> insKeys(f) }
+        .reduce(_ && _)
+      val delKeys = keysOf(del)
+      val insCond = kc.zip(fresh).map { case (c, f) => ins(c) <=> delKeys(f) }
+        .reduce(_ && _)
+      Seq(tag(del.join(insKeys, delCond, "left_semi"), "update_preimage", v),
+        tag(del.join(insKeys, delCond, "left_anti"), "delete", v),
+        tag(ins.join(delKeys, insCond, "left_semi"), "update_postimage", v),
+        tag(ins.join(delKeys, insCond, "left_anti"), "insert", v))
     }
 
   /** [[changes]] for a catalog-qualified table (`"cat.ns.table"`): the
@@ -154,14 +148,12 @@ object GraftChanges {
       updateImages = updateImages, pairKeys = declaredKeys)
   }
 
-  /** `updateImages=true` (X104 parity for the programmatic surface): an
-    * equality-delete commit's delete+insert rows sharing a key re-tag
-    * `update_preimage`/`update_postimage` — two broadcastable key
-    * semi/anti joins per upsert commit, O(batch). Pairing applies to the
-    * upsert/apply-changes commit SHAPE (equality deletes, one key-column
-    * set, both sides present); a commit also carrying position deletes or
-    * mixing key shapes stays delete+insert — the file diff cannot
-    * attribute its lost rows to keys.
+  /** `updateImages=true` (X104 parity for the programmatic surface): a
+    * commit's deleted and inserted rows sharing a key re-tag
+    * `update_preimage`/`update_postimage` under the `.changes` table's
+    * rule — the rows an equality delete kills pair with the commit's new
+    * data by the delete files' key columns; position-deleted rows never
+    * pair (they name ordinals, not keys).
     *
     * `pairKeys` extends pairing to COPY-ON-WRITE row-level commits (CoW
     * UPDATE/MERGE), whose value-level multiset diff has no delete files to
@@ -197,22 +189,36 @@ object GraftChanges {
       s"graft-ocf changes: empty range ($startVersion, $end]")
     val chain = vs.filter(v => v >= startVersion && v <= end)
 
-    def readAsOf(v: Long, relFiles: Seq[String], withPos: Boolean): DataFrame = {
-      var r = spark.read.format("graft-ocf")
+    // the `.changes` table over this directory, shaped by the caller's
+    // reader schema when one is given
+    val (latestOut, latestJson, partSchema) =
+      GraftChangesSource.resolveSchema(tableDir)
+    val readerJson = readerSchemaJson.getOrElse(latestJson)
+    val out =
+      if (readerSchemaJson.isEmpty) latestOut
+      else StructType(OcfDataSource.sqlShape(readerJson)._1.fields ++
+        partSchema.fields ++ GraftChangesSource.ChangeCols)
+    val feed = new GraftChangesTable(tableDir, out, readerJson, partSchema,
+      startingVersion = None, updateImages = updateImages)
+    // (a, b]: one planner read — an all-row-preserving run is an empty
+    // frame shaped like the feed
+    def planned(a: Long, b: Long): DataFrame =
+      org.apache.spark.sql.graft.Shims.tableFrame(spark, feed,
+        Map("startingVersion" -> a.toString, "endingVersion" -> b.toString))
+
+    def readAsOf(v: Long, relFiles: Seq[String]): DataFrame = {
+      val df = spark.read.format("graft-ocf")
         .option("graft.snapshot.version", v.toString)
         .option("graft.files", relFiles.sorted.mkString(","))
         // engine lens: `_p_*` transform levels are derived layout, never
         // feed columns — also what keeps MIXED spec eras (X100) unioning
         // instead of failing on per-era phantom columns
         .option("transformPartitions", "")
-      readerSchemaJson.foreach(j => r = r.option("readerSchema", j))
-      val df0 = r.load(tableDir)
+        .option("readerSchema", readerJson)
+        .load(tableDir)
       // bucket levels (any era, X103) are layout too (the read has no
       // bucket spec to fold them into, so they would surface as columns)
-      val df = df0.drop(df0.columns.filter(OcfBucket.isLevel).toIndexedSeq: _*)
-      if (withPos) df.selectExpr("*", OcfDataSource.FileColName,
-        OcfDataSource.PosColName)
-      else df
+      df.drop(df.columns.filter(OcfBucket.isLevel).toIndexedSeq: _*)
     }
 
     var prev =
@@ -220,6 +226,8 @@ object GraftChanges {
         OcfSnapshots.Snapshot(0L, 0L, "genesis", Nil)
       else OcfSnapshots.read(fs, root, chain.head)
     var prevV = if (startVersion == 0L) 0L else chain.head
+    // start (exclusive) of the pending run of non-CoW versions
+    var runFrom: Option[Long] = None
     val parts = Seq.newBuilder[DataFrame]
     val walk = if (startVersion == 0L) chain else chain.tail
     walk.foreach { v =>
@@ -229,112 +237,32 @@ object GraftChanges {
       val removedData = prev.files.filter(f =>
         f.isData && !curPaths.contains(f.path))
       if (removedData.nonEmpty)
-        require(RowPreservingOps.contains(cur.operation) ||
+        require(GraftChangesPlanner.RowPreservingOps.contains(cur.operation) ||
             cur.operation == CowRowLevelOp,
           s"graft-ocf changes: version $v (operation '${cur.operation}') " +
             s"removed or replaced ${removedData.size} data file(s) — its " +
             "per-row changes are not recoverable from the file diff. Read " +
             "a full snapshot instead, or start after the rewriting commit.")
       if (cur.operation == CowRowLevelOp) {
+        runFrom.foreach(a => parts += planned(a, prevV))
+        runFrom = None
         // copy-on-write DELETE/UPDATE/MERGE: the replaced files' rows
         // (before) vs the replacement files' rows (after), value-exact
         val addedData = cur.files.filter(f =>
           f.isData && !prevByPath.contains(f.path)).map(_.path)
         val before =
           if (removedData.isEmpty) None
-          else Some(readAsOf(prevV, removedData.map(_.path), withPos = false))
+          else Some(readAsOf(prevV, removedData.map(_.path)))
         val after =
           if (addedData.isEmpty) None
-          else Some(readAsOf(v, addedData, withPos = false))
+          else Some(readAsOf(v, addedData))
         parts ++= multisetDiff(before, after, v,
           pairKeys = if (updateImages) pairKeys else Nil)
-      } else if (!RowPreservingOps.contains(cur.operation)) {
-        val addedData = cur.files.filter(f =>
-          f.isData && !prevByPath.contains(f.path)).map(_.path)
-        // anti-join only targets that were VISIBLE at the previous
-        // retained version: a target added in the same step (or an expired
-        // gap) surfaces through the as-of-v insert read, which already
-        // applies this step's deletes
-        val addedPosTargets = cur.files.filter(f =>
-          f.isPositionDelete && !prevByPath.contains(f.path))
-          .flatMap(_.deleteOf).distinct
-          .filter(prevByPath.contains)
-        // an EQUALITY delete (X94, upsert commit) burdens every data file
-        // born before it: the same before/after anti-join recovers its
-        // per-row deletions exactly — the after-read applies the new keys.
-        // Burden SCOPING ([[OcfEqScope]]): files whose manifest-inline
-        // min/max bounds provably admit none of the commit's keys lost no
-        // rows and are excluded — without this, every upsert commit
-        // re-reads ~the whole pre-commit table through the anti-join.
-        val addedEq = cur.files.filter(f =>
-          f.isEqualityDelete && !prevByPath.contains(f.path))
-        val addedEqTargets =
-          if (addedEq.isEmpty) Nil
-          else {
-            val conf = spark.sessionState.newHadoopConf()
-            val baseQ = fs.makeQualified(root)
-            val eqInfos = addedEq.map(e => (e.seq,
-              OcfEqScope.summaryFor(OcfEqScope.metaOfSnap(baseQ, e, conf), conf)))
-            prev.files.filter(f => f.isData && eqInfos.exists {
-              case (eseq, sum) => f.seq < eseq &&
-                OcfEqScope.mayBurdenFile(f, baseQ, sum, conf)
-            }).map(_.path)
-          }
-        val addedDeleteTargets = (addedPosTargets ++ addedEqTargets).distinct
-        val insertDf: Option[DataFrame] =
-          if (addedData.isEmpty) None
-          else Some(readAsOf(v, addedData, withPos = false))
-        val deleteDf: Option[DataFrame] =
-          if (addedDeleteTargets.isEmpty) None
-          else {
-            // before = the previous RETAINED version (v-1 may be expired);
-            // deletions inside an expired gap then attribute to v — the same
-            // consecutive-retained coarsening the incremental read documents
-            val before = readAsOf(prevV, addedDeleteTargets, withPos = true)
-            val after = readAsOf(v, addedDeleteTargets, withPos = true)
-              .select(OcfDataSource.FileColName, OcfDataSource.PosColName)
-            Some(before.join(after,
-                Seq(OcfDataSource.FileColName, OcfDataSource.PosColName),
-                "left_anti")
-              .drop(OcfDataSource.FileColName, OcfDataSource.PosColName))
-          }
-        // UPDATE pairing (X104): only the clean upsert shape pairs — the
-        // anti-join's lost rows are attributable to keys only when EVERY
-        // delete this commit made was an equality delete of ONE key shape.
-        val eqPairKeys: Seq[String] =
-          if (updateImages && addedEq.nonEmpty && addedPosTargets.isEmpty &&
-              addedEq.map(_.equalityOf.get).distinct.length == 1)
-            addedEq.head.equalityOf.get
-          else Nil
-        parts ++= pairAndTag(insertDf, deleteDf, eqPairKeys, v)
-      }
+      } else if (runFrom.isEmpty) runFrom = Some(prevV)
       prev = cur
       prevV = v
     }
-    val all = parts.result()
-    if (all.isEmpty) {
-      // a range of only row-preserving commits legitimately changed zero
-      // rows — an EMPTY frame (shaped by the pinned reader schema, the
-      // same rule as X78's incremental read), not an error; incremental
-      // consumers must not have to try/catch "no changes". Without a
-      // schema there is nothing to shape, so the refusal stays loud.
-      readerSchemaJson match {
-        case Some(j) =>
-          val (dataSql, _) = OcfDataSource.sqlShape(j)
-          val shape = org.apache.spark.sql.types.StructType(dataSql.fields ++ Seq(
-            org.apache.spark.sql.types.StructField(ChangeTypeCol,
-              org.apache.spark.sql.types.StringType, nullable = false),
-            org.apache.spark.sql.types.StructField(CommitVersionCol,
-              org.apache.spark.sql.types.LongType, nullable = false)))
-          return spark.createDataFrame(
-            java.util.Collections.emptyList[org.apache.spark.sql.Row](), shape)
-        case None => throw new IllegalArgumentException(
-          s"graft-ocf changes: range ($startVersion, $end] holds only " +
-            "row-preserving commits and no readerSchema was given to shape " +
-            "an empty result; read any version in the range for the " +
-            "(unchanged) rows")
-      }
-    }
-    all.reduce(_ unionByName _)
+    runFrom.foreach(a => parts += planned(a, prevV))
+    parts.result().reduceOption(_ unionByName _).getOrElse(planned(end, end))
   }
 }

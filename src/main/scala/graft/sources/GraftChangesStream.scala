@@ -24,7 +24,8 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   * The same exact-or-refuse contract as the batch feed, enforced at the
   * trigger that first observes the offending commit:
-  *  - appends and upsert inserts → their files read whole, as inserts;
+  *  - appends and upsert inserts → their files read as of the commit,
+  *    as inserts;
   *  - merge-on-read position-delete commits → the target file re-read in
   *    the reader's CHANGES mode, emitting ONLY the newly deleted ordinals
   *    (new delete files minus the previously dead set);
@@ -49,12 +50,13 @@ final class GraftChangesSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graft-ocf-changes"
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    GraftChangesSource.resolveSchema(options)._2
+    GraftChangesSource.resolveSchema(GraftChangesSource.pathOf(options))._1
 
   override def getTable(schema: StructType, partitioning: Array[Transform],
                         properties: java.util.Map[String, String]): Table = {
     val opts = new CaseInsensitiveStringMap(properties)
-    val (dir, out, readerJson, partSchema) = GraftChangesSource.resolveSchema(opts)
+    val dir = GraftChangesSource.pathOf(opts)
+    val (out, readerJson, partSchema) = GraftChangesSource.resolveSchema(dir)
     new GraftChangesTable(dir, out, readerJson, partSchema,
       Option(opts.get("startingVersion")).map(_.toLong),
       Option(opts.get("maxVersionsPerTrigger")).map(_.toInt),
@@ -69,19 +71,20 @@ private[sources] object GraftChangesSource {
     StructField(GraftChanges.ChangeTypeCol, StringType, nullable = false),
     StructField(GraftChanges.CommitVersionCol, LongType, nullable = false))
 
-  /** (tableDir, output schema, reader Avro JSON, identity partition
-    * schema) for one options map. Identity-partitioned layouts: the
+  def pathOf(options: CaseInsensitiveStringMap): String =
+    Option(options.get("path")).getOrElse(
+      throw new IllegalArgumentException(
+        "graft-ocf-changes: no 'path' specified"))
+
+  /** (output schema, reader Avro JSON, identity partition schema) of the
+    * change feed over table directory `dir`. Identity-partitioned layouts: the
     * partition columns are re-inferred from the manifest's file paths
     * (the same `k=v` segment rules as the batch scan), typed by the
     * committed table schema when one exists, else by value inference —
     * their values ride each change part as per-file constants. Hidden
     * transform (`_p_*`) and bucket levels keep their source values in
     * the data columns and are never surfaced. */
-  def resolveSchema(options: CaseInsensitiveStringMap)
-      : (String, StructType, String, StructType) = {
-    val dir = Option(options.get("path")).getOrElse(
-      throw new IllegalArgumentException(
-        "graft-ocf-changes: no 'path' specified"))
+  def resolveSchema(dir: String): (StructType, String, StructType) = {
     val root = new Path(dir)
     val conf = org.apache.spark.sql.SparkSession.active
       .sessionState.newHadoopConf()
@@ -126,7 +129,7 @@ private[sources] object GraftChangesSource {
       StructField(c, dt, nullable = true)
     })
     val readerJson = GraftCatalog.readerJsonWithDefaults(dataSchema)
-    (dir, StructType(dataSchema.fields ++ partSchema.fields ++ ChangeCols),
+    (StructType(dataSchema.fields ++ partSchema.fields ++ ChangeCols),
       readerJson, partSchema)
   }
 
@@ -616,7 +619,8 @@ private[graft] final class GraftChangesMicroBatchStream(
   * sv = 0 is the GENESIS baseline (needs version 1 retained). */
 private[sources] object GraftChangesPlanner {
 
-  private val RowPreservingOps = Set("compact", "rewrite-position-deletes")
+  /** Commits whose file removals are row-preserving by construction. */
+  val RowPreservingOps = Set("compact", "rewrite-position-deletes")
 
   /** One planning pass's output: the parts, plus the per-COMMIT pairing
     * inputs (X104) destined for the READER FACTORY — per-commit constants
@@ -695,13 +699,15 @@ private[sources] object GraftChangesPlanner {
             }
           }
         }
-        // prior equality deletes applicable to a data file, SCOPED by the
-        // file's manifest-inline key bounds ([[OcfEqScope]]) — a refuted
-        // delete file provably killed none of its rows
-        def priorEq(f: OcfSnapshots.SnapFile): Seq[OcfSnapshots.SnapFile] =
-          prev.files.filter(e => e.isEqualityDelete && f.seq < e.seq &&
+        // the equality deletes of `files` applicable to a data file, SCOPED
+        // by the file's manifest-inline key bounds ([[OcfEqScope]]) — a
+        // refuted delete file provably killed none of its rows
+        def eqOn(files: Seq[OcfSnapshots.SnapFile],
+                 f: OcfSnapshots.SnapFile): Seq[OcfSnapshots.SnapFile] =
+          files.filter(e => e.isEqualityDelete && f.seq < e.seq &&
             OcfEqScope.mayBurdenFile(f, qualRoot,
               OcfEqScope.summaryFor(metaOf(e), conf), conf))
+        def priorEq(f: OcfSnapshots.SnapFile) = eqOn(prev.files, f)
         val newData = cur.files.filter(f =>
           f.isData && !prevByPath.contains(f.path))
         // new EQUALITY-delete burden set, computed BEFORE the insert parts
@@ -714,6 +720,7 @@ private[sources] object GraftChangesPlanner {
         // whole pre-commit table per upsert trigger.
         val newEq = cur.files.filter(f =>
           f.isEqualityDelete && !prevByPath.contains(f.path))
+        val curPos = cur.files.filter(_.isPositionDelete).groupBy(_.deleteOf.get)
         val burdened: Seq[(OcfSnapshots.SnapFile,
             Seq[OcfDataSource.OcfFileMeta], Seq[OcfDataSource.OcfFileMeta],
             Seq[OcfDataSource.OcfFileMeta])] =
@@ -728,11 +735,11 @@ private[sources] object GraftChangesPlanner {
                 case (eseq, m, sum) if f.seq < eseq &&
                   OcfEqScope.mayBurdenFile(f, qualRoot, sum, conf) => m }
               if (burdening.isEmpty) None
-              else {
-                val oldPos = prev.files.filter(d =>
-                  d.isPositionDelete && d.deleteOf.contains(f.path))
-                Some((f, oldPos.map(metaOf), priorEq(f).map(metaOf), burdening))
-              }
+              // skip the position deletes as of v, not v-1: a row this
+              // commit also deletes by position is its position part's
+              // change, and must not be emitted twice
+              else Some((f, curPos.getOrElse(f.path, Nil).map(metaOf),
+                priorEq(f).map(metaOf), burdening))
             }
           }
         // UPDATE pairing (X104): only a commit that both killed keys and
@@ -747,9 +754,14 @@ private[sources] object GraftChangesPlanner {
             pairOldAcc += v -> burdened.map { case (f, sp, se, em) =>
               GraftPairOldFile(metaOf(f), sp, se, em) }
         }
-        // inserts: files new at v — nothing burdens a file in its own commit
+        // inserts: files new at v, read AS OF v. Nothing burdens a file in
+        // its own commit, so the skip sets are empty unless versions between
+        // the previous retained one and v expired: a file born inside that
+        // gap may carry deletes from a later commit of the gap
         newData.foreach(f => addSplit(GraftChangesPartition(metaOf(f),
-          "insert", v, partValues = partVals(f),
+          "insert", v,
+          skipPos = curPos.getOrElse(f.path, Nil).map(metaOf),
+          skipEq = eqOn(cur.files, f).map(metaOf), partValues = partVals(f),
           pairPlanned = pairedCommit && burdened.nonEmpty)))
         // deletes from new POSITION-delete files: targets visible before v
         // (a same-commit target's rows surface through its insert part,

@@ -30,6 +30,20 @@ object Shims {
     org.apache.spark.sql.execution.datasources.DataSourceStrategy
       .translateFilter(predicate, supportNestedPredicatePushdown)
 
+  /** A DataFrame over a connector [[org.apache.spark.sql.connector.catalog.Table]]
+    * instance with scan options (`Dataset.ofRows` is `private[sql]`): for
+    * tables built in-package rather than resolved by a catalog or a
+    * `format(...)` load. */
+  def tableFrame(spark: SparkSession,
+                 table: org.apache.spark.sql.connector.catalog.Table,
+                 options: Map[String, String]): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation.create(
+        table, None, None,
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(
+          scala.jdk.CollectionConverters.MapHasAsJava(options).asJava)))
+
   def registerFunction(spark: SparkSession, name: String,
                        builder: Seq[Expression] => Expression): Unit = {
     spark.sessionState.functionRegistry.registerFunction(

@@ -7,6 +7,20 @@ import org.scalatest.funsuite.AnyFunSuite
   * broken flagship would silently cost correctness rows at round end. */
 class DriverContractSpec extends AnyFunSuite {
 
+  /** `getOrCreate()` returns any session already running in this JVM and
+    * ignores the builder's settings, so the shuffle-partition count the
+    * tests plan under is set on the session itself, then restored. */
+  private def withShufflePartitions[T](spark: SparkSession)(body: => T): T = {
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "2")
+    try body
+    finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
+
   test("every oracle key names a declared query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
     assert(orphans.isEmpty, s"oracle entries without a query: $orphans")
@@ -35,7 +49,9 @@ class DriverContractSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .appName("graft-contract-spec")
       .getOrCreate()
-    assert(SparkEntry.entry(spark).count() > 0)
+    withShufflePartitions(spark) {
+      assert(SparkEntry.entry(spark).count() > 0)
+    }
   }
 
   test("oracle SQL contains no unescaped control characters that would break JSON dumping") {
@@ -65,7 +81,7 @@ class DriverContractSpec extends AnyFunSuite {
       .getOrCreate()
     val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
+    try withShufflePartitions(spark) {
       val sortEarly = Seq("q12_avro_roundtrip", "q30_multimodal_stats",
         "q33_curation", "q53_wav_audio_meta", "q54_pnm_image_meta",
         "q55_pnm_resize", "q59_y4m_video_meta", "q60_y4m_frame_sample",

@@ -5,8 +5,9 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Change-data-feed reads (X92): inserts/deletes per commit recovered from
-  * snapshot diffs + position-delete anti-joins; refusal on unrecoverable
-  * rewrites; row-preserving maintenance emits nothing. */
+  * snapshot diffs and delete files (the `.changes` table's planner) or a
+  * copy-on-write multiset diff; refusal on unrecoverable rewrites;
+  * row-preserving maintenance emits nothing. */
 class GraftChangesSpec extends AnyFunSuite {
 
   private val warehouse =
@@ -190,6 +191,81 @@ class GraftChangesSpec extends AnyFunSuite {
       .select("_commit_version", "_change_type", "id")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
     assert(afterDel.toSeq == Seq((3L, "delete", 4L)), afterDel.toSeq.toString)
+  }
+
+  test("one engine: a MoR DELETE/UPDATE, upsert, compact and CoW DELETE " +
+      "range reads as literal rows, and its non-CoW prefix is the " +
+      ".changes read") {
+    import spark.implicits._
+    spark.sql(
+      """CREATE TABLE gc.ns.onefeed (id BIGINT, v STRING)
+        |USING `graft-ocf` OPTIONS (statsColumns 'id',
+        |  `write.delete.mode` 'merge-on-read',
+        |  `write.update.mode` 'merge-on-read')""".stripMargin)
+    spark.sql("INSERT INTO gc.ns.onefeed SELECT id, concat('a', id) FROM range(6)") // v1
+    spark.sql("DELETE FROM gc.ns.onefeed WHERE id = 1")                             // v2
+    spark.sql("UPDATE gc.ns.onefeed SET v = concat('u', id) WHERE id = 2")          // v3
+    Seq((3L, "p3"), (10L, "n10")).toDF("id", "v")
+      .writeTo("gc.ns.onefeed").option("upsertKeys", "id").append()                 // v4
+    spark.sql("CALL gc.system.compact(table => 'ns.onefeed')")                      // v5
+    spark.sql("ALTER TABLE gc.ns.onefeed " +
+      "SET TBLPROPERTIES ('write.delete.mode'='copy-on-write')")
+    spark.sql("DELETE FROM gc.ns.onefeed WHERE id = 4")                             // v6 (CoW)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("_commit_version", "_change_type", "id", "v")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+        .toSeq.sorted
+    val cow = Seq((6L, "delete", 4L, "a4"))
+    val expected = Map(
+      false -> (Seq((2L, "delete", 1L, "a1"),
+        (3L, "delete", 2L, "a2"), (3L, "insert", 2L, "u2"),
+        (4L, "delete", 3L, "a3"), (4L, "insert", 3L, "p3"),
+        (4L, "insert", 10L, "n10")) ++ cow),
+      // the upsert pairs by its key; the UPDATE's position deletes never do
+      true -> (Seq((2L, "delete", 1L, "a1"),
+        (3L, "delete", 2L, "a2"), (3L, "insert", 2L, "u2"),
+        (4L, "insert", 10L, "n10"),
+        (4L, "update_postimage", 3L, "p3"),
+        (4L, "update_preimage", 3L, "a3")) ++ cow))
+    Seq(false, true).foreach { images =>
+      val feed = rows(GraftChanges.forTable(spark, "gc.ns.onefeed", 1L,
+        updateImages = images))
+      assert(feed == expected(images), s"updateImages=$images: $feed")
+      assert(rows(GraftChanges.changes(spark, loc("onefeed"), 1L,
+        updateImages = images)) == feed, s"updateImages=$images")
+      val table = rows(spark.read.option("startingVersion", "1")
+        .option("endingVersion", "5").option("updateImages", images.toString)
+        .table("gc.ns.onefeed.changes"))
+      assert(feed.filter(_._1 <= 5L) == table, s"updateImages=$images: $table")
+    }
+  }
+
+  test("a range across expired versions reads files born inside the gap " +
+      "as of the next retained version") {
+    import spark.implicits._
+    spark.sql(
+      """CREATE TABLE gc.ns.gap (id BIGINT, v STRING)
+        |USING `graft-ocf` OPTIONS (statsColumns 'id',
+        |  `write.delete.mode` 'merge-on-read')""".stripMargin)
+    spark.sql("INSERT INTO gc.ns.gap SELECT id, concat('a', id) FROM range(3)")     // v1
+    spark.sql("INSERT INTO gc.ns.gap SELECT id, concat('b', id) FROM range(10, 13)") // v2
+    spark.sql("DELETE FROM gc.ns.gap WHERE id = 11")                                // v3
+    Seq((12L, "c12")).toDF("id", "v")
+      .writeTo("gc.ns.gap").option("upsertKeys", "id").append()                     // v4
+    spark.sql("INSERT INTO gc.ns.gap SELECT 20, 'd20'")                             // v5
+    spark.sql("CALL gc.system.tag(table => 'ns.gap', name => 'base', version => 1)")
+    spark.sql("CALL gc.system.expire_snapshots(table => 'ns.gap', keep_last => 1)")
+    // retained: 1 (tagged) and 5. Rows born and killed inside (1, 5] are
+    // no change; the v2 file's survivors are
+    val expected = Seq((5L, "insert", 10L, "b10"), (5L, "insert", 12L, "c12"),
+      (5L, "insert", 20L, "d20"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("_commit_version", "_change_type", "id", "v")
+        .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getString(3)))
+        .toSeq.sorted
+    assert(rows(GraftChanges.forTable(spark, "gc.ns.gap", 1L)) == expected)
+    assert(rows(spark.read.option("startingVersion", "1")
+      .table("gc.ns.gap.changes")) == expected)
   }
 
   test("one CoW MERGE commit mixing updated keys and fresh inserts pairs " +

@@ -263,6 +263,54 @@ class OcfEqScopeSpec extends AnyFunSuite {
     assert(b == Set((5L, "delete")), b)
   }
 
+  test("a row one commit deletes both by position and by key is ONE " +
+      "change (hand-built manifest)") {
+    import spark.implicits._
+    spark.sql(
+      "CREATE TABLE gsc.ns.mixed (id BIGINT, v STRING) USING `graft-ocf`")
+    spark.sql(
+      "CREATE TABLE gsc.ns.mixedkeys (id BIGINT, v STRING) USING `graft-ocf`")
+    spark.range(0, 10).select($"id",
+      org.apache.spark.sql.functions.concat(
+        org.apache.spark.sql.functions.lit("v"), $"id").as("v"))
+      .coalesce(1).orderBy("id").writeTo("gsc.ns.mixed").append() // v1
+    // an upsert elsewhere yields an equality-delete file of key id=3
+    spark.sql("INSERT INTO gsc.ns.mixedkeys VALUES (3, 'w')")
+    Seq((3L, "x")).toDF("id", "v")
+      .writeTo("gsc.ns.mixedkeys").option("upsertKeys", "id").append()
+    val keyFile = snapFiles("mixedkeys").filter(_.isEqualityDelete).head
+    val eqBytes = {
+      val in = fs.open(new Path(root("mixedkeys"), keyFile.path))
+      try in.readAllBytes() finally in.close()
+    }
+
+    // v2, hand-built: ordinal 3 (id=3) deleted by position AND by key in
+    // one commit. Internal writers never produce this shape; the feed must
+    // still emit the row once, as the head lost it once.
+    val r = root("mixed")
+    val target = snapFiles("mixed").filter(_.isData).head
+    val posBytes = OcfPositionDeleteWriter.render(Array(3L), target.path)
+    Seq("_delete-hand.avro" -> posBytes, "_eq-hand.avro" -> eqBytes).foreach {
+      case (name, bytes) =>
+        val out = fs.create(new Path(r, name), false)
+        try out.write(bytes) finally out.close()
+    }
+    OcfSnapshots.commit(fs, r, "delete", None) { prev =>
+      prev :+ OcfSnapshots.SnapFile("_delete-hand.avro",
+        posBytes.length.toLong, deleteOf = Some(target.path)) :+
+        OcfSnapshots.SnapFile("_eq-hand.avro", eqBytes.length.toLong,
+          equalityOf = Some(Seq("id")))
+    }
+    assert(spark.table("gsc.ns.mixed").count() == 9L)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("_change_type", "id", "v").collect()
+        .map(r0 => (r0.getString(0), r0.getLong(1), r0.getString(2))).toSeq
+    assert(rows(GraftChanges.changes(spark, r.toString, 1L)) ==
+      Seq(("delete", 3L, "v3")))
+    assert(rows(spark.read.option("startingVersion", "1")
+      .table("gsc.ns.mixed.changes")) == Seq(("delete", 3L, "v3")))
+  }
+
   test("caches are WEIGHT-bounded: eviction by held values, newest entry " +
       "always survives, reads stay correct") {
     import OcfEqScope._
