@@ -1,7 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
 import org.apache.spark.sql.connector.catalog._
@@ -85,7 +85,10 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   /** Stored descriptor of a table, for procedures that need its location
     * and write options. */
-  private[sources] def tableMeta(ident: Identifier): TableMeta = {
+  private[sources] def tableMeta(ident: Identifier): TableMeta =
+    tableMetaIn(newFs(), ident)
+
+  private def tableMetaIn(fs: FileSystem, ident: Identifier): TableMeta = {
     val mp = metaPath(tableDir(ident))
     if (!fs.exists(mp)) throw new NoSuchTableException(ident)
     readMeta(fs, mp)
@@ -108,8 +111,13 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
   override def name(): String = catName
 
-  private def conf: Configuration = SparkSession.active.sessionState.newHadoopConf()
-  private def fs = warehouse.getFileSystem(conf)
+  /** One Hadoop conf per catalog operation: `newHadoopConf()` copies the
+    * session's whole Hadoop conf (~760 entries), so an operation builds it
+    * once, resolves its filesystem from it, and hands that same conf to the
+    * table it loads. */
+  private def newConf(): Configuration = SparkSession.active.sessionState.newHadoopConf()
+  private def fsOf(conf: Configuration): FileSystem = warehouse.getFileSystem(conf)
+  private def newFs(): FileSystem = fsOf(newConf())
   private def nsDir(ns: Array[String]): Path =
     ns.foldLeft(warehouse)((p, s) => new Path(p, s))
   private def tableDir(ident: Identifier): Path =
@@ -119,6 +127,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   // ---- namespaces ----------------------------------------------------------
 
   override def listNamespaces(): Array[Array[String]] = {
+    val fs = newFs()
     if (!fs.exists(warehouse)) return Array.empty
     fs.listStatus(warehouse).iterator.filter(_.isDirectory)
       .map(st => Array(st.getPath.getName)).toArray
@@ -126,13 +135,17 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def listNamespaces(namespace: Array[String]): Array[Array[String]] = {
     if (namespace.isEmpty) return listNamespaces()
-    if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(namespace.toSeq)
+    val fs = newFs()
+    if (!namespaceIn(fs, namespace)) throw new NoSuchNamespaceException(namespace.toSeq)
     fs.listStatus(nsDir(namespace)).iterator.filter(_.isDirectory)
       .filterNot(st => fs.exists(metaPath(st.getPath))) // tables are not namespaces
       .map(st => namespace :+ st.getPath.getName).toArray
   }
 
   override def namespaceExists(namespace: Array[String]): Boolean =
+    namespaceIn(newFs(), namespace)
+
+  private def namespaceIn(fs: FileSystem, namespace: Array[String]): Boolean =
     namespace.nonEmpty && fs.exists(nsDir(namespace)) &&
       !fs.exists(metaPath(nsDir(namespace)))
 
@@ -143,7 +156,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   override def createNamespace(namespace: Array[String],
                                metadata: java.util.Map[String, String]): Unit = {
-    if (namespaceExists(namespace)) throw new NamespaceAlreadyExistsException(namespace)
+    val fs = newFs()
+    if (namespaceIn(fs, namespace)) throw new NamespaceAlreadyExistsException(namespace)
     GraftIO.mkdirs(fs, nsDir(namespace))
     ()
   }
@@ -153,8 +167,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       s"graft catalog: ALTER NAMESPACE is not supported")
 
   override def dropNamespace(namespace: Array[String], cascade: Boolean): Boolean = {
-    if (!namespaceExists(namespace)) return false
-    if (!cascade && listTables(namespace).nonEmpty)
+    val fs = newFs()
+    if (!namespaceIn(fs, namespace)) return false
+    if (!cascade && tablesIn(fs, namespace).nonEmpty)
       throw new IllegalStateException(
         s"graft catalog: namespace ${namespace.mkString(".")} is not empty")
     fs.delete(nsDir(namespace), true)
@@ -162,17 +177,29 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
 
   // ---- tables --------------------------------------------------------------
 
-  override def listTables(namespace: Array[String]): Array[Identifier] = {
-    if (!namespaceExists(namespace)) throw new NoSuchNamespaceException(namespace.toSeq)
+  override def listTables(namespace: Array[String]): Array[Identifier] =
+    tablesIn(newFs(), namespace)
+
+  private def tablesIn(fs: FileSystem, namespace: Array[String]): Array[Identifier] = {
+    if (!namespaceIn(fs, namespace)) throw new NoSuchNamespaceException(namespace.toSeq)
     fs.listStatus(nsDir(namespace)).iterator
       .filter(st => st.isDirectory && fs.exists(metaPath(st.getPath)))
       .map(st => Identifier.of(namespace, st.getPath.getName)).toArray
   }
 
   override def tableExists(ident: Identifier): Boolean =
+    tableIn(newFs(), ident)
+
+  private def tableIn(fs: FileSystem, ident: Identifier): Boolean =
     fs.exists(metaPath(tableDir(ident)))
 
   override def loadTable(ident: Identifier): Table = {
+    val conf = newConf()
+    loadTableWith(conf, fsOf(conf), ident)
+  }
+
+  private def loadTableWith(conf: Configuration, fs: FileSystem,
+                            ident: Identifier): Table = {
     val dir = tableDir(ident)
     val mp = metaPath(dir)
     if (!fs.exists(mp)) {
@@ -187,7 +214,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
       // branches, partitions.
       if (ident.namespace.length >= 2) {
         val base = Identifier.of(ident.namespace.init, ident.namespace.last)
-        if (tableExists(base)) {
+        if (tableIn(fs, base)) {
           val bm = readMeta(fs, metaPath(tableDir(base)))
           val fullName = (catName +: ident.namespace :+ ident.name).mkString(".")
           if (ident.name == "changes") {
@@ -212,7 +239,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** `SELECT ... FROM t VERSION AS OF n` — a read-only table pinned to
     * snapshot manifest `n` ([[OcfSnapshots]]). */
   override def loadTable(ident: Identifier, version: String): Table = {
-    val meta = tableMeta(ident)
+    val conf = newConf()
+    val meta = tableMetaIn(fsOf(conf), ident)
     val root = new Path(meta.location)
     val fsys = root.getFileSystem(conf)
     val fullNameB = (catName +: (ident.namespace() :+ ident.name())).mkString(".")
@@ -248,7 +276,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   /** `SELECT ... FROM t TIMESTAMP AS OF ts` — pins the latest snapshot
     * committed at or before `ts` (Spark hands MICROseconds). */
   override def loadTable(ident: Identifier, timestampMicros: Long): Table = {
-    val meta = tableMeta(ident)
+    val conf = newConf()
+    val meta = tableMetaIn(fsOf(conf), ident)
     val root = new Path(meta.location)
     val fsys = root.getFileSystem(conf)
     val snap = OcfSnapshots.asOfTimestamp(fsys, root, timestampMicros / 1000L)
@@ -404,13 +433,15 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def createTable(ident: Identifier, schema: StructType,
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String]): Table = {
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (!namespaceExists(ident.namespace))
+    val conf = newConf()
+    val fs = fsOf(conf)
+    if (tableIn(fs, ident)) throw new TableAlreadyExistsException(ident)
+    if (!namespaceIn(fs, ident.namespace))
       throw new NoSuchNamespaceException(ident.namespace.toSeq)
     val meta = buildMeta(ident, schema, partitions, properties)
     GraftIO.mkdirs(fs, new Path(meta.location))
     writeMeta(fs, metaPath(tableDir(ident)), meta)
-    loadTable(ident)
+    loadTableWith(conf, fs, ident)
   }
 
   // ---- staged (atomic-ish) CTAS / RTAS -------------------------------------
@@ -427,30 +458,38 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
                            partitions: Array[Transform],
                            properties: java.util.Map[String, String])
       : org.apache.spark.sql.connector.catalog.StagedTable = {
-    if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
-    if (!namespaceExists(ident.namespace))
+    val conf = newConf()
+    val fs = fsOf(conf)
+    if (tableIn(fs, ident)) throw new TableAlreadyExistsException(ident)
+    if (!namespaceIn(fs, ident.namespace))
       throw new NoSuchNamespaceException(ident.namespace.toSeq)
-    staged(ident, schema, partitions, properties, replacing = false)
+    staged(conf, fs, ident, schema, partitions, properties, replacing = false)
   }
 
   override def stageReplace(ident: Identifier, schema: StructType,
                             partitions: Array[Transform],
                             properties: java.util.Map[String, String])
       : org.apache.spark.sql.connector.catalog.StagedTable = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    staged(ident, schema, partitions, properties, replacing = true)
+    val conf = newConf()
+    val fs = fsOf(conf)
+    if (!tableIn(fs, ident)) throw new NoSuchTableException(ident)
+    staged(conf, fs, ident, schema, partitions, properties, replacing = true)
   }
 
   override def stageCreateOrReplace(ident: Identifier, schema: StructType,
                                     partitions: Array[Transform],
                                     properties: java.util.Map[String, String])
       : org.apache.spark.sql.connector.catalog.StagedTable = {
-    if (!namespaceExists(ident.namespace))
+    val conf = newConf()
+    val fs = fsOf(conf)
+    if (!namespaceIn(fs, ident.namespace))
       throw new NoSuchNamespaceException(ident.namespace.toSeq)
-    staged(ident, schema, partitions, properties, replacing = tableExists(ident))
+    staged(conf, fs, ident, schema, partitions, properties,
+      replacing = tableIn(fs, ident))
   }
 
-  private def staged(ident: Identifier, schema: StructType,
+  private def staged(conf: Configuration, catalogFs: FileSystem,
+                     ident: Identifier, schema: StructType,
                      partitions: Array[Transform],
                      properties: java.util.Map[String, String],
                      replacing: Boolean)
@@ -463,10 +502,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     val stagingDir = new Path(dir,
       "_staged-" + java.util.UUID.randomUUID().toString)
     val stagingMeta = finalMeta.copy(location = stagingDir.toString)
-    GraftIO.mkdirs(fs, stagingDir)
+    GraftIO.mkdirs(catalogFs, stagingDir)
     val transforms: Array[Transform] = GraftCatalog.transformsOf(finalMeta)
     val fullName = (catName +: (ident.namespace() :+ ident.name())).mkString(".")
-    val catalogFs = fs
     new CatalogOcfTable(fullName, stagingMeta, transforms, conf)
         with org.apache.spark.sql.connector.catalog.StagedTable {
       override def commitStagedChanges(): Unit = {
@@ -500,6 +538,8 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
     // promotions, SET/DROP DEFAULT via CURRENT_DEFAULT metadata, and
     // ADD/DROP CHECK CONSTRAINT via the descriptor's constraint list.
     // Anything outside those shapes is refused loudly.
+    val conf = newConf()
+    val fs = fsOf(conf)
     val dir = tableDir(ident)
     val mp = metaPath(dir)
     if (!fs.exists(mp)) throw new NoSuchTableException(ident)
@@ -990,10 +1030,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
           "SET/DROP DEFAULT, ADD/DROP CHECK CONSTRAINT only)")
     }
     writeMeta(fs, mp, updated)
-    loadTable(ident)
+    loadTableWith(conf, fs, ident)
   }
 
   override def dropTable(ident: Identifier): Boolean = {
+    val fs = newFs()
     val dir = tableDir(ident)
     if (!fs.exists(metaPath(dir))) return false
     val meta = readMeta(fs, metaPath(dir))
@@ -1004,10 +1045,11 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces
   }
 
   override def renameTable(oldIdent: Identifier, newIdent: Identifier): Unit = {
+    val fs = newFs()
     val from = tableDir(oldIdent)
     if (!fs.exists(metaPath(from))) throw new NoSuchTableException(oldIdent)
-    if (tableExists(newIdent)) throw new TableAlreadyExistsException(newIdent)
-    if (!namespaceExists(newIdent.namespace))
+    if (tableIn(fs, newIdent)) throw new TableAlreadyExistsException(newIdent)
+    if (!namespaceIn(fs, newIdent.namespace))
       throw new NoSuchNamespaceException(newIdent.namespace.toSeq)
     val meta = readMeta(fs, metaPath(from))
     require(meta.location == from.toString,

@@ -3,9 +3,11 @@ package graft.sources
 import java.io.{BufferedOutputStream, FileOutputStream, IOException}
 import java.nio.file.{FileAlreadyExistsException, Files, NoSuchFileException, StandardCopyOption}
 
-import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path}
+import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileSystem, Path}
 
-/** Filesystem mutation helpers with a java.nio fast path for `file:` URIs.
+/** Filesystem helpers: one permission-free listing walk, a shared daemon
+  * pool factory, and mutation helpers with a java.nio fast path for `file:`
+  * URIs.
   *
   * Without the native Hadoop library (the common container deployment),
   * every `LocalFileSystem.create` forks a `chmod` process (~8 ms) plus a
@@ -27,6 +29,40 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileSystem, Path}
   *    a later checksummed read of a pre-existing table cannot mismatch
   */
 private[sources] object GraftIO {
+
+  /** The files under directory `dir`, in walk order: its direct entries,
+    * and with `recursive` those of every subdirectory too (hidden ones
+    * included — callers filter). One `listStatus` per directory; only what
+    * a plain status carries (path, kind, length, mtime) is read. This is
+    * the walk `FileSystem.listFiles` makes, minus its `LocatedFileStatus`
+    * per entry, which loads the entry's permission, owner and group:
+    * without the native Hadoop library the local filesystem starts an
+    * `ls -ld` process for each (~3 ms apiece), `.tmp` files and
+    * directories included. A subdirectory that vanishes mid-walk surfaces
+    * as `FileNotFoundException`, as it does from `listFiles`. */
+  def listFilesUnder(fs: FileSystem, dir: Path, recursive: Boolean): Seq[FileStatus] = {
+    val out = Seq.newBuilder[FileStatus]
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { st =>
+      if (st.isFile) out += st
+      else if (recursive) walk(st.getPath)
+    }
+    walk(dir)
+    out.result()
+  }
+
+  /** A fixed pool of `n` daemon threads named `name-<i>`, for driver-side
+    * fan-out of small metadata reads (latency, not bandwidth, is what is
+    * parallelized). Created once per use site and never shut down. */
+  def daemonPool(name: String, n: Int): java.util.concurrent.ExecutorService =
+    java.util.concurrent.Executors.newFixedThreadPool(n,
+      new java.util.concurrent.ThreadFactory {
+        private val count = new java.util.concurrent.atomic.AtomicInteger()
+        override def newThread(r: Runnable): Thread = {
+          val t = new Thread(r, s"$name-${count.incrementAndGet()}")
+          t.setDaemon(true)
+          t
+        }
+      })
 
   private def localOf(fs: FileSystem, p: Path): Option[java.io.File] =
     if (fs.getScheme == "file") {

@@ -714,25 +714,21 @@ private[sources] object GraftProcedures {
       val baseQ = fs.makeQualified(root).toString
       val cutoff = System.currentTimeMillis() - minAge
       var scanned = 0L; var deleted = 0L; var deletedBytes = 0L
-      val it = fs.listFiles(root, true)
-      while (it.hasNext) {
-        val st = it.next()
-        if (st.isFile) {
-          val rel = OcfSnapshots.relativize(baseQ, fs.makeQualified(st.getPath).toString)
-          // any hidden segment (manifests, _staged-* dirs, .tmp temps) is
-          // out of scope for orphan collection — EXCEPT the bucket layout's
-          // `_bucket=K` directories, which hold ordinary referenced data
-          val hidden = rel.split('/').exists(s =>
-            s.startsWith(".") || (s.startsWith("_") &&
-              !OcfBucket.isLevelDir(s)))
-          if (!hidden) {
-            scanned += 1
-            if (!referenced.contains(rel) && st.getModificationTime < cutoff) {
-              val len = st.getLen
-              if (fs.delete(st.getPath, false)) {
-                deleted += 1
-                deletedBytes += len
-              }
+      GraftIO.listFilesUnder(fs, root, recursive = true).foreach { st =>
+        val rel = OcfSnapshots.relativize(baseQ, fs.makeQualified(st.getPath).toString)
+        // any hidden segment (manifests, _staged-* dirs, .tmp temps) is
+        // out of scope for orphan collection — EXCEPT the bucket layout's
+        // `_bucket=K` directories, which hold ordinary referenced data
+        val hidden = rel.split('/').exists(s =>
+          s.startsWith(".") || (s.startsWith("_") &&
+            !OcfBucket.isLevelDir(s)))
+        if (!hidden) {
+          scanned += 1
+          if (!referenced.contains(rel) && st.getModificationTime < cutoff) {
+            val len = st.getLen
+            if (fs.delete(st.getPath, false)) {
+              deleted += 1
+              deletedBytes += len
             }
           }
         }

@@ -685,8 +685,8 @@ object OcfDataSource {
     }
 
   /** Read each file's OCF header exactly once, driver-side. Headers are tiny
-    * positioned reads; the bounded pool hides per-file round-trip latency on
-    * remote stores when the listing is large. */
+    * positioned reads; the shared bounded pool hides per-file round-trip
+    * latency on remote stores when the listing is large. */
   private[sources] def fetchMetas(conf: Configuration, files: Seq[FileSlice]): Seq[OcfFileMeta] = {
     def metaOf(f: FileSlice): OcfFileMeta = {
       val p = new Path(f.path)
@@ -702,19 +702,22 @@ object OcfDataSource {
     }
     if (files.lengthCompare(2) < 0) files.map(metaOf)
     else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(16, files.size))
-      try {
-        files.map { f =>
-          pool.submit(new java.util.concurrent.Callable[OcfFileMeta] {
-            override def call(): OcfFileMeta = metaOf(f)
-          })
-        }.map { fut =>
-          try fut.get()
-          catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-        }
-      } finally pool.shutdown()
+      files.map { f =>
+        metaPool.submit(new java.util.concurrent.Callable[OcfFileMeta] {
+          override def call(): OcfFileMeta = metaOf(f)
+        })
+      }.map { fut =>
+        try fut.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
     }
   }
+
+  /** [[fetchMetas]]' header readers, shared by every call: a commit or scan
+    * plan reads only a handful of headers, so starting threads per call
+    * would rival the reads themselves. `metaOf` never waits on the pool, so
+    * concurrent calls only queue. */
+  private lazy val metaPool = GraftIO.daemonPool("graft-header-read", 16)
 
   /** A `graft.stats` bound rendered as the column's own Catalyst value (the
     * stamp stores integral as long, floating as double, string as text). */
@@ -750,13 +753,6 @@ object OcfDataSource {
   private final class RootPathMissing(val underlying: java.io.FileNotFoundException)
     extends RuntimeException(underlying)
 
-  /** List input files. A CONCURRENT writer's temp can vanish between the
-    * listing's enumeration and its stat (local FS even shells out for
-    * permissions), surfacing as FileNotFound/ExitCode noise mid-iteration —
-    * on a live landing directory that's normal operation, not an error, so
-    * the listing retries from scratch a few times (with a short pause, so a
-    * racing rename has time to land) before giving up. A MISSING ROOT path
-    * is a different thing entirely and fails fast. */
   /** [[list]], except a read in a snapshot-managed table ([[managedScope]])
     * reads its latest manifest instead of walking the directory — used by
     * every re-listing surface (streaming discovery, emptiness probes) so
@@ -827,6 +823,13 @@ object OcfDataSource {
         filter.forall(_.accept(new Path(rel)))))
   }
 
+  /** List input files through [[GraftIO.listFilesUnder]]. A CONCURRENT
+    * writer can remove a subdirectory between the walk's listing of its
+    * parent and its own listing, surfacing as FileNotFound mid-walk — on a
+    * live landing directory that's normal operation, not an error, so the
+    * listing retries from scratch a few times (with a short pause, so a
+    * racing rename has time to land) before giving up. A MISSING ROOT path
+    * is a different thing entirely and fails fast. */
   private[sources] def list(conf: Configuration, paths: Seq[String],
                    glob: Option[String], recursive: Boolean): Seq[FileSlice] = {
     def vanished(t: Throwable): Boolean = {
@@ -857,12 +860,8 @@ object OcfDataSource {
         try fs.getFileStatus(hp)
         catch { case e: java.io.FileNotFoundException => throw new RootPathMissing(e) }
       val statuses: Seq[FileStatus] =
-        if (rootStatus.isDirectory) {
-          val it = fs.listFiles(hp, recursive)
-          val b = Seq.newBuilder[FileStatus]
-          while (it.hasNext) b += it.next()
-          b.result()
-        } else Seq(rootStatus)
+        if (rootStatus.isDirectory) GraftIO.listFilesUnder(fs, hp, recursive)
+        else Seq(rootStatus)
       statuses.iterator.filter { st =>
         val name = st.getPath.getName
         st.isFile && !name.startsWith(".") && !name.startsWith("_") &&
@@ -915,69 +914,161 @@ private[graft] object OcfAggExpr {
 }
 
 /** Hadoop `Configuration` is not `java.io.Serializable`; this envelope ships
-  * it to executors via its own `write`/`readFields` — MEMOIZED on both sides.
-  * A session's ~110 KB Configuration costs 10–40 ms to write and 20–50 ms to
-  * parse, and Spark deserializes each stage's task binary PER TASK, so an
-  * unmemoized envelope re-parses the full conf once per task — for a
-  * commit-heavy DML statement or a many-split scan that parse alone was the
-  * dominant scheduling cost. Here the driver serializes each Configuration
-  * instance once (weak identity memo) and every task of a JVM shares ONE
-  * parsed instance per distinct content hash; the shared instance is
-  * READ-ONLY by contract (every consumer only resolves filesystems/opens
-  * streams from it — none mutates it). */
+  * it to executors in the `Configuration` Writable format — MEMOIZED by
+  * CONTENT on both sides. A session's Configuration holds ~760 entries
+  * (10–40 ms to write, 20–50 ms to parse), every scan or write wraps a
+  * fresh one, and Spark deserializes each stage's task binary PER TASK, so
+  * an unmemoized envelope re-writes the conf once per scan or write and
+  * re-parses it once per task.
+  *  - Driver: a small LRU maps a conf's entry map, compared exactly, to
+  *    its shipped form — the bytes written from that very map and their
+  *    MD5 key. A fresh but equal conf (every `newHadoopConf()` is one) is
+  *    written once; a conf mutated after it was shipped ships its new
+  *    content, never stale bytes.
+  *  - Wire: the key travels ahead of the bytes.
+  *  - Executor: every task of a JVM shares ONE parsed instance per key. A
+  *    task whose key is known skips the bytes; nothing is hashed per task.
+  *    The shared instance is read-only by enforcement
+  *    ([[SerializableHadoopConf.ReadOnlyConfiguration]]). */
 final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
   @throws[IOException]
   private def writeObject(out: ObjectOutputStream): Unit = {
     out.defaultWriteObject()
-    val bytes = SerializableHadoopConf.bytesFor(value)
-    out.writeInt(bytes.length)
-    out.write(bytes)
+    val shipped = SerializableHadoopConf.shippedFor(value)
+    out.writeUTF(shipped.key)
+    out.writeInt(shipped.bytes.length)
+    out.write(shipped.bytes)
   }
   @throws[IOException]
   private def readObject(in: ObjectInputStream): Unit = {
     in.defaultReadObject()
-    val n = in.readInt()
-    val bytes = new Array[Byte](n)
-    in.readFully(bytes)
-    value = SerializableHadoopConf.confFor(bytes)
+    val key = in.readUTF()
+    value = SerializableHadoopConf.confFor(key, in.readInt(), in)
   }
 }
 
 object SerializableHadoopConf {
-  // driver side: serialized form per Configuration INSTANCE (confs are
-  // handed to the envelope fully built and never mutated afterwards)
-  private val outCache = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[Configuration, Array[Byte]]())
-  private def bytesFor(conf: Configuration): Array[Byte] = {
-    val cached = outCache.get(conf)
-    if (cached != null) cached
+  private final class Shipped(val key: String, val bytes: Array[Byte])
+  private type Entries = java.util.Map[String, String]
+
+  // driver side: entry map -> shipped form, least recently used evicted
+  // first; distinct conf contents per driver are few (one per session
+  // configuration), so a handful of slots keeps every live one
+  private val LruSlots = 8
+  private val outCache =
+    new java.util.LinkedHashMap[Entries, Shipped](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[Entries, Shipped]): Boolean =
+        size > LruSlots
+    }
+  /** Confs written to bytes in this JVM (LRU misses). */
+  private[graft] val writes = new java.util.concurrent.atomic.AtomicLong()
+
+  private def entriesOf(conf: Configuration): Entries = {
+    val m = new java.util.HashMap[String, String](1024)
+    conf.iterator().forEachRemaining(e => m.put(e.getKey, e.getValue))
+    m
+  }
+
+  private def shippedFor(conf: Configuration): Shipped = {
+    val entries = entriesOf(conf)
+    val hit = outCache.synchronized(outCache.get(entries))
+    if (hit != null) hit
     else {
+      // `Configuration.write`'s format, written from the snapshot itself so
+      // the bytes are exactly the memo key's content; per-key property
+      // sources (diagnostics only) are not shipped
       val bos = new java.io.ByteArrayOutputStream(1 << 17)
       val dos = new java.io.DataOutputStream(bos)
-      conf.write(dos)
+      org.apache.hadoop.io.WritableUtils.writeVInt(dos, entries.size)
+      entries.forEach { (k, v) =>
+        org.apache.hadoop.io.Text.writeString(dos, k)
+        org.apache.hadoop.io.Text.writeString(dos, v)
+        org.apache.hadoop.io.WritableUtils.writeCompressedStringArray(dos, null)
+      }
       dos.flush()
       val bytes = bos.toByteArray
-      outCache.put(conf, bytes)
-      bytes
+      writes.incrementAndGet()
+      // 128-bit: a collision would silently alias two different confs
+      val shipped = new Shipped(java.util.Base64.getEncoder.encodeToString(
+        java.security.MessageDigest.getInstance("MD5").digest(bytes)), bytes)
+      outCache.synchronized(outCache.put(entries, shipped))
+      shipped
     }
   }
-  // executor side: parsed Configuration per CONTENT hash (128-bit MD5 —
-  // a collision would silently alias two different confs, so a 32-bit
-  // array hash is not enough). Distinct conf contents per JVM are few
-  // (one per session configuration), so the map stays tiny.
+
+  // executor side: parsed Configuration per key
   private val inCache =
     new java.util.concurrent.ConcurrentHashMap[String, Configuration]()
-  private def confFor(bytes: Array[Byte]): Configuration = {
-    val h = java.util.Base64.getEncoder.encodeToString(
-      java.security.MessageDigest.getInstance("MD5").digest(bytes))
-    val cached = inCache.get(h)
-    if (cached != null) cached
-    else {
-      val c = new Configuration(false)
-      c.readFields(new java.io.DataInputStream(
-        new java.io.ByteArrayInputStream(bytes)))
-      inCache.putIfAbsent(h, c)
-      inCache.get(h)
+  private def confFor(key: String, n: Int, in: ObjectInputStream): Configuration = {
+    val cached = inCache.get(key)
+    if (cached != null) {
+      var left = n
+      while (left > 0) {
+        val k = in.skipBytes(left)
+        if (k <= 0) throw new java.io.EOFException(
+          s"graft-ocf: shipped Hadoop conf truncated ($left of $n bytes missing)")
+        left -= k
+      }
+      cached
+    } else {
+      val bytes = new Array[Byte](n)
+      in.readFully(bytes)
+      val prev = inCache.putIfAbsent(key, ReadOnlyConfiguration.parse(bytes))
+      if (prev != null) prev else inCache.get(key)
+    }
+  }
+
+  /** The executor-shared Configuration: filled once from the shipped
+    * bytes, then sealed. From then on every mutator — the setters, `unset`,
+    * `clear`, `addResource`, `reloadConfiguration`, `readFields` — throws,
+    * because a change would reach every task of the JVM that reads the
+    * same conf. A consumer that needs a variant copies it first
+    * (`new Configuration(shared)` is an ordinary mutable conf). */
+  private[graft] final class ReadOnlyConfiguration private () extends Configuration(false) {
+    private var filled = false
+    private def refuse(op: String): Nothing =
+      throw new UnsupportedOperationException(
+        s"graft-ocf: $op on the executor-shared Hadoop Configuration " +
+          "(SerializableHadoopConf) — it is read-only because every task of " +
+          "this JVM shares it; copy it first with new Configuration(conf)")
+    private def check(op: String): Unit = if (filled) refuse(op)
+
+    override def set(name: String, value: String): Unit = { check(s"set($name)"); super.set(name, value) }
+    override def set(name: String, value: String, source: String): Unit = {
+      check(s"set($name)"); super.set(name, value, source)
+    }
+    override def setIfUnset(name: String, value: String): Unit = { check(s"setIfUnset($name)"); super.setIfUnset(name, value) }
+    override def unset(name: String): Unit = { check(s"unset($name)"); super.unset(name) }
+    override def clear(): Unit = { check("clear()"); super.clear() }
+    override def readFields(in: java.io.DataInput): Unit = { check("readFields"); super.readFields(in) }
+    override def reloadConfiguration(): Unit = refuse("reloadConfiguration()")
+    override def addResource(name: String): Unit = refuse("addResource")
+    override def addResource(name: String, restrictedParser: Boolean): Unit = refuse("addResource")
+    override def addResource(url: java.net.URL): Unit = refuse("addResource")
+    override def addResource(url: java.net.URL, restrictedParser: Boolean): Unit = refuse("addResource")
+    override def addResource(file: Path): Unit = refuse("addResource")
+    override def addResource(file: Path, restrictedParser: Boolean): Unit = refuse("addResource")
+    override def addResource(in: java.io.InputStream): Unit = refuse("addResource")
+    override def addResource(in: java.io.InputStream, restrictedParser: Boolean): Unit = refuse("addResource")
+    override def addResource(in: java.io.InputStream, name: String): Unit = refuse("addResource")
+    override def addResource(in: java.io.InputStream, name: String, restrictedParser: Boolean): Unit =
+      refuse("addResource")
+    override def addResource(conf: Configuration): Unit = refuse("addResource")
+    override def addTags(prop: java.util.Properties): Unit = { check("addTags"); super.addTags(prop) }
+    override def setClassLoader(classLoader: ClassLoader): Unit = refuse("setClassLoader")
+    override def setQuietMode(quietmode: Boolean): Unit = refuse("setQuietMode")
+    override def setDeprecatedProperties(): Unit = refuse("setDeprecatedProperties()")
+    override def setAllowNullValueProperties(v: Boolean): Unit = refuse("setAllowNullValueProperties")
+    override def setRestrictSystemProps(v: Boolean): Unit = refuse("setRestrictSystemProps")
+    override def setRestrictSystemProperties(v: Boolean): Unit = refuse("setRestrictSystemProperties")
+  }
+
+  private[graft] object ReadOnlyConfiguration {
+    def parse(bytes: Array[Byte]): ReadOnlyConfiguration = {
+      val c = new ReadOnlyConfiguration()
+      c.readFields(new java.io.DataInputStream(new java.io.ByteArrayInputStream(bytes)))
+      c.filled = true
+      c
     }
   }
 }

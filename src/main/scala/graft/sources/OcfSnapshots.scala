@@ -323,15 +323,7 @@ private[graft] object OcfSnapshots {
 
   /** Bounded daemon pool for concurrent chain prefetch (manifest JSONs are
     * tiny; latency, not bandwidth, is the cost being parallelized). */
-  private lazy val chainPool = java.util.concurrent.Executors.newFixedThreadPool(8,
-    new java.util.concurrent.ThreadFactory {
-      private val n = new java.util.concurrent.atomic.AtomicInteger()
-      override def newThread(r: Runnable): Thread = {
-        val t = new Thread(r, s"graft-manifest-chain-${n.incrementAndGet()}")
-        t.setDaemon(true)
-        t
-      }
-    })
+  private lazy val chainPool = GraftIO.daemonPool("graft-manifest-chain", 8)
 
   private def rawMain(fs: FileSystem, tableDir: Path)(v: Long): Raw =
     readRaw(fs, manifestPath(tableDir, v))

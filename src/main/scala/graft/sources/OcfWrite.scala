@@ -1947,11 +1947,9 @@ object OcfMaintenance {
     val cutoff = System.currentTimeMillis() - minAgeMs
     var removed = 0L
     // recursive: partitioned writers stage temps inside col=value/ subdirs
-    val it = fs.listFiles(dirPath, true)
-    while (it.hasNext) {
-      val st = it.next()
+    GraftIO.listFilesUnder(fs, dirPath, recursive = true).foreach { st =>
       val n = st.getPath.getName
-      if (st.isFile && n.startsWith(".") && n.endsWith(".avro.tmp") &&
+      if (n.startsWith(".") && n.endsWith(".avro.tmp") &&
           st.getModificationTime < cutoff) {
         if (fs.delete(st.getPath, false)) removed += 1
       }
