@@ -73,6 +73,9 @@ final class AvroBinaryReader(val buf: Array[Byte], var pos: Int, val end: Int) {
 
   def readBytes(): Array[Byte] = readFixed(readLength("bytes"))
 
+  /** The UTF-8 bytes of a string value, undecoded. */
+  def readStringBytes(): Array[Byte] = readFixed(readLength("string"))
+
   def readString(): String = {
     val n = readLength("string")
     val s = new String(buf, pos, n, StandardCharsets.UTF_8)

@@ -248,28 +248,37 @@ final class AvroDatumReader(val writerSchema: AvroSchema, val readerSchemaOpt: O
   }
 }
 
-/** Writer→reader type matching, shared by [[AvroDatumReader]] and
-  * [[AvroJsonTranscoder]] so that both resolve a union to the same branch. */
+/** Writer→reader type matching and Avro's one promotion table:
+  * [[AvroDatumReader]] and [[AvroResolver]] pick union branches with
+  * [[matches]]; the compatibility checker and the columnar scan lane read
+  * [[promotes]]. */
 object AvroResolution {
   def deref(s: AvroSchema): AvroSchema = s match {
     case r: ARef => deref(r.target)
     case other   => other
   }
 
-  /** Can a reader of type `r` accept wire data of writer type `w`?
-    * Promotions: int→long/float/double, long→float/double, float→double,
-    * string↔bytes. (reference: schema.py:445-462, compatibility.py:237-258) */
+  /** Avro's promotions of a writer primitive to a different reader
+    * primitive: int→long/float/double, long→float/double, float→double,
+    * string↔bytes. Both sides are compared as given, logical types
+    * included. (reference: schema.py:445-462, compatibility.py:237-258) */
+  def promotes(w: AvroSchema, r: AvroSchema): Boolean = (w, r) match {
+    case (AInt, ALong | AFloat | ADouble) => true
+    case (ALong, AFloat | ADouble)        => true
+    case (AFloat, ADouble)                => true
+    case (AString, ABytes)                => true
+    case (ABytes, AString)                => true
+    case _                                => false
+  }
+
+  /** Can a reader of type `r` accept wire data of writer type `w`? */
   def matches(w: AvroSchema, r: AvroSchema): Boolean = (deref(w), deref(r)) match {
     case (a, b) if a.typeName == b.typeName =>
       (a, b) match {
         case (x: NamedSchema, y: NamedSchema) => AvroNames.nameMatches(x, y)
         case _ => true
       }
-    case (AInt, ALong | AFloat | ADouble) => true
-    case (ALong, AFloat | ADouble)        => true
-    case (AFloat, ADouble)                => true
-    case (AString, ABytes)                => true
-    case (ABytes, AString)                => true
+    case (a, b) if promotes(a, b)         => true
     case (_, u: AUnion)                   => u.branches.exists(b => matches(w, b))
     case (u: AUnion, _)                   => true // per-branch check happens at read time
     case (lw: LogicalSchema, rr)          => matches(lw.physical, rr)

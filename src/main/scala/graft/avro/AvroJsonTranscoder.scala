@@ -3,22 +3,24 @@ package graft.avro
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
 import java.nio.charset.StandardCharsets
 import java.time.{Instant, LocalDate, LocalTime}
-import scala.collection.mutable
 
 import AvroJson.{writeAscii, writeDouble, writeLatin1, writeLong, writeString, writeUtf8}
 import AvroJsonTranscoder._
-import AvroResolution.{deref, matches}
+import AvroResolution.deref
+import Resolved._
 
 /** Avro binary → JSON text in one pass, compiled once per writer schema.
   *
   * Reads the wire with [[AvroBinaryReader]] and appends the JSON bytes to an
-  * [[AvroBinaryWriter]], with no generic datum in between. The output is
-  * byte-identical to `AvroJson.render(new AvroDatumReader(writer).read(bytes))`,
-  * so the compile below mirrors [[AvroDatumReader]] case by case:
+  * [[AvroBinaryWriter]], with no generic datum in between: the JSON emitter
+  * over the resolution plan [[AvroResolver]] compiles for (writer, writer).
+  * The output is byte-identical to
+  * `AvroJson.render(new AvroDatumReader(writer).read(bytes))`:
   *  - a union branch renders as the FIRST branch of the same union it
   *    matches, promotions included: the int branch of `["long","int"]`
   *    reads as a long, the string branch of `["bytes","string"]` renders
   *    as bytes;
+  *  - a writer logical type renders as itself;
   *  - duplicate map keys collapse as in a `LinkedHashMap`: first position,
   *    last value;
   *  - reads, and so every error, happen in the same order with the same
@@ -27,9 +29,9 @@ import AvroResolution.{deref, matches}
   * pre-quoted. A transcoder is immutable and may be shared across threads.
   */
 final class AvroJsonTranscoder(writerSchema: AvroSchema) {
-  /** Memoized record compilation breaks cycles in recursive schemas. */
-  private val recordCache = mutable.HashMap.empty[(String, String), Emit]
-  private val emit: Emit = compile(writerSchema, writerSchema)
+  /** One closure per record node: a recursive plan's cycle closes here. */
+  private val records = new java.util.IdentityHashMap[Record, Emit]()
+  private val emit: Emit = emitOf(AvroResolver.resolve(writerSchema, writerSchema))
 
   /** Append the JSON of the datum at `in.pos` to `out`. */
   def write(in: AvroBinaryReader, out: AvroBinaryWriter): Unit = emit(in, out)
@@ -38,90 +40,25 @@ final class AvroJsonTranscoder(writerSchema: AvroSchema) {
   def toJson(datum: Array[Byte]): Array[Byte] =
     AvroJsonTranscoder.render(out => emit(new AvroBinaryReader(datum), out))
 
-  private def compile(w0: AvroSchema, r0: AvroSchema): Emit = {
-    val w = deref(w0)
-    val r = deref(r0)
-    (w, r) match {
-      case (ww, ru: AUnion) if !ww.isInstanceOf[AUnion] =>
-        ru.branches.find(b => matches(ww, b)) match {
-          case Some(b) => compile(ww, b)
-          case None => throw new AvroResolutionException(
-            s"writer ${ww.typeName} matches no reader union branch")
-        }
-      case (wu: AUnion, rr) =>
-        val branches: Array[Emit] = wu.branches.map { b =>
-          if (matches(b, rr)) compile(b, rr)
-          else (_: AvroBinaryReader, _: AvroBinaryWriter) => throw new AvroResolutionException(
-            s"writer union branch ${b.typeName} not readable as ${rr.typeName}")
-        }.toArray
-        (in, out) => {
-          val idx = in.readLong().toInt
-          if (idx < 0 || idx >= branches.length)
-            throw new AvroResolutionException(s"union branch index $idx out of range")
-          branches(idx)(in, out)
-        }
-      case _ => compileValue(w, r)
-    }
-  }
-
-  private def compileValue(w: AvroSchema, r: AvroSchema): Emit = (w, r) match {
-    case (ANull, _)    => (_, out) => writeAscii("null", out)
-    case (ABoolean, _) => (in, out) => writeAscii(if (in.readBoolean()) "true" else "false", out)
-    case (AInt, AInt)      => (in, out) => writeLong(in.readInt().toLong, out)
-    case (AInt, ALong)     => (in, out) => writeLong(in.readLong(), out)
-    case (AInt, AFloat)    => (in, out) => writeDouble(in.readInt().toFloat.toDouble, out)
-    case (AInt, ADouble)   => (in, out) => writeDouble(in.readInt().toDouble, out)
-    case (AInt, ADate(_))       => date
-    case (AInt, ATimeMillis(_)) => timeMillis
-    case (AInt, _: LogicalSchema) => (in, out) => writeLong(in.readInt().toLong, out)
-    case (ALong, ALong)    => (in, out) => writeLong(in.readLong(), out)
-    case (ALong, AFloat)   => (in, out) => writeDouble(in.readLong().toFloat.toDouble, out)
-    case (ALong, ADouble)  => (in, out) => writeDouble(in.readLong().toDouble, out)
-    case (ALong, ATimeMicros(_))      => timeMicros
-    case (ALong, ATimestampMillis(_)) => timestampMillis
-    case (ALong, ATimestampMicros(_)) => timestampMicros
-    case (ALong, _: LogicalSchema)    => (in, out) => writeLong(in.readLong(), out)
-    case (AFloat, AFloat | ADouble) => (in, out) => writeDouble(in.readFloat().toDouble, out)
-    case (ADouble, _)      => (in, out) => writeDouble(in.readDouble(), out)
-    case (ABytes, AString) => string
-    case (ABytes, ADecimal(_, scale, _)) => (in, out) => writeDecimal(in.readBytes(), scale, out)
-    case (ABytes, _)       => bytes
-    case (AString, ABytes) => bytes
-    case (AString, _)      => string
-    // a writer logical type decodes per its own type, whatever the reader
-    case (lw: LogicalSchema, _) => lw match {
-      case ADecimal(_, scale, u) => deref(u) match {
-        case AFixed(_, _, size, _) => (in, out) => writeDecimal(in.readFixed(size), scale, out)
-        case _ => (in, out) => writeDecimal(in.readBytes(), scale, out)
-      }
-      case ADate(_)            => date
-      case ATimeMillis(_)      => timeMillis
-      case ATimeMicros(_)      => timeMicros
-      case ATimestampMillis(_) => timestampMillis
-      case ATimestampMicros(_) => timestampMicros
-      case AUuid(_)            => string
-    }
-    case (f: AFixed, ADecimal(_, scale, _)) => (in, out) => writeDecimal(in.readFixed(f.size), scale, out)
-    case (f: AFixed, _) => (in, out) => { val b = in.readFixed(f.size); writeLatin1(b, 0, b.length, out) }
-    case (we: AEnum, re: AEnum) =>
-      // (reference: io.py:834-862 — resolution error if symbol absent, unless
-      // reader declares a default symbol)
-      val quoted: Array[Array[Byte]] = we.symbols.map { sym =>
-        if (re.symbols.contains(sym)) jsonString(sym)
-        else re.enumDefault.map(jsonString).orNull
-      }.toArray
+  private def emitOf(plan: Resolved): Emit = plan match {
+    case ReadAs(w, r) => scalar(w, r)
+    case Promote(w, r) => scalar(w, r)
+    case Skip(w) =>
+      val sk = AvroSkipper.compile(w)
+      (in, _) => sk(in)
+    case f: Fail => (_, _) => f.raise()
+    case u: WriterUnion =>
+      val branches = u.branches.map(emitOf).toArray
+      (in, out) => branches(u.readIndex(in))(in, out)
+    case ReaderUnion(_, _, value) => emitOf(value)
+    case e: EnumRemap =>
+      val quoted = e.symbols.map(s => if (s == null) null else jsonString(s)).toArray
       (in, out) => {
-        val i = in.readInt()
-        if (i < 0 || i >= quoted.length)
-          throw new AvroResolutionException(s"enum index $i out of range for ${we.fullName}")
-        val q = quoted(i)
-        if (q == null) throw new AvroResolutionException(
-          s"enum symbol ${we.symbols(i)} not in reader enum ${re.fullName} and no default")
+        val q = quoted(e.readIndex(in))
         out.writeRaw(q, 0, q.length)
       }
-    case (we: AEnum, _) => (in, out) => writeString(we.symbols(in.readInt()), out)
-    case (AArray(wi), AArray(ri)) =>
-      val item = compile(wi, ri)
+    case ArrayOf(items) =>
+      val item = emitOf(items)
       (in, out) => {
         out.writeByte('[')
         var first = true
@@ -138,20 +75,61 @@ final class AvroJsonTranscoder(writerSchema: AvroSchema) {
         }
         out.writeByte(']')
       }
-    case (AMap(wv), AMap(rv)) => mapOf(compile(wv, rv))
-    case (wr: ARecord, rr: ARecord) =>
-      val key = (wr.fullName, rr.fullName)
-      recordCache.get(key) match {
-        case Some(fn) => fn
-        case None =>
-          var real: Emit = null
-          val forwarder: Emit = (in, out) => real(in, out)
-          recordCache(key) = forwarder
-          real = compileRecord(wr, rr)
-          forwarder
+    case MapOf(values) => mapOf(emitOf(values))
+    case rec: Record =>
+      val known = records.get(rec)
+      if (known != null) known
+      else {
+        var real: Emit = null
+        val forwarder: Emit = (in, out) => real(in, out)
+        records.put(rec, forwarder)
+        real = record(rec)
+        forwarder
       }
-    case _ => throw new AvroResolutionException(
-      s"cannot resolve writer ${w.typeName} against reader ${r.typeName}")
+  }
+
+  /** A scalar as [[AvroDatumReader]] decodes it: a writer logical type
+    * renders as itself, a plain writer value widens to the reader's type
+    * and takes the reader's logical type. */
+  private def scalar(w: AvroSchema, r: AvroSchema): Emit = w match {
+    case ANull    => (_, out) => writeAscii("null", out)
+    case ABoolean => (in, out) => writeAscii(if (in.readBoolean()) "true" else "false", out)
+    case ADecimal(_, scale, u) => decimal(u, scale)
+    case ADate(_)            => date
+    case ATimeMillis(_)      => timeMillis
+    case ATimeMicros(_)      => timeMicros
+    case ATimestampMillis(_) => timestampMillis
+    case ATimestampMicros(_) => timestampMicros
+    case AUuid(_)            => string
+    case AInt => r match {
+      case ALong          => (in, out) => writeLong(in.readLong(), out)
+      case AFloat         => (in, out) => writeDouble(in.readInt().toFloat.toDouble, out)
+      case ADouble        => (in, out) => writeDouble(in.readInt().toDouble, out)
+      case ADate(_)       => date
+      case ATimeMillis(_) => timeMillis
+      case _              => (in, out) => writeLong(in.readInt().toLong, out)
+    }
+    case ALong => r match {
+      case AFloat              => (in, out) => writeDouble(in.readLong().toFloat.toDouble, out)
+      case ADouble             => (in, out) => writeDouble(in.readLong().toDouble, out)
+      case ATimeMicros(_)      => timeMicros
+      case ATimestampMillis(_) => timestampMillis
+      case ATimestampMicros(_) => timestampMicros
+      case _                   => (in, out) => writeLong(in.readLong(), out)
+    }
+    case AFloat  => (in, out) => writeDouble(in.readFloat().toDouble, out)
+    case ADouble => (in, out) => writeDouble(in.readDouble(), out)
+    case ABytes => r match {
+      case AString              => string
+      case ADecimal(_, scale, _) => decimal(ABytes, scale)
+      case _                    => bytes
+    }
+    case AString => if (r == ABytes) bytes else string
+    case f: AFixed => r match {
+      case ADecimal(_, scale, _) => decimal(f, scale)
+      case _ => (in, out) => { val b = in.readFixed(f.size); writeLatin1(b, 0, b.length, out) }
+    }
+    case other => throw new AvroResolutionException(s"cannot decode ${other.typeName}")
   }
 
   /** A map renders its entries in wire order. Each entry's rendered key
@@ -235,31 +213,16 @@ final class AvroJsonTranscoder(writerSchema: AvroSchema) {
     }
   }
 
-  /** Record resolution: match writer fields by name, skip writer-only
-    * fields, and fill reader-only fields with their pre-rendered defaults.
-    * Keys render in reader-field order; when that is not the wire order the
-    * values are rendered first and then moved into place.
-    * (reference: io.py:990-1039) */
-  private def compileRecord(wr: ARecord, rr: ARecord): Emit = {
-    val slots = AvroNames.assignReaderSlots(wr, rr)
-    val steps: Array[Emit] = wr.fields.zipWithIndex.map { case (wf, wi) =>
-      slots(wi) match {
-        case -1 =>
-          val sk = AvroSkipper.compile(wf.schema)
-          (in: AvroBinaryReader, _: AvroBinaryWriter) => sk(in)
-        case ri => compile(wf.schema, rr.fields(ri).schema)
-      }
-    }.toArray
-    val written = slots.filter(_ >= 0).toSet
-    val defaults: Array[Array[Byte]] = rr.fields.zipWithIndex.map { case (rf, i) =>
-      if (written.contains(i)) null
-      else rf.default match {
-        case Some(d) => AvroJson.render(AvroDefaults.materialize(d, rf.schema))
-          .getBytes(StandardCharsets.ISO_8859_1)
-        case None => throw new AvroResolutionException(
-          s"reader field ${rf.name} of ${rr.fullName} absent from writer and has no default")
-      }
-    }.toArray
+  /** Keys render in reader-field order, writer-absent fields as their
+    * pre-rendered defaults; when that is not the wire order the values are
+    * rendered first and then moved into place. */
+  private def record(rec: Record): Emit = {
+    val rr = rec.reader
+    val slots = rec.slots
+    val steps = rec.fields.map(emitOf)
+    val defaults: Array[Array[Byte]] = rec.defaults.map(d =>
+      if (d == null) null
+      else AvroJson.render(d.value).getBytes(StandardCharsets.ISO_8859_1))
     val nr = rr.fields.length
     val prefixes: Array[Array[Byte]] = rr.fields.zipWithIndex.map { case (rf, i) =>
       (if (i == 0) "" else ", ").getBytes(StandardCharsets.US_ASCII) ++
@@ -334,8 +297,16 @@ object AvroJsonTranscoder {
       Math.floorMod(us, 1000000L) * 1000L).toString, out)
   }
 
-  private def writeDecimal(unscaled: Array[Byte], scale: Int, out: AvroBinaryWriter): Unit =
-    writeAscii(new JBigDecimal(new BigInteger(unscaled), scale).toPlainString, out)
+  /** The plain text of an unscaled two's-complement value (`physical`:
+    * fixed or bytes) at `scale`. */
+  private def decimal(physical: AvroSchema, scale: Int): Emit = {
+    def write(unscaled: Array[Byte], out: AvroBinaryWriter): Unit =
+      writeAscii(new JBigDecimal(new BigInteger(unscaled), scale).toPlainString, out)
+    deref(physical) match {
+      case AFixed(_, _, size, _) => (in, out) => write(in.readFixed(size), out)
+      case _ => (in, out) => write(in.readBytes(), out)
+    }
+  }
 
   private def jsonString(s: String): Array[Byte] = {
     val out = new AvroBinaryWriter(s.length + 2)

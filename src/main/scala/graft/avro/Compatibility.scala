@@ -142,11 +142,7 @@ object Compatibility {
             s"reader union lacking writer type ${writer.typeName}", Nil))
 
         // ---- reader-side promotions (reference: compatibility.py:237-258) ---
-        case (ALong, AInt)                      => Nil
-        case (AFloat, AInt | ALong)             => Nil
-        case (ADouble, AInt | ALong | AFloat)   => Nil
-        case (ABytes, AString)                  => Nil
-        case (AString, ABytes)                  => Nil
+        case _ if AvroResolution.promotes(writer, reader) => Nil
 
         case _ => List(RelInc(TypeMismatch,
           s"reader type: ${reader.typeName} not compatible with writer type: ${writer.typeName}",

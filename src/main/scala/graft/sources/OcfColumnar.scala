@@ -341,16 +341,6 @@ private[graft] object OcfColumnar {
   private val wireCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[WirePlan]]()
 
-  /** Avro numeric promotion: decode the writer primitive, widen into the
-    * reader-typed vector. string<->bytes need no tag — the byte-copy
-    * decode is identical either way. */
-  private def promoted(wire: AvroSchema, rdt: DataType): Boolean = (wire, rdt) match {
-    case (AInt, LongType | FloatType | DoubleType) => true
-    case (ALong, FloatType | DoubleType) => true
-    case (AFloat, DoubleType) => true
-    case _ => false
-  }
-
   private def computeWirePlan(writerJson: String,
                               reader: Array[Field]): Option[WirePlan] =
     scala.util.Try(AvroSchemaParser.parse(writerJson)).toOption.flatMap {
@@ -381,17 +371,13 @@ private[graft] object OcfColumnar {
           }
           true
         }
-        // struct-of-scalars (X107): writer and reader structs resolve by
-        // EXACT child name+type at depth (no aliases/promotions/absent
-        // children — nested evolution keeps the row lane); writer-only
-        // children type-skip, reader children must be an in-order
-        // subsequence of the writer's
-        // array/map ELEMENT compatibility (X108): same rules as a scalar
-        // field match — identical type, numeric promotion, or the
-        // string<->bytes byte-copy; a writer-nullable element needs a
-        // reader-nullable element (the null must have somewhere to go).
-        // The step's target is unused for elements (the child vector is
-        // implied by the parent).
+        // the one step rule for a matched (writer, reader) pair — top-level
+        // fields, struct children, array/map elements, union members:
+        // scalars agree in type (an enum when every writer symbol is a
+        // reader symbol) or by an Avro promotion (AvroResolution.promotes,
+        // string<->bytes included); a writer-nullable value needs a
+        // reader-nullable slot (the null must have somewhere to go). The
+        // caller sets the step's target.
         def elemStepOf(w: Field, rk: Field): Option[WireStep] = {
           if (w.nullable && !rk.nullable) return None
           // NESTED shapes resolve recursively: struct children like any
@@ -426,11 +412,11 @@ private[graft] object OcfColumnar {
           }
           if (w.dt == rk.dt && enumOk)
             Some(WireStep(w.wire, w.nullBranch, 0))
-          else if (promoted(w.wire, rk.dt))
-            Some(WireStep(w.wire, w.nullBranch, 0, rdt = rk.dt))
-          else if ((w.wire == AString && rk.dt == BinaryType) ||
-              (w.wire == ABytes && rk.dt == StringType))
-            Some(WireStep(w.wire, w.nullBranch, 0))
+          else if (AvroResolution.promotes(w.wire, rk.wire))
+            // a numeric promotion widens into the reader-typed vector;
+            // string<->bytes is the same byte copy either way
+            Some(WireStep(w.wire, w.nullBranch, 0,
+              rdt = if (rk.dt == StringType || rk.dt == BinaryType) null else rk.dt))
           else None
         }
         // struct-of-scalars (X107), with X106's evolution tolerance at
@@ -497,36 +483,10 @@ private[graft] object OcfColumnar {
                 kidIdx.get(ws.name) match {
                   case Some(idx) if idx >= rc =>
                     if (!fillAbsentKidsUpTo(idx)) return None
-                    val rk = rKids(idx)
-                    val stepOpt: Option[WireStep] =
-                      if (ws.children == null && rk.children == null)
-                        elemStepOf(ws, rk).map(_.copy(target = idx))
-                      else if (ws.children != null && rk.children != null)
-                        (ws.wire, rk.wire) match {
-                          case (wa: AArray, _: AArray) =>
-                            if (ws.nullable && !rk.nullable) None
-                            else elemStepOf(ws.children(0), rk.children(0))
-                              .map(es => WireStep(wa, ws.nullBranch, idx,
-                                children = Array(es)))
-                          case (wm: AMap, _: AMap) =>
-                            if (ws.nullable && !rk.nullable) None
-                            else elemStepOf(ws.children(0), rk.children(0))
-                              .map(es => WireStep(wm, ws.nullBranch, idx,
-                                children = Array(es)))
-                          case (wr: ARecord, _: ARecord) => // struct-in-struct
-                            if (ws.nullable && !rk.nullable) None
-                            else structSteps(wr.fields, rk.children).map {
-                              case (kids, af) =>
-                                WireStep(wr, ws.nullBranch, idx,
-                                  children = kids, absentFills = af)
-                            }
-                          case _ => None
-                        }
-                      else None // array-under-scalar etc: row lane
-                    stepOpt match {
-                      case Some(st) => out(wc) = st
-                      case None => return None
-                    }
+                    // flat or nested (array, map, struct-in-struct): the
+                    // element rule decides
+                    out(wc) = elemStepOf(ws, rKids(idx))
+                      .map(_.copy(target = idx)).getOrElse(return None)
                     rc = idx + 1
                   case Some(_) => return None // reordered nested projection
                   case None => // writer-only child: type-skip (skipValue
@@ -543,73 +503,28 @@ private[graft] object OcfColumnar {
         var w = 0
         while (w < steps.length) {
           val wf = rec.fields(w)
-          flatFieldOf(wf.name, wf.schema) match {
-            case Some(wSpec) =>
-              idxByName.get(wf.name) match {
-                case Some(idx) if idx >= r =>
-                  if (!fillAbsentUpTo(idx)) return None
-                  // matched (by name or alias): types must agree, promote,
-                  // or be the string<->bytes byte-copy; a writer null must
-                  // have a nullable vector to land in
-                  val rf = reader(idx)
-                  if (wSpec.nullable && !rf.nullable) return None
-                  // enum-under-enum: plan only when every writer symbol is
-                  // a reader symbol — the reader-default / resolution-error
-                  // semantics stay on the row lane
-                  val enumOk = (wSpec.wire, rf.wire) match {
-                    case (we: AEnum, re: AEnum) =>
-                      we.symbols.forall(re.symbols.contains)
-                    case _ => true
-                  }
-                  val step =
-                    if (wSpec.dt == rf.dt && enumOk)
-                      WireStep(wSpec.wire, wSpec.nullBranch, idx)
-                    else if (promoted(wSpec.wire, rf.dt))
-                      WireStep(wSpec.wire, wSpec.nullBranch, idx, rdt = rf.dt)
-                    else if ((wSpec.wire == AString && rf.dt == BinaryType) ||
-                        (wSpec.wire == ABytes && rf.dt == StringType))
-                      WireStep(wSpec.wire, wSpec.nullBranch, idx)
-                    else return None
-                  steps(w) = step
-                  r = idx + 1
-                case Some(_) => return None // reordered projection: row lane
-                case None => // writer-only (dropped/pruned) column: type-skip
-                  steps(w) = WireStep(wSpec.wire, wSpec.nullBranch, -1)
-              }
-            case None => structFieldOf(wf.name, wf.schema)
-              .orElse(arrayFieldOf(wf.name, wf.schema))
-              .orElse(mapFieldOf(wf.name, wf.schema))
-              .orElse(unionFieldOf(wf.name, wf.schema)) match {
-              case Some(wNested) =>
-                idxByName.get(wf.name) match {
-                  case Some(idx) if idx >= r =>
-                    if (!fillAbsentUpTo(idx)) return None
-                    val rf = reader(idx)
-                    if (rf.children == null ||
-                        (wNested.nullable && !rf.nullable)) return None
-                    // shape must agree: struct under struct, array under
-                    // array, map under map — anything else is the row
-                    // lane's resolution-error business
-                    val stepOpt: Option[WireStep] = (wNested.wire, rf.wire) match {
-                      case (wu: AUnion, ru: AUnion) =>
-                        unionSteps(wu, ru, wNested.children, rf.children)
-                          .map(kids => WireStep(wu, -1, idx, children = kids))
-                      case _ =>
-                        elemStepOf(wNested, rf).map(_.copy(target = idx))
-                    }
-                    stepOpt match {
-                      case Some(st) => steps(w) = st; r = idx + 1
-                      case None => return None
-                    }
-                  case Some(_) => return None
-                  case None => // writer-only nested column: type-skip — the
-                    // children carry the wire shapes the skip walk needs
-                    steps(w) = WireStep(wNested.wire, wNested.nullBranch, -1,
-                      children = wNested.children.map(k =>
-                        WireStep(k.wire, k.nullBranch, -1)))
-                }
-              case None => return None // non-flat writer column — row reader
-            }
+          val ws = fieldOfShape(wf.name, wf.schema)
+            .orElse(unionFieldOf(wf.name, wf.schema))
+            .getOrElse(return None) // no lane shape: row reader
+          idxByName.get(wf.name) match {
+            case Some(idx) if idx >= r =>
+              if (!fillAbsentUpTo(idx)) return None
+              // matched (by name or alias): general unions pair branch by
+              // branch, every other shape takes the element rule
+              val rf = reader(idx)
+              steps(w) = ((ws.wire, rf.wire) match {
+                case (wu: AUnion, ru: AUnion) =>
+                  unionSteps(wu, ru, ws.children, rf.children)
+                    .map(kids => WireStep(wu, -1, idx, children = kids))
+                case _ => elemStepOf(ws, rf).map(_.copy(target = idx))
+              }).getOrElse(return None)
+              r = idx + 1
+            case Some(_) => return None // reordered projection: row lane
+            case None => // writer-only (dropped/pruned) column: type-skip; a
+              // nested one's children carry the wire shapes the skip needs
+              steps(w) = WireStep(ws.wire, ws.nullBranch, -1,
+                children = if (ws.children == null) null
+                  else ws.children.map(k => WireStep(k.wire, k.nullBranch, -1)))
           }
           w += 1
         }

@@ -1,6 +1,7 @@
 package graft.spark
 
 import graft.avro._
+import graft.avro.AvroResolution.deref
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
@@ -10,261 +11,184 @@ import org.apache.spark.unsafe.types.UTF8String
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
 import scala.collection.mutable.ArrayBuffer
 
-/** Avro wire bytes → Catalyst values, as a closure tree compiled once per
-  * (writer, reader) schema pair on the driver and shipped to executors inside
-  * the decode expression — the Spark-native analog of the reference's
-  * recursive-descent `DatumReader` (python-udf/avro/io.py:637-1100) with
-  * schema resolution (promotions, field matching, skip, defaults) folded into
-  * closure construction instead of per-row dispatch.
+/** Avro wire bytes → Catalyst values: the Catalyst emitter over the one
+  * resolution plan [[AvroResolver]] compiles per (writer, reader) schema
+  * pair. The closure tree is built once on the driver and shipped to
+  * executors inside the decode expression, so decoding a datum walks no
+  * plan and dispatches on no schema.
   *
   * Output representation matches [[SchemaConverters.toSqlType]]: records →
   * [[GenericInternalRow]], strings/enums → [[UTF8String]], arrays →
   * [[GenericArrayData]], maps → [[ArrayBasedMapData]], decimals →
-  * [[Decimal]], date → int days, timestamps → long micros.
+  * [[Decimal]], date → int days, timestamps → long micros, a `["null", T]`
+  * union → `T`, a wider union → a struct with one member per non-null
+  * branch.
   */
 object CatalystAvroReader {
+  import Resolved._
+
   type Reader = AvroBinaryReader => Any
 
-  def compile(writer: AvroSchema, reader: AvroSchema): Reader = new Compiler().make(writer, reader)
+  def compile(writer: AvroSchema, reader: AvroSchema): Reader =
+    new Emitter().emit(AvroResolver.resolve(writer, reader))
 
-  def forSchema(schema: AvroSchema): Reader = compile(schema, schema)
+  private final class Emitter {
+    /** One reader per record node: a recursive plan's cycle closes here. */
+    private val records = new java.util.IdentityHashMap[Record, Reader]()
 
-  private def deref(s: AvroSchema): AvroSchema = s match {
-    case r: ARef => deref(r.target); case o => o
-  }
-
-  private def matches(w: AvroSchema, r: AvroSchema): Boolean = (deref(w), deref(r)) match {
-    case (a, b) if a.typeName == b.typeName => (a, b) match {
-      case (x: NamedSchema, y: NamedSchema) => AvroNames.nameMatches(x, y)
-      case _ => true
-    }
-    case (AInt, ALong | AFloat | ADouble) => true
-    case (ALong, AFloat | ADouble) => true
-    case (AFloat, ADouble) => true
-    case (AString, ABytes) | (ABytes, AString) => true
-    case (_, u: AUnion) => u.branches.exists(matches(w, _))
-    case (_: AUnion, _) => true
-    case (lw: LogicalSchema, rr) => matches(lw.physical, rr)
-    case (ww, lr: LogicalSchema) => matches(ww, lr.physical)
-    case _ => false
-  }
-
-  /** Stateful compiler: the record memo breaks cycles in recursive schemas. */
-  private final class Compiler {
-    private val recordCache = scala.collection.mutable.HashMap.empty[(String, String), Reader]
-
-  def make(w0: AvroSchema, r0: AvroSchema): Reader = {
-    val w = deref(w0)
-    val r = deref(r0)
-    (w, r) match {
-      case (ww, ru: AUnion) if !ww.isInstanceOf[AUnion] =>
-        // resolve the writer against the matching reader branch, then inject
-        // into the reader union's Catalyst representation
-        ru.nonNullBranches match {
-          case Seq(single) => // nullable-T union: value decodes as plain T
-            make(ww, single)
-          case many =>
-            val idx = many.indexWhere(matches(ww, _))
-            if (idx < 0) throw new AvroResolutionException(
-              s"writer ${ww.typeName} matches no reader union branch")
-            val inner = make(ww, many(idx))
-            val width = many.length
-            in => {
-              val row = new GenericInternalRow(width)
-              row.update(idx, inner(in))
-              row
-            }
-        }
-      case (wu: AUnion, rr) =>
-        val ruNonNull = rr match {
-          case u: AUnion => u.nonNullBranches
-          case other     => Seq(other)
-        }
-        val general = ruNonNull.length > 1
-        val branchReaders: Array[Reader] = wu.branches.map { wb =>
-          val wbd = deref(wb)
-          if (wbd == ANull) { (_: AvroBinaryReader) => null }
-          else {
-            val ri = ruNonNull.indexWhere(matches(wbd, _))
-            if (ri < 0) { (_: AvroBinaryReader) =>
-              throw new AvroResolutionException(
-                s"writer union branch ${wbd.typeName} not readable by reader")
-            } else {
-              val inner = make(wbd, ruNonNull(ri))
-              if (!general) inner
-              else {
-                val width = ruNonNull.length
-                (in: AvroBinaryReader) => {
-                  val row = new GenericInternalRow(width)
-                  row.update(ri, inner(in))
-                  row
-                }
-              }
-            }
+    def emit(plan: Resolved): Reader = plan match {
+      case ReadAs(w, r) => readAs(w, r)
+      case Promote(w, r) => promote(w, r)
+      case Skip(w) =>
+        val sk = AvroSkipper.compile(w)
+        in => { sk(in); null }
+      case f: Fail => _ => f.raise()
+      case u: WriterUnion =>
+        val branches = u.branches.map(emit).toArray
+        in => branches(u.readIndex(in))(in)
+      case ReaderUnion(ru, i, value) =>
+        val inner = emit(value)
+        val width = ru.nonNullBranches.length
+        if (width <= 1 || ru.branches(i) == ANull) inner
+        else {
+          val member = ru.branches.take(i).count(_ != ANull)
+          in => {
+            val row = new GenericInternalRow(width)
+            row.update(member, inner(in))
+            row
           }
-        }.toArray
+        }
+      case e: EnumRemap =>
+        val symbols = e.symbols.map(s => if (s == null) null else UTF8String.fromString(s)).toArray
+        in => symbols(e.readIndex(in))
+      case ArrayOf(items) =>
+        val item = emit(items)
         in => {
-          val idx = in.readLong().toInt
-          if (idx < 0 || idx >= branchReaders.length)
-            throw new AvroResolutionException(s"union branch index $idx out of range")
-          branchReaders(idx)(in)
-        }
-      case _ => makeNonUnion(w, r)
-    }
-  }
-
-  private def makeNonUnion(w: AvroSchema, r: AvroSchema): Reader = (w, r) match {
-    case (ANull, _)    => _ => null
-    case (ABoolean, _) => in => in.readBoolean()
-    case (AInt, rr) => rr match {
-      case AInt    => in => in.readInt()
-      case ALong   => in => in.readLong()
-      case AFloat  => in => in.readInt().toFloat
-      case ADouble => in => in.readInt().toDouble
-      case ADate(_) => in => in.readInt()
-      case ATimeMillis(_) => in => in.readInt()
-      case _ => in => in.readInt()
-    }
-    case (ALong, rr) => rr match {
-      case AFloat  => in => in.readLong().toFloat
-      case ADouble => in => in.readLong().toDouble
-      case ATimestampMillis(_) => in => in.readLong() * 1000L // ms → µs (TimestampType)
-      case _ => in => in.readLong()
-    }
-    case (AFloat, ADouble) => in => in.readFloat().toDouble
-    case (AFloat, _)   => in => in.readFloat()
-    case (ADouble, _)  => in => in.readDouble()
-    case (AString, ABytes) => in => in.readBytes()
-    case (AString, _)  => in => UTF8String.fromBytes(in.readBytes())
-    case (ABytes, AString | AUuid(_)) => in => UTF8String.fromBytes(in.readBytes())
-    case (ABytes, ADecimal(p, s, _)) =>
-      in => Decimal(new JBigDecimal(new BigInteger(in.readBytes()), s), p, s)
-    case (ABytes, _)   => in => in.readBytes()
-    case (lw: LogicalSchema, rr) => (lw, rr) match {
-      case (ADecimal(_, s0, u), _) =>
-        val (p, s) = rr match {
-          case ADecimal(rp, rs, _) => (rp, rs)
-          case _ => (DecimalType.MAX_PRECISION, s0)
-        }
-        deref(u) match {
-          case AFixed(_, _, size, _) =>
-            in => Decimal(new JBigDecimal(new BigInteger(in.readFixed(size)), s0), p, s)
-          case _ =>
-            in => Decimal(new JBigDecimal(new BigInteger(in.readBytes()), s0), p, s)
-        }
-      case (ADate(_), _) => in => in.readInt()
-      case (ATimeMillis(_), _) => in => in.readInt()
-      case (ATimeMicros(_), _) => in => in.readLong()
-      case (ATimestampMillis(_), _) => in => in.readLong() * 1000L
-      case (ATimestampMicros(_), _) => in => in.readLong()
-      case (AUuid(_), _) => in => UTF8String.fromBytes(in.readBytes())
-      case _ => make(lw.physical, rr)
-    }
-    case (f: AFixed, ADecimal(p, s, _)) =>
-      in => Decimal(new JBigDecimal(new BigInteger(in.readFixed(f.size)), s), p, s)
-    case (f: AFixed, _) => in => in.readFixed(f.size)
-    case (we: AEnum, re: AEnum) =>
-      val mapped: Array[UTF8String] = we.symbols.map { sym =>
-        if (re.symbols.contains(sym)) UTF8String.fromString(sym)
-        else re.enumDefault.map(UTF8String.fromString).orNull
-      }.toArray
-      in => {
-        val i = in.readInt()
-        val s = mapped(i)
-        if (s == null) throw new AvroResolutionException(
-          s"enum symbol ${we.symbols(i)} not in reader enum ${re.fullName}")
-        s
-      }
-    case (we: AEnum, _) =>
-      val syms = we.symbols.map(UTF8String.fromString).toArray
-      in => syms(in.readInt())
-    case (AArray(wi), rr) =>
-      val ri = rr match { case AArray(x) => x; case other => other }
-      val item = make(wi, ri)
-      in => {
-        val out = new ArrayBuffer[Any](16)
-        var count = in.readLong()
-        while (count != 0) {
-          if (count < 0) { count = -count; in.skipLong() }
-          var i = 0L
-          while (i < count) { out += item(in); i += 1 }
-          count = in.readLong()
-        }
-        new GenericArrayData(out.toArray)
-      }
-    case (AMap(wv), rr) =>
-      val rv = rr match { case AMap(x) => x; case other => other }
-      val value = make(wv, rv)
-      in => {
-        val keys = new ArrayBuffer[Any](16)
-        val values = new ArrayBuffer[Any](16)
-        var count = in.readLong()
-        while (count != 0) {
-          if (count < 0) { count = -count; in.skipLong() }
-          var i = 0L
-          while (i < count) {
-            keys += UTF8String.fromBytes(in.readBytes())
-            values += value(in)
-            i += 1
+          val out = new ArrayBuffer[Any](16)
+          var count = in.readLong()
+          while (count != 0) {
+            if (count < 0) { count = -count; in.skipLong() }
+            var i = 0L
+            while (i < count) { out += item(in); i += 1 }
+            count = in.readLong()
           }
-          count = in.readLong()
+          new GenericArrayData(out.toArray)
         }
-        new ArrayBasedMapData(new GenericArrayData(keys.toArray), new GenericArrayData(values.toArray))
-      }
-    case (wr: ARecord, rr: ARecord) =>
-      recordCache.get((wr.fullName, rr.fullName)) match {
-        case Some(fn) => fn
-        case None =>
+      case MapOf(values) =>
+        val value = emit(values)
+        in => {
+          val keys = new ArrayBuffer[Any](16)
+          val vals = new ArrayBuffer[Any](16)
+          var count = in.readLong()
+          while (count != 0) {
+            if (count < 0) { count = -count; in.skipLong() }
+            var i = 0L
+            while (i < count) {
+              keys += UTF8String.fromBytes(in.readStringBytes())
+              vals += value(in)
+              i += 1
+            }
+            count = in.readLong()
+          }
+          new ArrayBasedMapData(new GenericArrayData(keys.toArray), new GenericArrayData(vals.toArray))
+        }
+      case rec: Record =>
+        val known = records.get(rec)
+        if (known != null) known
+        else {
           var real: Reader = null
           val forwarder: Reader = in => real(in)
-          recordCache((wr.fullName, rr.fullName)) = forwarder
-          real = makeRecord(wr, rr)
+          records.put(rec, forwarder)
+          real = record(rec)
           forwarder
-      }
-    case (wr: ARecord, _) => make(wr, wr) // reader is not a record: ignore reader
-    case _ => throw new AvroResolutionException(
-      s"cannot resolve writer ${w.typeName} against reader ${r.typeName}")
-  }
-
-  private def makeRecord(wr: ARecord, rr: ARecord): Reader = {
-      val slots = AvroNames.assignReaderSlots(wr, rr)
-      val steps: Array[(Int, Reader)] = wr.fields.zipWithIndex.map { case (wf, wi) =>
-        slots(wi) match {
-          case -1 =>
-            val sk = AvroSkipper.compile(wf.schema)
-            (-1, (in: AvroBinaryReader) => { sk(in); null })
-          case ri => (ri, make(wf.schema, rr.fields(ri).schema))
         }
-      }.toArray
-      val written = steps.map(_._1).filter(_ >= 0).toSet
-      val defaults: Array[(Int, Any)] = rr.fields.zipWithIndex.collect {
-        case (rf, i) if !written.contains(i) =>
-          rf.default match {
-            case Some(d) =>
-              (i, toCatalyst(AvroDefaults.materialize(d, rf.schema), rf.schema))
-            case None => throw new AvroResolutionException(
-              s"reader field ${rf.name} of ${rr.fullName} absent from writer and has no default")
-          }
-      }.toArray
-      val width = rr.fields.length
+    }
+
+    private def record(rec: Record): Reader = {
+      val fields = rec.fields.map(emit)
+      val slots = rec.slots
+      val defaults = rec.defaults.zipWithIndex.collect {
+        case (d, i) if d != null => (i, toCatalyst(d.value, d.schema))
+      }
+      val defaultSlots = defaults.map(_._1)
+      val defaultValues = defaults.map(_._2)
+      val width = rec.reader.fields.length
       in => {
         val row = new GenericInternalRow(width)
         var i = 0
-        while (i < steps.length) {
-          val (slot, fn) = steps(i)
-          val v = fn(in)
+        while (i < fields.length) {
+          val v = fields(i)(in)
+          val slot = slots(i)
           if (slot >= 0) row.update(slot, v)
           i += 1
         }
         i = 0
-        while (i < defaults.length) {
-          row.update(defaults(i)._1, defaults(i)._2)
+        while (i < defaultSlots.length) {
+          row.update(defaultSlots(i), defaultValues(i))
           i += 1
         }
         row
       }
+    }
   }
-  } // end Compiler
+
+  /** A scalar of one physical type: a writer logical type decodes as
+    * itself, a plain writer value takes the reader's logical type. */
+  private def readAs(w: AvroSchema, r: AvroSchema): Reader = (w, r) match {
+    case (ANull, _) => _ => null
+    case (ABoolean, _) => _.readBoolean()
+    case (ADecimal(_, scale, u), _) => decimal(u, scale, r)
+    case (ABytes | _: AFixed, ADecimal(_, scale, _)) => decimal(w, scale, r)
+    case (ATimestampMillis(_), _) | (ALong, ATimestampMillis(_)) =>
+      in => in.readLong() * 1000L // ms → µs (TimestampType)
+    case _ => deref(w.physical) match {
+      case AInt => _.readInt()
+      case ALong => _.readLong()
+      case AFloat => _.readFloat()
+      case ADouble => _.readDouble()
+      case AString => in => UTF8String.fromBytes(in.readStringBytes())
+      case ABytes => _.readBytes()
+      case f: AFixed => _.readFixed(f.size)
+      case other => throw new AvroResolutionException(s"cannot decode ${other.typeName}")
+    }
+  }
+
+  /** Avro's promotions, on the physical types; a long-backed reader
+    * logical type then applies its own conversion. */
+  private def promote(w: AvroSchema, r: AvroSchema): Reader =
+    (deref(w.physical), deref(r.physical)) match {
+      case (AInt, ALong) => r match {
+        case ATimestampMillis(_) => in => in.readLong() * 1000L
+        case _ => _.readLong()
+      }
+      case (AInt, AFloat) => _.readInt().toFloat
+      case (AInt, ADouble) => _.readInt().toDouble
+      case (ALong, AFloat) => _.readLong().toFloat
+      case (ALong, ADouble) => _.readLong().toDouble
+      case (AFloat, ADouble) => _.readFloat().toDouble
+      case (AString, ABytes) => r match {
+        case ADecimal(_, scale, _) => decimal(ABytes, scale, r)
+        case _ => _.readBytes()
+      }
+      case (ABytes, AString) => in => UTF8String.fromBytes(in.readStringBytes())
+      case (wp, rp) => throw new AvroResolutionException(
+        s"no promotion from ${wp.typeName} to ${rp.typeName}")
+    }
+
+  /** The writer's unscaled two's-complement value (`physical`: fixed or
+    * bytes) at the writer's `scale`, typed by the reader's decimal. */
+  private def decimal(physical: AvroSchema, scale: Int, r: AvroSchema): Reader = {
+    val (p, s) = r match {
+      case ADecimal(rp, rs, _) => (rp, rs)
+      case _ => (DecimalType.MAX_PRECISION, scale)
+    }
+    deref(physical) match {
+      case AFixed(_, _, size, _) =>
+        in => Decimal(new JBigDecimal(new BigInteger(in.readFixed(size)), scale), p, s)
+      case _ =>
+        in => Decimal(new JBigDecimal(new BigInteger(in.readBytes()), scale), p, s)
+    }
+  }
 
   /** Generic datum (from [[AvroDefaults]]/[[AvroDatumReader]]) → Catalyst value. */
   def toCatalyst(v: Any, s0: AvroSchema): Any = {
@@ -389,10 +313,6 @@ object CatalystAvroWriter {
     val arr = out.reserve(n)
     u.writeToMemory(arr, org.apache.spark.unsafe.Platform.BYTE_ARRAY_OFFSET + out.position)
     out.advance(n)
-  }
-
-  private def deref(s: AvroSchema): AvroSchema = s match {
-    case r: ARef => deref(r.target); case o => o
   }
 
   private def allowsNull(s: AvroSchema): Boolean = deref(s) match {

@@ -312,6 +312,10 @@ class ErrorContractSpec extends AnyFunSuite {
           StructField("stream", org.apache.spark.sql.types.StringType),
           StructField("payload", BinaryType))))
       Seq(
+        "from_avro" -> (() =>
+          payloadDf(datum).select(gfn.from_avro(col("payload"), js)).collect()),
+        "avro_ocf_decode" -> (() =>
+          payloadDf(ocf).select(gfn.avro_ocf_decode(col("payload"), js)).collect()),
         "avro_decode_json" -> (() =>
           payloadDf(datum).select(gfn.avro_decode_json(col("payload"), js)).collect()),
         "avro_ocf_decode_json" -> (() =>
