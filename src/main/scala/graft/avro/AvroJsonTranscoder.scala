@@ -41,20 +41,20 @@ final class AvroJsonTranscoder(writerSchema: AvroSchema) {
     AvroJsonTranscoder.render(out => emit(new AvroBinaryReader(datum), out))
 
   private def emitOf(plan: Resolved): Emit = plan match {
-    case ReadAs(w, r) => scalar(w, r)
-    case Promote(w, r) => scalar(w, r)
+    case s: Scalar => scalar(s)
     case Skip(w) =>
       val sk = AvroSkipper.compile(w)
       (in, _) => sk(in)
     case f: Fail => (_, _) => f.raise()
-    case u: WriterUnion =>
-      val branches = u.branches.map(emitOf).toArray
-      (in, out) => branches(u.readIndex(in))(in, out)
+    case WriterUnion(plans) =>
+      val branches = plans.map(emitOf).toArray
+      val n = branches.length
+      (in, out) => branches(branchIndex(in, n))(in, out)
     case ReaderUnion(_, _, value) => emitOf(value)
     case e: EnumRemap =>
-      val quoted = e.symbols.map(s => if (s == null) null else jsonString(s)).toArray
+      val read = e.decoder(e.symbols.map(s => if (s == null) null else jsonString(s)).toArray)
       (in, out) => {
-        val q = quoted(e.readIndex(in))
+        val q = read(in)
         out.writeRaw(q, 0, q.length)
       }
     case ArrayOf(items) =>
@@ -88,47 +88,40 @@ final class AvroJsonTranscoder(writerSchema: AvroSchema) {
       }
   }
 
-  /** A scalar as [[AvroDatumReader]] decodes it: a writer logical type
-    * renders as itself, a plain writer value widens to the reader's type
-    * and takes the reader's logical type. */
-  private def scalar(w: AvroSchema, r: AvroSchema): Emit = w match {
-    case ANull    => (_, out) => writeAscii("null", out)
-    case ABoolean => (in, out) => writeAscii(if (in.readBoolean()) "true" else "false", out)
-    case ADecimal(_, scale, u) => decimal(u, scale)
-    case ADate(_)            => date
-    case ATimeMillis(_)      => timeMillis
-    case ATimeMicros(_)      => timeMicros
-    case ATimestampMillis(_) => timestampMillis
-    case ATimestampMicros(_) => timestampMicros
-    case AUuid(_)            => string
-    case AInt => r match {
-      case ALong          => (in, out) => writeLong(in.readLong(), out)
-      case AFloat         => (in, out) => writeDouble(in.readInt().toFloat.toDouble, out)
-      case ADouble        => (in, out) => writeDouble(in.readInt().toDouble, out)
-      case ADate(_)       => date
-      case ATimeMillis(_) => timeMillis
-      case _              => (in, out) => writeLong(in.readInt().toLong, out)
-    }
-    case ALong => r match {
-      case AFloat              => (in, out) => writeDouble(in.readLong().toFloat.toDouble, out)
-      case ADouble             => (in, out) => writeDouble(in.readLong().toDouble, out)
+  /** A scalar as [[AvroDatumReader]] decodes it, which converts no promoted
+    * value by a logical type: an int under `timestamp-millis` renders as the
+    * int. */
+  private def scalar(s: Scalar): Emit =
+    if (s.logical != null && s.target != s.wire) plain(s.wire)
+    else s.logical match {
+      case ADecimal(_, scale, _) => decimal(s.wire, scale)
+      case ADate(_)            => date
+      case ATimeMillis(_)      => timeMillis
       case ATimeMicros(_)      => timeMicros
       case ATimestampMillis(_) => timestampMillis
       case ATimestampMicros(_) => timestampMicros
-      case _                   => (in, out) => writeLong(in.readLong(), out)
+      case _ => (s.wire, s.target) match {
+        case (AInt, ALong)    => (in, out) => writeLong(in.readLong(), out)
+        case (AInt, AFloat)   => (in, out) => writeDouble(in.readInt().toFloat.toDouble, out)
+        case (AInt, ADouble)  => (in, out) => writeDouble(in.readInt().toDouble, out)
+        case (ALong, AFloat)  => (in, out) => writeDouble(in.readLong().toFloat.toDouble, out)
+        case (ALong, ADouble) => (in, out) => writeDouble(in.readLong().toDouble, out)
+        case (AFloat, ADouble) => (in, out) => writeDouble(in.readFloat().toDouble, out)
+        case (_, target) => plain(target) // string<->bytes renders as the target
+      }
     }
-    case AFloat  => (in, out) => writeDouble(in.readFloat().toDouble, out)
-    case ADouble => (in, out) => writeDouble(in.readDouble(), out)
-    case ABytes => r match {
-      case AString              => string
-      case ADecimal(_, scale, _) => decimal(ABytes, scale)
-      case _                    => bytes
-    }
-    case AString => if (r == ABytes) bytes else string
-    case f: AFixed => r match {
-      case ADecimal(_, scale, _) => decimal(f, scale)
-      case _ => (in, out) => { val b = in.readFixed(f.size); writeLatin1(b, 0, b.length, out) }
-    }
+
+  /** A wire value of physical type `p` rendered as itself. */
+  private def plain(p: AvroSchema): Emit = p match {
+    case ANull    => (_, out) => writeAscii("null", out)
+    case ABoolean => (in, out) => writeAscii(if (in.readBoolean()) "true" else "false", out)
+    case AInt     => (in, out) => writeLong(in.readInt().toLong, out)
+    case ALong    => (in, out) => writeLong(in.readLong(), out)
+    case AFloat   => (in, out) => writeDouble(in.readFloat().toDouble, out)
+    case ADouble  => (in, out) => writeDouble(in.readDouble(), out)
+    case AString  => string
+    case ABytes   => bytes
+    case f: AFixed => (in, out) => { val b = in.readFixed(f.size); writeLatin1(b, 0, b.length, out) }
     case other => throw new AvroResolutionException(s"cannot decode ${other.typeName}")
   }
 
@@ -220,9 +213,8 @@ final class AvroJsonTranscoder(writerSchema: AvroSchema) {
     val rr = rec.reader
     val slots = rec.slots
     val steps = rec.fields.map(emitOf)
-    val defaults: Array[Array[Byte]] = rec.defaults.map(d =>
-      if (d == null) null
-      else AvroJson.render(d.value).getBytes(StandardCharsets.ISO_8859_1))
+    val defaults: Array[Array[Byte]] = rec.defaults.map(
+      _.map(d => AvroJson.render(d).getBytes(StandardCharsets.ISO_8859_1)).orNull)
     val nr = rr.fields.length
     val prefixes: Array[Array[Byte]] = rr.fields.zipWithIndex.map { case (rf, i) =>
       (if (i == 0) "" else ", ").getBytes(StandardCharsets.US_ASCII) ++

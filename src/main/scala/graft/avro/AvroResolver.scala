@@ -8,20 +8,19 @@ import AvroResolution.{deref, matches, promotes}
   * builds the tree once per schema pair; emitters turn it into closures
   * ([[graft.spark.CatalystAvroReader]] for Catalyst values,
   * [[AvroJsonTranscoder]] for JSON text), so the resolution rules — union
-  * branch choice, promotions, field matching, defaults, enum symbols and
-  * recursion — are decided here and nowhere else. Apache Avro's Java
-  * `Resolver` (1.9+) plans resolution the same way. */
+  * branch choice, promotions, which logical type converts a scalar, field
+  * matching, defaults, enum symbols and recursion — are decided here and
+  * nowhere else; an emitter only maps each node to its own output type.
+  * Apache Avro's Java `Resolver` (1.9+) plans resolution the same way. */
 sealed trait Resolved
 
 object Resolved {
-  /** A writer scalar read as the reader's scalar of the same physical type
-    * (null, boolean, int, long, float, double, bytes, string, fixed). Either
-    * side may carry a logical type. */
-  final case class ReadAs(writer: AvroSchema, reader: AvroSchema) extends Resolved
-
-  /** A writer scalar widened to the reader's physical type by one of Avro's
-    * promotions ([[AvroResolution.promotes]]). */
-  final case class Promote(writer: AvroSchema, reader: AvroSchema) extends Resolved
+  /** A scalar read as `wire` (the writer's physical type), delivered as
+    * `target` (`wire`, or the reader's physical type it promotes to), then
+    * converted by `logical` (the writer's logical type, else the reader's
+    * where it applies to `target`, else null); `reader` types the output. */
+  final case class Scalar(wire: AvroSchema, target: AvroSchema, logical: LogicalSchema,
+      reader: AvroSchema) extends Resolved
 
   /** A writer value no reader field takes: skipped, never materialized. */
   final case class Skip(writer: AvroSchema) extends Resolved
@@ -32,58 +31,54 @@ object Resolved {
   }
 
   /** A writer union: the wire's branch index picks one plan per branch. */
-  final case class WriterUnion(branches: IndexedSeq[Resolved]) extends Resolved {
-    /** The branch index at `in`, checked against the writer's branches. */
-    def readIndex(in: AvroBinaryReader): Int = {
-      val idx = in.readLong().toInt
-      if (idx < 0 || idx >= branches.length)
-        throw new AvroResolutionException(s"union branch index $idx out of range")
-      idx
-    }
+  final case class WriterUnion(branches: IndexedSeq[Resolved]) extends Resolved
+
+  /** The writer union branch index at `in`, checked against its `n` branches. */
+  def branchIndex(in: AvroBinaryReader, n: Int): Int = {
+    val idx = in.readLong().toInt
+    if (idx < 0 || idx >= n)
+      throw new AvroResolutionException(s"union branch index $idx out of range")
+    idx
   }
 
   /** A non-union writer value read into branch `index` of a reader union:
     * the first branch the writer type matches. */
   final case class ReaderUnion(reader: AUnion, index: Int, value: Resolved) extends Resolved
 
-  /** A writer enum read as a reader enum: per writer index, the reader
-    * symbol it becomes (the reader's default for a symbol the reader lacks),
-    * or null when the reader has neither. */
-  final case class EnumRemap(writer: AEnum, reader: AEnum, symbols: IndexedSeq[String])
+  /** A writer enum: per writer index, the symbol the reader gets (under a
+    * reader enum, null where it has neither the symbol nor a default). */
+  final case class EnumRemap(writer: AEnum, reader: AvroSchema, symbols: IndexedSeq[String])
       extends Resolved {
-    /** The writer symbol index at `in`, once it is known to be in range and
-      * to have a reader symbol. */
-    def readIndex(in: AvroBinaryReader): Int = {
-      val i = in.readInt()
-      if (i < 0 || i >= symbols.length)
-        throw new AvroResolutionException(s"enum index $i out of range for ${writer.fullName}")
-      if (symbols(i) == null) throw new AvroResolutionException(
-        s"enum symbol ${writer.symbols(i)} not in reader enum ${reader.fullName} and no default")
-      i
+    /** Reads a checked symbol index as `images(i)`, an emitter's image of
+      * `symbols(i)` (null exactly where that symbol is). */
+    def decoder[T <: AnyRef](images: Array[T]): AvroBinaryReader => T = {
+      val name = writer.fullName
+      val missing = symbols.indices.map(i => if (symbols(i) != null) null else
+        s"enum symbol ${writer.symbols(i)} not in reader enum " +
+          s"${reader.asInstanceOf[AEnum].fullName} and no default").toArray
+      in => {
+        val i = in.readInt()
+        if (i < 0 || i >= images.length)
+          throw new AvroResolutionException(s"enum index $i out of range for $name")
+        val image = images(i)
+        if (image == null) throw new AvroResolutionException(missing(i))
+        image
+      }
     }
   }
 
   final case class ArrayOf(items: Resolved) extends Resolved
   final case class MapOf(values: Resolved) extends Resolved
 
-  /** A reader field's default, materialized once as a generic datum of
-    * `schema` ([[AvroDefaults]]). */
-  final case class Default(value: Any, schema: AvroSchema)
-
-  /** A record read in writer field order. One node exists per (writer,
-    * reader) record pair of a plan, so a recursive schema resolves to a
-    * cyclic tree; emitters memoize on the node to compile it once. */
-  final class Record private[avro] (val writer: ARecord, val reader: ARecord) extends Resolved {
-    private[avro] var slots0: Array[Int] = _
-    private[avro] var fields0: Array[Resolved] = _
-    private[avro] var defaults0: Array[Default] = _
-
-    /** Per writer field: the reader field it fills, or -1 when skipped. */
-    def slots: Array[Int] = slots0
-    /** Per writer field: how to read it (a [[Skip]] when its slot is -1). */
-    def fields: Array[Resolved] = fields0
-    /** Per reader field: its default when no writer field fills it, else null. */
-    def defaults: Array[Default] = defaults0
+  /** A record read in writer field order: per writer field its reader
+    * slot (-1: skipped) and plan; per reader field the default
+    * ([[AvroDefaults]]) it takes when no writer field fills it. One node
+    * exists per record pair, so a recursive schema closes a cycle that
+    * emitters memoize on; the resolver fills the arrays before returning. */
+  final class Record private[avro] (val reader: ARecord) extends Resolved {
+    private[graft] var slots: Array[Int] = _
+    private[graft] var fields: Array[Resolved] = _
+    private[graft] var defaults: Array[Option[Any]] = _
   }
 }
 
@@ -107,25 +102,55 @@ object AvroResolver {
           else Fail(s"writer union branch ${b.typeName} not readable as ${r.typeName}")
         }.toIndexedSeq)
       case (w, ru: AUnion) =>
-        val i = ru.branches.indexWhere(matches(w, _))
+        val i = ru.branches.indexWhere(matches(w, _)) match {
+          // a nullable-T reader holds a T: a writer no branch matches
+          // resolves against T as it would against a plain T reader
+          case -1 if ru.nonNullBranches.length == 1 => ru.branches.indexWhere(_ != ANull)
+          case i => i
+        }
         if (i < 0) throw new AvroResolutionException(
           s"writer ${w.typeName} matches no reader union branch")
         ReaderUnion(ru, i, resolve(w, ru.branches(i)))
-      case (we: AEnum, re: AEnum) =>
+      case (we: AEnum, r) =>
         // (reference: io.py:834-862 — a symbol the reader lacks takes the
         // reader's default, else it is a resolution error)
-        EnumRemap(we, re, we.symbols.map { s =>
-          if (re.symbols.contains(s)) s else re.enumDefault.orNull
-        }.toIndexedSeq)
+        EnumRemap(we, r, r match {
+          case re: AEnum => we.symbols.map { s =>
+            if (re.symbols.contains(s)) s else re.enumDefault.orNull
+          }.toIndexedSeq
+          case _ => we.symbols.toIndexedSeq
+        })
       case (AArray(wi), AArray(ri)) => ArrayOf(resolve(wi, ri))
       case (AMap(wv), AMap(rv)) => MapOf(resolve(wv, rv))
       case (wr: ARecord, rr: ARecord) => record(wr, rr)
-      case (w, r) =>
-        val (wp, rp) = (deref(w.physical), deref(r.physical))
-        if (wp.typeName == rp.typeName) ReadAs(w, r)
-        else if (promotes(wp, rp)) Promote(w, r)
-        else throw new AvroResolutionException(
+      case (w, r) => scalar(w, r)
+    }
+
+    /** Same physical type or an Avro promotion, else a pair the generic
+      * reader decodes by the writer: a writer logical type, or a null,
+      * boolean, double, string, bytes or fixed writer under any reader, an
+      * int or long under any logical one. An int under `timestamp-millis`
+      * widens to long, then scales. */
+    private def scalar(w: AvroSchema, r: AvroSchema): Scalar = {
+      val wire = deref(w.physical)
+      val rp = deref(r.physical)
+      val readerLogical = r match {
+        case l: LogicalSchema => l
+        case _ => null
+      }
+      (w, wire) match {
+        case (l: LogicalSchema, _) => Scalar(wire, wire, l, r)
+        case _ if wire.typeName == rp.typeName => Scalar(wire, wire, readerLogical, r)
+        case _ if promotes(wire, rp) => Scalar(wire, rp, readerLogical, r)
+        case (_, ABytes | _: AFixed) => Scalar(wire, wire, readerLogical match {
+          case d: ADecimal => d // a decimal reads a bytes or fixed value alike
+          case _ => null
+        }, r)
+        case (_, ANull | ABoolean | ADouble | AString) => Scalar(wire, wire, null, r)
+        case (_, AInt | ALong) if readerLogical != null => Scalar(wire, wire, null, r)
+        case _ => throw new AvroResolutionException(
           s"cannot resolve writer ${w.typeName} against reader ${r.typeName}")
+      }
     }
 
     /** Match writer fields to reader fields by name and reader alias, skip
@@ -133,20 +158,20 @@ object AvroResolver {
       * (reference: io.py:990-1039) */
     private def record(wr: ARecord, rr: ARecord): Record =
       records.getOrElse((wr.fullName, rr.fullName), {
-        val rec = new Record(wr, rr)
+        val rec = new Record(rr)
         records((wr.fullName, rr.fullName)) = rec
         val slots = AvroNames.assignReaderSlots(wr, rr)
-        rec.slots0 = slots
-        rec.fields0 = wr.fields.indices.map { i =>
+        rec.slots = slots
+        rec.fields = wr.fields.indices.map { i =>
           if (slots(i) < 0) Skip(wr.fields(i).schema)
           else resolve(wr.fields(i).schema, rr.fields(slots(i)).schema)
         }.toArray
         val written = slots.filter(_ >= 0).toSet
-        rec.defaults0 = rr.fields.indices.map { i =>
+        rec.defaults = rr.fields.indices.map { i =>
           val rf = rr.fields(i)
-          if (written.contains(i)) null
+          if (written.contains(i)) None
           else rf.default match {
-            case Some(d) => Default(AvroDefaults.materialize(d, rf.schema), rf.schema)
+            case Some(d) => Some(AvroDefaults.materialize(d, rf.schema))
             case None => throw new AvroResolutionException(
               s"reader field ${rf.name} of ${rr.fullName} absent from writer and has no default")
           }

@@ -373,11 +373,10 @@ private[graft] object OcfColumnar {
         }
         // the one step rule for a matched (writer, reader) pair — top-level
         // fields, struct children, array/map elements, union members:
-        // scalars agree in type (an enum when every writer symbol is a
-        // reader symbol) or by an Avro promotion (AvroResolution.promotes,
-        // string<->bytes included); a writer-nullable value needs a
-        // reader-nullable slot (the null must have somewhere to go). The
-        // caller sets the step's target.
+        // scalars agree in Spark type (an enum when every writer symbol is a
+        // reader symbol) or promote to the reader vector's plain Avro type; a
+        // writer-nullable value needs a reader-nullable slot (the null must
+        // have somewhere to go). The caller sets the step's target.
         def elemStepOf(w: Field, rk: Field): Option[WireStep] = {
           if (w.nullable && !rk.nullable) return None
           // NESTED shapes resolve recursively: struct children like any
@@ -412,7 +411,8 @@ private[graft] object OcfColumnar {
           }
           if (w.dt == rk.dt && enumOk)
             Some(WireStep(w.wire, w.nullBranch, 0))
-          else if (AvroResolution.promotes(w.wire, rk.wire))
+          else if (AvroResolution.promotes(w.wire,
+              graft.spark.SchemaConverters.toAvroType(rk.dt)))
             // a numeric promotion widens into the reader-typed vector;
             // string<->bytes is the same byte copy either way
             Some(WireStep(w.wire, w.nullBranch, 0,

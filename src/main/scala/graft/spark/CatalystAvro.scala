@@ -9,20 +9,23 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import java.math.{BigDecimal => JBigDecimal, BigInteger}
+import java.nio.charset.StandardCharsets
 import scala.collection.mutable.ArrayBuffer
 
 /** Avro wire bytes → Catalyst values: the Catalyst emitter over the one
   * resolution plan [[AvroResolver]] compiles per (writer, reader) schema
-  * pair. The closure tree is built once on the driver and shipped to
-  * executors inside the decode expression, so decoding a datum walks no
-  * plan and dispatches on no schema.
+  * pair. The closure tree is built once per JVM (the decode expressions
+  * hold it in a transient field and rebuild it where they run), so
+  * decoding a datum walks no plan and dispatches on no schema.
   *
-  * Output representation matches [[SchemaConverters.toSqlType]]: records →
-  * [[GenericInternalRow]], strings/enums → [[UTF8String]], arrays →
+  * A value has the Catalyst type [[SchemaConverters.toSqlType]] gives the
+  * reader, or the writer's where the plan decodes by the writer (a writer
+  * logical type, say, under a reader of another type): records → [[GenericInternalRow]], strings/enums/uuids →
+  * [[UTF8String]], bytes/fixed → byte arrays, arrays →
   * [[GenericArrayData]], maps → [[ArrayBasedMapData]], decimals →
-  * [[Decimal]], date → int days, timestamps → long micros, a `["null", T]`
-  * union → `T`, a wider union → a struct with one member per non-null
-  * branch.
+  * [[Decimal]], date and time-millis → int, time-micros → long,
+  * timestamps → long micros, a `["null", T]` union → `T`, a wider union →
+  * a struct with one member per non-null branch.
   */
 object CatalystAvroReader {
   import Resolved._
@@ -37,15 +40,15 @@ object CatalystAvroReader {
     private val records = new java.util.IdentityHashMap[Record, Reader]()
 
     def emit(plan: Resolved): Reader = plan match {
-      case ReadAs(w, r) => readAs(w, r)
-      case Promote(w, r) => promote(w, r)
+      case s: Scalar => scalar(s)
       case Skip(w) =>
         val sk = AvroSkipper.compile(w)
         in => { sk(in); null }
       case f: Fail => _ => f.raise()
-      case u: WriterUnion =>
-        val branches = u.branches.map(emit).toArray
-        in => branches(u.readIndex(in))(in)
+      case WriterUnion(plans) =>
+        val branches = plans.map(emit).toArray
+        val n = branches.length
+        in => branches(branchIndex(in, n))(in)
       case ReaderUnion(ru, i, value) =>
         val inner = emit(value)
         val width = ru.nonNullBranches.length
@@ -59,8 +62,12 @@ object CatalystAvroReader {
           }
         }
       case e: EnumRemap =>
-        val symbols = e.symbols.map(s => if (s == null) null else UTF8String.fromString(s)).toArray
-        in => symbols(e.readIndex(in))
+        val binary = binarySlot(e.reader, default = false)
+        e.decoder(e.symbols.map { s =>
+          if (s == null) null
+          else if (binary) s.getBytes(StandardCharsets.UTF_8)
+          else UTF8String.fromString(s)
+        }.toArray[AnyRef])
       case ArrayOf(items) =>
         val item = emit(items)
         in => {
@@ -108,7 +115,7 @@ object CatalystAvroReader {
       val fields = rec.fields.map(emit)
       val slots = rec.slots
       val defaults = rec.defaults.zipWithIndex.collect {
-        case (d, i) if d != null => (i, toCatalyst(d.value, d.schema))
+        case (Some(d), i) => (i, toCatalyst(d, rec.reader.fields(i).schema))
       }
       val defaultSlots = defaults.map(_._1)
       val defaultValues = defaults.map(_._2)
@@ -132,61 +139,50 @@ object CatalystAvroReader {
     }
   }
 
-  /** A scalar of one physical type: a writer logical type decodes as
-    * itself, a plain writer value takes the reader's logical type. */
-  private def readAs(w: AvroSchema, r: AvroSchema): Reader = (w, r) match {
-    case (ANull, _) => _ => null
-    case (ABoolean, _) => _.readBoolean()
-    case (ADecimal(_, scale, u), _) => decimal(u, scale, r)
-    case (ABytes | _: AFixed, ADecimal(_, scale, _)) => decimal(w, scale, r)
-    case (ATimestampMillis(_), _) | (ALong, ATimestampMillis(_)) =>
-      in => in.readLong() * 1000L // ms → µs (TimestampType)
-    case _ => deref(w.physical) match {
-      case AInt => _.readInt()
-      case ALong => _.readLong()
-      case AFloat => _.readFloat()
-      case ADouble => _.readDouble()
-      case AString => in => UTF8String.fromBytes(in.readStringBytes())
-      case ABytes => _.readBytes()
-      case f: AFixed => _.readFixed(f.size)
-      case other => throw new AvroResolutionException(s"cannot decode ${other.typeName}")
-    }
+  /** Does the reader hold a string-like or bytes-like value as a byte array
+    * (bytes, fixed) rather than a UTF8String (string, enum, uuid)? */
+  private def binarySlot(reader: AvroSchema, default: Boolean): Boolean = reader match {
+    case ABytes | _: AFixed => true
+    case AString | _: AEnum | _: AUuid => false
+    case _ => default
   }
 
-  /** Avro's promotions, on the physical types; a long-backed reader
-    * logical type then applies its own conversion. */
-  private def promote(w: AvroSchema, r: AvroSchema): Reader =
-    (deref(w.physical), deref(r.physical)) match {
-      case (AInt, ALong) => r match {
-        case ATimestampMillis(_) => in => in.readLong() * 1000L
-        case _ => _.readLong()
+  /** A scalar in Catalyst form: decimals and timestamp-millis convert,
+    * other logical types keep their physical value. */
+  private def scalar(s: Scalar): Reader = s.logical match {
+    case ADecimal(_, scale, _) =>
+      val (p, sc) = s.reader match {
+        case ADecimal(rp, rs, _) => (rp, rs)
+        case _ => (DecimalType.MAX_PRECISION, scale)
       }
+      s.wire match {
+        case AFixed(_, _, size, _) =>
+          in => Decimal(new JBigDecimal(new BigInteger(in.readFixed(size)), scale), p, sc)
+        case _ =>
+          in => Decimal(new JBigDecimal(new BigInteger(in.readBytes()), scale), p, sc)
+      }
+    case ATimestampMillis(_) => in => in.readLong() * 1000L // ms → µs (TimestampType)
+    case _ => (s.wire, s.target) match {
+      case (ANull, _) => _ => null
+      case (ABoolean, _) => _.readBoolean()
+      case (AInt, AInt) => _.readInt()
+      case (AInt | ALong, ALong) => _.readLong() // one varint encoding for both
       case (AInt, AFloat) => _.readInt().toFloat
       case (AInt, ADouble) => _.readInt().toDouble
       case (ALong, AFloat) => _.readLong().toFloat
       case (ALong, ADouble) => _.readLong().toDouble
+      case (AFloat, AFloat) => _.readFloat()
       case (AFloat, ADouble) => _.readFloat().toDouble
-      case (AString, ABytes) => r match {
-        case ADecimal(_, scale, _) => decimal(ABytes, scale, r)
-        case _ => _.readBytes()
-      }
-      case (ABytes, AString) => in => UTF8String.fromBytes(in.readStringBytes())
-      case (wp, rp) => throw new AvroResolutionException(
-        s"no promotion from ${wp.typeName} to ${rp.typeName}")
-    }
-
-  /** The writer's unscaled two's-complement value (`physical`: fixed or
-    * bytes) at the writer's `scale`, typed by the reader's decimal. */
-  private def decimal(physical: AvroSchema, scale: Int, r: AvroSchema): Reader = {
-    val (p, s) = r match {
-      case ADecimal(rp, rs, _) => (rp, rs)
-      case _ => (DecimalType.MAX_PRECISION, scale)
-    }
-    deref(physical) match {
-      case AFixed(_, _, size, _) =>
-        in => Decimal(new JBigDecimal(new BigInteger(in.readFixed(size)), scale), p, s)
-      case _ =>
-        in => Decimal(new JBigDecimal(new BigInteger(in.readBytes()), scale), p, s)
+      case (ADouble, _) => _.readDouble()
+      case (_, target) =>
+        (target, binarySlot(s.reader, default = s.wire != AString)) match {
+          case (AFixed(_, _, size, _), true) => _.readFixed(size)
+          case (AFixed(_, _, size, _), false) => in => UTF8String.fromBytes(in.readFixed(size))
+          case (AString, true) => _.readStringBytes()
+          case (AString, false) => in => UTF8String.fromBytes(in.readStringBytes())
+          case (_, true) => _.readBytes()
+          case (_, false) => in => UTF8String.fromBytes(in.readBytes())
+        }
     }
   }
 

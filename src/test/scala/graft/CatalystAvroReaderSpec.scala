@@ -6,9 +6,13 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{BinaryType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, Decimal, StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
+
+import java.nio.charset.StandardCharsets
+import scala.util.Try
 
 /** The compiled Catalyst decoder against the generic reader: for random
   * (writer, reader) pairs, decoding the wire bytes straight to Catalyst
@@ -31,6 +35,8 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
   private def sameAll(x: Array[Any], y: Array[Any]): Boolean =
     x.length == y.length && x.indices.forall(i => same(x(i), y(i)))
 
+  private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
+
   private def runProp(prop: Prop, min: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), prop)
     assert(res.passed, res.status.toString)
@@ -44,14 +50,18 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
     Prop(same(direct, generic)) :| s"writer ${writer.canonical}, reader ${reader.canonical}"
   }
 
-  /** The reader-side image of `s` under one Avro promotion per type. bytes
-    * to string is left out: the generic reader replaces malformed UTF-8
-    * while Catalyst keeps the raw bytes, as Spark's strings do. */
+  /** The reader-side image of `s` under one Avro promotion per type, or,
+    * for a fixed or an enum, a reader the generic reader decodes it under by
+    * the writer. bytes to string is left out: the generic reader replaces
+    * malformed UTF-8 while Catalyst keeps the raw bytes, as Spark's strings
+    * do. */
   private def promoted(s: AvroSchema): AvroSchema = s match {
     case AInt => ALong
     case ALong => ADouble
     case AFloat => ADouble
     case AString => ABytes
+    case _: AFixed => ABytes
+    case _: AEnum => AString
     case AArray(items) => AArray(promoted(items))
     case AMap(values) => AMap(promoted(values))
     case AUnion(branches) => AUnion(branches.map(promoted))
@@ -80,6 +90,63 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
     runProp(Prop.forAll(gen) { case (writer, reader, datum) =>
       agrees(writer, reader, datum)
     }, min = 200)
+  }
+
+  test("every scalar pair decodes as the generic reader converts") {
+    val fixed = AFixed("F", None, 4)
+    val scalars: Seq[(AvroSchema, Any)] = Seq(
+      ANull -> null, ABoolean -> true, AInt -> 7, ALong -> 7L, AFloat -> 1.5f, ADouble -> 2.5,
+      ABytes -> utf8("abc"), AString -> "xyz", fixed -> utf8("wxyz"),
+      AEnum("E", None, Seq("A", "B")) -> "B",
+      ADecimal(9, 2, ABytes) -> Array[Byte](1, 2), ADecimal(9, 2, fixed) -> Array[Byte](0, 0, 1, 2),
+      ADate() -> 7, ATimeMillis() -> 7, ATimeMicros() -> 7L, ATimestampMillis() -> 7L,
+      ATimestampMicros() -> 7L, AUuid() -> "u-1")
+    def raw(d: Any): Array[Byte] = d match {
+      case s: String => utf8(s)
+      case b: Array[Byte] => b
+    }
+    // where the generic value does not have the reader's Catalyst type the
+    // decoder holds the reader's: an int promoted to a long-backed logical
+    // reader, a string promoted to a bytes decimal, and a string, uuid,
+    // bytes, fixed or enum value under a string, enum or uuid reader (a
+    // UTF8String) or under a bytes or fixed reader (a byte array)
+    def fitted(w: AvroSchema, d: Any, r: AvroSchema): Option[Any] = (w, r) match {
+      case (AInt, ATimestampMillis(_)) => Some(d.asInstanceOf[Int] * 1000L)
+      case (AInt, ATimestampMicros(_) | ATimeMicros(_)) => Some(d.asInstanceOf[Int].toLong)
+      case (AString, ADecimal(p, s, ABytes)) =>
+        Some(Decimal(new java.math.BigDecimal(new java.math.BigInteger(raw(d)), s), p, s))
+      case (AString | _: AUuid | ABytes | _: AFixed | _: AEnum, AString | _: AEnum | _: AUuid) =>
+        Some(UTF8String.fromBytes(raw(d)))
+      case (AString | _: AUuid | ABytes | _: AFixed | _: AEnum, ABytes | _: AFixed) => Some(raw(d))
+      case _ => None
+    }
+    def outcome(t: Try[Any]): Either[String, Any] =
+      t.fold(e => Left(e.getClass.getName), v => Right(v))
+    def agree(a: Either[String, Any], b: Either[String, Any]): Boolean = (a, b) match {
+      case (Left(x), Left(y)) => x == y
+      case (Right(x), Right(y)) => same(x, y)
+      case _ => false
+    }
+    val failures = for {
+      (w, d) <- scalars
+      r <- scalars.map(_._1)
+      bytes = new AvroDatumWriter(w.physical).toBytes(d)
+      direct = outcome(Try(CatalystAvroReader.compile(w, r)(new AvroBinaryReader(bytes))))
+      // a writer logical type decodes as itself, whatever the reader
+      expected = outcome(Try(new AvroDatumReader(w, Some(r)).read(bytes)).map(v =>
+        fitted(w, d, r).getOrElse(CatalystAvroReader.toCatalyst(v, w match {
+          case _: LogicalSchema => w
+          case _ => r
+        }))))
+      // a ["null", T] reader holds a T, so it reads every writer as T does,
+      // including one that matches no branch (the generic reader rejects it)
+      nullable = outcome(Try(CatalystAvroReader.compile(w, AUnion(Seq(ANull, r)))(
+        new AvroBinaryReader(bytes))))
+      (what, got, want) <- Seq(("", direct, expected)) ++
+        (if (r == ANull) Nil else Seq((" as [null, T]", nullable, direct)))
+      if !agree(got, want)
+    } yield s"writer $w, reader $r$what: got $got, expected $want"
+    assert(failures.isEmpty, failures.mkString("\n"))
   }
 
   lazy val spark: SparkSession = SparkSession.builder()

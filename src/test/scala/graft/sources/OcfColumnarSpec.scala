@@ -585,6 +585,38 @@ class OcfColumnarSpec extends AnyFunSuite {
     assert(OcfColumnar.wirePlanFor(writerJson, narrow).isEmpty)
   }
 
+  test("a string writer under a fixed reader and a bytes writer under an " +
+      "enum reader ride the columnar lane, value-identical to the row reader") {
+    import graft.avro._
+    val dir = tempDir("graft-col-bytecopy")
+    val schema = AvroSchemaParser.parse(
+      """{"type":"record","name":"r","fields":[
+        |{"name":"id","type":"long"},{"name":"code","type":"string"},
+        |{"name":"state","type":"bytes"}]}""".stripMargin).asInstanceOf[ARecord]
+    val syms = Seq("NEW", "OPEN", "DONE")
+    val datums = (0 until 300).map { i =>
+      AvroRecord(schema, Array[Any](i.toLong, f"c$i%03d",
+        syms(i % 3).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+    }
+    java.nio.file.Files.write(new java.io.File(dir, "bc.avro").toPath,
+      Ocf.writeAll(schema, datums))
+    val reader =
+      """{"type":"record","name":"r","fields":[
+        |{"name":"id","type":"long"},
+        |{"name":"code","type":{"type":"fixed","name":"Code","size":4}},
+        |{"name":"state","type":{"type":"enum","name":"St",
+        |  "symbols":["NEW","OPEN","DONE"]}}]}""".stripMargin
+    def rd(c: Boolean) = spark.read.format("graft-ocf").option("readerSchema", reader)
+      .option("columnar", c.toString).load(dir.getAbsolutePath)
+    val col = rd(true)
+    assert(isColumnar(col), col.queryExecution.executedPlan.toString)
+    def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
+      new String(r.getAs[Array[Byte]](1), "UTF-8"), r.getString(2))).sortBy(_._1).toSeq
+    val a = canon(col)
+    assert(a == canon(rd(false)))
+    assert(a(7) == ((7L, "c007", "OPEN")))
+  }
+
   test("schema evolution keeps the columnar lane: ADD (null and DEFAULT), " +
       "RENAME via alias, int->bigint promotion — old files resolve (X106)") {
     import spark.implicits._
