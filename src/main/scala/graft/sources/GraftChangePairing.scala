@@ -1,7 +1,6 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.DataType
 
 /** Opt-in CDF UPDATE pairing (X104): `updateImages=true` on a change-feed
@@ -40,16 +39,6 @@ private[sources] object GraftChangePairing {
 
   val PreImage = "update_preimage"
   val PostImage = "update_postimage"
-
-  /** Does any classifier group contain this (full data) row's key tuple? */
-  def matches(groups: Array[OcfSplitReader.EqGroup], row: InternalRow): Boolean = {
-    var i = 0
-    while (i < groups.length) {
-      if (groups(i).matches(row)) return true
-      i += 1
-    }
-    false
-  }
 
   /** One distinct key-column shape of a commit's equality-delete files:
     * field names, full-data-row ordinals and Catalyst types, and the
@@ -171,17 +160,8 @@ private[sources] object GraftChangePairing {
           while (r.next()) {
             val row = r.get()
             probeGroups.foreach { case (names, g) =>
-              if (g.matches(row)) {
-                val t = new Array[Any](g.ordinals.length)
-                var i = 0
-                while (i < t.length) {
-                  t(i) = if (row.isNullAt(g.ordinals(i))) null
-                         else row.get(g.ordinals(i), g.types(i))
-                  i += 1
-                }
-                sets(names).add(
-                  scala.collection.immutable.ArraySeq.unsafeWrapArray(t))
-              }
+              val t = g.tuple(row)
+              if (g.keys.contains(t)) sets(names).add(t)
             }
           }
         } finally r.close()

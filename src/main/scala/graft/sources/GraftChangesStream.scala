@@ -446,7 +446,7 @@ private[sources] final case class GraftChangesReaderFactory(
         val has = inner.next()
         if (has)
           appended.update(slot,
-            if (GraftChangePairing.matches(pairGroups, inner.get())) paired
+            if (OcfSplitReader.EqGroup.anyMatches(pairGroups, inner.get())) paired
             else base)
         has
       }

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.avro._
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
@@ -534,7 +533,8 @@ private[graft] object OcfColumnar {
     }
 }
 
-/** The vectorized split reader: the same block walk as [[OcfSplitReader]],
+/** The vectorized split reader: the block walk of [[OcfBlocks.Cursor]] and
+  * the delete state of [[OcfDeleteState]], as in [[OcfSplitReader]],
   * decoding up to `batchSize` datums per `next()` into reused on-heap
   * vectors. Vector types come from the READER fields; the decode loop runs
   * this file's WIRE PLAN, so the union-branch byte is read exactly when the
@@ -593,72 +593,24 @@ private[graft] final class OcfColumnarSplitReader(
     s"graft-ocf: positional columnar read of ${meta.path} must scan the " +
       s"whole file (got split [$start, $end), aligned=$aligned)")
 
-  private val hPath = new Path(meta.path)
-  private val in = hPath.getFileSystem(conf).open(hPath)
-  private val stopAt: Long = if (aligned) end else end + 16L
-  private val (codec, firstBlockStart) =
-    try {
-      val c = AvroCodecs(meta.codecName)
-      val b = if (aligned) start
-              else if (start == 0L) meta.headerEnd
-              else OcfBlocks.syncScan(in, meta.sync, meta.len, start, end)
-      (c, b)
-    } catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-
-  private val deletedPos: Array[Long] =
-    try OcfSplitReader.loadDeletePositions(deleteFiles, conf)
-    catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
+  private val deletes = OcfDeleteState.load(deleteFiles, eqDeleteFiles,
+    emitPosFiles, emitEqFiles, readerJson, conf)
+  private val deletedPos = deletes.deletedPos
   private var delIdx = 0
   private var rawPos = 0L
-
-  private val eqGroups: Array[OcfSplitReader.EqGroup] =
-    try OcfSplitReader.loadEqualityFilters(eqDeleteFiles, readerJson, conf)
-    catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-
+  private val eqGroups = deletes.eqGroups
   // changes-read state (X110): the NEWLY-deleted ordinals (new minus old)
   // or the commit's new key groups — the row lane's exact derivation
-  private val emitPos: Array[Long] =
-    try {
-      if (emitPosFiles.isEmpty) null
-      else {
-        val fresh = OcfSplitReader.loadDeletePositions(emitPosFiles, conf)
-        if (deletedPos.length == 0) fresh
-        else fresh.filterNot(p =>
-          java.util.Arrays.binarySearch(deletedPos, p) >= 0)
-      }
-    } catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
+  private val emitPos = deletes.emitPos
   private var emitIdx = 0
-  private val emitEqGroups: Array[OcfSplitReader.EqGroup] =
-    try OcfSplitReader.loadEqualityFilters(emitEqFiles, readerJson, conf)
-    catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-  private val changesRead = emitPos != null || emitEqGroups.length > 0
+  private val emitEqGroups = deletes.emitEqGroups
+  private val changesRead = deletes.changesRead
   // a decoded row can be REJECTED (equality-deleted, or not matching the
   // commit's new keys) and its slot reused by the next candidate — putX
   // does not clear a stale null bit, so decode must putNotNull under any
   // mode that rejects decoded rows
   private val slotReuse = eqGroups.length > 0 || emitEqGroups.length > 0
 
-  private var blockStart: Long = firstBlockStart
   private var remaining = 0L
   private var emitted = 0L
   private var bin: AvroBinaryReader = _
@@ -733,11 +685,8 @@ private[graft] final class OcfColumnarSplitReader(
     new ColumnarBatch(vectors ++ constVectors ++
       (if (withPos) Array[ColumnVector](posVector) else Array.empty[ColumnVector]))
 
-  private var blocksVisited = 0L
-  private var bytesFetched = 0L
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
+    blocks.taskMetrics()
 
   override def next(): Boolean = {
     if (emitted >= limit) return false
@@ -752,9 +701,8 @@ private[graft] final class OcfColumnarSplitReader(
     var done = false
     while (n < capacity && emitted < limit && !done) {
       if (remaining == 0L) {
-        if (blockStart < 0L || blockStart >= meta.len || blockStart >= stopAt)
-          done = true
-        else loadBlock()
+        if (blocks.next()) { bin = blocks.block; remaining = blocks.count }
+        else done = true
       }
       if (!done && remaining > 0L) {
         val p = rawPos
@@ -835,6 +783,12 @@ private[graft] final class OcfColumnarSplitReader(
   private val eqExtractors = extractorsFor(eqGroups)
   private val emitExtractors = extractorsFor(emitEqGroups)
   private val pairExtractors = extractorsFor(pairGroups)
+
+  // the data file opens last: everything above that can fail (the delete
+  // state, constant and key-extractor binding) runs first, and the cursor
+  // closes its own stream when its set-up fails — Spark only closes a
+  // reader whose constructor SUCCEEDED
+  private val blocks = new OcfBlocks.Cursor(meta, start, end, aligned, conf)
 
   /** UPDATE pairing (X104): stamp the emitted row's change tag — `pairAlt`
     * when its key tuple probes into a pairing group, `pairBase` otherwise. */
@@ -1334,24 +1288,6 @@ private[graft] final class OcfColumnarSplitReader(
 
   override def close(): Unit = {
     batch.close()
-    in.close()
-  }
-
-  private def loadBlock(): Unit = {
-    val h = OcfBlocks.readBlockHeader(in, meta, blockStart)
-    val body = new Array[Byte](h.size.toInt + Ocf.SyncSize)
-    in.readFully(h.dataStart, body, 0, body.length)
-    blocksVisited += 1
-    bytesFetched += 20L + body.length
-    var i = 0
-    while (i < Ocf.SyncSize) {
-      if (body(h.size.toInt + i) != meta.sync(i))
-        throw new AvroResolutionException(
-          s"OCF sync marker mismatch at ${meta.path}:$blockStart (corrupt block boundary)")
-      i += 1
-    }
-    bin = new AvroBinaryReader(codec.decompress(java.util.Arrays.copyOf(body, h.size.toInt)))
-    remaining = h.count
-    blockStart = h.dataStart + h.size + Ocf.SyncSize
+    blocks.close()
   }
 }

@@ -2116,8 +2116,13 @@ private[graft] final case class OcfScan(
     val shipped = files.iterator.map(m =>
       m.copy(statsJson = None, bloomJson = None, blockIndexJson = None,
         sortedByJson = None)).toIndexedSeq
-    if (countStar) OcfCountReaderFactory(shipped, conf)
-    else if (aggExprs.nonEmpty)
+    // COUNT(*) is the aggregate reader with one COUNT slot over a null
+    // template per file
+    if (countStar) {
+      val template = Array[Any](null)
+      OcfAggReaderFactory(shipped, conf, Array(OcfAggExpr.Count),
+        IndexedSeq.fill(shipped.length)(template))
+    } else if (aggExprs.nonEmpty)
       OcfAggReaderFactory(shipped, conf, aggExprs.toArray,
         aggValues.toIndexedSeq, aggGroupCols.length)
     else {
@@ -2338,14 +2343,15 @@ private[sources] final case class OcfReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OcfSplit]
     val meta = files(p.fileIndex)
+    val consts = OcfSplitReader.appendedValues(meta, partIdx, partTypes, withFilePath)
+    // `_pos` is per-ROW: a trailing slot the reader overwrites before each emit
+    val appended = if (withPos) consts :+ (0L: Any) else consts
     new OcfSplitReader(meta, p.start, p.end, readerJson, wrap,
       conf.value, limit,
-      OcfSplitReader.appendedRow(meta, partIdx, partTypes, withFilePath, withPos),
+      if (appended.isEmpty) null else new GenericInternalRow(appended),
       p.aligned,
       deleteFiles = deletes.getOrElse(p.fileIndex, Nil),
-      // `_pos` slot ordinal in the appended row: after partition values
-      // and (when present) the `_file` constant
-      posSlot = if (withPos) partIdx.length + (if (withFilePath) 1 else 0) else -1,
+      posSlot = if (withPos) consts.length else -1,
       eqDeleteFiles = eqDeletes.getOrElse(p.fileIndex, Nil))
   }
 
@@ -2361,19 +2367,10 @@ private[sources] final case class OcfReaderFactory(
     val plan = OcfColumnar.wirePlanFor(meta.writerSchemaJson, columnarFields.get)
       .getOrElse(throw new IllegalStateException(
         s"columnar lane planned without a wire plan for ${meta.path}"))
-    // appended constants, in readSchema order: required partition values
-    // (the SAME materialization as the row lane's appendedRow), then `_file`
-    val appended = new Array[(org.apache.spark.sql.types.DataType, Any)](
-      partIdx.length + (if (withFilePath) 1 else 0))
-    var k = 0
-    while (k < partIdx.length) {
-      appended(k) = (partTypes(k),
-        OcfSplitReader.partitionValue(meta, partIdx(k), partTypes(k)))
-      k += 1
-    }
-    if (withFilePath)
-      appended(k) = (org.apache.spark.sql.types.StringType,
-        org.apache.spark.unsafe.types.UTF8String.fromString(meta.path))
+    val appendedTypes = partTypes ++
+      (if (withFilePath) Seq(org.apache.spark.sql.types.StringType) else Nil)
+    val appended = appendedTypes.zip(
+      OcfSplitReader.appendedValues(meta, partIdx, partTypes, withFilePath)).toArray
     new OcfColumnarSplitReader(meta, p.start, p.end,
       columnarFields.get, plan, conf.value, limit, p.aligned, appended,
       readerJson = readerJson,
@@ -2383,60 +2380,14 @@ private[sources] final case class OcfReaderFactory(
   }
 }
 
-/** `COUNT(*)` partials: one reader per split, emitting a single row with the
-  * sum of its blocks' row-count varints. Walks block HEADERS only — per
-  * block: one ~20-byte positioned read for the two varints, then a seek past
-  * body + sync. No decompression, no datum decode, no reader-schema
-  * resolution. The only full-chunk read is the one sync scan anchoring a
-  * mid-file split. */
-private[sources] final case class OcfCountReaderFactory(
-    files: IndexedSeq[OcfDataSource.OcfFileMeta], conf: SerializableHadoopConf)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[OcfSplit]
-    new OcfCountReader(files(p.fileIndex), p.start, p.end, conf.value, p.aligned)
-  }
-}
-
-private[graft] final class OcfCountReader(
-    meta: OcfDataSource.OcfFileMeta, start: Long, end: Long, conf: Configuration,
-    aligned: Boolean = false)
-    extends PartitionReader[InternalRow] {
-  private val hPath = new Path(meta.path)
-  private val in: FSDataInputStream = hPath.getFileSystem(conf).open(hPath)
-  private var done = false
-  private var row: InternalRow = _
-
-  private var blocksVisited = 0L
-  private var bytesFetched = 0L
-
-  override def next(): Boolean = {
-    if (done) return false
-    val (total, blocks, bytes) =
-      try OcfBlocks.sumBlockCounts(in, meta, start, end, aligned)
-      catch { case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-      }
-    blocksVisited += blocks
-    bytesFetched += bytes
-    row = new GenericInternalRow(Array[Any](total))
-    done = true
-    true
-  }
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
-
-  override def get(): InternalRow = row
-  override def close(): Unit = in.close()
-}
-
-/** Partials for a pushed COUNT/MIN/MAX mix: one row per split. MIN/MAX are
-  * plan-time constants from the file's header stamp (exact — the sink's
-  * tracker saw every row); COUNT walks block headers like [[OcfCountReader]].
-  * A min/max-only aggregation therefore NEVER OPENS the file. */
+/** Partials for a pushed COUNT/MIN/MAX mix, COUNT(*) included: one row per
+  * split. MIN/MAX are plan-time constants from the file's header stamp
+  * (exact — the sink's tracker saw every row). COUNT sums the row-count
+  * varints of the split's blocks through the cursor's header-only walk:
+  * per block one ~20-byte positioned read, never a body, no decompression,
+  * no datum decode. The only full-chunk read is the one sync scan anchoring
+  * a mid-file split. A min/max-only aggregation therefore NEVER OPENS the
+  * file. */
 private[sources] final case class OcfAggReaderFactory(
     files: IndexedSeq[OcfDataSource.OcfFileMeta], conf: SerializableHadoopConf,
     exprs: Array[OcfAggExpr], values: IndexedSeq[Array[Any]],
@@ -2472,21 +2423,17 @@ private[graft] final class OcfAggReader(
     countSlots: Array[Int], fileValues: Array[Any], aligned: Boolean = false)
     extends PartitionReader[InternalRow] {
 
-  private var in: FSDataInputStream = _
+  private var blocks: OcfBlocks.Cursor = _
   private var done = false
   private var row: InternalRow = _
-  private var blocksVisited = 0L
-  private var bytesFetched = 0L
 
   override def next(): Boolean = {
     if (done) return false
     val vals = fileValues.clone()
     if (countSlots.nonEmpty) {
-      val hPath = new Path(meta.path)
-      in = hPath.getFileSystem(conf).open(hPath)
-      val (total, blocks, bytes) = OcfBlocks.sumBlockCounts(in, meta, start, end, aligned)
-      blocksVisited += blocks
-      bytesFetched += bytes
+      blocks = new OcfBlocks.Cursor(meta, start, end, aligned, conf, headersOnly = true)
+      var total = 0L
+      while (blocks.next()) total += blocks.count
       countSlots.foreach(s => vals(s) = total)
     }
     row = new GenericInternalRow(vals)
@@ -2495,18 +2442,17 @@ private[graft] final class OcfAggReader(
   }
 
   override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
+    if (blocks == null) Array.empty else blocks.taskMetrics()
 
   override def get(): InternalRow = row
-  override def close(): Unit = if (in != null) in.close()
+  override def close(): Unit = if (blocks != null) blocks.close()
 }
 
 /** Decodes the blocks of one split. The file header was resolved at planning
   * and arrives via the factory's file table — no split ever reads bytes
-  * before its own range. All file access is positioned (`readFully(pos, …)`): two
-  * preads per ~64 KB block (header varints, then body + trailing sync in one
-  * read), plus the chunked sync scan for a non-zero start offset.
+  * before its own range. The block walk is [[OcfBlocks.Cursor]]'s: two
+  * positioned reads per ~64 KB block, plus the chunked sync scan for a
+  * non-zero start offset.
   * Per-executor schema-parse and compiled-reader caches
   * ([[graft.spark.AvroRuntime]]) are shared across splits, so a thousand
   * splits of one file compile the writer→reader resolution once. */
@@ -2514,9 +2460,9 @@ private[graft] object OcfSplitReader {
   /** One partition value as its Catalyst representation under the column's
     * READ TYPE (Int for int/date columns, UTF8String for strings, null for
     * the hive null dir) — the SINGLE materialization point
-    * ([[OcfPartitions.castPartValue]]), shared by the per-split partition
-    * row, the keyed-split partition keys, and the grouped-aggregate group
-    * values so they can never diverge.
+    * ([[OcfPartitions.castPartValue]]), shared by the per-split appended
+    * constants, the keyed-split partition keys, and the grouped-aggregate
+    * group values so they can never diverge.
     *
     * Bounds guard: a streaming discovery log persisted BEFORE partition
     * support has entries with empty value arrays — degrade to null
@@ -2526,61 +2472,242 @@ private[graft] object OcfSplitReader {
     if (i >= meta.partitionValues.length || meta.partitionValues(i) == null) null
     else OcfPartitions.castPartValue(meta.partitionValues(i), dt)
 
-  /** The per-file CONSTANT row of required partition values, or null when
-    * unpartitioned — one allocation per split, joined onto every decoded
-    * row. `partTypes` aligns with `partIdx` (the REQUIRED columns). */
-  def partitionRow(meta: OcfDataSource.OcfFileMeta, partIdx: Array[Int],
-                   partTypes: Seq[org.apache.spark.sql.types.DataType]): InternalRow =
-    if (partIdx.isEmpty) null
-    else new GenericInternalRow(partIdx.indices.toArray.map(k =>
-      partitionValue(meta, partIdx(k), partTypes(k))))
-
-  /** The per-file constant row joined onto every decoded data row: required
-    * partition values, then (when asked) the `_file` metadata value — the
-    * file's path as a string. */
-  def appendedRow(meta: OcfDataSource.OcfFileMeta, partIdx: Array[Int],
-                  partTypes: Seq[org.apache.spark.sql.types.DataType],
-                  withFilePath: Boolean, withPos: Boolean = false): InternalRow = {
-    if (!withFilePath && !withPos) return partitionRow(meta, partIdx, partTypes)
-    val vals = new Array[Any](partIdx.length + (if (withFilePath) 1 else 0) +
-      (if (withPos) 1 else 0))
+  /** The per-split CONSTANTS appended after the data columns, in readSchema
+    * order: required partition values (`partTypes` aligns with `partIdx`),
+    * then, when asked, the `_file` metadata value — the file's path. One
+    * construction for both lanes: the row lane joins them as a row onto
+    * every decoded row, the columnar lane zips them with their types into
+    * constant vectors. */
+  def appendedValues(meta: OcfDataSource.OcfFileMeta, partIdx: Array[Int],
+                     partTypes: Seq[org.apache.spark.sql.types.DataType],
+                     withFilePath: Boolean = false): Array[Any] = {
+    val vals = new Array[Any](partIdx.length + (if (withFilePath) 1 else 0))
     var k = 0
     while (k < partIdx.length) {
       vals(k) = partitionValue(meta, partIdx(k), partTypes(k)); k += 1
     }
-    if (withFilePath) {
+    if (withFilePath)
       vals(k) = org.apache.spark.unsafe.types.UTF8String.fromString(meta.path)
-      k += 1
+    vals
+  }
+
+  /** One equality-delete key group (X94): delete files sharing a key-column
+    * set load into one hash set of key tuples; `matches` probes a decoded
+    * data row. Tuples are `immutable.ArraySeq`s of Catalyst values
+    * (UTF8String/Long/...), which hash/compare element-wise. */
+  final class EqGroup(val ordinals: Array[Int],
+                      val types: Array[org.apache.spark.sql.types.DataType],
+                      val keys: java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]) {
+    /** The key tuple of a decoded row, in this group's column order. */
+    def tuple(row: InternalRow): scala.collection.immutable.ArraySeq[Any] =
+      EqGroup.tuple(row, ordinals, types)
+    def matches(row: InternalRow): Boolean = keys.contains(tuple(row))
+  }
+
+  object EqGroup {
+    /** The tuple of `row`'s values at `ordinals` under `types`: the one
+      * builder of key tuples, for key files and probed rows alike. */
+    def tuple(row: InternalRow, ordinals: Array[Int],
+              types: Array[org.apache.spark.sql.types.DataType])
+        : scala.collection.immutable.ArraySeq[Any] = {
+      val t = new Array[Any](ordinals.length)
+      var i = 0
+      while (i < ordinals.length) {
+        t(i) = if (row.isNullAt(ordinals(i))) null else row.get(ordinals(i), types(i))
+        i += 1
+      }
+      scala.collection.immutable.ArraySeq.unsafeWrapArray(t)
     }
-    // the `_pos` slot is per-ROW: the reader overwrites it before each emit
-    if (withPos) vals(k) = 0L
-    new GenericInternalRow(vals)
+
+    /** Does any group hold this row's key tuple? */
+    def anyMatches(groups: Array[EqGroup], row: InternalRow): Boolean = {
+      var i = 0
+      while (i < groups.length) {
+        if (groups(i).matches(row)) return true
+        i += 1
+      }
+      false
+    }
+  }
+}
+
+private[graft] final class OcfSplitReader(
+    meta: OcfDataSource.OcfFileMeta, start: Long, end: Long,
+    readerJson: String, wrap: Boolean, conf: Configuration,
+    limit: Long = Long.MaxValue, partRow: InternalRow = null,
+    aligned: Boolean = false,
+    deleteFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
+    posSlot: Int = -1,
+    eqDeleteFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
+    // CHANGES read (X95): invert the filter — emit ONLY the rows a commit
+    // deleted. `emitOnlyPosFiles`: emit rows whose ordinal is in these
+    // position-delete files but NOT in `deleteFiles` (the older set —
+    // re-deletes of dead rows are not changes). `emitOnlyEqFiles`: emit
+    // rows SURVIVING deleteFiles/eqDeleteFiles whose key matches these
+    // equality-delete files (the commit's new keys). At most one of the
+    // two per reader; both empty = normal read.
+    emitOnlyPosFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
+    emitOnlyEqFiles: Seq[OcfDataSource.OcfFileMeta] = Nil)
+    extends PartitionReader[InternalRow] {
+
+  // equality deletes (X94) filter by decoded KEY — meaningless on a
+  // wrapped bare-datum read (no record fields to bind)
+  require((eqDeleteFiles.isEmpty && emitOnlyEqFiles.isEmpty) || !wrap,
+    s"graft-ocf: equality deletes need a record read of ${meta.path}")
+  require(emitOnlyPosFiles.isEmpty || emitOnlyEqFiles.isEmpty,
+    "graft-ocf: one changes-read mode per reader")
+
+  // position semantics (deletes to apply, or `_pos` to emit) require the
+  // split to BE the file: ordinals count raw datums from the first block
+  require((deleteFiles.isEmpty && posSlot < 0 && emitOnlyPosFiles.isEmpty) ||
+      (start == 0L && !aligned),
+    s"graft-ocf: positional read of ${meta.path} must scan the whole file " +
+      s"(got split [$start, $end), aligned=$aligned)")
+
+  // everything that can fail (writer→reader resolution, the delete state)
+  // runs before the data file opens, and the cursor closes its own stream
+  // when its set-up fails: Spark only closes a reader whose constructor
+  // SUCCEEDED
+  private val compiled = AvroRuntime.catalystReader(meta.writerSchemaJson, readerJson)
+  private val deletes = OcfDeleteState.load(deleteFiles, eqDeleteFiles,
+    emitOnlyPosFiles, emitOnlyEqFiles, readerJson, conf)
+  private val blocks = new OcfBlocks.Cursor(meta, start, end, aligned, conf)
+
+  private var remaining = 0L
+  private var emitted = 0L
+  private var bin: AvroBinaryReader = _
+  private var row: InternalRow = _
+
+  // position-delete application (X87): sorted distinct ordinals to skip;
+  // the scan is sequential, so one monotone index walks them in O(1)/row
+  private val deletedPos = deletes.deletedPos
+  private var delIdx = 0
+  private var rawPos = 0L
+  // equality-delete application (X94): key-group hash sets, probed per
+  // decoded row — stateless, so splits stay legal under equality deletes
+  private val eqGroups = deletes.eqGroups
+  // changes-read state (X95): the NEWLY-deleted ordinals, or the new key
+  // groups to match
+  private val emitPos = deletes.emitPos
+  private var emitIdx = 0
+  private val emitEqGroups = deletes.emitEqGroups
+  private val changesRead = deletes.changesRead
+
+  // reused per row: joins the decoded data row with the per-file constant
+  // partition-value row (Spark copies rows it retains, the standard
+  // file-source appended-partition-columns contract)
+  private val joined =
+    if (partRow == null) null
+    else new org.apache.spark.sql.catalyst.expressions.JoinedRow()
+
+  override def next(): Boolean = {
+    // pushed-down limit: a split never decodes (or loads) past `limit` rows,
+    // so limit(10) stops after the first block regardless of split size
+    // (counted over SURVIVING rows — deletes are applied first)
+    if (emitted >= limit) return false
+    while (true) {
+      while (remaining == 0L) {
+        if (!blocks.next()) return false
+        bin = blocks.block
+        remaining = blocks.count
+      }
+      val v = compiled(bin)
+      remaining -= 1L
+      val p = rawPos
+      rawPos += 1L
+      val keep =
+        if (delIdx < deletedPos.length && deletedPos(delIdx) == p) {
+          delIdx += 1 // already-dead ordinal: decoded (stream must
+          false       // advance), dropped in EVERY mode
+        } else if (changesRead) {
+          // X95: emit ONLY what the commit newly deleted
+          if (emitPos != null) {
+            while (emitIdx < emitPos.length && emitPos(emitIdx) < p) emitIdx += 1
+            // a newly position-deleted ordinal whose row was ALREADY
+            // equality-deleted (skipEq = the pre-commit state) is a
+            // re-delete of a dead row, not a change
+            emitIdx < emitPos.length && emitPos(emitIdx) == p &&
+              (eqGroups.length == 0 ||
+                !OcfSplitReader.EqGroup.anyMatches(eqGroups, v.asInstanceOf[InternalRow]))
+          } else {
+            val data = v.asInstanceOf[InternalRow]
+            !OcfSplitReader.EqGroup.anyMatches(eqGroups, data) &&
+              OcfSplitReader.EqGroup.anyMatches(emitEqGroups, data)
+          }
+        } else if (eqGroups.length > 0 &&
+            OcfSplitReader.EqGroup.anyMatches(eqGroups, v.asInstanceOf[InternalRow])) {
+          false // equality-deleted key: decoded, dropped
+        } else true
+      if (keep) {
+        if (posSlot >= 0)
+          partRow.asInstanceOf[GenericInternalRow].update(posSlot, p)
+        val data =
+          if (wrap) new GenericInternalRow(Array[Any](v)) else v.asInstanceOf[InternalRow]
+        row = if (joined == null) data else joined(data, partRow)
+        emitted += 1L
+        return true
+      }
+    }
+    false // unreachable
+  }
+
+  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+    blocks.taskMetrics()
+
+  override def get(): InternalRow = row
+  override def close(): Unit = blocks.close()
+}
+
+/** The delete state of one data file's split, built once before the data
+  * file opens: the sorted, distinct deleted ordinals (`deletedPos`), the
+  * equality-delete key groups (`eqGroups`) and, for a changes read, the
+  * newly deleted ordinals (`emitPos`, new minus old; null when the read is
+  * not a changes read by position) or the commit's new key groups
+  * (`emitEqGroups`). Both decode lanes take it. Delete and key files walk
+  * through their own [[OcfBlocks.Cursor]]s, which check every sync marker
+  * and close on failure; their reads never count toward the split's scan
+  * metrics. */
+private[graft] final class OcfDeleteState(
+    val deletedPos: Array[Long],
+    val eqGroups: Array[OcfSplitReader.EqGroup],
+    val emitPos: Array[Long],
+    val emitEqGroups: Array[OcfSplitReader.EqGroup]) {
+  val changesRead: Boolean = emitPos != null || emitEqGroups.length > 0
+}
+
+private[graft] object OcfDeleteState {
+  def load(deleteFiles: Seq[OcfDataSource.OcfFileMeta],
+           eqDeleteFiles: Seq[OcfDataSource.OcfFileMeta],
+           emitPosFiles: Seq[OcfDataSource.OcfFileMeta],
+           emitEqFiles: Seq[OcfDataSource.OcfFileMeta],
+           readerJson: String, conf: Configuration): OcfDeleteState = {
+    val deleted = positions(deleteFiles, conf)
+    val emitPos =
+      if (emitPosFiles.isEmpty) null
+      else {
+        val fresh = positions(emitPosFiles, conf)
+        if (deleted.length == 0) fresh
+        else fresh.filterNot(p => java.util.Arrays.binarySearch(deleted, p) >= 0)
+      }
+    new OcfDeleteState(deleted, equalityGroups(eqDeleteFiles, readerJson, conf),
+      emitPos, equalityGroups(emitEqFiles, readerJson, conf))
   }
 
   /** Load, merge, sort and dedup the deleted ordinals of ONE data file from
     * its position-delete files — small (point/sparse deletes), read once
     * per task. Dedup matters: a re-deleted position would desync the
     * reader's single-pass skip walk. */
-  def loadDeletePositions(deleteFiles: Seq[OcfDataSource.OcfFileMeta],
-                          conf: Configuration): Array[Long] = {
+  private def positions(deleteFiles: Seq[OcfDataSource.OcfFileMeta],
+                        conf: Configuration): Array[Long] = {
     if (deleteFiles.isEmpty) return Array.emptyLongArray
     val buf = scala.collection.mutable.ArrayBuilder.make[Long]
     deleteFiles.foreach { m =>
-      val p = new Path(m.path)
-      val in = p.getFileSystem(conf).open(p)
-      try {
-        val codec = AvroCodecs(m.codecName)
-        var bs = m.headerEnd
-        while (bs >= 0 && bs < m.len) {
-          val h = OcfBlocks.readBlockHeader(in, m, bs)
-          val body = new Array[Byte](h.size.toInt)
-          in.readFully(h.dataStart, body, 0, body.length)
-          val bin = new AvroBinaryReader(codec.decompress(body))
-          var k = 0L
-          while (k < h.count) { buf += bin.readLong(); k += 1 }
-          bs = h.dataStart + h.size + Ocf.SyncSize
-        }
-      } finally in.close()
+      val blocks = new OcfBlocks.Cursor(m, 0L, m.len, aligned = false, conf)
+      try while (blocks.next()) {
+        val bin = blocks.block
+        var k = 0L
+        while (k < blocks.count) { buf += bin.readLong(); k += 1 }
+      } finally blocks.close()
     }
     val arr = buf.result()
     java.util.Arrays.sort(arr)
@@ -2593,34 +2720,15 @@ private[graft] object OcfSplitReader {
     if (n == arr.length) arr else java.util.Arrays.copyOf(arr, n)
   }
 
-  /** One equality-delete key group (X94): delete files sharing a key-column
-    * set load into one hash set of key tuples; `matches` probes a decoded
-    * data row. Tuples are `immutable.ArraySeq`s of Catalyst values
-    * (UTF8String/Long/...), which hash/compare element-wise. */
-  final class EqGroup(val ordinals: Array[Int],
-                      val types: Array[org.apache.spark.sql.types.DataType],
-                      val keys: java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]) {
-    def matches(row: InternalRow): Boolean = {
-      val t = new Array[Any](ordinals.length)
-      var i = 0
-      while (i < ordinals.length) {
-        t(i) = if (row.isNullAt(ordinals(i))) null
-               else row.get(ordinals(i), types(i))
-        i += 1
-      }
-      keys.contains(scala.collection.immutable.ArraySeq.unsafeWrapArray(t))
-    }
-  }
-
   /** Load ONE data file's applicable equality-delete files into key-group
     * filters. Each delete file's writer schema IS its key record; the keys
     * decode THROUGH resolution against the data reader's matching fields,
     * so a widened table column (int -> long) compares in the widened
     * domain. The scan's pruning keeps key columns readable, so every key
     * name binds to an ordinal of the decoded data row. */
-  def loadEqualityFilters(eqFiles: Seq[OcfDataSource.OcfFileMeta],
-                          readerJson: String,
-                          conf: Configuration): Array[EqGroup] = {
+  private def equalityGroups(eqFiles: Seq[OcfDataSource.OcfFileMeta],
+                             readerJson: String,
+                             conf: Configuration): Array[OcfSplitReader.EqGroup] = {
     if (eqFiles.isEmpty) return Array.empty
     val dataRec = graft.avro.AvroSchemaParser.parse(readerJson) match {
       case r: graft.avro.ARecord => r
@@ -2679,266 +2787,116 @@ private[graft] object OcfSplitReader {
           g.sets.foreach(u.addAll)
           u
         }
-      new EqGroup(g.ords, g.tps, keys)
+      new OcfSplitReader.EqGroup(g.ords, g.tps, keys)
     }.toArray
   }
 }
 
-private[graft] final class OcfSplitReader(
-    meta: OcfDataSource.OcfFileMeta, start: Long, end: Long,
-    readerJson: String, wrap: Boolean, conf: Configuration,
-    limit: Long = Long.MaxValue, partRow: InternalRow = null,
-    aligned: Boolean = false,
-    deleteFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
-    posSlot: Int = -1,
-    eqDeleteFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
-    // CHANGES read (X95): invert the filter — emit ONLY the rows a commit
-    // deleted. `emitOnlyPosFiles`: emit rows whose ordinal is in these
-    // position-delete files but NOT in `deleteFiles` (the older set —
-    // re-deletes of dead rows are not changes). `emitOnlyEqFiles`: emit
-    // rows SURVIVING deleteFiles/eqDeleteFiles whose key matches these
-    // equality-delete files (the commit's new keys). At most one of the
-    // two per reader; both empty = normal read.
-    emitOnlyPosFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
-    emitOnlyEqFiles: Seq[OcfDataSource.OcfFileMeta] = Nil)
-    extends PartitionReader[InternalRow] {
-
-  // equality deletes (X94) filter by decoded KEY — meaningless on a
-  // wrapped bare-datum read (no record fields to bind)
-  require((eqDeleteFiles.isEmpty && emitOnlyEqFiles.isEmpty) || !wrap,
-    s"graft-ocf: equality deletes need a record read of ${meta.path}")
-  require(emitOnlyPosFiles.isEmpty || emitOnlyEqFiles.isEmpty,
-    "graft-ocf: one changes-read mode per reader")
-
-  // position semantics (deletes to apply, or `_pos` to emit) require the
-  // split to BE the file: ordinals count raw datums from the first block
-  require((deleteFiles.isEmpty && posSlot < 0 && emitOnlyPosFiles.isEmpty) ||
-      (start == 0L && !aligned),
-    s"graft-ocf: positional read of ${meta.path} must scan the whole file " +
-      s"(got split [$start, $end), aligned=$aligned)")
-
-  private val hPath = new Path(meta.path)
-  private val in: FSDataInputStream = hPath.getFileSystem(conf).open(hPath)
-  // aligned splits carry exact block-boundary offsets from the file's block
-  // index: anchor at `start` directly (no sync scan) and stop at `end`
-  // exactly; plain splits own the blocks whose introducing sync STARTS in
-  // [start, end), hence the +16 grace on the stop bound
-  private val stopAt: Long = if (aligned) end else end + 16L
-  // post-open init can throw (unknown codec, writer→reader resolution
-  // failure, I/O during the sync scan); Spark only calls close() on a reader
-  // whose constructor SUCCEEDED, so close the stream before rethrowing
-  private val (codec, compiled, firstBlockStart) =
-    try {
-      val c = AvroCodecs(meta.codecName)
-      val r = AvroRuntime.catalystReader(meta.writerSchemaJson, readerJson)
-      val b = if (aligned) start
-              else if (start == 0L) meta.headerEnd
-              else OcfBlocks.syncScan(in, meta.sync, meta.len, start, end)
-      (c, r, b)
-    } catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-
-  // offset of the next block's count varint (always just past a sync
-  // marker), or -1 when this split has no further anchored block
-  private var blockStart: Long = firstBlockStart
-  private var remaining = 0L
-  private var emitted = 0L
-  private var bin: AvroBinaryReader = _
-  private var row: InternalRow = _
-
-  // position-delete application (X87): sorted distinct ordinals to skip;
-  // the scan is sequential, so one monotone index walks them in O(1)/row
-  private val deletedPos: Array[Long] =
-    try OcfSplitReader.loadDeletePositions(deleteFiles, conf)
-    catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-  private var delIdx = 0
-  private var rawPos = 0L
-
-  // equality-delete application (X94): key-group hash sets, probed per
-  // decoded row — stateless, so splits stay legal under equality deletes
-  private val eqGroups: Array[OcfSplitReader.EqGroup] =
-    try OcfSplitReader.loadEqualityFilters(eqDeleteFiles, readerJson, conf)
-    catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-
-  private def equalityDeleted(data: InternalRow): Boolean = {
-    var i = 0
-    while (i < eqGroups.length) {
-      if (eqGroups(i).matches(data)) return true
-      i += 1
-    }
-    false
-  }
-
-  // changes-read state (X95): the NEWLY-deleted ordinals (new minus old),
-  // or the new key groups to match
-  private val emitPos: Array[Long] =
-    try {
-      if (emitOnlyPosFiles.isEmpty) null
-      else {
-        val fresh = OcfSplitReader.loadDeletePositions(emitOnlyPosFiles, conf)
-        if (deletedPos.length == 0) fresh
-        else fresh.filterNot(p =>
-          java.util.Arrays.binarySearch(deletedPos, p) >= 0)
-      }
-    } catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-  private var emitIdx = 0
-  private val emitEqGroups: Array[OcfSplitReader.EqGroup] =
-    try OcfSplitReader.loadEqualityFilters(emitOnlyEqFiles, readerJson, conf)
-    catch {
-      case t: Throwable =>
-        try in.close() catch { case s: Throwable => t.addSuppressed(s) }
-        throw t
-    }
-  private val changesRead = emitPos != null || emitEqGroups.length > 0
-
-  private def matchesNewKeys(data: InternalRow): Boolean = {
-    var i = 0
-    while (i < emitEqGroups.length) {
-      if (emitEqGroups(i).matches(data)) return true
-      i += 1
-    }
-    false
-  }
-
-  // reused per row: joins the decoded data row with the per-file constant
-  // partition-value row (Spark copies rows it retains, the standard
-  // file-source appended-partition-columns contract)
-  private val joined =
-    if (partRow == null) null
-    else new org.apache.spark.sql.catalyst.expressions.JoinedRow()
-
-  override def next(): Boolean = {
-    // pushed-down limit: a split never decodes (or loads) past `limit` rows,
-    // so limit(10) stops after the first block regardless of split size
-    // (counted over SURVIVING rows — deletes are applied first)
-    if (emitted >= limit) return false
-    while (true) {
-      while (remaining == 0L) {
-        if (blockStart < 0L || blockStart >= meta.len || blockStart >= stopAt)
-          return false
-        loadBlock()
-      }
-      val v = compiled(bin)
-      remaining -= 1L
-      val p = rawPos
-      rawPos += 1L
-      val keep =
-        if (delIdx < deletedPos.length && deletedPos(delIdx) == p) {
-          delIdx += 1 // already-dead ordinal: decoded (stream must
-          false       // advance), dropped in EVERY mode
-        } else if (changesRead) {
-          // X95: emit ONLY what the commit newly deleted
-          if (emitPos != null) {
-            while (emitIdx < emitPos.length && emitPos(emitIdx) < p) emitIdx += 1
-            // a newly position-deleted ordinal whose row was ALREADY
-            // equality-deleted (skipEq = the pre-commit state) is a
-            // re-delete of a dead row, not a change
-            emitIdx < emitPos.length && emitPos(emitIdx) == p &&
-              (eqGroups.length == 0 ||
-                !equalityDeleted(v.asInstanceOf[InternalRow]))
-          } else {
-            val data = v.asInstanceOf[InternalRow]
-            !equalityDeleted(data) && matchesNewKeys(data)
-          }
-        } else if (eqGroups.length > 0 &&
-            equalityDeleted(v.asInstanceOf[InternalRow])) {
-          false // equality-deleted key: decoded, dropped
-        } else true
-      if (keep) {
-        if (posSlot >= 0)
-          partRow.asInstanceOf[GenericInternalRow].update(posSlot, p)
-        val data =
-          if (wrap) new GenericInternalRow(Array[Any](v)) else v.asInstanceOf[InternalRow]
-        row = if (joined == null) data else joined(data, partRow)
-        emitted += 1L
-        return true
-      }
-    }
-    false // unreachable
-  }
-
-  private var blocksVisited = 0L
-  private var bytesFetched = 0L
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    Array(OcfScanTaskMetric("ocfBlocksRead", blocksVisited),
-      OcfScanTaskMetric("ocfBytesRead", bytesFetched))
-
-  override def get(): InternalRow = row
-  override def close(): Unit = in.close()
-
-  private def loadBlock(): Unit = {
-    val h = OcfBlocks.readBlockHeader(in, meta, blockStart)
-    val body = new Array[Byte](h.size.toInt + Ocf.SyncSize)
-    in.readFully(h.dataStart, body, 0, body.length)
-    blocksVisited += 1
-    bytesFetched += 20L + body.length // header pread + body/sync read
-    var i = 0
-    while (i < Ocf.SyncSize) {
-      if (body(h.size.toInt + i) != meta.sync(i))
-        throw new AvroResolutionException(
-          s"OCF sync marker mismatch at ${meta.path}:$blockStart (corrupt block boundary)")
-      i += 1
-    }
-    bin = new AvroBinaryReader(codec.decompress(java.util.Arrays.copyOf(body, h.size.toInt)))
-    remaining = h.count
-    blockStart = h.dataStart + h.size + Ocf.SyncSize
-  }
-}
-
-/** Block-framing primitives shared by the decoding split reader and the
-  * header-walking count reader. */
+/** The one walk over the blocks of an OCF file: every graft-ocf reader of
+  * block data goes through [[OcfBlocks.Cursor]] —
+  *  - [[OcfSplitReader]], the row lane (block walk over one split);
+  *  - [[OcfColumnarSplitReader]], the columnar lane (block walk over one
+  *    split);
+  *  - [[OcfAggReader]]'s COUNT partial, behind COUNT(*) and the pushed
+  *    aggregate mix (header-only walk over one split);
+  *  - [[OcfDeleteState]]'s position-delete loader (block walk over a
+  *    whole delete file);
+  *  - [[OcfEqScope]]'s key-row walk, behind the equality-delete key sets and
+  *    key summaries and the change feed's pairing keys (block walk over a
+  *    whole key or data file). */
 private[sources] object OcfBlocks {
 
-  final case class BlockHeader(count: Long, size: Long, dataStart: Long)
+  private final case class BlockHeader(count: Long, size: Long, dataStart: Long)
 
-  /** Sum the row-count varints of every block this split owns — the shared
-    * header-only walk behind COUNT(*) pushdown (no body read, no codec
-    * work). Returns (rowTotal, blocksVisited, bytesFetched). */
-  def sumBlockCounts(in: FSDataInputStream, meta: OcfDataSource.OcfFileMeta,
-                     start: Long, end: Long,
-                     aligned: Boolean = false): (Long, Long, Long) = {
-    var total = 0L
-    var blocks = 0L
-    var bytes = 0L
-    // aligned splits carry exact block boundaries (block-index planning):
-    // anchor at start directly and stop at end exactly — a sync scan from a
-    // nonzero aligned start would SKIP the first owned block, and the +16
-    // grace would double-count the next split's first block
-    val stopAt = if (aligned) end else end + 16L
-    var blockStart =
+  /** One split's walk over the blocks of one file. It opens the file,
+    * anchors the split, stops at its bound, reads each block's header and
+    * (unless `headersOnly`) its body and trailing sync marker in one
+    * positioned read, checks the marker and decompresses the body. Each
+    * `next()` moves to the next owned block: `count` is its row count and,
+    * in a block walk, `block` reads its decompressed datums.
+    *
+    * `blocksRead`/`bytesRead` are the scan's task metrics: 20 bytes per
+    * header pread, plus body and sync in a block walk. Any step after the
+    * file opens that throws closes the stream before rethrowing, so a
+    * caller whose own construction fails leaks nothing; `close()` is
+    * idempotent. */
+  final class Cursor(meta: OcfDataSource.OcfFileMeta, start: Long, end: Long,
+                     aligned: Boolean, conf: Configuration,
+                     headersOnly: Boolean = false) extends java.io.Closeable {
+    // the codec resolves before the file opens: an unknown codec leaks nothing
+    private val codec: AvroCodec = if (headersOnly) null else AvroCodecs(meta.codecName)
+    private val in: FSDataInputStream = {
+      val p = new Path(meta.path)
+      p.getFileSystem(conf).open(p)
+    }
+    private var closed = false
+    // aligned splits carry exact block boundaries from the file's block
+    // index: anchor at `start` directly and stop at `end` exactly — a sync
+    // scan from a nonzero aligned start would SKIP the first owned block,
+    // and the grace would take the next split's first block. Plain splits
+    // own the blocks whose introducing sync STARTS in [start, end), hence
+    // the grace of one marker on the stop bound.
+    private val stopAt: Long = if (aligned) end else end + Ocf.SyncSize
+    // offset of the next block's count varint (always just past a sync
+    // marker), or -1 when this split has no further anchored block
+    private var blockStart: Long = guarded {
       if (aligned) start
       else if (start == 0L) meta.headerEnd
       else syncScan(in, meta.sync, meta.len, start, end)
-    while (blockStart >= 0L && blockStart < meta.len && blockStart < stopAt) {
-      val h = readBlockHeader(in, meta, blockStart)
-      total += h.count
-      blocks += 1
-      bytes += 20L // the header pread; bodies are never fetched
-      blockStart = h.dataStart + h.size + Ocf.SyncSize
     }
-    (total, blocks, bytes)
+
+    /** Row count of the current block. */
+    var count = 0L
+    /** The current block's decompressed datums (block walk only). */
+    var block: AvroBinaryReader = _
+    var blocksRead = 0L
+    var bytesRead = 0L
+
+    /** Move to the next block this split owns; false past the last. */
+    def next(): Boolean =
+      if (blockStart < 0L || blockStart >= meta.len || blockStart >= stopAt) false
+      else guarded {
+        val h = readBlockHeader(in, meta, blockStart)
+        blocksRead += 1
+        if (headersOnly) bytesRead += 20L // the header pread; bodies are never fetched
+        else {
+          val size = h.size.toInt
+          val body = new Array[Byte](size + Ocf.SyncSize)
+          in.readFully(h.dataStart, body, 0, body.length)
+          bytesRead += 20L + body.length // header pread + body/sync read
+          var i = 0
+          while (i < Ocf.SyncSize) {
+            if (body(size + i) != meta.sync(i))
+              throw new AvroResolutionException(
+                s"OCF sync marker mismatch at ${meta.path}:$blockStart (corrupt block boundary)")
+            i += 1
+          }
+          block = new AvroBinaryReader(codec.decompress(java.util.Arrays.copyOf(body, size)))
+        }
+        count = h.count
+        blockStart = h.dataStart + h.size + Ocf.SyncSize
+        true
+      }
+
+    def taskMetrics(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
+      Array(OcfScanTaskMetric("ocfBlocksRead", blocksRead),
+        OcfScanTaskMetric("ocfBytesRead", bytesRead))
+
+    override def close(): Unit = if (!closed) { closed = true; in.close() }
+
+    private def guarded[T](step: => T): T =
+      try step
+      catch {
+        case t: Throwable =>
+          try close() catch { case s: Throwable => t.addSuppressed(s) }
+          throw t
+      }
   }
 
   /** Parse the two block varints (row count, compressed size) from a small
     * positioned read; ≤20 bytes. */
-  def readBlockHeader(in: FSDataInputStream, meta: OcfDataSource.OcfFileMeta,
-                      blockStart: Long): BlockHeader = {
+  private def readBlockHeader(in: FSDataInputStream, meta: OcfDataSource.OcfFileMeta,
+                              blockStart: Long): BlockHeader = {
     val hn = math.min(20L, meta.len - blockStart).toInt
     val hbuf = new Array[Byte](hn)
     in.readFully(blockStart, hbuf, 0, hn)
@@ -2955,8 +2913,8 @@ private[sources] object OcfBlocks {
     * `m < end`, reading the file in 64 KB chunks with a 15-byte overlap
     * so a marker spanning a chunk boundary is still seen. Returns the block
     * anchor `m + 16`, or -1 if this split owns no block. */
-  def syncScan(in: FSDataInputStream, sync: Array[Byte], fileLen: Long,
-               from: Long, end: Long): Long = {
+  private def syncScan(in: FSDataInputStream, sync: Array[Byte], fileLen: Long,
+                       from: Long, end: Long): Long = {
     val first = sync(0)
     val chunk = 1 << 16
     val buf = new Array[Byte](chunk + Ocf.SyncSize - 1)

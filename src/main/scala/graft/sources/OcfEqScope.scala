@@ -115,29 +115,20 @@ private[sources] object OcfEqScope {
       256, MaxKeySetTuples, s => s.size.toLong.max(1L))
 
   /** Decode every key datum of an equality-delete file through the runtime
-    * reader (writer -> `eqReaderJson` resolution) — the one block walk
-    * shared by the key-set and summary loaders. */
+    * reader (writer -> `eqReaderJson` resolution) — the key-set and summary
+    * loaders' walk over the file's blocks through [[OcfBlocks.Cursor]]. */
   private def foreachKeyRow(m: OcfDataSource.OcfFileMeta, eqReaderJson: String,
                             conf: Configuration)(f: InternalRow => Unit): Unit = {
     val compiled = graft.spark.AvroRuntime.catalystReader(m.writerSchemaJson, eqReaderJson)
-    val p = new Path(m.path)
-    val in = p.getFileSystem(conf).open(p)
-    try {
-      val codec = AvroCodecs(m.codecName)
-      var bs = m.headerEnd
-      while (bs >= 0 && bs < m.len) {
-        val h = OcfBlocks.readBlockHeader(in, m, bs)
-        val body = new Array[Byte](h.size.toInt)
-        in.readFully(h.dataStart, body, 0, body.length)
-        val bin = new AvroBinaryReader(codec.decompress(body))
-        var k = 0L
-        while (k < h.count) {
-          f(compiled(bin).asInstanceOf[InternalRow])
-          k += 1L
-        }
-        bs = h.dataStart + h.size + Ocf.SyncSize
+    val blocks = new OcfBlocks.Cursor(m, 0L, m.len, aligned = false, conf)
+    try while (blocks.next()) {
+      val bin = blocks.block
+      var k = 0L
+      while (k < blocks.count) {
+        f(compiled(bin).asInstanceOf[InternalRow])
+        k += 1L
       }
-    } finally in.close()
+    } finally blocks.close()
   }
 
   /** The decoded key-tuple set of one delete file under one resolved
@@ -152,14 +143,9 @@ private[sources] object OcfEqScope {
       case Some(s) => s
       case None =>
         val s = new java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]()
+        val ordinals = Array.range(0, types.length)
         foreachKeyRow(m, eqReaderJson, conf) { kr =>
-          val t = new Array[Any](types.length)
-          var i = 0
-          while (i < t.length) {
-            t(i) = if (kr.isNullAt(i)) null else kr.get(i, types(i))
-            i += 1
-          }
-          s.add(scala.collection.immutable.ArraySeq.unsafeWrapArray(t))
+          s.add(OcfSplitReader.EqGroup.tuple(kr, ordinals, types))
         }
         keySets.put(k, s)
         s

@@ -3,6 +3,7 @@ package graft.sources
 import graft.avro.AvroCodecs
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 
@@ -303,6 +304,7 @@ private[graft] final case class OcfStreamReaderFactory(
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[OcfStreamInputPartition]
     new OcfSplitReader(p.meta, p.start, p.end, readerJson, wrap, conf.value,
-      partRow = OcfSplitReader.partitionRow(p.meta, partIdx, partTypes))
+      partRow = if (partIdx.isEmpty) null else new GenericInternalRow(
+        OcfSplitReader.appendedValues(p.meta, partIdx, partTypes)))
   }
 }

@@ -8,18 +8,25 @@ import org.scalatest.funsuite.AnyFunSuite
 class DriverContractSpec extends AnyFunSuite {
 
   /** `getOrCreate()` returns any session already running in this JVM and
-    * ignores the builder's settings, so the shuffle-partition count the
-    * tests plan under is set on the session itself, then restored. */
-  private def withShufflePartitions[T](spark: SparkSession)(body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "2")
+    * ignores the builder's settings, so the settings the tests plan under
+    * are set on the session itself, checked, and restored to their previous
+    * values afterwards. */
+  private def withSessionConf[T](spark: SparkSession, settings: (String, String)*)(
+      body: => T): T = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    settings.foreach { case (k, v) =>
+      spark.conf.set(k, v)
+      assert(spark.conf.get(k) == v, s"session setting $k did not take effect")
+    }
     try body
-    finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
+
+  private val planSettings = Seq(
+    "spark.sql.shuffle.partitions" -> "2", "spark.sql.session.timeZone" -> "UTC")
 
   test("every oracle key names a declared query") {
     val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
@@ -49,7 +56,7 @@ class DriverContractSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .appName("graft-contract-spec")
       .getOrCreate()
-    withShufflePartitions(spark) {
+    withSessionConf(spark, planSettings: _*) {
       assert(SparkEntry.entry(spark).count() > 0)
     }
   }
@@ -79,9 +86,8 @@ class DriverContractSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .appName("graft-contract-spec")
       .getOrCreate()
-    val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try withShufflePartitions(spark) {
+    withSessionConf(spark,
+        planSettings :+ ("spark.sql.adaptive.enabled" -> "false"): _*) {
       val sortEarly = Seq("q12_avro_roundtrip", "q30_multimodal_stats",
         "q33_curation", "q53_wav_audio_meta", "q54_pnm_image_meta",
         "q55_pnm_resize", "q59_y4m_video_meta", "q60_y4m_frame_sample",
@@ -108,9 +114,6 @@ class DriverContractSpec extends AnyFunSuite {
             s"sampling would re-execute it: ${heavyBelow.map(_.nodeName)}")
         spark.catalog.clearCache()
       }
-    } finally prevAqe match {
-      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
-      case None => spark.conf.unset("spark.sql.adaptive.enabled")
     }
   }
 }

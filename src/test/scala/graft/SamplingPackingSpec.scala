@@ -241,6 +241,7 @@ class SamplingPackingSpec extends AnyFunSuite {
   }
 
   test("sampling plans are shuffle-free map-side filters") {
+    val prevAqe = spark.conf.getOption("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val plan = Sampling.stratifiedSample(docs, "doc_id", "source",
@@ -266,7 +267,10 @@ class SamplingPackingSpec extends AnyFunSuite {
       val spShuffles = spPlan.collect {
         case e: org.apache.spark.sql.execution.exchange.ShuffleExchangeExec => e }
       assert(spShuffles.isEmpty, s"splitByGroup must not shuffle:\n$spPlan")
-    } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
+    } finally prevAqe match {
+      case Some(v) => spark.conf.set("spark.sql.adaptive.enabled", v)
+      case None => spark.conf.unset("spark.sql.adaptive.enabled")
+    }
   }
 
   test("exactSamplePerStratum: exact sizes, determinism, two-phase equals global rank") {

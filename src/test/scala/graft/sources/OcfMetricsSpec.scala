@@ -104,7 +104,8 @@ class OcfMetricsSpec extends AnyFunSuite {
     assert(rm("ocfBlocksRead") > 2L, s"256 B blocks over 1000 longs: $rm")
     assert(rm("ocfBytesRead") > f.length() / 2, s"decode fetches the bodies: $rm")
 
-    val c = new OcfCountReader(meta, 0, f.length(), conf)
+    // COUNT(*) is the aggregate reader with one COUNT slot over a null template
+    val c = new OcfAggReader(meta, 0, f.length(), conf, Array(0), Array[Any](null))
     assert(c.next())
     assert(c.get().getLong(0) == 1000L)
     c.close()
