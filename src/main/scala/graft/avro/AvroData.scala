@@ -328,7 +328,8 @@ object AvroSkipper {
         }
       case u: AUnion =>
         val branchSkips = u.branches.map(compile).toArray
-        in => branchSkips(in.readLong().toInt)(in)
+        val n = branchSkips.length
+        in => branchSkips(Resolved.branchIndex(in, n))(in)
       case r: ARecord =>
         memo.get(r.fullName) match {
           case Some(fn) => fn

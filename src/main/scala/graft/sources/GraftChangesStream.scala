@@ -239,7 +239,7 @@ private[sources] final class GraftChangesTable(
         // X110: the batch feed vectorizes when every part is eligible;
         // `columnar=false` is the same per-scan A/B lever as table scans.
         // Admitted parts carry the lane STAMP the factory answers from.
-        @transient private lazy val lane: Option[Array[OcfColumnar.Field]] =
+        @transient private lazy val lane: Option[OcfColumnar.Fields] =
           if (!Option(options.get("columnar")).forall(_.toBoolean)) None
           else GraftChangesReaderFactory.columnarFieldsFor(
             planned.parts, readerJson, partSchema)
@@ -317,7 +317,7 @@ private[sources] object GraftChangesReaderFactory {
     * across a scan's partitions) — one ineligible part keeps the whole
     * feed on the row lane, exactly like the batch table scan. */
   def columnarFieldsFor(parts: Array[InputPartition], readerJson: String,
-      partSchema: StructType): Option[Array[OcfColumnar.Field]] = {
+      partSchema: StructType): Option[OcfColumnar.Fields] = {
     if (parts.isEmpty) return None
     if (!partSchema.fields.forall(f => OcfColumnar.constSupported(f.dataType)))
       return None
@@ -329,7 +329,7 @@ private[sources] object GraftChangesReaderFactory {
 
   /** Stamp every part of an admitted plan (see `columnarOk`). */
   def stamp(parts: Array[InputPartition],
-      lane: Option[Array[OcfColumnar.Field]]): Array[InputPartition] =
+      lane: Option[OcfColumnar.Fields]): Array[InputPartition] =
     if (lane.isEmpty) parts
     else parts.map(p =>
       p.asInstanceOf[GraftChangesPartition].copy(columnarOk = true)
@@ -343,7 +343,7 @@ private[sources] final case class GraftChangesReaderFactory(
     // X110: Some = every planned part decodes through the vectorized lane
     // (insert parts batch-decode; delete parts type-skip survivors and
     // decode only the emitted rows); None = row lane
-    columnarFields: Option[Array[OcfColumnar.Field]] = None)
+    columnarFields: Option[OcfColumnar.Fields] = None)
     extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean =
@@ -578,7 +578,7 @@ private[graft] final class GraftChangesMicroBatchStream(
   // each trigger plans then builds its factory; the plan's per-commit
   // pairing maps (X104) travel through this slot instead of every part
   @volatile private var lastPlanned
-      : (GraftChangesPlanner.Planned, Option[Array[OcfColumnar.Field]]) =
+      : (GraftChangesPlanner.Planned, Option[OcfColumnar.Fields]) =
     (GraftChangesPlanner.Planned(Array.empty, Map.empty, Map.empty), None)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {

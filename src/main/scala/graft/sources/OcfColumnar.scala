@@ -1,107 +1,40 @@
 package graft.sources
 
 import graft.avro._
+import graft.avro.AvroResolution.deref
+import graft.avro.Resolved._
+import graft.spark.{CatalystAvroReader, SchemaConverters}
 import org.apache.hadoop.conf.Configuration
 import org.apache.spark.sql.connector.read.PartitionReader
-import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
+import org.apache.spark.sql.execution.vectorized.{OnHeapColumnVector, WritableColumnVector}
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnarBatch, ColumnVector}
+import org.apache.spark.unsafe.types.UTF8String
 
-/** Vectorized (ColumnarBatch) reads for FLAT schemas (X91): when every
-  * reader field is a scalar Avro shape (primitives, date/time/timestamp/
-  * uuid/decimal logical types, enum, fixed; nullable unions included) and
-  * every planned file's writer schema admits a positional WIRE PLAN
-  * (below), the scan decodes straight into on-heap column vectors — one
-  * tight loop per batch instead of a per-row compiled-reader virtual call
-  * + row allocation + iterator step. Spark's `ColumnarToRow` (codegen'd)
-  * consumes the batches. Partition values and the `_file` metadata column
-  * are per-split CONSTANTS and ride along as [[ConstantColumnVector]]s —
-  * identity/transform/bucket-partitioned tables (the normal production
-  * shape) vectorize exactly like unpartitioned ones; `_pos` rides as a
-  * real ordinal vector, MoR position/equality deletes apply in-lane
-  * (X105), and SCHEMA EVOLUTION resolves per file (X106: aliases,
-  * reader-default constants, numeric promotions). Only NESTED shapes
-  * (and aggregate pushdowns, which have their own readers) fall back to
-  * the row reader — Avro is row-oriented, so the columnar path is a fast
-  * lane with one semantics, never a second one. */
+/** Vectorized (ColumnarBatch) reads: when the reader schema is a record of
+  * lane shapes — scalars (primitives, the date/time/timestamp/uuid/decimal
+  * logical types, enum, fixed), structs of lane shapes, arrays and maps of
+  * scalars or of structs of scalars, each plain or nullable, and top-level
+  * general unions — and every planned file's writer admits a [[WirePlan]],
+  * the scan decodes straight into on-heap column vectors: one loop per
+  * batch instead of a per-row compiled-reader call, row allocation and
+  * iterator step. Spark's `ColumnarToRow` (codegen'd) consumes the batches.
+  * Partition values and `_file` are per-split CONSTANTS and ride as
+  * constant vectors, `_pos` rides as a real ordinal vector, and MoR
+  * position/equality deletes apply in-lane (X105).
+  *
+  * The wire plan is the third emitter over [[AvroResolver]]'s plan, beside
+  * [[CatalystAvroReader]] and [[AvroJsonTranscoder]]: field matching,
+  * aliases, promotions, enum symbols, defaults and skips are the
+  * resolver's, so both lanes read one semantics. What the lane decides is
+  * only admission — which plans its vectors can hold — and everything else
+  * (arrays of arrays, recursive records, reordered projections, evolution
+  * the admission refuses, aggregate pushdowns) rides the row reader. */
 private[graft] object OcfColumnar {
 
-  /** One flat READER field: its name, Spark type, wire primitive, and
-    * (for a nullable `[null,T]`/`[T,null]` union) which branch index is
-    * null. These define the batch's vector types; the on-wire shape each
-    * file actually wrote is the [[WireStep]] plan's business. `aliases`
-    * (rename history) let a file written under a former name match, and
-    * `defaultJson` (the reader default) lets a file written BEFORE the
-    * field existed fill it as a per-file CONSTANT vector — the same
-    * evolution semantics the row lane gets from Avro resolution. */
-  final case class Field(name: String, dt: DataType, wire: AvroSchema,
-                         nullBranch: Int, aliases: Seq[String] = Nil,
-                         defaultJson: Option[String] = None,
-                         // NESTED shapes (X107/X108): a struct's child
-                         // Fields (which may themselves nest), or an
-                         // array/map's single element/value Field
-                         children: Array[Field] = null) {
-    def nullable: Boolean = nullBranch >= 0
-  }
-
-  /** One step of a per-FILE wire plan, in WRITER field order: decode the
-    * writer field described by (`wire`, `nullBranch`) — the WRITER's union
-    * shape, which is what sits on the wire — into vector `target`, or
-    * type-skip it when `target < 0` (a projected-away column). A non-null
-    * `rdt` is a numeric Avro PROMOTION (int->long/float/double,
-    * long->float/double, float->double): decode the writer's primitive,
-    * widen into the reader-typed vector — the row lane's exact semantics. */
-  final case class WireStep(wire: AvroSchema, nullBranch: Int, target: Int,
-                            rdt: DataType = null,
-                            // struct step (X107): the leaves' sub-steps, in
-                            // WRITER child order; targets index the struct
-                            // vector's children
-                            children: Array[WireStep] = null,
-                            // struct step, nested evolution (X106 at depth):
-                            // READER children this writer never wrote fill
-                            // from their reader defaults per present row (a
-                            // struct child has no constant-vector form; the
-                            // parent's null mask is per-row). Each entry is
-                            // (child ordinal, child type, default constant)
-                            // so the decoder needs no Field lookup at any
-                            // nesting depth.
-                            absentFills: Array[(Int, DataType, Any)] = null) {
-    def nullable: Boolean = nullBranch >= 0
-  }
-
-  /** A file's full decode recipe: the writer-ordered steps plus the reader
-    * ordinals this writer never wrote (post-ADD-COLUMN old files) — those
-    * fill from their reader defaults as constant vectors. */
-  final case class WirePlan(steps: Array[WireStep], absent: Array[Int])
-
-  /** The CONSTANT a writer-absent reader field materializes (Catalyst
-    * domain, per the field's wire logical type — the same conversions the
-    * decode path applies), or None when the default's shape can't ride a
-    * constant vector (falls back to the row lane). Some(null) is a genuine
-    * null default. */
-  def constDefault(f: Field): Option[Any] = f.defaultJson.flatMap { js =>
-    val node = new com.fasterxml.jackson.databind.ObjectMapper().readTree(js)
-    if (node.isNull) { if (f.nullable) Some(null) else None }
-    else f.wire match {
-      case ABoolean => Some(java.lang.Boolean.valueOf(node.asBoolean))
-      case AInt | ADate(_) | ATimeMillis(_) =>
-        Some(java.lang.Integer.valueOf(node.asInt))
-      case ALong | ATimeMicros(_) | ATimestampMicros(_) =>
-        Some(java.lang.Long.valueOf(node.asLong))
-      case ATimestampMillis(_) => Some(java.lang.Long.valueOf(node.asLong * 1000L))
-      case AFloat => Some(java.lang.Float.valueOf(node.asDouble.toFloat))
-      case ADouble => Some(java.lang.Double.valueOf(node.asDouble))
-      case AString | AUuid(_) =>
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(node.asText))
-      case ABytes => Some(node.asText.getBytes(
-        java.nio.charset.StandardCharsets.ISO_8859_1))
-      case _: AEnum =>
-        Some(org.apache.spark.unsafe.types.UTF8String.fromString(node.asText))
-      case _: AFixed => Some(node.asText.getBytes(
-        java.nio.charset.StandardCharsets.ISO_8859_1))
-      case _ => None
-    }
-  }
+  /** A lane-eligible reader record: its JSON and, per field, the Spark type
+    * of the vector the field decodes into. */
+  final case class Fields(readerJson: String, types: Array[DataType])
 
   /** Types a per-split CONSTANT vector can carry — the single source of
     * truth for both [[OcfColumnarSplitReader]]'s `constVec` dispatch and
@@ -122,423 +55,385 @@ private[graft] object OcfColumnar {
     case ADate(_) | ATimeMillis(_) | ATimeMicros(_) |
          ATimestampMillis(_) | ATimestampMicros(_) | AUuid(_) => true
     // decimal: both physical encodings (length-prefixed bytes and fixed)
-    // are one contiguous big-endian two's-complement run — BigInteger does
-    // the sign extension, exactly as in the row lane
-    // (avro/AvroData.scala ADecimal cases). Wider-than-38 precision can't
-    // be a Spark DecimalType — leave it to the row reader's error path.
+    // are one contiguous big-endian two's-complement run. Wider-than-38
+    // precision can't be a Spark DecimalType — leave it to the row reader.
     case ADecimal(p, _, u) if p <= 38 => u.physical match {
       case ABytes | _: AFixed => true
       case _ => false
     }
-    // enum decodes writer-driven (index -> symbol string) and fixed is one
-    // writer-sized read — both single wire ops, exactly like the row lane
     case _: AEnum | _: AFixed => true
     case _ => false
   }
 
-  /** The reader-facing Spark type — the SAME mapping as
-    * [[graft.spark.SchemaConverters]], so the columnar and row lanes can
-    * never disagree on a column's type. */
-  private def sparkTypeOf(s: AvroSchema): DataType = s match {
-    case ABoolean => BooleanType
-    case AInt => IntegerType
-    case ALong => LongType
-    case AFloat => FloatType
-    case ADouble => DoubleType
-    case AString => StringType
-    case ABytes => BinaryType
-    case ADate(_) => DateType
-    case ATimeMillis(_) => IntegerType
-    case ATimeMicros(_) => LongType
-    case ATimestampMillis(_) | ATimestampMicros(_) => TimestampType
-    case AUuid(_) => StringType
-    case ADecimal(p, s, _) => DecimalType(p, s)
-    case _: AEnum => StringType
-    case _: AFixed => BinaryType
-    case other => throw new IllegalStateException(s"not flat: $other")
+  /** The value of a plain or a `["null", T]`/`[T, "null"]` shape. */
+  private def valueOf(s: AvroSchema): Option[AvroSchema] = s match {
+    case AUnion(Seq(ANull, t)) => Some(t)
+    case AUnion(Seq(t, ANull)) => Some(t)
+    case _: AUnion => None
+    case t => Some(t)
   }
 
-  private def flatFieldOf(name: String, s: AvroSchema): Option[Field] = s match {
-    case p if plainPrimitive(p) => Some(Field(name, sparkTypeOf(p), p, -1))
-    case AUnion(Seq(ANull, p)) if plainPrimitive(p) =>
-      Some(Field(name, sparkTypeOf(p), p, 0))
-    case AUnion(Seq(p, ANull)) if plainPrimitive(p) =>
-      Some(Field(name, sparkTypeOf(p), p, 1))
-    case _ => None
+  private def scalar(s: AvroSchema): Boolean = valueOf(s).exists(plainPrimitive)
+
+  /** Lane shapes at any depth: scalars, structs of lane shapes, and arrays
+    * and maps whose items are scalars or structs of scalars. */
+  private def shape(s: AvroSchema): Boolean = valueOf(s).exists {
+    case r: ARecord => r.fields.forall(f => shape(f.schema))
+    case AArray(items) => element(items)
+    case AMap(values) => element(values)
+    case t => plainPrimitive(t)
   }
 
-  /** An ARRAY element (X108): a scalar — the embedding / token-list
-    * shape, every scalar appends in one wire op (decimal via an explicit
-    * appendNotNull + slot put) — or a STRUCT of scalars (the span/entity
-    * list shape, `array<struct<start,end,label>>`), appended via
-    * `appendStruct` + per-child appends. The element may be nullable. */
-  private def elemFieldOf(s: AvroSchema): Option[Field] =
-    flatFieldOf("item", s).orElse(
-      structFieldOf("item", s).filter(_.children.forall(_.children == null)))
-
-  /** `array<scalar>` (X108): the single most common LLM-pipeline column
-    * shape (embeddings `array<float>`, token lists `array<string>`).
-    * Avro arrays are block-encoded contiguous runs — they decode as
-    * offset+length into a growing child vector, Spark's native columnar
-    * array representation. */
-  private def arrayFieldOf(name: String, s: AvroSchema): Option[Field] = {
-    def of(a: AArray, nb: Int): Option[Field] =
-      elemFieldOf(a.items).map(ef =>
-        Field(name, ArrayType(ef.dt, ef.nullable), a, nb,
-          children = Array(ef)))
-    s match {
-      case a: AArray => of(a, -1)
-      case AUnion(Seq(ANull, a: AArray)) => of(a, 0)
-      case AUnion(Seq(a: AArray, ANull)) => of(a, 1)
-      case _ => None
-    }
+  private def element(s: AvroSchema): Boolean = valueOf(s).exists {
+    case r: ARecord => r.fields.forall(f => scalar(f.schema))
+    case t => plainPrimitive(t)
   }
 
-  /** `map<string,scalar>` (X108): Avro map blocks decode as parallel
-    * key/value child vectors under the same offset+length — Spark's
-    * columnar map representation (keys are Avro-mandated strings). */
-  private def mapFieldOf(name: String, s: AvroSchema): Option[Field] = {
-    def of(m: AMap, nb: Int): Option[Field] =
-      elemFieldOf(m.values).map(vf =>
-        Field(name, MapType(StringType, vf.dt, vf.nullable), m, nb,
-          children = Array(vf)))
-    s match {
-      case m: AMap => of(m, -1)
-      case AUnion(Seq(ANull, m: AMap)) => of(m, 0)
-      case AUnion(Seq(m: AMap, ANull)) => of(m, 1)
-      case _ => None
-    }
-  }
+  /** A top-level field may also be a general union (X111, the F14
+    * struct-of-branches shape): two or more non-null lane-shaped branches,
+    * held as `member$i` struct children. */
+  private def topShape(s: AvroSchema): Boolean = shape(s) || (s match {
+    case u: AUnion => u.nonNullBranches.length >= 2 && u.nonNullBranches.forall(shape)
+    case _ => false
+  })
 
-  /** A general UNION field (X111, the F14 struct-of-branches shape):
-    * two or more non-null branches map to `member$i` struct children,
-    * exactly one non-null per row — the branch byte selects it. Branches
-    * may be any lane-eligible shape (scalar, struct, array, map — not
-    * unions, which Avro forbids nesting). A null branch anywhere in the
-    * union makes the column nullable. Field.nullBranch stays -1: the
-    * branch byte is ALWAYS on the wire, read by the union decode itself,
-    * never by the generic nullable prefix. */
-  private def unionFieldOf(name: String, s: AvroSchema): Option[Field] = s match {
-    case u: AUnion if u.nonNullBranches.length >= 2 =>
-      val kids = u.nonNullBranches.zipWithIndex.map { case (b, i) =>
-        fieldOfShape(s"member$i", b)
-      }
-      if (kids.exists(_.isEmpty)) None
-      else Some(Field(name,
-        StructType(kids.flatten.map(k =>
-          StructField(k.name, k.dt, nullable = true))),
-        u, -1, children = kids.flatten.toArray))
-    case _ => None
-  }
-
-  /** Any lane-eligible shape, by name: the one dispatch every nesting
-    * site uses (top-level fields, struct children, union branches). */
-  private def fieldOfShape(name: String, s: AvroSchema): Option[Field] =
-    flatFieldOf(name, s)
-      .orElse(structFieldOf(name, s))
-      .orElse(arrayFieldOf(name, s))
-      .orElse(mapFieldOf(name, s))
-
-  /** A STRUCT field (X107): children are scalars, arrays/maps of
-    * scalars (X108), or structs — the resolver RECURSES, so arbitrary
-    * nesting of those shapes vectorizes (unions-of-structs and
-    * arrays-of-arrays keep the row lane). Child aliases (nested RENAME
-    * history) and defaults (nested ADD COLUMN) propagate so old files
-    * resolve at depth like they do at top level. */
-  private def structFieldOf(name: String, s: AvroSchema): Option[Field] = {
-    def ofRecord(r: ARecord, nullBranch: Int): Option[Field] = {
-      val kids = new Array[Field](r.fields.length)
-      var i = 0
-      while (i < kids.length) {
-        val kf = r.fields(i)
-        // children may themselves be array/map-of-scalars (X108 inside
-        // X107) — `meta STRUCT<..., tags ARRAY<STRING>>` — or structs
-        // (recursion: arbitrary nesting of scalars/arrays/maps/structs
-        // vectorizes; unions-of-structs stay on the row lane)
-        fieldOfShape(kf.name, kf.schema) match {
-          case Some(k) => kids(i) = k.copy(aliases = kf.aliases,
-            defaultJson = kf.default.map(_.toString))
-          case None => return None
-        }
-        i += 1
-      }
-      Some(Field(name,
-        StructType(kids.map(k => StructField(k.name, k.dt, k.nullable))),
-        r, nullBranch, children = kids))
-    }
-    s match {
-      case r: ARecord => ofRecord(r, -1)
-      case AUnion(Seq(ANull, r: ARecord)) => ofRecord(r, 0)
-      case AUnion(Seq(r: ARecord, ANull)) => ofRecord(r, 1)
-      case _ => None
-    }
-  }
-
-  /** Field specs when `readerJson` is a flat all-primitive record. */
-  def fieldsFor(readerJson: String): Option[Array[Field]] =
-    scala.util.Try(AvroSchemaParser.parse(readerJson)).toOption.flatMap {
-      case rec: ARecord =>
-        val out = new Array[Field](rec.fields.length)
-        var i = 0
-        while (i < out.length) {
-          val rf = rec.fields(i)
-          fieldOfShape(rf.name, rf.schema)
-            .orElse(unionFieldOf(rf.name, rf.schema)) match {
-            case Some(f) => out(i) = f.copy(aliases = rf.aliases,
-              defaultJson = rf.default.map(_.toString))
-            case None => return None
-          }
-          i += 1
-        }
-        Some(out)
-      case _ => None
+  private def laneRecord(json: String): Option[ARecord] =
+    scala.util.Try(AvroSchemaParser.parse(json)).toOption.collect {
+      case r: ARecord if r.fields.forall(f => topShape(f.schema)) => r
     }
 
-  /** The per-FILE wire plan: how this writer's record decodes into the
-    * reader's vectors, as one forward positional pass. Supported shapes —
-    * exactly those whose decode is a tight loop with no name resolution at
-    * decode time:
-    *
-    *   - every reader field matches a writer field of the SAME name and
-    *     SAME primitive, with the reader fields appearing as an in-order
-    *     subsequence of the writer fields (Avro resolves by name; Spark's
-    *     column pruning preserves relative field order, so a pruned flat
-    *     projection plans as match steps with cheap type-directed skip
-    *     steps for the writer-only columns);
-    *   - either side may independently be plain (`T`) or nullable
-    *     (`[null,T]`/`[T,null]`) EXCEPT writer-nullable under reader-plain
-    *     (a null would have nowhere to go). A plain writer under a
-    *     nullable reader is the CATALOG's common case — nullable table
-    *     schema over non-null-written files — and decodes with NO branch
-    *     byte, because the wire shape is the WRITER's;
-    *   - SCHEMA EVOLUTION resolves too, so one legacy file no longer costs
-    *     the whole scan the lane: a RENAMED reader field matches the
-    *     writer's old name through its aliases; a reader-only field
-    *     (post-ADD-COLUMN old file) fills from its reader default as a
-    *     constant vector; Avro's numeric promotions (int->long/float/
-    *     double, long->float/double, float->double) and the string<->bytes
-    *     byte-copy widen during decode — each the row lane's exact
-    *     semantics.
-    *
-    * Reordered projections and non-flat shapes: None → row-reader
-    * fallback. */
-  def wirePlanFor(writerJson: String, reader: Array[Field]): Option[WirePlan] = {
-    // the key renders CHILDREN and the reader's WIRE identity too — two
-    // readers differing only in nested aliases/defaults (X106-at-depth) or
-    // in enum SYMBOL SETS (both map to Spark StringType, but enum-subset
-    // admission depends on the symbols) must not share a cached plan
-    def renderField(f: Field): String =
-      f.name + ":" + f.dt.simpleString + ":" + f.wire.toString + ":" +
-        f.nullBranch +
-        ":" + f.aliases.mkString("~") + ":" + f.defaultJson.getOrElse("") +
-        (if (f.children == null) ""
-         else f.children.map(renderField).mkString("<", "|", ">"))
-    val key = writerJson + "\u0001" + reader.map(renderField).mkString(",")
-    wireCache.computeIfAbsent(key, _ => computeWirePlan(writerJson, reader))
-  }
+  private def sqlType(s: AvroSchema): DataType = SchemaConverters.toSqlType(s).dataType
 
-  private val wireCache =
+  /** The reader's vector types when `readerJson` is a record of lane shapes. */
+  def fieldsFor(readerJson: String): Option[Fields] =
+    laneRecord(readerJson).map(r => Fields(readerJson, r.fields.map(f => sqlType(f.schema)).toArray))
+
+  /** The per-FILE decoder of `writerJson` into `reader`'s vectors, compiled
+    * once per (writer, reader) pair per JVM, or None when the lane does not
+    * admit the pair (the scan then rides the row reader). */
+  def wirePlanFor(writerJson: String, reader: Fields): Option[WirePlan] =
+    planCache.computeIfAbsent(writerJson + "\u0001" + reader.readerJson,
+      _ => compile(writerJson, reader.readerJson))
+
+  private val planCache =
     new java.util.concurrent.ConcurrentHashMap[String, Option[WirePlan]]()
 
-  private def computeWirePlan(writerJson: String,
-                              reader: Array[Field]): Option[WirePlan] =
-    scala.util.Try(AvroSchemaParser.parse(writerJson)).toOption.flatMap {
-      case rec: ARecord =>
-        // reader lookup by CURRENT name and by rename-history aliases —
-        // names bind first (two passes), so one field's alias can never
-        // shadow another field's real name
-        val idxByName = scala.collection.mutable.HashMap.empty[String, Int]
-        reader.zipWithIndex.foreach { case (f, i) =>
-          idxByName.getOrElseUpdate(f.name, i)
+  private def compile(writerJson: String, readerJson: String): Option[WirePlan] =
+    for {
+      writer <- laneRecord(writerJson)
+      reader <- laneRecord(readerJson)
+      plan <- (try Some(AvroResolver.resolve(writer, reader))
+               catch { case _: AvroResolutionException => None }).collect {
+        case rec: Record if recordAdmits(rec, writer, top = true) => rec
+      }
+    } yield new WirePlan(plan, writer)
+
+  // ---- admission: which resolved plans the vectors hold ---------------------
+
+  /** Does the lane decode `plan`, resolved from writer schema `w0`? It
+    * refuses a writer branch the reader cannot take (a null under a plain
+    * reader), a general union whose branches do not land in the reader's
+    * same-position branches, reader union members under anything else, an
+    * enum remap that renames a symbol, a scalar whose reader vector is
+    * neither its own Spark type nor an Avro promotion of it, and (through
+    * [[recordAdmits]]) reordered records and defaults with no constant. */
+  private def admits(plan: Resolved, w0: AvroSchema): Boolean = (plan, deref(w0)) match {
+    case (s: Scalar, w) =>
+      val dt = sqlType(s.reader)
+      sqlType(w) == dt || AvroResolution.promotes(w, SchemaConverters.toAvroType(dt))
+    case (e: EnumRemap, _) => e.symbols == e.writer.symbols && sqlType(e.reader) == StringType
+    case (_: Skip, _) => true
+    case (WriterUnion(branches), wu: AUnion) =>
+      val general = wu.nonNullBranches.length >= 2
+      branches.indices.forall { b =>
+        (branches(b), wu.branches(b)) match {
+          case (ReaderUnion(ru, i, value), wb) if general =>
+            members(ru) >= 2 && ru.branches.length == wu.branches.length && i == b &&
+              admits(value, wb)
+          case (branch, wb) => !general && admits(branch, wb)
         }
-        reader.zipWithIndex.foreach { case (f, i) =>
-          f.aliases.foreach(a => idxByName.getOrElseUpdate(a, i))
-        }
-        val steps = new Array[WireStep](rec.fields.length)
-        val absent = Array.newBuilder[Int]
-        var r = 0
-        // reader fields the writer never wrote fill as constant vectors —
-        // possible only when the default's shape supports one
-        def fillAbsentUpTo(until: Int): Boolean = {
-          while (r < until) {
-            // scalar constants only — an absent STRUCT has no constant
-            // vector shape (nested ADDs keep the row lane)
-            if (reader(r).children != null ||
-                constDefault(reader(r)).isEmpty) return false
-            absent += r
-            r += 1
-          }
-          true
-        }
-        // the one step rule for a matched (writer, reader) pair — top-level
-        // fields, struct children, array/map elements, union members:
-        // scalars agree in Spark type (an enum when every writer symbol is a
-        // reader symbol) or promote to the reader vector's plain Avro type; a
-        // writer-nullable value needs a reader-nullable slot (the null must
-        // have somewhere to go). The caller sets the step's target.
-        def elemStepOf(w: Field, rk: Field): Option[WireStep] = {
-          if (w.nullable && !rk.nullable) return None
-          // NESTED shapes resolve recursively: struct children like any
-          // struct (decoded in slot or APPEND mode as the site demands),
-          // array/map through their element steps
-          (w.wire, rk.wire) match {
-            case (wr: ARecord, _: ARecord) =>
-              if (w.children == null || rk.children == null) return None
-              return structSteps(wr.fields, rk.children).map {
-                case (kids, af) => WireStep(wr, w.nullBranch, 0,
-                  children = kids, absentFills = af)
-              }
-            case (wa: AArray, _: AArray) =>
-              if (w.children == null || rk.children == null) return None
-              return elemStepOf(w.children(0), rk.children(0)).map(es =>
-                WireStep(wa, w.nullBranch, 0, children = Array(es)))
-            case (wm: AMap, _: AMap) =>
-              if (w.children == null || rk.children == null) return None
-              return elemStepOf(w.children(0), rk.children(0)).map(es =>
-                WireStep(wm, w.nullBranch, 0, children = Array(es)))
-            case _ => ()
-          }
-          // cross-KIND nested pairs whose Spark types coincide (a union and
-          // the F14 member-struct both render as the same StructType) must
-          // refuse here — the scalar tail below matches on dt alone, and a
-          // children-less nested step would throw at decode instead of
-          // falling back to the row lane's resolution semantics
-          if (w.children != null || rk.children != null) return None
-          val enumOk = (w.wire, rk.wire) match {
-            case (we: AEnum, re: AEnum) => we.symbols.forall(re.symbols.contains)
-            case _ => true
-          }
-          if (w.dt == rk.dt && enumOk)
-            Some(WireStep(w.wire, w.nullBranch, 0))
-          else if (AvroResolution.promotes(w.wire,
-              graft.spark.SchemaConverters.toAvroType(rk.dt)))
-            // a numeric promotion widens into the reader-typed vector;
-            // string<->bytes is the same byte copy either way
-            Some(WireStep(w.wire, w.nullBranch, 0,
-              rdt = if (rk.dt == StringType || rk.dt == BinaryType) null else rk.dt))
-          else None
-        }
-        // struct-of-scalars (X107), with X106's evolution tolerance at
-        // DEPTH: children resolve by name THEN by rename-history aliases;
-        // numeric promotions and string<->bytes widen during decode;
-        // reader-only children (nested ADD COLUMN on an old file) fill
-        // from their defaults per present row; writer-only children
-        // type-skip. Reader children must still be an in-order subsequence
-        // of the writer's — a reordered nested projection keeps the row
-        // lane, same as at top level.
-        // general UNION (X111): per-WIRE-branch steps — branch lists must
-        // match positionally (same order, null at the same index, member
-        // shapes compatible); the null branch marks the whole struct null
-        def unionSteps(wu: AUnion, ru: AUnion, wKids: Array[Field],
-            rKids: Array[Field]): Option[Array[WireStep]] = {
-          if (wu.branches.length != ru.branches.length) return None
-          val out = new Array[WireStep](wu.branches.length)
-          var m = 0
-          var bi = 0
-          while (bi < out.length) {
-            (wu.branches(bi), ru.branches(bi)) match {
-              case (ANull, ANull) => out(bi) = WireStep(ANull, -1, -1)
-              case (ANull, _) | (_, ANull) => return None
-              case _ =>
-                if (m >= rKids.length || m >= wKids.length) return None
-                elemStepOf(wKids(m), rKids(m)) match {
-                  case Some(st) => out(bi) = st.copy(target = m)
-                  case None => return None
-                }
-                m += 1
-            }
-            bi += 1
-          }
-          if (m == rKids.length) Some(out) else None
-        }
-        def structSteps(wKids: Seq[AField],
-            rKids: Array[Field])
-            : Option[(Array[WireStep], Array[(Int, DataType, Any)])] = {
-          val kidIdx = scala.collection.mutable.HashMap.empty[String, Int]
-          rKids.zipWithIndex.foreach { case (f, i) =>
-            kidIdx.getOrElseUpdate(f.name, i)
-          }
-          rKids.zipWithIndex.foreach { case (f, i) =>
-            f.aliases.foreach(a => kidIdx.getOrElseUpdate(a, i))
-          }
-          val out = new Array[WireStep](wKids.length)
-          val absentK = Array.newBuilder[(Int, DataType, Any)]
-          var rc = 0
-          def fillAbsentKidsUpTo(until: Int): Boolean = {
-            while (rc < until) {
-              constDefault(rKids(rc)) match {
-                case Some(v) => absentK += ((rc, rKids(rc).dt, v))
-                case None => return false
-              }
-              rc += 1
-            }
-            true
-          }
-          var wc = 0
-          while (wc < out.length) {
-            val wk = wKids(wc)
-            fieldOfShape(wk.name, wk.schema) match {
-              case Some(ws) =>
-                kidIdx.get(ws.name) match {
-                  case Some(idx) if idx >= rc =>
-                    if (!fillAbsentKidsUpTo(idx)) return None
-                    // flat or nested (array, map, struct-in-struct): the
-                    // element rule decides
-                    out(wc) = elemStepOf(ws, rKids(idx))
-                      .map(_.copy(target = idx)).getOrElse(return None)
-                    rc = idx + 1
-                  case Some(_) => return None // reordered nested projection
-                  case None => // writer-only child: type-skip (skipValue
-                    // self-describes array/map children from the wire)
-                    out(wc) = WireStep(ws.wire, ws.nullBranch, -1)
-                }
-              case None => return None
-            }
-            wc += 1
-          }
-          if (!fillAbsentKidsUpTo(rKids.length)) None
-          else Some((out, absentK.result()))
-        }
-        var w = 0
-        while (w < steps.length) {
-          val wf = rec.fields(w)
-          val ws = fieldOfShape(wf.name, wf.schema)
-            .orElse(unionFieldOf(wf.name, wf.schema))
-            .getOrElse(return None) // no lane shape: row reader
-          idxByName.get(wf.name) match {
-            case Some(idx) if idx >= r =>
-              if (!fillAbsentUpTo(idx)) return None
-              // matched (by name or alias): general unions pair branch by
-              // branch, every other shape takes the element rule
-              val rf = reader(idx)
-              steps(w) = ((ws.wire, rf.wire) match {
-                case (wu: AUnion, ru: AUnion) =>
-                  unionSteps(wu, ru, ws.children, rf.children)
-                    .map(kids => WireStep(wu, -1, idx, children = kids))
-                case _ => elemStepOf(ws, rf).map(_.copy(target = idx))
-              }).getOrElse(return None)
-              r = idx + 1
-            case Some(_) => return None // reordered projection: row lane
-            case None => // writer-only (dropped/pruned) column: type-skip; a
-              // nested one's children carry the wire shapes the skip needs
-              steps(w) = WireStep(ws.wire, ws.nullBranch, -1,
-                children = if (ws.children == null) null
-                  else ws.children.map(k => WireStep(k.wire, k.nullBranch, -1)))
-          }
-          w += 1
-        }
-        if (!fillAbsentUpTo(reader.length)) None
-        else Some(WirePlan(steps, absent.result()))
-      case _ => None
+      }
+    case (ReaderUnion(ru, _, value), w) => members(ru) <= 1 && admits(value, w)
+    case (ArrayOf(items), AArray(wi)) => admits(items, wi)
+    case (MapOf(values), AMap(wv)) => admits(values, wv)
+    case (rec: Record, wr: ARecord) => recordAdmits(rec, wr, top = false)
+    case _ => false
+  }
+
+  private def members(ru: AUnion): Int = ru.nonNullBranches.length
+
+  /** Matched reader slots rise in writer order (a reordered projection
+    * keeps the row lane), every field admits, and every default the writer
+    * leaves to the reader has a constant form: null, or a value of a
+    * constant-vector type written as itself (a JSON null under a type with
+    * no null materializes as 0 or "null"). A top-level default becomes a
+    * constant vector, so it must belong to a scalar field. */
+  private def recordAdmits(rec: Record, wr: ARecord, top: Boolean): Boolean = {
+    val matched = rec.slots.filter(_ >= 0)
+    matched.indices.drop(1).forall(k => matched(k - 1) < matched(k)) &&
+      rec.fields.indices.forall(i => admits(rec.fields(i), wr.fields(i).schema)) &&
+      rec.defaults.indices.forall { j =>
+        val rf = rec.reader.fields(j)
+        rec.defaults(j).isEmpty || (!top || scalar(rf.schema)) && (defaultOf(rec, j) == null ||
+          constSupported(sqlType(rf.schema)) && !rf.default.exists(_.isNull))
+      }
+  }
+
+  // ---- the emitter: one compiled Put per plan node --------------------------
+
+  /** One compiled plan node. `put` decodes a value at `in` into row `row` of
+    * `v` (top-level fields, struct children, union members); `append` adds
+    * it as the next element of `v` (array items, map values). A skipped
+    * value gets a null `v`. */
+  private abstract class Put {
+    def put(in: AvroBinaryReader, v: WritableColumnVector, row: Int): Unit
+    def append(in: AvroBinaryReader, v: WritableColumnVector): Unit =
+      put(in, v, v.appendNotNull())
+  }
+
+  private object NullPut extends Put {
+    def put(in: AvroBinaryReader, v: WritableColumnVector, row: Int): Unit = v.putNull(row)
+    // a null struct element appends a null slot to each child, so the
+    // children's append cursors stay element-aligned
+    override def append(in: AvroBinaryReader, v: WritableColumnVector): Unit =
+      if (v.dataType.isInstanceOf[StructType]) v.appendStruct(true) else v.appendNull()
+  }
+
+  /** A non-null branch of a nullable union clears the row's null bit first:
+    * a reader that rejects a decoded row (an equality delete) reuses its
+    * slot, and a put does not clear a null an earlier row left there. */
+  private def notNull(inner: Put): Put = new Put {
+    def put(in: AvroBinaryReader, v: WritableColumnVector, row: Int): Unit = {
+      v.putNotNull(row)
+      inner.put(in, v, row)
     }
+    override def append(in: AvroBinaryReader, v: WritableColumnVector): Unit = inner.append(in, v)
+  }
+
+  private def isNull(plan: Resolved): Boolean = plan match {
+    case Scalar(ANull, _, _, _) => true
+    case ReaderUnion(_, _, value) => isNull(value)
+    case _ => false
+  }
+
+  private def emit(plan: Resolved): Put = plan match {
+    case s: Scalar => scalarPut(s)
+    case Skip(w) =>
+      val skip = AvroSkipper.compile(w)
+      (in, _, _) => skip(in)
+    case f: Fail => (_, _, _) => f.raise()
+    case WriterUnion(plans) =>
+      val nullable = plans.exists(isNull)
+      val branches = plans.map(p => if (nullable && !isNull(p)) notNull(emit(p)) else emit(p)).toArray
+      val n = branches.length
+      new Put {
+        def put(in: AvroBinaryReader, v: WritableColumnVector, row: Int): Unit =
+          branches(branchIndex(in, n)).put(in, v, row)
+        override def append(in: AvroBinaryReader, v: WritableColumnVector): Unit =
+          branches(branchIndex(in, n)).append(in, v)
+      }
+    case ReaderUnion(ru, i, value) =>
+      val inner = emit(value)
+      val width = members(ru)
+      if (width <= 1 || ru.branches(i) == ANull) inner
+      else {
+        // a general union (X111): the member decodes into its child, every
+        // other member's slot is nulled, and the taken one cleared (a
+        // reused slot may hold a rejected row's null)
+        val member = ru.branches.take(i).count(_ != ANull)
+        (in, v, row) => {
+          var k = 0
+          while (k < width) { if (k != member) v.getChild(k).putNull(row); k += 1 }
+          val child = v.getChild(member)
+          child.putNotNull(row)
+          inner.put(in, child, row)
+        }
+      }
+    case e: EnumRemap =>
+      bytesPut(e.decoder(e.symbols.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).toArray))
+    case ArrayOf(items) =>
+      // Avro arrays are blocked runs (a negative count prefixes a byte
+      // size), ended by a zero count; items append to the child vector and
+      // the row records (offset, length), Spark's columnar array shape. A
+      // rejected row's items are dead space the batch reset reclaims.
+      val item = emit(items)
+      (in, v, row) => {
+        val child = v.getChild(0)
+        val start = child.getElementsAppended
+        var total = 0
+        var count = in.readLong()
+        while (count != 0) {
+          if (count < 0) { count = -count; in.skipLong() }
+          var i = 0L
+          while (i < count) { item.append(in, child); i += 1 }
+          total += count.toInt
+          count = in.readLong()
+        }
+        v.putArray(row, start, total)
+      }
+    case MapOf(values) =>
+      // the same block walk; keys and values append in step
+      val value = emit(values)
+      (in, v, row) => {
+        val keys = v.getChild(0)
+        val vals = v.getChild(1)
+        val start = keys.getElementsAppended
+        var total = 0
+        var count = in.readLong()
+        while (count != 0) {
+          if (count < 0) { count = -count; in.skipLong() }
+          var i = 0L
+          while (i < count) {
+            val k = in.readStringBytes()
+            keys.appendByteArray(k, 0, k.length)
+            value.append(in, vals)
+            i += 1
+          }
+          total += count.toInt
+          count = in.readLong()
+        }
+        v.putArray(row, start, total)
+      }
+    case rec: Record => structPut(rec)
+  }
+
+  /** A struct: each writer field decodes into its reader child (or skips),
+    * then the reader-only children take their defaults. Appended, the
+    * struct slot comes first and every child gets exactly one append. */
+  private def structPut(rec: Record): Put = {
+    val fields = rec.fields.map(emit)
+    val slots = rec.slots
+    val fills = rec.defaults.indices.filter(rec.defaults(_).isDefined).toArray
+    val fillPuts = fills.map(j => constant(defaultOf(rec, j), sqlType(rec.reader.fields(j).schema)))
+    new Put {
+      def put(in: AvroBinaryReader, v: WritableColumnVector, row: Int): Unit = {
+        var i = 0
+        while (i < fields.length) {
+          val s = slots(i)
+          fields(i).put(in, if (s < 0) null else v.getChild(s), row)
+          i += 1
+        }
+        i = 0
+        while (i < fills.length) { fillPuts(i).put(in, v.getChild(fills(i)), row); i += 1 }
+      }
+      override def append(in: AvroBinaryReader, v: WritableColumnVector): Unit = {
+        v.appendStruct(false)
+        var i = 0
+        while (i < fields.length) {
+          val s = slots(i)
+          if (s < 0) fields(i).put(in, null, -1) else fields(i).append(in, v.getChild(s))
+          i += 1
+        }
+        i = 0
+        while (i < fills.length) { fillPuts(i).append(in, v.getChild(fills(i))); i += 1 }
+      }
+    }
+  }
+
+  /** Reader field `j`'s default as a Catalyst value. */
+  private def defaultOf(rec: Record, j: Int): Any =
+    CatalystAvroReader.toCatalyst(rec.defaults(j).get, rec.reader.fields(j).schema)
+
+  private def constant(value: Any, dt: DataType): Put =
+    if (value == null) NullPut
+    else dt match {
+      case BooleanType =>
+        val b = value.asInstanceOf[Boolean]
+        (_, v, row) => v.putBoolean(row, b)
+      case IntegerType | DateType =>
+        val x = value.asInstanceOf[Int]
+        (_, v, row) => v.putInt(row, x)
+      case LongType | TimestampType =>
+        val x = value.asInstanceOf[Long]
+        (_, v, row) => v.putLong(row, x)
+      case FloatType =>
+        val x = value.asInstanceOf[Float]
+        (_, v, row) => v.putFloat(row, x)
+      case DoubleType =>
+        val x = value.asInstanceOf[Double]
+        (_, v, row) => v.putDouble(row, x)
+      case StringType =>
+        val b = value.asInstanceOf[UTF8String].getBytes
+        (_, v, row) => v.putByteArray(row, b, 0, b.length)
+      case BinaryType =>
+        val b = value.asInstanceOf[Array[Byte]]
+        (_, v, row) => v.putByteArray(row, b, 0, b.length)
+    }
+
+  private def bytesPut(read: AvroBinaryReader => Array[Byte]): Put = (in, v, row) => {
+    val b = read(in)
+    v.putByteArray(row, b, 0, b.length)
+  }
+
+  /** One scalar read, as [[CatalystAvroReader]] reads it, into the vector's
+    * typed slot: the logical conversion (decimal, timestamp-millis ×1000),
+    * else the wire type delivered as its target. */
+  private def scalarPut(s: Scalar): Put = s.logical match {
+    case ADecimal(_, scale, _) =>
+      val (p, sc) = s.reader match {
+        case ADecimal(rp, rs, _) => (rp, rs)
+        case _ => (DecimalType.MAX_PRECISION, scale)
+      }
+      val read: AvroBinaryReader => Array[Byte] = s.wire match {
+        case AFixed(_, _, size, _) => _.readFixed(size)
+        case _ => _.readBytes()
+      }
+      (in, v, row) => v.putDecimal(row, Decimal(
+        new java.math.BigDecimal(new java.math.BigInteger(read(in)), scale), p, sc), p)
+    case ATimestampMillis(_) => (in, v, row) => v.putLong(row, in.readLong() * 1000L)
+    case _ => (s.wire, s.target) match {
+      case (ANull, _) => NullPut
+      case (ABoolean, _) => (in, v, row) => v.putBoolean(row, in.readBoolean())
+      case (AInt, AInt) => (in, v, row) => v.putInt(row, in.readInt())
+      case (AInt | ALong, ALong) => (in, v, row) => v.putLong(row, in.readLong())
+      case (AInt, AFloat) => (in, v, row) => v.putFloat(row, in.readInt().toFloat)
+      case (AInt, ADouble) => (in, v, row) => v.putDouble(row, in.readInt().toDouble)
+      case (ALong, AFloat) => (in, v, row) => v.putFloat(row, in.readLong().toFloat)
+      case (ALong, ADouble) => (in, v, row) => v.putDouble(row, in.readLong().toDouble)
+      case (AFloat, AFloat) => (in, v, row) => v.putFloat(row, in.readFloat())
+      case (AFloat, ADouble) => (in, v, row) => v.putDouble(row, in.readFloat().toDouble)
+      case (ADouble, _) => (in, v, row) => v.putDouble(row, in.readDouble())
+      case (_, AFixed(_, _, size, _)) => bytesPut(_.readFixed(size))
+      case (_, AString) => bytesPut(_.readStringBytes())
+      case _ => bytesPut(_.readBytes())
+    }
+  }
+
+  /** A file's decoder: per writer field its reader slot (-1: skipped) and
+    * compiled node, and per reader field the constant it takes when this
+    * writer never wrote it (the reader fills it as a constant vector). */
+  final class WirePlan private[OcfColumnar] (plan: Record, writer: ARecord) {
+    private val slots = plan.slots
+    private val fields = plan.fields.map(emit)
+    private val skipDatum = AvroSkipper.compile(writer)
+
+    /** Per reader field: Some(constant) for a field this writer never wrote. */
+    val constants: Array[Option[Any]] =
+      plan.defaults.indices.map(j => plan.defaults(j).map(_ => defaultOf(plan, j))).toArray
+
+    /** Decode the datum at `in` into row `row` of the writable `vectors`. */
+    def decode(in: AvroBinaryReader, vectors: Array[WritableColumnVector], row: Int): Unit = {
+      var i = 0
+      while (i < fields.length) {
+        val s = slots(i)
+        fields(i).put(in, if (s < 0) null else vectors(s), row)
+        i += 1
+      }
+    }
+
+    /** Walk past the datum at `in` (a position-deleted row still occupies
+      * wire bytes). */
+    def skip(in: AvroBinaryReader): Unit = skipDatum(in)
+  }
 }
 
 /** The vectorized split reader: the block walk of [[OcfBlocks.Cursor]] and
   * the delete state of [[OcfDeleteState]], as in [[OcfSplitReader]],
   * decoding up to `batchSize` datums per `next()` into reused on-heap
   * vectors. Vector types come from the READER fields; the decode loop runs
-  * this file's WIRE PLAN, so the union-branch byte is read exactly when the
-  * writer wrote one and projected-away writer columns are type-skipped.
+  * this file's [[OcfColumnar.WirePlan]], so the union-branch byte is read
+  * exactly when the writer wrote one and projected-away writer columns are
+  * type-skipped.
   * `appended` carries the split's CONSTANT trailing columns — required
   * partition values under their resolved read types, then (when requested)
   * the `_file` path — as `(DataType, catalystValue)` pairs; they become
@@ -547,7 +442,7 @@ private[graft] object OcfColumnar {
   * `limit` counts emitted rows, exactly like the row reader. */
 private[graft] final class OcfColumnarSplitReader(
     meta: OcfDataSource.OcfFileMeta, start: Long, end: Long,
-    fields: Array[OcfColumnar.Field], plan: OcfColumnar.WirePlan,
+    fields: OcfColumnar.Fields, plan: OcfColumnar.WirePlan,
     conf: Configuration,
     limit: Long = Long.MaxValue, aligned: Boolean = false,
     appended: Array[(DataType, Any)] = Array.empty,
@@ -605,11 +500,6 @@ private[graft] final class OcfColumnarSplitReader(
   private var emitIdx = 0
   private val emitEqGroups = deletes.emitEqGroups
   private val changesRead = deletes.changesRead
-  // a decoded row can be REJECTED (equality-deleted, or not matching the
-  // commit's new keys) and its slot reused by the next candidate — putX
-  // does not clear a stale null bit, so decode must putNotNull under any
-  // mode that rejects decoded rows
-  private val slotReuse = eqGroups.length > 0 || emitEqGroups.length > 0
 
   private var remaining = 0L
   private var emitted = 0L
@@ -651,19 +541,16 @@ private[graft] final class OcfColumnarSplitReader(
   }
   // reader fields this file WROTE decode into writable vectors; fields the
   // writer never had (post-ADD-COLUMN old files) are per-file CONSTANTS
-  // from their reader defaults — the plan validated they exist
-  private val writable: Array[OnHeapColumnVector] = new Array(fields.length)
-  private val vectors: Array[ColumnVector] = {
-    val absent = plan.absent.toSet
-    fields.zipWithIndex.map { case (f, i) =>
-      if (absent(i)) constVec(f.dt, OcfColumnar.constDefault(f).get)
-      else {
-        val v = new OnHeapColumnVector(capacity, f.dt)
+  // from their reader defaults — the plan admitted only constant forms
+  private val writable: Array[WritableColumnVector] = new Array(fields.types.length)
+  private val vectors: Array[ColumnVector] =
+    fields.types.zip(plan.constants).zipWithIndex.map {
+      case ((dt, Some(c)), _) => constVec(dt, c)
+      case ((dt, None), i) =>
+        val v = new OnHeapColumnVector(capacity, dt)
         writable(i) = v
         v
-      }
     }
-  }
   private val pairing = pairGroups.length > 0
   require(!pairing || (pairTagAt >= 0 && pairTagAt < appended.length &&
       appended(pairTagAt)._1 == StringType && pairBase != null && pairAlt != null),
@@ -818,471 +705,11 @@ private[graft] final class OcfColumnarSplitReader(
   private def matchesNewKeys(row: Int): Boolean =
     probe(emitEqGroups, emitExtractors, row)
 
+  private def decodeRow(row: Int): Unit = plan.decode(bin, writable, row)
+
   /** Walk one datum forward without touching the vectors (a
     * position-deleted ordinal still occupies wire bytes). */
-  private def skipRow(): Unit = {
-    val steps = plan.steps
-    var j = 0
-    while (j < steps.length) {
-      skipField(steps(j))
-      j += 1
-    }
-  }
-
-  private def skipField(step: OcfColumnar.WireStep): Unit = {
-    val isNull = step.nullable && bin.readLong().toInt == step.nullBranch
-    if (!isNull) {
-      if (step.children == null) skipValue(step.wire)
-      else step.wire match {
-        case _: ARecord =>
-          var k = 0
-          while (k < step.children.length) { skipField(step.children(k)); k += 1 }
-        // arrays/maps (X108): the wire schema self-describes the skip walk
-        case w => skipValue(w)
-      }
-    }
-  }
-
-  private def skipValue(wire: AvroSchema): Unit = wire match {
-    case AInt | ALong | ADate(_) | ATimeMillis(_) | ATimeMicros(_) |
-         ATimestampMillis(_) | ATimestampMicros(_) => bin.skipLong()
-    case AFloat => bin.skip(4L)
-    case ADouble => bin.skip(8L)
-    case ABoolean => bin.skip(1L)
-    case AString | ABytes | AUuid(_) => bin.skipBytes()
-    case d: ADecimal => d.underlying.physical match {
-      case f: AFixed => bin.skip(f.size.toLong)
-      case _ => bin.skipBytes()
-    }
-    case f: AFixed => bin.skip(f.size.toLong)
-    case _: AEnum => bin.skipLong()
-    case ANull => ()
-    // a union element inside a skipped array/map: branch byte, then branch
-    case AUnion(branches) => skipValue(branches(bin.readLong().toInt))
-    // a record inside a skipped nested shape (writer-only struct child,
-    // struct element of a skipped parent): skip each field by type
-    case r: ARecord =>
-      var i = 0
-      while (i < r.fields.length) { skipValue(r.fields(i).schema); i += 1 }
-    // array/map blocks: a sized block (negative count) skips in ONE seek;
-    // an unsized block walks its items by type
-    case AArray(items) =>
-      var c = bin.readLong()
-      while (c != 0L) {
-        if (c < 0L) bin.skip(bin.readLong())
-        else { var i = 0L; while (i < c) { skipValue(items); i += 1 } }
-        c = bin.readLong()
-      }
-    case AMap(values) =>
-      var c = bin.readLong()
-      while (c != 0L) {
-        if (c < 0L) bin.skip(bin.readLong())
-        else {
-          var i = 0L
-          while (i < c) { bin.skipBytes(); skipValue(values); i += 1 }
-        }
-        c = bin.readLong()
-      }
-    case other => throw new IllegalStateException(s"not flat: $other")
-  }
-
-  // per struct STEP, its reader struct vector's child vectors (X107)
-  private val structKids
-      : Array[Array[org.apache.spark.sql.execution.vectorized.WritableColumnVector]] =
-    plan.steps.map { st =>
-      if (st.children != null && st.target >= 0 && st.wire.isInstanceOf[ARecord]) {
-        val sv = writable(st.target)
-        val n = fields(st.target).children.length
-        Array.tabulate(n)(sv.getChild)
-      } else null
-    }
-
-  // NOTE: putConst (slot mode) and appendConst (element-append mode) are
-  // the same dispatch over the constDefault-producible types and must stay
-  // in lockstep — a type added to one without the other makes struct-field
-  // fills work while element fills throw (or vice versa).
-  private def putConst(
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-      row: Int, dt: DataType, value: Any): Unit = {
-    if (value == null) { v.putNull(row); return }
-    if (slotReuse) v.putNotNull(row) // reused slot: clear stale bit
-    dt match {
-      case BooleanType => v.putBoolean(row, value.asInstanceOf[Boolean])
-      case IntegerType | DateType => v.putInt(row, value.asInstanceOf[Int])
-      case LongType | TimestampType => v.putLong(row, value.asInstanceOf[Long])
-      case FloatType => v.putFloat(row, value.asInstanceOf[Float])
-      case DoubleType => v.putDouble(row, value.asInstanceOf[Double])
-      case StringType =>
-        val b = value.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-        v.putByteArray(row, b, 0, b.length)
-      case BinaryType =>
-        val b = value.asInstanceOf[Array[Byte]]
-        v.putByteArray(row, b, 0, b.length)
-      case other => throw new IllegalStateException(
-        s"graft-ocf: nested default of type ${other.simpleString} has no " +
-          "columnar fill")
-    }
-  }
-
-  /** Array decode (X108): Avro arrays are blocked runs — each block a
-    * count (negative = sized, abs(count) items follow a byte length),
-    * terminated by a 0 count. Elements APPEND into the growing child
-    * vector; the row's slot records (offset, length) — Spark's native
-    * columnar array shape. An equality-deleted row's appended elements are
-    * simply dead space in the child (the reused slot's putArray points past
-    * them), which a batch reset reclaims. */
-  private def decodeArray(elem: OcfColumnar.WireStep, row: Int,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-    val child = v.getChild(0)
-    val start = child.getElementsAppended
-    var total = 0
-    var c = bin.readLong()
-    while (c != 0L) {
-      if (c < 0L) { bin.readLong(); c = -c } // sized block: length unused
-      var i = 0L
-      while (i < c) { appendElement(elem, child); i += 1 }
-      total += c.toInt
-      c = bin.readLong()
-    }
-    v.putArray(row, start, total)
-  }
-
-  /** Map decode (X108): same block walk; each item is a string key + a
-    * value — parallel appends into the key/value child vectors keep them
-    * aligned (a null value still appends a null slot). */
-  private def decodeMap(valueStep: OcfColumnar.WireStep, row: Int,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-    val keys = v.getChild(0)
-    val vals = v.getChild(1)
-    val start = keys.getElementsAppended
-    var total = 0
-    var c = bin.readLong()
-    while (c != 0L) {
-      if (c < 0L) { bin.readLong(); c = -c }
-      var i = 0L
-      while (i < c) {
-        val kb = bin.readBytes()
-        keys.appendByteArray(kb, 0, kb.length)
-        appendElement(valueStep, vals)
-        i += 1
-      }
-      total += c.toInt
-      c = bin.readLong()
-    }
-    v.putArray(row, start, total)
-  }
-
-  /** A general UNION column (X111, struct-of-branches): the branch byte
-    * selects the member — the taken member decodes into its child vector,
-    * every other member's slot is explicitly nulled (slots are written
-    * exactly once per row), and the null branch nulls the whole struct. */
-  private def decodeUnion(step: OcfColumnar.WireStep, row: Int,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-      nMembers: Int): Unit = {
-    val b = bin.readLong().toInt
-    val c = step.children(b)
-    if (c.wire == ANull) v.putNull(row)
-    else {
-      if (slotReuse) v.putNotNull(row)
-      var m = 0
-      while (m < nMembers) {
-        if (m != c.target) v.getChild(m).putNull(row)
-        m += 1
-      }
-      val child = v.getChild(c.target)
-      // a REUSED slot may carry a stale null from a rejected row that took
-      // a different member (decodeUnion putNulls non-taken members), and
-      // branch steps are NON-nullable by Avro rules — nothing downstream
-      // would clear it, so clear it here
-      if (slotReuse) child.putNotNull(row)
-      if (c.children == null) decodeField(c, row, child)
-      else decodeNestedChild(c, row, child)
-    }
-  }
-
-  /** Reader-only children of a struct step (nested ADD COLUMN on an old
-    * file): fill their default constants into this present row's slots. */
-  private def fillAbsent(step: OcfColumnar.WireStep, row: Int,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-    val fills = step.absentFills
-    if (fills != null) {
-      var a = 0
-      while (a < fills.length) {
-        val (ord, dt, value) = fills(a)
-        putConst(v.getChild(ord), row, dt, value)
-        a += 1
-      }
-    }
-  }
-
-  /** A NESTED child of a struct step — array/map (X108 inside X107) or
-    * struct (recursion: arbitrary nesting of scalars/arrays/maps/structs):
-    * null branch marks the child vector inside the struct, present values
-    * decode into ITS child vectors. */
-  private def decodeNestedChild(step: OcfColumnar.WireStep, row: Int,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-    var isNull = false
-    if (step.nullable) {
-      val br = bin.readLong().toInt
-      if (br == step.nullBranch) {
-        isNull = true
-        if (v != null) v.putNull(row)
-      }
-    }
-    if (!isNull) {
-      if (v == null) skipValue(step.wire)
-      else {
-        if (step.nullable && slotReuse) v.putNotNull(row)
-        step.wire match {
-          case _: AArray => decodeArray(step.children(0), row, v)
-          case _: AMap => decodeMap(step.children(0), row, v)
-          case _: ARecord =>
-            val cs = step.children
-            var k = 0
-            while (k < cs.length) {
-              val c = cs(k)
-              val gv = if (c.target < 0) null else v.getChild(c.target)
-              if (c.children == null) decodeField(c, row, gv)
-              else decodeNestedChild(c, row, gv)
-              k += 1
-            }
-            fillAbsent(step, row, v)
-          case other => throw new IllegalStateException(s"not flat: $other")
-        }
-      }
-    }
-  }
-
-  /** One array/map element: same wire shapes as a scalar field, routed
-    * through the child vector's APPEND cursor (elements are dense — no
-    * slot addressing, no stale-null concerns). */
-  /** A STRUCT element of an array/map (X108): `appendStruct(false)`
-    * advances the struct vector, then every reader child receives exactly
-    * ONE append — matched children decode, writer-only children type-skip,
-    * reader-only children append their default constants — so the
-    * children's cursors stay element-aligned by construction. */
-  private def appendStructElement(step: OcfColumnar.WireStep,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-    v.appendStruct(false)
-    val cs = step.children
-    var k = 0
-    while (k < cs.length) {
-      val c = cs(k)
-      if (c.target < 0) skipField(c)
-      else appendElement(c, v.getChild(c.target))
-      k += 1
-    }
-    val fills = step.absentFills
-    if (fills != null) {
-      var a = 0
-      while (a < fills.length) {
-        val (ord, dt, value) = fills(a)
-        appendConst(v.getChild(ord), dt, value)
-        a += 1
-      }
-    }
-  }
-
-  private def appendConst(
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector,
-      dt: DataType, value: Any): Unit = {
-    if (value == null) { v.appendNull(); return }
-    dt match {
-      case BooleanType => v.appendBoolean(value.asInstanceOf[Boolean])
-      case IntegerType | DateType => v.appendInt(value.asInstanceOf[Int])
-      case LongType | TimestampType => v.appendLong(value.asInstanceOf[Long])
-      case FloatType => v.appendFloat(value.asInstanceOf[Float])
-      case DoubleType => v.appendDouble(value.asInstanceOf[Double])
-      case StringType =>
-        val b = value.asInstanceOf[org.apache.spark.unsafe.types.UTF8String].getBytes
-        v.appendByteArray(b, 0, b.length)
-      case BinaryType =>
-        val b = value.asInstanceOf[Array[Byte]]
-        v.appendByteArray(b, 0, b.length)
-      case other => throw new IllegalStateException(
-        s"graft-ocf: element default of type ${other.simpleString} has no " +
-          "columnar append")
-    }
-  }
-
-  private def appendElement(step: OcfColumnar.WireStep,
-      v: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-    if (step.nullable) {
-      val br = bin.readLong().toInt
-      if (br == step.nullBranch) {
-        // a null STRUCT element must keep the children's append cursors
-        // aligned — appendStruct(true) appends a null slot to each child
-        if (step.wire.isInstanceOf[ARecord]) v.appendStruct(true)
-        else v.appendNull()
-        return
-      }
-    }
-    if (step.children != null && step.wire.isInstanceOf[ARecord]) {
-      appendStructElement(step, v); return
-    }
-    if (step.rdt != null) (step.wire, step.rdt) match {
-      case (AInt | ALong, LongType) => v.appendLong(bin.readLong())
-      case (AInt | ALong, FloatType) => v.appendFloat(bin.readLong().toFloat)
-      case (AInt | ALong, DoubleType) => v.appendDouble(bin.readLong().toDouble)
-      case (AFloat, DoubleType) => v.appendDouble(bin.readFloat().toDouble)
-      case other => throw new IllegalStateException(
-        s"graft-ocf: unplanned element promotion $other")
-    } else step.wire match {
-      case AInt | ADate(_) | ATimeMillis(_) => v.appendInt(bin.readLong().toInt)
-      case ALong | ATimeMicros(_) | ATimestampMicros(_) =>
-        v.appendLong(bin.readLong())
-      case ATimestampMillis(_) => v.appendLong(bin.readLong() * 1000L)
-      case AFloat => v.appendFloat(bin.readFloat())
-      case ADouble => v.appendDouble(bin.readDouble())
-      case ABoolean => v.appendBoolean(bin.readBoolean())
-      case AString | ABytes | AUuid(_) =>
-        val b = bin.readBytes()
-        v.appendByteArray(b, 0, b.length)
-      case f: AFixed =>
-        val b = bin.readFixed(f.size)
-        v.appendByteArray(b, 0, b.length)
-      case e: AEnum =>
-        val b = e.symbols(bin.readInt()).getBytes(
-          java.nio.charset.StandardCharsets.UTF_8)
-        v.appendByteArray(b, 0, b.length)
-      case d @ ADecimal(p, s, _) =>
-        // no appendDecimal form exists: reserve the slot explicitly, then
-        // put at it — putDecimal routes to int/long/bytes by precision
-        val b = d.underlying.physical match {
-          case f: AFixed => bin.readFixed(f.size)
-          case _ => bin.readBytes()
-        }
-        val idx = v.appendNotNull()
-        v.putDecimal(idx, org.apache.spark.sql.types.Decimal(
-          new java.math.BigDecimal(new java.math.BigInteger(b), s)), p)
-      case other => throw new IllegalStateException(s"not flat: $other")
-    }
-  }
-
-  private def decodeRow(row: Int): Unit = {
-    val steps = plan.steps
-    var j = 0
-    while (j < steps.length) {
-      val step = steps(j)
-      if (step.children == null) decodeField(step, row,
-        if (step.target < 0) null else writable(step.target))
-      else {
-        // NESTED step (X107 struct / X108 array / X108 map): null branch
-        // marks the parent vector; present values decode into the parent's
-        // child vectors — slots of a null parent stay untouched (the
-        // parent null masks them)
-        var isNull = false
-        if (step.nullable) {
-          val br = bin.readLong().toInt
-          if (br == step.nullBranch) {
-            isNull = true
-            if (step.target >= 0) writable(step.target).putNull(row)
-          }
-        }
-        if (!isNull) {
-          val cs = step.children
-          if (step.target < 0) step.wire match {
-            case _: ARecord =>
-              var k = 0
-              while (k < cs.length) { skipField(cs(k)); k += 1 }
-            case w => skipValue(w)
-          } else {
-            val v = writable(step.target)
-            if (step.nullable && slotReuse) v.putNotNull(row)
-            step.wire match {
-              case _: ARecord =>
-                val kids = structKids(j)
-                var k = 0
-                while (k < cs.length) {
-                  val c = cs(k)
-                  val cv = if (c.target < 0) null else kids(c.target)
-                  if (c.children == null) decodeField(c, row, cv)
-                  else decodeNestedChild(c, row, cv) // array/map in struct
-                  k += 1
-                }
-                // reader-only children: fill defaults for this present row
-                fillAbsent(step, row, v)
-              case _: AArray => decodeArray(cs(0), row, v)
-              case _: AMap => decodeMap(cs(0), row, v)
-              case _: AUnion =>
-                decodeUnion(step, row, v, fields(step.target).children.length)
-              case other => throw new IllegalStateException(s"not flat: $other")
-            }
-          }
-        }
-      }
-      j += 1
-    }
-  }
-
-  private def decodeField(step: OcfColumnar.WireStep, row: Int,
-      v0: org.apache.spark.sql.execution.vectorized.WritableColumnVector): Unit = {
-      var isNull = false
-      if (step.nullable) {
-        val br = bin.readLong().toInt
-        if (br == step.nullBranch) {
-          isNull = true
-          if (v0 != null) v0.putNull(row)
-        }
-      }
-      if (!isNull) {
-        if (v0 == null) skipValue(step.wire)
-        else {
-          val v = v0
-          // an equality-deleted row's slot is REUSED by the next surviving
-          // row: putX does not clear a stale null bit, so clear it here
-          if (step.nullable && slotReuse) v.putNotNull(row)
-          if (step.rdt != null) {
-            // numeric Avro PROMOTION: decode the writer primitive, widen
-            // into the reader-typed vector (the row lane's conversions)
-            (step.wire, step.rdt) match {
-              case (AInt | ALong, LongType) => v.putLong(row, bin.readLong())
-              case (AInt | ALong, FloatType) =>
-                v.putFloat(row, bin.readLong().toFloat)
-              case (AInt | ALong, DoubleType) =>
-                v.putDouble(row, bin.readLong().toDouble)
-              case (AFloat, DoubleType) =>
-                v.putDouble(row, bin.readFloat().toDouble)
-              case other => throw new IllegalStateException(
-                s"graft-ocf: unplanned promotion $other")
-            }
-          } else step.wire match {
-            case AInt | ADate(_) | ATimeMillis(_) =>
-              v.putInt(row, bin.readLong().toInt)
-            case ALong | ATimeMicros(_) | ATimestampMicros(_) =>
-              v.putLong(row, bin.readLong())
-            case ATimestampMillis(_) =>
-              // ms -> us, the row reader's exact conversion (TimestampType)
-              v.putLong(row, bin.readLong() * 1000L)
-            case AFloat => v.putFloat(row, bin.readFloat())
-            case ADouble => v.putDouble(row, bin.readDouble())
-            case ABoolean => v.putBoolean(row, bin.readBoolean())
-            case AString | ABytes | AUuid(_) =>
-              val b = bin.readBytes()
-              v.putByteArray(row, b, 0, b.length)
-            case d @ ADecimal(p, s, _) =>
-              // big-endian two's complement (BigInteger sign-extends), scale
-              // from the schema — the row lane's exact construction
-              val b = d.underlying.physical match {
-                case f: AFixed => bin.readFixed(f.size)
-                case _ => bin.readBytes()
-              }
-              v.putDecimal(row, org.apache.spark.sql.types.Decimal(
-                new java.math.BigDecimal(new java.math.BigInteger(b), s)), p)
-            case f: AFixed =>
-              val b = bin.readFixed(f.size)
-              v.putByteArray(row, b, 0, b.length)
-            case e: AEnum =>
-              // writer-driven: index -> the WRITER's symbol, the row lane's
-              // exact decode (the plan admitted only subset-safe enums)
-              val b = e.symbols(bin.readInt()).getBytes(
-                java.nio.charset.StandardCharsets.UTF_8)
-              v.putByteArray(row, b, 0, b.length)
-            case other => throw new IllegalStateException(s"not flat: $other")
-          }
-        }
-      }
-  }
+  private def skipRow(): Unit = plan.skip(bin)
 
   override def get(): ColumnarBatch = batch
 

@@ -2144,16 +2144,15 @@ private[graft] final case class OcfScan(
         else files.iterator.zipWithIndex.flatMap { case (f, i) =>
           eqDeletes.get(f.path).map(ds => i -> slim(ds))
         }.toMap
-      // vectorized fast lane (X91): flat all-primitive reader schema and a
-      // positional wire plan for EVERY planned file (identity, pruned
-      // subsets, plain-writer-under-nullable-reader) — everything else
-      // rides the row reader. Partition values and `_file` are per-split
+      // vectorized fast lane (X91): a lane-shaped reader schema and an
+      // admitted wire plan for EVERY planned file ([[OcfColumnar]]) —
+      // everything else rides the row reader. Partition values and `_file` are per-split
       // CONSTANTS and ride as constant vectors; MoR position/equality
       // deletes vectorize too (X105: skip-decode / slot-reuse in
       // [[OcfColumnarSplitReader]]), so a burdened table keeps the lane;
       // `_pos` rides as a real LongType ordinal vector (whole-file splits,
       // planner-enforced) — the CDC anti-joins' scan shape.
-      val cf: Option[Array[OcfColumnar.Field]] =
+      val cf: Option[OcfColumnar.Fields] =
         if (!columnarEnabled || wrap) None
         else OcfColumnar.fieldsFor(readerJson).filter(rf =>
           files.forall(m =>
@@ -2332,10 +2331,10 @@ private[sources] final case class OcfReaderFactory(
     withFilePath: Boolean = false,
     withPos: Boolean = false,
     deletes: Map[Int, Seq[OcfDataSource.OcfFileMeta]] = Map.empty,
-    // vectorized fast lane (X91): defined only when EVERY planned file's
-    // flat primitive schema resolves identically — uniform across
-    // partitions, so Spark's all-or-nothing columnar planning holds
-    columnarFields: Option[Array[OcfColumnar.Field]] = None,
+    // vectorized fast lane (X91): defined only when EVERY planned file
+    // admits a wire plan — uniform across partitions, so Spark's
+    // all-or-nothing columnar planning holds
+    columnarFields: Option[OcfColumnar.Fields] = None,
     // equality deletes (X94): per-file-index metas of the key files whose
     // tuples the reader drops
     eqDeletes: Map[Int, Seq[OcfDataSource.OcfFileMeta]] = Map.empty)
@@ -2816,7 +2815,8 @@ private[sources] object OcfBlocks {
     * in a block walk, `block` reads its decompressed datums.
     *
     * `blocksRead`/`bytesRead` are the scan's task metrics: 20 bytes per
-    * header pread, plus body and sync in a block walk. Any step after the
+    * header pread, plus body and sync in a block walk, plus the chunks a
+    * mid-file split's sync scan reads. Any step after the
     * file opens that throws closes the stream before rethrowing, so a
     * caller whose own construction fails leaks nothing; `close()` is
     * idempotent. */
@@ -2837,20 +2837,20 @@ private[sources] object OcfBlocks {
     // own the blocks whose introducing sync STARTS in [start, end), hence
     // the grace of one marker on the stop bound.
     private val stopAt: Long = if (aligned) end else end + Ocf.SyncSize
+    var blocksRead = 0L
+    var bytesRead = 0L
     // offset of the next block's count varint (always just past a sync
     // marker), or -1 when this split has no further anchored block
     private var blockStart: Long = guarded {
       if (aligned) start
       else if (start == 0L) meta.headerEnd
-      else syncScan(in, meta.sync, meta.len, start, end)
+      else syncScan()
     }
 
     /** Row count of the current block. */
     var count = 0L
     /** The current block's decompressed datums (block walk only). */
     var block: AvroBinaryReader = _
-    var blocksRead = 0L
-    var bytesRead = 0L
 
     /** Move to the next block this split owns; false past the last. */
     def next(): Boolean =
@@ -2884,6 +2884,36 @@ private[sources] object OcfBlocks {
 
     override def close(): Unit = if (!closed) { closed = true; in.close() }
 
+    /** Find the first sync marker starting at offset `m >= start` with
+      * `m < end`, reading the file in 64 KB chunks with a 15-byte overlap
+      * so a marker spanning a chunk boundary is still seen; every chunk
+      * counts into `bytesRead`. Returns the block anchor `m + 16`, or -1 if
+      * this split owns no block. */
+    private def syncScan(): Long = {
+      val sync = meta.sync
+      val first = sync(0)
+      val chunk = 1 << 16
+      val buf = new Array[Byte](chunk + Ocf.SyncSize - 1)
+      var base = start
+      while (base < end && base <= meta.len - Ocf.SyncSize) {
+        val n = math.min(buf.length.toLong, meta.len - base).toInt
+        in.readFully(base, buf, 0, n)
+        bytesRead += n
+        val iMax = math.min((n - Ocf.SyncSize).toLong, end - base - 1L).toInt
+        var i = 0
+        while (i <= iMax) {
+          if (buf(i) == first) {
+            var j = 1
+            while (j < Ocf.SyncSize && buf(i + j) == sync(j)) j += 1
+            if (j == Ocf.SyncSize) return base + i + Ocf.SyncSize
+          }
+          i += 1
+        }
+        base += chunk
+      }
+      -1L
+    }
+
     private def guarded[T](step: => T): T =
       try step
       catch {
@@ -2909,31 +2939,4 @@ private[sources] object OcfBlocks {
     BlockHeader(count, size, blockStart + hr.pos)
   }
 
-  /** Find the first sync marker starting at offset `m >= from` with
-    * `m < end`, reading the file in 64 KB chunks with a 15-byte overlap
-    * so a marker spanning a chunk boundary is still seen. Returns the block
-    * anchor `m + 16`, or -1 if this split owns no block. */
-  private def syncScan(in: FSDataInputStream, sync: Array[Byte], fileLen: Long,
-                       from: Long, end: Long): Long = {
-    val first = sync(0)
-    val chunk = 1 << 16
-    val buf = new Array[Byte](chunk + Ocf.SyncSize - 1)
-    var base = from
-    while (base < end && base <= fileLen - Ocf.SyncSize) {
-      val n = math.min(buf.length.toLong, fileLen - base).toInt
-      in.readFully(base, buf, 0, n)
-      val iMax = math.min((n - Ocf.SyncSize).toLong, end - base - 1L).toInt
-      var i = 0
-      while (i <= iMax) {
-        if (buf(i) == first) {
-          var j = 1
-          while (j < Ocf.SyncSize && buf(i + j) == sync(j)) j += 1
-          if (j == Ocf.SyncSize) return base + i + Ocf.SyncSize
-        }
-        i += 1
-      }
-      base += chunk
-    }
-    -1L
-  }
 }

@@ -200,6 +200,7 @@ object CatalystAvroReader {
           row
       }
       case (x: String, _) => UTF8String.fromString(x)
+      case (x: Long, ATimestampMillis(_)) => x * 1000L // ms → µs (TimestampType)
       case (x: JBigDecimal, ADecimal(p, sc, _)) => Decimal(x, p, sc)
       case (x: java.time.LocalDate, _) => x.toEpochDay.toInt
       case (x: java.time.LocalTime, ATimeMillis(_)) => (x.toNanoOfDay / 1000000L).toInt

@@ -37,6 +37,15 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
 
   private def utf8(s: String): Array[Byte] = s.getBytes(StandardCharsets.UTF_8)
 
+  /** A decode's value, or the class of what it threw. */
+  private def outcome(t: Try[Any]): Either[String, Any] =
+    t.fold(e => Left(e.getClass.getName), v => Right(v))
+  private def agree(a: Either[String, Any], b: Either[String, Any]): Boolean = (a, b) match {
+    case (Left(x), Left(y)) => x == y
+    case (Right(x), Right(y)) => same(x, y)
+    case _ => false
+  }
+
   private def runProp(prop: Prop, min: Int): Unit = {
     val res = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(min), prop)
     assert(res.passed, res.status.toString)
@@ -120,13 +129,6 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
       case (AString | _: AUuid | ABytes | _: AFixed | _: AEnum, ABytes | _: AFixed) => Some(raw(d))
       case _ => None
     }
-    def outcome(t: Try[Any]): Either[String, Any] =
-      t.fold(e => Left(e.getClass.getName), v => Right(v))
-    def agree(a: Either[String, Any], b: Either[String, Any]): Boolean = (a, b) match {
-      case (Left(x), Left(y)) => x == y
-      case (Right(x), Right(y)) => same(x, y)
-      case _ => false
-    }
     val failures = for {
       (w, d) <- scalars
       r <- scalars.map(_._1)
@@ -147,6 +149,28 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
       if !agree(got, want)
     } yield s"writer $w, reader $r$what: got $got, expected $want"
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("a nullable writer's value reads under a nullable reader as the plain writer's does") {
+    // a ["null", T] reader holds a T, so a non-null branch of a ["null", W]
+    // writer reads as a plain W writer does under that reader, also where
+    // W matches no reader branch
+    val fixed = AFixed("F", None, 4)
+    val values: Seq[(AvroSchema, Any)] = Seq(
+      AInt -> 7, ALong -> 7L, AFloat -> 1.5f, ABytes -> utf8("abcd"), AString -> "wxyz",
+      fixed -> utf8("wxyz"), AEnum("E", None, Seq("A", "B")) -> "B", AUuid() -> "u-1")
+    val misses = for {
+      (w, d) <- values
+      r <- values.map(_._1)
+      reader = AUnion(Seq(ANull, r))
+      body = new AvroDatumWriter(w.physical).toBytes(d)
+      plain = outcome(Try(CatalystAvroReader.compile(w, reader)(new AvroBinaryReader(body))))
+      // branch 1 of ["null", W] is the zigzag varint 2, then W's bytes
+      nullable = outcome(Try(CatalystAvroReader.compile(AUnion(Seq(ANull, w)), reader)(
+        new AvroBinaryReader(Array[Byte](2) ++ body))))
+      if !agree(nullable, plain)
+    } yield s"writer [null, $w], reader [null, $r]: got $nullable, plain writer $plain"
+    assert(misses.isEmpty, misses.mkString("\n"))
   }
 
   lazy val spark: SparkSession = SparkSession.builder()

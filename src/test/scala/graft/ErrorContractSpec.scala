@@ -303,6 +303,20 @@ class ErrorContractSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     def surfaces(datum: Array[Byte]): Seq[(String, () => Unit)] = {
       val ocf = Ocf.writePreEncoded(AvroSchemaParser.parse(js), Iterator(datum))
+      // a graft-ocf scan of the datum on each decode lane, whole and with
+      // `u` projected away (the lane then skips it); the plan is checked
+      // here, outside the intercept below
+      val dir = java.nio.file.Files.createTempDirectory("graft-errors-ocf").toFile
+      java.nio.file.Files.write(new java.io.File(dir, "d.avro").toPath, ocf)
+      val scans = for (columnar <- Seq(true, false); cols <- Seq(Seq("s", "e", "u"), Seq("s", "e")))
+        yield {
+          val df = spark.read.format("graft-ocf").option("columnar", columnar.toString)
+            .load(dir.getAbsolutePath).select(cols.map(col): _*)
+          assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow") == columnar,
+            df.queryExecution.executedPlan.toString)
+          s"graft-ocf scan of ${cols.mkString(", ")}, columnar=$columnar" ->
+            (() => { df.collect(); () })
+        }
       val kpl = graft.framing.KplDeaggregator.encode(graft.framing.KplDeaggregator.Aggregated(
         Seq("pk"), Nil, Seq(graft.framing.KplDeaggregator.KplRecord(0, None,
           graft.framing.SpringHeaders.frame(Seq("contentType" -> contentType), datum)))))
@@ -311,7 +325,7 @@ class ErrorContractSpec extends AnyFunSuite {
         StructType(Seq(
           StructField("stream", org.apache.spark.sql.types.StringType),
           StructField("payload", BinaryType))))
-      Seq(
+      val decodes: Seq[(String, () => Unit)] = Seq(
         "from_avro" -> (() =>
           payloadDf(datum).select(gfn.from_avro(col("payload"), js)).collect()),
         "avro_ocf_decode" -> (() =>
@@ -326,12 +340,16 @@ class ErrorContractSpec extends AnyFunSuite {
         "registry_decode_json" -> (() =>
           streams.select(gfn.registry_decode_json(col("stream"), col("payload"), registry))
             .collect()))
+      decodes ++ scans
     }
-    for ((what, datum, cls, msg) <- corrupt; (surface, run) <- surfaces(datum)) {
-      val e = intercept[Exception](run())
-      val root = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last
-      assert(root.getClass.getName == cls && root.getMessage == msg,
-        s"$surface, $what: got $root")
-    }
+    // every surface on every row is checked, and every miss reported
+    val misses = for {
+      (what, datum, cls, msg) <- corrupt
+      (surface, run) <- surfaces(datum)
+      root = scala.util.Try(run()).failed.toOption.map(e =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last)
+      if !root.exists(r => r.getClass.getName == cls && r.getMessage == msg)
+    } yield s"$surface, $what: got ${root.getOrElse("no exception")}"
+    assert(misses.isEmpty, misses.mkString("\n"))
   }
 }

@@ -123,6 +123,38 @@ class ColumnarPropertySpec extends AnyFunSuite {
       else genValue(f.dataType)
     }).map(Row.fromSeq)
 
+  /** A random value of a kernel-written Avro schema. */
+  private def avroValue(s: graft.avro.AvroSchema): Gen[Any] = {
+    import graft.avro._
+    s match {
+      case ABoolean => Gen.oneOf(true, false)
+      case AInt => Gen.chooseNum(Int.MinValue, Int.MaxValue)
+      case ALong => Gen.chooseNum(Long.MinValue, Long.MaxValue)
+      case AFloat => Gen.chooseNum(-1e20f, 1e20f)
+      case ADouble => Gen.chooseNum(-1e200, 1e200)
+      case AString => Gen.alphaNumStr.map(_.take(20))
+      case ABytes => Gen.choose(0, 12).flatMap(k =>
+        Gen.listOfN(k, Gen.chooseNum(Byte.MinValue, Byte.MaxValue)).map(_.toArray))
+      case e: AEnum => Gen.oneOf(e.symbols)
+      case f: AFixed => Gen.const(Array.tabulate[Byte](f.size)(i => (i * 7).toByte))
+      case ADecimal(p, s, _) =>
+        val mx = BigInt(10).pow(math.min(p, 11)) - 1
+        Gen.chooseNum(-mx.toLong, mx.toLong).map(u =>
+          new java.math.BigDecimal(java.math.BigInteger.valueOf(u), s))
+      case AUnion(Seq(ANull, p)) =>
+        Gen.frequency(1 -> Gen.const(null), 3 -> avroValue(p))
+      case r: ARecord =>
+        Gen.sequence[Seq[Any], Any](r.fields.map(f => avroValue(f.schema)))
+          .map(vs => AvroRecord(r, vs.toArray))
+      case AArray(items) =>
+        Gen.choose(0, 8).flatMap(k => Gen.listOfN(k, avroValue(items)).map(_.toSeq))
+      case AMap(values) =>
+        Gen.choose(0, 5).flatMap(k => Gen.listOfN(k,
+          Gen.zip(Gen.alphaNumStr.map(_.take(8)), avroValue(values))).map(_.toMap))
+      case other => throw new IllegalStateException(other.typeName)
+    }
+  }
+
   // canonical, NaN-stable rendering for comparison
   private def canon(df: DataFrame): Seq[Seq[String]] =
     df.collect().toSeq.map(r => (0 until r.length).map { i =>
@@ -164,30 +196,6 @@ class ColumnarPropertySpec extends AnyFunSuite {
         yield AArray(if (nb) AUnion(Seq(ANull, e)) else e)),
       1 -> (for { v <- genScalarWire; nb <- Gen.oneOf(true, false) }
         yield AMap(if (nb) AUnion(Seq(ANull, v)) else v)))
-    def valueOf(s: AvroSchema): Gen[Any] = s match {
-      case ABoolean => Gen.oneOf(true, false)
-      case AInt => Gen.chooseNum(Int.MinValue, Int.MaxValue)
-      case ALong => Gen.chooseNum(Long.MinValue, Long.MaxValue)
-      case AFloat => Gen.chooseNum(-1e20f, 1e20f)
-      case ADouble => Gen.chooseNum(-1e200, 1e200)
-      case AString => Gen.alphaNumStr.map(_.take(20))
-      case ABytes => Gen.choose(0, 12).flatMap(k =>
-        Gen.listOfN(k, Gen.chooseNum(Byte.MinValue, Byte.MaxValue)).map(_.toArray))
-      case e: AEnum => Gen.oneOf(e.symbols)
-      case f: AFixed => Gen.const(Array.tabulate[Byte](f.size)(i => (i * 7).toByte))
-      case ADecimal(p, s, _) =>
-        val mx = BigInt(10).pow(math.min(p, 11)) - 1
-        Gen.chooseNum(-mx.toLong, mx.toLong).map(u =>
-          new java.math.BigDecimal(java.math.BigInteger.valueOf(u), s))
-      case AUnion(Seq(ANull, p)) =>
-        Gen.frequency(1 -> Gen.const(null), 3 -> valueOf(p))
-      case AArray(items) =>
-        Gen.choose(0, 8).flatMap(k => Gen.listOfN(k, valueOf(items)).map(_.toSeq))
-      case AMap(values) =>
-        Gen.choose(0, 5).flatMap(k => Gen.listOfN(k,
-          Gen.zip(Gen.alphaNumStr.map(_.take(8)), valueOf(values))).map(_.toMap))
-      case other => throw new IllegalStateException(other.typeName)
-    }
     for (iter <- 1 to 6) {
       val n = next(Gen.choose(1, 6))
       val fields = (0 until n).map { i =>
@@ -197,7 +205,7 @@ class ColumnarPropertySpec extends AnyFunSuite {
       }
       val schema = ARecord(s"ExtProp$iter", Some("prop.ext"), fields)
       val rows = (0 until 200 + iter * 13).map { _ =>
-        AvroRecord(schema, fields.map(f => next(valueOf(f.schema))).toArray)
+        AvroRecord(schema, fields.map(f => next(avroValue(f.schema))).toArray)
       }
       val dir = tempDir(s"graft-colprop-ext-$iter")
       java.nio.file.Files.write(
@@ -259,6 +267,70 @@ class ColumnarPropertySpec extends AnyFunSuite {
         .option("upsertKeys", "k").mode("append").save(dir)
       assert(canon(rd(true)) == canon(rd(false)),
         s"iter $iter equality-burdened mismatch on ${keyed.simpleString}")
+    }
+  }
+
+  test("random NESTED evolution (a child renamed through an alias, a child " +
+      "added with a default, a promoted child, a writer-only child) reads " +
+      "value-identical through both lanes in structs, arrays and maps") {
+    import graft.avro._
+    val params = Gen.Parameters.default
+    var seed = rng.Seed(2026_1019L)
+    def next[A](g: Gen[A]): A = { val v = g.pureApply(params, seed); seed = seed.next; v }
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    val scalars: Seq[AvroSchema] = Seq(ABoolean, AInt, ALong, AFloat, ADouble, AString, ABytes)
+    val promotions: Seq[(AvroSchema, AvroSchema)] = Seq(AInt -> ALong, AInt -> AFloat,
+      AInt -> ADouble, ALong -> AFloat, ALong -> ADouble, AFloat -> ADouble,
+      AString -> ABytes, ABytes -> AString)
+    // an added child's type and its default, as JSON
+    val additions: Seq[(AvroSchema, String)] = Seq(ABoolean -> "true", AInt -> "-7",
+      ALong -> "123456789012", AFloat -> "1.5", ADouble -> "-2.25", AString -> "\"dflt\"",
+      ABytes -> "\"\\u00ff\\u0001\"", ADate() -> "19000", ATimestampMillis() -> "1700000000123",
+      AEnum("Lvl", None, Seq("LO", "HI")) -> "\"HI\"", AUnion(Seq(ANull, AString)) -> "null",
+      AUnion(Seq(ANull, ALong)) -> "null")
+    def maybeNull(t: AvroSchema, nullable: Boolean) = if (nullable) AUnion(Seq(ANull, t)) else t
+    for (iter <- 1 to 8) {
+      val k = next(Gen.choose(3, 5))
+      val kids = (0 until k).map(i => AField(s"c$i",
+        maybeNull(next(Gen.oneOf(scalars)), next(Gen.oneOf(true, false)))))
+      val (pw, pr) = next(Gen.oneOf(promotions))
+      val (addType, addDefault) = next(Gen.oneOf(additions))
+      val renamed = next(Gen.choose(0, k - 1))
+      val dropped = (renamed + 1 + next(Gen.choose(0, k - 2))) % k
+      val writerStruct = ARecord("S", Some("prop.evo"), kids :+ AField("p", pw))
+      val readerKids = kids.zipWithIndex.collect {
+        case (f, i) if i == renamed => f.copy(name = s"r$i", aliases = Seq(f.name))
+        case (f, i) if i != dropped => f
+      } :+ AField("p", pr)
+      val at = next(Gen.choose(0, readerKids.length))
+      val readerStruct = ARecord("S", Some("prop.evo"), readerKids.take(at) ++
+        Seq(AField("added", addType, Some(json.readTree(addDefault)))) ++ readerKids.drop(at))
+      // the evolving struct sits in a struct, an array, a map or a struct
+      // inside a struct, itself plain or nullable
+      val site = next(Gen.choose(0, 3))
+      val nullable = next(Gen.oneOf(true, false))
+      def place(st: ARecord): AvroSchema = maybeNull(site match {
+        case 0 => st
+        case 1 => AArray(st)
+        case 2 => AMap(st)
+        case _ => ARecord("O", Some("prop.evo"), Seq(AField("inner", st), AField("z", ALong)))
+      }, nullable)
+      def record(st: ARecord) = ARecord(s"Evo$iter", Some("prop.evo"),
+        Seq(AField("id", ALong), AField("n", place(st))))
+      val writer = record(writerStruct)
+      val rows = (0 until 150 + iter * 11).map { i =>
+        AvroRecord(writer, Array[Any](i.toLong, next(avroValue(writer.fields(1).schema))))
+      }
+      val dir = tempDir(s"graft-colprop-evo-$iter")
+      java.nio.file.Files.write(
+        new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(writer, rows))
+      def rd(c: Boolean) = spark.read.format("graft-ocf")
+        .option("readerSchema", AvroSchemaParser.toJson(record(readerStruct)))
+        .option("columnar", c.toString).load(dir)
+      val what = s"evo iter $iter: ${AvroSchemaParser.toJson(readerStruct)} at site $site"
+      assert(rd(true).queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+        s"$what did not vectorize")
+      assert(canon(rd(true)) == canon(rd(false)), s"$what mismatch")
     }
   }
 }

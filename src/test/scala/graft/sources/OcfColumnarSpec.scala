@@ -22,6 +22,22 @@ class OcfColumnarSpec extends AnyFunSuite {
   private def isColumnar(df: DataFrame): Boolean =
     df.queryExecution.executedPlan.toString.contains("ColumnarToRow")
 
+  /** Write `datums` under `writer` as an external file, read them under
+    * `readerJson` on each lane (the columnar read must take the lane), and
+    * return both lanes' rows, rendered and sorted. */
+  private def readBothLanes(writer: graft.avro.ARecord, datums: Seq[graft.avro.AvroRecord],
+      readerJson: String): (Seq[String], Seq[String]) = {
+    val dir = tempDir("graft-col-lanes")
+    java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath,
+      graft.avro.Ocf.writeAll(writer, datums))
+    def rd(columnar: Boolean) = spark.read.format("graft-ocf")
+      .option("columnar", columnar.toString).option("readerSchema", readerJson)
+      .load(dir.getAbsolutePath)
+    assert(isColumnar(rd(columnar = true)), rd(columnar = true).queryExecution.executedPlan.toString)
+    def rendered(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    (rendered(rd(columnar = true)), rendered(rd(columnar = false)))
+  }
+
   test("flat primitive scans read columnar; results equal the row path") {
     import spark.implicits._
     val dir = tempDir("graft-col")
@@ -342,15 +358,22 @@ class OcfColumnarSpec extends AnyFunSuite {
 
     // wire-plan level: an EXTERNAL writer's timestamp-millis resolves under
     // a timestamp-micros reader (same Spark type; decode is writer-driven)
-    val reader = OcfColumnar.fieldsFor(
+    val readerJson =
       """{"type":"record","name":"r","fields":[
         |{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}}]}"""
-        .stripMargin).get
-    val plan = OcfColumnar.wirePlanFor(
+        .stripMargin
+    val reader = OcfColumnar.fieldsFor(readerJson).get
+    val writerJson =
       """{"type":"record","name":"r","fields":[
         |{"name":"ts","type":{"type":"long","logicalType":"timestamp-millis"}}]}"""
-        .stripMargin, reader)
-    assert(plan.isDefined && plan.get.steps.length == 1 && plan.get.steps.head.target == 0)
+        .stripMargin
+    val plan = OcfColumnar.wirePlanFor(writerJson, reader)
+    assert(plan.isDefined)
+    val writer = graft.avro.AvroSchemaParser.parse(writerJson).asInstanceOf[graft.avro.ARecord]
+    val (col, row) = readBothLanes(writer, (0 until 50).map(i => graft.avro.AvroRecord(writer,
+      Array[Any](java.time.Instant.ofEpochMilli(1700000000123L + i)))), readerJson)
+    assert(col == row)
+    assert(col.head == s"[${java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(1700000000123L))}]")
   }
 
   test("decimal (bytes and fixed encodings) rides the columnar lane, " +
@@ -392,12 +415,19 @@ class OcfColumnarSpec extends AnyFunSuite {
         |{"name":"d","type":{"type":"bytes","logicalType":"decimal",
         |"precision":10,"scale":2}}]}""".stripMargin)
     assert(rf.isDefined)
-    val fixedPlan = OcfColumnar.wirePlanFor(
+    val fixedWriterJson =
       """{"type":"record","name":"r","fields":[
         |{"name":"d","type":{"type":"fixed","name":"f","size":5,
-        |"logicalType":"decimal","precision":10,"scale":2}}]}""".stripMargin,
-      rf.get)
-    assert(fixedPlan.isDefined && fixedPlan.get.steps.head.target == 0)
+        |"logicalType":"decimal","precision":10,"scale":2}}]}""".stripMargin
+    val fixedPlan = OcfColumnar.wirePlanFor(fixedWriterJson, rf.get)
+    assert(fixedPlan.isDefined)
+    val fixedWriter = graft.avro.AvroSchemaParser.parse(fixedWriterJson)
+      .asInstanceOf[graft.avro.ARecord]
+    val (fixedCol, fixedRow) = readBothLanes(fixedWriter, (0 until 50).map(i =>
+      graft.avro.AvroRecord(fixedWriter, Array[Any](BigDecimal(i * 1001L - 25000L, 2).bigDecimal))),
+      rf.get.readerJson)
+    assert(fixedCol == fixedRow)
+    assert(fixedCol.contains("[-250.00]") && fixedCol.contains("[240.49]"))
     // precision beyond DecimalType's 38 must refuse the lane
     assert(OcfColumnar.fieldsFor(
       """{"type":"record","name":"r","fields":[
@@ -534,7 +564,13 @@ class OcfColumnarSpec extends AnyFunSuite {
     val healed = OcfColumnar.wirePlanFor(oldWriter, rf)
     assert(healed.isDefined,
       "a struct child WITH a default must fill columnar (X106 at depth)")
-    assert(healed.get.steps(0).absentFills.map(_._1).toSeq == Seq(1))
+    val oldSchema = graft.avro.AvroSchemaParser.parse(oldWriter).asInstanceOf[graft.avro.ARecord]
+    val mSchema = oldSchema.fields.head.schema.asInstanceOf[graft.avro.ARecord]
+    val (healedCol, healedRow) = readBothLanes(oldSchema, (0L until 40L).map(i =>
+      graft.avro.AvroRecord(oldSchema, Array[Any](graft.avro.AvroRecord(mSchema, Array[Any](i))))),
+      rf.readerJson)
+    assert(healedCol == healedRow)
+    assert(healedCol.contains("[[7,null]]"), healedCol.take(3).toString)
     val rfNoDefault = OcfColumnar.fieldsFor(
       """{"type":"record","name":"r","fields":[
         |{"name":"m","type":{"type":"record","name":"M","fields":[

@@ -117,6 +117,47 @@ class OcfMetricsSpec extends AnyFunSuite {
       s"the header walk must read a small fraction of the file: $cm vs ${f.length()}")
   }
 
+  test("a mid-file split counts the bytes its sync scan reads") {
+    val schemaJson = """{"type":"record","name":"K","fields":[{"name":"k","type":"long"}]}"""
+    val f = java.io.File.createTempFile("ocf-metrics-mid", ".avro")
+    f.deleteOnExit()
+    val fos = new java.io.FileOutputStream(f)
+    val sw = new OcfStreamWriter(fos, AvroSchemaParser.parse(schemaJson), "null", blockBytes = 256)
+    (0L until 1000L).foreach { k =>
+      val b = new AvroBinaryWriter(); b.writeLong(k); sw.append(b.toByteArray)
+    }
+    sw.finish(); fos.close()
+    val meta = OcfDataSource.fetchMetas(conf,
+      Seq(OcfDataSource.FileSlice(f.getAbsolutePath, f.length()))).head
+    // the split owns every block whose introducing marker starts at or past
+    // `start`; its anchor is found by one chunked scan from `start`, which
+    // reads the rest of this small file
+    val start = f.length() / 2 + 1
+    val bytes = java.nio.file.Files.readAllBytes(f.toPath)
+    val walk = new graft.avro.AvroBinaryReader(bytes)
+    graft.avro.Ocf.readHeader(walk)
+    var ownedRows, ownedBytes = 0L
+    while (!walk.atEnd) {
+      val blockStart = walk.pos
+      val count = walk.readLong()
+      val size = walk.readLong()
+      if (blockStart - graft.avro.Ocf.SyncSize >= start) {
+        ownedRows += count
+        ownedBytes += 20L + size + graft.avro.Ocf.SyncSize // header pread + body and marker
+      }
+      walk.skip(size + graft.avro.Ocf.SyncSize)
+    }
+    assert(ownedRows > 0L && ownedRows < 1000L, s"the split must start mid-file: $ownedRows")
+    val r = new OcfSplitReader(meta, start, f.length(), schemaJson, wrap = false, conf)
+    var n = 0L
+    while (r.next()) n += 1
+    r.close()
+    assert(n == ownedRows)
+    val rm = r.currentMetricsValues().map(x => x.name -> x.value).toMap
+    assert(rm("ocfBytesRead") == (f.length() - start) + ownedBytes,
+      s"sync scan ${f.length() - start} B + blocks $ownedBytes B: $rm")
+  }
+
   test("sort tracker certifies only truly ordered streams (stamp is verified, not assumed)") {
     val sql = StructType(Seq(StructField("k", LongType), StructField("v", StringType)))
     val avroJson = AvroSchemaParser.toJson(SchemaConverters.toAvroType(sql))
