@@ -26,7 +26,8 @@ object Resolved {
   final case class Skip(writer: AvroSchema) extends Resolved
 
   /** A writer union branch the reader cannot read: decoding one fails. */
-  final case class Fail(message: String) extends Resolved {
+  final case class Fail(writer: AvroSchema, reader: AvroSchema) extends Resolved {
+    def message: String = s"writer union branch ${writer.typeName} not readable as ${reader.typeName}"
     def raise(): Nothing = throw new AvroResolutionException(message)
   }
 
@@ -98,18 +99,14 @@ object AvroResolver {
     def resolve(w0: AvroSchema, r0: AvroSchema): Resolved = (deref(w0), deref(r0)) match {
       case (wu: AUnion, r) =>
         WriterUnion(wu.branches.map { b =>
-          def fail = Fail(s"writer union branch ${b.typeName} not readable as ${r.typeName}")
           if (matches(b, r)) resolve(b, r)
-          // a nullable-T reader holds a T, so a branch it does not match
-          // reads as it would under a plain T reader, where that resolves
-          else if (holdsOne(r)) try resolve(b, r) catch { case _: AvroResolutionException => fail }
-          else fail
+          else Fail(b, r)
         }.toIndexedSeq)
       case (w, ru: AUnion) =>
         val i = ru.branches.indexWhere(matches(w, _)) match {
           // a nullable-T reader holds a T: a writer no branch matches
           // resolves against T as it would against a plain T reader
-          case -1 if holdsOne(ru) => ru.branches.indexWhere(_ != ANull)
+          case -1 if ru.nonNullBranches.length == 1 => ru.branches.indexWhere(_ != ANull)
           case i => i
         }
         if (i < 0) throw new AvroResolutionException(
@@ -128,11 +125,6 @@ object AvroResolver {
       case (AMap(wv), AMap(rv)) => MapOf(resolve(wv, rv))
       case (wr: ARecord, rr: ARecord) => record(wr, rr)
       case (w, r) => scalar(w, r)
-    }
-
-    private def holdsOne(r: AvroSchema): Boolean = r match {
-      case ru: AUnion => ru.nonNullBranches.length == 1
-      case _ => false
     }
 
     /** Same physical type or an Avro promotion, else a pair the generic
@@ -166,7 +158,7 @@ object AvroResolver {
       * writer-only fields, and default reader-only ones.
       * (reference: io.py:990-1039) */
     private def record(wr: ARecord, rr: ARecord): Record =
-      records.getOrElse((wr.fullName, rr.fullName), try {
+      records.getOrElse((wr.fullName, rr.fullName), {
         val rec = new Record(rr)
         records((wr.fullName, rr.fullName)) = rec
         val slots = AvroNames.assignReaderSlots(wr, rr)
@@ -186,9 +178,6 @@ object AvroResolver {
           }
         }.toArray
         rec
-      } catch {
-        // a pair that fails leaves no half-built node for a later lookup
-        case e: AvroResolutionException => records.remove((wr.fullName, rr.fullName)); throw e
       })
   }
 }

@@ -131,18 +131,29 @@ private[graft] object OcfColumnar {
   // ---- admission: which resolved plans the vectors hold ---------------------
 
   /** Does the lane decode `plan`, resolved from writer schema `w0`? It
-    * refuses a writer branch the reader cannot take (a null under a plain
-    * reader), a general union whose branches do not land in the reader's
-    * same-position branches, reader union members under anything else, an
-    * enum remap that renames a symbol, a scalar whose reader vector is
-    * neither its own Spark type nor an Avro promotion of it, and (through
-    * [[recordAdmits]]) reordered records and defaults with no constant. */
+    * refuses a null writer branch the reader cannot take (a null under a
+    * plain reader), a general union whose branches do not land in the
+    * reader's same-position branches, reader union members under anything
+    * else, an enum remap that renames a symbol, a scalar whose reader vector
+    * is neither its own Spark type nor an Avro promotion of it, and
+    * (through [[recordAdmits]]) reordered records and defaults with no
+    * constant. */
   private def admits(plan: Resolved, w0: AvroSchema): Boolean = (plan, deref(w0)) match {
     case (s: Scalar, w) =>
       val dt = sqlType(s.reader)
       sqlType(w) == dt || AvroResolution.promotes(w, SchemaConverters.toAvroType(dt))
     case (e: EnumRemap, _) => e.symbols == e.writer.symbols && sqlType(e.reader) == StringType
     case (_: Skip, _) => true
+    // a non-null branch a `["null", T]` reader cannot take raises when a
+    // datum uses it, on either lane; the lane admits it where it admits a
+    // plain writer of that branch's type under the same reader, so which
+    // files take the lane does not depend on which branches fail
+    case (f: Fail, w) => w != ANull && (f.reader match {
+      case ru: AUnion if members(ru) == 1 =>
+        try admits(AvroResolver.resolve(w, ru), w)
+        catch { case _: AvroResolutionException => false }
+      case _ => false
+    })
     case (WriterUnion(branches), wu: AUnion) =>
       val general = wu.nonNullBranches.length >= 2
       branches.indices.forall { b =>

@@ -933,6 +933,81 @@ class OcfColumnarSpec extends AnyFunSuite {
     assert(isColumnar(pruned))
     assert(pruned.count() == 800L)
   }
+  test("admission follows the resolver's plan: a branch it moves to another " +
+      "member refuses the lane, a shadowed alias and a null default keep their rules") {
+    import graft.avro._
+    def fields(json: String) = OcfColumnar.fieldsFor(json).get
+    def parse(json: String) = AvroSchemaParser.parse(json).asInstanceOf[ARecord]
+    def write(writer: ARecord, datums: Seq[AvroRecord]): java.io.File = {
+      val dir = tempDir("graft-col-admit")
+      java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(writer, datums))
+      dir
+    }
+    def rd(dir: java.io.File, readerJson: String, columnar: Boolean) = spark.read
+      .format("graft-ocf").option("columnar", columnar.toString)
+      .option("readerSchema", readerJson).load(dir.getAbsolutePath)
+
+    // a general union whose string branch the resolver reads into the
+    // reader's bytes member (the first branch it matches), not the member
+    // at its own position: the lane refuses it, and both lanes read the
+    // member the row lane reads
+    val unionWriterJson =
+      """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
+        |{"name":"u","type":["null","string","bytes"]}]}""".stripMargin
+    val unionReaderJson =
+      """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
+        |{"name":"u","type":["null","bytes","string"]}]}""".stripMargin
+    assert(OcfColumnar.wirePlanFor(unionWriterJson, fields(unionReaderJson)).isEmpty)
+    val unionWriter = parse(unionWriterJson)
+    val unionDir = write(unionWriter, (0L until 30L).map { i =>
+      val u: Any = (i % 3) match {
+        case 0 => s"s$i"
+        case 1 => s"b$i".getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        case _ => null
+      }
+      AvroRecord(unionWriter, Array[Any](i, u))
+    })
+    def members(df: DataFrame) = df.selectExpr("id",
+        "CAST(u.member0 AS STRING) AS b", "u.member1 AS s", "u IS NULL AS unull")
+      .collect().map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("<n>"),
+        Option(r.getString(2)).getOrElse("<n>"), r.getBoolean(3))).sortBy(_._1).toSeq
+    val unionCol = members(rd(unionDir, unionReaderJson, columnar = true))
+    assert(unionCol == members(rd(unionDir, unionReaderJson, columnar = false)))
+    assert(unionCol.take(3) == Seq((0L, "s0", "<n>", false), (1L, "b1", "<n>", false),
+      (2L, "<n>", "<n>", true)), unionCol.take(3).toString)
+
+    // a writer carrying both a reader field's name and one of its aliases:
+    // the name wins the slot and the aliased field is skipped, so the
+    // matched slots still rise in writer order and the lane admits it
+    val aliasWriter = parse(
+      """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
+        |{"name":"old_x","type":"long"},{"name":"x","type":"long"}]}""".stripMargin)
+    val aliasReaderJson =
+      """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
+        |{"name":"x","type":"long","aliases":["old_x"]}]}""".stripMargin
+    assert(OcfColumnar.wirePlanFor(AvroSchemaParser.toJson(aliasWriter),
+      fields(aliasReaderJson)).isDefined)
+    val (aliasCol, aliasRow) = readBothLanes(aliasWriter,
+      (0L until 20L).map(i => AvroRecord(aliasWriter, Array[Any](i, -i, i * 10))), aliasReaderJson)
+    assert(aliasCol == aliasRow)
+    assert(aliasCol.head == "[0,0]" && aliasCol.contains("[7,70]"), aliasCol.take(3).toString)
+
+    // a JSON null default on a [T, "null"] field, which Avro does not allow
+    // (a union's default belongs to its first branch), has no constant the
+    // lane fills: the lane refuses it and both lanes read what the row lane does
+    val plainWriter = parse(
+      """{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}""")
+    val nullDefaultReaderJson =
+      """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
+        |{"name":"n","type":["long","null"],"default":null}]}""".stripMargin
+    assert(OcfColumnar.wirePlanFor(AvroSchemaParser.toJson(plainWriter),
+      fields(nullDefaultReaderJson)).isEmpty)
+    val plainDir = write(plainWriter, (0L until 10L).map(i => AvroRecord(plainWriter, Array[Any](i))))
+    def rendered(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    assert(rendered(rd(plainDir, nullDefaultReaderJson, columnar = true)) ==
+      rendered(rd(plainDir, nullDefaultReaderJson, columnar = false)))
+  }
+
   test("union slot reuse under equality deletes (X111+X105): a rejected " +
       "row's nulled members cannot leak into the surviving reuser; " +
       "cross-kind union-vs-record plans refuse") {
