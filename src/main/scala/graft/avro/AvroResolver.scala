@@ -113,6 +113,8 @@ object AvroResolver {
           s"writer ${w.typeName} matches no reader union branch")
         ReaderUnion(ru, i, resolve(w, ru.branches(i)))
       case (we: AEnum, r) =>
+        // a symbol is text: only a string-like or bytes-like reader holds it
+        if (slot(r) != "bytes") throw unresolvable(we, r)
         // (reference: io.py:834-862 — a symbol the reader lacks takes the
         // reader's default, else it is a resolution error)
         EnumRemap(we, r, r match {
@@ -129,9 +131,13 @@ object AvroResolver {
 
     /** Same physical type or an Avro promotion, else a pair the generic
       * reader decodes by the writer: a writer logical type, or a null,
-      * boolean, double, string, bytes or fixed writer under any reader, an
-      * int or long under any logical one. An int under `timestamp-millis`
-      * widens to long, then scales. */
+      * string, bytes or fixed writer under any reader. An int under
+      * `timestamp-millis` widens to long, then scales. Whichever rule
+      * resolves it, the value must fit the reader's slot ([[slot]]); a pair
+      * whose value would land in a slot of another type — a string under an
+      * int, a decimal under plain bytes, time-micros under time-millis —
+      * fails here, as the reference's `read_data` fails a pair it cannot
+      * match. A null fits every slot. */
     private def scalar(w: AvroSchema, r: AvroSchema): Scalar = {
       val wire = deref(w.physical)
       val rp = deref(r.physical)
@@ -139,7 +145,7 @@ object AvroResolver {
         case l: LogicalSchema => l
         case _ => null
       }
-      (w, wire) match {
+      val s = (w, wire) match {
         case (l: LogicalSchema, _) => Scalar(wire, wire, l, r)
         case _ if wire.typeName == rp.typeName => Scalar(wire, wire, readerLogical, r)
         case _ if promotes(wire, rp) => Scalar(wire, rp, readerLogical, r)
@@ -147,11 +153,33 @@ object AvroResolver {
           case d: ADecimal => d // a decimal reads a bytes or fixed value alike
           case _ => null
         }, r)
-        case (_, ANull | ABoolean | ADouble | AString) => Scalar(wire, wire, null, r)
-        case (_, AInt | ALong) if readerLogical != null => Scalar(wire, wire, null, r)
-        case _ => throw new AvroResolutionException(
-          s"cannot resolve writer ${w.typeName} against reader ${r.typeName}")
+        case (_, ANull | AString) => Scalar(wire, wire, null, r)
+        case _ => throw unresolvable(w, r)
       }
+      val value = s.logical match {
+        case _: ADecimal => "decimal"
+        case _: ATimestampMillis => "long" // scaled to micros
+        case _ => slot(s.target)
+      }
+      if (wire != ANull && value != slot(r)) throw unresolvable(w, r)
+      s
+    }
+
+    private def unresolvable(w: AvroSchema, r: AvroSchema) = new AvroResolutionException(
+      s"cannot resolve writer ${w.typeName} against reader ${r.typeName}")
+
+    /** The kind of value a reader of `r` holds: `int` for int, date and
+      * time-millis; `long` for long, time-micros and the timestamps;
+      * `bytes` for string, enum, uuid, bytes and fixed (a text or binary
+      * value takes whichever form the reader holds); `decimal`; else the
+      * type's name (null, boolean, float, double, or a complex type, which
+      * holds no scalar). */
+    private def slot(r: AvroSchema): String = deref(r) match {
+      case _: ADecimal => "decimal"
+      case AInt | _: ADate | _: ATimeMillis => "int"
+      case ALong | _: ATimeMicros | _: ATimestampMillis | _: ATimestampMicros => "long"
+      case AString | ABytes | _: AFixed | _: AEnum | _: AUuid => "bytes"
+      case other => other.typeName
     }
 
     /** Match writer fields to reader fields by name and reader alias, skip

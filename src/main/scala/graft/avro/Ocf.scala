@@ -278,7 +278,9 @@ final class OcfStreamWriter(out: java.io.OutputStream, schema: AvroSchema,
                             // header, rows in the block, block bytes incl.
                             // trailing sync) — relative offsets survive a
                             // later header re-stamp, absolute ones would not
-                            onBlockSealed: (Long, Long, Long) => Unit = null) {
+                            onBlockSealed: (Long, Long, Long) => Unit = null,
+                            // extra header entries after the codec and schema
+                            meta: Seq[(String, Array[Byte])] = Nil) {
   require(blockBytes > 0, s"blockBytes must be positive; got $blockBytes")
   private val codec = AvroCodecs(codecName)
   private val sync = syncOpt.getOrElse {
@@ -291,7 +293,7 @@ final class OcfStreamWriter(out: java.io.OutputStream, schema: AvroSchema,
   locally {
     val bytes = Ocf.headerBytes(mutable.LinkedHashMap(
       "avro.codec" -> codecName.getBytes("UTF-8"),
-      "avro.schema" -> AvroSchemaParser.toJson(schema).getBytes("UTF-8")), sync)
+      "avro.schema" -> AvroSchemaParser.toJson(schema).getBytes("UTF-8")) ++= meta, sync)
     out.write(bytes, 0, bytes.length)
   }
 
@@ -310,10 +312,11 @@ final class OcfStreamWriter(out: java.io.OutputStream, schema: AvroSchema,
     endDatum()
   }
 
-  /** Direct-encode lane: the engine sink writes one datum's bytes straight
-    * into the block buffer through [[datumEncoder]] and seals it with
-    * [[endDatum]] — the zero-copy equivalent of encoding to a scratch array
-    * and calling [[append]]. A datum must be written COMPLETELY between
+  /** A writer encodes one datum's bytes straight into the block buffer
+    * through [[datumEncoder]] and seals it with [[endDatum]] — the zero-copy
+    * equivalent of encoding to a scratch array and calling [[append]]. The
+    * graft-ocf sink's data and key files and the position-delete files are
+    * written this way. A datum must be written COMPLETELY between
     * `endDatum` calls (a throwing encoder aborts the whole file, which the
     * task-level commit protocol already discards). */
   def datumEncoder: AvroBinaryWriter = buf

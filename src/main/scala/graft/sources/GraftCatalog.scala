@@ -2250,38 +2250,28 @@ private[sources] final class OcfPositionDeleteWriter(
 private[sources] object OcfPositionDeleteWriter {
   /** Avro schema of a position-delete datum: one long, the deleted row's
     * ordinal in its target file (the target rides the header, not rows). */
-  val DeleteSchemaJson: String =
-    """{"type":"record","name":"graft_position_delete","fields":[{"name":"pos","type":"long"}]}"""
+  private val DeleteSchema = graft.avro.AvroSchemaParser.parse(
+    """{"type":"record","name":"graft_position_delete","fields":[{"name":"pos","type":"long"}]}""")
 
-  /** Render a complete delete OCF: header (schema, null codec, deleteTarget
-    * + rows stamps) and blocks of zigzag-varint ordinals. */
+  /** Render a complete delete OCF through the kernel block writer: a
+    * random sync, the `graft.deleteTarget` and `graft.rows` header stamps,
+    * and blocks of zigzag-varint ordinals. */
   def render(positions: Array[Long], targetRel: String): Array[Byte] = {
     val sync = new Array[Byte](graft.avro.Ocf.SyncSize)
     new java.security.SecureRandom().nextBytes(sync)
-    val meta = scala.collection.mutable.LinkedHashMap[String, Array[Byte]](
-      "avro.schema" -> DeleteSchemaJson.getBytes("UTF-8"),
-      "avro.codec" -> "null".getBytes("UTF-8"),
-      "graft.deleteTarget" -> targetRel.getBytes("UTF-8"),
-      "graft.rows" -> positions.length.toString.getBytes("UTF-8"))
-    val out = new java.io.ByteArrayOutputStream()
-    out.write(graft.avro.Ocf.headerBytes(meta, sync))
+    val bos = new java.io.ByteArrayOutputStream()
+    val w = new graft.avro.OcfStreamWriter(bos, DeleteSchema, syncOpt = Some(sync),
+      meta = Seq("graft.deleteTarget" -> targetRel.getBytes("UTF-8"),
+        "graft.rows" -> positions.length.toString.getBytes("UTF-8")))
+    val body = w.datumEncoder
     var i = 0
-    val perBlock = 65536
     while (i < positions.length) {
-      val n = math.min(perBlock, positions.length - i)
-      val body = new graft.avro.AvroBinaryWriter()
-      var k = 0
-      while (k < n) { body.writeLong(positions(i + k)); k += 1 }
-      val data = body.toByteArray
-      val frame = new graft.avro.AvroBinaryWriter()
-      frame.writeLong(n.toLong)
-      frame.writeLong(data.length.toLong)
-      frame.writeFixed(data)
-      frame.writeFixed(sync)
-      out.write(frame.toByteArray)
-      i += n
+      body.writeLong(positions(i))
+      w.endDatum()
+      i += 1
     }
-    out.toByteArray
+    w.finish()
+    bos.toByteArray
   }
 }
 

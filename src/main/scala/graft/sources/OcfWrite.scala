@@ -22,10 +22,11 @@ import org.apache.spark.sql.types.StructType
   *    [[graft.avro.OcfStreamWriter]] — memory bounded by one ~64 KB block,
   *    no driver funnel, no shuffle: writing fans out exactly as wide as the
   *    upstream plan;
-  *  - row→datum encoding reuses the compiled [[CatalystAvroWriter]]
-  *    (one compile per executor via [[AvroRuntime]]'s caches, same as the
-  *    read side), fields matched to Avro record fields BY NAME (positional
-  *    pairing would silently swap same-typed columns);
+  *  - row→datum encoding is the one [[CatalystAvroWriter]] encoder, as in
+  *    `to_avro`: a record body compiled once per task (the schema parse is
+  *    cached per executor by [[AvroRuntime]]) whose every field reads its
+  *    column straight from the row, fields matched to Avro record fields BY
+  *    NAME (positional pairing would silently swap same-typed columns);
   *  - commit protocol: tasks write DOT-PREFIXED temp files (invisible to
   *    [[OcfDataSource]]'s listing and to Spark's own file index), the driver
   *    renames them into place on job/epoch commit — a half-written job is
@@ -482,9 +483,9 @@ private[sources] final class OcfWriteBuilder(info: LogicalWriteInfo,
       bloomMaxItems = bloomMaxItems,
       blockIndex = blockIndex, blockIndexMaxEntries = blockIndexMaxEntries,
       sortNames = sortNames)
-    // compile the row→datum writers once driver-side so schema mismatches
-    // (wrong type for a field, non-record schema) fail the plan
-    OcfWrite.compileFieldWriters(cfg)
+    // compile the row→datum encoder once driver-side so schema mismatches
+    // (wrong shape for a field, non-record schema) fail the plan
+    OcfWrite.recordEncoder(cfg)
     // static overwrite predicates must be decidable per FILE: every
     // referenced attribute a partition column, every value comparable under
     // its type — exactly the consumed-filter gate, reused
@@ -755,30 +756,10 @@ private[sources] object OcfWrite {
       s"graft-ocf write requires a record schema; got ${other.typeName}")
   }
 
-  /** Per-Avro-field (writer, getter) pairs in Avro field order; the ordinal
-    * array maps each to its source column. Compiled once per executor
-    * ([[AvroRuntime.parse]] caches the schema parse; the closures themselves
-    * are cheap to build). */
-  def compileFieldWriters(cfg: OcfWriteConfig): Array[(CatalystAvroWriter.Writer, InternalRowGetters.Getter)] = {
-    val rec = recordOf(cfg.avroJson)
-    rec.fields.zipWithIndex.map { case (f, i) =>
-      val dt = cfg.sql.fields(cfg.ordinals(i)).dataType
-      (CatalystAvroWriter.compile(dt, f.schema), InternalRowGetters.forType(dt))
-    }.toArray
-  }
-
-  /** Fused per-field encoders for the hot row→datum loop: each reads its
-    * source column straight out of the InternalRow and writes Avro bytes —
-    * flat primitives skip the boxed `Any` hand-off entirely (complex leaves
-    * fall back to the boxed writer inside
-    * [[CatalystAvroWriter.compileField]], so bytes are identical). */
-  def compileFieldEncoders(cfg: OcfWriteConfig): Array[CatalystAvroWriter.FieldEncoder] = {
-    val rec = recordOf(cfg.avroJson)
-    rec.fields.zipWithIndex.map { case (f, i) =>
-      CatalystAvroWriter.compileField(
-        cfg.sql.fields(cfg.ordinals(i)).dataType, f.schema, cfg.ordinals(i))
-    }.toArray
-  }
+  /** The data file's record body: each Avro field encoded from the query
+    * column [[fieldOrdinals]] matched it to. */
+  def recordEncoder(cfg: OcfWriteConfig): (InternalRow, AvroBinaryWriter) => Unit =
+    CatalystAvroWriter.compileRecord(cfg.sql, recordOf(cfg.avroJson), cfg.ordinals)
 }
 
 /** Custom V2 metrics: per-task counters surfaced on the write node in the
@@ -965,13 +946,7 @@ private[sources] final class OcfDataWriter(
     cfg: OcfWriteConfig, finalName: String, tmpName: String)
     extends DataWriter[InternalRow] {
 
-  private val fieldWriters = OcfWrite.compileFieldWriters(cfg)
-  // the hot row→datum loop runs the FUSED encoders (no boxed hand-off for
-  // flat primitives, bytes identical — see OcfWrite.compileFieldEncoders);
-  // the boxed (writer, getter) pairs above stay for the equality-delete
-  // path, which needs the boxed values for its dedup set anyway
-  private val fieldEncoders = OcfWrite.compileFieldEncoders(cfg)
-  private val ordinals = cfg.ordinals
+  private val encode = OcfWrite.recordEncoder(cfg)
   private val schema = OcfWrite.recordOf(cfg.avroJson)
   private val partGetters =
     cfg.partOrdinals.map(o => InternalRowGetters.forType(cfg.sql.fields(o).dataType))
@@ -1008,6 +983,11 @@ private[sources] final class OcfDataWriter(
     else graft.avro.ARecord("graft_eq_keys", None,
       eqAvroIdx.map(j => graft.avro.AField(
         schema.fields(j).name, schema.fields(j).schema)).toSeq)
+  private val eqOrdinals = eqAvroIdx.map(cfg.ordinals(_))
+  private val eqTypes = eqOrdinals.map(cfg.sql.fields(_).dataType)
+  private val eqEncode =
+    if (eqSchema == null) null
+    else CatalystAvroWriter.compileRecord(cfg.sql, eqSchema, eqOrdinals)
   private var eqOut: FSDataOutputStream = _
   private var eqOcf: OcfStreamWriter = _
   private var eqSeen: java.util.HashSet[scala.collection.immutable.ArraySeq[Any]] =
@@ -1015,17 +995,12 @@ private[sources] final class OcfDataWriter(
   private def eqName(n: String): String = n.replace(".avro", ".eqdel.avro")
 
   private def writeUpsertKey(row: InternalRow): Unit = {
-    val t = new Array[Any](eqAvroIdx.length)
-    var i = 0
-    while (i < t.length) {
-      val j = eqAvroIdx(i)
-      val ord = ordinals(j)
-      t(i) = if (row.isNullAt(ord)) null else fieldWriters(j)._2(row, ord)
-      i += 1
-    }
     if (eqSeen != null) {
-      if (!eqSeen.add(scala.collection.immutable.ArraySeq.unsafeWrapArray(t)))
-        return // duplicate within this task
+      val key = OcfSplitReader.EqGroup.tuple(row, eqOrdinals, eqTypes)
+      if (eqSeen.contains(key)) return // duplicate within this task
+      // the next input row may reuse this one's buffer, which the key's
+      // strings and structs point into: the set keeps its own copy
+      eqSeen.add(key.map(InternalRow.copyValue))
       if (eqSeen.size > (1 << 20)) eqSeen = null // bounded: write-through
     }
     if (eqOcf == null) {
@@ -1034,12 +1009,7 @@ private[sources] final class OcfDataWriter(
       eqOcf = new OcfStreamWriter(eqOut, eqSchema, cfg.codecName,
         blockBytes = cfg.blockBytes)
     }
-    val e = eqOcf.datumEncoder
-    var k = 0
-    while (k < eqAvroIdx.length) {
-      fieldWriters(eqAvroIdx(k))._1(t(k), e)
-      k += 1
-    }
+    eqEncode(row, eqOcf.datumEncoder)
     eqOcf.endDatum()
   }
   private var totalRows = 0L
@@ -1166,12 +1136,7 @@ private[sources] final class OcfDataWriter(
     if (blockIdx != null) blockIdx.update(row)
     if (bloom != null) bloom.update(row)
     if (sortTrk != null) sortTrk.update(row)
-    val e = ocf.datumEncoder
-    var i = 0
-    while (i < fieldEncoders.length) {
-      fieldEncoders(i)(row, e)
-      i += 1
-    }
+    encode(row, ocf.datumEncoder)
     ocf.endDatum()
     if (eqAvroIdx.length > 0) writeUpsertKey(row)
     // getPos counts FLUSHED bytes, so the roll triggers on sealed blocks

@@ -149,7 +149,7 @@ case class AvroEncode(child: Expression, schemaJsonOpt: Option[String] = None)
   lazy val avroSchema: AvroSchema = schemaJsonOpt.map(AvroRuntime.parse).getOrElse(
     SchemaConverters.toAvroType(child.dataType, child.nullable))
   lazy val avroSchemaJson: String = AvroSchemaParser.toJson(avroSchema)
-  @transient private lazy val writer = CatalystAvroWriter.compile(child.dataType, avroSchema)
+  @transient private lazy val writer = CatalystAvroWriter.compileValue(child.dataType, avroSchema)
 
   override def dataType: DataType = BinaryType
   override def prettyName: String = "to_avro"

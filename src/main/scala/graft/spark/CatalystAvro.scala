@@ -3,7 +3,7 @@ package graft.spark
 import graft.avro._
 import graft.avro.AvroResolution.deref
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, SpecializedGetters}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -19,8 +19,8 @@ import scala.collection.mutable.ArrayBuffer
   * decoding a datum walks no plan and dispatches on no schema.
   *
   * A value has the Catalyst type [[SchemaConverters.toSqlType]] gives the
-  * reader, or the writer's where the plan decodes by the writer (a writer
-  * logical type, say, under a reader of another type): records → [[GenericInternalRow]], strings/enums/uuids →
+  * reader: the resolver refuses a pair whose value would not fit that slot.
+  * Records → [[GenericInternalRow]], strings/enums/uuids →
   * [[UTF8String]], bytes/fixed → byte arrays, arrays →
   * [[GenericArrayData]], maps → [[ArrayBasedMapData]], decimals →
   * [[Decimal]], date and time-millis → int, time-micros → long,
@@ -62,7 +62,7 @@ object CatalystAvroReader {
           }
         }
       case e: EnumRemap =>
-        val binary = binarySlot(e.reader, default = false)
+        val binary = binarySlot(e.reader)
         e.decoder(e.symbols.map { s =>
           if (s == null) null
           else if (binary) s.getBytes(StandardCharsets.UTF_8)
@@ -141,10 +141,9 @@ object CatalystAvroReader {
 
   /** Does the reader hold a string-like or bytes-like value as a byte array
     * (bytes, fixed) rather than a UTF8String (string, enum, uuid)? */
-  private def binarySlot(reader: AvroSchema, default: Boolean): Boolean = reader match {
+  private def binarySlot(reader: AvroSchema): Boolean = reader match {
     case ABytes | _: AFixed => true
-    case AString | _: AEnum | _: AUuid => false
-    case _ => default
+    case _ => false
   }
 
   /** A scalar in Catalyst form: decimals and timestamp-millis convert,
@@ -175,7 +174,7 @@ object CatalystAvroReader {
       case (AFloat, ADouble) => _.readFloat().toDouble
       case (ADouble, _) => _.readDouble()
       case (_, target) =>
-        (target, binarySlot(s.reader, default = s.wire != AString)) match {
+        (target, binarySlot(s.reader)) match {
           case (AFixed(_, _, size, _), true) => _.readFixed(size)
           case (AFixed(_, _, size, _), false) => in => UTF8String.fromBytes(in.readFixed(size))
           case (AString, true) => _.readStringBytes()
@@ -220,87 +219,50 @@ object CatalystAvroReader {
   }
 }
 
-/** Catalyst values → Avro wire bytes (`to_avro`), compiled once per
-  * (DataType, AvroSchema) pair — the encode mirror of [[CatalystAvroReader]].
+/** Catalyst values → Avro wire bytes, compiled once per (DataType,
+  * AvroSchema) pair — the encode mirror of [[CatalystAvroReader]] and the
+  * one encoder of `to_avro`, the graft-ocf sink's data and equality-delete
+  * key files, and the sink's write-plan check.
   * (reference: python-udf/avro/io.py:1125-1337 DatumWriter.)
+  *
+  * Every node reads its own value from a container — an [[InternalRow]] or
+  * an [[org.apache.spark.sql.catalyst.util.ArrayData]] — at an ordinal:
+  * record fields, array items, map values and general-union members read
+  * straight from their parent, so no value boxes at any depth. A node is
+  * reached only for a non-null value: a `["null", T]` union takes its tag
+  * from `isNullAt`, and every other schema with no null branch checks
+  * `isNullAt` first and fails with an [[AvroResolutionException]] naming
+  * the location. A Catalyst type whose values the Avro type does not hold
+  * reads the boxed value and casts it, failing as a cast does.
   */
 object CatalystAvroWriter {
-  type Writer = (Any, AvroBinaryWriter) => Unit
+  /** Writes the non-null value at ordinal `i` of a row or array. (Its own
+    * type, not a `Function3`, so the ordinal is passed unboxed.) */
+  private trait Encoder { def apply(c: SpecializedGetters, i: Int, out: AvroBinaryWriter): Unit }
 
-  def compile(dt: DataType, avro: AvroSchema): Writer =
+  /** One value of `dt` as `avro`; a null fails at location `<value>`. */
+  private def compile(dt: DataType, avro: AvroSchema): Encoder =
     nullGuarded("<value>", avro, make(dt, avro))
 
-  /** Fused per-ordinal field encoder for the OCF sink: reads column `ord`
-    * of an [[InternalRow]] and writes its Avro bytes in one step — flat
-    * primitives never box through `Any`, strings copy straight from the
-    * UTF8String's memory into the output buffer. Complex or resolution-
-    * heavy leaves (records, arrays, maps, enums, decimals, fixed, general
-    * unions) fall back to the boxed [[Writer]] + getter pair, so the bytes
-    * and every error message are identical to the boxed path by
-    * construction (pinned by OcfV2WriteSpec's byte-identity test). */
-  type FieldEncoder = (InternalRow, AvroBinaryWriter) => Unit
-
-  def compileField(dt: DataType, avro: AvroSchema, ord: Int): FieldEncoder = {
-    // boxed fallback: exactly the pair the previous sink hot loop used
-    def boxed: FieldEncoder = {
-      val w = compile(dt, avro)
-      val g = InternalRowGetters.forType(dt)
-      (row, out) => w(if (row.isNullAt(ord)) null else g(row, ord), out)
-    }
-    deref(avro) match {
-      case AUnion(branches) =>
-        val nullIdx = branches.indexOf(ANull)
-        val valueBranches = branches.zipWithIndex.filter(_._1 != ANull)
-        if (nullIdx >= 0 && valueBranches.length == 1) {
-          primField(dt, valueBranches.head._1, ord) match {
-            case Some(prim) =>
-              val nIdx = nullIdx.toLong
-              val vIdx = valueBranches.head._2.toLong
-              (row, out) =>
-                if (row.isNullAt(ord)) out.writeLong(nIdx)
-                else { out.writeLong(vIdx); prim(row, out) }
-            case None => boxed
-          }
-        } else boxed
-      case nonUnion =>
-        primField(dt, nonUnion, ord) match {
-          case Some(prim) =>
-            // a null into a non-nullable schema must fail with the same
-            // typed error the boxed path raises — route it there
-            val onNull = compile(dt, avro)
-            (row, out) =>
-              if (row.isNullAt(ord)) onNull(null, out) else prim(row, out)
-          case None => boxed
-        }
-    }
+  /** `to_avro`'s adapter: encodes a value held in no container. Each call
+    * wraps it in a one-slot row of its own, so the adapter holds no state
+    * the task threads sharing an expression could race on. */
+  def compileValue(dt: DataType, avro: AvroSchema): (Any, AvroBinaryWriter) => Unit = {
+    val enc = compile(dt, avro)
+    (v, out) => enc(new GenericInternalRow(Array[Any](v)), 0, out)
   }
 
-  /** Non-null flat-primitive encoders (the write mirror of the X91 read
-    * lanes); None = not a flat primitive, caller falls back to boxed. */
-  private def primField(dt: DataType, s0: AvroSchema, ord: Int): Option[FieldEncoder] =
-    (deref(s0), dt) match {
-      case (ABoolean, BooleanType) =>
-        Some((r, o) => o.writeBoolean(r.getBoolean(ord)))
-      case (AInt, ByteType) => Some((r, o) => o.writeInt(r.getByte(ord).toInt))
-      case (AInt, ShortType) => Some((r, o) => o.writeInt(r.getShort(ord).toInt))
-      case (AInt, IntegerType | DateType) => Some((r, o) => o.writeInt(r.getInt(ord)))
-      case (ALong, IntegerType) => Some((r, o) => o.writeLong(r.getInt(ord).toLong))
-      case (ALong, LongType | TimestampType | TimestampNTZType) =>
-        Some((r, o) => o.writeLong(r.getLong(ord)))
-      case (AFloat, FloatType) => Some((r, o) => o.writeFloat(r.getFloat(ord)))
-      case (ADouble, DoubleType) => Some((r, o) => o.writeDouble(r.getDouble(ord)))
-      case (AString, StringType) => Some((r, o) => writeUtf8(r.getUTF8String(ord), o))
-      case (AUuid(_), StringType) => Some((r, o) => writeUtf8(r.getUTF8String(ord), o))
-      case (ABytes, BinaryType) => Some((r, o) => o.writeBytes(r.getBinary(ord)))
-      case (ADate(_), DateType) => Some((r, o) => o.writeInt(r.getInt(ord)))
-      case (ATimeMillis(_), IntegerType) => Some((r, o) => o.writeInt(r.getInt(ord)))
-      case (ATimeMicros(_), LongType) => Some((r, o) => o.writeLong(r.getLong(ord)))
-      case (ATimestampMillis(_), TimestampType) =>
-        Some((r, o) => o.writeLong(r.getLong(ord) / 1000L))
-      case (ATimestampMicros(_), TimestampType) =>
-        Some((r, o) => o.writeLong(r.getLong(ord)))
-      case _ => None
+  /** A record body over a row's columns: field `j` of `rec` is column
+    * `ordinals(j)` of `sql`, each compiled as a top-level value. */
+  def compileRecord(sql: StructType, rec: ARecord, ordinals: Array[Int])
+      : (InternalRow, AvroBinaryWriter) => Unit = {
+    val fields = rec.fields.indices.map(j =>
+      compile(sql.fields(ordinals(j)).dataType, rec.fields(j).schema)).toArray
+    (row, out) => {
+      var j = 0
+      while (j < fields.length) { fields(j)(row, ordinals(j), out); j += 1 }
     }
+  }
 
   /** Length-prefixed UTF-8 copy straight from the UTF8String's backing
     * memory — no intermediate `getBytes` array. */
@@ -319,35 +281,44 @@ object CatalystAvroWriter {
   }
 
   /** A null routed into a schema with no null branch must fail as a TYPED
-    * [[AvroResolutionException]] naming the location — the raw scalar
-    * writers would otherwise throw a bare executor-side NPE (e.g.
-    * `asInstanceOf[UTF8String].getBytes`), inconsistent with the union
-    * path's error and nearly undiagnosable from a task failure. */
-  private def nullGuarded(where: String, s: AvroSchema, w: Writer): Writer =
-    if (allowsNull(s)) w
-    else (v, out) =>
-      if (v == null) throw new AvroResolutionException(
+    * [[AvroResolutionException]] naming the location — the scalar reads
+    * would otherwise return a default or throw a bare executor-side NPE,
+    * inconsistent with the union path's error and nearly undiagnosable
+    * from a task failure. */
+  private def nullGuarded(where: String, s: AvroSchema, enc: Encoder): Encoder =
+    if (allowsNull(s)) enc
+    else (c, i, out) =>
+      if (c.isNullAt(i)) throw new AvroResolutionException(
         s"null value for non-nullable Avro ${deref(s).typeName} at $where; " +
           "add a [\"null\", ...] union branch or filter nulls upstream")
-      else w(v, out)
+      else enc(c, i, out)
 
-  private def make(dt: DataType, s0: AvroSchema): Writer = deref(s0) match {
+  // the typed read of an object-valued Catalyst type, else its boxed value cast
+  private trait At[T] { def apply(c: SpecializedGetters, i: Int): T }
+  private def utf8At(dt: DataType): At[UTF8String] =
+    if (dt == StringType) _.getUTF8String(_) else _.get(_, dt).asInstanceOf[UTF8String]
+  private def binaryAt(dt: DataType): At[Array[Byte]] =
+    if (dt == BinaryType) _.getBinary(_) else _.get(_, dt).asInstanceOf[Array[Byte]]
+  private def decimalAt(dt: DataType): At[Decimal] = dt match {
+    case d: DecimalType => _.getDecimal(_, d.precision, d.scale)
+    case _ => _.get(_, dt).asInstanceOf[Decimal]
+  }
+  private def intRead(dt: DataType): Boolean = dt == IntegerType || dt == DateType
+  private def longRead(dt: DataType): Boolean =
+    dt == LongType || dt == TimestampType || dt == TimestampNTZType
+
+  private def make(dt: DataType, s0: AvroSchema): Encoder = deref(s0) match {
     case AUnion(branches) =>
-      val nullIdx = branches.indexOf(ANull)
+      val nullIdx = branches.indexOf(ANull).toLong
       val valueBranches = branches.zipWithIndex.filter(_._1 != ANull)
-      if (valueBranches.isEmpty) (_, out) => out.writeLong(nullIdx.toLong)
+      if (valueBranches.isEmpty) (_, _, out) => out.writeLong(nullIdx)
       else if (valueBranches.length == 1) {
         // nullable-style ["null", T] union: Catalyst nullability IS the tag
         val (branch, valueIdx) = valueBranches.head
         val inner = make(dt, branch)
-        (v, out) =>
-          if (v == null) {
-            if (nullIdx < 0) throw new AvroResolutionException("null for non-nullable Avro union")
-            out.writeLong(nullIdx.toLong)
-          } else {
-            out.writeLong(valueIdx.toLong)
-            inner(v, out)
-          }
+        (c, i, out) =>
+          if (c.isNullAt(i)) out.writeLong(nullIdx)
+          else { out.writeLong(valueIdx.toLong); inner(c, i, out) }
       } else dt match {
         // general union: the struct-of-members Catalyst form (the decode
         // mirror of SchemaConverters — member_i ↔ i-th non-null branch).
@@ -356,90 +327,101 @@ object CatalystAvroWriter {
         // first-validating-branch rule (io.py:1306-1322): exactly one
         // member is expected non-null; with several set, the first wins.
         case st: StructType if st.length == valueBranches.length =>
-          val members = valueBranches.zipWithIndex.map { case ((b, branchIdx), mi) =>
-            (branchIdx, make(st.fields(mi).dataType, b),
-              InternalRowGetters.forType(st.fields(mi).dataType))
-          }.toArray
-          (v, out) => {
-            val row = if (v == null) null else v.asInstanceOf[InternalRow]
-            var mi = 0
-            var chosen = -1
-            while (chosen < 0 && row != null && mi < members.length) {
-              if (!row.isNullAt(mi)) chosen = mi else mi += 1
-            }
-            if (chosen < 0) {
+          val branchIdx = valueBranches.map(_._2.toLong).toArray
+          val members = valueBranches.indices.map(m =>
+            make(st.fields(m).dataType, valueBranches(m)._1)).toArray
+          (c, i, out) => {
+            val row = if (c.isNullAt(i)) null else c.getStruct(i, members.length)
+            var m = 0
+            while (row != null && m < members.length && row.isNullAt(m)) m += 1
+            if (row == null || m == members.length) {
               if (nullIdx < 0) throw new AvroResolutionException(
                 "no non-null member for non-nullable Avro union")
-              out.writeLong(nullIdx.toLong)
+              out.writeLong(nullIdx)
             } else {
-              val (branchIdx, w, g) = members(chosen)
-              out.writeLong(branchIdx.toLong)
-              w(g(row, chosen), out)
+              out.writeLong(branchIdx(m))
+              members(m)(row, m, out)
             }
           }
         case other => throw new AvroResolutionException(
           s"general Avro union with ${valueBranches.length} branches expects a " +
           s"struct of as many members; got ${other.sql}")
       }
-    case ANull    => (_, _) => ()
-    case ABoolean => (v, out) => out.writeBoolean(v.asInstanceOf[Boolean])
-    case AInt => dt match {
-      case ByteType  => (v, out) => out.writeInt(v.asInstanceOf[Byte].toInt)
-      case ShortType => (v, out) => out.writeInt(v.asInstanceOf[Short].toInt)
-      case _         => (v, out) => out.writeInt(v.asInstanceOf[Int])
-    }
-    case ALong => dt match {
-      case IntegerType => (v, out) => out.writeLong(v.asInstanceOf[Int].toLong)
-      case _           => (v, out) => out.writeLong(v.asInstanceOf[Long])
-    }
-    case AFloat  => (v, out) => out.writeFloat(v.asInstanceOf[Float])
-    case ADouble => (v, out) => out.writeDouble(v.asInstanceOf[Double])
-    case AString => (v, out) => out.writeBytes(v.asInstanceOf[UTF8String].getBytes)
-    case ABytes  => (v, out) => out.writeBytes(v.asInstanceOf[Array[Byte]])
-    case f: AFixed => (v, out) => {
-      val b = v.asInstanceOf[Array[Byte]]
-      if (b.length != f.size) throw new AvroResolutionException(
-        s"fixed ${f.fullName} expects ${f.size} bytes, got ${b.length}")
-      out.writeFixed(b)
-    }
-    case e: AEnum => (v, out) => {
-      val i = e.indexOf(v.asInstanceOf[UTF8String].toString)
-      if (i < 0) throw new AvroResolutionException(s"symbol $v not in enum ${e.fullName}")
-      out.writeInt(i)
-    }
-    case ADecimal(p, s, u) => (v, out) => {
-      val bd = v.asInstanceOf[Decimal].toJavaBigDecimal.setScale(s)
-      val unscaled = bd.unscaledValue().toByteArray
-      deref(u) match {
-        case AFixed(_, _, size, _) =>
+    case ANull => (_, _, _) => ()
+    case ABoolean =>
+      if (dt == BooleanType) (c, i, out) => out.writeBoolean(c.getBoolean(i))
+      else (c, i, out) => out.writeBoolean(c.get(i, dt).asInstanceOf[Boolean])
+    case AInt if dt == ByteType => (c, i, out) => out.writeInt(c.getByte(i).toInt)
+    case AInt if dt == ShortType => (c, i, out) => out.writeInt(c.getShort(i).toInt)
+    case AInt | ADate(_) | ATimeMillis(_) =>
+      if (intRead(dt)) (c, i, out) => out.writeInt(c.getInt(i))
+      else (c, i, out) => out.writeInt(c.get(i, dt).asInstanceOf[Int])
+    case ALong if dt == IntegerType => (c, i, out) => out.writeLong(c.getInt(i).toLong)
+    case ALong | ATimeMicros(_) | ATimestampMicros(_) =>
+      if (longRead(dt)) (c, i, out) => out.writeLong(c.getLong(i))
+      else (c, i, out) => out.writeLong(c.get(i, dt).asInstanceOf[Long])
+    case ATimestampMillis(_) =>
+      if (longRead(dt)) (c, i, out) => out.writeLong(c.getLong(i) / 1000L)
+      else (c, i, out) => out.writeLong(c.get(i, dt).asInstanceOf[Long] / 1000L)
+    case AFloat =>
+      if (dt == FloatType) (c, i, out) => out.writeFloat(c.getFloat(i))
+      else (c, i, out) => out.writeFloat(c.get(i, dt).asInstanceOf[Float])
+    case ADouble =>
+      if (dt == DoubleType) (c, i, out) => out.writeDouble(c.getDouble(i))
+      else (c, i, out) => out.writeDouble(c.get(i, dt).asInstanceOf[Double])
+    case AString | AUuid(_) =>
+      val str = utf8At(dt)
+      (c, i, out) => writeUtf8(str(c, i), out)
+    case ABytes =>
+      val bin = binaryAt(dt)
+      (c, i, out) => out.writeBytes(bin(c, i))
+    case f: AFixed =>
+      val bin = binaryAt(dt)
+      (c, i, out) => {
+        val b = bin(c, i)
+        if (b.length != f.size) throw new AvroResolutionException(
+          s"fixed ${f.fullName} expects ${f.size} bytes, got ${b.length}")
+        out.writeFixed(b)
+      }
+    case e: AEnum =>
+      val str = utf8At(dt)
+      (c, i, out) => {
+        val v = str(c, i)
+        val k = e.indexOf(v.toString)
+        if (k < 0) throw new AvroResolutionException(s"symbol $v not in enum ${e.fullName}")
+        out.writeInt(k)
+      }
+    case ADecimal(p, s, u) =>
+      val dec = decimalAt(dt)
+      val size = deref(u) match {
+        case AFixed(_, _, n, _) => n
+        case _ => -1
+      }
+      (c, i, out) => {
+        val bd = dec(c, i).toJavaBigDecimal.setScale(s)
+        val unscaled = bd.unscaledValue().toByteArray
+        if (size < 0) out.writeBytes(unscaled)
+        else {
           val padded = new Array[Byte](size)
           val sign: Byte = if (bd.signum() < 0) -1 else 0
           java.util.Arrays.fill(padded, 0, size - unscaled.length, sign)
           System.arraycopy(unscaled, 0, padded, size - unscaled.length, unscaled.length)
           out.writeFixed(padded)
-        case _ => out.writeBytes(unscaled)
+        }
       }
-    }
-    case ADate(_) => (v, out) => out.writeInt(v.asInstanceOf[Int])
-    case ATimeMillis(_) => (v, out) => out.writeInt(v.asInstanceOf[Int])
-    case ATimeMicros(_) => (v, out) => out.writeLong(v.asInstanceOf[Long])
-    case ATimestampMillis(_) => (v, out) => out.writeLong(v.asInstanceOf[Long] / 1000L)
-    case ATimestampMicros(_) => (v, out) => out.writeLong(v.asInstanceOf[Long])
-    case AUuid(_) => (v, out) => out.writeBytes(v.asInstanceOf[UTF8String].getBytes)
     case AArray(items) =>
       val elType = dt match {
         case ArrayType(e, _) => e
         case other => throw new AvroResolutionException(s"array schema for ${other.sql}")
       }
       val item = nullGuarded("array item", items, make(elType, items))
-      (v, out) => {
-        val arr = v.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      (c, i, out) => {
+        val arr = c.getArray(i)
         val n = arr.numElements()
         if (n > 0) {
           out.writeLong(n.toLong)
-          var i = 0
-          val getter = InternalRowGetters.forType(elType)
-          while (i < n) { item(getter(arr, i), out); i += 1 }
+          var k = 0
+          while (k < n) { item(arr, k, out); k += 1 }
         }
         out.writeLong(0)
       }
@@ -449,19 +431,18 @@ object CatalystAvroWriter {
         case other => throw new AvroResolutionException(s"map schema for ${other.sql}")
       }
       val value = nullGuarded("map value", values, make(vType, values))
-      (v, out) => {
-        val m = v.asInstanceOf[org.apache.spark.sql.catalyst.util.MapData]
+      (c, i, out) => {
+        val m = c.getMap(i)
         val n = m.numElements()
         if (n > 0) {
           out.writeLong(n.toLong)
           val keys = m.keyArray()
           val vals = m.valueArray()
-          val getter = InternalRowGetters.forType(vType)
-          var i = 0
-          while (i < n) {
-            out.writeBytes(keys.getUTF8String(i).getBytes)
-            value(getter(vals, i), out)
-            i += 1
+          var k = 0
+          while (k < n) {
+            writeUtf8(keys.getUTF8String(k), out)
+            value(vals, k, out)
+            k += 1
           }
         }
         out.writeLong(0)
@@ -471,19 +452,15 @@ object CatalystAvroWriter {
         case s: StructType => s
         case other => throw new AvroResolutionException(s"record schema for ${other.sql}")
       }
-      val fieldWriters: Array[Writer] = r.fields.zipWithIndex.map { case (f, i) =>
+      val fields = r.fields.zipWithIndex.map { case (f, k) =>
         nullGuarded(s"field '${f.name}' of record ${r.fullName}", f.schema,
-          make(st.fields(i).dataType, f.schema))
+          make(st.fields(k).dataType, f.schema))
       }.toArray
-      val getters = st.fields.map(f => InternalRowGetters.forType(f.dataType))
-      (v, out) => {
-        val row = v.asInstanceOf[InternalRow]
-        var i = 0
-        while (i < fieldWriters.length) {
-          val fv = if (row.isNullAt(i)) null else getters(i)(row, i)
-          fieldWriters(i)(fv, out)
-          i += 1
-        }
+      val width = st.length
+      (c, i, out) => {
+        val row = c.getStruct(i, width)
+        var k = 0
+        while (k < fields.length) { fields(k)(row, k, out); k += 1 }
       }
     case other => throw new AvroResolutionException(s"cannot encode ${other.typeName}")
   }

@@ -8,7 +8,8 @@ import org.apache.spark.sql.functions.{col, struct}
   * (the message-bus producer / file-sink shape, reference
   * python-udf/avro/datafile.py:140-289).
   *
-  * Row→datum encoding rides the codegen'd `to_avro` expression; payload
+  * Row→datum encoding rides the codegen'd `to_avro` expression — the one
+  * [[CatalystAvroWriter]] encoder the graft-ocf sink writes files with; payload
   * assembly (header, ≤64 KB blocks, sync markers, codec) is partition-local
   * byte bookkeeping in `mapPartitions` — no shuffle, no driver funnel, so
   * the sink scales with executor count like any scan. */

@@ -1,12 +1,12 @@
 package graft
 
 import graft.avro._
-import graft.spark.{CatalystAvroReader, functions => gfn}
+import graft.spark.{CatalystAvroReader, SchemaConverters, functions => gfn}
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{BinaryType, Decimal, StructField, StructType}
+import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
@@ -129,6 +129,18 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
       case (AString | _: AUuid | ABytes | _: AFixed | _: AEnum, ABytes | _: AFixed) => Some(raw(d))
       case _ => None
     }
+    // a pair whose value would not have the class the reader's Catalyst
+    // slot holds is refused when the plan compiles (reference: io.py
+    // read_data's resolution error); a null fits every slot
+    def fits(v: Any, r: AvroSchema): Boolean =
+      v == null || ((SchemaConverters.toSqlType(r).dataType, v) match {
+        case (BooleanType, _: Boolean) | (FloatType, _: Float) | (DoubleType, _: Double) => true
+        case (IntegerType | DateType, _: Int) | (LongType | TimestampType, _: Long) => true
+        case (StringType, _: UTF8String) | (BinaryType, _: Array[Byte]) => true
+        case (_: DecimalType, _: Decimal) => true
+        case _ => false
+      })
+    val refused = Left(classOf[AvroResolutionException].getName)
     val failures = for {
       (w, d) <- scalars
       r <- scalars.map(_._1)
@@ -139,7 +151,10 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
         fitted(w, d, r).getOrElse(CatalystAvroReader.toCatalyst(v, w match {
           case _: LogicalSchema => w
           case _ => r
-        }))))
+        })))) match {
+        case Right(v) if !fits(v, r) => refused
+        case other => other
+      }
       // a ["null", T] reader holds a T, so it reads every writer as T does,
       // including one that matches no branch (the generic reader rejects it)
       nullable = outcome(Try(CatalystAvroReader.compile(w, AUnion(Seq(ANull, r)))(

@@ -352,4 +352,59 @@ class ErrorContractSpec extends AnyFunSuite {
     } yield s"$surface, $what: got ${root.getOrElse("no exception")}"
     assert(misses.isEmpty, misses.mkString("\n"))
   }
+
+  test("encode errors: one class and message per fault, through to_avro and a graft-ocf write") {
+    // each case writes one row whose column `f` holds the faulty value under
+    // the record schema {f: <avro>}; to_avro encodes the row as a struct, the
+    // graft-ocf sink as its data file's record, where `f` is a top-level
+    // column (so a null in `f` itself reports its location as <value>)
+    val nullHint = "; add a [\"null\", ...] union branch or filter nulls upstream"
+    def nonNull(avro: String, where: String) = s"null value for non-nullable Avro $avro at $where$nullHint"
+    val resolution = classOf[AvroResolutionException].getName
+    val cases: Seq[(String, String, String, String, String)] = Seq(
+      // (fault, Avro type of f, SQL value of f, to_avro message, graft-ocf message)
+      ("null top-level field", "\"string\"", "IF(id < 0, 'x', NULL)",
+        nonNull("string", "field 'f' of record R"), nonNull("string", "<value>")),
+      ("null struct field",
+        """{"type":"record","name":"S","fields":[{"name":"a","type":"string"}]}""",
+        "named_struct('a', IF(id < 0, 'x', NULL))",
+        nonNull("string", "field 'a' of record S"), nonNull("string", "field 'a' of record S")),
+      ("null array item", """{"type":"array","items":"string"}""",
+        "array('x', IF(id < 0, 'x', NULL))",
+        nonNull("string", "array item"), nonNull("string", "array item")),
+      ("null map value", """{"type":"map","values":"long"}""",
+        "map('k', IF(id < 0, 1L, NULL))",
+        nonNull("long", "map value"), nonNull("long", "map value")),
+      ("fixed size", """{"type":"fixed","name":"F","size":4}""", "X'010203'",
+        "fixed F expects 4 bytes, got 3", "fixed F expects 4 bytes, got 3"),
+      ("enum symbol", """{"type":"enum","name":"E","symbols":["A","B"]}""", "'C'",
+        "symbol C not in enum E", "symbol C not in enum E"),
+      ("general union arity", """["int","string","boolean"]""", "named_struct('member0', 1)",
+        "general Avro union with 3 branches expects a struct of as many members; " +
+          "got STRUCT<member0: INT NOT NULL>",
+        "general Avro union with 3 branches expects a struct of as many members; " +
+          "got STRUCT<member0: INT NOT NULL>"),
+      ("general union with no member", """["int","string"]""",
+        "named_struct('member0', IF(id < 0, 1, NULL), 'member1', IF(id < 0, 'x', NULL))",
+        "no non-null member for non-nullable Avro union",
+        "no non-null member for non-nullable Avro union"))
+    def rootOf(run: () => Unit): Option[Throwable] =
+      scala.util.Try(run()).failed.toOption.map(e =>
+        Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq.last)
+    val misses = for {
+      (fault, avro, value, toAvroMsg, sinkMsg) <- cases
+      schema = s"""{"type":"record","name":"R","fields":[{"name":"f","type":$avro}]}"""
+      df = spark.sql(s"SELECT $value AS f FROM range(1)")
+      (surface, msg, run) <- Seq[(String, String, () => Unit)](
+        ("to_avro", toAvroMsg, () => {
+          df.select(gfn.to_avro(org.apache.spark.sql.functions.struct(
+            org.apache.spark.sql.functions.col("f")), schema)).collect(); ()
+        }),
+        ("graft-ocf write", sinkMsg, () => df.write.format("graft-ocf").mode("append")
+          .option("avroSchema", schema).save(java.nio.file.Files.createTempDirectory("graft-errors-enc").toString)))
+      root = rootOf(run)
+      if !root.exists(r => r.getClass.getName == resolution && r.getMessage == msg)
+    } yield s"$surface, $fault: got ${root.getOrElse("no exception")}"
+    assert(misses.isEmpty, misses.mkString("\n"))
+  }
 }

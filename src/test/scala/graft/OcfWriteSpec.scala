@@ -712,18 +712,19 @@ class OcfWriteSpec extends AnyFunSuite {
     assert(back.toSeq == Seq((1L, "a"), (2L, "b"), (3L, "a"), (4L, "b")))
   }
 
-  test("direct-lane fused field encoders write files byte-identical to the boxed writer path") {
-    // r22 optimization pin: the sink's hot row→datum loop runs fused
-    // per-ordinal encoders that write straight into the block buffer
-    // (no boxed Any hand-off, no per-datum scratch copy). This proves the
-    // whole FILE — header, block framing, datum bytes, sync markers — is
-    // byte-for-byte what the boxed reference path (CatalystAvroWriter
-    // Writer + getter per field, Ocf.writePreEncoded assembly) produces,
-    // for every flat primitive lane plus the boxed-fallback leaves
-    // (decimal, array, map, struct), nullable and not, under the null and
-    // deflate codecs.
-    import graft.spark.{AvroRuntime, CatalystAvroWriter, InternalRowGetters, SchemaConverters}
+  test("sink files are byte-identical to Apache Avro's writer, flat and nested") {
+    // the whole FILE — header, block framing, datum bytes, sync markers — is
+    // byte-for-byte what an independent encoder produces: every row converted
+    // to an Apache Avro 1.12 GenericRecord, encoded by its GenericDatumWriter
+    // and assembled by the kernel block writer. Flat primitives, nullable
+    // and not, plus nested shapes (struct, array and map of scalars, array of
+    // structs, map of nullable structs, a general union, ["null", T] items),
+    // under the null and deflate codecs.
+    import graft.spark.{AvroRuntime, SchemaConverters}
+    import org.apache.avro.{Conversions, LogicalTypes, Schema => ASchema}
+    import org.apache.avro.generic.{GenericData, GenericDatumWriter}
     import org.apache.spark.sql.types._
+    import scala.jdk.CollectionConverters._
     val schema = StructType(Seq(
       StructField("id", LongType, nullable = false),
       StructField("i", IntegerType, nullable = true),
@@ -741,7 +742,16 @@ class OcfWriteSpec extends AnyFunSuite {
       StructField("m", MapType(StringType, LongType, valueContainsNull = false), nullable = true),
       StructField("st", StructType(Seq(
         StructField("a", LongType, nullable = true),
-        StructField("bb", StringType, nullable = true))), nullable = true)))
+        StructField("bb", StringType, nullable = true))), nullable = true),
+      StructField("as", ArrayType(StructType(Seq(
+        StructField("a", LongType, nullable = true),
+        StructField("b", StringType, nullable = true))), containsNull = false), nullable = true),
+      StructField("ms", MapType(StringType, StructType(Seq(
+        StructField("x", IntegerType, nullable = true))), valueContainsNull = true), nullable = true),
+      StructField("u", StructType(Seq(
+        StructField("member0", LongType, nullable = true),
+        StructField("member1", StringType, nullable = true))), nullable = true),
+      StructField("an", ArrayType(LongType, containsNull = true), nullable = true)))
     val rows = (0 until 500).map { k =>
       def n[T](v: T): Any = if (k % 7 == 3) null else v
       Row(k.toLong, n(k * 2), n((k % 100).toShort), n((k % 50).toByte),
@@ -753,43 +763,89 @@ class OcfWriteSpec extends AnyFunSuite {
         n(java.sql.Timestamp.valueOf("2024-01-01 12:34:56.789")),
         n(Seq(k.toLong, k + 1L)),
         n(Map(s"k$k" -> k.toLong)),
-        n(Row(n(k.toLong), n(s"inner$k"))))
+        n(Row(n(k.toLong), n(s"inner$k"))),
+        n(if (k % 5 == 0) Seq.empty else Seq(Row(n(k.toLong), n(s"a$k")), Row(k + 1L, null))),
+        n(Map(s"m$k" -> Row(n(k)), "z" -> null)),
+        n(k % 3 match {
+          case 0 => Row(k.toLong, null)
+          case 1 => Row(null, s"u$k")
+          case _ => Row(null, null) // no member set: the null branch
+        }),
+        n(Seq(k.toLong, null, k + 2L)))
+    }
+    // the general union is no Catalyst type: pin it in an explicit schema
+    val derived = SchemaConverters.toAvroType(schema).asInstanceOf[graft.avro.ARecord]
+    val avroJson = graft.avro.AvroSchemaParser.toJson(derived.copy(fields = derived.fields.map {
+      case f if f.name == "u" =>
+        f.copy(schema = graft.avro.AUnion(Seq(graft.avro.ANull, graft.avro.ALong, graft.avro.AString)))
+      case f => f
+    }))
+    val apache = new ASchema.Parser().parse(avroJson)
+    val decimals = new Conversions.DecimalConversion()
+    def toApache(v: Any, s: ASchema): Any = if (v == null) null else s.getType match {
+      case ASchema.Type.UNION =>
+        val branches = s.getTypes.asScala.filter(_.getType != ASchema.Type.NULL).toSeq
+        if (branches.length == 1) toApache(v, branches.head)
+        else {
+          val r = v.asInstanceOf[Row]
+          (0 until r.length).find(!r.isNullAt(_))
+            .map(m => toApache(r.get(m), branches(m))).orNull
+        }
+      case ASchema.Type.RECORD =>
+        val r = v.asInstanceOf[Row]
+        val g = new GenericData.Record(s)
+        s.getFields.asScala.foreach(f => g.put(f.pos, toApache(r.get(r.fieldIndex(f.name)), f.schema)))
+        g
+      case ASchema.Type.ARRAY =>
+        v.asInstanceOf[scala.collection.Seq[Any]].map(toApache(_, s.getElementType)).asJava
+      case ASchema.Type.MAP =>
+        val out = new java.util.LinkedHashMap[String, Any]()
+        v.asInstanceOf[scala.collection.Map[String, Any]].foreach { case (key, x) =>
+          out.put(key, toApache(x, s.getValueType))
+        }
+        out
+      case ASchema.Type.BYTES => v match {
+        case d: java.math.BigDecimal =>
+          val l = s.getLogicalType.asInstanceOf[LogicalTypes.Decimal]
+          decimals.toBytes(d.setScale(l.getScale), s, l)
+        case b: Array[Byte] => java.nio.ByteBuffer.wrap(b)
+      }
+      case ASchema.Type.INT => v match {
+        case d: java.sql.Date => d.toLocalDate.toEpochDay.toInt
+        case x: Short => x.toInt
+        case x: Byte => x.toInt
+        case x => x
+      }
+      case ASchema.Type.LONG => v match {
+        case t: java.sql.Timestamp =>
+          Math.floorDiv(t.getTime, 1000L) * 1000000L + t.getNanos / 1000L
+        case x => x
+      }
+      case _ => v
     }
     val df = spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema)
       .coalesce(1).sortWithinPartitions("id")
+    val writer = new GenericDatumWriter[Any](apache)
+    val datums = df.collect().toSeq.map { r =>
+      val bos = new java.io.ByteArrayOutputStream()
+      val enc = org.apache.avro.io.EncoderFactory.get().directBinaryEncoder(bos, null)
+      writer.write(toApache(r, apache), enc)
+      enc.flush()
+      bos.toByteArray
+    }
     for (codec <- Seq("null", "deflate")) {
       val dir = tempDir(s"graft-w-byteid-$codec")
-      df.write.format("graft-ocf").option("codec", codec)
+      df.write.format("graft-ocf").option("codec", codec).option("avroSchema", avroJson)
         .mode(SaveMode.Append).save(dir.getAbsolutePath)
       val got = java.nio.file.Files.readAllBytes(visibleFiles(dir).head.toPath)
-      // boxed reference: same rows, same order, encoded field by field
-      // through the boxed Writer + getter pairs the sink used before the
-      // fused lane, assembled by the kernel block writer
-      val avroJson = graft.avro.AvroSchemaParser.toJson(SchemaConverters.toAvroType(schema))
-      val rec = AvroRuntime.parse(avroJson).physical.asInstanceOf[graft.avro.ARecord]
-      val writers = rec.fields.map(f =>
-        CatalystAvroWriter.compile(schema(f.name).dataType, f.schema)).toArray
-      val getters = rec.fields.map(f =>
-        InternalRowGetters.forType(schema(f.name).dataType)).toArray
-      val ords = rec.fields.map(f => schema.fieldIndex(f.name)).toArray
-      val internal = df.queryExecution.executedPlan.executeCollect()
-      val datums = internal.iterator.map { r =>
-        val w = new graft.avro.AvroBinaryWriter()
-        var i = 0
-        while (i < writers.length) {
-          writers(i)(if (r.isNullAt(ords(i))) null else getters(i)(r, ords(i)), w)
-          i += 1
-        }
-        w.toByteArray
-      }
       val want = Ocf.writePreEncoded(
         AvroRuntime.parse(avroJson).physical.asInstanceOf[graft.avro.ARecord],
-        datums, codec)
+        datums.iterator, codec)
       assert(got.length == want.length,
         s"[$codec] file length ${got.length} != reference ${want.length}")
       assert(java.util.Arrays.equals(got, want),
-        s"[$codec] direct-lane file bytes differ from the boxed reference")
+        s"[$codec] sink file bytes differ from Apache Avro's")
     }
   }
 

@@ -235,4 +235,31 @@ class EqualityDeleteSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
     assert(got == Seq((1L, "e1"), (1L, "e2"), (2L, "old2")), got)
   }
+
+  test("a task's key dedup does not hold the writer's reused row: hash-colliding keys both delete") {
+    import org.apache.spark.sql.functions.{col, lit, when}
+    import org.apache.spark.unsafe.types.UTF8String
+    // two distinct keys of one length whose hashes collide: the dedup set
+    // compares a later key against the earlier entry, which must hold the
+    // earlier key's bytes, not the row buffer the writer's input reuses
+    val seen = new java.util.HashMap[Int, String]()
+    var pair: (String, String) = null
+    var n = 0
+    while (pair == null) {
+      val k = f"key$n%08d"
+      val prev = seen.put(UTF8String.fromString(k).hashCode, k)
+      if (prev != null) pair = (prev, k)
+      n += 1
+    }
+    val (x, y) = pair
+    spark.sql("CREATE TABLE ge.ns.collide (k STRING, v BIGINT) USING `graft-ocf`")
+    spark.sql(s"INSERT INTO ge.ns.collide VALUES ('$x', 1), ('$y', 1)")
+    // one task, rows projected into one reused buffer: x, then y
+    val batch = spark.range(2).coalesce(1)
+      .select(when(col("id") === 0, lit(x)).otherwise(lit(y)).as("k"), lit(2L).as("v"))
+    batch.writeTo("ge.ns.collide").option("upsertKeys", "k").append()
+    val got = spark.table("ge.ns.collide").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSeq.sorted
+    assert(got == Seq((x, 2L), (y, 2L)), got)
+  }
 }
