@@ -329,12 +329,19 @@ object AvroJsonTranscoder {
   /** Capacity of the buffer this thread keeps between [[render]] calls. */
   private[graft] def retainedBufferCapacity: Int = buffers.get().capacity
 
+  private val byWriter = scala.collection.concurrent.TrieMap.empty[String, AvroJsonTranscoder]
+
+  /** The transcoder of the writer schema `writerJson`, compiled once per
+    * JVM and shared by every JSON surface. */
+  def forWriter(writerJson: String): AvroJsonTranscoder =
+    byWriter.getOrElseUpdate(writerJson, new AvroJsonTranscoder(AvroSchemaParser.parse(writerJson)))
+
   /** Streams the object container file `bytes` block by block: `f` gets the
-    * transcoder for the file's writer schema and a reader at each datum in
-    * turn, and must consume that datum. The transcoder is built per call. */
+    * transcoder for the file's writer schema ([[forWriter]]) and a reader
+    * at each datum in turn, and must consume that datum. */
   def foreachDatum(bytes: Array[Byte])(f: (AvroJsonTranscoder, AvroBinaryReader) => Unit): Unit = {
     val (header, blocks) = Ocf.blockIterator(bytes)
-    val tc = new AvroJsonTranscoder(AvroSchemaParser.parse(header.schemaJson))
+    val tc = forWriter(header.schemaJson)
     blocks.foreach { b =>
       var i = 0L
       while (i < b.datumCount) {

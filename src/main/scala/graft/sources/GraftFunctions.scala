@@ -8,7 +8,6 @@ import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, StringType, 
 import org.apache.spark.unsafe.types.UTF8String
 
 import graft.avro.AvroJsonTranscoder
-import graft.spark.AvroRuntime
 
 /** V2 `FunctionCatalog` functions under the catalog's `system` namespace —
   * the reference's SQL-UDF surface (its whole premise: `SELECT
@@ -25,8 +24,9 @@ import graft.spark.AvroRuntime
   * signatures), so Spark plans a direct `Invoke` call inside whole-stage
   * codegen — no row boxing, same hot path as the session-registered
   * expression forms (U1–U5). Schema-taking functions resolve their compiled
-  * transcoder through [[AvroRuntime]]'s per-executor caches, so the per-row
-  * cost after the first call is one map lookup. */
+  * transcoder through the per-executor cache of
+  * [[AvroJsonTranscoder.forWriter]], so the per-row cost after the first
+  * call is one map lookup. */
 private[sources] object GraftFunctions {
 
   def load(ident: Identifier): UnboundFunction = {
@@ -126,7 +126,7 @@ private[sources] object GraftFunctions {
     override def canonicalName(): String = "graft.system.avro_decode_json"
     def invoke(data: Array[Byte], schema: UTF8String): UTF8String = {
       if (data == null || schema == null) return null
-      UTF8String.fromBytes(AvroRuntime.transcoder(schema.toString).toJson(data))
+      UTF8String.fromBytes(AvroJsonTranscoder.forWriter(schema.toString).toJson(data))
     }
     override def produceResult(input: InternalRow): UTF8String =
       invoke(if (input.isNullAt(0)) null else input.getBinary(0),

@@ -3,23 +3,26 @@ package graft.spark
 import graft.avro._
 import graft.framing.{KplDeaggregator, SpringHeaders}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Expression, Generator, GetJsonObject, JsonToStructs, Literal, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, CodegenFallback, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 /** Per-executor caches: schema JSON → parsed AST, (writer,reader) → compiled
-  * Catalyst reader, writer schema JSON → JSON transcoder. The Spark analog of
-  * the reference's registry LRU cache
+  * Catalyst reader (plain or JSON-parity). The Spark analog of the
+  * reference's registry LRU cache
   * (glue-schema-per-stream-udf/lambda_function.py:14) — resolved once per
-  * executor, reused across rows and tasks. */
+  * executor, reused across rows and tasks. JSON transcoders are cached by
+  * [[AvroJsonTranscoder.forWriter]]. */
 object AvroRuntime {
   private val schemaCache = TrieMap.empty[String, AvroSchema]
   private val readerCache = TrieMap.empty[(String, String), CatalystAvroReader.Reader]
-  private val transcoderCache = TrieMap.empty[String, AvroJsonTranscoder]
+  private val jsonReaderCache =
+    TrieMap.empty[(String, String, AvroJsonLimits), CatalystAvroReader.Reader]
 
   def parse(json: String): AvroSchema =
     schemaCache.getOrElseUpdate(json, AvroSchemaParser.parse(json))
@@ -28,8 +31,10 @@ object AvroRuntime {
     readerCache.getOrElseUpdate((writerJson, readerJson),
       CatalystAvroReader.compile(parse(writerJson), parse(readerJson)))
 
-  def transcoder(writerJson: String): AvroJsonTranscoder =
-    transcoderCache.getOrElseUpdate(writerJson, new AvroJsonTranscoder(parse(writerJson)))
+  def jsonParityReader(writerJson: String, readerJson: String,
+                       limits: AvroJsonLimits): CatalystAvroReader.Reader =
+    jsonReaderCache.getOrElseUpdate((writerJson, readerJson, limits),
+      CatalystAvroReader.compileJsonParity(parse(writerJson), parse(readerJson), limits))
 }
 
 /** Mixin: codegen that calls back into the expression instance — a single
@@ -281,7 +286,7 @@ case class AvroDecodeJson(child: Expression, writerSchemaJson: String)
   override def dataType: DataType = StringType
   override def prettyName: String = "avro_decode_json"
 
-  @transient private lazy val transcoder = AvroRuntime.transcoder(writerSchemaJson)
+  @transient private lazy val transcoder = AvroJsonTranscoder.forWriter(writerSchemaJson)
 
   override def nullSafeEval(input: Any): Any =
     UTF8String.fromBytes(transcoder.toJson(input.asInstanceOf[Array[Byte]]))
@@ -331,12 +336,153 @@ case class SpringKplDecodeAll(child: Expression, schemasByContentType: Map[Strin
         val schemaJson = schemasByContentType.getOrElse(contentType,
           throw new AvroResolutionException(s"no schema registered for content type '$contentType'"))
         if (first) first = false else { out.writeByte(','); out.writeByte(' ') }
-        AvroRuntime.transcoder(schemaJson).write(new AvroBinaryReader(ex.body), out)
+        AvroJsonTranscoder.forWriter(schemaJson).write(new AvroBinaryReader(ex.body), out)
       }
       out.writeByte(']')
     })
   }
   override protected def withNewChildInternal(newChild: Expression): SpringKplDecodeAll =
+    copy(child = newChild)
+}
+
+/** `get_json_object(avro_decode_json(child, W), path)` for each of `paths`,
+  * read straight from the wire: the rewrite [[graft.plans.AvroDecodePruning]]
+  * makes where every path names fields only, through records and
+  * `["null", record]` unions, down to a boolean, int, long, string or enum
+  * (or a nullable union of one). One pass of the resolution plan from W to
+  * `readerSchemaJson` (W pruned to the paths' fields) reads the leaves; the
+  * struct holds, per path, the string `get_json_object` returns. A datum
+  * whose JSON text Spark would read otherwise ([[AvroJsonLimits]]), or that
+  * fails to decode, goes through the original expressions, so every value,
+  * null and error is theirs. */
+case class AvroJsonPaths(child: Expression, writerSchemaJson: String,
+                         readerSchemaJson: String, paths: Seq[String])
+    extends UnaryExpression with GraftUnaryCodegen {
+
+  override lazy val dataType: StructType = StructType(paths.map(StructField(_, StringType)))
+  override def nullable: Boolean = true
+  override def prettyName: String = "avro_json_paths"
+  override def toString: String = s"$prettyName($child, ${paths.mkString(", ")})"
+
+  @transient private lazy val reader: CatalystAvroReader.Reader = {
+    val limits = AvroJsonLimits.current()
+    if (!limits.admits(AvroRuntime.parse(writerSchemaJson), 0)) null
+    else AvroRuntime.jsonParityReader(writerSchemaJson, readerSchemaJson, limits)
+  }
+  /** Per path, the field ordinals from the decoded record down to its leaf. */
+  @transient private lazy val ordinals: Array[Array[Int]] = {
+    def ords(s: AvroSchema, names: List[String]): List[Int] = names match {
+      case Nil => Nil
+      case name :: rest =>
+        val r = AvroResolution.deref(s) match {
+          case r: ARecord => r
+          case u: AUnion => AvroResolution.deref(u.nonNullBranches.head).asInstanceOf[ARecord]
+          case other => throw new IllegalStateException(s"path $name crosses ${other.typeName}")
+        }
+        val i = r.fields.indexWhere(_.name == name)
+        i :: ords(r.fields(i).schema, rest)
+    }
+    val readerSchema = AvroRuntime.parse(readerSchemaJson)
+    paths.map(p => ords(readerSchema, p.split('.').toList.tail).toArray).toArray
+  }
+  @transient private lazy val originals: Array[Expression] = paths.map(p => GetJsonObject(
+    AvroDecodeJson(BoundReference(0, BinaryType, nullable = true), writerSchemaJson),
+    Literal(p))).toArray
+
+  override def nullSafeEval(input: Any): Any = {
+    val bytes = input.asInstanceOf[Array[Byte]]
+    if (reader != null) {
+      try return leaves(reader(new AvroBinaryReader(bytes)))
+      catch { case NonFatal(_) => } // the original expressions decide this datum
+    }
+    val row = InternalRow(bytes)
+    new GenericInternalRow(originals.map(_.eval(row)))
+  }
+
+  /** The text `get_json_object` returns for each path's leaf. */
+  private def leaves(decoded: Any): InternalRow = {
+    val out = new Array[Any](ordinals.length)
+    var i = 0
+    while (i < out.length) {
+      val ords = ordinals(i)
+      var v = decoded
+      var k = 0
+      while (v != null && k < ords.length) {
+        v = v.asInstanceOf[GenericInternalRow].values(ords(k))
+        k += 1
+      }
+      out(i) = v match {
+        case null => null
+        case s: UTF8String => s
+        case b: Boolean => UTF8String.fromString(b.toString)
+        case n => UTF8String.fromString(n.toString) // an int or a long
+      }
+      i += 1
+    }
+    new GenericInternalRow(out)
+  }
+  override protected def withNewChildInternal(newChild: Expression): AvroJsonPaths =
+    copy(child = newChild)
+}
+
+/** `from_json` over `avro_decode_json` or `spring_kpl_decode_all`, read
+  * straight from the wire: the rewrite [[graft.plans.AvroDecodePruning]]
+  * makes where `from_json` has no options and its schema is, up to
+  * nullability, the Catalyst type of every writer schema involved, made of
+  * records, nullable records, and boolean, int, long, double, string and
+  * enum values (or nullable unions of one). `original` is the `from_json`
+  * call over a [[BoundReference]] to the payload; its type is this
+  * expression's. A datum whose JSON text Spark would read otherwise
+  * ([[AvroJsonLimits]]), or that fails to decode or to frame, goes through
+  * `original`, so every value, null and error is its own. */
+case class AvroParsedJson(child: Expression, original: JsonToStructs)
+    extends UnaryExpression with GraftUnaryCodegen {
+
+  override def dataType: DataType = original.dataType
+  override def nullable: Boolean = true
+  override def prettyName: String = "avro_parsed_json"
+  override def toString: String = s"$prettyName($child, ${original.child.prettyName})"
+
+  /** The direct decode of a payload, or null where the JSON read limits
+    * cannot admit a schema involved. */
+  @transient private lazy val decode: Array[Byte] => Any = {
+    val limits = AvroJsonLimits.current()
+    def datum(writerJson: String, depth: Int): CatalystAvroReader.Reader =
+      if (!limits.admits(AvroRuntime.parse(writerJson), depth)) null
+      else AvroRuntime.jsonParityReader(writerJson, writerJson, limits)
+    original.child match {
+      case AvroDecodeJson(_, w) =>
+        val read = datum(w, 0)
+        if (read == null) null else bytes => read(new AvroBinaryReader(bytes))
+      case SpringKplDecodeAll(_, schemas) =>
+        val readers = schemas.map { case (contentType, w) => contentType -> datum(w, 1) }
+        if (readers.values.exists(_ == null)) null
+        else bytes => {
+          val subs = KplDeaggregator.subPayloads(bytes)
+          val out = new Array[Any](subs.length)
+          var i = 0
+          subs.foreach { sub =>
+            val ex = SpringHeaders.extract(sub)
+            val read = ex.headers.get("contentType").flatMap(readers.get)
+              .getOrElse(throw AvroJsonLimits.Beyond)
+            out(i) = read(new AvroBinaryReader(ex.body))
+            i += 1
+          }
+          new GenericArrayData(out)
+        }
+      case other => throw new IllegalArgumentException(s"no direct decode for ${other.prettyName}")
+    }
+  }
+
+  override def nullSafeEval(input: Any): Any = {
+    val bytes = input.asInstanceOf[Array[Byte]]
+    if (decode != null) {
+      try return decode(bytes)
+      catch { case NonFatal(_) => } // the original expression decides this datum
+    }
+    original.eval(InternalRow(bytes))
+  }
+  override protected def withNewChildInternal(newChild: Expression): AvroParsedJson =
     copy(child = newChild)
 }
 

@@ -33,17 +33,31 @@ object CatalystAvroReader {
   type Reader = AvroBinaryReader => Any
 
   def compile(writer: AvroSchema, reader: AvroSchema): Reader =
-    new Emitter().emit(AvroResolver.resolve(writer, reader))
+    new Emitter(null).emit(AvroResolver.resolve(writer, reader))
 
-  private final class Emitter {
+  /** [[compile]] for the value Spark's JSON readers make of the datum's
+    * JSON text ([[AvroJsonTranscoder]]): a string is the UTF-8 of its
+    * decoded text, so invalid UTF-8 reads as U+FFFD as it renders; and a
+    * datum that text would not carry back — one past `limits` or with a
+    * duplicate map key, in a field read or skipped — raises
+    * [[AvroJsonLimits.Beyond]]. The reader holds records, unions, enums,
+    * and boolean, int, long, double and string values; a skipped field may
+    * be of any type. */
+  def compileJsonParity(writer: AvroSchema, reader: AvroSchema, limits: AvroJsonLimits): Reader =
+    new Emitter(limits).emit(AvroResolver.resolve(writer, reader))
+
+  /** `json`: the limits of JSON parity, or null for a plain decode. */
+  private final class Emitter(json: AvroJsonLimits) {
     /** One reader per record node: a recursive plan's cycle closes here. */
     private val records = new java.util.IdentityHashMap[Record, Reader]()
 
     def emit(plan: Resolved): Reader = plan match {
-      case s: Scalar => scalar(s)
+      case s: Scalar => if (json == null) scalar(s) else jsonScalar(s, json)
       case Skip(w) =>
-        val sk = AvroSkipper.compile(w)
+        val sk = if (json == null) AvroSkipper.compile(w) else json.checker(w)
         in => { sk(in); null }
+      case ArrayOf(_) | MapOf(_) if json != null =>
+        throw new IllegalArgumentException("a JSON-parity read holds no arrays or maps")
       case f: Fail => _ => f.raise()
       case WriterUnion(plans) =>
         val branches = plans.map(emit).toArray
@@ -184,6 +198,31 @@ object CatalystAvroReader {
         }
     }
   }
+
+  /** A JSON-parity scalar: the checks of [[AvroJsonLimits.checker]] on a
+    * value that is also read. */
+  private def jsonScalar(s: Scalar, limits: AvroJsonLimits): Reader =
+    (s.logical, s.wire, s.target) match {
+      case (null, ANull | ABoolean | AInt | ALong, _) => scalar(s)
+      case (null, ADouble, ADouble) => in => {
+        val d = in.readDouble()
+        if (!java.lang.Double.isFinite(d)) throw AvroJsonLimits.Beyond
+        d
+      }
+      case (null, AString, AString) if !binarySlot(s.reader) => in => {
+        val n = in.readLength("string")
+        if (n > limits.maxString) throw AvroJsonLimits.Beyond
+        val buf = in.buf
+        val start = in.pos
+        in.pos += n
+        var i = start
+        while (i < start + n && buf(i) >= 0) i += 1
+        if (i == start + n) UTF8String.fromBytes(java.util.Arrays.copyOfRange(buf, start, start + n))
+        else UTF8String.fromString(new String(buf, start, n, StandardCharsets.UTF_8))
+      }
+      case _ => throw new IllegalArgumentException(
+        s"a JSON-parity read holds no ${s.reader.typeName} read from ${s.wire.typeName}")
+    }
 
   /** Generic datum (from [[AvroDefaults]]/[[AvroDatumReader]]) → Catalyst value. */
   def toCatalyst(v: Any, s0: AvroSchema): Any = {

@@ -60,7 +60,19 @@ object functions {
   /** OCF payload → reference-exact JSON array string (late binding, U1). */
   def avro_ocf_decode_json(data: Column): Column = col(AvroOcfDecodeJson(expr(data)))
 
-  /** Bare datum + writer schema → reference-exact JSON string (U3). */
+  /** Bare datum + writer schema → reference-exact JSON string (U3).
+    *
+    * Where a query parses that text again, the optimizer rule
+    * [[graft.plans.AvroDecodePruning]] reads the datum directly instead:
+    * `get_json_object(avro_decode_json(d, W), "$.a.b")` whose paths name
+    * fields only, through records and `["null", record]` unions, down to a
+    * boolean, int, long, string or enum; and `from_json(avro_decode_json(d,
+    * W), S)` with no options, where S is W's Catalyst type up to
+    * nullability and W holds only records and boolean, int, long, double,
+    * string and enum fields (each possibly nullable). Wildcard, index or
+    * computed paths, float or double leaves under `get_json_object`, other
+    * field types, options, and recursive schemas keep the JSON path. The
+    * answer, including nulls and errors, is the JSON path's either way. */
   def avro_decode_json(data: Column, writerSchemaJson: String): Column =
     col(AvroDecodeJson(expr(data), writerSchemaJson))
 
@@ -70,7 +82,13 @@ object functions {
   def spring_extract(data: Column): Column = col(SpringExtract(expr(data)))
 
   /** U4 composite: KPL → Spring headers → registry → decode → one JSON array
-    * per input row (the reference Lambda's exact per-row contract). */
+    * per input row (the reference Lambda's exact per-row contract).
+    *
+    * `from_json(spring_kpl_decode_all(d, m), array<S>)` with no options
+    * decodes the sub-records directly, with no JSON text, when S is, up to
+    * nullability, the Catalyst type of every schema in `m`, under the
+    * conditions [[avro_decode_json]] gives for `from_json`; any other
+    * consumer, `get_json_object` included, reads the JSON text. */
   def spring_kpl_decode_all(data: Column, schemasByContentType: Map[String, String]): Column =
     col(SpringKplDecodeAll(expr(data), schemasByContentType))
 

@@ -20,6 +20,13 @@ object Shims {
                b: org.apache.spark.sql.types.DataType): Boolean =
     a.sameType(b)
 
+  /** Schema equality up to nullability, with field names compared
+    * case-sensitively whatever the session's case sensitivity
+    * (`DataTypeUtils` is `private[sql]`). */
+  def equalsIgnoreNullability(a: org.apache.spark.sql.types.DataType,
+                              b: org.apache.spark.sql.types.DataType): Boolean =
+    org.apache.spark.sql.catalyst.types.DataTypeUtils.equalsIgnoreNullability(a, b)
+
   /** Catalyst predicate -> data source [[org.apache.spark.sql.sources.Filter]]
     * (`DataSourceStrategy.translateFilter` is `protected[sql]`): the exact
     * translation Spark's own pushdown performs, reused for file-granular

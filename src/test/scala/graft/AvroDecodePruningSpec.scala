@@ -85,6 +85,40 @@ class AvroDecodePruningSpec extends AnyFunSuite {
     assert(df.count() == 5)
   }
 
+  private val listSchemaJson =
+    """{"type":"record","name":"L","fields":[
+      |{"name":"a","type":"int"},{"name":"big","type":"string"},
+      |{"name":"tags","type":{"type":"array","items":"string"}}]}""".stripMargin
+
+  private lazy val listPath: String = {
+    import spark.implicits._
+    val p = java.nio.file.Files.createTempDirectory("graft-prune-list").toString
+    (0 until 20).map(i => (i, "x" * 500, Seq(s"t$i", s"u$i"))).toDF("a", "big", "tags")
+      .select(gfn.to_avro(struct(col("a"), col("big"), col("tags")), listSchemaJson).as("bin"))
+      .write.mode("overwrite").parquet(p)
+    p
+  }
+
+  test("a Generate consumer prunes the decode it explodes") {
+    val df = spark.read.parquet(listPath)
+      .select(explode(gfn.from_avro(col("bin"), listSchemaJson).getField("tags")).as("t"))
+    val readers = decodedReaderFields(df)
+    assert(readers.nonEmpty && readers.forall(_ == Seq("tags")),
+      s"expected pruned reader [tags]; got $readers\n${df.queryExecution.optimizedPlan}")
+    assert(df.collect().map(_.getString(0)).sorted.toSeq ==
+      (0 until 20).flatMap(i => Seq(s"t$i", s"u$i")).sorted)
+  }
+
+  test("a join condition prunes its decode") {
+    val keys = spark.range(0, 100, 7).toDF("k")
+    val df = encoded.join(keys, gfn.from_avro(col("bin"), schemaJson).getField("a") === col("k"))
+      .select(col("k"))
+    val readers = decodedReaderFields(df)
+    assert(readers.nonEmpty && readers.forall(_ == Seq("a")),
+      s"expected pruned reader [a]; got $readers\n${df.queryExecution.optimizedPlan}")
+    assert(df.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L by 7L))
+  }
+
   private val nestedSchemaJson =
     """{"type":"record","name":"N","fields":[
       |{"name":"id","type":"int"},

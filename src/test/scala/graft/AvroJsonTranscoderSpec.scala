@@ -242,4 +242,21 @@ class AvroJsonTranscoderSpec extends AnyFunSuite {
     AvroJsonTranscoder.render(out => (0 until 4096).foreach(_ => out.writeByte('x')))
     assert(AvroJsonTranscoder.retainedBufferCapacity >= 4096)
   }
+
+  test("two OCF payloads of one writer schema share one compiled transcoder") {
+    val schema = AvroSchemaParser.parse(
+      """{"type":"record","name":"Once","fields":[{"name":"v","type":"long"}]}""")
+    val rec = schema.asInstanceOf[ARecord]
+    val payloads = Seq("null", "deflate").zipWithIndex.map { case (codec, i) =>
+      Ocf.writeAll(schema, Seq(AvroRecord(rec, Array[Any](i.toLong))), codec) }
+    val used = payloads.map { ocf =>
+      var tc: AvroJsonTranscoder = null
+      AvroJsonTranscoder.foreachDatum(ocf) { (t, in) => tc = t; t.write(in, new AvroBinaryWriter()) }
+      tc
+    }
+    assert(used.forall(_ eq used.head))
+    assert(used.head eq AvroJsonTranscoder.forWriter(Ocf.blockIterator(payloads.head)._1.schemaJson))
+    assert(payloads.map(p => new String(AvroJsonTranscoder.ocfToJson(p), ISO_8859_1)) ==
+      Seq("""[{"v": 0}]""", """[{"v": 1}]"""))
+  }
 }

@@ -1,12 +1,14 @@
 package graft
 
-import graft.spark.{AvroDecode, GraftSparkExtensions}
+import graft.plans.AvroDecodePruning
+import graft.spark.{AvroDecode, AvroJsonPaths, AvroParsedJson, GraftSparkExtensions}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** `spark.sql.extensions`-style packaging: a session built with
   * [[GraftSparkExtensions]] has the SQL surface and the pruning rule with
-  * no imperative registration. */
+  * no imperative registration, and does what a session from
+  * [[GraftSession.build]] (which installs the rule imperatively) does. */
 class ExtensionsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = {
@@ -59,5 +61,49 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(readers.nonEmpty && readers.forall(_ == Seq("a")),
       s"expected pruned reader [a]; got $readers")
     assert(df.orderBy("a").collect().map(_.getInt(0)).toSeq == (0 until 10))
+  }
+
+  test("both install paths rewrite both JSON round-trip shapes") {
+    import org.apache.spark.sql.functions._
+    val w = """{"type":"record","name":"R","fields":[
+              |{"name":"id","type":"long"},{"name":"s","type":"string"}]}""".stripMargin
+    val t = org.apache.spark.sql.types.DataType.fromDDL("struct<id:bigint,s:string>")
+    val p = java.nio.file.Files.createTempDirectory("graft-ext-json").toString
+    spark.range(10).select(graft.spark.functions.to_avro(
+        struct(col("id"), col("id").cast("string").as("s")), w).as("payload"))
+      .write.mode("overwrite").parquet(p)
+    /** Each shape's rows, after asserting its optimized plan reads directly. */
+    def shapes(s: SparkSession): Seq[Seq[String]] = {
+      val j = col("j")
+      val payload = s.read.parquet(p)
+      val gets = payload.select(graft.spark.functions.avro_decode_json(col("payload"), w).as("j"))
+        .select(get_json_object(j, "$.id").as("a"), get_json_object(j, "$.s").as("b"))
+      // the whole struct: a field access would let Spark prune from_json's schema
+      val parses = payload.select(from_json(
+        graft.spark.functions.avro_decode_json(col("payload"), w), t).as("v"))
+      Seq(gets -> ((e: Any) => e.isInstanceOf[AvroJsonPaths]),
+          parses -> ((e: Any) => e.isInstanceOf[AvroParsedJson])).map { case (df, direct) =>
+        val plan = df.queryExecution.optimizedPlan
+        assert(plan.exists(_.expressions.exists(_.exists(direct))), plan)
+        df.collect().map(r => if (r.size == 1) r.getStruct(0).mkString("|") else r.mkString("|"))
+          .sorted.toSeq
+      }
+    }
+    val want = Seq.fill(2)((0 until 10).map(i => s"$i|$i").sorted)
+    // injected (injectOptimizerRule): nothing installed imperatively
+    assert(!spark.experimental.extraOptimizations.contains(AvroDecodePruning))
+    assert(shapes(spark) == want)
+    // installed (experimental.extraOptimizations) on a session with no extensions
+    SparkSession.clearActiveSession()
+    SparkSession.clearDefaultSession()
+    try {
+      val built = GraftSession.build("2")
+      assert(built ne spark)
+      assert(built.experimental.extraOptimizations.contains(AvroDecodePruning))
+      assert(shapes(built) == want)
+    } finally {
+      SparkSession.setDefaultSession(spark)
+      SparkSession.setActiveSession(spark)
+    }
   }
 }
