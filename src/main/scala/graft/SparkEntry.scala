@@ -1934,7 +1934,7 @@ object SparkEntry {
     }),
 
     // Columnar embedding store (X108): the engine's OWN table format holds
-    // array<float> vectors and the scan rides the VECTORIZED lane — arrays
+    // array<float> vectors and the scan decodes them VECTORIZED — arrays
     // and maps of scalars decode as offset+child vectors, so the single
     // most common LLM-pipeline storage shape (embeddings / token lists in
     // the lake) gets batch decode instead of per-row reads. The top-k
@@ -1956,8 +1956,8 @@ object SparkEntry {
         """INSERT INTO graft_q119.corpus.emb
           |SELECT vec_id, embedding, label FROM graft_q119_src""".stripMargin)
       val emb = s.table("graft_q119.corpus.emb")
-      // the point of the query: the array column must NOT drop the scan to
-      // the row lane (pre-X108 it dragged the whole scan off the fast path)
+      // the point of the query: the array column decodes into column
+      // vectors (pre-X108 it dragged the whole scan off the fast path)
       require(emb.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
         "q119: the array<float> scan must ride the columnar lane")
       Similarity.bruteForceTopK(emb.where(col("vec_id") < 8), emb, 5)

@@ -250,7 +250,7 @@ final class AvroDatumReader(val writerSchema: AvroSchema, val readerSchemaOpt: O
 
 /** Writer→reader type matching and Avro's one promotion table:
   * [[AvroDatumReader]] and [[AvroResolver]] pick union branches with
-  * [[matches]]; the compatibility checker and the columnar scan lane read
+  * [[matches]]; the compatibility checker and the graft-ocf scan decode read
   * [[promotes]]. */
 object AvroResolution {
   def deref(s: AvroSchema): AvroSchema = s match {

@@ -1,6 +1,7 @@
 package graft.sources
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.DataType
 
 /** Opt-in CDF UPDATE pairing (X104): `updateImages=true` on a change-feed
@@ -79,7 +80,7 @@ private[sources] object GraftChangePairing {
   def newDataKeyGroups(emitEq: Seq[OcfDataSource.OcfFileMeta],
                        newData: Seq[OcfDataSource.OcfFileMeta],
                        readerJson: String, conf: Configuration)
-      : Array[OcfSplitReader.EqGroup] =
+      : Array[OcfColumnarSplitReader.EqGroup] =
     shapesOf(emitEq, readerJson).map { sh =>
       val sets = newData.map(m => OcfEqScope.keySet(m, sh.projJson, sh.tps, conf))
       val keys =
@@ -89,7 +90,7 @@ private[sources] object GraftChangePairing {
           sets.foreach(u.addAll)
           u
         }
-      new OcfSplitReader.EqGroup(sh.ords, sh.tps, keys)
+      new OcfColumnarSplitReader.EqGroup(sh.ords, sh.tps, keys)
     }.toArray
 
   // (old file id + skip/emit state + projection) -> per-shape surviving
@@ -104,7 +105,7 @@ private[sources] object GraftChangePairing {
     * emit-only-matching mode (exactly the rows the commit's delete parts
     * emit, keys only). */
   def oldKeyGroups(pairOld: Seq[GraftPairOldFile], readerJson: String,
-                   conf: Configuration): Array[OcfSplitReader.EqGroup] = {
+                   conf: Configuration): Array[OcfColumnarSplitReader.EqGroup] = {
     val dataRec = graft.avro.AvroSchemaParser.parse(readerJson)
       .asInstanceOf[graft.avro.ARecord]
     val fieldsByName = dataRec.fields.map(f => f.name -> f).toMap
@@ -136,7 +137,7 @@ private[sources] object GraftChangePairing {
         val (projSql, _) = OcfDataSource.sqlShape(projJson)
         val probeGroups = shapes.map { sh =>
           val pords = sh.names.map(projSql.fieldNames.indexOf(_)).toArray
-          sh.names -> new OcfSplitReader.EqGroup(pords, sh.tps,
+          sh.names -> new OcfColumnarSplitReader.EqGroup(pords, sh.tps,
             {
               val u = new java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]()
               po.emitEq.filter(m =>
@@ -153,15 +154,20 @@ private[sources] object GraftChangePairing {
         }
         val sets = shapes.map(sh => sh.names ->
           new java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]()).toMap
-        val r = new OcfSplitReader(po.meta, 0L, po.meta.len, projJson,
-          wrap = false, conf, deleteFiles = po.skipPos,
-          eqDeleteFiles = po.skipEq, emitOnlyEqFiles = po.emitEq)
+        val r = new OcfColumnarSplitReader(po.meta, 0L, po.meta.len, projJson,
+          conf, deleteFiles = po.skipPos,
+          eqDeleteFiles = po.skipEq, emitEqFiles = po.emitEq)
         try {
           while (r.next()) {
-            val row = r.get()
-            probeGroups.foreach { case (names, g) =>
-              val t = g.tuple(row)
-              if (g.keys.contains(t)) sets(names).add(t)
+            val rows = r.get().rowIterator()
+            while (rows.hasNext) {
+              val row = rows.next()
+              probeGroups.foreach { case (names, g) =>
+                val t = g.tuple(row)
+                // a batch row's strings are views into vectors the next
+                // batch overwrites: a kept tuple holds copies
+                if (g.keys.contains(t)) sets(names).add(t.map(InternalRow.copyValue))
+              }
             }
           }
         } finally r.close()
@@ -176,7 +182,7 @@ private[sources] object GraftChangePairing {
     }
     byShape.iterator.map { case (names, keys) =>
       val sh = allShapes(names)
-      new OcfSplitReader.EqGroup(sh.ords, sh.tps, keys)
+      new OcfColumnarSplitReader.EqGroup(sh.ords, sh.tps, keys)
     }.toArray
   }
 }

@@ -2,8 +2,6 @@ package graft.sources
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory, Scan, ScanBuilder}
@@ -192,9 +190,7 @@ private[sources] final class GraftChangesTable(
               .orElse(maxFilesPerTrigger),
             Option(options.get("splitSize")).map(_.toLong)
               .orElse(splitSizeOpt),
-            pairUpdates = pairUpdates,
-            columnarEnabled =
-              Option(options.get("columnar")).forall(_.toBoolean))
+            pairUpdates = pairUpdates)
 
         // BATCH read (X101, the `.changes` metadata table / a batch
         // format load): one planner walk over [startingVersion, ending].
@@ -236,21 +232,13 @@ private[sources] final class GraftChangesTable(
           GraftChangesPlanner.plan(root, c, partSchema, splitSize, sv, ev,
             pairUpdates = pairUpdates)
         }
-        // X110: the batch feed vectorizes when every part is eligible;
-        // `columnar=false` is the same per-scan A/B lever as table scans.
-        // Admitted parts carry the lane STAMP the factory answers from.
-        @transient private lazy val lane: Option[OcfColumnar.Fields] =
-          if (!Option(options.get("columnar")).forall(_.toBoolean)) None
-          else GraftChangesReaderFactory.columnarFieldsFor(
-            planned.parts, readerJson, partSchema)
         override def planInputPartitions(): Array[InputPartition] =
-          GraftChangesReaderFactory.stamp(planned.parts, lane)
+          GraftChangesReaderFactory.compilePlans(planned.parts, readerJson)
         override def createReaderFactory(): PartitionReaderFactory =
           GraftChangesReaderFactory(readerJson, partSchema,
             new SerializableHadoopConf(conf),
             pairNewByVersion = planned.pairNewByVersion,
-            pairOldByVersion = planned.pairOldByVersion,
-            columnarFields = lane)
+            pairOldByVersion = planned.pairOldByVersion)
       }
     }
 }
@@ -289,14 +277,7 @@ private[sources] final case class GraftChangesPartition(
     // interleave across micro-batches, a stamped part whose version is
     // absent from the factory's maps must FAIL, not silently degrade to
     // unpaired tags (a postimage without its preimage corrupts the feed).
-    pairPlanned: Boolean = false,
-    // X110 lane stamp: true iff THIS part's plan admitted the whole batch
-    // to the columnar lane. The factory answers supportColumnarReads from
-    // the PARTITION's stamp (its reader fields are deterministic from the
-    // stream-constant reader schema), so a factory built from a different
-    // trigger's plan degrades a mismatched batch to the row lane instead
-    // of crashing on a part without a wire plan.
-    columnarOk: Boolean = false) extends InputPartition
+    pairPlanned: Boolean = false) extends InputPartition
 
 /** UPDATE pairing (X104) state rides the FACTORY, not the partitions: the
   * pairing inputs are per-COMMIT constants (the commit's new data files for
@@ -305,69 +286,31 @@ private[sources] final case class GraftChangesPartition(
   * task binary — per-partition copies would ship O(burdened × splits)
   * metas through every task. Empty maps = pairing off. */
 private[sources] object GraftChangesReaderFactory {
-  /** Columnar eligibility for a change-feed scan (X110): vectorize iff
-    * the reader schema is lane-eligible, every planned part's data file
-    * admits a wire plan, and the appended constants (partition values +
-    * change tag + version) have constant-vector forms. UPDATE pairing
-    * (X104) vectorizes too: the decode stays batch-wide and only the
-    * `_change_type` column switches from a per-split constant to a
-    * writable vector filled by the same bound-extractor key probe the
-    * equality-delete lane already runs (one hash lookup per row). The
-    * decision is SCAN-wide (Spark requires `supportColumnarReads` uniform
-    * across a scan's partitions) — one ineligible part keeps the whole
-    * feed on the row lane, exactly like the batch table scan. */
-  def columnarFieldsFor(parts: Array[InputPartition], readerJson: String,
-      partSchema: StructType): Option[OcfColumnar.Fields] = {
-    if (parts.isEmpty) return None
-    if (!partSchema.fields.forall(f => OcfColumnar.constSupported(f.dataType)))
-      return None
-    OcfColumnar.fieldsFor(readerJson).filter(rf =>
-      parts.forall(ip => OcfColumnar.wirePlanFor(
-        ip.asInstanceOf[GraftChangesPartition].meta.writerSchemaJson, rf)
-        .isDefined))
+  /** Compile every part's wire plan on the driver, so a (writer, reader)
+    * pair the resolver refuses fails the plan with its message. */
+  def compilePlans(parts: Array[InputPartition], readerJson: String): Array[InputPartition] = {
+    parts.map(_.asInstanceOf[GraftChangesPartition].meta.writerSchemaJson).distinct
+      .foreach(OcfColumnar.wirePlanFor(_, readerJson))
+    parts
   }
-
-  /** Stamp every part of an admitted plan (see `columnarOk`). */
-  def stamp(parts: Array[InputPartition],
-      lane: Option[OcfColumnar.Fields]): Array[InputPartition] =
-    if (lane.isEmpty) parts
-    else parts.map(p =>
-      p.asInstanceOf[GraftChangesPartition].copy(columnarOk = true)
-        : InputPartition)
 }
 
 private[sources] final case class GraftChangesReaderFactory(
     readerJson: String, partSchema: StructType, conf: SerializableHadoopConf,
     pairNewByVersion: Map[Long, Seq[OcfDataSource.OcfFileMeta]] = Map.empty,
-    pairOldByVersion: Map[Long, Seq[GraftPairOldFile]] = Map.empty,
-    // X110: Some = every planned part decodes through the vectorized lane
-    // (insert parts batch-decode; delete parts type-skip survivors and
-    // decode only the emitted rows); None = row lane
-    columnarFields: Option[OcfColumnar.Fields] = None)
-    extends PartitionReaderFactory {
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnarFields.isDefined &&
-      partition.asInstanceOf[GraftChangesPartition].columnarOk
+    pairOldByVersion: Map[Long, Seq[GraftPairOldFile]] = Map.empty)
+    extends OcfColumnar.ColumnarReaderFactory {
 
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[GraftChangesPartition]
-    val rf = columnarFields.get
-    val plan = OcfColumnar.wirePlanFor(p.meta.writerSchemaJson, rf)
-      .getOrElse(throw new IllegalStateException(
-        s"graft-ocf-changes: columnar feed planned without a wire plan " +
-          s"for ${p.meta.path}"))
-    val appended = appendedTypes.zip(appendedValues(p))
-    // UPDATE pairing (X104) in the columnar lane: the same per-commit key
-    // groups the row lane probes, applied per decoded row through the
-    // vectors' bound extractors; the `_change_type` appended column flips
-    // from a per-split constant to a writable vector.
+    // UPDATE pairing (X104): the per-commit key groups, probed per decoded
+    // row through the vectors' bound extractors; the `_change_type`
+    // appended column flips from a per-split constant to a writable vector.
     val pairGroups = pairGroupsFor(p)
     new OcfColumnarSplitReader(p.meta, p.start,
       if (p.end < 0L) p.meta.len else p.end,
-      rf, plan, conf.value, appended = appended,
-      readerJson = readerJson,
+      readerJson, conf.value, appended = appended(p),
       deleteFiles = p.skipPos, eqDeleteFiles = p.skipEq,
       emitPosFiles = p.emitPos, emitEqFiles = p.emitEq,
       pairGroups = pairGroups,
@@ -377,29 +320,20 @@ private[sources] final case class GraftChangesReaderFactory(
         if (p.changeType == "delete") GraftChangePairing.PreImage
         else GraftChangePairing.PostImage))
   }
-  // appended per-row CONSTANTS, one construction for BOTH lanes: identity
-  // partition values (cast through the scan's single materialization
-  // point), then the change tag and commit version — the column order the
-  // feed schema declares
-  private def appendedValues(p: GraftChangesPartition): Array[Any] =
-    partSchema.fields.indices.map(i =>
-      if (i >= p.partValues.length || p.partValues(i) == null) null
-      else OcfPartitions.castPartValue(p.partValues(i),
-        partSchema.fields(i).dataType)).toArray[Any] ++
-      Array[Any](UTF8String.fromString(p.changeType), p.version)
-
-  private val appendedTypes: Array[org.apache.spark.sql.types.DataType] =
-    partSchema.fields.map(_.dataType) ++
-      Array[org.apache.spark.sql.types.DataType](
-        org.apache.spark.sql.types.StringType,
-        org.apache.spark.sql.types.LongType)
+  // appended per-row CONSTANTS: identity partition values (cast through
+  // the scan's single materialization point), then the change tag and
+  // commit version — the column order the feed schema declares
+  private def appended(p: GraftChangesPartition): Array[(DataType, Any)] =
+    partSchema.fields.zipWithIndex.map { case (f, i) =>
+      f.dataType -> (if (i >= p.partValues.length || p.partValues(i) == null) null
+        else OcfPartitions.castPartValue(p.partValues(i), f.dataType))
+    } ++ Array(StringType -> UTF8String.fromString(p.changeType), LongType -> p.version)
 
   /** UPDATE pairing (X104): the per-commit key groups a part's per-row
     * classifier probes — eq-driven delete parts probe the commit's new-data
     * keys, insert parts probe the killed visible-old keys, position parts
-    * never pair. Shared by BOTH lanes (the row reader wraps its appended
-    * row; the columnar reader fills a writable tag vector). */
-  private def pairGroupsFor(p: GraftChangesPartition): Array[OcfSplitReader.EqGroup] = {
+    * never pair. */
+  private def pairGroupsFor(p: GraftChangesPartition): Array[OcfColumnarSplitReader.EqGroup] = {
     def staleFactory(map: String): Nothing = throw new IllegalStateException(
       s"graft-ocf-changes: partition for version ${p.version} was planned " +
         s"with UPDATE pairing but the reader factory's $map has no entry " +
@@ -410,50 +344,16 @@ private[sources] final case class GraftChangesReaderFactory(
         case Some(newData) => GraftChangePairing.newDataKeyGroups(
           p.emitEq, newData, readerJson, conf.value)
         case None if p.pairPlanned => staleFactory("pairNewByVersion")
-        case None => Array.empty[OcfSplitReader.EqGroup]
+        case None => Array.empty[OcfColumnarSplitReader.EqGroup]
       }
     else if (p.changeType == "insert")
       pairOldByVersion.get(p.version) match {
         case Some(po) if po.nonEmpty =>
           GraftChangePairing.oldKeyGroups(po, readerJson, conf.value)
         case None if p.pairPlanned => staleFactory("pairOldByVersion")
-        case _ => Array.empty[OcfSplitReader.EqGroup]
+        case _ => Array.empty[OcfColumnarSplitReader.EqGroup]
       }
     else Array.empty
-  }
-
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[GraftChangesPartition]
-    val appended = new GenericInternalRow(appendedValues(p))
-    val inner = new OcfSplitReader(p.meta,
-      p.start, if (p.end < 0L) p.meta.len else p.end,
-      readerJson, wrap = false,
-      conf.value, partRow = appended,
-      deleteFiles = p.skipPos, eqDeleteFiles = p.skipEq,
-      emitOnlyPosFiles = p.emitPos, emitOnlyEqFiles = p.emitEq)
-    // per-row classifier over the commit's pairing key sets flips the
-    // change tag in the appended row — the data row passes through
-    // untouched, so pairing costs one hash probe per row
-    val pairGroups: Array[OcfSplitReader.EqGroup] = pairGroupsFor(p)
-    if (pairGroups.isEmpty) inner
-    else new PartitionReader[InternalRow] {
-      private val slot = partSchema.fields.length // _change_type ordinal
-      private val base = UTF8String.fromString(p.changeType)
-      private val paired = UTF8String.fromString(
-        if (p.changeType == "delete") GraftChangePairing.PreImage
-        else GraftChangePairing.PostImage)
-      override def next(): Boolean = {
-        val has = inner.next()
-        if (has)
-          appended.update(slot,
-            if (OcfSplitReader.EqGroup.anyMatches(pairGroups, inner.get())) paired
-            else base)
-        has
-      }
-      override def get(): InternalRow = inner.get()
-      override def close(): Unit = inner.close()
-      override def currentMetricsValues() = inner.currentMetricsValues()
-    }
   }
 }
 
@@ -464,9 +364,7 @@ private[graft] final class GraftChangesMicroBatchStream(
     maxVersionsPerTrigger: Option[Int] = None,
     maxFilesPerTrigger: Option[Int] = None,
     splitSizeOpt: Option[Long] = None,
-    pairUpdates: Boolean = false,
-    // X110 per-stream A/B lever, same as the batch scans' `columnar` option
-    columnarEnabled: Boolean = true)
+    pairUpdates: Boolean = false)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
 
@@ -577,35 +475,24 @@ private[graft] final class GraftChangesMicroBatchStream(
 
   // each trigger plans then builds its factory; the plan's per-commit
   // pairing maps (X104) travel through this slot instead of every part
-  @volatile private var lastPlanned
-      : (GraftChangesPlanner.Planned, Option[OcfColumnar.Fields]) =
-    (GraftChangesPlanner.Planned(Array.empty, Map.empty, Map.empty), None)
+  @volatile private var lastPlanned: GraftChangesPlanner.Planned =
+    GraftChangesPlanner.Planned(Array.empty, Map.empty, Map.empty)
 
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val planned = GraftChangesPlanner.plan(root, conf, partSchema, splitSize,
       start.asInstanceOf[GraftChangesOffset].version,
       end.asInstanceOf[GraftChangesOffset].version,
       pairUpdates = pairUpdates)
-    // X110 for the stream too: each trigger decides from ITS planned parts
-    // (micro-batches are independent scans) and STAMPS the admitted parts —
-    // the factory answers per PARTITION, so a factory built from another
-    // trigger's plan degrades a mismatched batch to the row lane instead
-    // of crashing on a part without a wire plan
-    val lane =
-      if (!columnarEnabled) None
-      else GraftChangesReaderFactory.columnarFieldsFor(
-        planned.parts, readerJson, partSchema)
-    lastPlanned = (planned, lane)
-    GraftChangesReaderFactory.stamp(planned.parts, lane)
+    lastPlanned = planned
+    GraftChangesReaderFactory.compilePlans(planned.parts, readerJson)
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val (planned, lane) = lastPlanned
+    val planned = lastPlanned
     GraftChangesReaderFactory(readerJson, partSchema,
       new SerializableHadoopConf(conf),
       pairNewByVersion = planned.pairNewByVersion,
-      pairOldByVersion = planned.pairOldByVersion,
-      columnarFields = lane)
+      pairOldByVersion = planned.pairOldByVersion)
   }
 
   override def commit(end: Offset): Unit = ()

@@ -141,7 +141,7 @@ object OcfDataSource {
     * split size, and the listing parameters (kept so a STREAMING read can
     * re-list the same directories on every micro-batch). */
   final case class Resolved(files: Seq[FileSlice], readerJson: String,
-                            dataSql: StructType, sql: StructType, wrap: Boolean,
+                            dataSql: StructType, sql: StructType,
                             conf: Configuration, splitSize: Long,
                             partCols: Seq[String] = Nil,
                             partSchema: StructType = new StructType(),
@@ -168,8 +168,6 @@ object OcfDataSource {
                             // (streaming discovery follows the LATEST
                             // manifest and would silently leave the pin)
                             versionPinned: Boolean = false,
-                            // vectorized flat-scan lane (X91) opt-out
-                            columnarEnabled: Boolean = true,
                             // merge-on-read position deletes (X87): qualified
                             // data-file path -> metas of the delete files
                             // holding its deleted row ordinals. Readers of a
@@ -590,7 +588,7 @@ object OcfDataSource {
         firstMeta = Some(m)
         (m.writerSchemaJson, None)
     }
-    val (dataSql, wrap) = sqlShape(readerJson)
+    val (dataSql, _) = sqlShape(readerJson)
     partCols.foreach { pc =>
       require(!dataSql.fieldNames.exists(_.equalsIgnoreCase(pc)),
         s"graft-ocf: partition column '$pc' collides with a data field; " +
@@ -639,13 +637,12 @@ object OcfDataSource {
     // into ONE task — right when the query keys on the layout, wrong for
     // full scans that want split-level parallelism.
     val reportPart = options.getBoolean("reportPartitioning", false)
-    val r = Resolved(files, readerJson, dataSql, sql, wrap, conf, splitSize,
+    val r = Resolved(files, readerJson, dataSql, sql, conf, splitSize,
       partCols, partSchema, prefetched, paths, glob, recursive, maxFiles,
       maxBytes, reportPartitioning = reportPart, bucket = bucketSpec,
       streamExclude = streamExclude, branchRead = snapBranch.isDefined,
       boundedIncremental = snapStarting.isDefined && snapVersion.isDefined,
       versionPinned = snapVersion.isDefined && snapStarting.isEmpty,
-      columnarEnabled = options.getBoolean("columnar", true),
       deletes = deletesByPath,
       eqDeletes = eqDeletesByPath,
       transforms = transforms)
@@ -1544,7 +1541,7 @@ private[sources] final class OcfScanBuilder(
     val reqPartTypes = reqPartIdx.map(i => resolved.partSchema.fields(i).dataType).toSeq
     if (countStar)
       return OcfScan(metas, resolved.readerJson, resolved.dataSql,
-        resolved.wrap, new SerializableHadoopConf(resolved.conf),
+        new SerializableHadoopConf(resolved.conf),
         resolved.splitSize, resolved.paths, resolved.glob, resolved.recursive,
         countStar = true)
     aggExprs match {
@@ -1559,7 +1556,7 @@ private[sources] final class OcfScanBuilder(
           lazy val stats = statsByPath.getOrElse(m.path,
             OcfPartitions.parseStats(m.statsJson.get))
           val groupVals: Array[Any] = groupIdx.map(gi =>
-            OcfSplitReader.partitionValue(m, gi, resolved.partSchema.fields(gi).dataType))
+            OcfColumnarSplitReader.partitionValue(m, gi, resolved.partSchema.fields(gi).dataType))
           groupVals ++ exprs.map {
             case OcfAggExpr.Count => null
             case OcfAggExpr.MinOf(f, dt) =>
@@ -1577,7 +1574,7 @@ private[sources] final class OcfScanBuilder(
           }.toArray[Any]
         }
         return OcfScan(metas, resolved.readerJson, resolved.dataSql,
-          resolved.wrap, new SerializableHadoopConf(resolved.conf),
+          new SerializableHadoopConf(resolved.conf),
           resolved.splitSize, resolved.paths, resolved.glob, resolved.recursive,
           aggExprs = exprs, aggValues = aggValues,
           aggGroupCols = aggGroupCols.toSeq,
@@ -1598,25 +1595,23 @@ private[sources] final class OcfScanBuilder(
     // groupBy(lang).count()) prunes to a zero-field record: every writer
     // field wire-skips and each datum emits an empty row the partition
     // values join onto — no data column is ever decoded
-    val (readerJson, dataSql, wrap) =
+    val (readerJson, dataSql) =
       (AvroRuntime.parse(resolved.readerJson).physical, requiredData) match {
         case (rec: ARecord, Some(req)) =>
           try {
             val pruned = OcfDataSource.pruneAvro(rec, req)
-            if (pruned == rec) (resolved.readerJson, resolved.dataSql, resolved.wrap)
+            if (pruned == rec) (resolved.readerJson, resolved.dataSql)
             else {
               val js = AvroSchemaParser.toJson(pruned)
-              val (sql, wrap) = OcfDataSource.sqlShape(js)
-              (js, sql, wrap)
+              (js, OcfDataSource.sqlShape(js)._1)
             }
           } catch {
-            case _: OcfDataSource.PruneMismatch =>
-              (resolved.readerJson, resolved.dataSql, resolved.wrap)
+            case _: OcfDataSource.PruneMismatch => (resolved.readerJson, resolved.dataSql)
           }
-        case _ => (resolved.readerJson, resolved.dataSql, resolved.wrap)
+        case _ => (resolved.readerJson, resolved.dataSql)
       }
     OcfDataSource.lastBuiltReaderJson.set(readerJson)
-    OcfScan(metas, readerJson, dataSql, wrap,
+    OcfScan(metas, readerJson, dataSql,
       new SerializableHadoopConf(resolved.conf), resolved.splitSize,
       resolved.paths, resolved.glob, resolved.recursive,
       limit = limit.map(_.toLong).getOrElse(Long.MaxValue),
@@ -1642,8 +1637,7 @@ private[sources] final class OcfScanBuilder(
       excludePaths = resolved.streamExclude,
       branchRead = resolved.branchRead,
       boundedIncremental = resolved.boundedIncremental,
-      versionPinned = resolved.versionPinned,
-      columnarEnabled = resolved.columnarEnabled)
+      versionPinned = resolved.versionPinned)
   }
 }
 
@@ -1697,7 +1691,7 @@ private[sources] final case class OcfScanTaskMetric(name: String, value: Long)
 
 private[graft] final case class OcfScan(
     files: Seq[OcfDataSource.OcfFileMeta], readerJson: String, sql: StructType,
-    wrap: Boolean, conf: SerializableHadoopConf, splitSize: Long,
+    conf: SerializableHadoopConf, splitSize: Long,
     paths: Seq[String] = Nil, glob: Option[String] = None,
     recursive: Boolean = false, limit: Long = Long.MaxValue,
     topNCols: Seq[String] = Nil,
@@ -1729,8 +1723,6 @@ private[graft] final case class OcfScan(
     boundedIncremental: Boolean = false,
     // VERSION/TIMESTAMP AS OF or tag pin: batch-only
     versionPinned: Boolean = false,
-    // vectorized flat-scan lane (X91) opt-out (option columnar=false)
-    columnarEnabled: Boolean = true,
     // `_pos` metadata column requested: emit each row's file ordinal and
     // plan files unsplit (a mid-file split can't know its first ordinal)
     withPos: Boolean = false,
@@ -2077,7 +2069,7 @@ private[graft] final case class OcfScan(
           val vals = new Array[Any](partIdx.length + (if (bucketN > 0) 1 else 0))
           var k = 0
           while (k < partIdx.length) {
-            vals(k) = OcfSplitReader.partitionValue(f, partIdx(k), partTypes(k))
+            vals(k) = OcfColumnarSplitReader.partitionValue(f, partIdx(k), partTypes(k))
             k += 1
           }
           if (bucketN > 0)
@@ -2144,22 +2136,12 @@ private[graft] final case class OcfScan(
         else files.iterator.zipWithIndex.flatMap { case (f, i) =>
           eqDeletes.get(f.path).map(ds => i -> slim(ds))
         }.toMap
-      // vectorized fast lane (X91): a lane-shaped reader schema and an
-      // admitted wire plan for EVERY planned file ([[OcfColumnar]]) —
-      // everything else rides the row reader. Partition values and `_file` are per-split
-      // CONSTANTS and ride as constant vectors; MoR position/equality
-      // deletes vectorize too (X105: skip-decode / slot-reuse in
-      // [[OcfColumnarSplitReader]]), so a burdened table keeps the lane;
-      // `_pos` rides as a real LongType ordinal vector (whole-file splits,
-      // planner-enforced) — the CDC anti-joins' scan shape.
-      val cf: Option[OcfColumnar.Fields] =
-        if (!columnarEnabled || wrap) None
-        else OcfColumnar.fieldsFor(readerJson).filter(rf =>
-          files.forall(m =>
-            OcfColumnar.wirePlanFor(m.writerSchemaJson, rf).isDefined))
-      OcfReaderFactory(shipped, readerJson, wrap, conf, limit, partIdx, partTypes,
-        withFilePath, withPos, delByIdx, columnarFields = cf,
-        eqDeletes = eqByIdx)
+      // every file's plan compiles here, on the driver: a (writer, reader)
+      // pair the resolver refuses fails the query's plan with its message
+      files.iterator.map(_.writerSchemaJson).distinct
+        .foreach(OcfColumnar.wirePlanFor(_, readerJson))
+      OcfReaderFactory(shipped, readerJson, conf, limit, partIdx, partTypes,
+        withFilePath, withPos, delByIdx, eqDeletes = eqByIdx)
     }
   }
 
@@ -2325,54 +2307,23 @@ private[graft] object OcfScan {
 
 private[sources] final case class OcfReaderFactory(
     files: IndexedSeq[OcfDataSource.OcfFileMeta], readerJson: String,
-    wrap: Boolean, conf: SerializableHadoopConf, limit: Long = Long.MaxValue,
+    conf: SerializableHadoopConf, limit: Long = Long.MaxValue,
     partIdx: Array[Int] = Array.empty,
     partTypes: Seq[org.apache.spark.sql.types.DataType] = Nil,
     withFilePath: Boolean = false,
     withPos: Boolean = false,
     deletes: Map[Int, Seq[OcfDataSource.OcfFileMeta]] = Map.empty,
-    // vectorized fast lane (X91): defined only when EVERY planned file
-    // admits a wire plan — uniform across partitions, so Spark's
-    // all-or-nothing columnar planning holds
-    columnarFields: Option[OcfColumnar.Fields] = None,
     // equality deletes (X94): per-file-index metas of the key files whose
     // tuples the reader drops
     eqDeletes: Map[Int, Seq[OcfDataSource.OcfFileMeta]] = Map.empty)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[OcfSplit]
-    val meta = files(p.fileIndex)
-    val consts = OcfSplitReader.appendedValues(meta, partIdx, partTypes, withFilePath)
-    // `_pos` is per-ROW: a trailing slot the reader overwrites before each emit
-    val appended = if (withPos) consts :+ (0L: Any) else consts
-    new OcfSplitReader(meta, p.start, p.end, readerJson, wrap,
-      conf.value, limit,
-      if (appended.isEmpty) null else new GenericInternalRow(appended),
-      p.aligned,
-      deleteFiles = deletes.getOrElse(p.fileIndex, Nil),
-      posSlot = if (withPos) consts.length else -1,
-      eqDeleteFiles = eqDeletes.getOrElse(p.fileIndex, Nil))
-  }
-
-  override def supportColumnarReads(partition: InputPartition): Boolean =
-    columnarFields.isDefined
-
+    extends OcfColumnar.ColumnarReaderFactory {
   override def createColumnarReader(partition: InputPartition)
       : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[OcfSplit]
     val meta = files(p.fileIndex)
-    // the per-FILE wire plan drives the decode — the driver gated the lane
-    // on every planned file having one, so a miss here is a planning bug
-    val plan = OcfColumnar.wirePlanFor(meta.writerSchemaJson, columnarFields.get)
-      .getOrElse(throw new IllegalStateException(
-        s"columnar lane planned without a wire plan for ${meta.path}"))
-    val appendedTypes = partTypes ++
-      (if (withFilePath) Seq(org.apache.spark.sql.types.StringType) else Nil)
-    val appended = appendedTypes.zip(
-      OcfSplitReader.appendedValues(meta, partIdx, partTypes, withFilePath)).toArray
-    new OcfColumnarSplitReader(meta, p.start, p.end,
-      columnarFields.get, plan, conf.value, limit, p.aligned, appended,
-      readerJson = readerJson,
+    new OcfColumnarSplitReader(meta, p.start, p.end, readerJson, conf.value,
+      limit, p.aligned,
+      OcfColumnarSplitReader.appendedValues(meta, partIdx, partTypes, withFilePath),
       deleteFiles = deletes.getOrElse(p.fileIndex, Nil),
       eqDeleteFiles = eqDeletes.getOrElse(p.fileIndex, Nil),
       withPos = withPos)
@@ -2447,230 +2398,20 @@ private[graft] final class OcfAggReader(
   override def close(): Unit = if (blocks != null) blocks.close()
 }
 
-/** Decodes the blocks of one split. The file header was resolved at planning
-  * and arrives via the factory's file table — no split ever reads bytes
-  * before its own range. The block walk is [[OcfBlocks.Cursor]]'s: two
-  * positioned reads per ~64 KB block, plus the chunked sync scan for a
-  * non-zero start offset.
-  * Per-executor schema-parse and compiled-reader caches
-  * ([[graft.spark.AvroRuntime]]) are shared across splits, so a thousand
-  * splits of one file compile the writer→reader resolution once. */
-private[graft] object OcfSplitReader {
-  /** One partition value as its Catalyst representation under the column's
-    * READ TYPE (Int for int/date columns, UTF8String for strings, null for
-    * the hive null dir) — the SINGLE materialization point
-    * ([[OcfPartitions.castPartValue]]), shared by the per-split appended
-    * constants, the keyed-split partition keys, and the grouped-aggregate
-    * group values so they can never diverge.
-    *
-    * Bounds guard: a streaming discovery log persisted BEFORE partition
-    * support has entries with empty value arrays — degrade to null
-    * partition values on replay rather than crash the restarted query. */
-  def partitionValue(meta: OcfDataSource.OcfFileMeta, i: Int,
-                     dt: org.apache.spark.sql.types.DataType): Any =
-    if (i >= meta.partitionValues.length || meta.partitionValues(i) == null) null
-    else OcfPartitions.castPartValue(meta.partitionValues(i), dt)
-
-  /** The per-split CONSTANTS appended after the data columns, in readSchema
-    * order: required partition values (`partTypes` aligns with `partIdx`),
-    * then, when asked, the `_file` metadata value — the file's path. One
-    * construction for both lanes: the row lane joins them as a row onto
-    * every decoded row, the columnar lane zips them with their types into
-    * constant vectors. */
-  def appendedValues(meta: OcfDataSource.OcfFileMeta, partIdx: Array[Int],
-                     partTypes: Seq[org.apache.spark.sql.types.DataType],
-                     withFilePath: Boolean = false): Array[Any] = {
-    val vals = new Array[Any](partIdx.length + (if (withFilePath) 1 else 0))
-    var k = 0
-    while (k < partIdx.length) {
-      vals(k) = partitionValue(meta, partIdx(k), partTypes(k)); k += 1
-    }
-    if (withFilePath)
-      vals(k) = org.apache.spark.unsafe.types.UTF8String.fromString(meta.path)
-    vals
-  }
-
-  /** One equality-delete key group (X94): delete files sharing a key-column
-    * set load into one hash set of key tuples; `matches` probes a decoded
-    * data row. Tuples are `immutable.ArraySeq`s of Catalyst values
-    * (UTF8String/Long/...), which hash/compare element-wise. */
-  final class EqGroup(val ordinals: Array[Int],
-                      val types: Array[org.apache.spark.sql.types.DataType],
-                      val keys: java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]) {
-    /** The key tuple of a decoded row, in this group's column order. */
-    def tuple(row: InternalRow): scala.collection.immutable.ArraySeq[Any] =
-      EqGroup.tuple(row, ordinals, types)
-    def matches(row: InternalRow): Boolean = keys.contains(tuple(row))
-  }
-
-  object EqGroup {
-    /** The tuple of `row`'s values at `ordinals` under `types`: the one
-      * builder of key tuples, for key files and probed rows alike. */
-    def tuple(row: InternalRow, ordinals: Array[Int],
-              types: Array[org.apache.spark.sql.types.DataType])
-        : scala.collection.immutable.ArraySeq[Any] = {
-      val t = new Array[Any](ordinals.length)
-      var i = 0
-      while (i < ordinals.length) {
-        t(i) = if (row.isNullAt(ordinals(i))) null else row.get(ordinals(i), types(i))
-        i += 1
-      }
-      scala.collection.immutable.ArraySeq.unsafeWrapArray(t)
-    }
-
-    /** Does any group hold this row's key tuple? */
-    def anyMatches(groups: Array[EqGroup], row: InternalRow): Boolean = {
-      var i = 0
-      while (i < groups.length) {
-        if (groups(i).matches(row)) return true
-        i += 1
-      }
-      false
-    }
-  }
-}
-
-private[graft] final class OcfSplitReader(
-    meta: OcfDataSource.OcfFileMeta, start: Long, end: Long,
-    readerJson: String, wrap: Boolean, conf: Configuration,
-    limit: Long = Long.MaxValue, partRow: InternalRow = null,
-    aligned: Boolean = false,
-    deleteFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
-    posSlot: Int = -1,
-    eqDeleteFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
-    // CHANGES read (X95): invert the filter — emit ONLY the rows a commit
-    // deleted. `emitOnlyPosFiles`: emit rows whose ordinal is in these
-    // position-delete files but NOT in `deleteFiles` (the older set —
-    // re-deletes of dead rows are not changes). `emitOnlyEqFiles`: emit
-    // rows SURVIVING deleteFiles/eqDeleteFiles whose key matches these
-    // equality-delete files (the commit's new keys). At most one of the
-    // two per reader; both empty = normal read.
-    emitOnlyPosFiles: Seq[OcfDataSource.OcfFileMeta] = Nil,
-    emitOnlyEqFiles: Seq[OcfDataSource.OcfFileMeta] = Nil)
-    extends PartitionReader[InternalRow] {
-
-  // equality deletes (X94) filter by decoded KEY — meaningless on a
-  // wrapped bare-datum read (no record fields to bind)
-  require((eqDeleteFiles.isEmpty && emitOnlyEqFiles.isEmpty) || !wrap,
-    s"graft-ocf: equality deletes need a record read of ${meta.path}")
-  require(emitOnlyPosFiles.isEmpty || emitOnlyEqFiles.isEmpty,
-    "graft-ocf: one changes-read mode per reader")
-
-  // position semantics (deletes to apply, or `_pos` to emit) require the
-  // split to BE the file: ordinals count raw datums from the first block
-  require((deleteFiles.isEmpty && posSlot < 0 && emitOnlyPosFiles.isEmpty) ||
-      (start == 0L && !aligned),
-    s"graft-ocf: positional read of ${meta.path} must scan the whole file " +
-      s"(got split [$start, $end), aligned=$aligned)")
-
-  // everything that can fail (writer→reader resolution, the delete state)
-  // runs before the data file opens, and the cursor closes its own stream
-  // when its set-up fails: Spark only closes a reader whose constructor
-  // SUCCEEDED
-  private val compiled = AvroRuntime.catalystReader(meta.writerSchemaJson, readerJson)
-  private val deletes = OcfDeleteState.load(deleteFiles, eqDeleteFiles,
-    emitOnlyPosFiles, emitOnlyEqFiles, readerJson, conf)
-  private val blocks = new OcfBlocks.Cursor(meta, start, end, aligned, conf)
-
-  private var remaining = 0L
-  private var emitted = 0L
-  private var bin: AvroBinaryReader = _
-  private var row: InternalRow = _
-
-  // position-delete application (X87): sorted distinct ordinals to skip;
-  // the scan is sequential, so one monotone index walks them in O(1)/row
-  private val deletedPos = deletes.deletedPos
-  private var delIdx = 0
-  private var rawPos = 0L
-  // equality-delete application (X94): key-group hash sets, probed per
-  // decoded row — stateless, so splits stay legal under equality deletes
-  private val eqGroups = deletes.eqGroups
-  // changes-read state (X95): the NEWLY-deleted ordinals, or the new key
-  // groups to match
-  private val emitPos = deletes.emitPos
-  private var emitIdx = 0
-  private val emitEqGroups = deletes.emitEqGroups
-  private val changesRead = deletes.changesRead
-
-  // reused per row: joins the decoded data row with the per-file constant
-  // partition-value row (Spark copies rows it retains, the standard
-  // file-source appended-partition-columns contract)
-  private val joined =
-    if (partRow == null) null
-    else new org.apache.spark.sql.catalyst.expressions.JoinedRow()
-
-  override def next(): Boolean = {
-    // pushed-down limit: a split never decodes (or loads) past `limit` rows,
-    // so limit(10) stops after the first block regardless of split size
-    // (counted over SURVIVING rows — deletes are applied first)
-    if (emitted >= limit) return false
-    while (true) {
-      while (remaining == 0L) {
-        if (!blocks.next()) return false
-        bin = blocks.block
-        remaining = blocks.count
-      }
-      val v = compiled(bin)
-      remaining -= 1L
-      val p = rawPos
-      rawPos += 1L
-      val keep =
-        if (delIdx < deletedPos.length && deletedPos(delIdx) == p) {
-          delIdx += 1 // already-dead ordinal: decoded (stream must
-          false       // advance), dropped in EVERY mode
-        } else if (changesRead) {
-          // X95: emit ONLY what the commit newly deleted
-          if (emitPos != null) {
-            while (emitIdx < emitPos.length && emitPos(emitIdx) < p) emitIdx += 1
-            // a newly position-deleted ordinal whose row was ALREADY
-            // equality-deleted (skipEq = the pre-commit state) is a
-            // re-delete of a dead row, not a change
-            emitIdx < emitPos.length && emitPos(emitIdx) == p &&
-              (eqGroups.length == 0 ||
-                !OcfSplitReader.EqGroup.anyMatches(eqGroups, v.asInstanceOf[InternalRow]))
-          } else {
-            val data = v.asInstanceOf[InternalRow]
-            !OcfSplitReader.EqGroup.anyMatches(eqGroups, data) &&
-              OcfSplitReader.EqGroup.anyMatches(emitEqGroups, data)
-          }
-        } else if (eqGroups.length > 0 &&
-            OcfSplitReader.EqGroup.anyMatches(eqGroups, v.asInstanceOf[InternalRow])) {
-          false // equality-deleted key: decoded, dropped
-        } else true
-      if (keep) {
-        if (posSlot >= 0)
-          partRow.asInstanceOf[GenericInternalRow].update(posSlot, p)
-        val data =
-          if (wrap) new GenericInternalRow(Array[Any](v)) else v.asInstanceOf[InternalRow]
-        row = if (joined == null) data else joined(data, partRow)
-        emitted += 1L
-        return true
-      }
-    }
-    false // unreachable
-  }
-
-  override def currentMetricsValues(): Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    blocks.taskMetrics()
-
-  override def get(): InternalRow = row
-  override def close(): Unit = blocks.close()
-}
-
 /** The delete state of one data file's split, built once before the data
   * file opens: the sorted, distinct deleted ordinals (`deletedPos`), the
   * equality-delete key groups (`eqGroups`) and, for a changes read, the
   * newly deleted ordinals (`emitPos`, new minus old; null when the read is
   * not a changes read by position) or the commit's new key groups
-  * (`emitEqGroups`). Both decode lanes take it. Delete and key files walk
+  * (`emitEqGroups`). Delete and key files walk
   * through their own [[OcfBlocks.Cursor]]s, which check every sync marker
   * and close on failure; their reads never count toward the split's scan
   * metrics. */
 private[graft] final class OcfDeleteState(
     val deletedPos: Array[Long],
-    val eqGroups: Array[OcfSplitReader.EqGroup],
+    val eqGroups: Array[OcfColumnarSplitReader.EqGroup],
     val emitPos: Array[Long],
-    val emitEqGroups: Array[OcfSplitReader.EqGroup]) {
+    val emitEqGroups: Array[OcfColumnarSplitReader.EqGroup]) {
   val changesRead: Boolean = emitPos != null || emitEqGroups.length > 0
 }
 
@@ -2727,7 +2468,7 @@ private[graft] object OcfDeleteState {
     * name binds to an ordinal of the decoded data row. */
   private def equalityGroups(eqFiles: Seq[OcfDataSource.OcfFileMeta],
                              readerJson: String,
-                             conf: Configuration): Array[OcfSplitReader.EqGroup] = {
+                             conf: Configuration): Array[OcfColumnarSplitReader.EqGroup] = {
     if (eqFiles.isEmpty) return Array.empty
     val dataRec = graft.avro.AvroSchemaParser.parse(readerJson) match {
       case r: graft.avro.ARecord => r
@@ -2786,16 +2527,15 @@ private[graft] object OcfDeleteState {
           g.sets.foreach(u.addAll)
           u
         }
-      new OcfSplitReader.EqGroup(g.ords, g.tps, keys)
+      new OcfColumnarSplitReader.EqGroup(g.ords, g.tps, keys)
     }.toArray
   }
 }
 
 /** The one walk over the blocks of an OCF file: every graft-ocf reader of
   * block data goes through [[OcfBlocks.Cursor]] —
-  *  - [[OcfSplitReader]], the row lane (block walk over one split);
-  *  - [[OcfColumnarSplitReader]], the columnar lane (block walk over one
-  *    split);
+  *  - [[OcfColumnarSplitReader]], every scan's split decode (block walk
+  *    over one split);
   *  - [[OcfAggReader]]'s COUNT partial, behind COUNT(*) and the pushed
   *    aggregate mix (header-only walk over one split);
   *  - [[OcfDeleteState]]'s position-delete loader (block walk over a

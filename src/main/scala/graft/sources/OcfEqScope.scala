@@ -28,7 +28,7 @@ import org.apache.spark.unsafe.types.UTF8String
   *    the stats-stamp comparison domain (integral family as internal
   *    longs, strings in UTF8 binary order — matching
   *    [[OcfPartitions.ColStat]] exactly);
-  *  - key SETS (executors, [[OcfSplitReader]]): the decoded tuple hash
+  *  - key SETS (executors, [[OcfColumnarSplitReader]]): the decoded tuple hash
   *    set per (delete file, resolved reader schema). One upsert commit
   *    attaches the SAME key file to many data files; before this cache
   *    every split re-read and re-hashed those bytes.
@@ -145,7 +145,7 @@ private[sources] object OcfEqScope {
         val s = new java.util.HashSet[scala.collection.immutable.ArraySeq[Any]]()
         val ordinals = Array.range(0, types.length)
         foreachKeyRow(m, eqReaderJson, conf) { kr =>
-          s.add(OcfSplitReader.EqGroup.tuple(kr, ordinals, types))
+          s.add(OcfColumnarSplitReader.EqGroup.tuple(kr, ordinals, types))
         }
         keySets.put(k, s)
         s

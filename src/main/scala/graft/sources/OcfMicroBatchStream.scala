@@ -2,8 +2,6 @@ package graft.sources
 
 import graft.avro.AvroCodecs
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 
@@ -190,7 +188,11 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     require(known.size >= e,
       s"graft-ocf stream: offset $e exceeds the ${known.size}-file discovery log " +
         s"and no persisted listing exists at $logDir/$e")
-    known.values.slice(s, e).flatMap { f =>
+    val files = known.values.slice(s, e)
+    // each file's plan compiles on the driver: a pair the resolver refuses
+    // fails the trigger with its message
+    files.map(_.writerSchemaJson).toSeq.distinct.foreach(OcfColumnar.wirePlanFor(_, scan.readerJson))
+    files.flatMap { f =>
       (0L until math.max(1L, (f.len + scan.splitSize - 1) / scan.splitSize)).map { k =>
         OcfStreamInputPartition(f, k * scan.splitSize,
           math.min((k + 1) * scan.splitSize, f.len))
@@ -199,8 +201,7 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    OcfStreamReaderFactory(scan.readerJson, scan.wrap, scan.conf, scan.partIdx,
-      scan.partTypes)
+    OcfStreamReaderFactory(scan.readerJson, scan.conf, scan.partIdx, scan.partTypes)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -297,14 +298,14 @@ private[graft] final case class OcfStreamInputPartition(
     meta: OcfDataSource.OcfFileMeta, start: Long, end: Long) extends InputPartition
 
 private[graft] final case class OcfStreamReaderFactory(
-    readerJson: String, wrap: Boolean, conf: SerializableHadoopConf,
+    readerJson: String, conf: SerializableHadoopConf,
     partIdx: Array[Int] = Array.empty,
     partTypes: Seq[org.apache.spark.sql.types.DataType] = Nil)
-    extends PartitionReaderFactory {
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
+    extends OcfColumnar.ColumnarReaderFactory {
+  override def createColumnarReader(partition: InputPartition)
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
     val p = partition.asInstanceOf[OcfStreamInputPartition]
-    new OcfSplitReader(p.meta, p.start, p.end, readerJson, wrap, conf.value,
-      partRow = if (partIdx.isEmpty) null else new GenericInternalRow(
-        OcfSplitReader.appendedValues(p.meta, partIdx, partTypes)))
+    new OcfColumnarSplitReader(p.meta, p.start, p.end, readerJson, conf.value,
+      appended = OcfColumnarSplitReader.appendedValues(p.meta, partIdx, partTypes))
   }
 }

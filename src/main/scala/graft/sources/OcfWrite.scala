@@ -996,7 +996,7 @@ private[sources] final class OcfDataWriter(
 
   private def writeUpsertKey(row: InternalRow): Unit = {
     if (eqSeen != null) {
-      val key = OcfSplitReader.EqGroup.tuple(row, eqOrdinals, eqTypes)
+      val key = OcfColumnarSplitReader.EqGroup.tuple(row, eqOrdinals, eqTypes)
       if (eqSeen.contains(key)) return // duplicate within this task
       // the next input row may reuse this one's buffer, which the key's
       // strings and structs point into: the set keeps its own copy

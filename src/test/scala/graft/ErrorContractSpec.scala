@@ -303,19 +303,17 @@ class ErrorContractSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.col
     def surfaces(datum: Array[Byte]): Seq[(String, () => Unit)] = {
       val ocf = Ocf.writePreEncoded(AvroSchemaParser.parse(js), Iterator(datum))
-      // a graft-ocf scan of the datum on each decode lane, whole and with
-      // `u` projected away (the lane then skips it); the plan is checked
-      // here, outside the intercept below
+      // a graft-ocf scan of the datum, whole and with `u` projected away
+      // (the scan then skips it); the plan is checked here, outside the
+      // intercept below
       val dir = java.nio.file.Files.createTempDirectory("graft-errors-ocf").toFile
       java.nio.file.Files.write(new java.io.File(dir, "d.avro").toPath, ocf)
-      val scans = for (columnar <- Seq(true, false); cols <- Seq(Seq("s", "e", "u"), Seq("s", "e")))
+      val scans = for (cols <- Seq(Seq("s", "e", "u"), Seq("s", "e")))
         yield {
-          val df = spark.read.format("graft-ocf").option("columnar", columnar.toString)
-            .load(dir.getAbsolutePath).select(cols.map(col): _*)
-          assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow") == columnar,
+          val df = spark.read.format("graft-ocf").load(dir.getAbsolutePath).select(cols.map(col): _*)
+          assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
             df.queryExecution.executedPlan.toString)
-          s"graft-ocf scan of ${cols.mkString(", ")}, columnar=$columnar" ->
-            (() => { df.collect(); () })
+          s"graft-ocf scan of ${cols.mkString(", ")}" -> (() => { df.collect(); () })
         }
       val kpl = graft.framing.KplDeaggregator.encode(graft.framing.KplDeaggregator.Aggregated(
         Seq("pk"), Nil, Seq(graft.framing.KplDeaggregator.KplRecord(0, None,

@@ -257,18 +257,18 @@ class OcfDataSourceSpec extends AnyFunSuite {
       """{"type":"record","name":"KV","fields":[{"name":"nope","type":"string"}]}"""
     val before = fds()
     intercept[Exception] {
-      new graft.sources.OcfSplitReader(
+      new graft.sources.OcfColumnarSplitReader(
         graft.sources.OcfDataSource.OcfFileMeta(file.getAbsolutePath, file.length(),
           h.schemaJson, h.codecName, h.sync, headerEnd),
-        0L, file.length(), badReader, wrap = false, conf)
+        0L, file.length(), badReader, conf)
     }
     assert(fds() == before, "constructor failure must not leak the input stream")
     // unknown codec takes the same guarded path
     intercept[Exception] {
-      new graft.sources.OcfSplitReader(
+      new graft.sources.OcfColumnarSplitReader(
         graft.sources.OcfDataSource.OcfFileMeta(file.getAbsolutePath, file.length(),
           h.schemaJson, "lzo", h.sync, headerEnd),
-        0L, file.length(), h.schemaJson, wrap = false, conf)
+        0L, file.length(), h.schemaJson, conf)
     }
     assert(fds() == before)
   }
@@ -293,7 +293,7 @@ class OcfDataSourceSpec extends AnyFunSuite {
       val meta = graft.sources.OcfDataSource.OcfFileMeta(
         "/x/f.avro", 1L << 30, schemaJson, "null", new Array[Byte](16), 100L)
       graft.sources.OcfScan(Seq(meta), schemaJson,
-        new org.apache.spark.sql.types.StructType(), wrap = false,
+        new org.apache.spark.sql.types.StructType(),
         new graft.sources.SerializableHadoopConf(spark.sessionState.newHadoopConf()),
         64L * 1024L).planInputPartitions()
     }
@@ -358,13 +358,13 @@ class OcfDataSourceSpec extends AnyFunSuite {
     val in = hp.getFileSystem(conf).open(hp)
     val (h, headerEnd) =
       try graft.sources.OcfDataSource.readHeaderAt(in, file.length()) finally in.close()
-    val r = new graft.sources.OcfSplitReader(
+    val r = new graft.sources.OcfColumnarSplitReader(
       graft.sources.OcfDataSource.OcfFileMeta(file.getAbsolutePath, file.length(),
         h.schemaJson, h.codecName, h.sync, headerEnd),
-      0L, file.length(), h.schemaJson, wrap = false, conf, limit = 3L)
+      0L, file.length(), h.schemaJson, conf, limit = 3L)
     try {
       var n = 0
-      while (r.next()) n += 1
+      while (r.next()) n += r.get().numRows()
       assert(n == 3, s"pushed limit 3 must cap the reader, emitted $n")
     } finally r.close()
   }
@@ -963,11 +963,14 @@ class OcfDataSourceSpec extends AnyFunSuite {
     scan2.filter(Array[org.apache.spark.sql.sources.Filter](
       org.apache.spark.sql.sources.In("p", Array[Any]("p2"))))
     val rows = batch.planInputPartitions().flatMap { part =>
-      val r = preFactory.createReader(part)
+      val r = preFactory.createColumnarReader(part)
       val b = Seq.newBuilder[(Long, String)]
       try while (r.next()) {
-        val row = r.get()
-        b += ((row.getLong(0), row.getUTF8String(1).toString))
+        val it = r.get().rowIterator()
+        while (it.hasNext) {
+          val row = it.next()
+          b += ((row.getLong(0), row.getUTF8String(1).toString))
+        }
       } finally r.close()
       b.result()
     }
@@ -1068,9 +1071,12 @@ class OcfDataSourceSpec extends AnyFunSuite {
     // and the runtime-pruned splits still read exactly the matching rows
     val factory = batch.createReaderFactory()
     val rows = after.flatMap { part =>
-      val r = factory.createReader(part)
+      val r = factory.createColumnarReader(part)
       val b = Seq.newBuilder[Long]
-      try while (r.next()) b += r.get().getLong(0) finally r.close()
+      try while (r.next()) {
+        val it = r.get().rowIterator()
+        while (it.hasNext) b += it.next().getLong(0)
+      } finally r.close()
       b.result()
     }
     assert(Seq(10L, 3990L).forall(rows.contains),

@@ -19,6 +19,14 @@ class StreamingIngestSpec extends AnyFunSuite {
     .appName("graft-streaming-spec")
     .getOrCreate()
 
+  /** Did the query's last micro-batch decode its graft-ocf splits into
+    * column batches? */
+  private def columnarScan(q: org.apache.spark.sql.streaming.StreamingQuery): Boolean =
+    q.asInstanceOf[org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+      .streamingQuery.lastExecution.executedPlan.collect {
+        case s: org.apache.spark.sql.execution.datasources.v2.MicroBatchScanExec => s.supportsColumnar
+      }.contains(true)
+
   private def unhex(s: String): Array[Byte] =
     s.grouped(2).map(Integer.parseInt(_, 16).toByte).toArray
 
@@ -102,6 +110,43 @@ class StreamingIngestSpec extends AnyFunSuite {
       .map(_.getLong(0)).sorted.toSeq
     assert(ks2 == (0L until 900L),
       "restart must decode exactly the files landed after the checkpointed offset")
+  }
+
+  test("graft-ocf streams plan a columnar MicroBatchScanExec: the split-file " +
+      "stream and readStream.table over a managed table") {
+    import spark.implicits._
+    val in = Files.createTempDirectory("graft-ocfstream-col-in")
+    (0L until 300L).map(i => (i, s"v$i")).toDF("k", "v").coalesce(1)
+      .write.format("graft-ocf").mode("append").save(in.toString)
+    val split = StreamingIngest.ocfSplitFileStream(spark, in.toString, splitSize = Some(4096))
+      .writeStream.format("memory").queryName("ocf_split_columnar")
+      .option("checkpointLocation", Files.createTempDirectory("graft-ocfstream-col-ckpt").toString)
+      .start()
+    try {
+      split.processAllAvailable()
+      assert(columnarScan(split), split.asInstanceOf[
+        org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper]
+        .streamingQuery.lastExecution.executedPlan.toString)
+      assert(spark.table("ocf_split_columnar").as[(Long, String)].collect().sorted.toSeq ==
+        (0L until 300L).map(i => (i, s"v$i")))
+    } finally split.stop()
+
+    spark.conf.set("spark.sql.catalog.gsi", classOf[graft.sources.GraftCatalog].getName)
+    spark.conf.set("spark.sql.catalog.gsi.warehouse",
+      Files.createTempDirectory("graft-ocfstream-col-wh").toString)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS gsi.ns")
+    spark.sql("CREATE TABLE gsi.ns.land (id BIGINT, v STRING) USING `graft-ocf`")
+    (0L until 40L).map(i => (i, s"t$i")).toDF("id", "v").writeTo("gsi.ns.land").append()
+    val table = spark.readStream.table("gsi.ns.land")
+      .writeStream.format("memory").queryName("ocf_table_columnar")
+      .option("checkpointLocation", Files.createTempDirectory("graft-ocfstream-tbl-ckpt").toString)
+      .start()
+    try {
+      table.processAllAvailable()
+      assert(columnarScan(table), "a managed-table stream must decode columnar")
+      assert(spark.table("ocf_table_columnar").as[(Long, String)].collect().sorted.toSeq ==
+        (0L until 40L).map(i => (i, s"t$i")))
+    } finally table.stop()
   }
 
   test("graft-ocf split stream: admission control drains a backlog over bounded triggers") {
@@ -200,6 +245,7 @@ class StreamingIngestSpec extends AnyFunSuite {
       .option("checkpointLocation", ckpt.toString).outputMode("append").start()
     try {
       q.processAllAvailable()
+      assert(columnarScan(q), "the partitioned stream must decode columnar")
       val got = spark.table("ocf_part_stream").select("id", "par")
         .collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
       assert(got.toSeq == (0L until 60L).map(i => (i, s"p${i % 2}")))

@@ -248,42 +248,39 @@ class ChangesTableSpec extends AnyFunSuite {
       "batch-decode, delete parts skip-walk; identical to the row lane") {
     import spark.implicits._
     history("ct10") // 50 inserts; 5 position deletes; eq upsert (7 + 99)
-    def rd(columnar: Boolean) = spark.read
-      .option("columnar", columnar.toString).table("gct.ns.ct10.changes")
-    val col = rd(columnar = true)
+    val col = spark.read.table("gct.ns.ct10.changes")
     assert(col.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
       col.queryExecution.executedPlan.toString)
-    val row = rd(columnar = false)
-    assert(!row.queryExecution.executedPlan.toString.contains("ColumnarToRow"))
     def canon(df: org.apache.spark.sql.DataFrame) = df
       .select($"_commit_version", $"_change_type", $"id", $"v")
       .as[(Long, String, Long, String)].collect().toSeq.sorted
+    // the log `history` wrote: v1 inserts, v2's position deletes, and v3's
+    // upsert (the old generation of key 7 deleted, two rows inserted)
+    val written = (0L until 50L).map(i => (1L, "insert", i, s"v$i")) ++
+      (0L until 50L).filter(_ % 10 == 3).map(i => (2L, "delete", i, s"v$i")) ++
+      Seq((3L, "delete", 7L, "v7"), (3L, "insert", 7L, "UPD7"), (3L, "insert", 99L, "NEW99"))
     val a = canon(col)
-    assert(a == canon(row))
+    assert(a == written.sorted)
     assert(a.count(e => e._1 == 2L && e._2 == "delete") == 5)
     assert(a.contains((3L, "delete", 7L, "v7")) &&
       a.contains((3L, "insert", 7L, "UPD7")) &&
       a.contains((3L, "insert", 99L, "NEW99")), a.toString)
     // a PAIRED feed vectorizes too (r22): the decode stays batch-wide and
     // only the _change_type column switches to a writable vector filled by
-    // the bound-extractor key probe — values must be identical to the row
-    // lane's pairing
-    def pairedRd(columnar: Boolean) = spark.read
-      .option("updateImages", "true")
-      .option("columnar", columnar.toString)
-      .table("gct.ns.ct10.changes")
-    val pairedCol = pairedRd(columnar = true)
+    // the bound-extractor key probe — the upsert's shared-key delete+insert
+    // reads as one UPDATE pair
+    val pairedCol = spark.read.option("updateImages", "true").table("gct.ns.ct10.changes")
     assert(pairedCol.queryExecution.executedPlan.toString
       .contains("ColumnarToRow"),
       pairedCol.queryExecution.executedPlan.toString)
-    val pairedRow = pairedRd(columnar = false)
-    assert(!pairedRow.queryExecution.executedPlan.toString
-      .contains("ColumnarToRow"))
-    assert(canon(pairedCol) == canon(pairedRow),
-      "paired columnar feed must be value-identical to the paired row lane")
+    val paired = written.map {
+      case (3L, "delete", 7L, v) => (3L, "update_preimage", 7L, v)
+      case (3L, "insert", 7L, v) => (3L, "update_postimage", 7L, v)
+      case e => e
+    }
+    assert(canon(pairedCol) == paired.sorted,
+      "the paired feed must equal the written log with the upsert paired")
     assert(pairedCol.count() == a.length)
-    // the upsert's shared-key delete+insert must read as an UPDATE pair in
-    // BOTH lanes
     val tags = pairedCol.select($"_change_type")
       .as[String].collect().groupBy(identity).view.mapValues(_.length).toMap
     assert(tags.getOrElse("update_preimage", 0) == 1 &&
@@ -304,5 +301,25 @@ class ChangesTableSpec extends AnyFunSuite {
       .as[(Long, String, Long, String)].collect().toSeq.sorted
     assert(feed == Seq((1L, "insert", 1L, "en"), (1L, "insert", 2L, "fr"),
       (1L, "insert", 3L, "en"), (2L, "delete", 3L, "en")), feed.toString)
+  }
+
+  test("updateImages pairs string keys whose old rows span more than one batch") {
+    import spark.implicits._
+    // 5,000 rows in one old file, all re-upserted: the insert part's
+    // postimage classifier reads the old file's killed keys back in two
+    // batches (4,096 rows each at most), and every key must still probe
+    spark.sql(
+      """CREATE TABLE gct.ns.ct12 (k STRING, v BIGINT)
+        |USING `graft-ocf`
+        |OPTIONS (`write.delete.mode` 'merge-on-read')""".stripMargin)
+    (0L until 5000L).map(i => (f"key-$i%05d", i)).toDF("k", "v")
+      .coalesce(1).writeTo("gct.ns.ct12").append()                     // v1
+    (0L until 5000L).map(i => (f"key-$i%05d", -i)).toDF("k", "v")
+      .coalesce(1).writeTo("gct.ns.ct12").option("upsertKeys", "k").append() // v2
+    val tags = spark.read.option("updateImages", "true")
+      .option("startingVersion", "1").table("gct.ns.ct12.changes")
+      .where($"_commit_version" === 2L)
+      .groupBy("_change_type").count().as[(String, Long)].collect().toMap
+    assert(tags == Map("update_preimage" -> 5000L, "update_postimage" -> 5000L), tags.toString)
   }
 }

@@ -5,14 +5,14 @@ import org.apache.spark.sql.types._
 import org.scalacheck.{Gen, rng, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property fuzz over the vectorized lane (X91/X105): random flat schemas
-  * (every columnar-eligible type, nullable and plain) x random rows
-  * (nulls, NaN, negative/zero-scale decimals, empty strings/bytes) written
-  * through the real sink, then read back through BOTH lanes — the columnar
-  * batch decode must be value-identical to the row reader on the full
-  * projection, on a random pruned projection, and under an upsert's
-  * equality deletes. Generalizes OcfColumnarSpec's fixed fixtures the way
-  * AvroPropertySpec generalizes the kernel round-trip. */
+/** Property fuzz over the vectorized scan (X91/X105): random schemas x
+  * random rows (nulls, NaN, negative/zero-scale decimals, empty
+  * strings/bytes). Rows written through the real sink must read back as
+  * written — on the full projection, on a random pruned projection, and
+  * under an upsert's equality deletes; kernel-written files must read as
+  * [[ScanOracle.fromAvro]] reads the same datums. Generalizes
+  * OcfColumnarSpec's fixed fixtures the way AvroPropertySpec generalizes
+  * the kernel round-trip. */
 class ColumnarPropertySpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -143,6 +143,8 @@ class ColumnarPropertySpec extends AnyFunSuite {
           new java.math.BigDecimal(java.math.BigInteger.valueOf(u), s))
       case AUnion(Seq(ANull, p)) =>
         Gen.frequency(1 -> Gen.const(null), 3 -> avroValue(p))
+      case AUnion(branches) =>
+        Gen.oneOf(branches).flatMap(b => if (b == ANull) Gen.const(null) else avroValue(b))
       case r: ARecord =>
         Gen.sequence[Seq[Any], Any](r.fields.map(f => avroValue(f.schema)))
           .map(vs => AvroRecord(r, vs.toArray))
@@ -210,12 +212,11 @@ class ColumnarPropertySpec extends AnyFunSuite {
       val dir = tempDir(s"graft-colprop-ext-$iter")
       java.nio.file.Files.write(
         new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(schema, rows))
-      def rd(c: Boolean) = spark.read.format("graft-ocf")
-        .option("columnar", c.toString).load(dir)
-      assert(rd(true).queryExecution.executedPlan.toString
+      val scan = spark.read.format("graft-ocf").load(dir)
+      assert(scan.queryExecution.executedPlan.toString
         .contains("ColumnarToRow"), s"ext iter $iter did not vectorize: " +
         fields.map(_.schema.typeName).mkString(","))
-      assert(canon(rd(true)) == canon(rd(false)),
+      assert(canon(scan) == canon(ScanOracle.fromAvro(spark, dir, AvroSchemaParser.toJson(schema))),
         s"ext iter $iter mismatch on ${fields.map(f =>
           f.name + ":" + f.schema.typeName).mkString(",")}")
     }
@@ -243,21 +244,20 @@ class ColumnarPropertySpec extends AnyFunSuite {
         .option("statsColumns", "k")
         .mode("append").save(dir)
 
-      def rd(columnar: Boolean) = spark.read.format("graft-ocf")
-        .option("columnar", columnar.toString).load(dir)
-      // not vacuous: every generated shape must actually take the lane
-      assert(rd(true).queryExecution.executedPlan.toString
+      def rd() = spark.read.format("graft-ocf").load(dir)
+      assert(rd().queryExecution.executedPlan.toString
         .contains("ColumnarToRow"), s"iter $iter did not vectorize")
-      assert(canon(rd(true)) == canon(rd(false)),
+      assert(canon(rd()) == canon(df),
         s"iter $iter full-projection mismatch on ${keyed.simpleString}")
       // random pruned projection (order-preserving subset)
       val kept = keyed.fieldNames.zipWithIndex
         .filter { case (_, i) => (i + iter) % 2 == 0 }.map(_._1)
       if (kept.nonEmpty)
-        assert(canon(rd(true).select(kept.head, kept.tail: _*)) ==
-          canon(rd(false).select(kept.head, kept.tail: _*)),
+        assert(canon(rd().select(kept.head, kept.tail: _*)) ==
+          canon(df.select(kept.head, kept.tail: _*)),
           s"iter $iter pruned-projection mismatch (${kept.mkString(",")})")
-      // equality-burden the file (X105): upsert a third of the keys
+      // equality-burden the file (X105): upsert a third of the keys with
+      // their own values, so the table still holds exactly the rows of `df`
       val upd = data.filter(r => r.getLong(0) % 3 == 0)
       spark.createDataFrame(
         new java.util.ArrayList[Row](scala.jdk.CollectionConverters
@@ -265,7 +265,7 @@ class ColumnarPropertySpec extends AnyFunSuite {
         .coalesce(1).write.format("graft-ocf")
         .option("statsColumns", "k")
         .option("upsertKeys", "k").mode("append").save(dir)
-      assert(canon(rd(true)) == canon(rd(false)),
+      assert(canon(rd()) == canon(df),
         s"iter $iter equality-burdened mismatch on ${keyed.simpleString}")
     }
   }
@@ -324,13 +324,92 @@ class ColumnarPropertySpec extends AnyFunSuite {
       val dir = tempDir(s"graft-colprop-evo-$iter")
       java.nio.file.Files.write(
         new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(writer, rows))
-      def rd(c: Boolean) = spark.read.format("graft-ocf")
-        .option("readerSchema", AvroSchemaParser.toJson(record(readerStruct)))
-        .option("columnar", c.toString).load(dir)
+      val readerJson = AvroSchemaParser.toJson(record(readerStruct))
+      val scan = spark.read.format("graft-ocf").option("readerSchema", readerJson).load(dir)
       val what = s"evo iter $iter: ${AvroSchemaParser.toJson(readerStruct)} at site $site"
-      assert(rd(true).queryExecution.executedPlan.toString.contains("ColumnarToRow"),
+      assert(scan.queryExecution.executedPlan.toString.contains("ColumnarToRow"),
         s"$what did not vectorize")
-      assert(canon(rd(true)) == canon(rd(false)), s"$what mismatch")
+      assert(canon(scan) == canon(ScanOracle.fromAvro(spark, dir, readerJson)), s"$what mismatch")
+    }
+  }
+
+  test("random NESTED shapes (arrays of arrays, maps of arrays and structs, " +
+      "general unions in arrays and structs) read as from_avro reads them, " +
+      "whole, reordered and with record/array/map defaults; so do bare datums") {
+    import graft.avro._
+    val params = Gen.Parameters.default
+    var seed = rng.Seed(2026_1020L)
+    def next[A](g: Gen[A]): A = { val v = g.pureApply(params, seed); seed = seed.next; v }
+    val json = new com.fasterxml.jackson.databind.ObjectMapper()
+    var named = 0
+    def record(fields: Seq[AField]): ARecord = {
+      named += 1
+      ARecord(s"N$named", Some("prop.shape"), fields)
+    }
+    val scalars: Seq[AvroSchema] = Seq(ABoolean, AInt, ALong, AFloat, ADouble, AString, ABytes)
+    // a shape `depth` levels deep: arrays, maps and records of shapes, a
+    // nullable shape, and general unions of long, string and an array or
+    // record of a shape (branches of distinct kinds, so a value picks one)
+    def shape(depth: Int): AvroSchema =
+      if (depth == 0) next(Gen.oneOf(scalars))
+      else next(Gen.choose(0, 6)) match {
+        case 0 => AArray(shape(depth - 1))
+        case 1 => AMap(shape(depth - 1))
+        case 2 => record((0 until next(Gen.choose(1, 3))).map(i => AField(s"f$i", shape(depth - 1))))
+        case 3 => shape(depth - 1) match {
+          case u: AUnion => u
+          case t => AUnion(Seq(ANull, t))
+        }
+        case 4 =>
+          val inner = shape(depth - 1)
+          val third = if (next(Gen.oneOf(true, false))) AArray(inner)
+            else record(Seq(AField("g", inner)))
+          AUnion((if (next(Gen.oneOf(true, false))) Seq(ANull) else Nil) ++ Seq(ALong, AString, third))
+        case _ => next(Gen.oneOf(scalars))
+      }
+    def scan(dir: String, readerJson: Option[String]) = {
+      val r = spark.read.format("graft-ocf")
+      readerJson.fold(r)(j => r.option("readerSchema", j)).load(dir)
+    }
+    def check(dir: String, readerJson: String, explicit: Boolean, what: String): Unit = {
+      val df = scan(dir, if (explicit) Some(readerJson) else None)
+      assert(df.queryExecution.executedPlan.toString.contains("ColumnarToRow"), s"$what did not vectorize")
+      assert(ScanOracle.rows(df) == ScanOracle.rows(ScanOracle.fromAvro(spark, dir, readerJson)),
+        s"$what mismatch")
+    }
+    for (iter <- 1 to 6) {
+      // the writer: nested shapes, plus a record `n` the reader evolves
+      val nRec = record(Seq(AField("x", ALong)))
+      val fields = (0 until next(Gen.choose(2, 4))).map(i => AField(s"c$i", shape(next(Gen.choose(2, 3))))) :+
+        AField("n", nRec)
+      val writer = record(fields)
+      val rows = (0 until 120 + iter * 9).map { _ =>
+        AvroRecord(writer, writer.fields.map(f => next(avroValue(f.schema))).toArray)
+      }
+      val dir = tempDir(s"graft-colprop-shape-$iter")
+      java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(writer, rows))
+      val writerJson = AvroSchemaParser.toJson(writer)
+      check(dir, writerJson, explicit = false, s"shape iter $iter ($writerJson)")
+      // a reordered projection: the fields reversed, one dropped
+      val reordered = writer.copy(fields = writer.fields.reverse.drop(1))
+      check(dir, AvroSchemaParser.toJson(reordered), explicit = true, s"shape iter $iter reordered")
+      // reader-only fields with record, array and map defaults, at top
+      // level and inside the evolved record `n`
+      def nested() = record(Seq(AField("z", AInt), AField("zs", AArray(AString))))
+      val evolved = writer.copy(fields = writer.fields.init ++ Seq(
+        AField("n", nRec.copy(fields = nRec.fields ++ Seq(
+          AField("ys", AArray(ALong), Some(json.readTree("[4, 5]"))),
+          AField("ym", AMap(nested()), Some(json.readTree("""{"k": {"z": 1, "zs": ["a"]}}""")))))),
+        AField("dRec", nested(), Some(json.readTree("""{"z": 7, "zs": ["p", "q"]}"""))),
+        AField("dArr", AArray(AArray(ALong)), Some(json.readTree("[[1], [], [2, 3]]"))),
+        AField("dMap", AMap(AString), Some(json.readTree("""{"a": "x", "b": ""}""")))))
+      check(dir, AvroSchemaParser.toJson(evolved), explicit = true, s"shape iter $iter defaults")
+      // a bare (non-record) datum file reads as one `value` column
+      val bare = next(Gen.oneOf(AArray(shape(1)), AMap(shape(1)), AUnion(Seq(ANull, ALong)), AString))
+      val bareDir = tempDir(s"graft-colprop-bare-$iter")
+      java.nio.file.Files.write(new java.io.File(bareDir, "x.avro").toPath,
+        Ocf.writeAll(bare, (0 until 90).map(_ => next(avroValue(bare)))))
+      check(bareDir, AvroSchemaParser.toJson(bare), explicit = false, s"bare iter $iter")
     }
   }
 }

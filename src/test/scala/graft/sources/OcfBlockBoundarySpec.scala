@@ -6,9 +6,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Every block a graft-ocf scan reads ends in the file's sync marker, and a
-  * marker that does not match fails the query loudly: in the data file on
-  * both decode lanes, and in the position-delete and equality-delete files
-  * a merge-on-read scan loads before it decodes a row. */
+  * marker that does not match fails the query loudly: in the data file, as
+  * the kernel's own OCF framing fails it, and in the position-delete and
+  * equality-delete files a merge-on-read scan loads before it decodes a
+  * row. */
 class OcfBlockBoundarySpec extends AnyFunSuite {
 
   private lazy val warehouse =
@@ -46,17 +47,14 @@ class OcfBlockBoundarySpec extends AnyFunSuite {
     java.nio.file.Files.write(file.toPath, bytes)
   }
 
-  /** Both lanes fail the read with the cursor's marker check. */
-  private def bothLanesFail(read: Boolean => DataFrame): Unit =
-    Seq(true, false).foreach { columnar =>
-      val df = read(columnar)
-      assert(isColumnar(df) == columnar, df.queryExecution.executedPlan.toString)
-      val e = intercept[Exception](df.collect())
-      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-        .map(t => String.valueOf(t.getMessage)).mkString("\n")
-      assert(chain.contains("OCF sync marker mismatch"),
-        s"columnar=$columnar: $chain")
-    }
+  /** The columnar scan fails the read with the cursor's marker check. */
+  private def scanFails(df: DataFrame): Unit = {
+    assert(isColumnar(df), df.queryExecution.executedPlan.toString)
+    val e = intercept[Exception](df.collect())
+    val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString("\n")
+    assert(chain.contains("OCF sync marker mismatch"), chain)
+  }
 
   private def tableFiles(table: String): Seq[OcfSnapshots.SnapFile] = {
     val root = new Path(warehouse.getAbsolutePath, s"ns/$table")
@@ -76,11 +74,13 @@ class OcfBlockBoundarySpec extends AnyFunSuite {
     val file = new java.io.File(dir, "d.avro")
     java.nio.file.Files.write(file.toPath, Ocf.writeAll(schema,
       (0L until 500L).map(i => AvroRecord(schema, Array[Any](i, s"v$i")))))
-    def read(columnar: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", columnar.toString).load(dir.getAbsolutePath)
-    assert(read(columnar = true).count() == 500L)
+    def read() = spark.read.format("graft-ocf").load(dir.getAbsolutePath)
+    assert(read().count() == 500L)
     flipFirstBlockSync(file)
-    bothLanesFail(read)
+    scanFails(read())
+    // the oracle's framing (the kernel's block iterator) fails the same file
+    val e = intercept[graft.avro.AvroResolutionException](ScanOracle.datums(file))
+    assert(e.getMessage.contains("OCF sync marker mismatch"), e.getMessage)
   }
 
   test("a flipped sync marker in a position-delete file fails both lanes") {
@@ -94,11 +94,10 @@ class OcfBlockBoundarySpec extends AnyFunSuite {
     spark.sql("DELETE FROM gbb.ns.pos WHERE id % 7 = 2")
     val deletes = tableFiles("pos").filter(_.deleteOf.isDefined)
     assert(deletes.nonEmpty, "DELETE must land a position-delete file")
-    def read(columnar: Boolean) =
-      spark.read.option("columnar", columnar.toString).table("gbb.ns.pos")
-    assert(read(columnar = true).count() == (0L until 2000L).count(_ % 7 != 2))
+    def read() = spark.read.table("gbb.ns.pos")
+    assert(read().count() == (0L until 2000L).count(_ % 7 != 2))
     deletes.foreach(d => flipFirstBlockSync(tableFile("pos", d)))
-    bothLanesFail(read)
+    scanFails(read())
   }
 
   test("a flipped sync marker in an equality-delete file fails both lanes") {
@@ -112,14 +111,13 @@ class OcfBlockBoundarySpec extends AnyFunSuite {
       .writeTo("gbb.ns.eq").option("upsertKeys", "id").append()
     val keyFiles = tableFiles("eq").filter(_.isEqualityDelete)
     assert(keyFiles.nonEmpty, "an upsert must land an equality-delete file")
-    def read(columnar: Boolean) =
-      spark.read.option("columnar", columnar.toString).table("gbb.ns.eq")
-    assert(read(columnar = true).count() == 2000L)
+    def read() = spark.read.table("gbb.ns.eq")
+    assert(read().count() == 2000L)
     keyFiles.foreach(k => flipFirstBlockSync(tableFile("eq", k)))
     // decoded key sets are cached per (file, length, reader schema), and
     // flipping a bit keeps the length: drop what the first read cached
     OcfEqScope.keySets.clear()
     OcfEqScope.summaries.clear()
-    bothLanesFail(read)
+    scanFails(read())
   }
 }

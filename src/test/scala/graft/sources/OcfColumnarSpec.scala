@@ -3,9 +3,9 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Vectorized flat-schema reads (X91): ColumnarBatch decode for all-
-  * primitive schemas with identity resolution; row-reader fallback
-  * everywhere else; results identical either way. */
+/** Vectorized reads (X91): every graft-ocf split decodes into a
+  * ColumnarBatch. Sink-written data is compared with the rows written;
+  * external files with [[ScanOracle.fromAvro]] over the same datums. */
 class OcfColumnarSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -23,20 +23,23 @@ class OcfColumnarSpec extends AnyFunSuite {
     df.queryExecution.executedPlan.toString.contains("ColumnarToRow")
 
   /** Write `datums` under `writer` as an external file, read them under
-    * `readerJson` on each lane (the columnar read must take the lane), and
-    * return both lanes' rows, rendered and sorted. */
-  private def readBothLanes(writer: graft.avro.ARecord, datums: Seq[graft.avro.AvroRecord],
+    * `readerJson` through the scan (which must decode columnar) and through
+    * [[ScanOracle.fromAvro]], and return both, rendered and sorted. */
+  private def readWithOracle(writer: graft.avro.AvroSchema, datums: Seq[Any],
       readerJson: String): (Seq[String], Seq[String]) = {
-    val dir = tempDir("graft-col-lanes")
+    val dir = tempDir("graft-col-oracle")
     java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath,
       graft.avro.Ocf.writeAll(writer, datums))
-    def rd(columnar: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", columnar.toString).option("readerSchema", readerJson)
+    val scan = spark.read.format("graft-ocf").option("readerSchema", readerJson)
       .load(dir.getAbsolutePath)
-    assert(isColumnar(rd(columnar = true)), rd(columnar = true).queryExecution.executedPlan.toString)
-    def rendered(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    (rendered(rd(columnar = true)), rendered(rd(columnar = false)))
+    assert(isColumnar(scan), scan.queryExecution.executedPlan.toString)
+    (ScanOracle.rows(scan), ScanOracle.rows(ScanOracle.fromAvro(spark, dir.getAbsolutePath, readerJson)))
   }
+
+  /** The messages of `e` and its causes. */
+  private def messages(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+      .mkString("\n")
 
   test("flat primitive scans read columnar; results equal the row path") {
     import spark.implicits._
@@ -51,16 +54,11 @@ class OcfColumnarSpec extends AnyFunSuite {
       .load(dir.getAbsolutePath)
     assert(isColumnar(colDf), colDf.queryExecution.executedPlan.toString)
 
-    val rowDf = spark.read.format("graft-ocf")
-      .option("splitSize", "65536").option("columnar", "false")
-      .load(dir.getAbsolutePath)
-    assert(!isColumnar(rowDf), "columnar=false must fall back to rows")
-
     def canon(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1),
         r.getDouble(2), r.getBoolean(3))).sortBy(_._1).toSeq
     val a = canon(colDf)
-    assert(a == canon(rowDf))
+    assert(a == canon(src))
     assert(a.length == 5000)
     assert(a(7) == ((7L, null, 3.5, false)))
     assert(a(6) == ((6L, "doc 6", 3.0, true)))
@@ -74,8 +72,8 @@ class OcfColumnarSpec extends AnyFunSuite {
   test("columnar survives codecs and column pruning keeps identity resolution") {
     import spark.implicits._
     val dir = tempDir("graft-col-z")
-    (0L until 1000L).map(i => (i, s"z$i")).toDF("id", "v")
-      .write.format("graft-ocf").option("codec", "deflate")
+    val src = (0L until 1000L).map(i => (i, s"z$i")).toDF("id", "v")
+    src.write.format("graft-ocf").option("codec", "deflate")
       .mode(SaveMode.Append).save(dir.getAbsolutePath)
     val df = spark.read.format("graft-ocf").load(dir.getAbsolutePath)
     assert(isColumnar(df))
@@ -86,10 +84,7 @@ class OcfColumnarSpec extends AnyFunSuite {
     val pruned = df.select("id")
     assert(isColumnar(pruned), pruned.queryExecution.executedPlan.toString)
     assert(pruned.collect().map(_.getLong(0)).sorted.toSeq == (0L until 1000L))
-    val prunedRows = spark.read.format("graft-ocf").option("columnar", "false")
-      .load(dir.getAbsolutePath).select("id")
-    assert(pruned.collect().map(_.getLong(0)).sorted.toSeq ==
-      prunedRows.collect().map(_.getLong(0)).sorted.toSeq)
+    assert(ScanOracle.rows(df) == ScanOracle.rows(src))
   }
 
   test("per-file wire plan: plain writer under nullable reader, both lanes equal") {
@@ -97,8 +92,8 @@ class OcfColumnarSpec extends AnyFunSuite {
     val dir = tempDir("graft-col-wire")
     // tuple fields (Long, Double) are non-nullable in Spark => the sink
     // writes PLAIN long/double — no union, no branch byte on the wire
-    (0L until 3000L).map(i => (i, i * 0.25)).toDF("id", "score")
-      .write.format("graft-ocf").mode(SaveMode.Append).save(dir.getAbsolutePath)
+    val src = (0L until 3000L).map(i => (i, i * 0.25)).toDF("id", "score")
+    src.write.format("graft-ocf").mode(SaveMode.Append).save(dir.getAbsolutePath)
     // a NULLABLE reader over those plain files is the catalog's common
     // case (nullable table schema over non-null-written files): the wire
     // plan must decode with NO branch byte, not consume one the writer
@@ -110,15 +105,14 @@ class OcfColumnarSpec extends AnyFunSuite {
     val col = spark.read.format("graft-ocf")
       .option("readerSchema", readerJson).load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
-    val row = spark.read.format("graft-ocf").option("columnar", "false")
-      .option("readerSchema", readerJson).load(dir.getAbsolutePath)
     def canon(df: DataFrame) =
       df.collect().map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
     val got = canon(col)
-    assert(got == canon(row), "columnar decode must be bit-identical to the row lane")
+    assert(got == canon(src), "columnar decode must equal the rows written")
     assert(got.length == 3000 && got(17) == ((17L, 4.25)))
     // the inverse — NULLABLE writer under a PLAIN reader — has nowhere to
-    // put a null: the lane must refuse and ride the row reader
+    // put a null: the plan compiles, and a null raises the resolver's
+    // message (never a null or an empty string)
     val ndir = tempDir("graft-col-wire-n")
     (0L until 100L).map(i => (i, if (i % 9 == 0) null else s"s$i"))
       .toDF("id", "v") // v nullable => union on the wire
@@ -128,17 +122,14 @@ class OcfColumnarSpec extends AnyFunSuite {
         |{"name":"id","type":"long"}]}""".stripMargin
     val fb = spark.read.format("graft-ocf")
       .option("readerSchema", plainReader).load(ndir.getAbsolutePath)
-    // pruned to id only: writer id is plain, so this DOES vectorize; but a
-    // plain reader including v must not
-    val fields = OcfColumnar.fieldsFor(
-      """{"type":"record","name":"topLevelRecord","fields":[
-        |{"name":"id","type":"long"},{"name":"v","type":"string"}]}""".stripMargin).get
-    val writerJson = OcfDataSource.fetchMetas(spark.sessionState.newHadoopConf(),
-      OcfDataSource.list(spark.sessionState.newHadoopConf(),
-        Seq(ndir.getAbsolutePath), None, recursive = false)).head.writerSchemaJson
-    assert(OcfColumnar.wirePlanFor(writerJson, fields).isEmpty,
-      "nullable-writer-under-plain-reader must refuse the columnar lane")
     assert(fb.collect().map(_.getLong(0)).sorted.toSeq == (0L until 100L))
+    val plainV = spark.read.format("graft-ocf").option("readerSchema",
+      """{"type":"record","name":"topLevelRecord","fields":[
+        |{"name":"id","type":"long"},{"name":"v","type":"string"}]}""".stripMargin)
+      .load(ndir.getAbsolutePath)
+    assert(isColumnar(plainV), plainV.queryExecution.executedPlan.toString)
+    val e = intercept[Exception](plainV.collect())
+    assert(messages(e).contains("writer union branch null not readable as string"), messages(e))
   }
 
   test("columnar composes with block-index aligned splits and stats skipping") {
@@ -169,7 +160,7 @@ class OcfColumnarSpec extends AnyFunSuite {
   }
 
   test("`_file` and partition values ride as constant vectors; DEEP " +
-      "nesting vectorizes too (recursive structs); arrays-of-arrays do not") {
+      "nesting, unions of structs and arrays-of-arrays vectorize too") {
     import spark.implicits._
     val dir = tempDir("graft-col-fb")
     (0L until 100L).map(i => (i, s"d$i")).toDF("id", "v")
@@ -179,60 +170,68 @@ class OcfColumnarSpec extends AnyFunSuite {
     val withFile = base.select($"id", $"_file")
     assert(isColumnar(withFile), withFile.queryExecution.executedPlan.toString)
     assert(withFile.collect().forall(_.getString(1).contains("graft-col-fb")))
-    // TWO-level nesting (a struct inside a struct) rides the lane since
-    // the struct resolver went recursive — value-identical to the row path
+    // TWO-level nesting (a struct inside a struct) — equal to the rows written
     val ndir = tempDir("graft-col-nested")
-    (0L until 10L).map(i => (i, ((s"n$i", i * 2), i * 3)))
+    val nsrc = (0L until 10L).map(i => (i, ((s"n$i", i * 2), i * 3)))
       .toDF("id", "info")
-      .write.format("graft-ocf").mode(SaveMode.Append).save(ndir.getAbsolutePath)
-    def nested(columnar: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", columnar.toString).load(ndir.getAbsolutePath)
-    assert(isColumnar(nested(columnar = true)),
-      nested(columnar = true).queryExecution.executedPlan.toString)
+    nsrc.write.format("graft-ocf").mode(SaveMode.Append).save(ndir.getAbsolutePath)
+    val nested = spark.read.format("graft-ocf").load(ndir.getAbsolutePath)
+    assert(isColumnar(nested), nested.queryExecution.executedPlan.toString)
     def canonN(df: DataFrame) = df
       .selectExpr("id", "info._1._1 AS a", "info._1._2 AS b", "info._2 AS c")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2),
         r.getLong(3))).sortBy(_._1).toSeq
-    assert(canonN(nested(columnar = true)) == canonN(nested(columnar = false)))
-    assert(canonN(nested(columnar = true))(3) == ((3L, "n3", 6L, 9L)))
-    // general unions vectorize since X111; an ARRAY-OF-ARRAYS element is
-    // the remaining row-path shape
-    val unionFields = OcfColumnar.fieldsFor(
+    assert(canonN(nested) == canonN(nsrc))
+    assert(canonN(nested)(3) == ((3L, "n3", 6L, 9L)))
+    // a union of structs (X111) and an ARRAY-OF-ARRAYS: equal to from_avro
+    import graft.avro._
+    val unionSchema = AvroSchemaParser.parse(
       """{"type":"record","name":"r","fields":[
         |{"name":"u","type":[
         |  {"type":"record","name":"A","fields":[{"name":"x","type":"long"}]},
         |  {"type":"record","name":"B","fields":[{"name":"y","type":"string"}]}]}]}"""
-        .stripMargin)
-    assert(unionFields.isDefined, "unions-of-structs vectorize (X111)")
-    val aoa = OcfColumnar.fieldsFor(
+        .stripMargin).asInstanceOf[ARecord]
+    val Seq(a, b) = unionSchema.fields.head.schema.asInstanceOf[AUnion].branches
+      .map(_.asInstanceOf[ARecord])
+    val (unionScan, unionOracle) = readWithOracle(unionSchema, (0L until 40L).map(i =>
+      AvroRecord(unionSchema, Array[Any](
+        if (i % 2 == 0) AvroRecord(a, Array[Any](i)) else AvroRecord(b, Array[Any](s"y$i"))))),
+      AvroSchemaParser.toJson(unionSchema))
+    assert(unionScan == unionOracle)
+    assert(unionScan.contains("{{{4};<null>}}") && unionScan.contains("{{<null>;{y5}}}"),
+      unionScan.take(4).toString)
+    val aoaSchema = AvroSchemaParser.parse(
       """{"type":"record","name":"r","fields":[
         |{"name":"xs","type":{"type":"array","items":
         |  {"type":"array","items":"long"}}}]}""".stripMargin)
-    assert(aoa.isEmpty, "arrays-of-arrays must keep the row lane")
+    val (aoaScan, aoaOracle) = readWithOracle(aoaSchema, (0L until 40L).map(i =>
+      AvroRecord(aoaSchema.asInstanceOf[ARecord],
+        Array[Any]((0L until i % 4).map(j => (0L until j).map(_ + i))))),
+      AvroSchemaParser.toJson(aoaSchema))
+    assert(aoaScan == aoaOracle)
+    assert(aoaScan.contains("{[[];[7];[7;8]]}"), aoaScan.take(4).toString)
   }
 
   test("identity-partitioned scans vectorize: constant partition vectors, " +
       "bit-identical to the row lane, pruning intact") {
     import spark.implicits._
     val pdir = tempDir("graft-col-part")
-    (0L until 2000L).map(i => (i, s"p$i", s"g${i % 3}", (i % 5).toInt))
+    val src = (0L until 2000L).map(i => (i, s"p$i", s"g${i % 3}", (i % 5).toInt))
       .toDF("id", "v", "g", "n")
-      .write.format("graft-ocf").partitionBy("g", "n")
+    src.write.format("graft-ocf").partitionBy("g", "n")
       .mode(SaveMode.Append).save(pdir.getAbsolutePath)
     val col = spark.read.format("graft-ocf").load(pdir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
-    val row = spark.read.format("graft-ocf").option("columnar", "false")
-      .load(pdir.getAbsolutePath)
     def canon(df: DataFrame) = df.select("id", "v", "g", "n").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3)))
       .sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(row), "partitioned columnar decode must equal the row lane")
+    assert(a == canon(src), "partitioned columnar decode must equal the rows written")
     assert(a.length == 2000 && a(7) == ((7L, "p7", "g1", 2)))
     // partition-value predicates still prune at plan time AND stay columnar
     val pruned = col.where($"g" === "g1" && $"n" === 2)
     assert(isColumnar(pruned))
-    assert(pruned.count() == row.where($"g" === "g1" && $"n" === 2).count())
+    assert(pruned.count() == src.where($"g" === "g1" && $"n" === 2).count())
     // partition columns + `_file` together, projected in odd orders
     val mixed = col.select($"g", $"_file", $"id").where($"id" < 50)
     assert(isColumnar(mixed), mixed.queryExecution.executedPlan.toString)
@@ -258,14 +257,12 @@ class OcfColumnarSpec extends AnyFunSuite {
     spark.sql(
       """CREATE TABLE gcol.ns.tfc (id BIGINT, ts TIMESTAMP, v STRING)
         |USING `graft-ocf` PARTITIONED BY (days(ts))""".stripMargin)
-    (0 until 500).map(i => (i.toLong,
+    val tfRows = (0 until 500).map(i => (i.toLong,
         java.sql.Timestamp.from(java.time.Instant.ofEpochSecond(1700000000L + i * 7200L)),
         s"v$i")).toDF("id", "ts", "v")
-      .writeTo("gcol.ns.tfc").append()
+    tfRows.writeTo("gcol.ns.tfc").append()
     val tf = spark.read.table("gcol.ns.tfc")
     assert(isColumnar(tf), tf.queryExecution.executedPlan.toString)
-    val tfRows = spark.read.option("columnar", "false").table("gcol.ns.tfc")
-    assert(!isColumnar(tfRows), "columnar=false read option must reach the catalog scan")
     def canonT(df: DataFrame) = df.collect().map(r =>
       (r.getLong(0), r.getTimestamp(1).toInstant.toString, r.getString(2)))
       .sortBy(_._1).toSeq
@@ -284,13 +281,12 @@ class OcfColumnarSpec extends AnyFunSuite {
     spark.sql(
       """CREATE TABLE gcol.ns.bkc (id BIGINT, v STRING)
         |USING `graft-ocf` PARTITIONED BY (bucket(4, id))""".stripMargin)
-    (0 until 400).map(i => (i.toLong, s"b$i")).toDF("id", "v")
-      .writeTo("gcol.ns.bkc").append()
+    val bkRows = (0 until 400).map(i => (i.toLong, s"b$i")).toDF("id", "v")
+    bkRows.writeTo("gcol.ns.bkc").append()
     val bk = spark.read.table("gcol.ns.bkc")
     assert(isColumnar(bk), bk.queryExecution.executedPlan.toString)
     val bkGot = bk.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1)
     assert(bkGot.toSeq == (0 until 400).map(i => (i.toLong, s"b$i")))
-    val bkRows = spark.read.option("columnar", "false").table("gcol.ns.bkc")
     assert(bkGot.toSeq ==
       bkRows.collect().map(r => (r.getLong(0), r.getString(1))).sortBy(_._1).toSeq)
     // bucket point-lookup pruning stays columnar
@@ -303,21 +299,19 @@ class OcfColumnarSpec extends AnyFunSuite {
       "vectors exactly like the row lane") {
     import spark.implicits._
     val pdir = tempDir("graft-col-pdate")
-    (0 until 300).map(i => (i.toLong,
+    val src = (0 until 300).map(i => (i.toLong,
         java.sql.Date.valueOf(java.time.LocalDate.of(2021, 1, 1).plusDays(i % 4)),
         if (i % 7 == 0) null else s"k${i % 3}"))
       .toDF("id", "d", "k")
-      .write.format("graft-ocf").partitionBy("d", "k")
+    src.write.format("graft-ocf").partitionBy("d", "k")
       .mode(SaveMode.Append).save(pdir.getAbsolutePath)
     val col = spark.read.format("graft-ocf").load(pdir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
-    val row = spark.read.format("graft-ocf").option("columnar", "false")
-      .load(pdir.getAbsolutePath)
     def canon(df: DataFrame) = df.select("id", "d", "k").collect()
       .map(r => (r.getLong(0), r.getDate(1).toString,
         if (r.isNullAt(2)) null else r.getString(2))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(row))
+    assert(a == canon(src))
     assert(a.length == 300)
     assert(a(7) == ((7L, "2021-01-04", null)))
     assert(a(8) == ((8L, "2021-01-01", "k2")))
@@ -339,22 +333,19 @@ class OcfColumnarSpec extends AnyFunSuite {
     val colDf = spark.read.format("graft-ocf")
       .option("splitSize", "65536").load(dir.getAbsolutePath)
     assert(isColumnar(colDf), colDf.queryExecution.executedPlan.toString)
-    val rowDf = spark.read.format("graft-ocf")
-      .option("splitSize", "65536").option("columnar", "false")
-      .load(dir.getAbsolutePath)
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getDate(1).toString, r.getTimestamp(2).toInstant.toString,
       if (r.isNullAt(3)) null else r.getTimestamp(3).toInstant.toString))
       .sortBy(_._1).toSeq
     val a = canon(colDf)
-    assert(a == canon(rowDf))
+    assert(a == canon(src))
     assert(a.length == 2000)
     assert(a(1) == ((1L, "2020-01-02", "2020-01-01T00:00:01.000001Z",
       "2020-09-13T12:26:41Z")))
     assert(a(0)._4 == null)
     // date/timestamp predicates and aggregates consume the batches
     assert(colDf.where($"d" >= java.sql.Date.valueOf("2023-01-01")).count() ==
-      rowDf.where($"d" >= java.sql.Date.valueOf("2023-01-01")).count())
+      src.where($"d" >= java.sql.Date.valueOf("2023-01-01")).count())
 
     // wire-plan level: an EXTERNAL writer's timestamp-millis resolves under
     // a timestamp-micros reader (same Spark type; decode is writer-driven)
@@ -362,18 +353,15 @@ class OcfColumnarSpec extends AnyFunSuite {
       """{"type":"record","name":"r","fields":[
         |{"name":"ts","type":{"type":"long","logicalType":"timestamp-micros"}}]}"""
         .stripMargin
-    val reader = OcfColumnar.fieldsFor(readerJson).get
     val writerJson =
       """{"type":"record","name":"r","fields":[
         |{"name":"ts","type":{"type":"long","logicalType":"timestamp-millis"}}]}"""
         .stripMargin
-    val plan = OcfColumnar.wirePlanFor(writerJson, reader)
-    assert(plan.isDefined)
     val writer = graft.avro.AvroSchemaParser.parse(writerJson).asInstanceOf[graft.avro.ARecord]
-    val (col, row) = readBothLanes(writer, (0 until 50).map(i => graft.avro.AvroRecord(writer,
+    val (col, oracle) = readWithOracle(writer, (0 until 50).map(i => graft.avro.AvroRecord(writer,
       Array[Any](java.time.Instant.ofEpochMilli(1700000000123L + i)))), readerJson)
-    assert(col == row)
-    assert(col.head == s"[${java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(1700000000123L))}]")
+    assert(col == oracle)
+    assert(col.head == s"{${java.sql.Timestamp.from(java.time.Instant.ofEpochMilli(1700000000123L))}}")
   }
 
   test("decimal (bytes and fixed encodings) rides the columnar lane, " +
@@ -393,46 +381,44 @@ class OcfColumnarSpec extends AnyFunSuite {
     val col = spark.read.format("graft-ocf")
       .option("splitSize", "65536").load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
-    val row = spark.read.format("graft-ocf")
-      .option("splitSize", "65536").option("columnar", "false")
-      .load(dir.getAbsolutePath)
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getDecimal(1).toString,
       if (r.isNullAt(2)) null else r.getDecimal(2).toString)).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(row), "columnar decimal decode must equal the row lane")
+    assert(a == canon(src), "columnar decimal decode must equal the rows written")
     assert(a.length == 3000)
     assert(a(0) == ((0L, "-15000.00", null)))
     assert(a(1) == ((1L, "-14989.99",
       (BigDecimal(Long.MaxValue).pow(2) + 1).toBigInt.toString)))
     // decimal predicates/aggregates consume the batches
     assert(col.where($"small" < BigDecimal(0)).count() ==
-      row.where($"small" < BigDecimal(0)).count())
+      src.where($"small" < BigDecimal(0)).count())
     // wire-plan level: a FIXED-encoded writer decimal (external files)
     // resolves under the same DecimalType reader — decode is writer-driven
-    val rf = OcfColumnar.fieldsFor(
+    val readerJson =
       """{"type":"record","name":"r","fields":[
         |{"name":"d","type":{"type":"bytes","logicalType":"decimal",
-        |"precision":10,"scale":2}}]}""".stripMargin)
-    assert(rf.isDefined)
+        |"precision":10,"scale":2}}]}""".stripMargin
     val fixedWriterJson =
       """{"type":"record","name":"r","fields":[
         |{"name":"d","type":{"type":"fixed","name":"f","size":5,
         |"logicalType":"decimal","precision":10,"scale":2}}]}""".stripMargin
-    val fixedPlan = OcfColumnar.wirePlanFor(fixedWriterJson, rf.get)
-    assert(fixedPlan.isDefined)
     val fixedWriter = graft.avro.AvroSchemaParser.parse(fixedWriterJson)
       .asInstanceOf[graft.avro.ARecord]
-    val (fixedCol, fixedRow) = readBothLanes(fixedWriter, (0 until 50).map(i =>
-      graft.avro.AvroRecord(fixedWriter, Array[Any](BigDecimal(i * 1001L - 25000L, 2).bigDecimal))),
-      rf.get.readerJson)
-    assert(fixedCol == fixedRow)
-    assert(fixedCol.contains("[-250.00]") && fixedCol.contains("[240.49]"))
-    // precision beyond DecimalType's 38 must refuse the lane
-    assert(OcfColumnar.fieldsFor(
+    val fixedDatums = (0 until 50).map(i =>
+      graft.avro.AvroRecord(fixedWriter, Array[Any](BigDecimal(i * 1001L - 25000L, 2).bigDecimal)))
+    val (fixedCol, fixedOracle) = readWithOracle(fixedWriter, fixedDatums, readerJson)
+    assert(fixedCol == fixedOracle)
+    assert(fixedCol.contains("{-250.00}") && fixedCol.contains("{240.49}"))
+    // precision beyond DecimalType's 38 has no Spark type: the read fails
+    // its plan
+    val wideDir = tempDir("graft-col-dec-wide")
+    java.nio.file.Files.write(new java.io.File(wideDir, "x.avro").toPath,
+      graft.avro.Ocf.writeAll(fixedWriter, fixedDatums))
+    intercept[Exception](spark.read.format("graft-ocf").option("readerSchema",
       """{"type":"record","name":"r","fields":[
         |{"name":"d","type":{"type":"bytes","logicalType":"decimal",
-        |"precision":44,"scale":2}}]}""".stripMargin).isEmpty)
+        |"precision":44,"scale":2}}]}""".stripMargin).load(wideDir.getAbsolutePath).schema)
   }
 
   test("MoR position- and equality-deleted tables stay on the columnar " +
@@ -448,17 +434,16 @@ class OcfColumnarSpec extends AnyFunSuite {
       """CREATE TABLE gcolm.ns.pos (id BIGINT, v STRING)
         |USING `graft-ocf`
         |OPTIONS (`write.delete.mode` 'merge-on-read')""".stripMargin)
-    (0L until 3000L).map(i => (i, if (i % 5 == 0) null else s"v$i"))
-      .toDF("id", "v").coalesce(1).writeTo("gcolm.ns.pos").append()
+    val written = (0L until 3000L).map(i => (i, if (i % 5 == 0) null else s"v$i"))
+    written.toDF("id", "v").coalesce(1).writeTo("gcolm.ns.pos").append()
     spark.sql("DELETE FROM gcolm.ns.pos WHERE id % 7 = 2")
     val posCol = spark.read.table("gcolm.ns.pos")
     assert(isColumnar(posCol), posCol.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.collect().map(r =>
       (r.getLong(0), if (r.isNullAt(1)) null else r.getString(1)))
       .sortBy(_._1).toSeq
-    val posRows = spark.read.option("columnar", "false").table("gcolm.ns.pos")
     val a = canon(posCol)
-    assert(a == canon(posRows))
+    assert(a == written.filter(_._1 % 7 != 2))
     assert(!a.exists(_._1 % 7 == 2) &&
       a.length == (0L until 3000L).count(_ % 7 != 2))
     assert(a.exists(_._2 == null)) // nulls survive the skip walk
@@ -469,15 +454,14 @@ class OcfColumnarSpec extends AnyFunSuite {
     spark.sql(
       """CREATE TABLE gcolm.ns.eq (id BIGINT, v STRING)
         |USING `graft-ocf` OPTIONS (statsColumns 'id')""".stripMargin)
-    (0L until 3000L).map(i => (i, if (i % 5 == 0) null else s"v$i"))
-      .toDF("id", "v").coalesce(1).writeTo("gcolm.ns.eq").append()
+    written.toDF("id", "v").coalesce(1).writeTo("gcolm.ns.eq").append()
     (0L until 3000L by 3).map(i => (i, s"upd$i")).toDF("id", "v")
       .coalesce(1).writeTo("gcolm.ns.eq").option("upsertKeys", "id").append()
     val eqCol = spark.read.table("gcolm.ns.eq")
     assert(isColumnar(eqCol), eqCol.queryExecution.executedPlan.toString)
-    val eqRows = spark.read.option("columnar", "false").table("gcolm.ns.eq")
+    val upserted = written.map { case (i, v) => (i, if (i % 3 == 0) s"upd$i" else v) }
     val b = canon(eqCol)
-    assert(b == canon(eqRows))
+    assert(b == upserted)
     assert(b.length == 3000)
     val byId = b.toMap
     assert(byId(15L) == "upd15") // killed null row replaced by the upsert
@@ -499,8 +483,7 @@ class OcfColumnarSpec extends AnyFunSuite {
     val both = spark.read.table("gcolm.ns.eq")
     assert(isColumnar(both), both.queryExecution.executedPlan.toString)
     val c = canon(both)
-    assert(c == canon(spark.read.option("columnar", "false")
-      .table("gcolm.ns.eq")))
+    assert(c == upserted.filter(_._1 % 11 != 1))
     assert(!c.exists(_._1 % 11 == 1) &&
       c.length == (0L until 3000L).count(_ % 11 != 1))
   }
@@ -517,9 +500,7 @@ class OcfColumnarSpec extends AnyFunSuite {
     }.toDF("id", "meta", "tail")
     src.coalesce(2).write.format("graft-ocf")
       .mode(SaveMode.Append).save(dir.getAbsolutePath)
-    def rd(c: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", c.toString).load(dir.getAbsolutePath)
-    val col = rd(true)
+    val col = spark.read.format("graft-ocf").load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.selectExpr(
         "id", "meta._1 AS a", "meta._2 AS b", "meta._3 AS c", "tail",
@@ -530,7 +511,7 @@ class OcfColumnarSpec extends AnyFunSuite {
         if (r.isNullAt(3)) "<n>" else r.getBoolean(3).toString,
         r.getString(4), r.getBoolean(5))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(rd(false)))
+    assert(a == canon(src))
     assert(a.length == 4000)
     assert(a(11)._6 && a(11)._2 == "<n>")                 // null struct
     assert(a(10) == ((10L, "5.0", "<n>", "true", "tail10", false))) // null leaf
@@ -540,7 +521,7 @@ class OcfColumnarSpec extends AnyFunSuite {
     assert(isColumnar(pr), pr.queryExecution.executedPlan.toString)
     assert(pr.collect().map(r => (r.getLong(0),
         Option(r.getString(1)).getOrElse("<n>"))).sortBy(_._1).toSeq ==
-      rd(false).selectExpr("id", "meta._2 AS b").collect().map(r =>
+      src.selectExpr("id", "meta._2 AS b").collect().map(r =>
         (r.getLong(0), Option(r.getString(1)).getOrElse("<n>")))
         .sortBy(_._1).toSeq)
     // a WHOLE-struct projection-away skips the record on the wire
@@ -550,34 +531,29 @@ class OcfColumnarSpec extends AnyFunSuite {
       noStruct.where($"tail" === "tail99").count() == 1)
     // nested evolution at depth (X106): an old file missing a struct CHILD
     // plans when the reader child has a default (it fills per present
-    // row); WITHOUT a default the plan refuses — row lane
-    val rf = OcfColumnar.fieldsFor(
+    // row); WITHOUT a default the plan fails with the resolver's message
+    val rf =
       """{"type":"record","name":"r","fields":[
         |{"name":"m","type":{"type":"record","name":"M","fields":[
         |  {"name":"x","type":"long"},
-        |  {"name":"y","type":["null","string"],"default":null}]}}]}"""
-        .stripMargin).get
+        |  {"name":"y","type":["null","string"],"default":null}]}}]}""".stripMargin
     val oldWriter =
       """{"type":"record","name":"r","fields":[
         |{"name":"m","type":{"type":"record","name":"M","fields":[
         |  {"name":"x","type":"long"}]}}]}""".stripMargin
-    val healed = OcfColumnar.wirePlanFor(oldWriter, rf)
-    assert(healed.isDefined,
-      "a struct child WITH a default must fill columnar (X106 at depth)")
     val oldSchema = graft.avro.AvroSchemaParser.parse(oldWriter).asInstanceOf[graft.avro.ARecord]
     val mSchema = oldSchema.fields.head.schema.asInstanceOf[graft.avro.ARecord]
-    val (healedCol, healedRow) = readBothLanes(oldSchema, (0L until 40L).map(i =>
+    val (healedCol, healedOracle) = readWithOracle(oldSchema, (0L until 40L).map(i =>
       graft.avro.AvroRecord(oldSchema, Array[Any](graft.avro.AvroRecord(mSchema, Array[Any](i))))),
-      rf.readerJson)
-    assert(healedCol == healedRow)
-    assert(healedCol.contains("[[7,null]]"), healedCol.take(3).toString)
-    val rfNoDefault = OcfColumnar.fieldsFor(
+      rf)
+    assert(healedCol == healedOracle)
+    assert(healedCol.contains("{{7;<null>}}"), healedCol.take(3).toString)
+    val e = intercept[graft.avro.AvroResolutionException](OcfColumnar.wirePlanFor(oldWriter,
       """{"type":"record","name":"r","fields":[
         |{"name":"m","type":{"type":"record","name":"M","fields":[
         |  {"name":"x","type":"long"},
-        |  {"name":"y","type":["null","string"]}]}}]}""".stripMargin).get
-    assert(OcfColumnar.wirePlanFor(oldWriter, rfNoDefault).isEmpty,
-      "a struct child with NO default must keep the row lane")
+        |  {"name":"y","type":["null","string"]}]}}]}""".stripMargin))
+    assert(e.getMessage == "reader field y of M absent from writer and has no default", e.getMessage)
   }
 
   test("enum and fixed (external files) ride the columnar lane, " +
@@ -600,25 +576,26 @@ class OcfColumnarSpec extends AnyFunSuite {
     }
     java.nio.file.Files.write(new java.io.File(dir, "ef.avro").toPath,
       Ocf.writeAll(schema, datums))
-    def rd(c: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", c.toString).load(dir.getAbsolutePath)
-    val col = rd(true)
+    val col = spark.read.format("graft-ocf").load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getString(1), r.getAs[Array[Byte]](2).toSeq,
       Option(r.getString(3)).getOrElse("<null>"))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(rd(false)))
+    val writerJson = AvroSchemaParser.toJson(schema)
+    assert(a == canon(ScanOracle.fromAvro(spark, dir.getAbsolutePath, writerJson)))
     assert(a(5) == ((5L, "DONE", (5 until 11).map(_.toByte).toSeq, "HI")))
     assert(a(4)._4 == "<null>")
-    // a writer symbol OUTSIDE the reader enum refuses the lane (the reader-
-    // default / resolution-error semantics stay on the row reader)
-    val narrow = OcfColumnar.fieldsFor(
+    // a writer symbol OUTSIDE a reader enum with no default fails the read
+    // of a datum that uses it, with the resolver's message
+    val narrow = spark.read.format("graft-ocf").option("readerSchema",
       """{"type":"record","name":"r","fields":[
         |{"name":"state","type":{"type":"enum","name":"St",
-        |  "symbols":["NEW","OPEN"]}}]}""".stripMargin).get
-    val writerJson = AvroSchemaParser.toJson(schema)
-    assert(OcfColumnar.wirePlanFor(writerJson, narrow).isEmpty)
+        |  "symbols":["NEW","OPEN"]}}]}""".stripMargin).load(dir.getAbsolutePath)
+    assert(isColumnar(narrow), narrow.queryExecution.executedPlan.toString)
+    val e = intercept[Exception](narrow.collect())
+    assert(messages(e).contains("enum symbol DONE not in reader enum St and no default"),
+      messages(e))
   }
 
   test("a string writer under a fixed reader and a bytes writer under an " +
@@ -642,14 +619,13 @@ class OcfColumnarSpec extends AnyFunSuite {
         |{"name":"code","type":{"type":"fixed","name":"Code","size":4}},
         |{"name":"state","type":{"type":"enum","name":"St",
         |  "symbols":["NEW","OPEN","DONE"]}}]}""".stripMargin
-    def rd(c: Boolean) = spark.read.format("graft-ocf").option("readerSchema", reader)
-      .option("columnar", c.toString).load(dir.getAbsolutePath)
-    val col = rd(true)
+    val col = spark.read.format("graft-ocf").option("readerSchema", reader)
+      .load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       new String(r.getAs[Array[Byte]](1), "UTF-8"), r.getString(2))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(rd(false)))
+    assert(a == canon(ScanOracle.fromAvro(spark, dir.getAbsolutePath, reader)))
     assert(a(7) == ((7L, "c007", "OPEN")))
   }
 
@@ -677,20 +653,21 @@ class OcfColumnarSpec extends AnyFunSuite {
     // the evolved table STAYS columnar — the old file resolves via alias
     // (label<-tag), promotion (n int->bigint) and constant default fills
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
-    val row = spark.read.option("columnar", "false").table("gcole.ns.t")
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getLong(1), r.getString(2),
       Option(r.getString(3)).getOrElse("<null>"), r.getString(4), r.getLong(5)))
       .sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(row), "evolved columnar decode must equal the row lane")
+    // era A reads through alias, promotion and defaults; era B as written
+    val written = (0 until 1500).map(i => (i.toLong, i * 3L, s"t$i", "<null>", "unscored", 7L)) ++
+      (1500 until 2000).map(i => (i.toLong, i * 3L, s"t$i", s"note$i", "gold", 1L))
+    assert(a == written, "evolved columnar decode must equal the rows written")
     assert(a.length == 2000)
     assert(a(3) == ((3L, 9L, "t3", "<null>", "unscored", 7L)))      // era A
     assert(a(1600) == ((1600L, 4800L, "t1600", "note1600", "gold", 1L)))
     // filters across eras consume the batches
     assert(col.where($"qual" === "unscored").count() == 1500L)
-    assert(col.where($"n" > 4497L).count() ==
-      row.where($"n" > 4497L).count())
+    assert(col.where($"n" > 4497L).count() == written.count(_._2 > 4497L))
   }
 
   test("`_pos` rides the columnar lane as a real ordinal vector; deleted " +
@@ -708,15 +685,13 @@ class OcfColumnarSpec extends AnyFunSuite {
       .coalesce(1).writeTo("gcolp.ns.t").append()
     spark.sql("DELETE FROM gcolp.ns.t WHERE id % 4 = 1")
     val dir = new java.io.File(wh, "ns/t").getAbsolutePath
-    def posRead(columnar: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", columnar.toString).load(dir)
+    val col = spark.read.format("graft-ocf").load(dir)
       .selectExpr("id", OcfDataSource.PosColName)
-    val col = posRead(columnar = true)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(posRead(columnar = false)))
+    assert(a == (0L until 2000L).filter(_ % 4 != 1).map(i => (i, i)))
     // one single-task file: ordinal == id, and deleted ordinals are GAPS
     // (the ordinal counts raw datums, not surviving rows)
     assert(a.forall { case (id, pos) => id == pos })
@@ -746,11 +721,9 @@ class OcfColumnarSpec extends AnyFunSuite {
     }
     rows.toDF("id", "embedding", "toks", "attrs", "lbl")
       .coalesce(2).writeTo("gcola.ns.emb").append()
-    def rd(columnar: Boolean) = spark.read
-      .option("columnar", columnar.toString).table("gcola.ns.emb")
-    val col = rd(columnar = true)
+    def rd() = spark.read.table("gcola.ns.emb")
+    val col = rd()
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
-    assert(!isColumnar(rd(columnar = false)))
     def canon(df: DataFrame) = df.collect().map { r =>
       (r.getLong(0),
         if (r.isNullAt(1)) null else r.getSeq[Float](1).mkString(","),
@@ -760,31 +733,28 @@ class OcfColumnarSpec extends AnyFunSuite {
           .toSeq.sortBy(_._1).mkString(";"),
         r.getInt(4))
     }.sortBy(_._1).toSeq
+    def written(rs: Seq[(Long, Seq[Float], Seq[String], Map[String, Long], Int)]) =
+      rs.toDF("id", "embedding", "toks", "attrs", "lbl")
     val a = canon(col)
-    assert(a == canon(rd(columnar = false)))
+    assert(a == canon(written(rows)))
     assert(a.length == 3000)
     // pruning a projection AWAY from the arrays type-skips them columnar
-    def pruned(columnar: Boolean) = spark.read
-      .option("columnar", columnar.toString).table("gcola.ns.emb")
-      .select("id", "lbl")
-    assert(isColumnar(pruned(columnar = true)))
-    assert(pruned(columnar = true).collect().map(r => (r.getLong(0), r.getInt(1)))
-      .sortBy(_._1).toSeq ==
-      pruned(columnar = false).collect().map(r => (r.getLong(0), r.getInt(1)))
-      .sortBy(_._1).toSeq)
+    val pruned = rd().select("id", "lbl")
+    assert(isColumnar(pruned))
+    assert(pruned.collect().map(r => (r.getLong(0), r.getInt(1))).sortBy(_._1).toSeq ==
+      rows.map(r => (r._1, r._5)))
     // MoR equality burden (X105) keeps the lane with array columns live
     spark.sql(
       """ALTER TABLE gcola.ns.emb
         |SET TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
-    rows.filter(_._1 % 3 == 0)
-      .map { case (i, _, _, _, l) =>
-        (i, Seq(9.5f, (i % 7).toFloat), Seq(s"upd$i"), Map("u" -> i), l + 1000) }
-      .toDF("id", "embedding", "toks", "attrs", "lbl")
+    def upsert(r: (Long, Seq[Float], Seq[String], Map[String, Long], Int)) =
+      (r._1, Seq(9.5f, (r._1 % 7).toFloat), Seq(s"upd${r._1}"), Map("u" -> r._1), r._5 + 1000)
+    written(rows.filter(_._1 % 3 == 0).map(upsert))
       .coalesce(1).writeTo("gcola.ns.emb").option("upsertKeys", "id").append()
-    val burdened = rd(columnar = true)
+    val burdened = rd()
     assert(isColumnar(burdened), burdened.queryExecution.executedPlan.toString)
     val b = canon(burdened)
-    assert(b == canon(rd(columnar = false)))
+    assert(b == canon(written(rows.map(r => if (r._1 % 3 == 0) upsert(r) else r))))
     assert(b.count(_._5 >= 1000) == rows.count(_._1 % 3 == 0))
   }
   test("nested evolution at depth (X106/X107): rename+widen+add-default " +
@@ -809,23 +779,23 @@ class OcfColumnarSpec extends AnyFunSuite {
       """INSERT INTO gcoln.ns.ne
         |SELECT id, named_struct('score', id * 10, 'label', concat('n', id),
         |  'qual', 'gold') FROM range(1500, 2500)""".stripMargin) // new era
-    def rd(columnar: Boolean) = spark.read
-      .option("columnar", columnar.toString).table("gcoln.ns.ne")
+    def rd() = spark.read.table("gcoln.ns.ne")
       .selectExpr("id", "info.score AS score", "info.label AS label",
         "info.qual AS qual")
     // the heal: the PRE-evolution file resolves at depth (alias name,
     // int->long promotion, per-row default fill) — the scan keeps the lane
-    val col = rd(columnar = true)
+    val col = rd()
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getLong(1), r.getString(2), r.getString(3))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(rd(columnar = false)))
+    assert(a == (0L until 1500L).map(i => (i, i, s"t$i", "unscored")) ++
+      (1500L until 2500L).map(i => (i, i * 10, s"n$i", "gold")))
     assert(a(3) == ((3L, 3L, "t3", "unscored")), a(3).toString)
     assert(a(1600) == ((1600L, 16000L, "n1600", "gold")), a(1600).toString)
     // compact rewrites under the current schema: lane retained, identical
     spark.sql("CALL gcoln.system.compact(table => 'ns.ne')")
-    val after = rd(columnar = true)
+    val after = rd()
     assert(isColumnar(after), after.queryExecution.executedPlan.toString)
     assert(canon(after) == a)
   }
@@ -865,19 +835,18 @@ class OcfColumnarSpec extends AnyFunSuite {
     val dir = tempDir("graft-col-sized")
     java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath,
       Ocf.writePreEncoded(schema, (0L until 500L).iterator.map(datum)))
-    def rd(columnar: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", columnar.toString).load(dir.getAbsolutePath)
-    val col = rd(columnar = true)
+    val col = spark.read.format("graft-ocf").load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.collect().map(r => (r.getLong(0),
       r.getSeq[Long](1).mkString(","),
       r.getMap[String, String](2).toSeq.sortBy(_._1).mkString(";"),
       r.getString(3))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(rd(columnar = false)))
+    assert(a == canon(ScanOracle.fromAvro(spark, dir.getAbsolutePath,
+      AvroSchemaParser.toJson(schema))))
     assert(a(5) == ((5L, "5,6,35", "(a,x5);(b,y5)", "t5")), a(5).toString)
     // pruning the array/map away exercises the O(1) sized-block SKIP
-    val pruned = rd(columnar = true).select("id", "tail")
+    val pruned = col.select("id", "tail")
     assert(isColumnar(pruned))
     assert(pruned.collect().map(r => (r.getLong(0), r.getString(1)))
       .sortBy(_._1).toSeq == (0L until 500L).map(i => (i, s"t$i")))
@@ -909,9 +878,7 @@ class OcfColumnarSpec extends AnyFunSuite {
     val dir = tempDir("graft-col-union")
     java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath,
       Ocf.writeAll(schema, rows))
-    def rd(columnar: Boolean) = spark.read.format("graft-ocf")
-      .option("columnar", columnar.toString).load(dir.getAbsolutePath)
-    val col = rd(columnar = true)
+    val col = spark.read.format("graft-ocf").load(dir.getAbsolutePath)
     assert(isColumnar(col), col.queryExecution.executedPlan.toString)
     def canon(df: DataFrame) = df.selectExpr("id",
         "u.member0.x AS ax", "u.member0.tag AS atag",
@@ -923,41 +890,42 @@ class OcfColumnarSpec extends AnyFunSuite {
         if (r.isNullAt(4)) "<n>" else r.getSeq[Long](4).mkString(","),
         r.getBoolean(5), r.getString(6))).sortBy(_._1).toSeq
     val a = canon(col)
-    assert(a == canon(rd(columnar = false)))
+    assert(a == canon(ScanOracle.fromAvro(spark, dir.getAbsolutePath,
+      AvroSchemaParser.toJson(schema))))
     assert(a(0) == ((0L, 0L, "a0", "<n>", "<n>", false, "t0")), a(0).toString)
     assert(a(1) == ((1L, -1L, "<n>", "<n>", "<n>", true, "t1")), a(1).toString)
     assert(a(2) == ((2L, -1L, "<n>", "s2", "<n>", false, "t2")), a(2).toString)
     assert(a(3) == ((3L, -1L, "<n>", "<n>", "3,4", false, "t3")), a(3).toString)
     // pruning the union away type-skips it (branch byte + branch value)
-    val pruned = rd(columnar = true).select("id", "tail")
+    val pruned = col.select("id", "tail")
     assert(isColumnar(pruned))
     assert(pruned.count() == 800L)
   }
-  test("admission follows the resolver's plan: a branch it moves to another " +
-      "member refuses the lane, a shadowed alias and a null default keep their rules") {
+  test("the scan follows the resolver's plan: a branch it moves to another " +
+      "member, a shadowed alias and a null default read as from_avro reads them") {
     import graft.avro._
-    def fields(json: String) = OcfColumnar.fieldsFor(json).get
     def parse(json: String) = AvroSchemaParser.parse(json).asInstanceOf[ARecord]
     def write(writer: ARecord, datums: Seq[AvroRecord]): java.io.File = {
       val dir = tempDir("graft-col-admit")
       java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(writer, datums))
       dir
     }
-    def rd(dir: java.io.File, readerJson: String, columnar: Boolean) = spark.read
-      .format("graft-ocf").option("columnar", columnar.toString)
-      .option("readerSchema", readerJson).load(dir.getAbsolutePath)
+    def rd(dir: java.io.File, readerJson: String) = {
+      val df = spark.read.format("graft-ocf")
+        .option("readerSchema", readerJson).load(dir.getAbsolutePath)
+      assert(isColumnar(df), df.queryExecution.executedPlan.toString)
+      df
+    }
 
     // a general union whose string branch the resolver reads into the
     // reader's bytes member (the first branch it matches), not the member
-    // at its own position: the lane refuses it, and both lanes read the
-    // member the row lane reads
+    // at its own position: the scan reads the member from_avro reads
     val unionWriterJson =
       """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
         |{"name":"u","type":["null","string","bytes"]}]}""".stripMargin
     val unionReaderJson =
       """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
         |{"name":"u","type":["null","bytes","string"]}]}""".stripMargin
-    assert(OcfColumnar.wirePlanFor(unionWriterJson, fields(unionReaderJson)).isEmpty)
     val unionWriter = parse(unionWriterJson)
     val unionDir = write(unionWriter, (0L until 30L).map { i =>
       val u: Any = (i % 3) match {
@@ -971,41 +939,35 @@ class OcfColumnarSpec extends AnyFunSuite {
         "CAST(u.member0 AS STRING) AS b", "u.member1 AS s", "u IS NULL AS unull")
       .collect().map(r => (r.getLong(0), Option(r.getString(1)).getOrElse("<n>"),
         Option(r.getString(2)).getOrElse("<n>"), r.getBoolean(3))).sortBy(_._1).toSeq
-    val unionCol = members(rd(unionDir, unionReaderJson, columnar = true))
-    assert(unionCol == members(rd(unionDir, unionReaderJson, columnar = false)))
+    val unionCol = members(rd(unionDir, unionReaderJson))
+    assert(unionCol == members(ScanOracle.fromAvro(spark, unionDir.getAbsolutePath, unionReaderJson)))
     assert(unionCol.take(3) == Seq((0L, "s0", "<n>", false), (1L, "b1", "<n>", false),
       (2L, "<n>", "<n>", true)), unionCol.take(3).toString)
 
     // a writer carrying both a reader field's name and one of its aliases:
-    // the name wins the slot and the aliased field is skipped, so the
-    // matched slots still rise in writer order and the lane admits it
+    // the name wins the slot and the aliased field is skipped
     val aliasWriter = parse(
       """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
         |{"name":"old_x","type":"long"},{"name":"x","type":"long"}]}""".stripMargin)
     val aliasReaderJson =
       """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
         |{"name":"x","type":"long","aliases":["old_x"]}]}""".stripMargin
-    assert(OcfColumnar.wirePlanFor(AvroSchemaParser.toJson(aliasWriter),
-      fields(aliasReaderJson)).isDefined)
-    val (aliasCol, aliasRow) = readBothLanes(aliasWriter,
+    val (aliasCol, aliasOracle) = readWithOracle(aliasWriter,
       (0L until 20L).map(i => AvroRecord(aliasWriter, Array[Any](i, -i, i * 10))), aliasReaderJson)
-    assert(aliasCol == aliasRow)
-    assert(aliasCol.head == "[0,0]" && aliasCol.contains("[7,70]"), aliasCol.take(3).toString)
+    assert(aliasCol == aliasOracle)
+    assert(aliasCol.head == "{0;0}" && aliasCol.contains("{7;70}"), aliasCol.take(3).toString)
 
     // a JSON null default on a [T, "null"] field, which Avro does not allow
-    // (a union's default belongs to its first branch), has no constant the
-    // lane fills: the lane refuses it and both lanes read what the row lane does
+    // (a union's default belongs to its first branch): the scan fills what
+    // from_avro fills
     val plainWriter = parse(
       """{"type":"record","name":"r","fields":[{"name":"id","type":"long"}]}""")
     val nullDefaultReaderJson =
       """{"type":"record","name":"r","fields":[{"name":"id","type":"long"},
         |{"name":"n","type":["long","null"],"default":null}]}""".stripMargin
-    assert(OcfColumnar.wirePlanFor(AvroSchemaParser.toJson(plainWriter),
-      fields(nullDefaultReaderJson)).isEmpty)
     val plainDir = write(plainWriter, (0L until 10L).map(i => AvroRecord(plainWriter, Array[Any](i))))
-    def rendered(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    assert(rendered(rd(plainDir, nullDefaultReaderJson, columnar = true)) ==
-      rendered(rd(plainDir, nullDefaultReaderJson, columnar = false)))
+    assert(ScanOracle.rows(rd(plainDir, nullDefaultReaderJson)) == ScanOracle.rows(
+      ScanOracle.fromAvro(spark, plainDir.getAbsolutePath, nullDefaultReaderJson)))
   }
 
   test("union slot reuse under equality deletes (X111+X105): a rejected " +
@@ -1048,10 +1010,7 @@ class OcfColumnarSpec extends AnyFunSuite {
     val dataMeta = metas.find(_.path.endsWith("d.avro")).get
     val keyMeta = metas.find(_.path.endsWith("k.avro")).get
     val readerJson = dataMeta.writerSchemaJson
-    val fields = OcfColumnar.fieldsFor(readerJson).get
-    val plan = OcfColumnar.wirePlanFor(readerJson, fields).get
-    val r = new OcfColumnarSplitReader(dataMeta, 0L, dataMeta.len,
-      fields, plan, conf, readerJson = readerJson,
+    val r = new OcfColumnarSplitReader(dataMeta, 0L, dataMeta.len, readerJson, conf,
       eqDeleteFiles = Seq(keyMeta))
     val got = Seq.newBuilder[(Long, Long, String)]
     try while (r.next()) {
@@ -1073,15 +1032,15 @@ class OcfColumnarSpec extends AnyFunSuite {
     }
     assert(a == expected, a.take(8).toString)
     // cross-kind: a reader that declares u as the member-STRUCT over this
-    // union-writing file must refuse the lane (row-lane resolution rules)
-    val recordReader = OcfColumnar.fieldsFor(
+    // union-writing file reads no branch: the resolver fails each datum
+    val cross = new OcfColumnarSplitReader(dataMeta, 0L, dataMeta.len,
       """{"type":"record","name":"r","fields":[
         |{"name":"id","type":"long"},
         |{"name":"u","type":{"type":"record","name":"U","fields":[
         |  {"name":"member0","type":["null",{"type":"record","name":"A2",
         |    "fields":[{"name":"x","type":"long"}]}]},
-        |  {"name":"member1","type":["null","string"]}]}}]}""".stripMargin).get
-    assert(OcfColumnar.wirePlanFor(readerJson, recordReader).isEmpty,
-      "union-under-record must keep the row lane")
+        |  {"name":"member1","type":["null","string"]}]}}]}""".stripMargin, conf)
+    val e = try intercept[AvroResolutionException](cross.next()) finally cross.close()
+    assert(e.getMessage == "writer union branch record not readable as record", e.getMessage)
   }
 }

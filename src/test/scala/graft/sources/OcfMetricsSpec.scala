@@ -95,9 +95,9 @@ class OcfMetricsSpec extends AnyFunSuite {
     val meta = OcfDataSource.fetchMetas(conf,
       Seq(OcfDataSource.FileSlice(f.getAbsolutePath, f.length()))).head
 
-    val r = new OcfSplitReader(meta, 0, f.length(), schemaJson, wrap = false, conf)
+    val r = new OcfColumnarSplitReader(meta, 0, f.length(), schemaJson, conf)
     var n = 0
-    while (r.next()) n += 1
+    while (r.next()) n += r.get().numRows()
     r.close()
     assert(n == 1000)
     val rm = r.currentMetricsValues().map(x => x.name -> x.value).toMap
@@ -148,9 +148,9 @@ class OcfMetricsSpec extends AnyFunSuite {
       walk.skip(size + graft.avro.Ocf.SyncSize)
     }
     assert(ownedRows > 0L && ownedRows < 1000L, s"the split must start mid-file: $ownedRows")
-    val r = new OcfSplitReader(meta, start, f.length(), schemaJson, wrap = false, conf)
+    val r = new OcfColumnarSplitReader(meta, start, f.length(), schemaJson, conf)
     var n = 0L
-    while (r.next()) n += 1
+    while (r.next()) n += r.get().numRows()
     r.close()
     assert(n == ownedRows)
     val rm = r.currentMetricsValues().map(x => x.name -> x.value).toMap
