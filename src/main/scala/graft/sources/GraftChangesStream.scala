@@ -232,8 +232,10 @@ private[sources] final class GraftChangesTable(
           GraftChangesPlanner.plan(root, c, partSchema, splitSize, sv, ev,
             pairUpdates = pairUpdates)
         }
-        override def planInputPartitions(): Array[InputPartition] =
-          GraftChangesReaderFactory.compilePlans(planned.parts, readerJson)
+        override def planInputPartitions(): Array[InputPartition] = {
+          OcfColumnar.compilePlans(planned.writerJsons, readerJson)
+          planned.parts
+        }
         override def createReaderFactory(): PartitionReaderFactory =
           GraftChangesReaderFactory(readerJson, partSchema,
             new SerializableHadoopConf(conf),
@@ -285,16 +287,6 @@ private[sources] final case class GraftChangesPartition(
   * probes), and the factory serializes ONCE into the stage's broadcast
   * task binary — per-partition copies would ship O(burdened × splits)
   * metas through every task. Empty maps = pairing off. */
-private[sources] object GraftChangesReaderFactory {
-  /** Compile every part's wire plan on the driver, so a (writer, reader)
-    * pair the resolver refuses fails the plan with its message. */
-  def compilePlans(parts: Array[InputPartition], readerJson: String): Array[InputPartition] = {
-    parts.map(_.asInstanceOf[GraftChangesPartition].meta.writerSchemaJson).distinct
-      .foreach(OcfColumnar.wirePlanFor(_, readerJson))
-    parts
-  }
-}
-
 private[sources] final case class GraftChangesReaderFactory(
     readerJson: String, partSchema: StructType, conf: SerializableHadoopConf,
     pairNewByVersion: Map[Long, Seq[OcfDataSource.OcfFileMeta]] = Map.empty,
@@ -484,7 +476,8 @@ private[graft] final class GraftChangesMicroBatchStream(
       end.asInstanceOf[GraftChangesOffset].version,
       pairUpdates = pairUpdates)
     lastPlanned = planned
-    GraftChangesReaderFactory.compilePlans(planned.parts, readerJson)
+    OcfColumnar.compilePlans(planned.writerJsons, readerJson)
+    planned.parts
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -515,7 +508,11 @@ private[sources] object GraftChangesPlanner {
   final case class Planned(
       parts: Array[InputPartition],
       pairNewByVersion: Map[Long, Seq[OcfDataSource.OcfFileMeta]],
-      pairOldByVersion: Map[Long, Seq[GraftPairOldFile]])
+      pairOldByVersion: Map[Long, Seq[GraftPairOldFile]]) {
+    /** The writer schema of every part's file. */
+    def writerJsons: Iterator[String] =
+      parts.iterator.map(_.asInstanceOf[GraftChangesPartition].meta.writerSchemaJson)
+  }
 
   def plan(root: Path, conf: Configuration, partSchema: StructType,
            splitSize: Long, sv: Long, ev: Long,

@@ -18,8 +18,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * one loop per batch, with no per-row reader call, row allocation or
   * iterator step. Spark's `ColumnarToRow` (codegen'd) consumes the
   * batches. Every graft-ocf scan, stream and change-feed read decodes this
-  * way. Partition values and `_file` are per-split CONSTANTS and ride as
-  * constant vectors, `_pos` rides as a real ordinal vector, and MoR
+  * way. Partition values, `_file` and the top-level fields a file never
+  * wrote are per-split CONSTANTS and ride as constant vectors, `_pos`
+  * rides as a real ordinal vector, and MoR
   * position/equality deletes apply in-lane (X105).
   *
   * The wire plan is an emitter over [[AvroResolver]]'s plan, beside
@@ -43,6 +44,35 @@ private[graft] object OcfColumnar {
     })
 
   private val planCache = new java.util.concurrent.ConcurrentHashMap[String, WirePlan]()
+
+  /** Compile the plan of every writer in `writerJsons` on the driver, so a
+    * (writer, reader) pair the resolver refuses fails the query's plan (or
+    * the trigger's) with the resolver's message, not a task. */
+  def compilePlans(writerJsons: Iterator[String], readerJson: String): Unit =
+    writerJsons.distinct.foreach(wirePlanFor(_, readerJson))
+
+  /** A per-split constant column of `dt` holding Catalyst value `x`: a
+    * partition value, `_file`, or a reader field the file never wrote. */
+  def constantVector(capacity: Int, dt: DataType, x: Any): ConstantColumnVector = {
+    val cv = new ConstantColumnVector(capacity, dt)
+    if (x == null) cv.setNull()
+    else dt match {
+      case st: StructType =>
+        val r = x.asInstanceOf[InternalRow]
+        var k = 0
+        while (k < st.length) {
+          cv.setChild(k, constantVector(capacity, st(k).dataType, r.get(k, st(k).dataType)))
+          k += 1
+        }
+      case _: ArrayType | _: MapType =>
+        // the value decodes once into a one-row vector the constant views
+        val one = new OnHeapColumnVector(1, dt)
+        write(one, 0, x)
+        if (dt.isInstanceOf[ArrayType]) cv.setArray(one.getArray(0)) else cv.setMap(one.getMap(0))
+      case _ => ColumnVectorUtils.populate(cv, new GenericInternalRow(Array[Any](x)), 0)
+    }
+    cv
+  }
 
   /** The factory of every graft-ocf split reader: each split decodes into
     * column batches, so Spark never asks for a row reader. */
@@ -172,13 +202,14 @@ private[graft] object OcfColumnar {
   }
 
   /** A struct: each writer field decodes into its reader child (or skips),
-    * then the reader-only children take their defaults. */
-  private def structPut(rec: Record): Put = {
+    * then, when `fill`, the reader-only children take their defaults (the
+    * top-level record leaves them to constant vectors). */
+  private def structPut(rec: Record, fill: Boolean = true): Put = {
     val fields = rec.fields.map(emit)
     val slots = rec.slots
-    val fills = rec.defaults.indices.filter(rec.defaults(_).isDefined).toArray
-    val fillValues = fills.map(j =>
-      CatalystAvroReader.toCatalyst(rec.defaults(j).get, rec.reader.fields(j).schema))
+    val fills =
+      if (fill) rec.defaults.indices.filter(rec.defaults(_).isDefined).toArray else Array.empty[Int]
+    val fillValues = fills.map(defaultOf(rec, _))
     (in, v, row) => {
       var i = 0
       while (i < fields.length) {
@@ -190,6 +221,10 @@ private[graft] object OcfColumnar {
       while (i < fills.length) { write(v.getChild(fills(i)), row, fillValues(i)); i += 1 }
     }
   }
+
+  /** Reader field `j`'s default as a Catalyst value. */
+  private def defaultOf(rec: Record, j: Int): Any =
+    CatalystAvroReader.toCatalyst(rec.defaults(j).get, rec.reader.fields(j).schema)
 
   /** Write Catalyst value `x` (a default) into row `row` of `v`. */
   private def write(v: WritableColumnVector, row: Int, x: Any): Unit =
@@ -274,8 +309,19 @@ private[graft] object OcfColumnar {
     * `value` field). */
   final class WirePlan private[OcfColumnar] (plan: Resolved, writer: AvroSchema,
       val readerType: StructType, wrap: Boolean) {
-    private val top = emit(plan)
+    private val top = plan match {
+      case rec: Record => structPut(rec, fill = false)
+      case p => emit(p)
+    }
     private val skipDatum = AvroSkipper.compile(writer)
+
+    /** Per reader column: Some(default) for a top-level field this writer
+      * never wrote (the post-ADD-COLUMN old file), which the split reader
+      * holds as a constant vector instead of filling it per row. */
+    val constants: Array[Option[Any]] = plan match {
+      case rec: Record => rec.defaults.indices.map(j => rec.defaults(j).map(_ => defaultOf(rec, j))).toArray
+      case _ => Array.fill(readerType.length)(None)
+    }
 
     /** Decode the datum at `in` into row `row` of `root`'s children. */
     def decode(in: AvroBinaryReader, root: WritableColumnVector, row: Int): Unit =
@@ -376,11 +422,15 @@ private[graft] final class OcfColumnarSplitReader(
     case _ => batchSize
   }
 
-  // the reader's fields decode into the children of one struct vector
-  // (fields the writer never had take their reader defaults per row)
+  // the reader's fields decode into the children of one struct vector;
+  // fields the writer never had (post-ADD-COLUMN old files) are per-file
+  // constants from their reader defaults
   private val root = new OnHeapColumnVector(capacity, plan.readerType)
   private val vectors: Array[ColumnVector] =
-    Array.tabulate(plan.readerType.length)(i => root.getChild(i))
+    Array.tabulate(plan.readerType.length)(i => plan.constants(i) match {
+      case Some(c) => OcfColumnar.constantVector(capacity, plan.readerType(i).dataType, c)
+      case None => root.getChild(i)
+    })
   private val pairing = pairGroups.length > 0
   require(!pairing || (pairTagAt >= 0 && pairTagAt < appended.length &&
       appended(pairTagAt)._1 == StringType && pairBase != null && pairAlt != null),
@@ -394,11 +444,7 @@ private[graft] final class OcfColumnarSplitReader(
   private val constVectors: Array[ColumnVector] =
     appended.zipWithIndex.map { case ((dt, v), k) =>
       if (pairing && k == pairTagAt) pairVector: ColumnVector
-      else {
-        val cv = new ConstantColumnVector(capacity, dt)
-        ColumnVectorUtils.populate(cv, new GenericInternalRow(Array[Any](v)), 0)
-        cv
-      }
+      else OcfColumnar.constantVector(capacity, dt, v)
     }
   private val posVector: OnHeapColumnVector =
     if (withPos) new OnHeapColumnVector(capacity, LongType) else null

@@ -2136,10 +2136,7 @@ private[graft] final case class OcfScan(
         else files.iterator.zipWithIndex.flatMap { case (f, i) =>
           eqDeletes.get(f.path).map(ds => i -> slim(ds))
         }.toMap
-      // every file's plan compiles here, on the driver: a (writer, reader)
-      // pair the resolver refuses fails the query's plan with its message
-      files.iterator.map(_.writerSchemaJson).distinct
-        .foreach(OcfColumnar.wirePlanFor(_, readerJson))
+      OcfColumnar.compilePlans(files.iterator.map(_.writerSchemaJson), readerJson)
       OcfReaderFactory(shipped, readerJson, conf, limit, partIdx, partTypes,
         withFilePath, withPos, delByIdx, eqDeletes = eqByIdx)
     }

@@ -189,9 +189,7 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
       s"graft-ocf stream: offset $e exceeds the ${known.size}-file discovery log " +
         s"and no persisted listing exists at $logDir/$e")
     val files = known.values.slice(s, e)
-    // each file's plan compiles on the driver: a pair the resolver refuses
-    // fails the trigger with its message
-    files.map(_.writerSchemaJson).toSeq.distinct.foreach(OcfColumnar.wirePlanFor(_, scan.readerJson))
+    OcfColumnar.compilePlans(files.iterator.map(_.writerSchemaJson), scan.readerJson)
     files.flatMap { f =>
       (0L until math.max(1L, (f.len + scan.splitSize - 1) / scan.splitSize)).map { k =>
         OcfStreamInputPartition(f, k * scan.splitSize,

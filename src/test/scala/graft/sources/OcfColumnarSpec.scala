@@ -670,6 +670,58 @@ class OcfColumnarSpec extends AnyFunSuite {
     assert(col.where($"n" > 4497L).count() == written.count(_._2 > 4497L))
   }
 
+  test("top-level fields a file never wrote are constant vectors; nested " +
+      "fields it never wrote fill per row") {
+    import graft.avro._
+    import org.apache.spark.sql.execution.vectorized.ConstantColumnVector
+    val writer = AvroSchemaParser.parse(
+      """{"type":"record","name":"r","fields":[
+        |{"name":"id","type":"long"},
+        |{"name":"n","type":{"type":"record","name":"N","fields":[
+        |  {"name":"a","type":"long"}]}}]}""".stripMargin).asInstanceOf[ARecord]
+    val nRec = writer.fields(1).schema.asInstanceOf[ARecord]
+    val readerJson =
+      """{"type":"record","name":"r","fields":[
+        |{"name":"id","type":"long"},
+        |{"name":"s","type":"string","default":"d"},
+        |{"name":"xs","type":{"type":"array","items":"long"},"default":[1,2]},
+        |{"name":"m","type":{"type":"map","values":"string"},"default":{"k":"v"}},
+        |{"name":"p","type":{"type":"record","name":"P","fields":[
+        |  {"name":"q","type":"int"}]},"default":{"q":3}},
+        |{"name":"o","type":["null","long"],"default":null},
+        |{"name":"n","type":{"type":"record","name":"N","fields":[
+        |  {"name":"a","type":"long"},
+        |  {"name":"b","type":"string","default":"nb"}]}}]}""".stripMargin
+    val datums = (0L until 50L).map(i =>
+      AvroRecord(writer, Array[Any](i, AvroRecord(nRec, Array[Any](i * 2)))))
+    val (scan, oracle) = readWithOracle(writer, datums, readerJson)
+    assert(scan == oracle)
+    assert(scan.length == 50)
+    val dir = tempDir("graft-col-const-fill")
+    java.nio.file.Files.write(new java.io.File(dir, "x.avro").toPath, Ocf.writeAll(writer, datums))
+    val conf = spark.sessionState.newHadoopConf()
+    val meta = OcfDataSource.fetchMetas(conf, OcfDataSource.list(conf,
+      Seq(dir.getAbsolutePath), None, recursive = false)).head
+    val r = new OcfColumnarSplitReader(meta, 0L, meta.len, readerJson, conf)
+    try {
+      assert(r.next())
+      val b = r.get()
+      assert((1 to 5).forall(b.column(_).isInstanceOf[ConstantColumnVector]),
+        (0 until b.numCols()).map(b.column(_).getClass.getSimpleName))
+      assert(!b.column(0).isInstanceOf[ConstantColumnVector])
+      assert(!b.column(6).isInstanceOf[ConstantColumnVector])
+      val row = b.getRow(7)
+      assert(row.getUTF8String(1).toString == "d")
+      assert(row.getArray(2).toLongArray().toSeq == Seq(1L, 2L))
+      assert(row.getMap(3).keyArray().getUTF8String(0).toString == "k")
+      assert(row.getMap(3).valueArray().getUTF8String(0).toString == "v")
+      assert(row.getStruct(4, 1).getInt(0) == 3)
+      assert(row.isNullAt(5))
+      assert(row.getStruct(6, 2).getLong(0) == 14L)
+      assert(row.getStruct(6, 2).getUTF8String(1).toString == "nb")
+    } finally r.close()
+  }
+
   test("`_pos` rides the columnar lane as a real ordinal vector; deleted " +
       "ordinals stay raw-datum-based (X105)") {
     import spark.implicits._
