@@ -130,14 +130,14 @@ object AvroResolver {
     }
 
     /** Same physical type or an Avro promotion, else a pair the generic
-      * reader decodes by the writer: a writer logical type, or a null,
-      * string, bytes or fixed writer under any reader. An int under
+      * reader decodes by the writer: a writer logical type, or a string,
+      * bytes or fixed writer under any reader. An int under
       * `timestamp-millis` widens to long, then scales. Whichever rule
       * resolves it, the value must fit the reader's slot ([[slot]]); a pair
       * whose value would land in a slot of another type — a string under an
-      * int, a decimal under plain bytes, time-micros under time-millis —
-      * fails here, as the reference's `read_data` fails a pair it cannot
-      * match. A null fits every slot. */
+      * int, a decimal under plain bytes, time-micros under time-millis, a
+      * null under a non-null reader — fails here, as the reference's
+      * `read_data` fails a pair it cannot match. */
     private def scalar(w: AvroSchema, r: AvroSchema): Scalar = {
       val wire = deref(w.physical)
       val rp = deref(r.physical)
@@ -153,7 +153,7 @@ object AvroResolver {
           case d: ADecimal => d // a decimal reads a bytes or fixed value alike
           case _ => null
         }, r)
-        case (_, ANull | AString) => Scalar(wire, wire, null, r)
+        case (_, AString) => Scalar(wire, wire, null, r)
         case _ => throw unresolvable(w, r)
       }
       val value = s.logical match {
@@ -161,7 +161,7 @@ object AvroResolver {
         case _: ATimestampMillis => "long" // scaled to micros
         case _ => slot(s.target)
       }
-      if (wire != ANull && value != slot(r)) throw unresolvable(w, r)
+      if (value != slot(r)) throw unresolvable(w, r)
       s
     }
 

@@ -1617,8 +1617,9 @@ private[sources] class CatalogOcfTable(
     // Incremental append scan (X78): `spark.read.option("startingVersion", v)
     // [.option("endingVersion", v2)].table(...)` reads only the rows whose
     // files were COMMITTED after v (up to v2 / latest) — the "process what
-    // arrived since the last run" primitive. Exact-or-refuse semantics live
-    // in [[OcfSnapshots.incrementalFiles]]; an empty range is an empty
+    // arrived since the last run" primitive, and a stream's start. The rule
+    // (compaction adds nothing, other rewrites refuse) lives in
+    // [[OcfSnapshots.appendedFiles]]; an empty range is an empty
     // frame. Options are per-SCAN (they arrive here, not in table state),
     // so the same table instance serves normal reads untouched.
     val starting = Option(options.get("startingVersion")).map(_.toLong)

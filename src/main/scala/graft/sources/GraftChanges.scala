@@ -237,7 +237,7 @@ object GraftChanges {
       val removedData = prev.files.filter(f =>
         f.isData && !curPaths.contains(f.path))
       if (removedData.nonEmpty)
-        require(GraftChangesPlanner.RowPreservingOps.contains(cur.operation) ||
+        require(OcfSnapshots.addsNoRows(prevV, v, cur.operation) ||
             cur.operation == CowRowLevelOp,
           s"graft-ocf changes: version $v (operation '${cur.operation}') " +
             s"removed or replaced ${removedData.size} data file(s) — its " +

@@ -495,12 +495,10 @@ private[graft] final class GraftChangesMicroBatchStream(
 /** The change-feed PART PLANNER, shared by the streaming source (X95) and
   * the batch `.changes` read (X101): walk the retained versions in
   * (sv, ev], emit insert parts for new data files and delete parts for new
-  * position/equality delete files, refuse non-row-preserving rewrites.
+  * position/equality delete files, refuse rewrites that change rows
+  * ([[OcfSnapshots.requireAppendOnly]]).
   * sv = 0 is the GENESIS baseline (needs version 1 retained). */
 private[sources] object GraftChangesPlanner {
-
-  /** Commits whose file removals are row-preserving by construction. */
-  val RowPreservingOps = Set("compact", "rewrite-position-deletes")
 
   /** One planning pass's output: the parts, plus the per-COMMIT pairing
     * inputs (X104) destined for the READER FACTORY — per-commit constants
@@ -551,15 +549,9 @@ private[sources] object GraftChangesPlanner {
       val cur = OcfSnapshots.read(fs, root, v)
       val prevByPath = prev.files.map(f => f.path -> f).toMap
       val curPaths = cur.files.map(_.path).toSet
-      val removedData = prev.files.filter(f =>
-        f.isData && !curPaths.contains(f.path))
-      if (removedData.nonEmpty)
-        require(RowPreservingOps.contains(cur.operation),
-          s"graft-ocf-changes: version $v (operation '${cur.operation}') " +
-            s"removed or replaced ${removedData.size} data file(s) — a " +
-            "stream cannot represent rewrites incrementally. Restart from " +
-            s"a version at or after $v.")
-      if (!RowPreservingOps.contains(cur.operation)) {
+      OcfSnapshots.requireAppendOnly(root, prev.version, v, cur.operation,
+        prev.files.collect { case f if f.isData && !curPaths(f.path) => f.path })
+      if (!OcfSnapshots.addsNoRows(prev.version, v, cur.operation)) {
         // identity partition values for one data file, aligned with the
         // source's partition schema (empty for unpartitioned layouts)
         def partVals(f: OcfSnapshots.SnapFile): Array[String] =

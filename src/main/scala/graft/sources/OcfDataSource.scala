@@ -153,12 +153,9 @@ object OcfDataSource {
                             maxBytesPerTrigger: Option[Long] = None,
                             reportPartitioning: Boolean = false,
                             bucket: Option[OcfBucket.Spec] = None,
-                            // incremental STREAMING (X78): qualified paths of
-                            // the startingVersion snapshot's files — the
-                            // micro-batch source's discovery never admits
-                            // them, so a stream started "from version v"
-                            // processes only what landed after v
-                            streamExclude: Set[String] = Set.empty,
+                            // incremental read (X78): a stream walks the
+                            // manifest versions after this one
+                            startingVersion: Option[Long] = None,
                             // branch read (X83): batch-only pin to a branch head
                             branchRead: Boolean = false,
                             // startingVersion + endingVersion: a bounded
@@ -317,7 +314,7 @@ object OcfDataSource {
     // (VERSION AS OF through the catalog).
     val snapVersion = Option(options.get("graft.snapshot.version")).map(_.toLong)
     // incremental append scan (X78): files added in (startingVersion,
-    // snapVersion-or-latest] — see [[OcfSnapshots.incrementalFiles]]
+    // snapVersion-or-latest] — see [[OcfSnapshots.appendedFiles]]
     val snapStarting =
       Option(options.get("graft.snapshot.startingVersion")).map(_.toLong)
     // branch read (X83): the branch head's manifest is the visible set
@@ -339,7 +336,6 @@ object OcfDataSource {
     // manifest-embedded header metadata, keyed by qualified path: reads of
     // a meta-carrying manifest plan with ZERO per-file header preads
     var snapMetaByPath: Map[String, OcfFileMeta] = Map.empty
-    var streamExclude: Set[String] = Set.empty
     var deletesByPath: Map[String, Seq[OcfFileMeta]] = Map.empty
     var eqDeletesByPath: Map[String, Seq[OcfFileMeta]] = Map.empty
     var listed = snapRoot match {
@@ -349,14 +345,9 @@ object OcfDataSource {
           case Some(b) => OcfSnapshots.branchHead(fs, root, b).files
           case None => snapStarting match {
           case Some(start) =>
-            // one call validates the range AND returns the start snapshot's
-            // paths — the STREAMING exclusion set: a stream "from version v"
-            // discovers everything else, forever
-            val (inc, startPaths) =
-              OcfSnapshots.incrementalWithStart(fs, root, start, snapVersion)
-            val baseQ = fs.makeQualified(root)
-            streamExclude = startPaths.map(p => new Path(baseQ, p).toString)
-            inc
+            OcfSnapshots.appendedFiles(fs, root, start,
+              snapVersion.getOrElse(OcfSnapshots.versions(fs, root).last),
+              scope.get.selects)
           case None =>
             val snap = snapVersion match {
               case Some(v) => OcfSnapshots.read(fs, root, v)
@@ -377,13 +368,6 @@ object OcfDataSource {
         // a partition-subdirectory / multi-path / pathGlobFilter read
         // selects its part of the manifest; deletes keep burdening it
         val snapFiles0 = snapFilesAll.filter(f => f.isData && scope.get.selects(f.path))
-        require((delFiles.isEmpty && eqFiles.isEmpty) || snapStarting.isEmpty,
-          s"graft-ocf: incremental read after version ${snapStarting.getOrElse(-1L)} " +
-            s"refused: the range committed ${delFiles.size} position-delete " +
-            s"and ${eqFiles.size} equality-delete file(s) — rows were " +
-            "logically REMOVED, so the changes are not representable as " +
-            "appended rows. Read a full snapshot instead, or start after " +
-            "the deleting commit (or after rewrite_position_deletes folded it).")
         // `graft.files`: restrict the read to NAMED table-relative data
         // files (maintenance surface — rewrite_position_deletes reads
         // exactly the delete-burdened files). Unknown names fail loudly.
@@ -640,7 +624,7 @@ object OcfDataSource {
     val r = Resolved(files, readerJson, dataSql, sql, conf, splitSize,
       partCols, partSchema, prefetched, paths, glob, recursive, maxFiles,
       maxBytes, reportPartitioning = reportPart, bucket = bucketSpec,
-      streamExclude = streamExclude, branchRead = snapBranch.isDefined,
+      startingVersion = snapStarting, branchRead = snapBranch.isDefined,
       boundedIncremental = snapStarting.isDefined && snapVersion.isDefined,
       versionPinned = snapVersion.isDefined && snapStarting.isEmpty,
       deletes = deletesByPath,
@@ -666,8 +650,7 @@ object OcfDataSource {
       case many =>
         val parsed = many.map(j => j -> AvroRuntime.parse(j))
         val able = parsed.filter { case (_, cand) =>
-          parsed.forall { case (_, w) =>
-            Compatibility.check(reader = cand, writer = w).isCompatible }
+          parsed.forall { case (_, w) => unreadable(reader = cand, writer = w).isEmpty }
         }
         if (able.isEmpty) throw new AvroResolutionException(
           s"graft-ocf: readerSchema=auto found no schema able to read all " +
@@ -680,6 +663,18 @@ object OcfDataSource {
           s.physical match { case r: ARecord => r.fields.size; case _ => 0 }
         }._1
     }
+
+  /** Why `reader` cannot read a file written with `writer` (None: it can),
+    * for `readerSchema=auto` and `compatCheck=backward`: the reference
+    * checker's verdict, then the compile of the plan every decoder runs. */
+  private[sources] def unreadable(reader: AvroSchema, writer: AvroSchema): Option[String] = {
+    val result = Compatibility.check(reader = reader, writer = writer)
+    if (!result.isCompatible) Some(result.incompatibilities
+      .map(i => s"${i.kind} at ${i.location}: ${i.message}").mkString("; "))
+    else
+      try { AvroResolver.resolve(writer, reader); None }
+      catch { case e: AvroResolutionException => Some(e.getMessage) }
+  }
 
   /** Read each file's OCF header exactly once, driver-side. Headers are tiny
     * positioned reads; the shared bounded pool hides per-file round-trip
@@ -752,26 +747,16 @@ object OcfDataSource {
 
   /** [[list]], except a read in a snapshot-managed table ([[managedScope]])
     * reads its latest manifest instead of walking the directory — used by
-    * every re-listing surface (streaming discovery, emptiness probes) so
-    * retained time-travel files stay invisible everywhere, not just in
-    * resolve(). */
+    * the re-listing surfaces (emptiness probes, metadata tables, the sink's
+    * input scan) so retained time-travel files stay invisible everywhere,
+    * not just in resolve(). */
   private[sources] def snapshotAwareList(conf: Configuration, paths: Seq[String],
-                   glob: Option[String], recursive: Boolean,
-                   failOnDeletes: Boolean = false): Seq[FileSlice] =
+                   glob: Option[String], recursive: Boolean): Seq[FileSlice] =
     managedScope(conf, paths, glob) match {
       case Some(scope) =>
         val root = scope.root
         val fs = root.getFileSystem(conf)
         val files = OcfSnapshots.latest(fs, root).map(_.files).getOrElse(Nil)
-        // streaming discovery must fail LOUDLY when a merge-on-read DELETE
-        // lands mid-stream: rows already emitted cannot be retracted, and
-        // silently streaming on would misrepresent the table
-        if (failOnDeletes) require(files.forall(_.isData),
-          s"graft-ocf: streaming read of $root refused — a position- or " +
-            "equality-delete file was committed (merge-on-read DELETE/" +
-            "upsert); a stream cannot retract already-emitted rows. CALL " +
-            "<cat>.system.rewrite_position_deletes to fold the deletes, " +
-            "then restart the stream.")
         // data files only: position/equality-delete files attach to reads
         // of their targets, they are never themselves listed as table data
         OcfSnapshots.toFileSlices(fs, root,
@@ -1634,7 +1619,7 @@ private[sources] final class OcfScanBuilder(
       bucketN = resolved.bucket.filter(_.uniform).map(_.numBuckets).getOrElse(0),
       bucketValueIdx = resolved.bucket.filter(_.uniform).map(_.valueIdx).getOrElse(-1),
       bucketEras = resolved.bucket.map(_.eras).getOrElse(Nil),
-      excludePaths = resolved.streamExclude,
+      startingVersion = resolved.startingVersion,
       branchRead = resolved.branchRead,
       boundedIncremental = resolved.boundedIncremental,
       versionPinned = resolved.versionPinned)
@@ -1713,8 +1698,8 @@ private[graft] final case class OcfScan(
     // every bucket era in the layout as (modulus, level valueIdx) — X103;
     // nonEmpty iff the read is bucketed, even when bucketN is withheld
     bucketEras: Seq[(Int, Int)] = Nil,
-    // incremental streaming: paths the micro-batch discovery never admits
-    excludePaths: Set[String] = Set.empty,
+    // incremental streaming: the version the manifest walk starts after
+    startingVersion: Option[Long] = None,
     // branch read (X83): file set pinned to a branch head — batch-only
     // (streaming discovery follows MAIN's manifest and would silently
     // stream the wrong lineage)

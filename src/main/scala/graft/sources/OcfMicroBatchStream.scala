@@ -6,8 +6,8 @@ import org.apache.spark.sql.connector.read.{InputPartition, PartitionReader, Par
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadAllAvailable, ReadLimit, ReadMaxBytes, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 
 /** `readStream.format("graft-ocf")` — the splittable OCF source as a
-  * Structured Streaming micro-batch source over a GROWING directory: the
-  * reference's "decode in-flight before landing" slot
+  * Structured Streaming micro-batch source over a GROWING directory or a
+  * managed table: the reference's "decode in-flight before landing" slot
   * (reference: README.md:54-58), on the same header-at-plan / split-on-sync
   * decode path as the batch scan. Spark applies no column-pruning pushdown
   * to streaming V2 relations, so narrowing the decode is done with an
@@ -15,36 +15,44 @@ import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroB
   * the batch scan's pushed prune).
   *
   * Offset model: the offset is a COUNT into an append-only discovery log of
-  * files, ordered first-seen (path-sorted within one listing pass). Each
-  * `latestOffset()` re-lists the directories, resolves headers of NEW files
-  * only (one pread per file, ever), appends them to the log, and persists
-  * the DELTA to `<checkpoint>/graft-ocf-files/<count>` (total log bytes stay
-  * O(files) over the stream's lifetime; reconstruction concatenates deltas
-  * in offset order) — so a `(start, end)` batch replayed after a restart
-  * maps to the exact same file slice even if the directory has since grown
-  * or lost files. A file is
-  * therefore decoded in EXACTLY ONE micro-batch (exactly-once with a
-  * replayable sink), and files must be landed atomically (write-then-rename,
-  * the standard convention this source's own `_`/`.`-prefix filter backs).
+  * files, ordered first-seen. Each `latestOffset()` discovers NEW files,
+  * resolves their headers (one pread per file, ever), appends them to the
+  * log, and persists the DELTA to `<checkpoint>/graft-ocf-files/<count>`
+  * (total log bytes stay O(files) over the stream's lifetime; reconstruction
+  * concatenates deltas in offset order) — so a `(start, end)` batch replayed
+  * after a restart maps to the exact same file slice even if the directory
+  * has since grown or lost files. A file is therefore decoded in EXACTLY ONE
+  * micro-batch (exactly-once with a replayable sink).
   *
-  * Scale notes: per-trigger driver work is one directory listing plus one
-  * header pread per NEW file; decode fans out over `splitSize` splits like
-  * the batch scan, so one huge landed file does not serialize a trigger.
-  * State is the file log (a name + header meta per file, no content).
+  * Discovery re-lists an unmanaged directory (path-sorted; files must be
+  * landed atomically, write-then-rename). A managed table instead walks its
+  * manifest versions ([[OcfSnapshots.appendedFiles]]) from the version the
+  * last discovery reached, which each log delta records: a plain stream
+  * starts from the head snapshot's data files, `startingVersion=v` at v.
+  *
+  * Scale notes: per-trigger driver work is one directory listing (or one
+  * manifest per new commit) plus one header pread per NEW file; decode fans
+  * out over `splitSize` splits like the batch scan, so one huge landed file
+  * does not serialize a trigger. State is the file log (a name + header
+  * meta per file, no content).
   */
 private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
-  import OcfDataSource.OcfFileMeta
+  import OcfDataSource.{FileSlice, OcfFileMeta}
 
   private val conf = scan.conf.value
   private val logDir = new Path(checkpointLocation, "graft-ocf-files")
   private val fs = logDir.getFileSystem(conf)
   GraftIO.mkdirs(fs, logDir)
 
-  // the discovery log: files in first-seen order; guarded by `this` (Spark
-  // calls the stream from its single streaming-query thread, but restore on
+  private val scope = OcfDataSource.managedScope(conf, scan.paths, scan.glob)
+
+  // the discovery log: files in first-seen order, and (managed tables) the
+  // manifest version discovery reached; guarded by `this` (Spark calls the
+  // stream from its single streaming-query thread, but restore on
   // replanning can race a listing in theory)
   private val known = new scala.collection.mutable.LinkedHashMap[String, OcfFileMeta]
+  private var reached: Option[Long] = None
   restoreLatest()
 
   override def initialOffset(): Offset = OcfStreamOffset(0)
@@ -57,37 +65,15 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     val hp = new Path(p); hp.getFileSystem(conf).makeQualified(hp).toString
   }
 
-  /** Re-list the directories and append every NEW file to the discovery
+  /** Discover and append every NEW file to the discovery
     * log. Discovery is always exhaustive — ADMISSION (how much of the
     * backlog one micro-batch may take) is bounded separately, so the log's
     * delta-persistence and first-seen order are identical with and without
     * a read limit. Returns the discovered-file count. */
   private def discover(): Int = {
-    val listed = OcfDataSource.snapshotAwareList(conf, scan.paths, scan.glob,
-      scan.recursive, failOnDeletes = true)
-    // incremental stream (X78): files of the startingVersion snapshot are
-    // never admitted — the stream's world begins after that version. The
-    // set is re-derived from the SAME pinned manifest on restart, so a
-    // checkpoint replay sees the identical exclusion.
-    if (scan.excludePaths.nonEmpty) {
-      // the exact-or-refuse contract holds MID-STREAM too: a rewriting
-      // commit (compaction, overwrite, CoW delete) replaces files the
-      // stream excluded or already delivered with merged new-named ones —
-      // admitting those would re-deliver pre-startingVersion and
-      // already-processed rows as duplicates. Batch incremental reads
-      // refuse such ranges up front; the stream refuses at the trigger
-      // that first observes the rewrite.
-      val cur = listed.iterator.map(_.path).toSet
-      val gone = (known.keysIterator ++ scan.excludePaths.iterator)
-        .filterNot(cur.contains).take(1).toSeq
-      if (gone.nonEmpty) throw new IllegalStateException(
-        s"graft-ocf stream: a rewriting commit removed ${gone.head} " +
-          "mid-stream — an incremental stream cannot represent " +
-          "compaction/overwrite/CoW changes as appended rows. Restart the " +
-          "stream with a fresh startingVersion after the rewrite.")
-    }
-    val freshRaw = listed.filterNot(f =>
-      known.contains(f.path) || scan.excludePaths.contains(f.path))
+    val freshRaw = scope.map(walk)
+      .getOrElse(OcfDataSource.list(conf, scan.paths, scan.glob, scan.recursive))
+      .filterNot(f => known.contains(f.path))
     if (freshRaw.nonEmpty) {
       val fresh =
         if (scan.partCols.isEmpty) freshRaw
@@ -111,9 +97,34 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
       val metas = OcfDataSource.fetchMetas(conf, fresh)
       // an undecodable codec fails the TRIGGER, not a mid-batch task
       metas.foreach { m => AvroCodecs(m.codecName); known += (m.path -> m) }
-      persist(known.size, metas)
+      persist(known.size, metas, reached)
     }
     known.size
+  }
+
+  /** A managed table's files new since the version discovery reached (on a
+    * plain stream's first discovery, the head snapshot's); reaches the head. */
+  private def walk(s: OcfDataSource.ManagedScope): Seq[FileSlice] = {
+    require(known.isEmpty || reached.isDefined,
+      s"graft-ocf stream: the file log at $logDir records no manifest version " +
+        s"of ${s.root}. Restart with a new checkpointLocation and startingVersion " +
+        "= the table version its last batch read (see the table's history).")
+    val fs = s.root.getFileSystem(conf)
+    val head = OcfSnapshots.versions(fs, s.root).last
+    val files = reached.orElse(scan.startingVersion) match {
+      case Some(v) => OcfSnapshots.appendedFiles(fs, s.root, v, head, s.selects)
+      case None =>
+        val all = OcfSnapshots.read(fs, s.root, head).files
+        require(all.forall(_.isData),
+          s"graft-ocf: streaming read of ${s.root} refused — a position- or " +
+            "equality-delete file was committed (merge-on-read DELETE/" +
+            "upsert); a stream cannot retract already-emitted rows. CALL " +
+            "<cat>.system.rewrite_position_deletes to fold the deletes, " +
+            "then restart the stream.")
+        all.filter(f => s.selects(f.path))
+    }
+    reached = Some(head)
+    OcfSnapshots.toFileSlices(fs, s.root, files)
   }
 
   override def latestOffset(): Offset = synchronized { OcfStreamOffset(discover()) }
@@ -211,11 +222,13 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
   /** Persist the files DISCOVERED AT offset `count` (a delta, not the
     * cumulative listing — total log bytes stay O(files), not O(files²) over
     * a long-running stream), atomically (temp + rename) so a crashed write
-    * never leaves a torn log. Reconstruction concatenates deltas in
-    * offset order. */
-  private def persist(count: Int, delta: Seq[OcfFileMeta]): Unit = {
+    * never leaves a torn log, with the manifest `version` discovery reached.
+    * Reconstruction concatenates deltas in offset order. */
+  private def persist(count: Int, delta: Seq[OcfFileMeta], version: Option[Long]): Unit = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = om.createArrayNode()
+    val root = om.createObjectNode()
+    version.foreach(root.put("version", _))
+    val arr = root.putArray("files")
     delta.foreach { m =>
       val o = arr.addObject()
       o.put("path", m.path); o.put("len", m.len)
@@ -231,17 +244,20 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     }
     val tmp = new Path(logDir, s".${count}.tmp")
     val out = GraftIO.create(fs, tmp, true)
-    try out.write(om.writeValueAsBytes(arr)) finally out.close()
+    try out.write(om.writeValueAsBytes(root)) finally out.close()
     if (!GraftIO.rename(fs, tmp, logPath(count)) && !fs.exists(logPath(count)))
       throw new java.io.IOException(s"graft-ocf stream: could not persist file log $count")
   }
 
-  private def load(p: Path): Seq[OcfFileMeta] = {
+  /** One persisted delta: its files, and the version discovery reached (a
+    * bare array is a delta written before versions were recorded). */
+  private def load(p: Path): (Seq[OcfFileMeta], Option[Long]) = {
     val in = fs.open(p)
     val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val arr = om.readTree(bytes)
-    (0 until arr.size).map { i =>
+    val root = om.readTree(bytes)
+    val arr = if (root.isArray) root else root.get("files")
+    val files = (0 until arr.size).map { i =>
       val o = arr.get(i)
       val parts = Option(o.get("parts")).map { pa =>
         (0 until pa.size).map(j =>
@@ -253,6 +269,7 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
         o.get("headerEnd").asLong, parts,
         Option(o.get("stats")).map(_.asText))
     }
+    (files, Option(root.get("version")).map(_.asLong))
   }
 
   private def persistedCounts(): Seq[Int] =
@@ -261,9 +278,9 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
       .flatMap(st => scala.util.Try(st.getPath.getName.toInt).toOption)
       .toSeq.sorted
 
-  /** Rebuild the COMPLETE discovery log from the persisted deltas
-    * (ascending offset order reproduces first-seen order exactly). Always
-    * whole — deltas are keyed by the cumulative discovered count at persist
+  /** Rebuild the COMPLETE discovery log (and the version it reached) from
+    * the persisted deltas (ascending offset order reproduces first-seen
+    * order exactly). Always whole — deltas are keyed by the cumulative discovered count at persist
     * time, which under admission control exceeds committed end offsets, and
     * a partially loaded log would let the next [[discover]] re-append (and
     * re-persist) files that live in the unloaded tail. Extra entries past a
@@ -272,7 +289,11 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     val counts = persistedCounts()
     if (counts.nonEmpty) {
       known.clear()
-      counts.foreach(c => load(logPath(c)).foreach(m => known += (m.path -> m)))
+      counts.foreach { c =>
+        val (files, version) = load(logPath(c))
+        files.foreach(m => known += (m.path -> m))
+        reached = version
+      }
     }
   }
 }

@@ -399,67 +399,71 @@ private[graft] object OcfSnapshots {
       .filter(v => timestampOf(fs, tableDir, v) <= ts).lastOption
       .map(read(fs, tableDir, _))
 
-  /** Incremental append scan (the Iceberg `incremental read` shape): the
-    * files ADDED strictly after `startVersion` and up to & including
-    * `endVersion` (default: latest) — so "process only what arrived since
-    * the last run" costs reading exactly the new files, never a diff of row
-    * sets. Exact-or-refuse: every retained manifest step in the range must
-    * be append-only (its file set a superset of its predecessor's); a
-    * commit that removed or replaced files (overwrite, CoW delete/update,
-    * compaction) makes "the changes" unrepresentable as added rows, and the
-    * read REFUSES with the offending version rather than emit rows that
-    * were since deleted or double-count compacted ones. Both endpoint
-    * manifests must still be retained (`expire_snapshots` may have
-    * collected them); expired INTERMEDIATE manifests degrade the
-    * append-only check to coarser consecutive-retained pairs, which still
-    * proves no retained file ever disappeared. Writers never reuse file
-    * names (task-unique temps), so path-set difference is exact. */
-  def incrementalFiles(fs: FileSystem, tableDir: Path,
-                       startVersion: Long, endVersion: Option[Long]): Seq[SnapFile] =
-    incrementalWithStart(fs, tableDir, startVersion, endVersion)._1
+  private val RowPreservingOps = Set("compact", "rewrite-position-deletes")
 
-  /** [[incrementalFiles]] plus the start snapshot's path set (the streaming
-    * exclusion set) — one resolution serves both. Consecutive versions
-    * apply as deltas forward (O(delta) per step); only the start — and any
-    * step after a retention gap — pays a full chain resolution. */
-  def incrementalWithStart(fs: FileSystem, tableDir: Path,
-                           startVersion: Long, endVersion: Option[Long])
-      : (Seq[SnapFile], Set[String]) = {
+  /** Whether the commit at `v`, reached from retained version `prevV`, adds
+    * no rows: it only rewrites rows ([[RowPreservingOps]]), and no expired
+    * version before it could hide a commit that did add or remove rows. */
+  def addsNoRows(prevV: Long, v: Long, operation: String): Boolean =
+    RowPreservingOps.contains(operation) && v == prevV + 1
+
+  /** The rewrite rule of every incremental reader of a managed table: a
+    * step from `prevV` to `v` that removed or replaced data files
+    * (`removed`) passes only when it [[addsNoRows]]. */
+  def requireAppendOnly(tableDir: Path, prevV: Long, v: Long,
+                        operation: String, removed: Seq[String]): Unit =
+    require(removed.isEmpty || addsNoRows(prevV, v, operation),
+      s"graft-ocf: incremental read of $tableDir refused: version $v " +
+        s"(operation '$operation') is a rewriting commit that removed or " +
+        s"replaced ${removed.size} data file(s) (e.g. ${removed.head})" +
+        (if (v > prevV + 1) s" after expired versions since $prevV" else "") +
+        ". Incremental reads, streams and change feeds cannot represent " +
+        s"rewrites: read a full snapshot instead, or start at version $v.")
+
+  /** The data files the commits in `(a, b]` added, for batch
+    * `startingVersion` reads and streams over a managed table. Per retained
+    * version, counting only data paths `selects` admits: a commit that
+    * [[addsNoRows]] is passed over; one that removed data files
+    * ([[requireAppendOnly]]) or added position- or equality-delete files
+    * refuses; any other adds its new data files (writers never reuse a file
+    * name, so path sets are exact). Consecutive versions apply as deltas. */
+  def appendedFiles(fs: FileSystem, tableDir: Path, a: Long, b: Long,
+                    selects: String => Boolean = _ => true): Seq[SnapFile] = {
     val vs = versions(fs, tableDir)
-    require(vs.nonEmpty, s"graft-ocf: $tableDir has no snapshot manifests")
     def known(v: Long, role: String): Unit = require(vs.contains(v),
       s"graft-ocf: $role version $v is not a retained snapshot of $tableDir " +
         s"(retained: ${vs.mkString(", ")}); expire_snapshots may have removed it")
-    known(startVersion, "startingVersion")
-    val end = endVersion.getOrElse(vs.last)
-    known(end, "endingVersion")
-    require(end >= startVersion,
-      s"graft-ocf: endingVersion $end precedes startingVersion $startVersion")
-    val chain = vs.filter(v => v >= startVersion && v <= end)
-    var curFiles = read(fs, tableDir, chain.head).files
-    var prevPaths = curFiles.map(_.path).toSet
-    val startPaths = prevPaths
-    if (end == startVersion) return (Nil, startPaths)
-    var prevV = chain.head
-    chain.tail.foreach { v =>
+    known(a, "startingVersion")
+    known(b, "endingVersion")
+    require(b >= a, s"graft-ocf: endingVersion $b precedes startingVersion $a")
+    var prevV = a
+    var prev = read(fs, tableDir, a).files
+    val added = Seq.newBuilder[SnapFile]
+    vs.filter(v => v > a && v <= b).foreach { v =>
       val raw = rawMain(fs, tableDir)(v)
-      curFiles =
+      val cur =
         if (raw.full.isDefined) raw.full.get
-        else if (raw.base == prevV) applyDelta(curFiles, raw)
+        else if (raw.base == prevV) applyDelta(prev, raw)
         else read(fs, tableDir, v).files // retention gap: full resolve
-      val cur = curFiles.map(_.path).toSet
-      val removed = prevPaths.diff(cur)
-      require(removed.isEmpty,
-        s"graft-ocf: incremental read of $tableDir ($startVersion, $end] " +
-          s"refused: version $v (operation '${raw.operation}') removed or " +
-          s"replaced ${removed.size} file(s) (e.g. ${removed.head}) — the " +
-          "range's changes are not representable as appended rows. Read " +
-          "a full snapshot (VERSION AS OF) instead, or start after the " +
-          "rewriting commit.")
-      prevPaths = cur
+      val prevPaths = prev.iterator.map(_.path).toSet
+      val curPaths = cur.iterator.map(_.path).toSet
+      requireAppendOnly(tableDir, prevV, v, raw.operation, prev.collect {
+        case f if f.isData && selects(f.path) && !curPaths(f.path) => f.path })
+      if (!addsNoRows(prevV, v, raw.operation)) {
+        val fresh = cur.filterNot(f => prevPaths(f.path))
+        val deletes = fresh.count(f => f.isEqualityDelete || f.deleteOf.exists(selects))
+        require(deletes == 0,
+          s"graft-ocf: incremental read of $tableDir refused: version $v " +
+            s"(operation '${raw.operation}') committed $deletes position-delete " +
+            "or equality-delete file(s): rows were logically REMOVED. Read a " +
+            "full snapshot instead, or fold the deletes (CALL <cat>.system." +
+            "rewrite_position_deletes) and start at that version.")
+        added ++= fresh.filter(f => f.isData && selects(f.path))
+      }
+      prev = cur
       prevV = v
     }
-    (curFiles.filterNot(f => startPaths.contains(f.path)), startPaths)
+    added.result()
   }
 
   // ---- commit --------------------------------------------------------------

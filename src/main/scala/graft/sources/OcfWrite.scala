@@ -739,14 +739,10 @@ private[sources] object OcfWrite {
     val newSchema = AvroRuntime.parse(newWriterJson)
     OcfDataSource.fetchMetas(conf, files)
       .map(_.writerSchemaJson).distinct.foreach { existingJson =>
-        val result = Compatibility.check(
-          reader = AvroRuntime.parse(existingJson), writer = newSchema)
-        if (!result.isCompatible)
-          throw new IllegalArgumentException(
+        OcfDataSource.unreadable(reader = AvroRuntime.parse(existingJson), writer = newSchema)
+          .foreach(why => throw new IllegalArgumentException(
             "graft-ocf write: compatCheck=backward rejected the append — existing " +
-              "readers of this directory could not resolve the new schema: " +
-              result.incompatibilities.map(i => s"${i.kind} at ${i.location}: ${i.message}")
-                .mkString("; "))
+              s"readers of this directory could not resolve the new schema: $why"))
       }
   }
 

@@ -131,9 +131,9 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
     }
     // a pair whose value would not have the class the reader's Catalyst
     // slot holds is refused when the plan compiles (reference: io.py
-    // read_data's resolution error); a null fits every slot
+    // read_data's resolution error); a null fits only a null reader
     def fits(v: Any, r: AvroSchema): Boolean =
-      v == null || ((SchemaConverters.toSqlType(r).dataType, v) match {
+      (v == null && r == ANull) || ((SchemaConverters.toSqlType(r).dataType, v) match {
         case (BooleanType, _: Boolean) | (FloatType, _: Float) | (DoubleType, _: Double) => true
         case (IntegerType | DateType, _: Int) | (LongType | TimestampType, _: Long) => true
         case (StringType, _: UTF8String) | (BinaryType, _: Array[Byte]) => true
@@ -155,15 +155,33 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
         case Right(v) if !fits(v, r) => refused
         case other => other
       }
-      // a ["null", T] reader holds a T, so it reads every writer as T does,
-      // including one that matches no branch (the generic reader rejects it)
+      // a ["null", T] reader holds a T, so it reads every writer but null
+      // as T does, including one that matches no branch (the generic reader
+      // rejects it); a null writer takes its null branch
       nullable = outcome(Try(CatalystAvroReader.compile(w, AUnion(Seq(ANull, r)))(
         new AvroBinaryReader(bytes))))
       (what, got, want) <- Seq(("", direct, expected)) ++
-        (if (r == ANull) Nil else Seq((" as [null, T]", nullable, direct)))
+        (if (r == ANull) Nil
+        else Seq((" as [null, T]", nullable, if (w == ANull) Right(null) else direct)))
       if !agree(got, want)
     } yield s"writer $w, reader $r$what: got $got, expected $want"
     assert(failures.isEmpty, failures.mkString("\n"))
+  }
+
+  test("a null writer resolves only under a reader that can hold null") {
+    // a plain `long` column cannot hold the null; a nullable one reads it
+    val writer = AvroSchemaParser.parse("""{"type":"record","name":"R","fields":[
+      {"name":"f","type":"null"},{"name":"id","type":"long"}]}""")
+    def reader(f: String) = AvroSchemaParser.parse(s"""{"type":"record","name":"R",
+      "fields":[{"name":"f","type":$f},{"name":"id","type":"long"}]}""")
+    val e = intercept[AvroResolutionException](
+      CatalystAvroReader.compile(writer, reader("\"long\"")))
+    assert(e.getMessage == "cannot resolve writer null against reader long", e.getMessage)
+    val datum = new AvroBinaryWriter()
+    datum.writeLong(7L)
+    val row = CatalystAvroReader.compile(writer, reader("""["null","long"]"""))(
+      new AvroBinaryReader(datum.toByteArray)).asInstanceOf[GenericInternalRow]
+    assert(row.isNullAt(0) && row.getLong(1) == 7L)
   }
 
   test("a nullable writer's branch fails under a nullable reader that does not match it") {

@@ -263,6 +263,38 @@ class OcfWriteSpec extends AnyFunSuite {
     assert(!dir.exists() || visibleFiles(dir).isEmpty, "failed plans must publish nothing")
   }
 
+  test("readerSchema=auto and compatCheck=backward ask the resolver: a " +
+      "decimal(bytes) writer beside a plain-bytes writer") {
+    import spark.implicits._
+    val dir = tempDir("graft-w-decimal")
+    def schema(d: String) = s"""{"type":"record","name":"R","fields":[
+      {"name":"id","type":"long"},{"name":"d","type":$d}]}"""
+    Seq((1L, Array[Byte](0x30, 0x39))).toDF("id", "d").coalesce(1)
+      .write.format("graft-ocf").mode(SaveMode.Append)
+      .option("avroSchema", schema("\"bytes\"")).save(dir.getAbsolutePath)
+    val dec = Seq((2L, BigDecimal("67.89"))).toDF("id", "d")
+      .select($"id", $"d".cast("decimal(10,2)").as("d")).coalesce(1)
+      .write.format("graft-ocf").mode(SaveMode.Append).option("avroSchema",
+        schema("""{"type":"bytes","logicalType":"decimal","precision":10,"scale":2}"""))
+    // the reference checker compares physical types only and admits the
+    // pair; a plain-bytes reader cannot decode a decimal writer
+    val before = visibleFiles(dir).map(_.getName).toSet
+    val err = intercept[IllegalArgumentException] {
+      dec.option("compatCheck", "backward").save(dir.getAbsolutePath)
+    }
+    assert(err.getMessage.contains("cannot resolve writer decimal against reader bytes"),
+      err.getMessage)
+    assert(visibleFiles(dir).map(_.getName).toSet == before)
+    // without the gate the directory holds both; auto picks the schema
+    // whose plans compile against both files, and reads them
+    dec.option("compatCheck", "none").save(dir.getAbsolutePath)
+    val auto = spark.read.format("graft-ocf").option("readerSchema", "auto")
+      .load(dir.getAbsolutePath)
+    assert(auto.schema("d").dataType == org.apache.spark.sql.types.DecimalType(10, 2))
+    assert(auto.orderBy("id").collect().map(r => (r.getLong(0), r.getDecimal(1))).toSeq ==
+      Seq((1L, new java.math.BigDecimal("123.45")), (2L, new java.math.BigDecimal("67.89"))))
+  }
+
   test("compatCheck=backward gates appends on what existing readers can resolve") {
     import spark.implicits._
     val dir = tempDir("graft-w-compat")

@@ -2,7 +2,6 @@ package graft.sources
 
 import graft.avro._
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Which scalar (writer, reader) pairs a graft-ocf scan reads: 18 writer
@@ -124,7 +123,7 @@ class ColumnarAdmissionGridSpec extends AnyFunSuite {
     }
     val compiled = verdicts.collect { case (c, None) => c }
     val refused = verdicts.collect { case (c, Some(m)) => (c, m) }
-    assert(compiled.length == 3120, s"compiled ${compiled.length}")
+    assert(compiled.length == 3052, s"compiled ${compiled.length}")
     val conf = new SerializableHadoopConf(spark.sessionState.newHadoopConf())
     /** A file holding the cell's first datum. */
     def cellFile(c: Cell): OcfDataSource.OcfFileMeta = {
@@ -180,24 +179,7 @@ class ColumnarAdmissionGridSpec extends AnyFunSuite {
         None
       } catch { case e: AvroResolutionException => Some(e.getMessage) }
     val (failing, reading) = compiled.map(c => (c, fromAvroError(c))).partition(_._2.isDefined)
-    // a `null` writer under a plain reader: the resolver fits a null in
-    // every slot, which a non-nullable Spark column cannot carry through a
-    // query, so these cells compare the split's batch row with from_avro's
-    val (nullValued, scanned) = reading.map(_._1)
-      .partition(c => c.writer == ANull && !c.wn && !c.rn && c.reader != ANull)
-    val wrongNulls = nullValued.flatMap { c =>
-      val readerJson = json(recordOf(Seq(AField("f", c.readerField("")))))
-      val meta = cellFile(c)
-      val r = new OcfColumnarSplitReader(meta, 0L, meta.len, readerJson, conf.value)
-      val got = try { assert(r.next()); r.get().getRow(0).copy() } finally r.close()
-      val want = graft.spark.CatalystAvroReader.compile(parsed(c.writerField("")),
-        parsed(c.readerField("")))(new AvroBinaryReader(c.datum))
-      val dt = OcfDataSource.sqlShape(readerJson)._1
-      val (g, w) = (CatalystTypeConverters.convertToScala(got, dt),
-        CatalystTypeConverters.convertToScala(want, dt))
-      if (g == w) None else Some(s"${c.name}: scan $g, from_avro $w")
-    }
-    assert(wrongNulls.isEmpty, wrongNulls.mkString("\n"))
+    val scanned = reading.map(_._1)
     scanned.groupBy(c => (c.site, c.wn, c.rn)).foreach { case ((site, wn, rn), group) =>
       val writer = recordOf(group.zipWithIndex.map { case (c, i) => AField(s"f$i", c.writerField(s"_$i")) })
       val reader = recordOf(group.zipWithIndex.map { case (c, i) => AField(s"f$i", c.readerField(s"_$i")) })
@@ -226,9 +208,8 @@ class ColumnarAdmissionGridSpec extends AnyFunSuite {
       if (got == want) None else Some(s"${c.name}: scan $got, from_avro $want")
     }
     assert(wrongFails.isEmpty, wrongFails.mkString("\n"))
-    // of the 3,120 compiled cells, 1,160 read values through a scan, 68
-    // read a null writer's value under a plain reader, and 1,892 land on a
-    // union branch the reader cannot take
-    assert((scanned.length, nullValued.length, failing.length) == ((1160, 68, 1892)))
+    // of the 3,052 compiled cells, 1,160 read values through a scan and
+    // 1,892 land on a union branch the reader cannot take
+    assert((scanned.length, failing.length) == ((1160, 1892)))
   }
 }

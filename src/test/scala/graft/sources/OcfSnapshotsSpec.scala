@@ -773,8 +773,9 @@ class OcfSnapshotsSpec extends AnyFunSuite {
     assert(e0.getMessage.contains("batch-only") ||
       Option(e0.getCause).exists(_.getMessage.contains("batch-only")), e0.getMessage)
 
-    // a rewriting commit mid-stream fails the next trigger instead of
-    // re-delivering compacted rows as duplicates
+    // compaction mid-stream adds no rows: the next trigger delivers nothing;
+    // a rewriting commit fails the next trigger instead of re-delivering
+    // its survivors as duplicates
     val ckpt = java.nio.file.Files.createTempDirectory("graft-istr2-ck").toString
     val outDir = java.nio.file.Files.createTempDirectory("graft-istr2-out").toString
     def run(): Unit = {
@@ -788,6 +789,9 @@ class OcfSnapshotsSpec extends AnyFunSuite {
     run()
     assert(spark.read.parquet(outDir).count() == 5L)
     spark.sql("CALL gs.system.compact(table => 'ns.istr2')").collect()
+    run()
+    assert(spark.read.parquet(outDir).count() == 5L)
+    spark.sql("DELETE FROM gs.ns.istr2 WHERE id = 6")
     val e1 = intercept[Exception] { run() }
     def msgs(t: Throwable): Seq[String] =
       Iterator.iterate(t)(_.getCause).takeWhile(_ != null).take(6)
