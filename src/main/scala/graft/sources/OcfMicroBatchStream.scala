@@ -27,14 +27,14 @@ import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroB
   * Discovery re-lists an unmanaged directory (path-sorted; files must be
   * landed atomically, write-then-rename). A managed table instead walks its
   * manifest versions ([[OcfSnapshots.appendedFiles]]) from the version the
-  * last discovery reached, which each log delta records: a plain stream
-  * starts from the head snapshot's data files, `startingVersion=v` at v.
+  * last discovery reached, which the log records ([[walk]]).
   *
-  * Scale notes: per-trigger driver work is one directory listing (or one
-  * manifest per new commit) plus one header pread per NEW file; decode fans
-  * out over `splitSize` splits like the batch scan, so one huge landed file
-  * does not serialize a trigger. State is the file log (a name + header
-  * meta per file, no content).
+  * Scale notes: per-trigger driver work is one directory listing (a
+  * managed table: its manifest directory's, plus the walk when it
+  * committed) and one header pread per NEW file; decode fans out over
+  * `splitSize` splits like the batch scan, so one huge landed file does not
+  * serialize a trigger. State is the file log (a name + header meta per
+  * file, no content).
   */
 private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation: String)
     extends MicroBatchStream with SupportsAdmissionControl with SupportsTriggerAvailableNow {
@@ -45,14 +45,14 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
   private val fs = logDir.getFileSystem(conf)
   GraftIO.mkdirs(fs, logDir)
 
-  private val scope = OcfDataSource.managedScope(conf, scan.paths, scan.glob)
-
   // the discovery log: files in first-seen order, and (managed tables) the
   // manifest version discovery reached; guarded by `this` (Spark calls the
   // stream from its single streaming-query thread, but restore on
   // replanning can race a listing in theory)
   private val known = new scala.collection.mutable.LinkedHashMap[String, OcfFileMeta]
   private var reached: Option[Long] = None
+  // a delta persisted before versions were recorded (a bare JSON array)
+  private var legacyLog = false
   restoreLatest()
 
   override def initialOffset(): Offset = OcfStreamOffset(0)
@@ -71,7 +71,11 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     * delta-persistence and first-seen order are identical with and without
     * a read limit. Returns the discovered-file count. */
   private def discover(): Int = {
-    val freshRaw = scope.map(walk)
+    // re-resolved per discovery: a landing directory turns managed on its
+    // first graft-ocf write
+    val walked = OcfDataSource.managedScope(conf, scan.paths, scan.glob).map(walk)
+    val version = walked.map(_._2).orElse(reached)
+    val freshRaw = walked.map(_._1)
       .getOrElse(OcfDataSource.list(conf, scan.paths, scan.glob, scan.recursive))
       .filterNot(f => known.contains(f.path))
     if (freshRaw.nonEmpty) {
@@ -97,21 +101,39 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
       val metas = OcfDataSource.fetchMetas(conf, fresh)
       // an undecodable codec fails the TRIGGER, not a mid-batch task
       metas.foreach { m => AvroCodecs(m.codecName); known += (m.path -> m) }
-      persist(known.size, metas, reached)
+      persist(known.size, metas)
+    }
+    if (version != reached) {
+      version.foreach(persistReached)
+      reached = version
     }
     known.size
   }
 
-  /** A managed table's files new since the version discovery reached (on a
-    * plain stream's first discovery, the head snapshot's); reaches the head. */
-  private def walk(s: OcfDataSource.ManagedScope): Seq[FileSlice] = {
-    require(known.isEmpty || reached.isDefined,
+  /** A managed table's files new since the version discovery reached, and
+    * the head version they reach. `startingVersion=v` starts at v. With no
+    * version yet (a plain stream's first discovery, or a directory that
+    * turned managed under a running stream) it takes the head snapshot's
+    * data files, which [[discover]] narrows to those not yet in the log.
+    * The reached version must still be retained. */
+  private def walk(s: OcfDataSource.ManagedScope): (Seq[FileSlice], Long) = {
+    require(reached.isDefined || !legacyLog,
       s"graft-ocf stream: the file log at $logDir records no manifest version " +
         s"of ${s.root}. Restart with a new checkpointLocation and startingVersion " +
         "= the table version its last batch read (see the table's history).")
     val fs = s.root.getFileSystem(conf)
-    val head = OcfSnapshots.versions(fs, s.root).last
+    val vs = OcfSnapshots.versions(fs, s.root)
+    val head = vs.last
+    reached.foreach(r => require(vs.contains(r),
+      s"graft-ocf stream: version $r of ${s.root}, the last one this stream " +
+        s"read, was removed by expire_snapshots (retained: ${vs.mkString(", ")}), " +
+        "so the rows committed since then cannot be told from rewritten ones. " +
+        "Restart with a new checkpointLocation and no startingVersion to re-read " +
+        "the current snapshot whole (rows already delivered arrive again, none " +
+        "is lost). To keep a stream running, have expire_snapshots retain the " +
+        "last version it read (keep_last, older_than_ms)."))
     val files = reached.orElse(scan.startingVersion) match {
+      case Some(v) if v == head => Nil
       case Some(v) => OcfSnapshots.appendedFiles(fs, s.root, v, head, s.selects)
       case None =>
         val all = OcfSnapshots.read(fs, s.root, head).files
@@ -123,8 +145,7 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
             "then restart the stream.")
         all.filter(f => s.selects(f.path))
     }
-    reached = Some(head)
-    OcfSnapshots.toFileSlices(fs, s.root, files)
+    (OcfSnapshots.toFileSlices(fs, s.root, files), head)
   }
 
   override def latestOffset(): Offset = synchronized { OcfStreamOffset(discover()) }
@@ -222,12 +243,11 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
   /** Persist the files DISCOVERED AT offset `count` (a delta, not the
     * cumulative listing — total log bytes stay O(files), not O(files²) over
     * a long-running stream), atomically (temp + rename) so a crashed write
-    * never leaves a torn log, with the manifest `version` discovery reached.
-    * Reconstruction concatenates deltas in offset order. */
-  private def persist(count: Int, delta: Seq[OcfFileMeta], version: Option[Long]): Unit = {
+    * never leaves a torn log. Reconstruction concatenates deltas in offset
+    * order. */
+  private def persist(count: Int, delta: Seq[OcfFileMeta]): Unit = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.createObjectNode()
-    version.foreach(root.put("version", _))
     val arr = root.putArray("files")
     delta.foreach { m =>
       val o = arr.addObject()
@@ -249,13 +269,30 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
       throw new java.io.IOException(s"graft-ocf stream: could not persist file log $count")
   }
 
-  /** One persisted delta: its files, and the version discovery reached (a
-    * bare array is a delta written before versions were recorded). */
-  private def load(p: Path): (Seq[OcfFileMeta], Option[Long]) = {
+  /** The manifest version discovery reached, recorded beside the deltas
+    * (after them, atomically replacing the last record) whenever it
+    * advances, also when no new file was found: a stream idle while the
+    * table commits must not stay tied to a version expire_snapshots may
+    * remove. A crash before the record leaves the older version, from
+    * which the walk re-finds only files the log already holds. */
+  private def persistReached(v: Long): Unit = {
+    val tmp = new Path(logDir, ".version.tmp")
+    val out = GraftIO.create(fs, tmp, true)
+    try out.write(v.toString.getBytes("UTF-8")) finally out.close()
+    GraftIO.renameOverwrite(fs, conf, tmp, reachedPath)
+  }
+
+  private def reachedPath: Path = new Path(logDir, "version")
+
+  private def bytesOf(p: Path): Array[Byte] = {
     val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val om = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = om.readTree(bytes)
+    try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+  }
+
+  /** One persisted delta: its files, and whether it is a bare array
+    * (written before versions were recorded). */
+  private def load(p: Path): (Seq[OcfFileMeta], Boolean) = {
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(bytesOf(p))
     val arr = if (root.isArray) root else root.get("files")
     val files = (0 until arr.size).map { i =>
       val o = arr.get(i)
@@ -269,7 +306,7 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
         o.get("headerEnd").asLong, parts,
         Option(o.get("stats")).map(_.asText))
     }
-    (files, Option(root.get("version")).map(_.asLong))
+    (files, root.isArray)
   }
 
   private def persistedCounts(): Seq[Int] =
@@ -290,11 +327,13 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     if (counts.nonEmpty) {
       known.clear()
       counts.foreach { c =>
-        val (files, version) = load(logPath(c))
+        val (files, legacy) = load(logPath(c))
         files.foreach(m => known += (m.path -> m))
-        reached = version
+        legacyLog ||= legacy
       }
     }
+    if (fs.exists(reachedPath))
+      reached = Some(new String(bytesOf(reachedPath), "UTF-8").trim.toLong)
   }
 }
 

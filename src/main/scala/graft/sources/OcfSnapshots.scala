@@ -426,7 +426,9 @@ private[graft] object OcfSnapshots {
     * [[addsNoRows]] is passed over; one that removed data files
     * ([[requireAppendOnly]]) or added position- or equality-delete files
     * refuses; any other adds its new data files (writers never reuse a file
-    * name, so path sets are exact). Consecutive versions apply as deltas. */
+    * name, so path sets are exact). A delta on the previous version costs
+    * O(its entries); a full manifest or a step across a retention gap diffs
+    * the whole table once. */
   def appendedFiles(fs: FileSystem, tableDir: Path, a: Long, b: Long,
                     selects: String => Boolean = _ => true): Seq[SnapFile] = {
     val vs = versions(fs, tableDir)
@@ -437,20 +439,28 @@ private[graft] object OcfSnapshots {
     known(b, "endingVersion")
     require(b >= a, s"graft-ocf: endingVersion $b precedes startingVersion $a")
     var prevV = a
-    var prev = read(fs, tableDir, a).files
+    // the files visible at prevV, by path
+    val live = scala.collection.mutable.LinkedHashMap.empty[String, SnapFile]
+    read(fs, tableDir, a).files.foreach(f => live(f.path) = f)
     val added = Seq.newBuilder[SnapFile]
     vs.filter(v => v > a && v <= b).foreach { v =>
       val raw = rawMain(fs, tableDir)(v)
-      val cur =
-        if (raw.full.isDefined) raw.full.get
-        else if (raw.base == prevV) applyDelta(prev, raw)
-        else read(fs, tableDir, v).files // retention gap: full resolve
-      val prevPaths = prev.iterator.map(_.path).toSet
-      val curPaths = cur.iterator.map(_.path).toSet
-      requireAppendOnly(tableDir, prevV, v, raw.operation, prev.collect {
-        case f if f.isData && selects(f.path) && !curPaths(f.path) => f.path })
+      // the paths the step removes, and the entries it writes (a path in
+      // both a delta's removes and adds is replaced in place)
+      val (out, in) =
+        if (raw.full.isEmpty && raw.base == prevV) (raw.removes -- raw.adds.map(_.path), raw.adds)
+        else {
+          val cur = raw.full.getOrElse(read(fs, tableDir, v).files) // gap: resolve
+          val curPaths = cur.iterator.map(_.path).toSet
+          (live.keysIterator.filterNot(curPaths).toSet, cur)
+        }
+      val removed = out.toSeq.flatMap(live.get)
+      val fresh = in.filterNot(f => live.contains(f.path))
+      live --= out
+      in.foreach(f => live(f.path) = f)
+      requireAppendOnly(tableDir, prevV, v, raw.operation, removed.collect {
+        case f if f.isData && selects(f.path) => f.path })
       if (!addsNoRows(prevV, v, raw.operation)) {
-        val fresh = cur.filterNot(f => prevPaths(f.path))
         val deletes = fresh.count(f => f.isEqualityDelete || f.deleteOf.exists(selects))
         require(deletes == 0,
           s"graft-ocf: incremental read of $tableDir refused: version $v " +
@@ -460,7 +470,6 @@ private[graft] object OcfSnapshots {
             "rewrite_position_deletes) and start at that version.")
         added ++= fresh.filter(f => f.isData && selects(f.path))
       }
-      prev = cur
       prevV = v
     }
     added.result()

@@ -168,22 +168,6 @@ class CatalystAvroReaderSpec extends AnyFunSuite {
     assert(failures.isEmpty, failures.mkString("\n"))
   }
 
-  test("a null writer resolves only under a reader that can hold null") {
-    // a plain `long` column cannot hold the null; a nullable one reads it
-    val writer = AvroSchemaParser.parse("""{"type":"record","name":"R","fields":[
-      {"name":"f","type":"null"},{"name":"id","type":"long"}]}""")
-    def reader(f: String) = AvroSchemaParser.parse(s"""{"type":"record","name":"R",
-      "fields":[{"name":"f","type":$f},{"name":"id","type":"long"}]}""")
-    val e = intercept[AvroResolutionException](
-      CatalystAvroReader.compile(writer, reader("\"long\"")))
-    assert(e.getMessage == "cannot resolve writer null against reader long", e.getMessage)
-    val datum = new AvroBinaryWriter()
-    datum.writeLong(7L)
-    val row = CatalystAvroReader.compile(writer, reader("""["null","long"]"""))(
-      new AvroBinaryReader(datum.toByteArray)).asInstanceOf[GenericInternalRow]
-    assert(row.isNullAt(0) && row.getLong(1) == 7L)
-  }
-
   test("a nullable writer's branch fails under a nullable reader that does not match it") {
     // (reference: io.py read_union reads the writer's branch against the
     // whole reader union, and read_data fails where no reader branch matches

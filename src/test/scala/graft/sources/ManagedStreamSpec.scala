@@ -69,6 +69,16 @@ class ManagedStreamSpec extends AnyFunSuite {
     if (!new java.io.File(out).list().exists(_.endsWith(".parquet"))) Nil
     else spark.read.parquet(out).select("id").collect().map(_.getLong(0)).sorted.toSeq
 
+  /** Lands one OCF file of ids [from, until) in `dir`, outside any commit. */
+  private def landFile(dir: String, name: String, from: Long, until: Long): Unit = {
+    import spark.implicits._
+    val schemaJson = """{"type":"record","name":"R","fields":[""" +
+      """{"name":"id","type":["null","long"]}]}"""
+    graft.spark.OcfFiles.writePayloadFiles(graft.spark.OcfSink.payloads(
+      (from until until).toDF("id").coalesce(1), schemaJson, "null",
+      datumsPerPayload = 100), dir, prefix = name)
+  }
+
   private def refusal(body: => Unit): Seq[String] = {
     val e = intercept[Exception](body)
     messages(e)
@@ -185,16 +195,82 @@ class ManagedStreamSpec extends AnyFunSuite {
     assert(m.exists(_.contains("rewriting commit")), m.mkString(" | "))
   }
 
+  test("a stream keeps the version it reached across expiry while idle, and " +
+      "a stream whose version was expired fails with how to restart") {
+    spark.sql("CREATE TABLE gms.ns.e (id BIGINT, v STRING) USING `graft-ocf`")
+    insert("e", 0, 5)
+    insert("e", 5, 8)
+    val (ckpt, out) = (tmp("graft-ms-eck"), tmp("graft-ms-eout"))
+    assert(runStream("e", ckpt, out) == (0L until 8L))
+    def expire(): Unit =
+      spark.sql("CALL gms.system.expire_snapshots(table => 'ns.e', keep_last => 1)").collect()
+    // a compaction finds no new file but still moves the stream's version
+    val before = version("e")
+    spark.sql("CALL gms.system.compact(table => 'ns.e')").collect()
+    assert(version("e") > before)
+    assert(runStream("e", ckpt, out) == (0L until 8L))
+    expire()
+    insert("e", 8, 10)
+    assert(runStream("e", ckpt, out) == (0L until 10L))
+
+    // a commit, then an expiry that removes the version the stream read
+    insert("e", 10, 12)
+    expire()
+    val m = refusal(runStream("e", ckpt, out))
+    assert(m.exists(x => x.contains("expire_snapshots") &&
+      x.contains("checkpointLocation") && !x.contains("startingVersion version")),
+      m.mkString(" | "))
+    assert(sinkIds(out) == (0L until 10L))
+    // the restart it names loses no row
+    val (ckpt2, out2) = (tmp("graft-ms-eck2"), tmp("graft-ms-eout2"))
+    assert(runStream("e", ckpt2, out2) == (0L until 12L))
+  }
+
+  test("a stream over a directory that turns managed under it takes the " +
+      "new files once and passes over a compaction") {
+    spark.sql("CREATE TABLE gms.ns.land (id BIGINT) USING `graft-ocf`")
+    val dir = new Path(warehouse.getAbsolutePath, "ns/land").toString
+    landFile(dir, "f0", 0L, 3L) // landed before any graft-ocf write: no manifest
+    val (ckpt, out) = (tmp("graft-ms-tck"), tmp("graft-ms-tout"))
+    def query(trigger: Trigger) =
+      spark.readStream.format("graft-ocf").load(dir).writeStream.format("parquet")
+        .option("checkpointLocation", ckpt).option("path", out).trigger(trigger).start()
+    val q = query(Trigger.ProcessingTime(0L))
+    try {
+      q.processAllAvailable()
+      assert(sinkIds(out) == (0L until 3L))
+      // the first write adopts the landed file into a manifest
+      spark.sql("INSERT INTO gms.ns.land SELECT id FROM range(3, 6)")
+      q.processAllAvailable()
+      assert(sinkIds(out) == (0L until 6L))
+      spark.sql("CALL gms.system.compact(table => 'ns.land')").collect()
+      spark.sql("INSERT INTO gms.ns.land SELECT id FROM range(6, 8)")
+      q.processAllAvailable()
+      assert(sinkIds(out) == (0L until 8L))
+    } finally q.stop()
+    q.exception.foreach(throw _)
+    // its checkpoint resumes after a restart
+    spark.sql("INSERT INTO gms.ns.land SELECT id FROM range(8, 10)")
+    val r = query(Trigger.AvailableNow())
+    try {
+      r.awaitTermination(120000)
+      r.exception.foreach(throw _)
+    } finally r.stop()
+    assert(sinkIds(out) == (0L until 10L))
+  }
+
   test("a managed-table checkpoint without a manifest version is refused with " +
       "how to restart; an unmanaged directory's resumes") {
     spark.sql("CREATE TABLE gms.ns.old (id BIGINT, v STRING) USING `graft-ocf`")
     insert("old", 0, 4)
     val (ckpt, out) = (tmp("graft-ms-ock"), tmp("graft-ms-oout"))
     assert(runStream("old", ckpt, out) == (0L until 4L))
-    // rewrite every persisted log delta in the format that held no version
+    // rewrite the log in the format that held no version: bare-array
+    // deltas and no version record
     def stripVersions(ckptDir: String): Unit = {
-      val logs = new java.io.File(ckptDir, "sources/0/graft-ocf-files")
-        .listFiles().filter(_.getName.forall(_.isDigit))
+      val dir = new java.io.File(ckptDir, "sources/0/graft-ocf-files")
+      new java.io.File(dir, "version").delete()
+      val logs = dir.listFiles().filter(_.getName.forall(_.isDigit))
       assert(logs.nonEmpty)
       val om = new com.fasterxml.jackson.databind.ObjectMapper()
       logs.foreach { f =>
@@ -210,15 +286,8 @@ class ManagedStreamSpec extends AnyFunSuite {
     assert(sinkIds(out) == (0L until 4L))
 
     // an unmanaged landing directory keeps listing from such a log
-    import spark.implicits._
-    val schemaJson =
-      """{"type":"record","name":"R","fields":[{"name":"id","type":"long"}]}"""
     val land = tmp("graft-ms-land")
-    def landFile(name: String, from: Long, until: Long): Unit =
-      graft.spark.OcfFiles.writePayloadFiles(graft.spark.OcfSink.payloads(
-        (from until until).toDF("id").coalesce(1), schemaJson, "null",
-        datumsPerPayload = 100), land, prefix = name)
-    landFile("f0", 0L, 3L)
+    landFile(land, "f0", 0L, 3L)
     val (lck, lout) = (tmp("graft-ms-lck"), tmp("graft-ms-lout"))
     def runLanding(): Seq[Long] = {
       val q = spark.readStream.format("graft-ocf").load(land)
@@ -233,7 +302,7 @@ class ManagedStreamSpec extends AnyFunSuite {
     }
     assert(runLanding() == (0L until 3L))
     stripVersions(lck)
-    landFile("f1", 3L, 5L)
+    landFile(land, "f1", 3L, 5L)
     assert(runLanding() == (0L until 5L))
   }
 }
