@@ -22,7 +22,7 @@ import org.apache.hadoop.fs.{FSDataOutputStream, FileStatus, FileSystem, Path}
   * Local semantics preserved relative to the Hadoop calls they replace:
   *  - create(overwrite=false) throws when the destination exists
   *  - rename returns false when the destination exists or source is gone
-  *    (same check-then-act race as `FileSystem.rename` on local)
+  *  - publishExclusive links: of racing publishers exactly one succeeds
   *  - renameOverwrite is a single atomic POSIX rename (strictly stronger
   *    than the exists->delete->rename fallback it replaces)
   *  - stale `.name.crc` sidecars of a bypassed destination are dropped so
@@ -85,8 +85,9 @@ private[sources] object GraftIO {
         val parent = f.getParentFile
         if (parent != null && !parent.isDirectory) Files.createDirectories(parent.toPath)
         dropCrc(f)
-        if (!overwrite && f.exists())
-          throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$p already exists")
+        if (!overwrite) // CREATE_NEW: of racing exclusive creators one succeeds
+          try Files.createFile(f.toPath) catch { case _: FileAlreadyExistsException =>
+            throw new org.apache.hadoop.fs.FileAlreadyExistsException(s"$p already exists") }
         new FSDataOutputStream(new BufferedOutputStream(new FileOutputStream(f), 64 * 1024), null)
       case None => fs.create(p, overwrite)
     }
@@ -97,8 +98,8 @@ private[sources] object GraftIO {
       case None => fs.mkdirs(p)
     }
 
-  /** Plain rename: false when the destination already exists or the source
-    * is missing — the `FileSystem.rename` contract callers CAS on. */
+  /** Plain move: false when the destination exists or the source is gone.
+    * Not exclusive: a name racing writers claim goes through [[publishExclusive]]. */
   def rename(fs: FileSystem, src: Path, dst: Path): Boolean =
     (localOf(fs, src), localOf(fs, dst)) match {
       case (Some(s), Some(d)) =>
@@ -114,6 +115,25 @@ private[sources] object GraftIO {
           case _: NoSuchFileException => false
         }
       case _ => fs.rename(src, dst)
+    }
+
+  /** Publish the complete file `tmp` as `dst` unless `dst` exists: true when
+    * this call created it (`tmp` is then gone), false when it existed (`tmp`
+    * is left); any other failure throws. Exactly one racing publisher wins on `file:` (link(2) fails on
+    * an existing name; a filesystem without hard links throws) and on HDFS
+    * (rename refuses one); elsewhere (s3a, local-backed schemes, whose
+    * rename replaces) the check before the rename is best effort. */
+  def publishExclusive(fs: FileSystem, tmp: Path, dst: Path): Boolean =
+    (localOf(fs, tmp), localOf(fs, dst)) match {
+      case (Some(s), Some(d)) =>
+        dropCrc(d)
+        try { Files.createLink(d.toPath, s.toPath); Files.delete(s.toPath); true }
+        catch { case _: FileAlreadyExistsException => false }
+      case _ =>
+        if (fs.exists(dst)) false
+        else if (fs.rename(tmp, dst)) true
+        else if (fs.exists(dst)) false
+        else throw new IOException(s"graft-ocf: could not publish $tmp as $dst")
     }
 
   /** Atomic replace: the destination, existing or not, is the source in one

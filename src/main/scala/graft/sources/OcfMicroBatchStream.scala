@@ -242,9 +242,9 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
 
   /** Persist the files DISCOVERED AT offset `count` (a delta, not the
     * cumulative listing — total log bytes stay O(files), not O(files²) over
-    * a long-running stream), atomically (temp + rename) so a crashed write
-    * never leaves a torn log. Reconstruction concatenates deltas in offset
-    * order. */
+    * a long-running stream), atomically (temp + exclusive publish) so a
+    * crashed write never leaves a torn log. Reconstruction concatenates
+    * deltas in offset order. */
   private def persist(count: Int, delta: Seq[OcfFileMeta]): Unit = {
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = om.createObjectNode()
@@ -265,8 +265,8 @@ private[graft] final class OcfMicroBatchStream(scan: OcfScan, checkpointLocation
     val tmp = new Path(logDir, s".${count}.tmp")
     val out = GraftIO.create(fs, tmp, true)
     try out.write(om.writeValueAsBytes(root)) finally out.close()
-    if (!GraftIO.rename(fs, tmp, logPath(count)) && !fs.exists(logPath(count)))
-      throw new java.io.IOException(s"graft-ocf stream: could not persist file log $count")
+    // keep-first: a log entry already at this offset stays as written
+    if (!GraftIO.publishExclusive(fs, tmp, logPath(count))) fs.delete(tmp, false)
   }
 
   /** The manifest version discovery reached, recorded beside the deltas

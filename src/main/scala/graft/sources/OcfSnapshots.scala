@@ -21,10 +21,10 @@ import org.apache.hadoop.fs.{FileSystem, Path}
   *  - **Atomic commits + snapshot isolation**: a manifest appears with a
   *    single create; concurrent readers see either the old complete version
   *    or the new complete version, never a half-renamed directory.
-  *  - **Optimistic concurrency**: the next version is created with
-  *    CREATE-exclusive semantics — two racing committers cannot both win;
-  *    the loser recomputes against the winner's manifest and retries (and
-  *    the retry re-reads only the winner's DELTA, not the whole table).
+  *  - **Optimistic concurrency**: the next version is claimed through
+  *    `GraftIO.publishExclusive` — two racing committers cannot both win
+  *    (on `file:` and HDFS; on other stores commits assume one writer);
+  *    the loser recomputes against the winner's manifest and retries.
   *  - **Time travel**: `VERSION AS OF n` / `TIMESTAMP AS OF t` pin a read
   *    to an old manifest. Removed files are dropped from the visible set
   *    but NOT physically deleted — `expire_snapshots` reclaims
@@ -145,10 +145,13 @@ private[graft] object OcfSnapshots {
 
   // ---- manifest parse/render ----------------------------------------------
 
+  private def bytesOf(fs: FileSystem, p: Path): Array[Byte] = {
+    val in = fs.open(p)
+    try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
+  }
+
   private def readRaw(fs: FileSystem, file: Path): Raw = {
-    val in = fs.open(file)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val root = mapper.readTree(bytes)
+    val root = mapper.readTree(bytesOf(fs, file))
     def strings(arr: com.fasterxml.jackson.databind.JsonNode): IndexedSeq[String] =
       if (arr == null) IndexedSeq.empty
       else {
@@ -573,46 +576,69 @@ private[graft] object OcfSnapshots {
   /** Optimistic snapshot commit: `transform` maps the previous visible set
     * (the latest manifest's resolved files, or — on the very first commit —
     * the directory's current listing, folding a pre-snapshot table in) to
-    * the new visible set. The next version is written CREATE-EXCLUSIVE
-    * through a temp + no-overwrite rename; when a racing committer wins the
-    * version, the transform re-runs against the WINNER's files — the
-    * retry sees the concurrent commit's effects, it does not clobber them.
+    * the new visible set. The next version is claimed through
+    * [[GraftIO.publishExclusive]], so exactly one committer wins it; a
+    * loser re-runs the transform against the WINNER's files — the retry
+    * sees the concurrent commit's effects, it does not clobber them.
     * Returns the committed snapshot. */
   def commit(fs: FileSystem, tableDir: Path, operation: String,
              tableSchemaJson: Option[String] = None)
             (transform: Seq[SnapFile] => Seq[SnapFile]): Snapshot = {
     val sdir = snapshotsDir(tableDir)
     GraftIO.mkdirs(fs, sdir)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val prevVersion = versions(fs, tableDir).lastOption
-      val (prevFiles, prevSchema, prevDepth) = prevVersion match {
+    claimNext(fs, sdir, operation, tableSchemaJson) { () =>
+      versions(fs, tableDir).lastOption match {
         case Some(v) =>
           val (snap, depth) =
             resolveWithDepth(rawMain(fs, tableDir)(v), rawMain(fs, tableDir))
-          (snap.files, snap.tableSchemaJson, depth)
-        case None => (listingAsFiles(fs, tableDir), None, 0)
+          (Some(v), snap.files, snap.tableSchemaJson, depth)
+        case None => (None, listingAsFiles(fs, tableDir), None, 0)
       }
-      val nextVersion = prevVersion.getOrElse(0L) + 1
-      val next = Snapshot(nextVersion, System.currentTimeMillis(),
-        operation,
-        dropOrphanDeletes(stampSeq(transform(prevFiles), prevFiles, nextVersion)),
+    }(transform)
+  }
+
+  /** The claim loop of one manifest sequence in `dir` (main or a branch):
+    * `head` gives its head version (None before the first), resolved files,
+    * schema and delta depth. A lost race retries against the winner's head
+    * after a jittered pause, so racing losers spread out, 20 times at most. */
+  private def claimNext(fs: FileSystem, dir: Path, operation: String,
+                        tableSchemaJson: Option[String])
+                       (head: () => (Option[Long], Seq[SnapFile], Option[String], Int))
+                       (transform: Seq[SnapFile] => Seq[SnapFile]): Snapshot = {
+    @annotation.tailrec def attempt(n: Int): Snapshot = {
+      val (prevVersion, prevFiles, prevSchema, prevDepth) = head()
+      val version = prevVersion.getOrElse(0L) + 1
+      val next = Snapshot(version, System.currentTimeMillis(), operation,
+        dropOrphanDeletes(stampSeq(transform(prevFiles), prevFiles, version)),
         // a schema-less commit (path write) inherits the previous schema
         tableSchemaJson.orElse(prevSchema))
-      val dest = manifestPath(tableDir, next.version)
-      val tmp = new Path(sdir, s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
-      val out = GraftIO.create(fs, tmp, false)
-      try { out.write(renderCommit(next, prevVersion, prevFiles, prevDepth)) }
-      finally out.close()
-      // rename WITHOUT overwrite: exactly one committer wins a version
-      val won = !fs.exists(dest) && GraftIO.rename(fs, tmp, dest)
-      if (won) return next
-      fs.delete(tmp, false)
-      if (attempts >= 20) throw new java.io.IOException(
-        s"graft-ocf snapshots: lost the commit race $attempts times under $tableDir")
+      if (publishNew(fs, manifestFile(dir, version),
+          renderCommit(next, prevVersion, prevFiles, prevDepth))) next
+      else if (n >= 20) throw new java.io.IOException(
+        s"graft-ocf snapshots: lost the commit race $n times under $dir")
+      else {
+        // after the n-th loss: uniform up to 2^n ms, capped at 256 ms
+        Thread.sleep(java.util.concurrent.ThreadLocalRandom.current()
+          .nextLong(1L, 2L + math.min(256L, 1L << n)))
+        attempt(n + 1)
+      }
     }
-    throw new IllegalStateException("unreachable")
+    attempt(1)
+  }
+
+  /** Write `bytes` to a temp beside `dest` and publish it there through
+    * [[GraftIO.publishExclusive]]: true when this call created `dest`,
+    * false when `dest` already existed. The temp is gone on every exit. */
+  private def publishNew(fs: FileSystem, dest: Path, bytes: Array[Byte]): Boolean = {
+    val tmp = new Path(dest.getParent,
+      s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
+    var published = false
+    try {
+      val out = GraftIO.create(fs, tmp, false)
+      try out.write(bytes) finally out.close()
+      published = GraftIO.publishExclusive(fs, tmp, dest)
+      published
+    } finally if (!published) fs.delete(tmp, false)
   }
 
   // ---- expiry support ------------------------------------------------------
@@ -695,6 +721,8 @@ private[graft] object OcfSnapshots {
   // delta base references stay valid) and main's head jumps to the branch
   // head atomically-per-manifest; a main that advanced past the base
   // REFUSES (divergent histories need a rewrite, not a silent merge).
+  // Branch commits and fast_forward's copies claim each manifest name
+  // through `GraftIO.publishExclusive`, as main's commits do.
 
   /** Legal branch names: path-safe (no separators/dot-segments — the name
     * becomes a directory, and Hadoop Path resolution would let '../..'
@@ -742,8 +770,8 @@ private[graft] object OcfSnapshots {
       .toSeq.sorted
   }
 
-  /** Create `name` at main version `from` (default: latest). Create-exclusive
-    * on the base marker: of two racing creators exactly one wins. */
+  /** Create `name` at main version `from` (default: latest). The base marker
+    * is published exclusively: of racing creators exactly one wins. */
   def createBranch(fs: FileSystem, tableDir: Path, name: String,
                    from: Option[Long]): Long = {
     require(validBranchName(name),
@@ -758,14 +786,12 @@ private[graft] object OcfSnapshots {
       s"graft-ocf branches: version $base is not a retained snapshot " +
         s"(retained: ${vs.mkString(", ")})")
     val bd = branchDir(tableDir, name)
-    // a marker-less dir is debris from a crashed create — sweep and retry;
-    // a marked dir is a real branch and refuses
-    if (fs.exists(bd) && !fs.exists(branchBasePath(bd))) fs.delete(bd, true)
-    require(!fs.exists(bd),
-      s"graft-ocf branches: branch '$name' already exists")
     GraftIO.mkdirs(fs, bd)
-    val out = GraftIO.create(fs, branchBasePath(bd), false)
-    try out.write(s"""{"base":$base}""".getBytes("UTF-8")) finally out.close()
+    require(publishNew(fs, branchBasePath(bd), s"""{"base":$base}""".getBytes("UTF-8")),
+      s"graft-ocf branches: branch '$name' already exists")
+    // the dir was marker-less debris (a crashed create, or a commit that
+    // landed during fast_forward): its manifests are not this branch's
+    versionsIn(fs, bd).foreach(v => fs.delete(manifestFile(bd, v), false))
     base
   }
 
@@ -774,9 +800,7 @@ private[graft] object OcfSnapshots {
     require(fs.exists(p),
       s"graft-ocf branches: no branch '$name' of $tableDir " +
         s"(branches: ${listBranches(fs, tableDir).mkString(", ")})")
-    val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    mapper.readTree(bytes).get("base").asLong
+    mapper.readTree(bytesOf(fs, p)).get("base").asLong
   }
 
   def branchVersions(fs: FileSystem, tableDir: Path, name: String): Seq[Long] =
@@ -787,63 +811,34 @@ private[graft] object OcfSnapshots {
     resolveWithDepth(rawBranch(fs, tableDir, name)(v),
       rawBranch(fs, tableDir, name))._1
 
-  /** The branch's visible snapshot: its newest own manifest, or (before any
-    * branch commit) the main BASE manifest — which must still be retained. */
-  def branchHead(fs: FileSystem, tableDir: Path, name: String): Snapshot = {
-    branchVersions(fs, tableDir, name).lastOption match {
-      case Some(v) => branchRead(fs, tableDir, name, v)
-      case None =>
-        val base = branchBase(fs, tableDir, name)
-        require(versions(fs, tableDir).contains(base),
-          s"graft-ocf branches: branch '$name' base version $base was " +
-            "expired; the branch has no readable state")
-        read(fs, tableDir, base)
-    }
-  }
+  /** The branch's visible snapshot. */
+  def branchHead(fs: FileSystem, tableDir: Path, name: String): Snapshot =
+    branchRead(fs, tableDir, name, branchHeadVersion(fs, tableDir, name))
 
-  /** Optimistic commit into the branch's manifest sequence (same discipline
-    * as [[commit]]: exactly one committer wins a version; deltas resolve
-    * through the branch-then-main lookup). */
+  /** The branch's newest own version, or (before any branch commit) its
+    * main BASE version — which must still be retained. */
+  private def branchHeadVersion(fs: FileSystem, tableDir: Path, name: String): Long =
+    branchVersions(fs, tableDir, name).lastOption.getOrElse {
+      val base = branchBase(fs, tableDir, name)
+      require(versions(fs, tableDir).contains(base),
+        s"graft-ocf branches: branch '$name' base version $base was " +
+          "expired; the branch has no readable state")
+      base
+    }
+
+  /** Optimistic commit into the branch's manifest sequence (same claim
+    * loop as [[commit]]: exactly one committer wins a version; deltas
+    * resolve through the branch-then-main lookup). */
   def commitToBranch(fs: FileSystem, tableDir: Path, name: String,
                      operation: String, tableSchemaJson: Option[String])
                     (transform: Seq[SnapFile] => Seq[SnapFile]): Snapshot = {
     requireBranch(fs, tableDir, name)
-    val bd = branchDir(tableDir, name)
-    var attempts = 0
-    while (true) {
-      attempts += 1
-      val lookup = rawBranch(fs, tableDir, name) _
-      val (headVersion, headSnap, headDepth) =
-        branchVersions(fs, tableDir, name).lastOption match {
-          case Some(v) =>
-            val (snap, depth) = resolveWithDepth(lookup(v), lookup)
-            (v, snap, depth)
-          case None =>
-            val base = branchBase(fs, tableDir, name)
-            require(versions(fs, tableDir).contains(base),
-              s"graft-ocf branches: branch '$name' base version $base was " +
-                "expired; the branch has no readable state")
-            val (snap, depth) =
-              resolveWithDepth(rawMain(fs, tableDir)(base), rawMain(fs, tableDir))
-            (base, snap, depth)
-        }
-      val next = Snapshot(headVersion + 1, System.currentTimeMillis(),
-        operation,
-        dropOrphanDeletes(
-          stampSeq(transform(headSnap.files), headSnap.files, headVersion + 1)),
-        tableSchemaJson.orElse(headSnap.tableSchemaJson))
-      val dest = manifestFile(bd, next.version)
-      val tmp = new Path(bd, s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
-      val out = GraftIO.create(fs, tmp, false)
-      try { out.write(renderCommit(next, Some(headVersion), headSnap.files, headDepth)) }
-      finally out.close()
-      val won = !fs.exists(dest) && GraftIO.rename(fs, tmp, dest)
-      if (won) return next
-      fs.delete(tmp, false)
-      if (attempts >= 20) throw new java.io.IOException(
-        s"graft-ocf branches: lost the commit race $attempts times on '$name'")
-    }
-    throw new IllegalStateException("unreachable")
+    val lookup = rawBranch(fs, tableDir, name) _
+    claimNext(fs, branchDir(tableDir, name), operation, tableSchemaJson) { () =>
+      val v = branchHeadVersion(fs, tableDir, name)
+      val (snap, depth) = resolveWithDepth(lookup(v), lookup)
+      (Some(v), snap.files, snap.tableSchemaJson, depth)
+    }(transform)
   }
 
   /** Publish the branch: copy its manifests into main (verbatim — version
@@ -858,55 +853,40 @@ private[graft] object OcfSnapshots {
   def fastForward(fs: FileSystem, tableDir: Path, name: String): (Long, Long) = {
     val base = branchBase(fs, tableDir, name)
     val bd = branchDir(tableDir, name)
-    val bvs = branchVersions(fs, tableDir, name)
-    val mainLast = versions(fs, tableDir).lastOption.getOrElse(0L)
-    require(mainLast >= base,
-      s"graft-ocf branches: branch '$name' base $base is ahead of main " +
-        s"($mainLast) — the base manifest was expired or removed")
-    def bytesOf(p: Path): Array[Byte] = {
-      val in = fs.open(p)
-      try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    }
     def refuse(v: Long): Nothing = throw new IllegalArgumentException(
       s"graft-ocf branches: cannot fast-forward '$name' — main's version $v " +
         "differs from the branch's (a foreign commit landed); histories " +
         "diverged and publish would drop main's commits. Re-branch from the " +
         "current head and replay, or rollback main first.")
+    // a concurrent publish retires the marker first, so branch reads made
+    // while it is still there are complete (a failed read reports it gone)
+    val bvs = branchVersions(fs, tableDir, name)
+    val copies = try bvs.map(v => v -> bytesOf(fs, manifestFile(bd, v)))
+      finally requireBranch(fs, tableDir, name)
+    val mainLast = versions(fs, tableDir).lastOption.getOrElse(0L)
+    require(mainLast >= base,
+      s"graft-ocf branches: branch '$name' base $base is ahead of main " +
+        s"($mainLast) — the base manifest was expired or removed")
     if (mainLast > base + bvs.length) refuse(base + bvs.length + 1)
-    val sdir = snapshotsDir(tableDir)
-    bvs.foreach { v =>
-      val src = manifestFile(bd, v)
+    // dest either doesn't exist or is a COMPLETE manifest: one already
+    // there with the same bytes is an earlier partial publish or a
+    // concurrent fast_forward of this branch, anything else a foreign commit
+    copies.foreach { case (v, bytes) =>
       val dest = manifestPath(tableDir, v)
-      val bytes = bytesOf(src)
-      if (fs.exists(dest)) {
-        if (!java.util.Arrays.equals(bytes, bytesOf(dest))) refuse(v)
-        // byte-identical: already published (partial retry) — continue
-      } else {
-        // the same temp + no-overwrite-rename discipline as [[commit]]:
-        // dest either doesn't exist or is a COMPLETE manifest — a crashed
-        // write can never leave truncated bytes that a retry (or a reader)
-        // would misread
-        val tmp = new Path(sdir, s".${dest.getName}.${java.util.UUID.randomUUID()}.tmp")
-        val out = GraftIO.create(fs, tmp, false)
-        try out.write(bytes) finally out.close()
-        val won = !fs.exists(dest) && GraftIO.rename(fs, tmp, dest)
-        if (!won) {
-          fs.delete(tmp, false)
-          // lost the rename race: identical content means a concurrent
-          // publish of the same branch; anything else is a foreign commit
-          if (!java.util.Arrays.equals(bytes, bytesOf(dest))) refuse(v)
-        }
-      }
+      if (!publishNew(fs, dest, bytes) && !java.util.Arrays.equals(bytes, bytesOf(fs, dest)))
+        refuse(v)
     }
-    // Retire EXACTLY what was published: the copied manifests and the base
-    // marker, then the (now empty) directory NON-recursively. Publishing
+    // Retire EXACTLY what was published: the base marker (first: a
+    // concurrent fast_forward that still finds it has read the whole
+    // branch), the copied manifests, then the (now empty) directory
+    // NON-recursively. Publishing
     // while branch writers are still active violates the WAP contract
     // (publish happens after the audit, writers quiesced) — but if it
     // happens anyway, the racing commit's manifest survives the per-file
     // deletes, the directory delete fails on the non-empty dir, and this
     // raises LOUDLY instead of recursively destroying a committed epoch.
-    bvs.foreach(v => fs.delete(manifestFile(bd, v), false))
     fs.delete(branchBasePath(bd), false)
+    bvs.foreach(v => fs.delete(manifestFile(bd, v), false))
     val emptied = try fs.delete(bd, false)
       catch { case _: java.io.IOException => false }
     if (!emptied && fs.exists(bd)) throw new IllegalStateException(
@@ -944,9 +924,7 @@ private[graft] object OcfSnapshots {
   def readTags(fs: FileSystem, tableDir: Path): Map[String, Long] = {
     val p = tagsPath(tableDir)
     if (!fs.exists(p)) return Map.empty
-    val in = fs.open(p)
-    val bytes = try org.apache.commons.io.IOUtils.toByteArray(in) finally in.close()
-    val root = mapper.readTree(bytes)
+    val root = mapper.readTree(bytesOf(fs, p))
     val b = Map.newBuilder[String, Long]
     val it = root.fields()
     while (it.hasNext) { val e = it.next(); b += e.getKey -> e.getValue.asLong }

@@ -160,6 +160,24 @@ class CommitFaultSpec extends AnyFunSuite {
     assert(avroFiles(dir) == before)
   }
 
+  test("a manifest publish whose rename fails leaves no temp and keeps the previous version") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-fault-publish").toFile
+    val root = new Path("faulty://" + dir.getAbsolutePath)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    (0L until 20L).toDF("id").repartition(2)
+      .write.format("graft-ocf").mode("append").save(root.toString)
+    val before = OcfSnapshots.versions(fs, root)
+    // the commit's only rename is its manifest publish
+    failingRename(1) {
+      OcfSnapshots.commit(fs, root, "append")(_ :+ OcfSnapshots.SnapFile("x.avro", 1L))
+    }
+    val snaps = new java.io.File(dir, OcfSnapshots.Dir)
+    assert(snaps.list().filter(_.endsWith(".tmp")).isEmpty, snaps.list().toSeq)
+    assert(OcfSnapshots.versions(fs, root) == before)
+    assert(idsIn(dir) == (0L until 20L))
+  }
+
   test("a copy-on-write DELETE whose rename fails keeps every row") {
     spark.sql("CREATE NAMESPACE IF NOT EXISTS gf.ns")
     spark.sql(

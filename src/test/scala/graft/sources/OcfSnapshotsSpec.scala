@@ -196,6 +196,144 @@ class OcfSnapshotsSpec extends AnyFunSuite {
     assert(s.version == v0 + 2, "the loser retries onto the next version")
   }
 
+  /** Start `threads` threads at once, each making `perThread` calls of
+    * `op`; call i of thread t gets the tag "t-i". Returns every call's tag
+    * with its result or failure. */
+  private def race[T](threads: Int, perThread: Int)(op: String => T)
+      : Seq[(String, Either[Throwable, T])] = {
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+    try {
+      val calls = (0 until threads).map { t =>
+        pool.submit(new java.util.concurrent.Callable[Seq[(String, Either[Throwable, T])]] {
+          override def call(): Seq[(String, Either[Throwable, T])] = {
+            start.await()
+            (0 until perThread).map { i =>
+              val tag = s"$t-$i"
+              tag -> (try Right(op(tag)) catch { case e: Exception => Left(e) })
+            }
+          }
+        })
+      }
+      start.countDown()
+      calls.flatMap(_.get())
+    } finally pool.shutdownNow()
+  }
+
+  private def tempTable(prefix: String): Path =
+    new Path(java.nio.file.Files.createTempDirectory(prefix).toString)
+
+  private def bytesAt(p: Path): Array[Byte] =
+    java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(p.toUri.getPath))
+
+  private def tempsUnder(dir: Path): Seq[String] =
+    fs.listStatus(dir).map(_.getPath.getName).filter(_.endsWith(".tmp")).toSeq
+
+  /** What racing committers of one manifest sequence must leave: each
+    * commit that returned added its file `<tag>.avro` and owns its own
+    * version; the sequence holds exactly the versions `first..` those
+    * commits returned, each manifest holding its committer's files; the
+    * head holds `baseFiles` plus every returned commit's file; and no temp
+    * is left in `dir`. A commit that gave up published nothing. */
+  private def checkRaced(results: Seq[(String, Either[Throwable, OcfSnapshots.Snapshot])],
+                         first: Long, versions: Seq[Long],
+                         readAt: Long => OcfSnapshots.Snapshot,
+                         head: OcfSnapshots.Snapshot, baseFiles: Set[String],
+                         dir: Path): Unit = {
+    val won = results.collect { case (tag, Right(s)) => tag -> s }
+    info(s"${won.size} of ${results.size} commits returned, " +
+      s"${results.size - won.size} gave up")
+    results.collect { case (_, Left(e)) => e }.foreach(e =>
+      assert(Option(e.getMessage).exists(_.contains("lost the commit race")), e.toString))
+    assert(won.nonEmpty, "no commit returned")
+    val headFiles = head.files.map(_.path).toSet
+    val lost = won.map(_._1 + ".avro").filterNot(headFiles.contains)
+    assert(lost.isEmpty,
+      s"${lost.size} of ${won.size} returned commits are missing from the head")
+    assert(headFiles == baseFiles ++ won.map(_._1 + ".avro"))
+    assert(won.map(_._2.version).sorted == (first until first + won.size),
+      "every returned commit owns its own version")
+    assert(versions == (first until first + won.size))
+    won.foreach { case (tag, s) =>
+      assert(readAt(s.version).files.map(_.path) == s.files.map(_.path),
+        s"version ${s.version} holds another commit than $tag's")
+    }
+    assert(tempsUnder(dir).isEmpty)
+  }
+
+  test("racing committers: every commit that returns is in the head, one manifest per version") {
+    val root = tempTable("graft-snap-race")
+    val results = race(4, 150) { tag =>
+      OcfSnapshots.commit(fs, root, "append")(_ :+ OcfSnapshots.SnapFile(s"$tag.avro", 1L))
+    }
+    checkRaced(results, 1L, OcfSnapshots.versions(fs, root),
+      OcfSnapshots.read(fs, root, _), OcfSnapshots.latest(fs, root).get, Set.empty,
+      OcfSnapshots.snapshotsDir(root))
+  }
+
+  test("racing branch committers keep the same invariants") {
+    val root = tempTable("graft-branch-race")
+    OcfSnapshots.commit(fs, root, "append")(_ => Seq(OcfSnapshots.SnapFile("base.avro", 1L)))
+    OcfSnapshots.createBranch(fs, root, "b", None)
+    val results = race(4, 150) { tag =>
+      OcfSnapshots.commitToBranch(fs, root, "b", "append", None)(
+        _ :+ OcfSnapshots.SnapFile(s"$tag.avro", 1L))
+    }
+    checkRaced(results, 2L, OcfSnapshots.branchVersions(fs, root, "b"),
+      OcfSnapshots.branchRead(fs, root, "b", _), OcfSnapshots.branchHead(fs, root, "b"),
+      Set("base.avro"), OcfSnapshots.branchDir(root, "b"))
+  }
+
+  test("two racing fast_forwards of one branch publish it once") {
+    (1 to 10).foreach { round =>
+      val root = tempTable("graft-ff-race")
+      OcfSnapshots.commit(fs, root, "append")(_ => Seq(OcfSnapshots.SnapFile("base.avro", 1L)))
+      OcfSnapshots.createBranch(fs, root, "b", None)
+      (1 to 20).foreach(i => OcfSnapshots.commitToBranch(fs, root, "b", "append", None)(
+        _ :+ OcfSnapshots.SnapFile(s"$i.avro", 1L)))
+      val bd = OcfSnapshots.branchDir(root, "b")
+      val sdir = OcfSnapshots.snapshotsDir(root)
+      val branchBytes = OcfSnapshots.branchVersions(fs, root, "b")
+        .map(v => v -> bytesAt(new Path(bd, f"_v$v%012d.json")))
+      val outcomes = race(2, 1)(_ => OcfSnapshots.fastForward(fs, root, "b")).map(_._2)
+      // a publisher that finds the branch already retired by the other
+      // reports it gone; none sees a foreign commit
+      outcomes.foreach {
+        case Right(r) => assert(r == ((1L, 21L)), s"round $round")
+        case Left(e) => assert(e.getMessage.contains("no branch 'b'"), s"round $round: $e")
+      }
+      assert(outcomes.exists(_.isRight), s"round $round")
+      assert(OcfSnapshots.versions(fs, root) == (1L to 21L), s"round $round")
+      branchBytes.foreach { case (v, b) =>
+        assert(java.util.Arrays.equals(bytesAt(new Path(sdir, f"_v$v%012d.json")), b),
+          s"round $round: main's version $v differs from the branch's")
+      }
+      assert(OcfSnapshots.latest(fs, root).get.files.map(_.path) ==
+        "base.avro" +: (1 to 20).map(i => s"$i.avro"), s"round $round")
+      assert(!fs.exists(bd), s"round $round: the branch is retired")
+      assert(tempsUnder(sdir).isEmpty, s"round $round")
+    }
+  }
+
+  test("of racing create_branch calls exactly one wins, at its own base") {
+    val root = tempTable("graft-create-race")
+    (1 to 4).foreach(i => OcfSnapshots.commit(fs, root, "append")(
+      _ :+ OcfSnapshots.SnapFile(s"$i.avro", 1L)))
+    (1 to 10).foreach { round =>
+      val name = s"r$round"
+      // thread t branches from version t + 1
+      val outcomes = race(4, 1)(tag =>
+        OcfSnapshots.createBranch(fs, root, name, Some(tag.takeWhile(_ != '-').toLong + 1)))
+      val winners = outcomes.collect { case (_, Right(base)) => base }
+      assert(winners.size == 1, s"round $round: ${outcomes.map(_._2)}")
+      assert(OcfSnapshots.branchBase(fs, root, name) == winners.head, s"round $round")
+      outcomes.collect { case (_, Left(e)) =>
+        assert(e.getMessage.contains("already exists"), s"round $round: $e")
+      }
+    }
+    assert(OcfSnapshots.listBranches(fs, root) == (1 to 10).map(i => s"r$i").sorted)
+  }
+
   test("compaction is a snapshot commit; fragmented generation expires cleanly") {
     spark.sql(
       """CREATE TABLE gs.ns.frag (id BIGINT, v STRING)
